@@ -1,12 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` — flagship KG-construction query at sf0.001.
-``queries()``   — one callable per implemented operator (SURVEY.md §2),
-                  implemented in kgforge/queries.py.
-``oracle_sql()``— matching DuckDB SQL per query (r2: EVERY registered
-                  query has one, including connected components via a
-                  recursive CTE and multimodal feature extraction via a
-                  sha256 hex-nibble mirror of the fake decoder).
+``queries()``   — every registered query (the KG-construction queries of
+                  kgforge/queries.py and the analytics queries of
+                  kgforge/analytics_queries.py), one callable each.
+``oracle_sql()``— the DuckDB SQL oracle of every query in ``queries()``.
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ in via ``--input table:<name>``), writes:
     <output>/reasons/  — drop-reason histogram (attributable drops)
 
 and prints a one-line JSON summary.  Same operators the oracle-checked
-curation_funnel / pack_sequences / text_quality_filter queries pin.
+curation_funnel / text_quality_filter queries pin.
 """
 
 from __future__ import annotations

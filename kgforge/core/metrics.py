@@ -54,9 +54,8 @@ def bcubed(labeled, pred_col: str = "c", gold_col: str = "g"):
     Per-item B³ precision |C(i)∩G(i)|/|C(i)| decomposes over
     (pred, gold) pair counts: Σ_(c,g) n_cg²/n_c — so the computation
     is three map-side-combined groupBys + two keyed joins of count
-    dims; no pairwise item join ever materializes.  Used by the
-    kg_bcubed query (MinHash clusters vs exact-text gold) and unit-
-    pinned on a hand-computed partition in tests."""
+    dims; no pairwise item join ever materializes.  Pinned on a
+    hand-computed partition in tests."""
     from pyspark.sql import functions as F
 
     plab = labeled.select(

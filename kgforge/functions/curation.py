@@ -1,5 +1,5 @@
-"""Training-data curation building blocks shared by the oracle queries
-(kgforge/queries.py: curation_funnel, pack_sequences) and the
+"""Training-data curation building blocks shared by the oracle-checked
+curation_funnel query (kgforge/analytics_queries.py) and the
 spark-submit deliverable (jobs/curate_job.py): quality gate → exact
 dedup → sequence packing, every drop attributable.
 
@@ -22,7 +22,7 @@ def fingerprint_col(text_col: str = "text") -> F.Column:
     """Order-sensitive positional rolling hash of the whitespace tokens —
     the exact-dedup key (same arithmetic as the doc_fingerprint oracle
     query; charfold is deterministic across engines)."""
-    from ..queries import MOD, charfold  # lazy: queries lazily imports us
+    from .hashing import MOD, charfold
 
     toks = F.split(F.col(text_col), " ")
     terms = F.transform(

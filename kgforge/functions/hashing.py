@@ -9,10 +9,9 @@ parameters keep all products under 2^62 (a < 2^31, h < 2^31-1) so the
 arithmetic never overflows int64 on either engine.
 
 Document-level shingling/minhashing operates on plain DataFrames
-(``doc_id``, ``text``) — the query layer (kgforge/queries.py) and the
-incremental dedup state machinery (kgforge/dedup.py) both build on these
-so a signature computed in one epoch is bit-identical to one computed in
-any other.
+(``doc_id``, ``text``) — the incremental dedup state machinery
+(kgforge/dedup.py) builds on these so a signature computed in one epoch
+is bit-identical to one computed in any other.
 """
 
 from __future__ import annotations

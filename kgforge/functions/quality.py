@@ -249,11 +249,9 @@ def bigram_perplexity(
     IN the same pass (the CCNet gate, Wenzek et al. 2020): train stupid-
     backoff bigram counts on ``lang_col == target_lang`` documents from
     ``docs``, score ``score_docs`` (default: all of ``docs``) by
-    exp(-mean ln S).  Returns (doc_id, n_scored, ppl).  The library
-    twin of the oracle-checked text_lm_perplexity query — same model,
-    reusable against any docs frame (curate_job's gate, which passes
-    only its kept docs as score_docs so the expensive scoring joins
-    never run for rows the heuristic gate already dropped).
+    exp(-mean ln S).  Returns (doc_id, n_scored, ppl).  Passing only
+    the kept docs as ``score_docs`` keeps the scoring joins off rows an
+    earlier gate already dropped.
 
     Scale shape: ONE token scan per side feeds the count tables
     (map-side combined); count dims attach by KEYED joins; the scalar
@@ -273,11 +271,10 @@ def bigram_perplexity(
         .localCheckpoint(eager=True)
     )
     # Non-silent guard (repo rule): an empty training slice (no rows
-    # with lang_col == target_lang, e.g. a --strata column whose values
-    # never equal the LM target) would make N+V = 0, the backoff leg
+    # with lang_col == target_lang) would make N+V = 0, the backoff leg
     # log(x/0) = +Infinity under IEEE double division, and every doc
-    # score ppl 0.0 — turning curate()'s lm_ppl_max gate into a silent
-    # no-op instead of surfacing the misconfiguration (r6 ADVICE, low).
+    # score ppl 0.0 — turning any perplexity gate into a silent no-op
+    # instead of surfacing the misconfiguration.
     # trn is already eagerly checkpointed, so this probe is O(1).
     if trn.limit(1).count() == 0:
         raise ValueError(

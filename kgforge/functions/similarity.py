@@ -23,17 +23,14 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Hyperplane-sign LSH bits for the bucketed candidate paths (near-dup,
-# SemDeDup prune, contrastive mining).  Expected bucket population is
-# n / 2^N_PLANES, and candidate work is sum over buckets of |bucket|^2 —
-# the plane count IS the scale knob (docs/SCALE.md r6b/r6c: 4 planes at
-# a 200k-vector fixture is a measured DNF cliff; 12 planes runs in
-# seconds).  Env-tunable and read at IMPORT so Spark AND the DuckDB
-# oracle templates in queries.py bake the SAME bucket expression into
-# their plans (the SPARK_GRAFT_NGRAM_DF_CAP discipline, queries.py) —
-# the registered form and the scale form are the same code, only the
-# constant moves.  Default 4 keeps tiny-SF oracle fixtures populated
-# (buckets of ~n/16 still produce pairs at sf0.001).
+# Hyperplane-sign LSH bits for the bucketed near-dup candidate path.
+# Expected bucket population is n / 2^N_PLANES, and candidate work is sum
+# over buckets of |bucket|^2 — the plane count IS the scale knob
+# (docs/SCALE.md: 4 planes at a 200k-vector fixture is a measured
+# DNF cliff; 12 planes runs in seconds).  Env-tunable and read at import,
+# so the small and the scale runs are the same code with only the
+# constant moved.  Default 4 keeps tiny-SF fixtures populated (buckets of
+# ~n/16 still produce pairs at sf0.001).
 N_PLANES = int(os.environ.get("SPARK_GRAFT_EMB_PLANES", "4"))
 
 
@@ -181,159 +178,10 @@ def near_dup_pairs_explode(
     )
 
 
-def sq8_scale(vec_col) -> F.Column:
-    """Per-vector SQ8 scale: max|x| / 127 (floored at 1e-12)."""
-    return F.greatest(
-        F.array_max(F.transform(vec_col, lambda x: F.abs(x))) / F.lit(127.0),
-        F.lit(1e-12),
-    )
-
-
-def sq8_reconstruct(vec_col, scale_col=None) -> F.Column:
-    """Scalar-quantize an array<double> to int8 codes and reconstruct:
-    per-vector scale s = max|x| / 127, code = floor(x/s + 0.5) (explicit
-    half-up — engine-identical, unlike round()'s half-even ties),
-    reconstructed value = code * s.
-
-    Pass ``scale_col`` (a column already holding sq8_scale(vec)) to keep
-    encode/decode O(d): Spark does NOT common-subexpression-eliminate
-    across higher-order-function lambda bodies, so a scale expression
-    referenced inside the element lambda re-runs its O(d) fold PER
-    ELEMENT — O(d^2) per vector, ruinous at real embedding widths.
-
-    This is the faiss-SQ8 storage path for 100 TB embedding tables: 8x
-    smaller than float64 (4x vs float32) with ~1e-3 cosine error, and the
-    whole encode/decode is row-local JVM expressions — the recall cost is
-    measured by the ann_sq8_recall query rather than assumed."""
-    s = scale_col if scale_col is not None else sq8_scale(vec_col)
-    return F.transform(vec_col, lambda x: F.floor(x / s + F.lit(0.5)) * s)
-
-
-def l2sq_fold(a_col, b_col) -> F.Column:
-    """Squared Euclidean distance of two array<double> columns, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a_col, b_col, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-
-
-def pq_codebooks_and_codes(
-    embeddings: DataFrame,
-    dim: int,
-    m: int = 4,
-    ks: int = 8,
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Product-quantization training + encoding, subspace-parallel.
-
-    Splits each vector into ``m`` subspaces of dim/m coordinates, seeds
-    ``ks`` codes per subspace from the md5-lowest vec_ids (the same
-    deterministic init as kmeans_centroids), runs ONE L2 Lloyd round,
-    and encodes every vector as its per-subspace argmin code.  Returns
-    (codebooks(s, cid, cv), codes(vec_id, s, cid)).
-
-    Distributed shape: the subspace axis is DATA, not unrolled plan —
-    one explode to (vec_id, s, sv) rows, every train/assign step is a
-    broadcast join against the (m x ks)-row codebook + one max_by per
-    (vec_id, s); the vector table never shuffles.  Storage story: codes
-    are m bytes/vector (vs dim x 8 for float64) — the memory half of
-    IVF-PQ; recall cost measured by ann_pq_recall."""
-    dsub = dim // m
-    assert dsub * m == dim, f"dim {dim} not divisible by m={m}"
-    e = embeddings.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
-    spark = embeddings.sparkSession
-    ss = spark.range(m).select(F.col("id").cast("int").alias("s"))
-    sub = e.crossJoin(F.broadcast(ss)).select(
-        "vec_id", "s",
-        F.slice(F.col("v"), F.col("s") * dsub + 1, dsub).alias("sv"),
-    ).localCheckpoint(eager=True)
-    seeds = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(ks).collect()
-    )
-    cb0 = spark.createDataFrame(
-        [
-            (s, cid, list(r.v[s * dsub: (s + 1) * dsub]))
-            for cid, r in enumerate(seeds)
-            for s in range(m)
-        ],
-        "s int, cid int, cv array<double>",
-    )
-
-    def assign(codebook: DataFrame) -> DataFrame:
-        scored = sub.join(F.broadcast(codebook), on="s").select(
-            "vec_id", "s", "sv", "cid",
-            F.round(l2sq_fold(F.col("sv"), F.col("cv")), 6).alias("d2"),
-        )
-        return scored.groupBy("vec_id", "s").agg(
-            F.min_by(F.col("cid"), F.struct(F.col("d2"), F.col("cid"))).alias("cid"),
-            F.first("sv").alias("sv"),
-        )
-
-    mean_sv = F.array(
-        *[F.avg(F.element_at("sv", i + 1)) for i in range(dsub)]
-    ).alias("cv")
-    # r8: the trained codebook has two broadcast consumers (the encode
-    # assignment here and the caller's ADC distance table) — materialize
-    # it once instead of re-running the Lloyd assignment pass per
-    # broadcast
-    cb1 = assign(cb0).groupBy("s", "cid").agg(mean_sv).localCheckpoint(
-        eager=True
-    )
-    codes = assign(cb1).select("vec_id", "s", "cid")
-    return cb1, codes
-
-
-def pq_adc_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    m: int = 4,
-    ks: int = 8,
-    dim: int | None = None,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ asymmetric-distance top-k: score every vector as the sum of its
-    per-subspace code's squared L2 distance to the query's subvectors
-    (the ADC lookup-table trick — the query's m x ks distance table is
-    tiny and broadcast; candidates are scored WITHOUT touching their
-    float vectors).  Ranks ascending on round(score, 6) with vec_id
-    tie-break."""
-    e = embeddings.select("vec_id", _as_double(F.col(vec_col)).alias("v"))
-    if dim is None:
-        dim = len(e.select("v").first()[0])
-    dsub = dim // m
-    cb, codes = pq_codebooks_and_codes(e, dim=dim, m=m, ks=ks, vec_col="v")
-    qsub = (
-        e.filter(F.col("vec_id") == query_vec_id)
-        .crossJoin(F.broadcast(
-            e.sparkSession.range(m).select(F.col("id").cast("int").alias("s"))
-        ))
-        .select("s", F.slice(F.col("v"), F.col("s") * dsub + 1, dsub).alias("qsv"))
-    )
-    qdist = qsub.join(F.broadcast(cb), on="s").select(
-        "s", "cid", l2sq_fold(F.col("qsv"), F.col("cv")).alias("d2")
-    )
-    score = (
-        codes.filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(qdist), on=["s", "cid"])
-        .groupBy("vec_id")
-        .agg(F.sum("d2").alias("sc"))
-    )
-    w = Window.orderBy(F.round("sc", 6), "vec_id")
-    return (
-        score.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", F.round("sc", 4).alias("adc_dist"), "rnk")
-    )
-
-
 def assign_nearest(e: DataFrame, cents: DataFrame, keep: str = "v") -> DataFrame:
     """Nearest-centroid assignment — the ONE home of the quantization
     tie rule (highest round(cos, 6), then LOWEST cid) shared by the
-    Lloyd loop, IVF, and the embed_kmeans/curate_cluster_balance
-    queries (its SQL twin is _sql_kmeans_round's rn = 1 pick).
+    Lloyd loop and IVF (its SQL twin is _sql_kmeans_round's rn = 1 pick).
     ``e`` is (vec_id, v double[]); ``cents`` is (cid, cv).  Returns
     (vec_id, cid, v) with ``keep='v'``, (vec_id, cid, cc) with
     ``keep='cc'``, or just (vec_id, cid) with ``keep='cid'`` — the
@@ -466,64 +314,3 @@ def ivf_topk(
             F.round("c", 4).alias("cos_sim"), "rnk",
         )
     )
-
-
-def contrastive_triplets(
-    embeddings: DataFrame,
-    n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(anchor, positive, hard-negative) mining for contrastive
-    training: per anchor, positive = most-similar same-bucket vector,
-    hard negative = LEAST-similar same-bucket vector (collides under
-    the sign hash yet far in cosine — the informative negative).
-    Anchors with a single distinct partner are dropped.
-
-    ``n_planes`` is THE scale knob: candidate work is
-    Σ_buckets |bucket|² with |bucket| ≈ n/2^planes — the registered
-    query fixes 4 planes so DuckDB replays the buckets, and 4 planes at
-    100x (200k vectors → 12.5k/bucket ≈ 2.5e9 fold pairs) is the
-    measured DNF cliff (docs/SCALE.md); the production setting grows
-    planes with log2(n) to hold bucket populations flat."""
-    e = embeddings.select(
-        "vec_id",
-        sign_bucket(F.col(vec_col), n_planes).alias("bucket"),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).localCheckpoint(eager=True)
-    a = e.select(F.col("vec_id").alias("anchor"), "bucket",
-                 F.col("v").alias("va"))
-    b = e.select(F.col("vec_id").alias("other"), "bucket",
-                 F.col("v").alias("vb"))
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("anchor") != F.col("other"))
-        .select(
-            "anchor", "other",
-            cosine_fold(F.col("va"), F.col("vb")).alias("c"),
-        )
-    )
-    # r8: both picks in ONE per-anchor aggregation.  The old shape ran
-    # the bucket join + cosine folds TWICE (once under each
-    # row_number window) and re-joined the two picks; max_by/min_by
-    # over the windows' exact sort keys select the same rows — the key
-    # struct (round(c, 6), other) is unique per anchor, so argmax/argmin
-    # equal the rn = 1 rows — in a single hash aggregate on one exchange.
-    picked = cand.groupBy("anchor").agg(
-        F.max_by(
-            F.struct(
-                F.col("other").alias("pos_id"),
-                F.round("c", 4).alias("pos_cos"),
-            ),
-            F.struct(F.round("c", 6).alias("k"), (-F.col("other")).alias("t")),
-        ).alias("p"),
-        F.min_by(
-            F.struct(
-                F.col("other").alias("neg_id"),
-                F.round("c", 4).alias("neg_cos"),
-            ),
-            F.struct(F.round("c", 6).alias("k"), F.col("other").alias("t")),
-        ).alias("n"),
-    )
-    return picked.select(
-        "anchor", "p.pos_id", "p.pos_cos", "n.neg_id", "n.neg_cos"
-    ).filter(F.col("pos_id") != F.col("neg_id"))

@@ -66,7 +66,6 @@ def _relabel(df: DataFrame, mapping: DataFrame, cols: list[str]) -> DataFrame:
 def update_canonical(
     existing_canonical: DataFrame | None,
     delta_triples: DataFrame,
-    relink: str = "incremental",
 ) -> tuple[DataFrame, DataFrame]:
     """Evolve the canonical entity dimension with a delta batch (ADVICE r1:
     per-batch canonicalization is unstable and inner-join attach silently
@@ -80,25 +79,26 @@ def update_canonical(
     new_canonical_id) so accumulated nodes/edges can be migrated (see
     merge_graph).
 
-    ``relink="incremental"`` (default) re-links only the DELTA'S
-    NEIGHBORHOOD: LSH pairing is restricted to buckets containing a new
-    surface and to pairs with a new endpoint (link/canonical.py
-    ``involving``), CC runs over only the components those pairs touch
-    (new ids + every member of an existing cluster hit by a new edge),
-    and untouched clusters keep their labels verbatim.  This is EXACT,
-    not approximate (tested equal to full re-linking on random splits):
-    an old–old pair in an under-cap bucket was already a candidate in the
-    epoch its younger member arrived — buckets only grow — so its verdict
-    is already reflected in the prior clusters, which are re-asserted as
+    With an existing dim only the DELTA'S NEIGHBORHOOD is re-linked: LSH
+    pairing is restricted to buckets containing a new surface
+    (link/canonical.py ``lsh_candidate_pairs_delta``), CC runs over only
+    the components those pairs touch (new ids + every member of an
+    existing cluster hit by a new edge), and untouched clusters keep
+    their labels verbatim.  This is EXACT, not approximate (tested equal
+    to the one-shot link over the union on random splits): an old–old
+    pair in an under-cap bucket was already a candidate in the epoch its
+    younger member arrived — buckets only grow — so its verdict is
+    already reflected in the prior clusters, which are re-asserted as
     explicit edges below.  Per-epoch cost therefore scales with the
     delta's bucket neighborhood, not the accumulated dim — the property
     that keeps continuous maintenance viable as the dim grows without
-    bound.  ``relink="full"`` forces the O(dim) recompute.
+    bound.
 
     Returns (canonical, relabel_map)."""
     from ..link.canonical import (
         entity_vertices,
         lsh_candidate_pairs,
+        lsh_candidate_pairs_delta,
         minhash_signature,
     )
     from ..link.cc import connected_components
@@ -110,7 +110,13 @@ def update_canonical(
     # (minhash_signature is idempotent); the canonical frame returned
     # below keeps both columns, so state round-trips cache them
     new_verts = minhash_signature(entity_vertices(delta_triples).select(*cols))
-    if existing_canonical is not None:
+    if existing_canonical is None:
+        verts = new_verts.select(*sig_cols).dropDuplicates(
+            ["surface", "ent_type"]
+        ).localCheckpoint(eager=True)
+        cand = lsh_candidate_pairs(verts)
+        labels = connected_components(verts.select("entity_id").distinct(), cand)
+    else:
         old = minhash_signature(existing_canonical.select(
             *(sig_cols if "sig" in existing_canonical.columns
               and "shingles" in existing_canonical.columns else cols)
@@ -130,11 +136,6 @@ def update_canonical(
             .localCheckpoint(eager=True)
         )
         verts = old.unionByName(new_only)
-    else:
-        verts = new_verts.select(*sig_cols).dropDuplicates(
-            ["surface", "ent_type"]
-        ).localCheckpoint(eager=True)
-    if existing_canonical is not None:
         # Clusters must never split across epochs (documented contract,
         # and what keeps the relabel map FUNCTIONAL on old_canonical_id):
         # a band bucket that grows past MAX_BUCKET between epochs is
@@ -152,9 +153,7 @@ def update_canonical(
             )
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .withColumn("jaccard", F.lit(1.0))
         )
-    if existing_canonical is not None and relink == "incremental":
         # new ENTITY ids (a new surface can share its normalized entity_id
         # with an old surface — that id is not new to the link graph)
         new_ids = (
@@ -165,8 +164,6 @@ def update_canonical(
             )
             .localCheckpoint(eager=True)
         )
-        from ..link.canonical import lsh_candidate_pairs_delta
-
         cand = lsh_candidate_pairs_delta(verts, new_only).localCheckpoint(
             eager=True
         )
@@ -196,17 +193,10 @@ def update_canonical(
             affected_clusters.withColumnRenamed("canonical_id", "src"),
             on="src", how="left_semi",
         )
-        sub_edges = cand.select("src", "dst").unionByName(
-            prior_aff.select("src", "dst")
-        )
+        sub_edges = cand.select("src", "dst").unionByName(prior_aff)
         sub_labels = connected_components(sub_ids, sub_edges)
         unaffected = ex.join(sub_ids, on="entity_id", how="left_anti")
         labels = sub_labels.unionByName(unaffected)
-    else:
-        cand = lsh_candidate_pairs(verts)
-        if existing_canonical is not None:
-            cand = cand.unionByName(prior_edges)
-        labels = connected_components(verts.select("entity_id").distinct(), cand)
     labels = labels.dropDuplicates(["entity_id"]).localCheckpoint(eager=True)
     canonical = verts.join(labels, on="entity_id")
     if existing_canonical is None:

@@ -89,7 +89,11 @@ def shingles(col):
 
 def entity_vertices(triples: DataFrame) -> DataFrame:
     """Distinct (surface, ent_type) vertices from both triple endpoints,
-    with a stable 63-bit entity_id derived from the normalized form."""
+    with a stable 63-bit entity_id derived from the normalized form.
+
+    A surface that is null or normalizes to "" fails the job: the null
+    one would drop out of the inner-join attach without a trace, and all
+    punctuation-only ones would merge into one "" entity."""
     subs = triples.select(
         F.col("subj").alias("surface"), F.col("subj_type").alias("ent_type")
     )
@@ -97,7 +101,14 @@ def entity_vertices(triples: DataFrame) -> DataFrame:
         F.col("obj").alias("surface"), F.col("obj_type").alias("ent_type")
     )
     ents = subs.unionByName(objs).distinct()
-    return ents.withColumn("norm", normalize_surface(F.col("surface"))).withColumn(
+    norm = normalize_surface(F.col("surface"))
+    checked = F.when(
+        F.coalesce(norm, F.lit("")) == "",
+        F.raise_error(F.format_string(
+            "entity_vertices: null or empty surface '%s' (%s)", "surface", "ent_type"
+        )),
+    ).otherwise(norm)
+    return ents.withColumn("norm", checked).withColumn(
         "entity_id", F.abs(F.xxhash64(F.col("norm"), F.col("ent_type")))
     )
 
@@ -171,10 +182,10 @@ def lsh_candidate_pairs_delta(
     that small member set only.  Bucket sizes are exact: every member of
     a hot bucket survives the key filter, so the within-filter count
     equals the global count the full path caps on.  Output semantics
-    equal lsh_candidate_pairs(all, involving=new-ids) up to extra pairs
-    between old vertices that share a hot bucket — which the incremental
-    caller tolerates by construction (old–old verdicts are already
-    reflected in the prior clusters)."""
+    equal the pairs of lsh_candidate_pairs(all) with a new endpoint, up
+    to extra pairs between old vertices that share a hot bucket — which
+    the incremental caller tolerates by construction (old–old verdicts
+    are already reflected in the prior clusters)."""
     keycols = ["ent_type", "band_id", "band_key"]
     hot = _bands(new_verts).select(*keycols).distinct()
     members = _bands(all_verts).join(F.broadcast(hot), on=keycols)
@@ -213,20 +224,12 @@ def lsh_candidate_pairs(
     vertices: DataFrame,
     jaccard_threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
-    involving: DataFrame | None = None,
 ) -> DataFrame:
     """Banded LSH: same (ent_type, band_id, band_key) bucket -> candidate
     pair -> verify char-shingle Jaccard.  Returns (src, dst, jaccard) with
     src < dst.  Buckets larger than ``max_bucket`` are excluded (guard
     against O(bucket^2) blowup); their count is visible via
-    ``lsh_bucket_stats``.
-
-    ``involving`` (a 1-column ``entity_id`` frame) restricts output to
-    pairs with AT LEAST ONE endpoint in the set, and — the point — only
-    buckets CONTAINING such an endpoint are paired at all, so the
-    quadratic within-bucket work scales with the delta's bucket
-    neighborhood instead of the full accumulated dim (incremental
-    re-linking, graph/merge.update_canonical)."""
+    ``lsh_bucket_stats``."""
     bands = _bands(vertices)
     keycols = ["ent_type", "band_id", "band_key"]
     sizes = bands.groupBy(*keycols).agg(F.count("*").alias("bucket_size"))
@@ -234,32 +237,17 @@ def lsh_candidate_pairs(
         sizes.filter(F.col("bucket_size") <= max_bucket).drop("bucket_size"),
         on=keycols,
     )
-    if involving is not None:
-        new_ids = involving.select("entity_id").distinct().withColumn(
-            "is_new", F.lit(True)
-        )
-        bands = bands.join(new_ids, on="entity_id", how="left").withColumn(
-            "is_new", F.coalesce("is_new", F.lit(False))
-        )
-        hot = bands.filter("is_new").select(*keycols).distinct()
-        bands = bands.join(hot, on=keycols)
-        extra_a, extra_b = [F.col("is_new").alias("new_a")], [
-            F.col("is_new").alias("new_b")
-        ]
-    else:
-        extra_a = extra_b = []
     a = bands.select(
-        *keycols, F.col("entity_id").alias("src"),
-        F.col("shingles").alias("sh_a"), *extra_a,
+        *keycols, F.col("entity_id").alias("src"), F.col("shingles").alias("sh_a")
     )
     b = bands.select(
-        *keycols, F.col("entity_id").alias("dst"),
-        F.col("shingles").alias("sh_b"), *extra_b,
+        *keycols, F.col("entity_id").alias("dst"), F.col("shingles").alias("sh_b")
     )
-    cand = a.join(b, on=keycols).filter(F.col("src") < F.col("dst"))
-    if involving is not None:
-        cand = cand.filter(F.col("new_a") | F.col("new_b"))
-    cand = cand.dropDuplicates(["src", "dst"])
+    cand = (
+        a.join(b, on=keycols)
+        .filter(F.col("src") < F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (

@@ -1,21 +1,24 @@
-"""Driver-contract query registry: PySpark implementation + DuckDB oracle
-SQL per operator (SURVEY.md §2 inventory; run by /root/repo/__spark_entry__.py).
+"""KG-construction query registry: one PySpark implementation and one
+DuckDB oracle SQL per query, served by ``__spark_entry__.py``.
 
-Every entry returns columns with IDENTICAL names and compatible types in
-both engines; all floats are rounded; all integer outputs are BIGINT.  The
-driver compares row-count + schema + order-insensitive value hash at
-sf=0.01.
+Each query runs a layer of the KG pipeline (mention tagging, pairing,
+triple extraction, canonical ids, nodes/edges, connected components,
+context windows, predict JSON) over the ``documents`` table, and its
+oracle recomputes the same rows relationally.  Both engines return
+columns with identical names and compatible types; floats are rounded and
+integer outputs are BIGINT, so results compare by row count, schema and an
+order-insensitive value hash (``scripts/check_oracles.py``).
 
-Cross-engine determinism toolkit (used throughout):
+Cross-engine determinism toolkit:
   * ``charfold`` — polynomial char hash ``fold(a*31 + ascii(c)) mod 2^31-1``,
     expressible as Spark higher-order functions AND DuckDB list_reduce;
   * md5/sha256 hex — identical builtins in both engines;
   * rounding on every float aggregate (cross-engine summation order);
   * total-order tie-breaks on every top-k.
 
-The KG queries run over the driver's ``documents`` table with the ``docs``
-surrogate model (kgforge/core/model.py) — single-token lexicon + gap
-patterns chosen so the full UDF cascade has an exact relational mirror.
+The queries use the ``docs`` surrogate model (kgforge/core/model.py) —
+single-token lexicon + gap patterns chosen so the full UDF cascade has an
+exact relational mirror.
 """
 
 from __future__ import annotations
@@ -27,18 +30,7 @@ from pyspark.sql import functions as F
 
 from .core.model import DOC_ENT_LEX, DOC_GAP_PATTERNS
 from .core.vocab import ENT_TYPES, REL_TYPES
-from .functions.hashing import (  # noqa: F401  (re-exported: query modules import from here)
-    MINHASH_AB,
-    MOD,
-    charfold,
-    hashed_arrays,
-    minhash_from_arrays,
-    minhash_of,
-    shingle_arrays,
-    shingles_of,
-    simhash_from_hashed,
-    sql_charfold,
-)
+from .functions.hashing import charfold, sql_charfold
 
 
 # ---------------------------------------------------------------------------
@@ -60,29 +52,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, re-split to cluster parallelism — the `_docs` rule
-    (r8), applied SELECTIVELY: used only by the bucket-pair verifiers
-    (embedding_cosine / contrastive / semantic_prune), whose
-    within-bucket cosine folds are the dominant per-row work and ran on
-    ONE core off the single local parquet split (measured: contrastive
-    3.6 s → 1.3 s).  The light paths (single-query top-k folds, k-row
-    centroid math) keep the plain scan — there the extra round-robin
-    shuffle costs more than single-core folding saves (measured: pq /
-    kmeans / pca regressed ~1.3× under a blanket repartition).  At real
-    scale the scan has thousands of splits and the choice disappears."""
-    return _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pos, tok) — whitespace tokens with 0-based positions."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("p", "tok")
-    ).select("doc_id", F.col("p").cast("bigint").alias("pos"), "tok")
 
 
 SQL_TOK = """
@@ -117,10 +86,6 @@ triples AS (
   WHERE NOT (l1.ent_type = 'Generic' AND l3.ent_type = 'Generic')
 )
 """
-
-def _ent_names() -> F.Column:
-    # built lazily — module import must not require an active SparkContext
-    return F.array(*[F.lit(e) for e in ENT_TYPES])
 
 
 def _docs_as_units(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,60 +160,6 @@ def _doc_mentions_df(
     )
 
 
-def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh) — distinct 3-token shingles per document (shared
-    implementation: functions/hashing.shingles_of, also the unit under
-    the incremental dedup state in kgforge/dedup.py)."""
-    return shingles_of(_docs(spark, sf_dir))
-
-
-def _sharr_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh_arr) — the un-exploded shingle table (r8):
-    ``explode(sh_arr)`` is exactly ``_shingles_df``.  Per-document
-    consumers (signatures, counts, simhash, pairwise verify) fold the
-    array row-locally instead of paying an explode + groupBy shuffle."""
-    return shingle_arrays(_docs(spark, sf_dir))
-
-
-SQL_SHINGLES = f"""
-{SQL_TOK},
-sh3 AS (
-  SELECT t1.doc_id, t1.tok || ' ' || t2.tok || ' ' || t3.tok AS sh
-  FROM tok t1
-  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-),
-shingle AS (SELECT DISTINCT doc_id, sh FROM sh3)
-"""
-
-def _minhash_df(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
-    """``sh`` lets a caller that already materialized the shingle table
-    (e.g. dedup_fuse_modalities, which feeds two modalities from one
-    corpus pass) reuse it instead of re-deriving shingles from text.
-    Shared implementation: functions/hashing.minhash_of; the n_sh count
-    it carries (for the incremental dedup state) is dropped here so the
-    query-layer signature schema stays (doc_id, s0..s3)."""
-    if sh is None:
-        # r8: signatures are per-document folds — the array form skips
-        # the explode + groupBy shuffle (guide §2.4), bit-identically
-        return minhash_from_arrays(_sharr_df(spark, sf_dir)).drop("n_sh")
-    return minhash_of(sh).drop("n_sh")
-
-
-def _sql_minhash() -> str:
-    mins = ", ".join(
-        f"MIN((CAST({a} AS BIGINT) * h + {b}) % {MOD}) AS s{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    return f"""
-WITH {SQL_SHINGLES},
-hashed AS (SELECT doc_id, {sql_charfold('sh')} AS h FROM shingle),
-sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
-"""
-
-
 # ---------------------------------------------------------------------------
 # the registry
 # ---------------------------------------------------------------------------
@@ -265,219 +176,6 @@ def register(name: str, sql: str | None = None):
         return fn
 
     return deco
-
-
-# ---------- relational core (TPC-H-ish; A1, J2-J8, W1-W4, P-ops) ----------
-
-@register(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_c,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-             AS sum_disc_price_c,
-           CAST(SUM(CAST(ROUND(l_discount * 10000) AS BIGINT)) AS BIGINT) AS sum_disc_bp,
-           CAST(COUNT(*) AS BIGINT) AS count_order
-    FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: scan-filter-agg with map-side partial aggregation
-    (A1 analog).  Predicate pushes to the parquet scan.  Money sums in
-    integer cents: per-row ROUND is bitwise-identical across engines,
-    integer sums are exact — no cross-engine float-accumulation drift."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp")
-    )
-    cents = lambda c, m=100: F.round(c * m).cast("bigint")  # noqa: E731
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(cents(F.col("l_quantity"))).cast("bigint").alias("sum_qty_c"),
-        F.sum(cents(F.col("l_extendedprice"))).cast("bigint").alias("sum_base_price_c"),
-        F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .cast("bigint")
-        .alias("sum_disc_price_c"),
-        F.sum(cents(F.col("l_discount"), 10000)).cast("bigint").alias("sum_disc_bp"),
-        F.count("*").alias("count_order"),
-    )
-
-
-@register(
-    "q_revenue_by_nation",
-    """
-    SELECT n.n_name AS nation,
-           CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_c,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q_revenue_by_nation(spark, sf_dir):
-    """Star join with broadcast dims (J4-style broadcast-hash; J2 equi)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("revenue_c"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-@register(
-    "q_semi_anti",
-    """
-    SELECT CAST(SUM(CASE WHEN o.o_custkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_with_orders,
-           CAST(SUM(CASE WHEN o.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_without_orders
-    FROM customer c LEFT JOIN (SELECT DISTINCT o_custkey FROM orders) o
-      ON c.c_custkey = o.o_custkey
-    """,
-)
-def q_semi_anti(spark, sf_dir):
-    """Semi/anti-join counts (J7 left_semi / J8 left_anti semantics)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey").distinct()
-    j = c.join(o, c.c_custkey == o.o_custkey, "left")
-    return j.agg(
-        F.sum(F.when(F.col("o_custkey").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_with_orders"),
-        F.sum(F.when(F.col("o_custkey").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_without_orders"),
-    )
-
-
-@register(
-    "q_topk_per_group",
-    """
-    SELECT o_custkey, o_orderkey, CAST(rnk AS BIGINT) AS rnk FROM (
-      SELECT o_custkey, o_orderkey,
-             ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-      FROM orders) WHERE rnk <= 3
-    """,
-)
-def q_topk_per_group(spark, sf_dir):
-    """Per-group top-k via row_number (W1 ranking + W2 truncation) with a
-    total-order tie-break."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        o.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "rnk")
-    )
-
-
-@register(
-    "q_running_total",
-    """
-    SELECT event_id,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_value_c
-    FROM events
-    """,
-)
-def q_running_total(spark, sf_dir):
-    """Analytic running total (W4: the reference's sentence-offset cumsum,
-    data/data_structures.py:76-80) — integer cents for exact parity."""
-    e = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return e.select(
-        "event_id",
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .over(w)
-        .cast("bigint")
-        .alias("running_value_c"),
-    )
-
-
-@register(
-    "q_context_window",
-    """
-    SELECT event_id,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS BIGINT) AS ctx_sum_c,
-           CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS BIGINT) AS ctx_n
-    FROM events
-    """,
-)
-def q_context_window(spark, sf_dir):
-    """±k-row frame window (W3: the reference's ±k-sentence context window,
-    data/utils.py:84-116) — integer cents for exact parity."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-2, 2)
-    return e.select(
-        "event_id",
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .over(w)
-        .cast("bigint")
-        .alias("ctx_sum_c"),
-        F.count("*").over(w).cast("bigint").alias("ctx_n"),
-    )
-
-
-_BANDS = [(0.0, 2.0, "b0"), (2.0, 4.0, "b1"), (4.0, 6.0, "b2"), (6.0, 8.0, "b3"), (8.0, 1e9, "b4")]
-_BAND_VALUES = ", ".join(f"({lo}, {hi}, '{b}')" for lo, hi, b in _BANDS)
-
-
-@register(
-    "q_range_join",
-    f"""
-    SELECT b.band, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(ROUND(e.value * 100) AS BIGINT)) AS BIGINT) AS sum_value_c
-    FROM events e JOIN (VALUES {_BAND_VALUES}) b(lo, hi, band)
-      ON e.value >= b.lo AND e.value < b.hi
-    GROUP BY b.band
-    """,
-)
-def q_range_join(spark, sf_dir):
-    """Range/band join (P3: span-in-sentence range lookup)."""
-    e = _t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(_BANDS, "lo double, hi double, band string")
-    j = e.join(
-        F.broadcast(bands), (e.value >= bands.lo) & (e.value < bands.hi)
-    )
-    return j.groupBy("band").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_value_c"),
-    )
-
-
-@register(
-    "q_dedup_exact",
-    """
-    SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT sha256(text)) AS BIGINT) AS n_distinct_texts
-    FROM documents GROUP BY lang
-    """,
-)
-def q_dedup_exact(spark, sf_dir):
-    """Exact dedup accounting via content hash (T4/A9 set-dedup + F14
-    sha256 provenance)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct(F.sha2("text", 256)).alias("n_distinct_texts"),
-    )
 
 
 # ---------- KG pipeline over documents (M1-M4, J1, J4, W1/W2, A1) ----------
@@ -527,8 +225,7 @@ def kg_mentions_bpe(spark, sf_dir):
     documents) plus the merge TRAINING pass — n_merges vocab-table
     aggregations with map-side combine (functions/bpe.py) — and a
     vocab-sized driver collect of the merge table (BPE's merge list is
-    inherently a small sequential artifact, same class as the k-means
-    seeds)."""
+    inherently a small sequential artifact)."""
     from .core.model import bpe_model_name
     from .functions.bpe import pretoken_counts, train_bpe_merges
 
@@ -879,993 +576,6 @@ def kg_content_sha(spark, sf_dir):
 
 
 @register(
-    "q5_regional_revenue",
-    """
-    SELECT r.r_name AS region, n.n_name AS nation,
-           CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_c,
-           CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS n_customers
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE o.o_orderstatus = 'F'
-    GROUP BY r.r_name, n.n_name
-    """,
-)
-def q5_regional_revenue(spark, sf_dir):
-    """TPC-H Q5 shape: 4-way star join, two broadcast dims chained, filter
-    pushed below the joins (Catalyst join reordering territory)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    j = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    )
-    return j.groupBy(
-        F.col("r_name").alias("region"), F.col("n_name").alias("nation")
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("revenue_c"),
-        F.countDistinct("c_custkey").alias("n_customers"),
-    )
-
-
-@register(
-    "q_daily_active",
-    """
-    SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM events GROUP BY 1
-    """,
-)
-def q_daily_active(spark, sf_dir):
-    """Event-time daily rollup with exact distinct-user counts (the
-    monitoring-side aggregation; approx_count_distinct is the 100 TB
-    variant, exact here for the oracle)."""
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy(
-        F.to_date("ts").cast("string").alias("day")
-    ).agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count("*").alias("n_events"),
-    )
-
-
-@register(
-    "q_sessionize",
-    """
-    WITH x AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    s AS (SELECT user_id, ts,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS sid
-          FROM x)
-    SELECT user_id, CAST(sid AS BIGINT) AS session_ix,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 1000000 AS BIGINT)
-             AS duration_s
-    FROM s GROUP BY 1, 2
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """Event SESSIONIZATION (gaps-and-islands): per user, a new session
-    starts after a >30-min silence; outputs per-session event count and
-    whole-second duration.  The batch ground truth for the streaming
-    session_window twin (kgforge.streaming.streaming_sessionize —
-    equivalence pinned by tests/test_streaming.py).  Scale shape: both
-    windows partition by user_id — parallel across users, ordered only
-    within one user's events; duration in integer microsecond
-    arithmetic so both engines agree exactly."""
-    gap_us = 1800 * 1_000_000
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = _t(spark, sf_dir, "events")
-    # parquet stores TIMESTAMP_NTZ; session tz is pinned UTC, so the cast
-    # to TIMESTAMP is the identity epoch mapping both engines use
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    prev = F.lag("ts").over(w)
-    new_s = (
-        prev.isNull() | (us(F.col("ts")) - us(prev) > gap_us)
-    ).cast("bigint")
-    s = e.withColumn("new_s", new_s).withColumn(
-        "sid",
-        F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return s.groupBy(
-        "user_id", F.col("sid").cast("bigint").alias("session_ix")
-    ).agg(
-        F.count("*").alias("n_events"),
-        (
-            (us(F.max("ts")) - us(F.min("ts"))) / F.lit(1_000_000)
-        ).cast("bigint").alias("duration_s"),
-    )
-
-
-@register(
-    "q_distinct_kmv",
-    f"""
-    WITH h AS (SELECT DISTINCT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                      {sql_charfold("md5(CAST(user_id AS VARCHAR))")} AS hv
-               FROM events),
-    r AS (SELECT day, hv,
-                 ROW_NUMBER() OVER (PARTITION BY day ORDER BY hv) AS rn,
-                 COUNT(*) OVER (PARTITION BY day) AS nd
-          FROM h),
-    kth AS (SELECT day, MAX(CASE WHEN rn = LEAST(64, nd) THEN hv END) AS kv,
-                   MAX(nd) AS nd
-            FROM r GROUP BY day)
-    SELECT day, CAST(nd AS BIGINT) AS n_exact,
-           CAST(CASE WHEN nd <= 64 THEN nd
-                     ELSE CAST(ROUND(63.0 * {MOD} / kv) AS BIGINT)
-                END AS BIGINT) AS n_kmv
-    FROM kth
-    """,
-)
-def q_distinct_kmv(spark, sf_dir):
-    """DETERMINISTIC approximate distinct count — the k-minimum-values
-    (KMV / theta) sketch: per day, hash each user into [0, MOD), keep
-    the k=64 smallest distinct hashes, estimate distincts as
-    (k-1) * MOD / kth_smallest (exact when fewer than k).  Chosen over
-    approx_count_distinct because HLL registers differ across engines —
-    KMV over a shared deterministic hash is bit-identical in Spark and
-    DuckDB, so the sketch itself is oracle-checkable, alongside the
-    exact count for the error story.  Scale shape: KMV is the
-    classic mergeable sketch — per-partition k-smallest sets merge by
-    sorted-slice exactly like build_edges' min-k provenance; here the
-    per-day rank formulation keeps the query one shuffle."""
-    k = 64
-    e = _t(spark, sf_dir, "events")
-    # charfold of the raw id is NOT uniform (short digit strings hash
-    # low, wrecking the estimator); md5 first, then fold the 32-hex-char
-    # digest — well-mixed in [0, MOD) and engine-identical
-    h = e.select(
-        F.to_date("ts").cast("string").alias("day"),
-        charfold(F.md5(F.col("user_id").cast("string"))).alias("hv"),
-    ).distinct()
-    w = Window.partitionBy("day").orderBy("hv")
-    r = h.withColumn("rn", F.row_number().over(w)).withColumn(
-        "nd", F.count("*").over(Window.partitionBy("day"))
-    )
-    kth = r.groupBy("day").agg(
-        F.max(
-            F.when(F.col("rn") == F.least(F.lit(k), F.col("nd")), F.col("hv"))
-        ).alias("kv"),
-        F.max("nd").alias("nd"),
-    )
-    est = F.when(
-        F.col("nd") <= k, F.col("nd")
-    ).otherwise(F.round(F.lit(float(k - 1)) * MOD / F.col("kv")))
-    return kth.select(
-        "day",
-        F.col("nd").cast("bigint").alias("n_exact"),
-        est.cast("bigint").alias("n_kmv"),
-    )
-
-
-@register(
-    "q_rolling_active_users",
-    """
-    WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-    days AS (SELECT DISTINCT day FROM du)
-    SELECT CAST(d.day AS VARCHAR) AS day,
-           CAST(COUNT(DISTINCT u.user_id) AS BIGINT) AS mau7
-    FROM days d JOIN du u
-      ON u.day BETWEEN d.day - INTERVAL 6 DAY AND d.day
-    GROUP BY d.day
-    """,
-)
-def q_rolling_active_users(spark, sf_dir):
-    """Trailing 7-day distinct active users per day — the sliding-window
-    temporal rollup (tumbling is q_daily_active).  Expressed as a
-    bounded RANGE join of day-level distinct pairs (each (day, user)
-    lands in <= 7 output days), which Spark executes as an equi-join
-    after the day-delta explode would — here the day dimension is tiny,
-    so the days side broadcasts and the distinct-count shuffles once per
-    output day.  At 100 TB the day-level pre-distinct is the operative
-    reduction: the window never touches raw events."""
-    e = _t(spark, sf_dir, "events")
-    du = e.select(
-        F.to_date("ts").alias("day"), "user_id"
-    ).distinct().localCheckpoint(eager=True)
-    days = du.select("day").distinct().withColumnRenamed("day", "d")
-    j = du.join(
-        F.broadcast(days),
-        (F.col("day") <= F.col("d"))
-        & (F.col("day") >= F.date_sub(F.col("d"), 6)),
-    )
-    return j.groupBy(F.col("d").cast("string").alias("day")).agg(
-        F.countDistinct("user_id").alias("mau7")
-    )
-
-
-@register(
-    "q_asof_prior_view",
-    """
-    WITH tagged AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN event_type = 'view' THEN ts END AS view_ts
-      FROM events WHERE event_type IN ('click', 'view')),
-    filled AS (
-      SELECT user_id, event_id, ts,
-             LAST_VALUE(view_ts IGNORE NULLS) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS prev_view_ts,
-             view_ts
-      FROM tagged)
-    SELECT user_id, event_id,
-           CAST((epoch_us(ts) - epoch_us(prev_view_ts)) // 1000000 AS BIGINT)
-             AS gap_s
-    FROM filled
-    WHERE view_ts IS NULL AND prev_view_ts IS NOT NULL
-    """,
-)
-def q_asof_prior_view(spark, sf_dir):
-    """AS-OF JOIN — for every click, the user's most recent view AT OR
-    BEFORE it — in the formulation that scales: union-tag both sides,
-    ONE window per user carrying the last non-null view timestamp
-    forward (last_value IGNORE NULLS, rows unbounded preceding).  A
-    naive as-of as an inequality join explodes to clicks x prior-views
-    per user before aggregation; the tagged-window form is one shuffle
-    on user_id and linear in events — the standard trick for temporal
-    alignment (market data, attribution, feature as-of lookup).
-    Clicks with no prior view drop out (inner as-of); gap reported in
-    whole seconds via integer-µs arithmetic for engine parity."""
-    e = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "view")
-    )
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    tagged = e.select(
-        "user_id", "event_id", "ts",
-        F.when(F.col("event_type") == "view", F.col("ts")).alias("view_ts"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = tagged.withColumn(
-        "prev_view_ts", F.last("view_ts", ignorenulls=True).over(w)
-    )
-    clicks = filled.filter(
-        F.col("view_ts").isNull() & F.col("prev_view_ts").isNotNull()
-    )
-    return clicks.select(
-        "user_id", "event_id",
-        ((us(F.col("ts")) - us(F.col("prev_view_ts"))) / F.lit(1_000_000))
-        .cast("bigint").alias("gap_s"),
-    )
-
-
-@register(
-    "q_event_quantiles",
-    """
-    WITH r AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM events WHERE value IS NOT NULL)
-    SELECT event_type,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.50 * n) AS BIGINT)
-                          THEN value END), 4) AS p50,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.90 * n) AS BIGINT)
-                          THEN value END), 4) AS p90,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT)
-                          THEN value END), 4) AS p99,
-           CAST(MAX(n) AS BIGINT) AS n
-    FROM r GROUP BY event_type
-    """,
-)
-def q_event_quantiles(spark, sf_dir):
-    """EXACT distributed quantiles (percentile_disc semantics: the value
-    at rank ceil(q*n), deterministic tie-break by event_id) per event
-    type — chosen over percentile_approx/approx_quantile because their
-    sketches differ across engines, while the rank formulation is
-    bit-identical and still one shuffle: the rank window parallelizes
-    across groups.  For ONE giant group the same formula runs on the
-    two-pass global rank (functions/ranks.global_row_number) instead of
-    a single-partition window — the documented scale path.  NULL values
-    are excluded up front: Spark ranks ASC NULLS FIRST while DuckDB
-    defaults to NULLS LAST, so ranking over NULLs would silently shift
-    every percentile position between the engines."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    r = e.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy("event_type"))
-    )
-
-    def at(q: float) -> F.Column:
-        return F.round(
-            F.max(
-                F.when(
-                    F.col("rn") == F.ceil(F.lit(q) * F.col("n")).cast("bigint"),
-                    F.col("value"),
-                )
-            ),
-            4,
-        )
-
-    return r.groupBy("event_type").agg(
-        at(0.50).alias("p50"),
-        at(0.90).alias("p90"),
-        at(0.99).alias("p99"),
-        F.max("n").cast("bigint").alias("n"),
-    )
-
-
-# Greenwald-Khanna accuracy for the approx-quantile twin: rank error
-# <= n/QUANTILE_ACCURACY (Spark percentile_approx contract: 1/accuracy
-# is the relative rank error).  Env-tunable like the other scale knobs;
-# the bound check below derives from whatever value is baked in, so the
-# registered form and the production form are the same code.
-import os as _os_q  # noqa: E402
-
-QUANTILE_ACCURACY = int(
-    _os_q.environ.get("SPARK_GRAFT_QUANTILE_ACCURACY", "100")
-)
-
-
-@register(
-    "q_event_quantiles_approx",
-    """
-    WITH r AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM events WHERE value IS NOT NULL)
-    SELECT event_type,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.50 * n) AS BIGINT)
-                          THEN value END), 4) AS p50,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.90 * n) AS BIGINT)
-                          THEN value END), 4) AS p90,
-           ROUND(MAX(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT)
-                          THEN value END), 4) AS p99,
-           CAST(MAX(n) AS BIGINT) AS n,
-           TRUE AS p50_in_bound, TRUE AS p90_in_bound, TRUE AS p99_in_bound
-    FROM r GROUP BY event_type
-    """,
-)
-def q_event_quantiles_approx(spark, sf_dir):
-    """PRODUCTION twin of q_event_quantiles (the sketch family's fourth
-    member after CMS counts, HLL cardinalities, and Bloom membership):
-    quantiles via Spark's built-in Greenwald-Khanna sketch
-    (percentile_approx, JVM-side, mergeable map-side state) — at 100 TB
-    the exact rank formulation shuffles every row into its group's sort,
-    while the GK sketch keeps per-group state at O(accuracy·log n) and
-    merges partial sketches, the same state-vs-shuffle trade as the
-    HLL retention twin (q_retention_cohorts_approx).
-
-    Measurement form, same discipline as the HLL twin: compute BOTH the
-    exact percentile_disc values (rank window, shared formulation with
-    q_event_quantiles) and the GK values, and ship BOUND-ASSERTING
-    booleans — GK guarantees the returned element's rank lies within
-    n/accuracy of the target, so the approx value must fall between the
-    exact values at ranks floor((p-eps)·n) and ceil((p+eps)·n)
-    (eps = 1/QUANTILE_ACCURACY, clamped to [1, n]).  The sketch is
-    deterministic for a given input, so the oracle pins the booleans
-    TRUE next to the exact values; a GK regression or a wrong bound
-    derivation flips a boolean and fails the row.  Measured rank error
-    vs the analytic bound: scripts/bench_approx.py -> BENCH/APPROX.md.
-
-    Scale shape: one rank window per group for the exact leg (the
-    measurement tool — groups parallelize; ONE giant group would use the
-    two-pass rank, functions/ranks.py, as q_event_quantiles documents)
-    plus one GK aggregate (the serving path) and a 10-row join."""
-    eps = 1.0 / QUANTILE_ACCURACY
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    r = e.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count("*").over(Window.partitionBy("event_type"))
-    )
-
-    def val_at(rank_col) -> F.Column:
-        return F.max(F.when(F.col("rn") == rank_col, F.col("value")))
-
-    def tgt(q: float) -> F.Column:
-        return F.ceil(F.lit(q) * F.col("n")).cast("bigint")
-
-    def lo(q: float) -> F.Column:
-        return F.greatest(
-            F.lit(1).cast("bigint"),
-            F.floor(F.lit(q - eps) * F.col("n")).cast("bigint"),
-        )
-
-    def hi(q: float) -> F.Column:
-        return F.least(
-            F.col("n").cast("bigint"),
-            F.ceil(F.lit(q + eps) * F.col("n")).cast("bigint"),
-        )
-
-    aggs = [F.max("n").cast("bigint").alias("n")]
-    for q, name in ((0.50, "p50"), (0.90, "p90"), (0.99, "p99")):
-        aggs += [
-            F.round(val_at(tgt(q)), 4).alias(name),
-            val_at(lo(q)).alias(f"_{name}_lo"),
-            val_at(hi(q)).alias(f"_{name}_hi"),
-        ]
-    exact = r.groupBy("event_type").agg(*aggs)
-    approx = e.groupBy("event_type").agg(
-        F.percentile_approx(
-            "value", [0.50, 0.90, 0.99], QUANTILE_ACCURACY
-        ).alias("_ap")
-    )
-    j = exact.join(approx, on="event_type")
-    return j.select(
-        "event_type",
-        "p50",
-        "p90",
-        "p99",
-        "n",
-        *[
-            (
-                (F.element_at("_ap", i + 1) >= F.col(f"_{name}_lo"))
-                & (F.element_at("_ap", i + 1) <= F.col(f"_{name}_hi"))
-            ).alias(f"{name}_in_bound")
-            for i, name in enumerate(("p50", "p90", "p99"))
-        ],
-    )
-
-
-@register(
-    "q_value_mad",
-    """
-    WITH e AS (SELECT event_type, event_id, value FROM events
-               WHERE value IS NOT NULL),
-    r1 AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY value, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM e),
-    med AS (SELECT event_type,
-                   MAX(CASE WHEN rn = CAST(ceil(0.50 * n) AS BIGINT)
-                            THEN value END) AS med
-            FROM r1 GROUP BY event_type),
-    dev AS (SELECT e.event_type, e.event_id, e.value,
-                   ABS(e.value - m.med) AS adev, m.med
-            FROM e JOIN med m ON e.event_type = m.event_type),
-    r2 AS (
-      SELECT event_type, adev,
-             ROW_NUMBER() OVER (PARTITION BY event_type
-                                ORDER BY adev, event_id) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM dev),
-    mad AS (SELECT event_type,
-                   MAX(CASE WHEN rn = CAST(ceil(0.50 * n) AS BIGINT)
-                            THEN adev END) AS mad
-            FROM r2 GROUP BY event_type)
-    SELECT d.event_type,
-           ROUND(MAX(d.med), 4) AS med,
-           ROUND(MAX(m.mad), 4) AS mad,
-           CAST(SUM(CASE WHEN m.mad > 0 AND d.adev > 3 * m.mad
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM dev d JOIN mad m ON d.event_type = m.event_type
-    GROUP BY d.event_type
-    """,
-)
-def q_value_mad(spark, sf_dir):
-    """ROBUST outlier counts per event type: median absolute deviation
-    (exact medians via the same rank formulation as q_event_quantiles —
-    engine-bit-identical where approx sketches are not), flagging
-    |value - median| > 3 x MAD.  Complements q_value_outliers' z-score:
-    MAD survives the heavy tails that inflate a standard deviation
-    until real outliers z-score as normal.  Two rank passes (value,
-    then absolute deviation), both windowed per type — parallel across
-    groups; mad = 0 types flag nothing (a constant column has no
-    outliers, not all of them).  NULLs excluded up front (NULLS
-    FIRST/LAST rank divergence)."""
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select("event_type", "event_id", "value")
-    )
-
-    def _median(df, col, out):
-        w = Window.partitionBy("event_type").orderBy(col, "event_id")
-        r = df.withColumn("rn", F.row_number().over(w)).withColumn(
-            "n", F.count("*").over(Window.partitionBy("event_type"))
-        )
-        return r.groupBy("event_type").agg(
-            F.max(
-                F.when(
-                    F.col("rn")
-                    == F.ceil(F.lit(0.5) * F.col("n")).cast("bigint"),
-                    F.col(col),
-                )
-            ).alias(out)
-        )
-
-    med = _median(e, "value", "med")
-    dev = e.join(med, on="event_type").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = _median(dev, "adev", "mad")
-    j = dev.join(mad, on="event_type")
-    return j.groupBy("event_type").agg(
-        F.round(F.max("med"), 4).alias("med"),
-        F.round(F.max("mad"), 4).alias("mad"),
-        F.sum(
-            ((F.col("mad") > 0) & (F.col("adev") > 3 * F.col("mad")))
-            .cast("bigint")
-        ).alias("n_outliers"),
-        F.count("*").alias("n"),
-    )
-
-
-@register(
-    "q_value_histogram",
-    """
-    WITH b AS (SELECT MIN(value) AS lo, MAX(value) AS hi
-               FROM events WHERE value IS NOT NULL),
-    binned AS (
-      SELECT LEAST(CAST(floor((e.value - b.lo) /
-                        (GREATEST(b.hi - b.lo, 1e-12) / 10.0))
-                        AS BIGINT), 9) AS bin,
-             b.lo, b.hi
-      FROM events e, b WHERE e.value IS NOT NULL)
-    SELECT bin,
-           ROUND(lo + bin * (hi - lo) / 10.0, 4) AS bin_lo,
-           ROUND(lo + (bin + 1) * (hi - lo) / 10.0, 4) AS bin_hi,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM binned GROUP BY bin, lo, hi
-    """,
-)
-def q_value_histogram(spark, sf_dir):
-    """Equal-width 10-bin numeric histogram of event values — the
-    profiling/monitoring primitive: the (min, max) scalar is one
-    map-side-combining pass, binning is a row-local floor expression
-    against the broadcast bounds, the histogram one 10-group agg.  The
-    max value clamps into the last bin (floor((hi-lo)/w) == 10) — the
-    standard closed-right edge, mirrored on both engines.  NULL values
-    are dropped before both the bounds pass and the binning pass (LEAST
-    would otherwise silently coalesce a NULL bin into bin 9), and the
-    width is floored at 1e-12 so a constant column yields one bin
-    instead of a divide-by-zero."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    b = e.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    w = F.greatest(F.col("hi") - F.col("lo"), F.lit(1e-12)) / 10.0
-    binned = e.crossJoin(F.broadcast(b)).select(
-        F.least(
-            F.floor((F.col("value") - F.col("lo")) / w).cast("bigint"),
-            F.lit(9),
-        ).alias("bin"),
-        "lo", "hi",
-    )
-    return binned.groupBy("bin", "lo", "hi").agg(
-        F.count("*").alias("n")
-    ).select(
-        "bin",
-        F.round(F.col("lo") + F.col("bin") * (F.col("hi") - F.col("lo")) / 10.0, 4)
-        .alias("bin_lo"),
-        F.round(
-            F.col("lo") + (F.col("bin") + 1) * (F.col("hi") - F.col("lo")) / 10.0, 4
-        ).alias("bin_hi"),
-        "n",
-    )
-
-
-@register(
-    "q_profile_events",
-    """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
-           CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS null_values,
-           CAST(SUM(CASE WHEN props IS NULL OR props = '' THEN 1 ELSE 0 END)
-                AS BIGINT) AS empty_props,
-           CAST(CAST(MIN(ts) AS DATE) AS VARCHAR) AS first_day,
-           CAST(CAST(MAX(ts) AS DATE) AS VARCHAR) AS last_day
-    FROM events
-    """,
-)
-def q_profile_events(spark, sf_dir):
-    """One-row table PROFILE (row count, key cardinalities, null/empty
-    counts, time bounds) — the first query any pipeline runs against an
-    unfamiliar table, and the health check scheduled against a
-    production one.  Single pass: every statistic is a map-side-
-    combining aggregate over one scan (the two exact distincts expand
-    the plan; at 100 TB you would swap them for the KMV sketch this
-    repo also ships as q_distinct_kmv)."""
-    e = _t(spark, sf_dir, "events")
-    return e.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.countDistinct("event_type").alias("n_types"),
-        F.sum(F.col("value").isNull().cast("bigint")).alias("null_values"),
-        F.sum(
-            (F.col("props").isNull() | (F.col("props") == "")).cast("bigint")
-        ).alias("empty_props"),
-        F.to_date(F.min("ts")).cast("string").alias("first_day"),
-        F.to_date(F.max("ts")).cast("string").alias("last_day"),
-    )
-
-
-@register(
-    "q_event_type_graph",
-    """
-    WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-    cu AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS c FROM ut GROUP BY 1),
-    nu AS (SELECT CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS n FROM ut),
-    cooc AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(COUNT(*) AS BIGINT) AS cooc
-      FROM ut a JOIN ut b
-        ON a.user_id = b.user_id AND a.event_type < b.event_type
-      GROUP BY 1, 2)
-    SELECT c.type_a, c.type_b, c.cooc,
-           ROUND((CAST(c.cooc AS DOUBLE) * nu.n) / (ca.c * cb.c), 4) AS lift
-    FROM cooc c
-    JOIN cu ca ON ca.event_type = c.type_a
-    JOIN cu cb ON cb.event_type = c.type_b, nu
-    """,
-)
-def q_event_type_graph(spark, sf_dir):
-    """GRAPH INDUCTION from the event log: co-occurrence edges between
-    event types that appear for the same user, weighted by lift
-    P(a,b)/(P(a)P(b)) over the user population — turning a behavioral
-    stream into an affinity graph the graph-analytics family can then
-    consume (the KG analog of market-basket association mining).
-
-    Scale shape: the (user, type) presence table is one distinct pass;
-    the pairing self-join is keyed on user_id and bounded per user by
-    the TYPE VOCABULARY (each user contributes <= |types| rows, so the
-    join fan-out is |users| x types² worst-case with a small constant —
-    never row x row); the per-type marginal dim is type-vocabulary
-    sized; the user population total is a 1-row crossJoin."""
-    e = _t(spark, sf_dir, "events")
-    ut = e.select("user_id", "event_type").distinct().localCheckpoint(eager=True)
-    cu = ut.groupBy("event_type").agg(F.count("*").alias("c"))
-    nu = ut.agg(F.countDistinct("user_id").cast("double").alias("n"))
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    cooc = (
-        a.join(b, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count("*").alias("cooc"))
-    )
-    return (
-        cooc.join(
-            F.broadcast(cu.select(F.col("event_type").alias("type_a"),
-                                  F.col("c").alias("ca"))), "type_a"
-        )
-        .join(
-            F.broadcast(cu.select(F.col("event_type").alias("type_b"),
-                                  F.col("c").alias("cb"))), "type_b"
-        )
-        .crossJoin(nu)
-        .select(
-            "type_a", "type_b", "cooc",
-            F.round(
-                (F.col("cooc").cast("double") * F.col("n"))
-                / (F.col("ca") * F.col("cb")),
-                4,
-            ).alias("lift"),
-        )
-    )
-
-
-@register(
-    "q_funnel_steps",
-    """
-    WITH s1 AS (SELECT user_id, MIN(ts) AS ts FROM events
-                WHERE event_type = 'view' GROUP BY user_id),
-    s2 AS (SELECT e.user_id, MIN(e.ts) AS ts FROM events e
-           JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.ts
-           WHERE e.event_type = 'click' GROUP BY e.user_id),
-    s3 AS (SELECT e.user_id, MIN(e.ts) AS ts FROM events e
-           JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.ts
-           WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-    SELECT * FROM (
-      SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type,
-             CAST(COUNT(*) AS BIGINT) AS n_users FROM s1
-      UNION ALL
-      SELECT 2, 'click', COUNT(*) FROM s2
-      UNION ALL
-      SELECT 3, 'purchase', COUNT(*) FROM s3)
-    """,
-)
-def q_funnel_steps(spark, sf_dir):
-    """Ordered FUNNEL analysis (view -> click -> purchase): users
-    reaching step k performed the k-th event strictly AFTER their
-    earliest completion of step k-1 — the product-analytics primitive.
-    Relational formulation: each step is one filtered agg + one equi-join
-    on user_id against the previous step's frontier — no per-user event
-    arrays (a collect_list funnel holds a user's whole history in one
-    task; hub users at 100 TB would skew it), and each join's right side
-    shrinks monotonically."""
-    e = _t(spark, sf_dir, "events")
-
-    def step(prev, ev):
-        src = e.filter(F.col("event_type") == ev)
-        if prev is not None:
-            src = src.join(
-                prev.withColumnRenamed("ts", "prev_ts"), on="user_id"
-            ).filter(F.col("ts") > F.col("prev_ts"))
-        return src.groupBy("user_id").agg(F.min("ts").alias("ts"))
-
-    s1 = step(None, "view")
-    s2 = step(s1, "click")
-    s3 = step(s2, "purchase")
-    out = None
-    for i, (name, s) in enumerate([("view", s1), ("click", s2),
-                                   ("purchase", s3)], start=1):
-        row = s.agg(
-            F.lit(i).cast("bigint").alias("step"),
-            F.lit(name).alias("event_type"),
-            F.count("*").alias("n_users"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-@register(
-    "q_retention_cohorts",
-    """
-    WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS d0
-               FROM events GROUP BY user_id)
-    SELECT CAST(f.d0 AS VARCHAR) AS cohort_day,
-           CAST(datediff('day', f.d0, CAST(e.ts AS DATE)) AS BIGINT)
-             AS day_offset,
-           CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_users
-    FROM events e JOIN f ON e.user_id = f.user_id
-    WHERE datediff('day', f.d0, CAST(e.ts AS DATE)) <= 7
-    GROUP BY 1, 2
-    """,
-)
-def q_retention_cohorts(spark, sf_dir):
-    """COHORT RETENTION matrix: users grouped by first-seen day, counted
-    distinct on each of the next 7 activity days — the table behind every
-    retention curve.  The first-seen frontier is one agg keyed on
-    user_id; the activity join shuffles on the same key (co-partitioned
-    with the agg, no extra exchange); exact distinct here for the
-    oracle, approx_count_distinct at 100 TB."""
-    e = _t(spark, sf_dir, "events")
-    f = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("d0"))
-    j = e.join(f, on="user_id").withColumn(
-        "day_offset", F.datediff(F.to_date("ts"), F.col("d0")).cast("bigint")
-    ).filter(F.col("day_offset") <= 7)
-    return j.groupBy(
-        F.col("d0").cast("string").alias("cohort_day"), "day_offset"
-    ).agg(F.countDistinct("user_id").alias("n_users"))
-
-
-@register(
-    "q_retention_cohorts_approx",
-    """
-    WITH f AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS d0
-               FROM events GROUP BY user_id)
-    SELECT CAST(f.d0 AS VARCHAR) AS cohort_day,
-           CAST(datediff('day', f.d0, CAST(e.ts AS DATE)) AS BIGINT)
-             AS day_offset,
-           CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_users_exact,
-           TRUE AS within_10pct
-    FROM events e JOIN f ON e.user_id = f.user_id
-    WHERE datediff('day', f.d0, CAST(e.ts AS DATE)) <= 7
-    GROUP BY 1, 2
-    """,
-)
-def q_retention_cohorts_approx(spark, sf_dir):
-    """PRODUCTION twin of q_retention_cohorts (r5 VERDICT #5): the
-    distinct-user count via approx_count_distinct (HLL++, rsd=0.02) —
-    at 100 TB the exact COUNT(DISTINCT) expands every (cell, user) pair
-    through the shuffle, while the sketch keeps per-cell state at a few
-    KB and merges map-side.  This measurement form computes BOTH in one
-    aggregate and ships a BOUND-ASSERTING result: per cell, the exact
-    count plus within_10pct = (|approx - exact| <= 10% of exact) — HLL++
-    is hash-deterministic, so the booleans are stable and the oracle
-    pins them TRUE alongside the exact counts.  Measured error vs exact
-    at sf0.1 (max observed 0.93% at rsd=0.02 — an order of magnitude
-    inside the bound): BENCH/APPROX.md, scripts/bench_approx.py.  The
-    approx-only production query is this plan minus the countDistinct
-    leg."""
-    e = _t(spark, sf_dir, "events")
-    f = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("d0"))
-    j = e.join(f, on="user_id").withColumn(
-        "day_offset", F.datediff(F.to_date("ts"), F.col("d0")).cast("bigint")
-    ).filter(F.col("day_offset") <= 7)
-    g = j.groupBy(
-        F.col("d0").cast("string").alias("cohort_day"), "day_offset"
-    ).agg(
-        F.countDistinct("user_id").alias("n_users_exact"),
-        F.approx_count_distinct("user_id", rsd=0.02).alias("n_users_approx"),
-    )
-    return g.select(
-        "cohort_day",
-        "day_offset",
-        "n_users_exact",
-        (
-            F.abs(F.col("n_users_approx") - F.col("n_users_exact"))
-            <= 0.10 * F.col("n_users_exact")
-        ).alias("within_10pct"),
-    )
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@register(
-    "q_pivot_daily_types",
-    f"""
-    SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-           {", ".join(
-               f"CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) "
-               f"AS BIGINT) AS {t}" for t in _EVENT_TYPES)}
-    FROM events GROUP BY 1
-    """,
-)
-def q_pivot_daily_types(spark, sf_dir):
-    """PIVOT: day x event_type count matrix via groupBy().pivot() with an
-    EXPLICIT value list — without it Spark runs an extra distinct job to
-    discover the columns, and an unbounded type domain would explode the
-    schema; with it the pivot compiles to one pass of conditional
-    aggregates (exactly the oracle's CASE sums).  Missing combinations
-    are 0, not null (fillna mirrors SUM CASE)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.to_date("ts").cast("string").alias("day"))
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-        .fillna(0, subset=_EVENT_TYPES)
-    )
-
-
-@register(
-    "q_rollup_revenue",
-    """
-    SELECT COALESCE(CAST(o_orderpriority AS VARCHAR), 'ALL') AS priority,
-           COALESCE(CAST(EXTRACT(year FROM o_orderdate) AS VARCHAR), 'ALL')
-             AS order_year,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-             AS revenue_c,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM orders
-    GROUP BY ROLLUP (o_orderpriority, EXTRACT(year FROM o_orderdate))
-    """,
-)
-def q_rollup_revenue(spark, sf_dir):
-    """Multi-granularity OLAP rollup: revenue by (priority, year), by
-    priority, and grand total in ONE pass — Spark's rollup() compiles to
-    a single Expand + aggregate (each input row expands to its grouping
-    sets; map-side combine still applies), not three scans.  NULL group
-    keys are labeled 'ALL' on both engines so the subtotal rows compare
-    exactly; money in integer cents as everywhere."""
-    o = _t(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("p"),
-        F.year("o_orderdate").cast("string").alias("y"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    return (
-        base.rollup("p", "y")
-        .agg(
-            F.sum("cents").alias("revenue_c"),
-            F.count("*").alias("n_orders"),
-        )
-        .select(
-            F.coalesce("p", F.lit("ALL")).alias("priority"),
-            F.coalesce("y", F.lit("ALL")).alias("order_year"),
-            "revenue_c", "n_orders",
-        )
-    )
-
-
-@register(
-    "q_mktsegment_share",
-    """
-    SELECT c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(COUNT(*) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 4) AS share
-    FROM customer GROUP BY c_mktsegment
-    """,
-)
-def q_mktsegment_share(spark, sf_dir):
-    """Aggregate + share-of-total.  The total is a broadcast 1-row agg, not
-    a Window.partitionBy() — an empty-partition window funnels ALL group
-    rows through one task (fine at 5 segments, a scale killer at millions
-    of groups; same family as the r1 q_train_split finding)."""
-    c = _t(spark, sf_dir, "customer")
-    agg = c.groupBy("c_mktsegment").agg(F.count("*").alias("n"))
-    total = agg.agg(F.sum("n").cast("double").alias("tot"))
-    return agg.crossJoin(F.broadcast(total)).select(
-        "c_mktsegment",
-        "n",
-        F.round(F.col("n") / F.col("tot"), 4).alias("share"),
-    )
-
-
-@register(
-    "q_doc_range_slice",
-    """
-    SELECT doc_id, lang FROM (
-      SELECT doc_id, lang, ROW_NUMBER() OVER (ORDER BY doc_id) AS rn
-      FROM documents) WHERE rn > 100 AND rn <= 200
-    """,
-)
-def q_doc_range_slice(spark, sf_dir):
-    """Doc-range slice (S3: Dataset doc_range keep-window,
-    data/data_structures.py:36-40) via the scale-safe two-pass global rank
-    (functions/ranks.py) — same total-order semantics as ROW_NUMBER()
-    OVER (ORDER BY doc_id), but no Exchange SinglePartition (the r1 form
-    sorted the corpus on one core)."""
-    from .functions.ranks import global_row_number
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        global_row_number(d, ["doc_id"])
-        .filter((F.col("rn") > 100) & (F.col("rn") <= 200))
-        .select("doc_id", "lang")
-    )
-
-
-@register(
-    "q_train_split",
-    """
-    WITH ranked AS (
-      SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) AS rn,
-             COUNT(*) OVER () AS n FROM documents)
-    SELECT CASE WHEN rn <= CAST(0.9 * n AS BIGINT) THEN 'train' ELSE 'dev' END AS split,
-           CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM ranked GROUP BY 1
-    """,
-)
-def q_train_split(spark, sf_dir):
-    """Deterministic 90/10 train/dev split by document order (S4:
-    convert_dataset_to_samples split, data/utils.py:41-50).  Two-pass
-    global rank + broadcast total count — no single-partition window
-    (neither ROW_NUMBER OVER () nor COUNT(*) OVER ())."""
-    from .functions.ranks import global_row_number
-
-    d = _t(spark, sf_dir, "documents")
-    total = d.agg(F.count("*").alias("n"))
-    ranked = global_row_number(d, ["doc_id"]).crossJoin(F.broadcast(total))
-    split = F.when(
-        F.col("rn") <= (F.lit(0.9) * F.col("n")).cast("bigint"), "train"
-    ).otherwise("dev")
-    return ranked.groupBy(split.alias("split")).agg(F.count("*").alias("n_docs"))
-
-
-@register(
-    "q_subarray_find",
-    f"""
-    WITH {SQL_TOK}
-    SELECT t1.doc_id, CAST(MIN(t1.pos) AS BIGINT) AS first_pos
-    FROM tok t1
-    JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-    JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-    WHERE t1.tok = 'key' AND t2.tok = 'fast' AND t3.tok = 'value'
-    GROUP BY t1.doc_id
-    """,
-)
-def q_subarray_find(spark, sf_dir):
-    """Token-subarray containment (J10: find_subarray_position,
-    data/utils.py:395-407) — relational positional self-join instead of a
-    python scan."""
-    t = _doc_tokens(spark, sf_dir)
-    t1 = t.filter(F.col("tok") == "key").select("doc_id", "pos")
-    t2 = t.filter(F.col("tok") == "fast").select(
-        "doc_id", (F.col("pos") - 1).alias("pos")
-    )
-    t3 = t.filter(F.col("tok") == "value").select(
-        "doc_id", (F.col("pos") - 2).alias("pos")
-    )
-    hits = t1.join(t2, ["doc_id", "pos"]).join(t3, ["doc_id", "pos"])
-    return hits.groupBy("doc_id").agg(F.min("pos").cast("bigint").alias("first_pos"))
-
-
-@register(
     "kg_pred_histogram",
     SQL_TRIPLES
     + """
@@ -1881,1767 +591,6 @@ def kg_pred_histogram(spark, sf_dir):
     return t.groupBy("pred").agg(
         F.count("*").alias("n_triples"),
         F.countDistinct("doc_id").alias("n_docs"),
-    )
-
-
-@register(
-    "kg_schema_stats",
-    SQL_TRIPLES
-    + """
-    ,
-    cell AS (SELECT subj_type, pred, obj_type, CAST(COUNT(*) AS BIGINT) AS n
-             FROM triples GROUP BY 1, 2, 3),
-    tp AS (SELECT subj_type, obj_type, SUM(n) AS tp FROM cell GROUP BY 1, 2),
-    np AS (SELECT pred, SUM(n) AS np FROM cell GROUP BY 1),
-    tot AS (SELECT CAST(SUM(n) AS DOUBLE) AS total FROM cell)
-    SELECT c.subj_type, c.pred, c.obj_type, c.n,
-           ROUND(CAST(c.n AS DOUBLE) / tp.tp, 4) AS p_pred_given_pair,
-           ROUND((CAST(c.n AS DOUBLE) / tp.tp) / (np.np / tot.total), 4)
-             AS lift
-    FROM cell c
-    JOIN tp ON tp.subj_type = c.subj_type AND tp.obj_type = c.obj_type
-    JOIN np ON np.pred = c.pred, tot
-    """,
-)
-def kg_schema_stats(spark, sf_dir):
-    """SCHEMA INDUCTION statistics: for every (subj_type, pred, obj_type)
-    cell, P(pred | type pair) and its lift vs the relation's base rate —
-    the signal a KG-construction pipeline uses to learn which relations
-    a type pair licenses (and to flag extraction errors: lift << 1 cells
-    are schema-violating candidates).
-
-    Scale shape: ONE groupBy over triples feeds every marginal (cells,
-    type-pair totals, relation totals, grand total roll up from the
-    CELL table, not from re-scans); the marginal dims are type-vocabulary
-    sized — bounded by construction; the grand total rides in as a 1-row
-    crossJoin."""
-    t = _kg_triples_df(spark, sf_dir)
-    cell = (
-        t.groupBy("subj_type", "pred", "obj_type")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    tp = cell.groupBy("subj_type", "obj_type").agg(F.sum("n").alias("tp"))
-    np_ = cell.groupBy("pred").agg(F.sum("n").alias("np"))
-    tot = cell.agg(F.sum("n").cast("double").alias("total"))
-    return (
-        cell.join(tp, ["subj_type", "obj_type"])
-        .join(np_, "pred")
-        .crossJoin(tot)
-        .select(
-            "subj_type",
-            "pred",
-            "obj_type",
-            "n",
-            F.round(F.col("n").cast("double") / F.col("tp"), 4).alias(
-                "p_pred_given_pair"
-            ),
-            F.round(
-                (F.col("n").cast("double") / F.col("tp"))
-                / (F.col("np") / F.col("total")),
-                4,
-            ).alias("lift"),
-        )
-    )
-
-
-# ---------- dedup / training-data ops over documents ----------
-
-@register(
-    "dedup_shingle_stats",
-    f"WITH {SQL_SHINGLES} SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles "
-    "FROM shingle GROUP BY doc_id",
-)
-def dedup_shingle_stats(spark, sf_dir):
-    """3-token shingling (the unit under all near-dup ops).  r8: the
-    per-doc count is size(sh_arr) — row-local, no explode + groupBy
-    shuffle; empty docs are filtered as explode dropped them."""
-    sharr = _sharr_df(spark, sf_dir)
-    return sharr.filter(F.size("sh_arr") > 0).select(
-        "doc_id", F.size("sh_arr").cast("bigint").alias("n_shingles")
-    )
-
-
-@register("dedup_minhash_sig", _sql_minhash() + "SELECT * FROM sig")
-def dedup_minhash_sig(spark, sf_dir):
-    """MinHash signatures (4 universal hashes over charfold'd shingles) —
-    all JVM-side expressions (link/canonical.py at document scale)."""
-    return _minhash_df(spark, sf_dir)
-
-
-@register(
-    "dedup_minhash_pairs",
-    _sql_minhash()
-    + """
-    , hot1 AS (SELECT s0, s1 FROM sig GROUP BY s0, s1 HAVING COUNT(*) > 64),
-    hot2 AS (SELECT s2, s3 FROM sig GROUP BY s2, s3 HAVING COUNT(*) > 64),
-    k1 AS (SELECT s.* FROM sig s ANTI JOIN hot1 h ON s.s0 = h.s0 AND s.s1 = h.s1),
-    k2 AS (SELECT s.* FROM sig s ANTI JOIN hot2 h ON s.s2 = h.s2 AND s.s3 = h.s3),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM k1 a JOIN k1 b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id
-      FROM k2 a JOIN k2 b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM shingle GROUP BY doc_id),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN shingle sa ON sa.doc_id = c.doc_a
-      JOIN shingle sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-      GROUP BY 1, 2
-    )
-    SELECT c.doc_a, c.doc_b,
-           ROUND(COALESCE(s.shared, 0)
-                 / (na.n + nb.n - COALESCE(s.shared, 0) + 1e-12), 4) AS jaccard
-    FROM cand c
-    LEFT JOIN shared s ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b
-    JOIN counts na ON c.doc_a = na.doc_id
-    JOIN counts nb ON c.doc_b = nb.doc_id
-    WHERE COALESCE(s.shared, 0)
-          / (na.n + nb.n - COALESCE(s.shared, 0) + 1e-12) >= 0.5
-    """,
-)
-def dedup_minhash_pairs(spark, sf_dir, _sh=None):
-    """MinHash-LSH near-dup detection: banded candidate join + exact
-    Jaccard verification (the full LSH cascade of link/canonical.py).
-    Band buckets larger than MAX_BUCKET (64, as in link/canonical.py) are
-    excluded from pairing — a degenerate signature shared by d docs would
-    contribute d^2/2 candidates (r1 VERDICT symmetry nit); the cap is
-    mirrored in the oracle and its drops are observable via
-    lsh_bucket_stats on the production path.  ``_sh`` lets
-    dedup_fuse_modalities pass its already-checkpointed shingle ARRAY
-    table so the corpus is tokenized once across modalities.
-
-    r8 plan shape (guide §2.3/§2.4; values bit-identical, oracle
-    unchanged): the shingle table stays un-exploded (doc_id, sh_arr), so
-    signatures and per-doc counts are row-local folds instead of an
-    explode + groupBy shuffle, and the exact-Jaccard verify attaches the
-    two endpoints' arrays to each candidate pair and counts
-    size(array_intersect(..)) row-locally — replacing the two
-    inverted-index shuffle joins + pair groupBy of the r3 form with two
-    keyed joins of the pair table against the doc-scale array table.
-    Candidate-pair work (the only superlinear term) is unchanged and
-    still hot-bucket capped."""
-    sharr = (
-        _sh if _sh is not None
-        else _sharr_df(spark, sf_dir).localCheckpoint(eager=True)
-    )
-    sig = minhash_from_arrays(sharr).drop("n_sh")
-
-    # ONE banded self-join (r3 VERDICT #6): signatures explode to
-    # (band, k0, k1) rows — band 1 = (s0,s1), band 2 = (s2,s3) — so hot-
-    # bucket exclusion, the self-join, and the pair dedup each happen once
-    # over the union'd band rows instead of once per band (the shape
-    # link/canonical.lsh_candidate_pairs already has).  Same rows as the
-    # two-pass form: per-band equality is the (band,k0,k1) key, and the
-    # trailing distinct is the old UNION's dedup.  Oracle unchanged.
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(1).alias("band"),
-                    F.col("s0").alias("k0"), F.col("s1").alias("k1"),
-                ),
-                F.struct(
-                    F.lit(2).alias("band"),
-                    F.col("s2").alias("k0"), F.col("s3").alias("k1"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.k0", "bk.k1")
-    hot = (
-        bands.groupBy("band", "k0", "k1").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 64).select("band", "k0", "k1")
-    )
-    kept = bands.join(F.broadcast(hot), on=["band", "k0", "k1"], how="left_anti")
-    cand = (
-        kept.alias("a")
-        .join(
-            kept.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.k0") == F.col("b.k0"))
-            & (F.col("a.k1") == F.col("b.k1"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # exact-Jaccard verify: row-local distinct-shingle intersection of the
-    # two endpoints' arrays (arrays are array_distinct'd, so
-    # size(array_intersect) == the inverted-index shared count)
-    arr_a = sharr.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("arr_a"))
-    arr_b = sharr.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("arr_b"))
-    j = (
-        cand.join(arr_a, on="doc_a")
-        .join(arr_b, on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("shared"),
-            F.size("arr_a").alias("na"),
-            F.size("arr_b").alias("nb"),
-        )
-        .withColumn("jac", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared") + F.lit(1e-12)))
-    )
-    return j.filter(F.col("jac") >= 0.5).select(
-        "doc_a", "doc_b", F.round("jac", 4).alias("jaccard")
-    )
-
-
-@register(
-    "dedup_minhash_incr",
-    _sql_minhash()
-    + """
-    , hot1 AS (SELECT s0, s1 FROM sig GROUP BY s0, s1 HAVING COUNT(*) > 64),
-    hot2 AS (SELECT s2, s3 FROM sig GROUP BY s2, s3 HAVING COUNT(*) > 64),
-    k1 AS (SELECT s.* FROM sig s ANTI JOIN hot1 h ON s.s0 = h.s0 AND s.s1 = h.s1),
-    k2 AS (SELECT s.* FROM sig s ANTI JOIN hot2 h ON s.s2 = h.s2 AND s.s3 = h.s3),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM k1 a JOIN k1 b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id
-      FROM k2 a JOIN k2 b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM shingle GROUP BY doc_id),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN shingle sa ON sa.doc_id = c.doc_a
-      JOIN shingle sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-      GROUP BY 1, 2
-    )
-    SELECT c.doc_a, c.doc_b,
-           ROUND(COALESCE(s.shared, 0)
-                 / (na.n + nb.n - COALESCE(s.shared, 0) + 1e-12), 4) AS jaccard
-    FROM cand c
-    LEFT JOIN shared s ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b
-    JOIN counts na ON c.doc_a = na.doc_id
-    JOIN counts nb ON c.doc_b = nb.doc_id
-    WHERE COALESCE(s.shared, 0)
-          / (na.n + nb.n - COALESCE(s.shared, 0) + 1e-12) >= 0.5
-      AND (c.doc_a % 4 = 0 OR c.doc_b % 4 = 0)
-    """,
-)
-def dedup_minhash_incr(spark, sf_dir):
-    """INCREMENTAL MinHash dedup against persisted signature state
-    (kgforge/dedup.py — r4 VERDICT #1): documents with doc_id % 4 == 0
-    arrive as the NEW batch against a corpus state built from the other
-    three quarters; the emitted pairs are exactly the from-scratch
-    dedup_minhash_pairs over the full corpus RESTRICTED to pairs with a
-    new-batch endpoint — the oracle is literally that query's SQL plus
-    the endpoint restriction, which is the equality being claimed.  Old
-    signatures and shingles are carried from state, never recomputed;
-    the old band table is semi-joined down to the batch's bucket
-    neighborhood before any join (per-epoch cost scales with the delta,
-    not the corpus).  The persisted round-trip (save_state/load_state)
-    and the two-batch == one-shot property are pinned by
-    tests/test_dedup_incremental.py."""
-    from .dedup import dedup_minhash_incremental
-
-    d = _docs(spark, sf_dir)
-    new_docs = d.filter(F.col("doc_id") % 4 == 0)
-    old_docs = d.filter(F.col("doc_id") % 4 != 0)
-    # build_state() semantics, with the batch's shingle arrays
-    # materialized ONCE (r8): in production the old state is parquet the
-    # consumer reads, not a live plan — without this the old corpus'
-    # shingle/charfold pass re-executes for each of the three state
-    # consumers (bands, counts, verify index)
-    old_arr = shingle_arrays(old_docs).localCheckpoint(eager=True)
-    state = {
-        "sig": minhash_from_arrays(old_arr),
-        "shingle": old_arr.select("doc_id", F.explode("sh_arr").alias("sh")),
-    }
-    pairs, _ = dedup_minhash_incremental(new_docs, state)
-    return pairs
-
-
-@register(
-    "dedup_minhash_bucket_stats",
-    _sql_minhash()
-    + """
-    , b1 AS (SELECT COUNT(*) AS n FROM sig GROUP BY s0, s1),
-    b2 AS (SELECT COUNT(*) AS n FROM sig GROUP BY s2, s3),
-    bu AS (SELECT n, 1 AS band FROM b1 UNION ALL SELECT n, 2 FROM b2)
-    SELECT CAST(band AS BIGINT) AS band,
-           CAST(COUNT(*) AS BIGINT) AS n_buckets,
-           CAST(MAX(n) AS BIGINT) AS max_bucket,
-           CAST(SUM(CASE WHEN n > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_capped
-    FROM bu GROUP BY band
-    """,
-)
-def dedup_minhash_bucket_stats(spark, sf_dir):
-    """Band-bucket accounting for the MinHash cap ('no silent caps'): per
-    band, bucket count, the largest bucket, and how many exceed
-    MAX_BUCKET=64 (those are excluded from candidate pairing in
-    dedup_minhash_pairs, mirrored in its oracle)."""
-    sig = _minhash_df(spark, sf_dir).localCheckpoint(eager=True)
-    out = None
-    for band, cols in ((1, ["s0", "s1"]), (2, ["s2", "s3"])):
-        g = sig.groupBy(*cols).agg(F.count("*").alias("n")).agg(
-            F.lit(band).cast("bigint").alias("band"),
-            F.count("*").alias("n_buckets"),
-            F.max("n").cast("bigint").alias("max_bucket"),
-            F.sum(F.when(F.col("n") > 64, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_capped"),
-        )
-        out = g if out is None else out.unionByName(g)
-    return out
-
-
-@register(
-    "dedup_simhash",
-    f"""
-    WITH {SQL_SHINGLES},
-    hashed AS (SELECT doc_id, {sql_charfold('sh')} AS h FROM shingle),
-    bits AS (
-      SELECT doc_id, b.bit,
-             SUM(CASE WHEN (h // (1 << b.bit)) % 2 = 1 THEN 1 ELSE -1 END) AS bal
-      FROM hashed, (SELECT unnest(generate_series(0, 15)) AS bit) b
-      GROUP BY doc_id, b.bit
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN bal > 0 THEN (1 << bit) ELSE 0 END) AS BIGINT) AS simhash
-    FROM bits GROUP BY doc_id
-    """,
-)
-def dedup_simhash(spark, sf_dir):
-    """16-bit SimHash over shingle hashes — bitwise majority vote, pure
-    expressions.  r8: row-local over the shingle array (integer bit
-    balances, identical sign decisions), no explode + groupBy shuffle."""
-    return simhash_from_hashed(
-        hashed_arrays(_sharr_df(spark, sf_dir)), 16, out_col="simhash"
-    )
-
-
-_SQL_SIMHASH_SIG = f"""
-    WITH {SQL_SHINGLES},
-    hashed AS (SELECT doc_id, {sql_charfold('sh')} AS h FROM shingle),
-    bits AS (
-      SELECT doc_id, b.bit,
-             SUM(CASE WHEN (h // (1 << b.bit)) % 2 = 1 THEN 1 ELSE -1 END) AS bal
-      FROM hashed, (SELECT unnest(generate_series(0, 15)) AS bit) b
-      GROUP BY doc_id, b.bit
-    ),
-    sig AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN bal > 0 THEN (1 << bit) ELSE 0 END) AS BIGINT) AS s
-      FROM bits GROUP BY doc_id)
-"""
-
-
-@register(
-    "dedup_simhash_pairs",
-    _SQL_SIMHASH_SIG
-    + """
-    , chunks AS (
-      SELECT doc_id, s, k.k AS k, CAST((s // (1 << (4 * k.k))) % 16 AS BIGINT) AS val
-      FROM sig, (SELECT unnest(generate_series(0, 3)) AS k) k),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, a.s AS sa, b.doc_id AS doc_b, b.s AS sb
-      FROM chunks a JOIN chunks b
-        ON a.k = b.k AND a.val = b.val AND a.doc_id < b.doc_id)
-    SELECT doc_a, doc_b,
-           CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-    FROM cand WHERE bit_count(xor(sa, sb)) <= 3
-    """,
-)
-def dedup_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup PAIRS: hamming distance <= 3 on the 16-bit
-    signatures, found by the standard pigeonhole bucket join — split the
-    signature into 4 nibble chunks; any pair within distance 3 agrees
-    exactly on at least one chunk, so candidates come from equi-joins on
-    (chunk_ix, chunk_value) and only candidates pay the exact
-    bit_count(xor) verify.  Completes the SimHash modality (the
-    dedup_simhash query emits signatures only).  Scale note: production
-    SimHash is 64-bit with 8-bit chunks — same plan, 256-way buckets; the
-    16-bit/4-nibble layout here mirrors the oracle-checkable signature."""
-    sig = dedup_simhash(spark, sf_dir).withColumnRenamed("simhash", "s")
-    ks = spark.range(4).select(F.col("id").cast("int").alias("k"))
-    chunks = sig.crossJoin(ks).select(
-        "doc_id", "s", "k",
-        F.expr("CAST(shiftright(s, 4 * k) & 15 AS BIGINT)").alias("val"),
-    )
-    a = chunks.select(
-        F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"), "k", "val"
-    )
-    b = chunks.select(
-        F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"), "k", "val"
-    )
-    cand = (
-        a.join(b, on=["k", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "sa", "doc_b", "sb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return cand.filter(ham <= 3).select(
-        "doc_a", "doc_b", ham.cast("bigint").alias("hamming")
-    )
-
-
-# Document-frequency ceiling for the inverted-index self-join: one hot
-# shingle shared by d documents contributes d^2/2 candidate pairs, so the
-# join is quadratic in the hottest key.  Shingles above the cap are
-# EXCLUDED from pairing AND from the per-doc denominators (both engines
-# mirror this), and the drop is surfaced by dedup_shingle_df_caps — never
-# silent.  Analogous to MAX_BUCKET in link/canonical.py.
-#
-# COST MODEL (r6 100x vet finding, docs/SCALE.md): total join work is
-# sum over kept shingles of df^2/2 <= CAP x total postings — linear in
-# corpus size but with CAP as the constant.  CAP=1000 on a 44M-posting
-# corpus is ~2x10^10 comparisons: the exact ground-truth form is an
-# AUDIT tool; production dedup at scale is dedup_minhash_pairs, and CAP
-# is the recall/cost knob (env SPARK_GRAFT_NGRAM_DF_CAP — baked into
-# both engines' plans at import, so Spark and the oracle always agree).
-import os as _os  # noqa: E402
-
-NGRAM_DF_CAP = int(_os.environ.get("SPARK_GRAFT_NGRAM_DF_CAP", "1000"))
-
-_SQL_SHINGLES_CAPPED = f"""
-hot AS (SELECT sh FROM shingle GROUP BY sh HAVING COUNT(*) > {NGRAM_DF_CAP}),
-kept AS (SELECT s.* FROM shingle s ANTI JOIN hot h ON s.sh = h.sh)
-"""
-
-
-@register(
-    "dedup_ngram_jaccard",
-    f"""
-    WITH {SQL_SHINGLES},
-    {_SQL_SHINGLES_CAPPED},
-    pair AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-      FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    n AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id)
-    SELECT p.doc_a, p.doc_b,
-           ROUND(p.shared / (na.n + nb.n - p.shared + 1e-12), 4) AS jaccard
-    FROM pair p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
-    WHERE p.shared / (na.n + nb.n - p.shared + 1e-12) >= 0.5
-    """,
-)
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram-Jaccard near-dup pairs (no LSH) — the ground truth the
-    LSH variant approximates (inverted-index join on shingle), with a
-    document-frequency cap on the join key (NGRAM_DF_CAP) so one hot
-    shingle cannot make the self-join quadratic."""
-    # checkpoint the RAW shingle table once; the hot-key set and the
-    # anti-joined kept set both derive from it (the r2 first cut
-    # recomputed the explode three times — 2.6x the query wall)
-    raw = _shingles_df(spark, sf_dir).localCheckpoint(eager=True)
-    hot = (
-        raw.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("sh")
-    )
-    # hot set is tiny by construction (few keys exceed the cap) ->
-    # broadcast anti-join; no shuffle of the shingle table for the filter
-    sh = raw.join(F.broadcast(hot), on="sh", how="left_anti")
-    pair = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("shared"))
-    )
-    n = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    j = (
-        pair.join(n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), on="doc_a")
-        .join(n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), on="doc_b")
-        .withColumn(
-            "jac",
-            F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared") + F.lit(1e-12)),
-        )
-    )
-    return j.filter(F.col("jac") >= 0.5).select(
-        "doc_a", "doc_b", F.round("jac", 4).alias("jaccard")
-    )
-
-
-@register(
-    "doc_winnowing",
-    f"""
-    WITH tokarr AS (SELECT doc_id, string_split(text, ' ') AS arr
-                    FROM documents WHERE len(string_split(text, ' ')) >= 6),
-    kg AS (
-      SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-             {sql_charfold("arr[i.i] || ' ' || arr[i.i + 1] || ' ' || arr[i.i + 2]")} AS h
-      FROM tokarr, (SELECT unnest(generate_series(1, len(arr) - 2)) AS i) i),
-    win AS (
-      SELECT doc_id, pos,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             COUNT(*) OVER (PARTITION BY doc_id) AS nk
-      FROM kg)
-    SELECT DISTINCT doc_id, CAST(mh AS BIGINT) AS fp
-    FROM win WHERE pos <= nk - 3
-    """,
-)
-def doc_winnowing(spark, sf_dir):
-    """WINNOWING document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm — the classic source-code near-dup/plagiarism
-    fingerprint, exactly the corpus this pipeline reads): hash every
-    3-token k-gram, slide a window of w=4 consecutive k-grams, keep each
-    window's MINIMUM hash; distinct selected hashes are the document's
-    fingerprints.  Guarantees: any shared token run of length >= k+w-1
-    (6) produces at least one shared fingerprint, and density is ~2/(w+1)
-    of the k-grams — a tunable sketch between full-shingle Jaccard
-    (exact, large) and MinHash (fixed-size, probabilistic).  All
-    row-local expressions: k-gram hashing and window minima fold inside
-    one projection over the token array (no shuffle until the final
-    distinct); docs shorter than k+w-1 have no full window and are
-    excluded on both engines."""
-    d = _docs(spark, sf_dir).select("doc_id", F.split("text", " ").alias("toks"))
-    d = d.filter(F.size("toks") >= 6)
-    toks = F.col("toks")
-    kh = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 2),
-        lambda i: charfold(
-            F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            )
-        ),
-    )
-    d = d.select("doc_id", kh.alias("kh"))
-    wins = F.transform(
-        F.sequence(F.lit(1), F.size("kh") - 3),
-        lambda s: F.array_min(F.slice(F.col("kh"), s, 4)),
-    )
-    return (
-        d.select("doc_id", F.explode(F.array_distinct(wins)).alias("fp"))
-        .select("doc_id", F.col("fp").cast("bigint").alias("fp"))
-        .distinct()
-    )
-
-
-_SQL_WINNOW_FP = f"""
-    tokarr AS (SELECT doc_id, string_split(text, ' ') AS arr
-               FROM documents WHERE len(string_split(text, ' ')) >= 6),
-    kg AS (
-      SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-             {sql_charfold("arr[i.i] || ' ' || arr[i.i + 1] || ' ' || arr[i.i + 2]")} AS h
-      FROM tokarr, (SELECT unnest(generate_series(1, len(arr) - 2)) AS i) i),
-    win AS (
-      SELECT doc_id, pos,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             COUNT(*) OVER (PARTITION BY doc_id) AS nk
-      FROM kg),
-    wfp AS (SELECT DISTINCT doc_id, CAST(mh AS BIGINT) AS fp
-            FROM win WHERE pos <= nk - 3)"""
-
-
-@register(
-    "dedup_winnow_pairs",
-    f"""
-    WITH {_SQL_WINNOW_FP},
-    hotfp AS (SELECT fp FROM wfp GROUP BY fp HAVING COUNT(*) > {NGRAM_DF_CAP}),
-    keptfp AS (SELECT w.* FROM wfp w ANTI JOIN hotfp h ON w.fp = h.fp),
-    n AS (SELECT doc_id, COUNT(*) AS n FROM keptfp GROUP BY doc_id),
-    pair AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-      FROM keptfp a JOIN keptfp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT p.doc_a, p.doc_b,
-           ROUND(p.shared / (na.n + nb.n - p.shared + 1e-12), 4) AS jaccard
-    FROM pair p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
-    WHERE p.shared / (na.n + nb.n - p.shared + 1e-12) >= 0.5
-    """,
-)
-def dedup_winnow_pairs(spark, sf_dir):
-    """Near-dup pairs over WINNOWING fingerprints (Jaccard >= 0.5 on the
-    selected-hash sets) — the pairing step that makes doc_winnowing a
-    complete dedup modality, and the cheap one: the inverted index joins
-    ~2/(w+1) of the k-grams instead of all shingles (vs
-    dedup_ngram_jaccard), with the same DF cap guarding hot fingerprints
-    (a ubiquitous code idiom's minimum hash) from quadratic bucket
-    blowup.  Winnowing's guarantee makes the sketch sound for dedup: any
-    shared run of >= k+w-1 tokens shares at least one fingerprint, so
-    heavily-overlapping documents cannot silently miss the index."""
-    fps = doc_winnowing(spark, sf_dir).localCheckpoint(eager=True)
-    hot = (
-        fps.groupBy("fp").agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP).select("fp")
-    )
-    kept = fps.join(F.broadcast(hot), on="fp", how="left_anti")
-    pair = (
-        kept.alias("a")
-        .join(
-            kept.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    n = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
-    j = (
-        pair.join(
-            n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"),
-            on="doc_a",
-        )
-        .join(
-            n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"),
-            on="doc_b",
-        )
-        .withColumn(
-            "jac",
-            F.col("shared")
-            / (F.col("na") + F.col("nb") - F.col("shared") + F.lit(1e-12)),
-        )
-    )
-    return j.filter(F.col("jac") >= 0.5).select(
-        "doc_a", "doc_b", F.round("jac", 4).alias("jaccard")
-    )
-
-
-@register(
-    "dedup_containment",
-    f"""
-    WITH {SQL_SHINGLES},
-    {_SQL_SHINGLES_CAPPED},
-    n AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
-    pair AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-      FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    sized AS (
-      SELECT p.doc_a, p.doc_b, p.shared, na.n AS na, nb.n AS nb
-      FROM pair p
-      JOIN n na ON p.doc_a = na.doc_id
-      JOIN n nb ON p.doc_b = nb.doc_id)
-    SELECT doc_a AS contained, doc_b AS container,
-           CAST(na AS BIGINT) AS n_contained, CAST(nb AS BIGINT) AS n_container
-    FROM sized WHERE shared = na
-    UNION ALL
-    SELECT doc_b, doc_a, CAST(nb AS BIGINT), CAST(na AS BIGINT)
-    FROM sized WHERE shared = nb
-    """,
-)
-def dedup_containment(spark, sf_dir):
-    """Shingle-set CONTAINMENT detection — the asymmetric dedup case
-    near-dup Jaccard misses: a short document fully contained in a longer
-    one (quoted excerpt, vendored file, doc-in-concatenation) can have
-    arbitrarily low Jaccard yet is still a duplicate for training
-    purposes.  contained ⊆ container iff shared-shingle count equals the
-    contained side's distinct-shingle count; equal sets emit both
-    directions (symmetric exact-dup evidence).  Same DF-capped inverted
-    index as dedup_ngram_jaccard (containment judged on the capped
-    shingle universe, cap drops observable via dedup_shingle_df_caps) —
-    one index self-join, no all-pairs work."""
-    raw = _shingles_df(spark, sf_dir).localCheckpoint(eager=True)
-    hot = (
-        raw.groupBy("sh").agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP).select("sh")
-    )
-    sh = raw.join(F.broadcast(hot), on="sh", how="left_anti")
-    pair = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    n = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sized = (
-        pair.join(
-            n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"),
-            on="doc_a",
-        ).join(
-            n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"),
-            on="doc_b",
-        )
-    )
-    # candidate-pair-sized (tiny vs the index); both union branches read
-    # it — without this the fwd/rev filters recompute the whole inverted
-    # index subtree (plan audit: 14 exchanges -> 7)
-    sized = sized.localCheckpoint(eager=True)
-    fwd = sized.filter(F.col("shared") == F.col("na")).select(
-        F.col("doc_a").alias("contained"), F.col("doc_b").alias("container"),
-        F.col("na").cast("bigint").alias("n_contained"),
-        F.col("nb").cast("bigint").alias("n_container"),
-    )
-    rev = sized.filter(F.col("shared") == F.col("nb")).select(
-        F.col("doc_b").alias("contained"), F.col("doc_a").alias("container"),
-        F.col("nb").cast("bigint").alias("n_contained"),
-        F.col("na").cast("bigint").alias("n_container"),
-    )
-    return fwd.unionByName(rev)
-
-
-@register(
-    "dedup_repeated_spans",
-    f"""
-    WITH tokarr AS (SELECT doc_id, string_split(text, ' ') AS arr
-                    FROM documents),
-    grams AS (
-      SELECT doc_id, CAST(i AS BIGINT) - 1 AS pos,
-             md5(array_to_string(list_slice(arr, i, i + 7), ' ')) AS gh
-      FROM tokarr, UNNEST(generate_series(1, len(arr) - 7)) AS t(i)),
-    dup AS (SELECT gh FROM grams GROUP BY gh
-            HAVING COUNT(DISTINCT doc_id) >= 2),
-    hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gh)),
-    flag AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id
-                                            ORDER BY pos) > 8
-                  THEN 1 ELSE 0 END AS brk
-      FROM hits),
-    isl AS (
-      SELECT doc_id, pos,
-             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS UNBOUNDED PRECEDING) AS island
-      FROM flag)
-    SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 7 AS span_end,
-           MAX(pos) + 7 - MIN(pos) + 1 AS span_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_grams
-    FROM isl GROUP BY doc_id, island
-    """,
-)
-def dedup_repeated_spans(spark, sf_dir):
-    """EXACT-SUBSTRING dedup spans (public method: Lee et al. 2021,
-    arXiv:2107.06499 'Deduplicating Training Data Makes Language Models
-    Better' — their suffix-array repeated-substring pass, re-expressed
-    relationally): every 8-token gram occurring in >= 2 distinct
-    documents marks its positions; per document, overlapping/adjacent
-    marked windows merge into MAXIMAL repeated spans (gaps-and-islands:
-    LAG gap flag -> running-sum island id -> min/max per island).  The
-    output is the cut-list a training pipeline feeds to span excision —
-    complementing the doc-level near-dup family (MinHash/SimHash/
-    Jaccard) with the sub-document case they cannot see.
-
-    Scale shape: gram hashing is row-local (higher-order split/slice/
-    charfold, no Python); the >= 2-docs filter is ONE groupBy on the
-    gram hash with map-side combine; hit positions come back via a semi
-    join on the (small) duplicated-gram dim; island merging is a
-    per-document window — partition-local, no global sort.  At 100 TB
-    the duplicated-gram dim is the only reduced state (bounded by
-    actually-repeated content, the quantity of interest) — it is
-    materialized once and its semi-join probe is size-gated
-    (maybe_broadcast) so the gram table itself is never shuffled for
-    the lookup under the gate (r8).  The gram
-    subtree is deliberately NOT checkpointed although two consumers read
-    it (the DF aggregate and the semi join): recomputing a row-local
-    expression over two scans beats materializing an O(corpus-tokens)
-    intermediate — scan-bound, no spill risk."""
-    d = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    gram_strs = F.when(
-        F.size(toks) >= 8,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 7),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 8)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = d.select(
-        "doc_id", F.posexplode(gram_strs).alias("p", "gram")
-    ).select(
-        "doc_id",
-        F.col("p").cast("bigint").alias("pos"),
-        # md5, NOT charfold: the 31-bit polynomial space saturates at
-        # corpus scale (birthday collisions from ~65k distinct grams),
-        # and since both engines share the hash the oracle could never
-        # see a collision-flagged span.  An EXACT method must not flag
-        # never-repeated text; the 128-bit space makes collisions
-        # negligible at any corpus size, matching the LSH-then-verify
-        # discipline of the minhash/bloom paths (r6 ADVICE, medium).
-        F.md5(F.col("gram")).alias("gh"),
-    )
-    from .functions.joins import maybe_broadcast
-
-    # r8: the duplicated-gram dim is the reduced state (bounded by
-    # actually-repeated content) — materialize it and size-gate the
-    # semi-join probe so the O(corpus-tokens) gram table is never
-    # shuffled for the lookup (above the gate the anti-join falls back
-    # to the keyed shuffle as before)
-    dup = (
-        grams.groupBy("gh")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gh")
-        .localCheckpoint(eager=True)
-    )
-    hits = grams.join(maybe_broadcast(dup), "gh", "left_semi").select(
-        "doc_id", "pos"
-    )
-    wd = Window.partitionBy("doc_id").orderBy("pos")
-    flagged = hits.withColumn(
-        "brk",
-        F.when(F.col("pos") - F.lag("pos").over(wd) > 8, 1).otherwise(0),
-    )
-    isl = flagged.withColumn(
-        "island",
-        F.sum("brk").over(wd.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return isl.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("span_start"),
-        (F.max("pos") + 7).alias("span_end"),
-        (F.max("pos") + 7 - F.min("pos") + 1).alias("span_tokens"),
-        F.count("*").alias("n_grams"),
-    ).drop("island")
-
-
-@register(
-    "dedup_shingle_df_caps",
-    f"""
-    WITH {SQL_SHINGLES},
-    df AS (SELECT sh, COUNT(*) AS df FROM shingle GROUP BY sh)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(CASE WHEN df > {NGRAM_DF_CAP} THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           CAST(MAX(df) AS BIGINT) AS max_df
-    FROM df
-    """,
-)
-def dedup_shingle_df_caps(spark, sf_dir):
-    """Companion accounting for NGRAM_DF_CAP ('no silent caps'): total
-    distinct shingles, how many exceed the document-frequency ceiling, and
-    the observed max DF."""
-    df = _shingles_df(spark, sf_dir).groupBy("sh").agg(F.count("*").alias("df"))
-    return df.agg(
-        F.count("*").alias("n_shingles"),
-        F.sum(F.when(F.col("df") > NGRAM_DF_CAP, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dropped"),
-        F.max("df").cast("bigint").alias("max_df"),
-    )
-
-
-# ---------- similarity search over embeddings ----------
-# Production cosine paths live in functions/similarity.py (zip_with fold —
-# no per-dimension explode); the SQL oracles below keep the per-dimension
-# form because DuckDB has no array fold. Equivalence of the two physical
-# plans is covered by tests/test_similarity.py.
-
-_SQL_COS = """
-flat AS (
-  SELECT e.vec_id, CAST(generate_subscripts(e.embedding, 1) AS BIGINT) AS i,
-         unnest(e.embedding) AS x
-  FROM embeddings e
-),
-qflat AS (SELECT i, x AS qx FROM flat WHERE vec_id = 0),
-dots AS (
-  SELECT f.vec_id,
-         SUM(CAST(f.x AS DOUBLE) * CAST(q.qx AS DOUBLE)) AS dot,
-         SUM(CAST(f.x AS DOUBLE) * CAST(f.x AS DOUBLE)) AS nv
-  FROM flat f JOIN qflat q ON f.i = q.i
-  WHERE f.vec_id <> 0
-  GROUP BY f.vec_id
-),
-nq AS (SELECT SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS nq FROM qflat),
-cos AS (
-  SELECT d.vec_id, d.dot / (sqrt(d.nv) * sqrt(nq.nq)) AS c FROM dots d, nq
-)
-"""
-
-
-@register(
-    "ann_cosine_topk",
-    f"""
-    WITH {_SQL_COS}
-    SELECT vec_id, ROUND(c, 4) AS cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
-      SELECT vec_id, c,
-             ROW_NUMBER() OVER (ORDER BY ROUND(c, 6) DESC, vec_id) AS rnk
-      FROM cos) WHERE rnk <= 10
-    """,
-)
-def ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k vs query vector (vec_id=0) — PRODUCTION
-    path: one scan, per-row zip_with/aggregate fold against the broadcast
-    query vector (no per-dimension explode; the r1 explode-join form
-    inflated every shuffle by x dim and is kept only as the oracle twin).
-    Rank on round(cos, 6) with vec_id tie-break for determinism."""
-    from .functions.similarity import cosine_topk
-
-    return cosine_topk(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
-
-
-@register(
-    "ann_mutual_knn",
-    """
-    WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
-    pr AS (
-      SELECT a.vec_id AS va, b.vec_id AS vb,
-             list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(a.embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(b.embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS c
-      FROM sub a JOIN sub b ON a.vec_id <> b.vec_id),
-    knn AS (
-      SELECT va, vb, c FROM (
-        SELECT va, vb, c,
-               ROW_NUMBER() OVER (PARTITION BY va
-                                  ORDER BY ROUND(c, 6) DESC, vb) AS rnk
-        FROM pr) WHERE rnk <= 5)
-    SELECT k1.va AS vec_a, k1.vb AS vec_b, ROUND(k1.c, 4) AS cos_sim
-    FROM knn k1 JOIN knn k2 ON k1.va = k2.vb AND k1.vb = k2.va
-    WHERE k1.va < k1.vb
-    """,
-)
-def ann_mutual_knn(spark, sf_dir):
-    """MUTUAL k-NN graph (k=5): keep edge (a, b) only when each is in
-    the other's top-5 by cosine — the standard kNN-graph pruning that
-    strips hub-induced asymmetric edges before density clustering /
-    dedup-by-neighborhood.  Exact all-pairs on a deterministic id-subset
-    (vec_id < 400) so the oracle stays cross-checkable; the 100 TB path
-    generates candidates per LSH/IVF bucket first (ann_lsh_bucket /
-    ann_ivf_topk) and re-ranks exactly within buckets — this operator is
-    then the per-bucket re-rank + the mutual join, identical shape.
-    Rank on round(c, 6) with neighbor-id tie-break (engine parity);
-    vectors travel whole through zip_with folds, never exploded."""
-    from .functions.similarity import cosine_fold
-
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).localCheckpoint(eager=True)
-    a = e.select(F.col("vec_id").alias("va"), F.col("emb").alias("ea"))
-    b = e.select(F.col("vec_id").alias("vb"), F.col("emb").alias("eb"))
-    pr = (
-        a.join(b, F.col("va") != F.col("vb"))
-        .withColumn("c", cosine_fold(F.col("ea"), F.col("eb")))
-        .select("va", "vb", "c")
-    )
-    w = Window.partitionBy("va").orderBy(F.desc(F.round("c", 6)), "vb")
-    knn = (
-        pr.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("va", "vb", "c")
-        .localCheckpoint(eager=True)
-    )
-    rev = knn.select(
-        F.col("vb").alias("va"), F.col("va").alias("vb")
-    )
-    return (
-        knn.join(rev, on=["va", "vb"], how="left_semi")
-        .filter(F.col("va") < F.col("vb"))
-        .select("va", "vb", F.round("c", 4).alias("cos_sim"))
-        .withColumnRenamed("va", "vec_a")
-        .withColumnRenamed("vb", "vec_b")
-    )
-
-
-@register(
-    "ann_lsh_bucket",
-    """
-    WITH b AS (
-      SELECT vec_id, label,
-             CAST((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
-             + 2 * (CASE WHEN embedding[2] > 0 THEN 1 ELSE 0 END)
-             + 4 * (CASE WHEN embedding[3] > 0 THEN 1 ELSE 0 END)
-             + 8 * (CASE WHEN embedding[4] > 0 THEN 1 ELSE 0 END) AS BIGINT) AS bucket
-      FROM embeddings)
-    SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(label) AS BIGINT) AS label_sum
-    FROM b GROUP BY bucket
-    """,
-)
-def ann_lsh_bucket(spark, sf_dir):
-    """Hyperplane-sign LSH bucketing (the scale path for ANN: candidate
-    generation by bucket, then exact re-rank within bucket)."""
-    e = _t(spark, sf_dir, "embeddings")
-    emb = F.col("embedding")
-    bucket = (
-        F.when(F.element_at(emb, 1) > 0, 1).otherwise(0)
-        + F.when(F.element_at(emb, 2) > 0, 2).otherwise(0)
-        + F.when(F.element_at(emb, 3) > 0, 4).otherwise(0)
-        + F.when(F.element_at(emb, 4) > 0, 8).otherwise(0)
-    ).cast("bigint")
-    return e.groupBy(bucket.alias("bucket")).agg(
-        F.count("*").alias("n_vecs"),
-        F.sum("label").cast("bigint").alias("label_sum"),
-    )
-
-
-@register(
-    "embed_centroids",
-    """
-    SELECT CAST(label AS BIGINT) AS label, CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(AVG(CAST(embedding[1] AS DOUBLE)), 3) AS c0,
-           ROUND(AVG(CAST(embedding[2] AS DOUBLE)), 3) AS c1,
-           ROUND(AVG(CAST(embedding[3] AS DOUBLE)), 3) AS c2
-    FROM embeddings GROUP BY label
-    """,
-)
-def embed_centroids(spark, sf_dir):
-    """Per-label centroid head — groupBy over array elements (A8 span-pool
-    analog: groupBy(mention).agg(avg(vec)))."""
-    e = _t(spark, sf_dir, "embeddings")
-    emb = F.col("embedding")
-    return e.groupBy(F.col("label").cast("bigint").alias("label")).agg(
-        F.count("*").alias("n"),
-        F.round(F.avg(F.element_at(emb, 1).cast("double")), 3).alias("c0"),
-        F.round(F.avg(F.element_at(emb, 2).cast("double")), 3).alias("c1"),
-        F.round(F.avg(F.element_at(emb, 3).cast("double")), 3).alias("c2"),
-    )
-
-
-def _sql_pca_round(t: int, src: str = "xc", p: str = "") -> str:
-    """One matrix-free power half-pair: scores s = X·v (per-vector
-    dot), new direction w = Xᵀ·s (per-dim weighted sum), then L2
-    normalize — the SQL twin of one loop body in embed_pca_power.
-    ``src`` names the long-form matrix CTE, ``p`` prefixes the
-    iteration CTEs so a second spectral estimate (embed_abtt's
-    deflated pass) can coexist in one query."""
-    return f"""
-    {p}s{t} AS (SELECT {src}.vec_id, SUM({src}.val * {p}v{t - 1}.v) AS s
-             FROM {src} JOIN {p}v{t - 1} ON {p}v{t - 1}.d = {src}.d
-             GROUP BY 1),
-    {p}w{t} AS (SELECT {src}.d, SUM({src}.val * {p}s{t}.s) AS w
-             FROM {src} JOIN {p}s{t} ON {p}s{t}.vec_id = {src}.vec_id
-             GROUP BY 1),
-    {p}n{t} AS (SELECT SQRT(SUM(w * w)) AS nrm FROM {p}w{t}),
-    {p}v{t} AS (SELECT d, w / nrm AS v FROM {p}w{t} CROSS JOIN {p}n{t})"""
-
-
-@register(
-    "embed_pca_power",
-    f"""
-    WITH x AS (SELECT vec_id,
-                      CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT)
-                        AS d,
-                      CAST(unnest(embedding) AS DOUBLE) AS val
-               FROM embeddings),
-    mu AS (SELECT d, AVG(val) AS m FROM x GROUP BY d),
-    xc AS (SELECT x.vec_id, x.d, x.val - mu.m AS val
-           FROM x JOIN mu ON mu.d = x.d),
-    nv AS (SELECT CAST(COUNT(DISTINCT vec_id) AS DOUBLE) AS n FROM x),
-    v0r AS (SELECT d,
-                   {sql_charfold("md5('pca:' || CAST(d AS VARCHAR))")}
-                     / {MOD}.0 - 0.5 AS r
-            FROM (SELECT DISTINCT d FROM x)),
-    v0n AS (SELECT SQRT(SUM(r * r)) AS nrm FROM v0r),
-    v0 AS (SELECT d, r / nrm AS v FROM v0r CROSS JOIN v0n),
-    {_sql_pca_round(1)},
-    {_sql_pca_round(2)},
-    pick AS (SELECT d, v FROM v2 ORDER BY ROUND(ABS(v), 6) DESC, d LIMIT 1),
-    sg AS (SELECT CASE WHEN pick.v < 0 THEN -1.0 ELSE 1.0 END AS sgn
-           FROM pick),
-    s3 AS (SELECT xc.vec_id, SUM(xc.val * v2.v) AS s
-           FROM xc JOIN v2 ON v2.d = xc.d GROUP BY 1),
-    lam AS (SELECT SUM(s * s) / nv.n AS eig FROM s3 CROSS JOIN nv
-            GROUP BY nv.n),
-    tv AS (SELECT SUM(val * val) / nv.n AS tot FROM xc CROSS JOIN nv
-           GROUP BY nv.n)
-    SELECT v2.d AS dim, ROUND(sg.sgn * v2.v, 6) AS loading,
-           ROUND(lam.eig, 4) AS eigenvalue,
-           ROUND(lam.eig / tv.tot, 4) AS var_ratio
-    FROM v2 CROSS JOIN sg CROSS JOIN lam CROSS JOIN tv
-    """,
-)
-def embed_pca_power(spark, sf_dir):
-    """Top PRINCIPAL COMPONENT of the embedding table by matrix-free
-    power iteration (Golub & Van Loan; the PCA every embedding-curation
-    pipeline runs before whitening / ABTT de-biasing, Mu & Viswanath
-    2018): two synchronous iterations of v ← X_cᵀ(X_c v)/‖·‖ over the
-    CENTERED data, never materializing the d×d covariance — the
-    iteration the oracle unrolls and DuckDB replays exactly.  Output:
-    the 64 loadings (sign-canonicalized at the max-|loading| dim so
-    both engines agree), the Rayleigh eigenvalue λ = ‖X_c v‖²/n, and
-    the explained-variance ratio λ/tr(C)·— the number that tells a
-    curation pipeline whether its embeddings have a dominant
-    "frequency direction" to strip.
-
-    Scale shape (r8): the matrix stays WIDE — one d-array row per
-    vector, partitioned by vector; the direction v is the d-vector of
-    driver state the long layout also held, so each v ← X_cᵀ(X_c v)
-    round is ONE aggregate of d map-side-combined running sums (the
-    treeAggregate shape every distributed PCA uses) instead of two
-    keyed-join shuffles + a checkpoint; centering and projection scores
-    are row-local zip_with folds against the literal mean/direction.
-    Nothing quadratic in n or d exists anywhere — this is exactly how
-    the computation shards at 10⁹ vectors.  Deterministic init from the
-    hash-uniform (seeded, so the 2-iteration snapshot is reproducible
-    and oracle-pinned); convergence to the true eigenvector adds
-    iterations, not new machinery."""
-    e, dim = _embed_wide(spark, sf_dir)
-    if dim == 0:
-        return spark.createDataFrame(
-            [], "dim bigint, loading double, eigenvalue double, var_ratio double"
-        )
-    xcf = _centered_wide(e, dim)
-    # the iteration lives in ONE place — _pc1_wide (shared with
-    # embed_abtt's two passes and mirrored by _sql_pca_round)
-    v2 = _pc1_wide(xcf, dim, "pca:")
-    # Rayleigh eigenvalue + trace in ONE aggregate pass: the projection
-    # score and the row's squared norm are row-local folds of the
-    # centered array
-    fin = xcf.select(
-        "vec_id",
-        _dot_arr(F.col("xc"), v2).alias("s"),
-        F.aggregate(
-            F.transform("xc", lambda a: a * a), F.lit(0.0), lambda acc, y: acc + y
-        ).alias("sq"),
-    ).agg(
-        F.sum(F.col("s") * F.col("s")).alias("s2"),
-        F.sum("sq").alias("sq2"),
-        F.countDistinct("vec_id").cast("double").alias("n"),
-    ).collect()[0]
-    eig = fin.s2 / fin.n
-    tot = fin.sq2 / fin.n
-    vdf = spark.createDataFrame(
-        [(d, v2[d]) for d in range(dim)], "dim bigint, v double"
-    )
-    # sign canonicalization at the max-|loading| dim — the pick replays
-    # the oracle's ORDER BY round(abs(v), 6) DESC, d over the d-row dim
-    pick = vdf.orderBy(F.desc(F.round(F.abs("v"), 6)), "dim").limit(1).collect()[0]
-    sgn = -1.0 if pick.v < 0 else 1.0
-    return vdf.select(
-        "dim",
-        F.round(F.lit(sgn) * F.col("v"), 6).alias("loading"),
-        F.round(F.lit(eig), 4).alias("eigenvalue"),
-        F.round(F.lit(eig) / F.lit(tot), 4).alias("var_ratio"),
-    )
-
-
-def _embed_wide(spark, sf_dir):
-    """(e, dim) — the embedding table as (vec_id, x array<double>),
-    checkpointed once (every consumer below re-derives its row-local
-    columns from it), plus the data-derived dimensionality."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("x")
-    ).localCheckpoint(eager=True)
-    row = e.limit(1).collect()
-    dim = len(row[0].x) if row else 0
-    return e, dim
-
-
-def _centered_wide(e, dim: int):
-    """(vec_id, xc) — per-dimension mean removed, ROW-LOCALLY: the d
-    means are one aggregate collected as a d-vector (driver state the
-    long layout's mu dim also bounded), so centering is a zip_with
-    against a literal array instead of an explode + groupBy + join."""
-    rows = (
-        e.select(F.posexplode("x").alias("i", "val"))
-        .groupBy("i")
-        .agg(F.avg("val").alias("m"))
-        .collect()
-    )
-    mu = [r.m for r in sorted(rows, key=lambda r: r.i)]
-    muarr = F.array(*[F.lit(float(m)) for m in mu])
-    return e.select(
-        "vec_id", F.zip_with("x", muarr, lambda a, b: a - b).alias("xc")
-    )
-
-
-def _charfold_py(s: str) -> int:
-    """Exact python replay of functions/hashing.charfold (integer
-    arithmetic — bit-identical to the Spark/DuckDB expression)."""
-    h = 7
-    for ch in s:
-        h = (h * 31 + ord(ch)) % MOD
-    return h
-
-
-def _dot_arr(a_col, lits: list[float]) -> F.Column:
-    """Row-local dot product of an array column with a literal vector —
-    folds in array-index order (the same addend order the long-layout
-    per-vector groupBy accumulated, since a vector's exploded rows were
-    contiguous in ascending d)."""
-    va = F.array(*[F.lit(float(x)) for x in lits])
-    return F.aggregate(
-        F.zip_with(a_col, va, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, y: acc + y,
-    )
-
-
-def _pc1_wide(xcf, dim: int, salt: str, rounds: int = 2) -> list[float]:
-    """Top-direction power iteration over the WIDE layout (r8): ``xcf``
-    carries one centered d-array per vector in column ``xc``; the
-    direction lives as a d-vector of driver state (the docstring
-    contract the long layout already claimed — kmeans collects seed
-    VECTORS the same way), so each v ← Xᵀ(Xv)/‖·‖ round is ONE
-    aggregate job of d running sums instead of two keyed-join
-    shuffles + a checkpoint + a norm job.  The init replays the exact
-    charfold(md5(salt || d)) hash-uniform of the unrolled oracle in
-    python integers."""
-    import hashlib
-    import math
-
-    r = [
-        _charfold_py(hashlib.md5((salt + str(d)).encode()).hexdigest())
-        / float(MOD)
-        - 0.5
-        for d in range(dim)
-    ]
-    nrm = math.sqrt(sum(x * x for x in r))
-    v = [x / nrm for x in r]
-    for _ in range(rounds):
-        # d running sums via posexplode + groupBy(i): the exact addend
-        # grouping of the long layout's w-step, and a small generic
-        # aggregate plan (a d-column aggregate recompiles ~0.7 s of
-        # codegen per round because every round's literals change)
-        prod = xcf.select(
-            "xc", _dot_arr(F.col("xc"), v).alias("s")
-        ).select(
-            F.posexplode(
-                F.transform("xc", lambda a: a * F.col("s"))
-            ).alias("i", "pv")
-        )
-        rows = prod.groupBy("i").agg(F.sum("pv").alias("w")).collect()
-        w = [r.w for r in sorted(rows, key=lambda r: r.i)]
-        nrm = math.sqrt(sum(x * x for x in w))
-        v = [x / nrm for x in w]
-    return v
-
-
-def _sql_abtt_init(salt: str, p: str, src: str) -> str:
-    """Hash-seeded unit init vector CTEs for a prefixed power pass."""
-    return f"""
-    {p}v0r AS (SELECT d,
-                   {sql_charfold(f"md5('{salt}' || CAST(d AS VARCHAR))")}
-                     / {MOD}.0 - 0.5 AS r
-            FROM (SELECT DISTINCT d FROM {src})),
-    {p}v0n AS (SELECT SQRT(SUM(r * r)) AS nrm FROM {p}v0r),
-    {p}v0 AS (SELECT d, r / nrm AS v FROM {p}v0r CROSS JOIN {p}v0n)"""
-
-
-@register(
-    "embed_abtt",
-    f"""
-    WITH x AS (SELECT vec_id,
-                      CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT)
-                        AS d,
-                      CAST(unnest(embedding) AS DOUBLE) AS val
-               FROM embeddings),
-    mu AS (SELECT d, AVG(val) AS m FROM x GROUP BY d),
-    xc AS (SELECT x.vec_id, x.d, x.val - mu.m AS val
-           FROM x JOIN mu ON mu.d = x.d),
-    nv AS (SELECT CAST(COUNT(DISTINCT vec_id) AS DOUBLE) AS n FROM x),
-    {_sql_abtt_init('pca:', '', 'xc')},
-    {_sql_pca_round(1)},
-    {_sql_pca_round(2)},
-    sc AS (SELECT xc.vec_id, SUM(xc.val * v2.v) AS s
-           FROM xc JOIN v2 ON v2.d = xc.d GROUP BY 1),
-    xp AS (SELECT xc.vec_id, xc.d, xc.val - sc.s * v2.v AS val
-           FROM xc JOIN sc ON sc.vec_id = xc.vec_id
-           JOIN v2 ON v2.d = xc.d),
-    {_sql_abtt_init('abtt:', 'a', 'xp')},
-    {_sql_pca_round(1, 'xp', 'a')},
-    {_sql_pca_round(2, 'xp', 'a')},
-    sa AS (SELECT xp.vec_id, SUM(xp.val * av2.v) AS s
-           FROM xp JOIN av2 ON av2.d = xp.d GROUP BY 1),
-    m1 AS (SELECT SUM(s * s) / nv.n AS eig FROM sc CROSS JOIN nv
-           GROUP BY nv.n),
-    t1 AS (SELECT SUM(val * val) / nv.n AS tr FROM xc CROSS JOIN nv
-           GROUP BY nv.n),
-    m2 AS (SELECT SUM(s * s) / nv.n AS eig FROM sa CROSS JOIN nv
-           GROUP BY nv.n),
-    t2 AS (SELECT SUM(val * val) / nv.n AS tr FROM xp CROSS JOIN nv
-           GROUP BY nv.n)
-    SELECT ROUND(m1.eig, 4) AS eig_before,
-           ROUND(t1.tr, 4) AS trace_before,
-           ROUND(m1.eig / t1.tr, 4) AS ratio_before,
-           ROUND(m2.eig, 4) AS eig_after,
-           ROUND(t2.tr, 4) AS trace_after,
-           ROUND(m2.eig / t2.tr, 4) AS ratio_after
-    FROM m1 CROSS JOIN t1 CROSS JOIN m2 CROSS JOIN t2
-    """,
-)
-def embed_abtt(spark, sf_dir):
-    """ALL-BUT-THE-TOP embedding post-processing (Mu & Viswanath 2018,
-    arXiv:1702.01417) with the isotropy gain MEASURED: center, find the
-    top principal direction (the shared power-iteration blocks), remove
-    each vector's projection onto it (x' = x_c − (x_c·v)v), then
-    re-estimate the dominant-direction share on the RESIDUAL — the
-    before/after (λ/trace) pair is the isotropy report a curation
-    pipeline uses to decide whether embeddings need de-biasing before
-    cosine retrieval / SemDeDup.  Exact identity checks ride the
-    result: trace_after = trace_before − eig_before (the removed
-    energy IS the top eigenvalue) and eig_after ≤ eig_before (the
-    residual's dominant direction is the second eigenvalue) — pinned
-    in tests/test_new_ops_invariants.py.
-
-    Scale shape (r8): identical to embed_pca_power twice — per power
-    round ONE d-wide aggregate over the wide array layout; the
-    deflation xp is entirely row-local (xc·v is a fold, the subtraction
-    a zip_with against the literal direction), and both Rayleigh
-    quotients + both traces ride a single final aggregate pass; nothing
-    quadratic anywhere."""
-    e, dim = _embed_wide(spark, sf_dir)
-    if dim == 0:
-        return spark.createDataFrame(
-            [],
-            "eig_before double, trace_before double, ratio_before double, "
-            "eig_after double, trace_after double, ratio_after double",
-        )
-    xcf = _centered_wide(e, dim)
-    v2 = _pc1_wide(xcf, dim, "pca:")
-    va2 = F.array(*[F.lit(float(x)) for x in v2])
-    # deflation is ROW-LOCAL: xp_i = xc_i − (xc·v)·v, staged so the
-    # projection score is evaluated once per row
-    xpf = xcf.select(
-        "vec_id", "xc", _dot_arr(F.col("xc"), v2).alias("s")
-    ).select(
-        "vec_id",
-        "xc",
-        "s",
-        F.zip_with("xc", va2, lambda a, b: a - F.col("s") * b).alias("xp"),
-    )
-    av = _pc1_wide(xpf.select(F.col("xp").alias("xc")), dim, "abtt:")
-    sq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda a: a * a), F.lit(0.0), lambda acc, y: acc + y
-    )
-    # both Rayleigh quotients and both traces in ONE aggregate pass
-    fin = xpf.select(
-        "vec_id",
-        "s",
-        _dot_arr(F.col("xp"), av).alias("sa"),
-        sq("xc").alias("sq_c"),
-        sq("xp").alias("sq_p"),
-    ).agg(
-        F.sum(F.col("s") * F.col("s")).alias("s2"),
-        F.sum(F.col("sa") * F.col("sa")).alias("sa2"),
-        F.sum("sq_c").alias("tr_c"),
-        F.sum("sq_p").alias("tr_p"),
-        F.countDistinct("vec_id").cast("double").alias("n"),
-    ).collect()[0]
-    eig1, tr1 = fin.s2 / fin.n, fin.tr_c / fin.n
-    eig2, tr2 = fin.sa2 / fin.n, fin.tr_p / fin.n
-    return spark.range(1).select(
-        F.round(F.lit(eig1), 4).alias("eig_before"),
-        F.round(F.lit(tr1), 4).alias("trace_before"),
-        F.round(F.lit(eig1) / F.lit(tr1), 4).alias("ratio_before"),
-        F.round(F.lit(eig2), 4).alias("eig_after"),
-        F.round(F.lit(tr2), 4).alias("trace_after"),
-        F.round(F.lit(eig2) / F.lit(tr2), 4).alias("ratio_after"),
-    )
-
-
-# Sign-LSH bucket CTE shared by the embedding dedup/mining oracles.
-# Plane count comes from functions/similarity.N_PLANES (env
-# SPARK_GRAFT_EMB_PLANES, read at import) so the DuckDB bucket expression
-# and the Spark sign_bucket() column are ALWAYS the same hash — the
-# registered queries scale by raising the env knob, not by diverging
-# from their oracle (r6 VERDICT "What's wrong" #2/#3; NGRAM_DF_CAP
-# precedent below).  embedding[k] beyond the vector length is NULL in
-# both engines and NULL > 0 is false/0 on both, so n_planes > dim
-# degrades to coarser buckets identically.
-from .functions.similarity import N_PLANES as EMB_PLANES  # noqa: E402
-
-_SQL_EMB_BUCKET = f"""
-eb AS (
-  SELECT vec_id, embedding,
-         {" + ".join(
-             f"{1 << k} * (CASE WHEN embedding[{k + 1}] > 0 THEN 1 ELSE 0 END)"
-             for k in range(EMB_PLANES)
-         )} AS bucket
-  FROM embeddings),
-flat AS (
-  SELECT vec_id, bucket, generate_subscripts(embedding, 1) AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM eb),
-norms AS (SELECT vec_id, SUM(x * x) AS n2 FROM flat GROUP BY vec_id)
-"""
-
-
-@register(
-    "dedup_embedding_cosine",
-    f"""
-    WITH {_SQL_EMB_BUCKET},
-    dots AS (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dot
-      FROM flat a JOIN flat b
-        ON a.i = b.i AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-      GROUP BY 1, 2
-    )
-    SELECT d.vec_a, d.vec_b,
-           ROUND(d.dot / (sqrt(na.n2) * sqrt(nb.n2)), 4) AS cos_sim
-    FROM dots d
-    JOIN norms na ON d.vec_a = na.vec_id
-    JOIN norms nb ON d.vec_b = nb.vec_id
-    WHERE ROUND(d.dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) >= 0.45
-    """,
-)
-def dedup_embedding_cosine(spark, sf_dir):
-    """Embedding-cosine near-dup pairs, LSH-bucket prefiltered (the scale
-    path: hyperplane-sign buckets bound the candidate set to same-bucket
-    pairs; exact zip_with-fold cosine verifies — each side of the bucket
-    self-join carries its whole vector, so the shuffle moves n rows, not
-    n x dim exploded rows).  Completes the dedup modality set
-    (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine)."""
-    from .functions.similarity import near_dup_pairs
-
-    return near_dup_pairs(_emb(spark, sf_dir), threshold=0.45)
-
-
-@register(
-    "curate_contrastive_triplets",
-    f"""
-    WITH {_SQL_EMB_BUCKET},
-    dots AS (
-      SELECT a.vec_id AS anchor, b.vec_id AS other, SUM(a.x * b.x) AS dot
-      FROM flat a JOIN flat b
-        ON a.i = b.i AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-      GROUP BY 1, 2),
-    cand AS (SELECT d.anchor, d.other,
-                    d.dot / (sqrt(na.n2) * sqrt(nb.n2)) AS c
-             FROM dots d
-             JOIN norms na ON na.vec_id = d.anchor
-             JOIN norms nb ON nb.vec_id = d.other),
-    pos AS (SELECT anchor, other AS pos_id, c AS pc,
-                   ROW_NUMBER() OVER (PARTITION BY anchor
-                                      ORDER BY ROUND(c, 6) DESC, other) AS rn
-            FROM cand),
-    neg AS (SELECT anchor, other AS neg_id, c AS nc,
-                   ROW_NUMBER() OVER (PARTITION BY anchor
-                                      ORDER BY ROUND(c, 6) ASC, other) AS rn
-            FROM cand)
-    SELECT p.anchor, p.pos_id, ROUND(p.pc, 4) AS pos_cos,
-           n.neg_id, ROUND(n.nc, 4) AS neg_cos
-    FROM pos p JOIN neg n ON n.anchor = p.anchor
-    WHERE p.rn = 1 AND n.rn = 1 AND p.pos_id <> n.neg_id
-    """,
-)
-def curate_contrastive_triplets(spark, sf_dir):
-    """CONTRASTIVE TRIPLET MINING for embedding training — (anchor,
-    positive, hard negative) rows, the data-prep step behind
-    SimCSE/SBERT-style fine-tuning (Gao et al. 2021; Reimers 2019) and
-    the in-batch-negatives recipe: per anchor, positive = most-similar
-    bucket-mate, hard negative = LEAST-similar vector in the SAME LSH
-    bucket — a vector that collides with the anchor under the coarse
-    hash yet is far in cosine, which is precisely the "looks similar,
-    isn't" example that makes negatives hard (random negatives are
-    trivially easy; same-bucket ones share the anchor's sign pattern).
-    Anchors whose bucket has only one distinct mate (pos == neg) are
-    dropped — a triplet needs two distinct partners.
-
-    Scale shape: the candidate set is the sign-bucket self-join
-    (bucket-bounded, never all-pairs) and the plane count IS the scale
-    knob — candidate work ≈ n²/2^k, so k=4 at a 200k-vector fixture is
-    the measured DNF cliff while k=12 runs in 24 s (docs/SCALE.md).
-    The REGISTERED form therefore reads k from SPARK_GRAFT_EMB_PLANES
-    (functions/similarity.N_PLANES, baked into BOTH engines' plans at
-    import exactly like NGRAM_DF_CAP): production sets the env var and
-    the oracle replays the SAME buckets — no separate "scale path".
-    The Spark side carries whole vectors through the join and folds
-    cosines JVM-side (zip_with/aggregate — the per-dimension explode is
-    the oracle twin only); pos/neg selection is one per-anchor window
-    over the anchor's bucket mates."""
-    from .functions.similarity import contrastive_triplets
-
-    return contrastive_triplets(_emb(spark, sf_dir))
-
-
-@register(
-    "dedup_semantic_prune",
-    f"""
-    WITH RECURSIVE {_SQL_EMB_BUCKET},
-    dots AS (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.x * b.x) AS dot
-      FROM flat a JOIN flat b
-        ON a.i = b.i AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-      GROUP BY 1, 2),
-    dup AS (
-      SELECT d.vec_a, d.vec_b
-      FROM dots d
-      JOIN norms na ON d.vec_a = na.vec_id
-      JOIN norms nb ON d.vec_b = nb.vec_id
-      WHERE ROUND(d.dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) >= 0.35),
-    verts AS (SELECT vec_a AS v FROM dup UNION SELECT vec_b FROM dup),
-    sym AS (SELECT vec_a AS a, vec_b AS b FROM dup
-            UNION SELECT vec_b, vec_a FROM dup),
-    reach(a, b) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-    labels AS (SELECT a AS vec_id, MIN(b) AS cluster_id FROM reach GROUP BY a),
-    mflat AS (
-      SELECT l.cluster_id, f.vec_id, f.i, f.x
-      FROM flat f JOIN labels l ON f.vec_id = l.vec_id),
-    cent AS (SELECT cluster_id, i, AVG(x) AS c FROM mflat GROUP BY 1, 2),
-    cn AS (SELECT cluster_id, SUM(c * c) AS n2 FROM cent GROUP BY 1),
-    dc AS (
-      SELECT m.cluster_id, m.vec_id, SUM(m.x * ct.c) AS dot
-      FROM mflat m JOIN cent ct ON ct.cluster_id = m.cluster_id AND ct.i = m.i
-      GROUP BY 1, 2),
-    cosm AS (
-      SELECT dc.cluster_id, dc.vec_id,
-             dc.dot / (sqrt(nm.n2) * sqrt(cn.n2)) AS cosv
-      FROM dc
-      JOIN norms nm ON nm.vec_id = dc.vec_id
-      JOIN cn ON cn.cluster_id = dc.cluster_id),
-    sz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-           FROM labels GROUP BY 1),
-    rk AS (
-      SELECT cluster_id, vec_id, cosv,
-             ROW_NUMBER() OVER (PARTITION BY cluster_id
-                                ORDER BY ROUND(cosv, 6), vec_id) AS rn
-      FROM cosm)
-    SELECT r.cluster_id, r.vec_id AS keep_vec, s.cluster_size,
-           CAST(s.cluster_size - 1 AS BIGINT) AS n_pruned,
-           ROUND(r.cosv, 4) AS keep_cos
-    FROM rk r JOIN sz s ON r.cluster_id = s.cluster_id
-    WHERE r.rn = 1
-    """,
-)
-def dedup_semantic_prune(spark, sf_dir):
-    """SemDeDup-style semantic pruning (public method: Abbas et al. 2023,
-    arXiv:2303.09540): embedding near-dup pairs -> connected components ->
-    per semantic cluster KEEP the member with the LOWEST cosine to the
-    cluster centroid (the paper's keep rule — retaining the least
-    prototypical member preserves diversity), prune the rest, with drop
-    accounting per cluster.
-
-    Scale shape: candidate pairs are sign-LSH bucketed (never all-pairs)
-    with the plane count read from SPARK_GRAFT_EMB_PLANES at import
-    (functions/similarity.N_PLANES — shared by this query's Spark path
-    AND its oracle bucket CTE, so the registered form scales by raising
-    the knob instead of diverging from the oracle; the 4-plane default
-    at a 200k-vector fixture is the documented brute-pair cliff,
-    docs/SCALE.md r6b);
-    clusters come from the real pointer-jumping CC of link/cc.py; the
-    centroid is ONE groupBy with dim fixed-width avg aggregates (vectors
-    never explode — dim columns, not dim x members rows); the member x
-    centroid join keys on cluster_id (the centroid dim is O(#clusters),
-    AQE broadcasts it when small); the keep rule is a per-cluster window,
-    no global sort.  Oracle: recursive-CTE closure + per-dimension
-    unnest centroid, both engines ranking on ROUND(cos, 6)."""
-    from .functions.similarity import cosine_fold, near_dup_pairs
-    from .link.cc import connected_components
-
-    e = _emb(spark, sf_dir)
-    pairs = (
-        near_dup_pairs(e, threshold=0.35)
-        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        pairs.select(F.col("src").alias("vec_id"))
-        .unionByName(pairs.select(F.col("dst").alias("vec_id")))
-        .distinct()
-    )
-    labels = connected_components(verts, pairs, vertex_col="vec_id")
-    # Scalar schema probe (embedding width), same class of driver read as
-    # the k-means centroid seeds — not a data collect.
-    dim = len(e.select("embedding").head()["embedding"])
-    members = (
-        labels.select("vec_id", F.col("canonical_id").alias("cluster_id"))
-        .join(
-            e.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ),
-            "vec_id",
-        )
-        # two consumers (centroid pass, scoring pass) — cluster-member
-        # sized, so materializing beats re-running the CC-output join
-        .localCheckpoint(eager=True)
-    )
-    cent = members.groupBy("cluster_id").agg(
-        F.count("*").alias("cluster_size"),
-        F.array(
-            *[F.avg(F.element_at(F.col("v"), i + 1)) for i in range(dim)]
-        ).alias("c"),
-    )
-    m = members.join(cent, "cluster_id")
-    cosv = cosine_fold(F.col("v"), F.col("c"))
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.round(cosv, 6).asc(), F.col("vec_id").asc()
-    )
-    return (
-        m.withColumn("cosv", cosv)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster_id",
-            F.col("vec_id").alias("keep_vec"),
-            "cluster_size",
-            (F.col("cluster_size") - 1).cast("bigint").alias("n_pruned"),
-            F.round("cosv", 4).alias("keep_cos"),
-        )
-    )
-
-
-# ---------- text analysis over documents ----------
-
-@register(
-    "text_stats",
-    """
-    SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars_obs,
-           ROUND(len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-                 / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio
-    FROM documents
-    """,
-)
-def text_stats(spark, sf_dir):
-    """Quality scoring: token count, char count, stopword ratio (the
-    training-data quality gate)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    stops = F.filter(toks, lambda t: t.isin("a", "the"))
-    return d.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.length("text").cast("bigint").alias("n_chars_obs"),
-        F.round(F.size(stops) / F.size(toks).cast("double"), 4).alias("stop_ratio"),
-    )
-
-
-@register(
-    "lang_id_confusion",
-    """
-    SELECT lang,
-           CASE WHEN len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-                     / CAST(len(string_split(text, ' ')) AS DOUBLE) > 0.05
-                THEN 'en' ELSE 'other' END AS pred_lang,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM documents GROUP BY 1, 2
-    """,
-)
-def lang_id_confusion(spark, sf_dir):
-    """Heuristic language ID (stopword-ratio threshold) + confusion counts
-    vs the labeled lang column."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    ratio = F.size(F.filter(toks, lambda t: t.isin("a", "the"))) / F.size(toks).cast(
-        "double"
-    )
-    pred = F.when(ratio > 0.05, "en").otherwise("other").alias("pred_lang")
-    return d.groupBy("lang", pred).agg(F.count("*").alias("n"))
-
-
-@register(
-    "doc_fingerprint",
-    f"""
-    WITH {SQL_TOK}
-    SELECT doc_id,
-           CAST(SUM((pos + 1) * ({sql_charfold("tok")} % 1000003)) % {MOD} AS BIGINT)
-             AS fingerprint
-    FROM tok GROUP BY doc_id
-    """,
-)
-def doc_fingerprint(spark, sf_dir):
-    """Order-sensitive document fingerprint (positional rolling hash —
-    integer arithmetic, exact in both engines)."""
-    t = _doc_tokens(spark, sf_dir)
-    return t.groupBy("doc_id").agg(
-        (
-            F.sum((F.col("pos") + 1) * (charfold(F.col("tok")) % F.lit(1000003)))
-            % F.lit(MOD)
-        )
-        .cast("bigint")
-        .alias("fingerprint")
-    )
-
-
-@register(
-    "token_counts",
-    f"WITH {SQL_TOK} SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok GROUP BY tok",
-)
-def token_counts(spark, sf_dir):
-    """Global token frequency (the wordcount primitive under BPE-ish
-    vocabulary building)."""
-    return _doc_tokens(spark, sf_dir).groupBy("tok").agg(F.count("*").alias("cnt"))
-
-
-# Count-min width: sized BELOW the corpus vocabulary on purpose so the
-# sketch actually collides and the reported rel_err measures the real
-# overestimate (production sizing is W ~ e/epsilon >> vocab of hot keys;
-# at W >= vocab the measurement is degenerate 0.0 everywhere).  Single
-# source: functions/sketches (the SQL template below must hash exactly
-# like the Spark cells).
-from .functions.sketches import CMS_JAB as _CMS_JAB  # noqa: E402
-from .functions.sketches import CMS_W as _CMS_W  # noqa: E402
-
-
-@register(
-    "token_cms_topk",
-    f"""
-    WITH {SQL_TOK},
-    js(j, a, b) AS (SELECT * FROM (VALUES
-      {', '.join(f'({j}, {a}, {b})' for j, a, b in _CMS_JAB)})),
-    th AS (SELECT tok, {sql_charfold('tok')} AS h FROM tok),
-    cells AS (
-      SELECT j.j, (j.a * t.h + j.b) % {MOD} % {_CMS_W} AS bucket,
-             CAST(COUNT(*) AS BIGINT) AS cell_n
-      FROM th t, js j GROUP BY 1, 2),
-    exact AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_n
-              FROM tok GROUP BY tok),
-    top AS (SELECT tok, exact_n FROM exact ORDER BY exact_n DESC, tok LIMIT 20),
-    probes AS (
-      SELECT tp.tok, tp.exact_n, j.j,
-             (j.a * {sql_charfold('tp.tok')} + j.b) % {MOD} % {_CMS_W} AS bucket
-      FROM top tp, js j),
-    est AS (
-      SELECT p.tok, p.exact_n, MIN(c.cell_n) AS cms_est
-      FROM probes p JOIN cells c ON c.j = p.j AND c.bucket = p.bucket
-      GROUP BY 1, 2)
-    SELECT tok, exact_n, cms_est, cms_est >= exact_n AS over_ok,
-           ROUND(CAST(cms_est - exact_n AS DOUBLE) / exact_n, 4) AS rel_err
-    FROM est
-    """,
-)
-def token_cms_topk(spark, sf_dir):
-    """COUNT-MIN SKETCH heavy hitters (Cormode & Muthukrishnan 2005) as
-    pure relational algebra: the d x W sketch is ONE groupBy over the
-    token stream keyed by (row, bucket) — map-side combine reduces each
-    partition to <= d*W cells before the shuffle, which IS the mergeable-
-    sketch property, and the shared charfold hash makes DuckDB replay
-    the sketch bit-identically, so estimates are oracle-checked exactly,
-    not bounded.  Report: top-20 exact heavy hitters with their CMS
-    estimate, the one-sided guarantee est >= exact pinned as a boolean
-    column, and the realized relative error (the HLL-twin measurement
-    pattern).  The cells dim is <= d*W rows BY CONSTRUCTION
-    (independent of corpus size) — the one broadcast here that needs no
-    size gate.  Sketch mechanics: functions/sketches (cells are
-    EXACTLY mergeable across batches — cms_merge of per-epoch sketches
-    equals the one-shot sketch, pinned by tests/test_sketches.py)."""
-    from .functions.sketches import cms_cells, cms_estimate
-
-    toks = _doc_tokens(spark, sf_dir).select("tok")
-    cells = cms_cells(toks)
-    exact = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    top = exact.orderBy(F.desc("exact_n"), "tok").limit(20)
-    return (
-        cms_estimate(cells, top)
-        .select(
-            "tok",
-            "exact_n",
-            "cms_est",
-            (F.col("cms_est") >= F.col("exact_n")).alias("over_ok"),
-            F.round(
-                (F.col("cms_est") - F.col("exact_n")).cast("double")
-                / F.col("exact_n"),
-                4,
-            ).alias("rel_err"),
-        )
-    )
-
-
-@register(
-    "multimodal_bytes",
-    """
-    SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           substr(sha256(text), 1, 16) AS payload_sha_prefix
-    FROM documents
-    """,
-)
-def multimodal_bytes(spark, sf_dir):
-    """Opaque-binary-column plumbing: byte length + payload hash of an
-    encoded blob (the schema/partition layer under image/audio columns)."""
-    d = _t(spark, sf_dir, "documents")
-    bin_col = F.encode("text", "UTF-8")
-    return d.select(
-        "doc_id",
-        F.octet_length(bin_col).cast("bigint").alias("n_bytes"),
-        F.substring(F.sha2("text", 256), 1, 16).alias("payload_sha_prefix"),
     )
 
 
@@ -3678,57 +627,6 @@ def kg_cc_components(spark, sf_dir):
     labels = connected_components(verts, edges, vertex_col="entity_id")
     return labels.groupBy("canonical_id").agg(
         F.count("*").alias("component_size")
-    )
-
-
-@register(
-    "multimodal_features",
-    """
-    WITH h AS (SELECT doc_id,
-                      CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                      sha256(text) AS payload_sha
-               FROM documents)
-    SELECT doc_id, n_bytes, payload_sha,
-           CAST(16 + ((strpos('0123456789abcdef', substr(payload_sha, 1, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 2, 1)) - 1) % 64 AS INT) AS width,
-           CAST(16 + ((strpos('0123456789abcdef', substr(payload_sha, 3, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 4, 1)) - 1) % 64 AS INT) AS height,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 5, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 6, 1)) - 1) AS INT) AS f0,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 7, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 8, 1)) - 1) AS INT) AS f1,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 9, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 10, 1)) - 1) AS INT) AS f2,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 11, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 12, 1)) - 1) AS INT) AS f3,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 13, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 14, 1)) - 1) AS INT) AS f4,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 15, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 16, 1)) - 1) AS INT) AS f5,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 17, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 18, 1)) - 1) AS INT) AS f6,
-           CAST(((strpos('0123456789abcdef', substr(payload_sha, 19, 1)) - 1) * 16 + strpos('0123456789abcdef', substr(payload_sha, 20, 1)) - 1) AS INT) AS f7
-    FROM h
-    """,
-)
-def multimodal_features(spark, sf_dir):
-    """Multimodal feature-extraction plumbing over an opaque binary column:
-    deterministic fake 'decoder' (real decode is stubbed — no image libs in
-    this container, kgforge/functions/multimodal.py) through a REAL
-    mapInPandas with Arrow-batched binary payloads.
-
-    The query surface projects the float32 feature vector back to the
-    exact sha-derived bytes (f0..f7 ints) so the DuckDB oracle — which
-    mirrors fake_decode_meta via hex-nibble arithmetic on sha256(text) —
-    can hash-compare values (array columns can't be lexsorted by the
-    driver's canonicalizer)."""
-    from .functions.multimodal import FEATURE_DIM, extract_features
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    feats = extract_features(d)
-    # feature[i] = (b/255)*2-1 stored float32; (f+1)/2*255 recovers b
-    # exactly (float32 ulp << 0.5 after the affine inverse).
-    byte_cols = [
-        F.round((F.element_at("feature", i + 1) + F.lit(1.0)) / 2.0 * 255.0)
-        .cast("int")
-        .alias(f"f{i}")
-        for i in range(FEATURE_DIM)
-    ]
-    return feats.select(
-        "doc_id", "n_bytes", "payload_sha", "width", "height", *byte_cols
     )
 
 
@@ -3889,8 +787,8 @@ def kg_ctx_cross(spark, sf_dir):
     ).distinct()
 
 
-# ---------- pred-overlay loader (S2), predict JSON sink (S9), CV folds
-# (S5), per-label F1 (A2/A4) ----------
+# ---------- pred-overlay loader (S2), predict JSON sink (S9), per-label
+# F1 (A2/A4) ----------
 
 @register(
     "kg_pred_overlay",
@@ -3943,32 +841,6 @@ def kg_predict_json(spark, sf_dir):
 
     t = _kg_triples_df(spark, sf_dir).select("doc_id", "subj", "pred", "obj")
     return assemble_predict_json(t, key_cols=["doc_id"])
-
-
-@register(
-    "q_cv_folds",
-    """
-    SELECT CAST(f AS BIGINT) AS fold,
-           CAST(SUM(CASE WHEN doc_id % 5 = f THEN 1 ELSE 0 END) AS BIGINT) AS n_dev,
-           CAST(SUM(CASE WHEN doc_id % 5 <> f THEN 1 ELSE 0 END) AS BIGINT) AS n_train
-    FROM documents, (SELECT unnest(generate_series(0, 4)) AS f)
-    GROUP BY f
-    """,
-)
-def q_cv_folds(spark, sf_dir):
-    """K-fold CV split demo (S5; reference datasets/ace2004/ace2004.yaml +
-    data_module.py:48-51): fold = doc_id % k as the partition column; each
-    fold's dev set is its residue class, train is the complement.  At
-    scale the fold column rides the existing partitioning — no shuffle to
-    materialize a fold."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    folds = spark.range(5).select(F.col("id").cast("bigint").alias("fold"))
-    j = d.crossJoin(folds)
-    is_dev = F.pmod("doc_id", F.lit(5)) == F.col("fold")
-    return j.groupBy("fold").agg(
-        F.sum(F.when(is_dev, 1).otherwise(0)).cast("bigint").alias("n_dev"),
-        F.sum(F.when(~is_dev, 1).otherwise(0)).cast("bigint").alias("n_train"),
-    )
 
 
 @register(
@@ -4041,1318 +913,6 @@ def kg_label_prf(spark, sf_dir):
     )
 
 
-@register(
-    "dedup_resolve_clusters",
-    _sql_minhash().replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , hot1 AS (SELECT s0, s1 FROM sig GROUP BY s0, s1 HAVING COUNT(*) > 64),
-    hot2 AS (SELECT s2, s3 FROM sig GROUP BY s2, s3 HAVING COUNT(*) > 64),
-    k1 AS (SELECT s.* FROM sig s ANTI JOIN hot1 h ON s.s0 = h.s0 AND s.s1 = h.s1),
-    k2 AS (SELECT s.* FROM sig s ANTI JOIN hot2 h ON s.s2 = h.s2 AND s.s3 = h.s3),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM k1 a JOIN k1 b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id
-      FROM k2 a JOIN k2 b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM shingle GROUP BY doc_id),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN shingle sa ON sa.doc_id = c.doc_a
-      JOIN shingle sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-      GROUP BY 1, 2
-    ),
-    dup AS (
-      SELECT c.doc_a, c.doc_b FROM cand c
-      JOIN shared s ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b
-      JOIN counts na ON c.doc_a = na.doc_id
-      JOIN counts nb ON c.doc_b = nb.doc_id
-      WHERE s.shared / (na.n + nb.n - s.shared + 1e-12) >= 0.5
-    ),
-    verts AS (SELECT doc_a AS v FROM dup UNION SELECT doc_b FROM dup),
-    sym AS (SELECT doc_a AS a, doc_b AS b FROM dup
-            UNION SELECT doc_b, doc_a FROM dup),
-    reach(a, b) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ),
-    labels AS (SELECT a AS doc_id, MIN(b) AS keep_doc FROM reach GROUP BY a)
-    SELECT keep_doc, CAST(COUNT(*) AS BIGINT) AS cluster_size,
-           CAST(COUNT(*) - 1 AS BIGINT) AS n_dropped
-    FROM labels GROUP BY keep_doc
-    """,
-)
-def dedup_resolve_clusters(spark, sf_dir):
-    """Dedup RESOLUTION — the end-step every near-dup pipeline needs:
-    verified near-dup pairs -> connected components (the REAL
-    pointer-jumping CC of link/cc.py) -> one retained representative per
-    cluster (min doc_id) + drop accounting.  Oracle: recursive-CTE
-    transitive closure."""
-    from .link.cc import connected_components
-
-    pairs = dedup_minhash_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    pairs = pairs.localCheckpoint(eager=True)
-    verts = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    labels = connected_components(verts, pairs, vertex_col="doc_id")
-    return labels.groupBy(F.col("canonical_id").alias("keep_doc")).agg(
-        F.count("*").alias("cluster_size"),
-        (F.count("*") - 1).cast("bigint").alias("n_dropped"),
-    )
-
-
-@register(
-    "dedup_fuse_modalities",
-    _sql_minhash().replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , hot1 AS (SELECT s0, s1 FROM sig GROUP BY s0, s1 HAVING COUNT(*) > 64),
-    hot2 AS (SELECT s2, s3 FROM sig GROUP BY s2, s3 HAVING COUNT(*) > 64),
-    k1 AS (SELECT s.* FROM sig s ANTI JOIN hot1 h ON s.s0 = h.s0 AND s.s1 = h.s1),
-    k2 AS (SELECT s.* FROM sig s ANTI JOIN hot2 h ON s.s2 = h.s2 AND s.s3 = h.s3),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM k1 a JOIN k1 b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id
-      FROM k2 a JOIN k2 b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM shingle GROUP BY doc_id),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN shingle sa ON sa.doc_id = c.doc_a
-      JOIN shingle sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-      GROUP BY 1, 2
-    ),
-    mdup AS (
-      SELECT c.doc_a, c.doc_b FROM cand c
-      JOIN shared s ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b
-      JOIN counts na ON c.doc_a = na.doc_id
-      JOIN counts nb ON c.doc_b = nb.doc_id
-      WHERE s.shared / (na.n + nb.n - s.shared + 1e-12) >= 0.5
-    ),
-    bits AS (
-      SELECT doc_id, b.bit,
-             SUM(CASE WHEN (h // (1 << b.bit)) % 2 = 1 THEN 1 ELSE -1 END) AS bal
-      FROM hashed, (SELECT unnest(generate_series(0, 30)) AS bit) b
-      GROUP BY doc_id, b.bit),
-    ssig AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN bal > 0 THEN (1 << bit) ELSE 0 END) AS BIGINT) AS s
-      FROM bits GROUP BY doc_id),
-    chunks AS (
-      SELECT doc_id, s, k.k AS k,
-             CAST((s // (1 << (16 * k.k))) % 65536 AS BIGINT) AS val
-      FROM ssig, (SELECT unnest(generate_series(0, 1)) AS k) k),
-    scand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, a.s AS sa, b.doc_id AS doc_b, b.s AS sb
-      FROM chunks a JOIN chunks b
-        ON a.k = b.k AND a.val = b.val AND a.doc_id < b.doc_id),
-    spairs AS (SELECT doc_a, doc_b FROM scand WHERE bit_count(xor(sa, sb)) <= 1),
-    fedges AS (SELECT doc_a, doc_b, 'minhash' AS modality FROM mdup
-               UNION ALL SELECT doc_a, doc_b, 'simhash' FROM spairs),
-    e2 AS (SELECT DISTINCT doc_a, doc_b FROM fedges),
-    verts AS (SELECT doc_a AS v FROM e2 UNION SELECT doc_b FROM e2),
-    sym AS (SELECT doc_a AS a, doc_b AS b FROM e2 UNION SELECT doc_b, doc_a FROM e2),
-    reach(a, b) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ),
-    labels AS (SELECT a AS doc_id, MIN(b) AS keep_doc FROM reach GROUP BY a),
-    clus AS (SELECT keep_doc, CAST(COUNT(*) AS BIGINT) AS cluster_size
-             FROM labels GROUP BY keep_doc),
-    emod AS (SELECT DISTINCT l.keep_doc, e.modality
-             FROM fedges e JOIN labels l ON e.doc_a = l.doc_id),
-    mods AS (SELECT keep_doc, string_agg(modality, ',' ORDER BY modality) AS modalities
-             FROM emod GROUP BY keep_doc)
-    SELECT c.keep_doc, c.cluster_size,
-           CAST(c.cluster_size - 1 AS BIGINT) AS n_dropped, m.modalities
-    FROM clus c JOIN mods m ON c.keep_doc = m.keep_doc
-    """,
-)
-def dedup_fuse_modalities(spark, sf_dir):
-    """CROSS-MODALITY dedup fusion — what a production curation pipeline
-    actually runs: verified near-dup pairs from MULTIPLE detectors
-    (MinHash-LSH Jaccard >= 0.5 and SimHash hamming <= 3 here) union into
-    one evidence graph, connected components resolve it to one retained
-    representative per cluster, and each cluster records WHICH modalities
-    contributed (the audit trail for threshold tuning: a cluster found
-    only by simhash is the kind a jaccard-only pipeline silently misses).
-    The simhash leg is WIDENED to 31 bits (charfold's full range) and
-    tightened to hamming <= 1: noise pairs scale with corpus^2 x the
-    per-pair collision rate, so the 16-bit/<=3 standalone setting (~1%
-    random-pair rate, fine for eyeballing pairs) floods graph fusion —
-    measured: one giant cluster at sf0.01, and at sf0.1 even 16-bit/<=1
-    admits ~3.2k noise pairs whose chains made CC grind for minutes.
-    At 31 bits, hamming <= 1 randoms are ~1.5e-8/pair (~0 at sf0.1);
-    candidates come from a 2-chunk pigeonhole (any <=1-distance pair
-    agrees on one 16-bit half).  Production 64-bit simhash keeps <= 3 —
-    same plan, wider hash.
-    Distributed shape: each modality's pair generation stays bucketed as
-    before (nothing all-pairs), the union is edge-count-sized, CC is the
-    real pointer-jumping loop (link/cc.py), and modality attribution is
-    one groupBy over edges joined to labels.  Oracle: both modalities'
-    SQL rebuilt over the SHARED shingle/charfold base + recursive-CTE
-    transitive closure + string_agg attribution."""
-    from .link.cc import connected_components
-
-    # ONE corpus tokenize/shingle pass feeds both modalities (r8: the
-    # shared table is the un-exploded array form — both legs fold it
-    # row-locally, so neither pays an explode + groupBy shuffle)
-    sharr = _sharr_df(spark, sf_dir).localCheckpoint(eager=True)
-    pm = dedup_minhash_pairs(spark, sf_dir, _sh=sharr).select(
-        "doc_a", "doc_b", F.lit("minhash").alias("modality")
-    )
-    # 31-bit simhash leg (see docstring): majority vote over all of
-    # charfold's bits, 2-chunk pigeonhole candidates, hamming <= 1 verify
-    sig31 = simhash_from_hashed(hashed_arrays(sharr), 31)
-    ks2 = spark.range(2).select(F.col("id").cast("int").alias("k"))
-    chunks = sig31.crossJoin(F.broadcast(ks2)).select(
-        "doc_id", "s", "k",
-        F.expr("CAST(shiftright(s, 16 * k) & 65535 AS BIGINT)").alias("val"),
-    )
-    ca = chunks.select(
-        F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"), "k", "val"
-    )
-    cb = chunks.select(
-        F.col("doc_id").alias("doc_b"), F.col("s").alias("sb"), "k", "val"
-    )
-    scand = (
-        ca.join(cb, on=["k", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "sa", "doc_b", "sb")
-        .distinct()
-    )
-    ps = (
-        scand.filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 1)
-        .select("doc_a", "doc_b", F.lit("simhash").alias("modality"))
-    )
-    edges = pm.unionByName(ps).localCheckpoint(eager=True)
-    pairs = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).distinct()
-    verts = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    labels = connected_components(verts, pairs, vertex_col="doc_id")
-    labels = labels.localCheckpoint(eager=True)  # feeds clus + attribution
-    clus = labels.groupBy(F.col("canonical_id")).agg(
-        F.count("*").alias("cluster_size")
-    )
-    mods = (
-        edges.join(labels.withColumnRenamed("doc_id", "doc_a"), on="doc_a")
-        .groupBy("canonical_id")
-        .agg(
-            F.array_join(F.sort_array(F.collect_set("modality")), ",").alias(
-                "modalities"
-            )
-        )
-    )
-    return clus.join(mods, on="canonical_id").select(
-        F.col("canonical_id").alias("keep_doc"),
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-        (F.col("cluster_size") - 1).cast("bigint").alias("n_dropped"),
-        "modalities",
-    )
-
-
-# ---------- IVF ANN, quality filter, BPE-ish tokenizer (round 2) ----------
-
-@register(
-    "ann_ivf_topk",
-    """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND 8),
-    scored AS (
-      SELECT e.vec_id, e.v, c.cid,
-             ROUND(list_cosine_similarity(e.v, c.cv), 6) AS cc
-      FROM e, cents c),
-    assigned AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
-    probe AS (SELECT cid FROM scored WHERE vec_id = 0 ORDER BY cc DESC, cid LIMIT 2),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    cand AS (
-      SELECT a.vec_id, a.cid, list_cosine_similarity(a.v, q.qv) AS c
-      FROM assigned a JOIN probe p ON a.cid = p.cid, q
-      WHERE a.vec_id <> 0)
-    SELECT vec_id, CAST(cid AS BIGINT) AS cid, ROUND(c, 4) AS cos_sim,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY ROUND(c, 6) DESC, vec_id) AS rnk
-          FROM cand)
-    WHERE rnk <= 10
-    """,
-)
-def ann_ivf_topk(spark, sf_dir):
-    """IVF-style ANN (functions/similarity.ivf_topk): coarse-quantize to
-    the nearest of 8 deterministic centroids, probe the query's 2 nearest
-    inverted lists, exact-rank within them.  The scale path between
-    brute-force (ann_cosine_topk) and pure LSH bucketing (ann_lsh_bucket):
-    assignment is a broadcast crossJoin + max_by, probing scans
-    ~n_probe/n_centroids of the vectors."""
-    from .functions.similarity import ivf_topk
-
-    return ivf_topk(
-        _t(spark, sf_dir, "embeddings"),
-        query_vec_id=0, k=10, n_centroids=8, n_probe=2,
-    )
-
-
-def _sql_kmeans_round(src_assign: str, src_cents: str, out_assign: str, out_cents: str) -> str:
-    """One unrolled Lloyd round: assign (nearest centroid by round(cos,6),
-    tie lowest cid) + per-dimension mean recompute."""
-    return f"""
-    {out_assign} AS (SELECT vec_id, v, cid FROM (
-      SELECT e.vec_id, e.v, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-      FROM {src_assign} e, {src_cents} c) WHERE rn = 1),
-    {out_cents} AS (SELECT cid, list(m ORDER BY i) AS cv FROM (
-      SELECT cid, i, AVG(x) AS m FROM (
-        SELECT cid, UNNEST(v) AS x, generate_subscripts(v, 1) AS i
-        FROM {out_assign})
-      GROUP BY cid, i) GROUP BY cid)"""
-
-
-_SQL_IVF_RECALL = f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    init AS (SELECT cid, cv FROM (
-      SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid,
-             v AS cv
-      FROM e) WHERE cid < 8),
-    {_sql_kmeans_round('e', 'init', 'a1', 'c1')},
-    {_sql_kmeans_round('e', 'c1', 'a2', 'c2')},
-    assigned AS (SELECT vec_id, v, cid FROM (
-      SELECT e.vec_id, e.v, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-      FROM e, c2 c) WHERE rn = 1),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probe AS (SELECT c.cid FROM c2 c, q
-              ORDER BY ROUND(list_cosine_similarity(q.qv, c.cv), 6) DESC, c.cid LIMIT 2),
-    ivf AS (SELECT vec_id FROM (
-      SELECT a.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(a.v, q.qv), 6) DESC,
-                                a.vec_id) AS rnk
-      FROM assigned a JOIN probe p ON a.cid = p.cid, q WHERE a.vec_id <> 0)
-      WHERE rnk <= 10),
-    exact AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                e.vec_id) AS rnk
-      FROM e, q WHERE e.vec_id <> 0) WHERE rnk <= 10)
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT COUNT(*) FROM exact JOIN ivf USING (vec_id)) AS BIGINT) AS n_hits,
-           ROUND((SELECT COUNT(*) FROM exact JOIN ivf USING (vec_id)) / 10.0, 4)
-             AS recall_at_10
-"""
-
-
-@register("ann_ivf_recall_uniform", _SQL_IVF_RECALL)
-def ann_ivf_recall_uniform(spark, sf_dir):
-    """Recall@10 of IVF ANN vs the exact cosine scan on the RAW testdata
-    embeddings — near-uniform vectors, so this is the honest worst case
-    (~0.3@10 at sf0.01: the exact top-10 spans most clusters, a structure
-    no coarse quantizer can exploit).  The operator itself is proved on
-    clusterable data by ann_ivf_recall (driver row); this twin keeps the
-    uniform-data number measured and visible rather than hidden.
-    Centroids are seeded deterministic k-means (md5 hash-init + 2 Lloyd
-    rounds, kmeans_centroids); probing 2 of 8 lists scans ~1/4 of the
-    vectors."""
-    from .functions.similarity import cosine_topk, ivf_topk, kmeans_centroids
-
-    e = _t(spark, sf_dir, "embeddings")
-    # checkpointed: centroids feed both the assignment and the probe branch
-    cents = kmeans_centroids(e, n_centroids=8, rounds=2, dim=64).localCheckpoint(
-        eager=True
-    )
-    ivf = ivf_topk(e, query_vec_id=0, k=10, n_probe=2, centroids=cents).select(
-        "vec_id"
-    )
-    exact = cosine_topk(e, query_vec_id=0, k=10).select("vec_id")
-    hits = exact.join(ivf, on="vec_id", how="left_semi")
-    return hits.agg(F.count("*").alias("n")).select(
-        F.lit(10).cast("bigint").alias("k"),
-        F.col("n").cast("bigint").alias("n_hits"),
-        F.round(F.col("n") / 10.0, 4).alias("recall_at_10"),
-    )
-
-
-# --- planted-cluster IVF recall (r3 VERDICT #1) ----------------------------
-# The driver only serves the fixed testdata tables, so the clusterable
-# fixture is DERIVED deterministically from vec_id with engine-identical
-# integer arithmetic: vector i-th coordinate = one-hot(cluster) + noise,
-# cluster = vec_id % 10, noise = ((vec_id*131 + i*89) % 21 - 10) / 50
-# (in [-0.2, 0.2]).  Ten near-orthogonal tight clusters — the structure
-# real embedding corpora have and the uniform testdata lacks.
-
-PLANTED_DIM = 32
-PLANTED_CLUSTERS = 10
-
-
-def planted_embedding_col(dim: int = PLANTED_DIM,
-                          n_clusters: int = PLANTED_CLUSTERS) -> F.Column:
-    """array<double> planted-cluster vector as a pure expression over
-    ``vec_id`` (exactly mirrors the _SQL_PLANTED_E CTE)."""
-    vid = F.col("vec_id")
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: (
-            F.when(i == vid % n_clusters, F.lit(1.0)).otherwise(F.lit(0.0))
-            + ((vid * 131 + i * 89) % 21 - 10) / F.lit(50.0)
-        ),
-    )
-
-
-_SQL_PLANTED_E = f"""
-    WITH e AS (
-      SELECT vec_id,
-             list_transform(generate_series(0, {PLANTED_DIM - 1}),
-               i -> (CASE WHEN i = vec_id % {PLANTED_CLUSTERS} THEN 1.0
-                          ELSE 0.0 END)
-                    + ((vec_id * 131 + i * 89) % 21 - 10) / 50.0) AS v
-      FROM embeddings)"""
-
-_SQL_IVF_RECALL_PLANTED = f"""
-    {_SQL_PLANTED_E},
-    init AS (SELECT cid, cv FROM (
-      SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid,
-             v AS cv
-      FROM e) WHERE cid < {PLANTED_CLUSTERS}),
-    {_sql_kmeans_round('e', 'init', 'a1', 'c1')},
-    {_sql_kmeans_round('e', 'c1', 'a2', 'c2')},
-    assigned AS (SELECT vec_id, v, cid FROM (
-      SELECT e.vec_id, e.v, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-      FROM e, c2 c) WHERE rn = 1),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probe AS (SELECT c.cid FROM c2 c, q
-              ORDER BY ROUND(list_cosine_similarity(q.qv, c.cv), 6) DESC, c.cid LIMIT 2),
-    ivf AS (SELECT vec_id FROM (
-      SELECT a.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(a.v, q.qv), 6) DESC,
-                                a.vec_id) AS rnk
-      FROM assigned a JOIN probe p ON a.cid = p.cid, q WHERE a.vec_id <> 0)
-      WHERE rnk <= 10),
-    exact AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                e.vec_id) AS rnk
-      FROM e, q WHERE e.vec_id <> 0) WHERE rnk <= 10)
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT COUNT(*) FROM exact JOIN ivf USING (vec_id)) AS BIGINT) AS n_hits,
-           ROUND((SELECT COUNT(*) FROM exact JOIN ivf USING (vec_id)) / 10.0, 4)
-             AS recall_at_10
-"""
-
-
-@register("ann_ivf_recall", _SQL_IVF_RECALL_PLANTED)
-def ann_ivf_recall(spark, sf_dir):
-    """Recall@10 of IVF ANN vs the exact cosine scan on a PLANTED-cluster
-    fixture (10 tight near-orthogonal clusters derived deterministically
-    from vec_id — see planted_embedding_col).  Proves the operator: with
-    cluster structure present, seeded k-means (10 centroids, 2 Lloyd
-    rounds) + 2-probe IVF recovers the exact top-10 (recall pinned >= 0.8
-    by tests/test_similarity.py; the full n_centroids x n_probe sweep on
-    both planted and uniform data is docs/IVF_SWEEP.md).  The raw
-    near-uniform testdata twin stays measured as ann_ivf_recall_uniform
-    (EXTRA)."""
-    from .functions.similarity import cosine_topk, ivf_topk, kmeans_centroids
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", planted_embedding_col().alias("embedding")
-    )
-    cents = kmeans_centroids(
-        e, n_centroids=PLANTED_CLUSTERS, rounds=2, dim=PLANTED_DIM
-    ).localCheckpoint(eager=True)
-    ivf = ivf_topk(e, query_vec_id=0, k=10, n_probe=2, centroids=cents).select(
-        "vec_id"
-    )
-    exact = cosine_topk(e, query_vec_id=0, k=10).select("vec_id")
-    hits = exact.join(ivf, on="vec_id", how="left_semi")
-    return hits.agg(F.count("*").alias("n")).select(
-        F.lit(10).cast("bigint").alias("k"),
-        F.col("n").cast("bigint").alias("n_hits"),
-        F.round(F.col("n") / 10.0, 4).alias("recall_at_10"),
-    )
-
-
-_SQL_PQ_RECALL = f"""
-    {_SQL_PLANTED_E},
-    ss AS (SELECT unnest(generate_series(0, 3)) AS s),
-    sub AS (SELECT vec_id, ss.s AS s, list_slice(v, ss.s * 8 + 1, ss.s * 8 + 8) AS sv
-            FROM e, ss),
-    seed AS (SELECT vec_id,
-                    ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid
-             FROM e),
-    cb0 AS (SELECT sub.s, sd.cid, sub.sv AS cv
-            FROM seed sd JOIN sub ON sub.vec_id = sd.vec_id WHERE sd.cid < 16),
-    a1 AS (SELECT vec_id, s, cid, sv FROM (
-      SELECT sub.vec_id, sub.s, c.cid, sub.sv,
-             ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-               ORDER BY ROUND(pow(list_distance(sub.sv, c.cv), 2), 6), c.cid) AS rn
-      FROM sub JOIN cb0 c ON sub.s = c.s) WHERE rn = 1),
-    cb1 AS (SELECT s, cid, list(m ORDER BY i) AS cv FROM (
-      SELECT s, cid, i, AVG(x) AS m FROM (
-        SELECT s, cid, UNNEST(sv) AS x, generate_subscripts(sv, 1) AS i FROM a1)
-      GROUP BY s, cid, i) GROUP BY s, cid),
-    codes AS (SELECT vec_id, s, cid FROM (
-      SELECT sub.vec_id, sub.s, c.cid,
-             ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-               ORDER BY ROUND(pow(list_distance(sub.sv, c.cv), 2), 6), c.cid) AS rn
-      FROM sub JOIN cb1 c ON sub.s = c.s) WHERE rn = 1),
-    q AS (SELECT s, sv FROM sub WHERE vec_id = 0),
-    qd AS (SELECT c.s, c.cid, pow(list_distance(q.sv, c.cv), 2) AS d2
-           FROM cb1 c JOIN q ON q.s = c.s),
-    sc AS (SELECT codes.vec_id, SUM(qd.d2) AS sc
-           FROM codes JOIN qd ON codes.s = qd.s AND codes.cid = qd.cid
-           WHERE codes.vec_id <> 0 GROUP BY 1),
-    short AS (SELECT vec_id FROM (
-      SELECT vec_id, ROW_NUMBER() OVER (ORDER BY ROUND(sc, 6), vec_id) AS rnk
-      FROM sc) WHERE rnk <= 50),
-    qq AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    rerank AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(pow(list_distance(e.v, qq.qv), 2), 6),
-                                e.vec_id) AS rnk
-      FROM e JOIN short USING (vec_id), qq) WHERE rnk <= 10),
-    exact AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(pow(list_distance(e.v, qq.qv), 2), 6),
-                                e.vec_id) AS rnk
-      FROM e, qq WHERE e.vec_id <> 0) WHERE rnk <= 10)
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT COUNT(*) FROM exact JOIN rerank USING (vec_id)) AS BIGINT)
-             AS n_hits,
-           ROUND((SELECT COUNT(*) FROM exact JOIN rerank USING (vec_id)) / 10.0, 4)
-             AS recall_at_10
-"""
-
-
-@register("ann_pq_recall", _SQL_PQ_RECALL)
-def ann_pq_recall(spark, sf_dir):
-    """Recall@10 of PRODUCT-QUANTIZATION retrieval with exact re-rank vs
-    the exact L2 scan, on the planted-cluster fixture — the memory half
-    of IVF-PQ at 100 TB: vectors stored as m=4 one-byte codes (vs
-    dim x 8 float bytes), candidates scored by the ADC lookup table
-    WITHOUT touching their float vectors, then only the 50-row shortlist
-    pays exact distances (the refine step every production PQ deploys —
-    raw ADC order inside a tight cluster is code-identical, so re-rank
-    is what makes the sketch usable).  Subspace codebooks (ks=16, one
-    seeded L2 Lloyd round) are trained with the subspace axis as DATA,
-    not unrolled plan: one explode to (vec_id, s, sv), broadcast joins
-    against the 64-row codebook, the vector table never shuffles
-    (functions/similarity.pq_codebooks_and_codes)."""
-    from .functions.similarity import l2sq_fold, pq_adc_topk
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", planted_embedding_col().alias("embedding")
-    ).localCheckpoint(eager=True)
-    short = pq_adc_topk(
-        e, query_vec_id=0, k=50, m=4, ks=16, dim=PLANTED_DIM
-    ).select("vec_id")
-    ev = e.select("vec_id", F.col("embedding").alias("v"))
-    qv = ev.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-
-    def exact_topk(cands):
-        # membership only (no rank column escapes): orderBy + limit
-        # compiles to TakeOrderedAndProject — per-partition top-10s
-        # merged on the driver — instead of the row_number window's
-        # Exchange SinglePartition over every candidate (r8); the total
-        # order key makes the selected set identical
-        d = cands.crossJoin(F.broadcast(qv)).select(
-            "vec_id", F.round(l2sq_fold(F.col("v"), F.col("qv")), 6).alias("d2")
-        )
-        return d.orderBy("d2", "vec_id").limit(10).select("vec_id")
-
-    rerank = exact_topk(ev.join(short, on="vec_id"))
-    exact = exact_topk(ev.filter(F.col("vec_id") != 0))
-    hits = exact.join(rerank, on="vec_id", how="left_semi")
-    return hits.agg(F.count("*").alias("n")).select(
-        F.lit(10).cast("bigint").alias("k"),
-        F.col("n").cast("bigint").alias("n_hits"),
-        F.round(F.col("n") / 10.0, 4).alias("recall_at_10"),
-    )
-
-
-_SQL_RP_LSH = f"""
-    {_SQL_PLANTED_E},
-    pl AS (SELECT unnest(generate_series(0, 7)) AS p),
-    dots AS (
-      SELECT e.vec_id, pl.p,
-             list_aggregate(list_transform(generate_series(1, {PLANTED_DIM}),
-               i -> e.v[i] * (CASE WHEN ((pl.p * 131 + (i - 1) * 89) % 23) % 2 = 0
-                                   THEN 1 ELSE -1 END)), 'sum') AS dot
-      FROM e, pl),
-    bk AS (SELECT vec_id,
-                  CAST(SUM(CASE WHEN dot >= 0 THEN (1 << p) ELSE 0 END) AS BIGINT)
-                    AS bucket
-           FROM dots GROUP BY vec_id),
-    qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-    probes AS (SELECT bucket FROM qb
-               UNION SELECT xor(qb.bucket, 1 << pl.p) FROM qb, pl),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    cand AS (SELECT b.vec_id, b.bucket FROM bk b JOIN probes p ON b.bucket = p.bucket
-             WHERE b.vec_id <> 0),
-    ranked AS (SELECT c.vec_id, c.bucket,
-                      ROW_NUMBER() OVER (
-                        ORDER BY ROUND(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                 c.vec_id) AS rnk
-               FROM cand c JOIN e ON c.vec_id = e.vec_id, q),
-    multi AS (SELECT vec_id FROM ranked WHERE rnk <= 10),
-    one AS (SELECT vec_id FROM (
-      SELECT r.vec_id, ROW_NUMBER() OVER (ORDER BY r.rnk) AS rn
-      FROM ranked r JOIN bk ON r.vec_id = bk.vec_id, qb
-      WHERE bk.bucket = qb.bucket) WHERE rn <= 10),
-    exact AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                e.vec_id) AS rnk
-      FROM e, q WHERE e.vec_id <> 0) WHERE rnk <= 10)
-    SELECT CAST(10 AS BIGINT) AS k,
-           ROUND((SELECT COUNT(*) FROM exact JOIN one USING (vec_id)) / 10.0, 4)
-             AS recall_1probe,
-           ROUND((SELECT COUNT(*) FROM exact JOIN multi USING (vec_id)) / 10.0, 4)
-             AS recall_multiprobe,
-           CAST((SELECT COUNT(*) FROM cand) AS BIGINT) AS n_candidates
-"""
-
-
-@register("ann_rp_lsh_recall", _SQL_RP_LSH)
-def ann_rp_lsh_recall(spark, sf_dir):
-    """RANDOM-PROJECTION LSH with multiprobe, recall-measured — the real
-    hyperplane LSH (8 seeded ±1 planes over the full vector, not the
-    first-coordinates surrogate of sign_bucket): bucket = sign bits of
-    the 8 plane dot products; the query probes its own bucket PLUS the 8
-    hamming-1 buckets.  Multiprobe is the production technique precisely
-    because near-boundary vectors flip individual plane signs — the
-    query reports 1-probe vs multiprobe recall side by side (the gap IS
-    the boundary-flip mass) and the candidate count (the scanned
-    fraction: 9 of 256 buckets).  All plane math is engine-identical
-    integer arithmetic; dot products fold in array order on both
-    engines, so even the sign of a near-zero dot agrees bit-for-bit."""
-    from .functions.similarity import cosine_fold
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", planted_embedding_col().alias("v")
-    ).localCheckpoint(eager=True)
-
-    def plane_bit(p: int) -> F.Column:
-        dot = F.aggregate(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(PLANTED_DIM)),
-                lambda i: F.element_at(F.col("v"), i)
-                * F.when(
-                    ((F.lit(p) * 131 + (i - 1) * 89) % 23) % 2 == 0, F.lit(1.0)
-                ).otherwise(F.lit(-1.0)),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-
-    bucket = sum([plane_bit(p) for p in range(1, 8)], plane_bit(0))
-    bk = e.select("vec_id", bucket.cast("bigint").alias("bucket")).localCheckpoint(
-        eager=True
-    )
-    qb = bk.filter(F.col("vec_id") == 0).select(F.col("bucket").alias("qbucket"))
-    probes = qb.select(F.col("qbucket").alias("bucket")).unionByName(
-        qb.crossJoin(
-            e.sparkSession.range(8).select(F.col("id").cast("int").alias("p"))
-        ).select(
-            F.col("qbucket").bitwiseXOR(
-                F.expr("CAST(shiftleft(1, p) AS BIGINT)")
-            ).alias("bucket")
-        )
-    ).distinct()
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cand = (
-        bk.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(probes), on="bucket")
-        .join(e, on="vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id", "bucket",
-            F.round(cosine_fold(F.col("v"), F.col("qv")), 6).alias("c"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    w = Window.orderBy(F.desc("c"), "vec_id")
-    ranked = cand.withColumn("rnk", F.row_number().over(w))
-    multi = ranked.filter(F.col("rnk") <= 10).select("vec_id")
-    one = (
-        ranked.join(F.broadcast(qb), ranked.bucket == F.col("qbucket"))
-        .withColumn("rn", F.row_number().over(Window.orderBy("rnk")))
-        .filter(F.col("rn") <= 10).select("vec_id")
-    )
-    exact = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", F.round(cosine_fold(F.col("v"), F.col("qv")), 6).alias("c"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10).select("vec_id")
-    )
-    n_one = exact.join(one, on="vec_id", how="left_semi").count()
-    n_multi = exact.join(multi, on="vec_id", how="left_semi").count()
-    n_cand = cand.count()
-    return e.sparkSession.createDataFrame(
-        [(10, round(n_one / 10.0, 4), round(n_multi / 10.0, 4), n_cand)],
-        "k bigint, recall_1probe double, recall_multiprobe double, n_candidates bigint",
-    )
-
-
-@register(
-    "sample_weighted_reservoir",
-    f"""
-    WITH w AS (
-      SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS DOUBLE) AS wt,
-             ({sql_charfold("md5(CAST(doc_id AS VARCHAR) || ':wres')")} + 1.0)
-               / ({MOD} + 1.0) AS u
-      FROM documents),
-    keyed AS (SELECT doc_id, wt, ln(u) / wt AS k FROM w WHERE wt > 0)
-    SELECT doc_id, CAST(wt AS BIGINT) AS n_tokens, ROUND(k, 8) AS priority
-    FROM keyed ORDER BY ROUND(k, 6) DESC, doc_id LIMIT 50
-    """,
-)
-def sample_weighted_reservoir(spark, sf_dir):
-    """WEIGHTED sampling without replacement — the A-Res / priority-
-    sampling reservoir (Efraimidis-Spirakis): every document gets key
-    u^(1/w) (computed as ln(u)/w, same argmax order, no overflow) with
-    u a DETERMINISTIC hash-uniform in (0,1); the global top-k by key IS
-    an exact weighted sample without replacement.  This is how a
-    training pipeline takes a quality- or length-weighted corpus
-    subsample distributively: keys are row-local expressions, the top-k
-    compiles to TakeOrderedAndProject (no global sort, no driver state),
-    and the deterministic u makes the SAMPLE ITSELF oracle-checkable
-    and identical across reruns/partitionings — seeded sampling as a
-    first-class, testable operator rather than rand().  Weight here =
-    token count (longer docs proportionally likelier)."""
-    d = _t(spark, sf_dir, "documents")
-    wt = F.size(F.split("text", " ")).cast("double")
-    u = (
-        charfold(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":wres"))))
-        + 1.0
-    ) / F.lit(float(MOD) + 1.0)
-    keyed = d.select(
-        "doc_id", wt.alias("wt"), (F.log(u) / wt).alias("k")
-    ).filter(F.col("wt") > 0)
-    return (
-        keyed.orderBy(F.desc(F.round("k", 6)), "doc_id")
-        .limit(50)
-        .select(
-            "doc_id",
-            F.col("wt").cast("bigint").alias("n_tokens"),
-            F.round("k", 8).alias("priority"),
-        )
-    )
-
-
-_DSIR_B = 64  # hashed-bigram feature buckets
-
-
-@register(
-    "curate_dsir_sample",
-    f"""
-    WITH {SQL_TOK},
-    bg0 AS (SELECT doc_id, tok,
-                   LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-            FROM tok),
-    bg AS (SELECT doc_id,
-                  {sql_charfold("tok || ' ' || nxt")} % {_DSIR_B} AS bucket
-           FROM bg0 WHERE nxt IS NOT NULL),
-    bgl AS (SELECT b.doc_id, b.bucket,
-                   CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS ist
-            FROM bg b JOIN documents d ON d.doc_id = b.doc_id),
-    cnt AS (SELECT bucket, COUNT(*) AS rc, SUM(ist) AS tc
-            FROM bgl GROUP BY 1),
-    tots AS (SELECT COUNT(*) AS tr, SUM(ist) AS tt FROM bgl),
-    sc AS (SELECT cnt.bucket,
-                  ln((cnt.tc + 1.0) / (tots.tt + {_DSIR_B}.0))
-                  - ln((cnt.rc + 1.0) / (tots.tr + {_DSIR_B}.0)) AS s
-           FROM cnt, tots),
-    c AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS c
-          FROM bg GROUP BY 1, 2),
-    lw AS (SELECT c.doc_id, SUM(c.c * sc.s) AS logw
-           FROM c JOIN sc ON sc.bucket = c.bucket GROUP BY 1),
-    keyed AS (
-      SELECT doc_id, logw,
-             logw + -ln(-ln(
-               ({sql_charfold("md5(CAST(doc_id AS VARCHAR) || ':dsir')")} + 1.0)
-               / ({MOD} + 1.0))) AS k
-      FROM lw)
-    SELECT doc_id, ROUND(logw, 4) AS log_w, ROUND(k, 4) AS sel_key
-    FROM keyed ORDER BY ROUND(k, 6) DESC, doc_id LIMIT 25
-    """,
-)
-def curate_dsir_sample(spark, sf_dir):
-    """DSIR — Data Selection via Importance Resampling (public method:
-    Xie et al. 2023, arXiv:2302.03169): select raw-corpus documents that
-    look like a TARGET domain (here lang='en') by importance weight
-    under hashed-bigram feature distributions.  log w(d) = sum over the
-    doc's feature buckets of count * (ln p_target - ln p_raw), both
-    distributions add-1 smoothed over B=64 hashed buckets; selection is
-    Gumbel-top-k (key = log w + Gumbel noise), which samples WITHOUT
-    replacement proportionally to w — with the repo's deterministic
-    hash-uniform standing in for rand() so the sample itself is
-    oracle-checked (the sample_weighted_reservoir pattern).
-
-    Scale shape: bigram features are a per-doc window (LEAD), one
-    partition-local pass; bucket counts are ONE groupBy with map-side
-    combine; the per-bucket score dim is <= B rows BY CONSTRUCTION
-    (broadcast needs no gate); per-doc log-weights are one (doc, bucket)
-    groupBy; top-k compiles to TakeOrderedAndProject — no global sort,
-    no driver state."""
-    d = _t(spark, sf_dir, "documents")
-    toks = _doc_tokens(spark, sf_dir)
-    wname = Window.partitionBy("doc_id").orderBy("pos")
-    bg = (
-        toks.withColumn("nxt", F.lead("tok").over(wname))
-        .filter(F.col("nxt").isNotNull())
-        .select(
-            "doc_id",
-            (charfold(F.concat_ws(" ", "tok", "nxt")) % _DSIR_B).alias("bucket"),
-        )
-    )
-    bgl = bg.join(
-        d.select("doc_id", (F.col("lang") == "en").cast("int").alias("ist")),
-        "doc_id",
-    ).localCheckpoint(eager=True)
-    cnt = bgl.groupBy("bucket").agg(
-        F.count("*").alias("rc"), F.sum("ist").alias("tc")
-    )
-    tots = bgl.agg(F.count("*").alias("tr"), F.sum("ist").alias("tt"))
-    sc = cnt.crossJoin(tots).select(
-        "bucket",
-        (
-            F.log((F.col("tc") + 1.0) / (F.col("tt") + float(_DSIR_B)))
-            - F.log((F.col("rc") + 1.0) / (F.col("tr") + float(_DSIR_B)))
-        ).alias("s"),
-    )
-    c = bgl.groupBy("doc_id", "bucket").agg(F.count("*").alias("c"))
-    lw = (
-        c.join(F.broadcast(sc), "bucket")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("c") * F.col("s")).alias("logw"))
-    )
-    u = (
-        charfold(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":dsir"))))
-        + 1.0
-    ) / F.lit(float(MOD) + 1.0)
-    keyed = lw.select(
-        "doc_id", "logw", (F.col("logw") + -F.log(-F.log(u))).alias("k")
-    )
-    return (
-        keyed.orderBy(F.desc(F.round("k", 6)), "doc_id")
-        .limit(25)
-        .select(
-            "doc_id",
-            F.round("logw", 4).alias("log_w"),
-            F.round("k", 4).alias("sel_key"),
-        )
-    )
-
-
-@register(
-    "text_pmi_bigrams",
-    f"""
-    WITH {SQL_TOK},
-    uni AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
-    tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM uni),
-    bi AS (
-      SELECT t1.tok AS w1, t2.tok AS w2, COUNT(*) AS c
-      FROM tok t1 JOIN tok t2
-        ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-      GROUP BY 1, 2),
-    btot AS (SELECT CAST(SUM(c) AS DOUBLE) AS nb FROM bi),
-    scored AS (
-      SELECT b.w1, b.w2, b.c,
-             ln((b.c / bt.nb) / ((u1.c / t.n) * (u2.c / t.n))) AS pmi
-      FROM bi b
-      JOIN uni u1 ON b.w1 = u1.tok
-      JOIN uni u2 ON b.w2 = u2.tok, tot t, btot bt
-      WHERE b.c >= 5)
-    SELECT w1, w2, CAST(c AS BIGINT) AS n_cooc, ROUND(pmi, 4) AS pmi
-    FROM scored ORDER BY ROUND(pmi, 6) DESC, w1, w2 LIMIT 20
-    """,
-)
-def text_pmi_bigrams(spark, sf_dir):
-    """Top adjacent-bigram collocations by POINTWISE MUTUAL INFORMATION
-    (count >= 5 support floor — classic PMI is unstable on rare pairs) —
-    the distributional-statistics primitive behind phrase mining /
-    tokenizer-merge candidates (BPE picks by raw count; PMI picks by
-    association strength).  Adjacency keeps the pair space linear in
-    tokens (never all-pairs-in-doc); unigram/total dims broadcast; the
-    global top-20 is TakeOrderedAndProject."""
-    t = _doc_tokens(spark, sf_dir).localCheckpoint(eager=True)
-    uni = t.groupBy("tok").agg(F.count("*").alias("c"))
-    tot = uni.agg(F.sum("c").cast("double").alias("n"))
-    t2 = t.select("doc_id", (F.col("pos") - 1).alias("pos"),
-                  F.col("tok").alias("tok2"))
-    bi = (
-        t.join(t2, on=["doc_id", "pos"])
-        .groupBy(F.col("tok").alias("w1"), F.col("tok2").alias("w2"))
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 5)
-        .localCheckpoint(eager=True)
-    )
-    # btot over ALL bigrams (support filter applies to candidates only
-    # in the oracle's scored CTE; mirror exactly: btot BEFORE the floor)
-    bi_all = (
-        t.join(t2, on=["doc_id", "pos"])
-        .agg(F.count("*").cast("double").alias("nb"))
-    )
-    # uni is VOCABULARY-scale (distinct tokens, sublinear in corpus
-    # size — Heaps' law), not O(rows): the broadcast is bounded by the
-    # token vocabulary, unlike the O(|V|) graph dims that are size-gated
-    # via maybe_broadcast.  tot/bi_all are 1-row scalars.
-    scored = (
-        bi.join(F.broadcast(uni.withColumnRenamed("tok", "w1")
-                .withColumnRenamed("c", "c1")), on="w1")
-        .join(F.broadcast(uni.withColumnRenamed("tok", "w2")
-              .withColumnRenamed("c", "c2")), on="w2")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(bi_all))
-        .withColumn(
-            "pmi",
-            F.log(
-                (F.col("c") / F.col("nb"))
-                / ((F.col("c1") / F.col("n")) * (F.col("c2") / F.col("n")))
-            ),
-        )
-    )
-    return (
-        scored.orderBy(F.desc(F.round("pmi", 6)), "w1", "w2")
-        .limit(20)
-        .select("w1", "w2", F.col("c").cast("bigint").alias("n_cooc"),
-                F.round("pmi", 4).alias("pmi"))
-    )
-
-
-BM25_QUERY_TERMS = ("spark", "model", "graph")
-
-# shared BM25 machinery (k1=1.2, b=0.75): ONE definition each of the
-# corpus-statistics CTEs / DataFrames and the scoring expression, used by
-# both the index side (text_bm25_topk) and the search side
-# (text_bm25_search) — a parameter tweak cannot desynchronize them.
-_SQL_BM25_BASE = f"""
-    WITH {SQL_TOK},
-    tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1),
-    stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-    df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok)"""
-# aliases: t = tf row, d = df row, l = dl row, s = stats row
-_SQL_BM25_SCORE = (
-    "ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) * (t.tf * 2.2)"
-    " / (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl))"
-)
-
-
-def _bm25_base(spark, sf_dir):
-    """(tf [checkpointed], dl, stats, df) — the corpus statistics both
-    BM25 queries join against."""
-    t = _doc_tokens(spark, sf_dir)
-    tf = t.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    tf = tf.localCheckpoint(eager=True)  # feeds df + scoring
-    dl = t.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    df = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    return tf, dl, stats, df
-
-
-def _bm25_score_col() -> F.Column:
-    """BM25 term score from joined columns (tf, df, dl, n_docs, avgdl)."""
-    return (
-        F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * 2.2)
-        / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl")))
-    )
-
-
-@register(
-    "text_bm25_topk",
-    _SQL_BM25_BASE
-    + f"""
-    , scored AS (
-      SELECT t.doc_id, t.tok, {_SQL_BM25_SCORE} AS score
-      FROM tf t
-      JOIN df d ON t.tok = d.tok
-      JOIN dl l ON t.doc_id = l.doc_id, stats s)
-    SELECT doc_id, tok AS term, ROUND(score, 4) AS bm25,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                    ORDER BY ROUND(score, 6) DESC, tok) AS rnk
-          FROM scored)
-    WHERE rnk <= 5
-    """,
-)
-def text_bm25_topk(spark, sf_dir):
-    """BM25 term scoring (k1=1.2, b=0.75), top-5 terms per document —
-    the classic lexical-retrieval primitive (build the index side of
-    keyword search / hybrid retrieval over the corpus).  Distributed
-    shape: term frequencies and doc lengths are map-side-combining
-    groupBys; document frequency and the (n_docs, avgdl) scalar are
-    tiny broadcast dims; the per-document top-5 compiles to
-    WindowGroupLimit (rank pushdown), not a full per-partition sort."""
-    tf, dl, stats, df = _bm25_base(spark, sf_dir)
-    # df is VOCABULARY-scale (one row per distinct token, sublinear in
-    # corpus size), so the broadcast is bounded — unlike the O(|V|)
-    # graph dims size-gated via maybe_broadcast; stats is one row.
-    scored = (
-        tf.join(F.broadcast(df), on="tok")
-        .join(dl, on="doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("score", _bm25_score_col())
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc(F.round("score", 6)), "tok"
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "doc_id", F.col("tok").alias("term"),
-            F.round("score", 4).alias("bm25"), "rnk",
-        )
-    )
-
-
-@register(
-    "text_bm25_search",
-    _SQL_BM25_BASE
-    + f"""
-    , q AS (SELECT unnest(['spark', 'model', 'graph']) AS tok),
-    scored AS (
-      SELECT t.doc_id,
-             SUM({_SQL_BM25_SCORE}) AS score,
-             COUNT(*) AS n_matched
-      FROM tf t
-      JOIN q ON t.tok = q.tok
-      JOIN df d ON t.tok = d.tok
-      JOIN dl l ON t.doc_id = l.doc_id, stats s
-      GROUP BY t.doc_id)
-    SELECT doc_id, ROUND(score, 4) AS bm25,
-           CAST(n_matched AS BIGINT) AS n_matched
-    FROM scored ORDER BY ROUND(score, 6) DESC, doc_id LIMIT 10
-    """,
-)
-def text_bm25_search(spark, sf_dir):
-    """The SEARCH side of BM25 (text_bm25_topk builds the index side):
-    score every document against a fixed keyword query by summed
-    per-term BM25, return the top-10 — keyword retrieval over the corpus
-    as one declarative plan.  The query-term dim is a 3-row broadcast,
-    so only posting rows for the query's terms ever leave the tf table
-    (semi-join shape — the inverted-index access path without building
-    one), and the global top-10 is TakeOrderedAndProject."""
-    tf, dl, stats, df = _bm25_base(spark, sf_dir)
-    q = spark.createDataFrame([(w,) for w in BM25_QUERY_TERMS], "tok string")
-    # q is 3 rows; df is vocabulary-scale (bounded, see text_bm25_index)
-    scored = (
-        tf.join(F.broadcast(q), on="tok")
-        .join(F.broadcast(df), on="tok")
-        .join(dl, on="doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("s", _bm25_score_col())
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("score"), F.count("*").alias("n_matched"))
-    )
-    return (
-        scored.orderBy(F.desc(F.round("score", 6)), "doc_id")
-        .limit(10)
-        .select(
-            "doc_id", F.round("score", 4).alias("bm25"),
-            F.col("n_matched").cast("bigint").alias("n_matched"),
-        )
-    )
-
-
-@register(
-    "retrieval_hybrid_rrf",
-    _SQL_BM25_BASE
-    + ",\n"
-    + _SQL_COS.strip().rstrip()
-    + f"""
-    , q AS (SELECT unnest(['spark', 'model', 'graph']) AS tok),
-    lex0 AS (
-      SELECT t.doc_id, SUM({_SQL_BM25_SCORE}) AS score
-      FROM tf t
-      JOIN q ON t.tok = q.tok
-      JOIN df d ON t.tok = d.tok
-      JOIN dl l ON t.doc_id = l.doc_id, stats s
-      GROUP BY t.doc_id),
-    lex AS (SELECT doc_id, lex_rank FROM (
-      SELECT doc_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(score, 6) DESC, doc_id)
-               AS lex_rank
-      FROM lex0) WHERE lex_rank <= 20),
-    vec AS (SELECT doc_id, vec_rank FROM (
-      SELECT vec_id AS doc_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(c, 6) DESC, vec_id)
-               AS vec_rank
-      FROM cos) WHERE vec_rank <= 20),
-    fused AS (
-      SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.lex_rank, v.vec_rank,
-             COALESCE(1.0 / (60 + l.lex_rank), 0)
-             + COALESCE(1.0 / (60 + v.vec_rank), 0) AS rrf
-      FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.doc_id)
-    SELECT doc_id, CAST(lex_rank AS BIGINT) AS lex_rank,
-           CAST(vec_rank AS BIGINT) AS vec_rank,
-           ROUND(rrf, 6) AS rrf_score
-    FROM fused ORDER BY ROUND(rrf, 6) DESC, doc_id LIMIT 15
-    """,
-)
-def retrieval_hybrid_rrf(spark, sf_dir):
-    """HYBRID RETRIEVAL by reciprocal-rank fusion (Cormack et al. 2009):
-    the lexical leg (per-term BM25 over the corpus for the fixed keyword
-    query) and the dense leg (exact cosine vs the query embedding,
-    vec_id 0 — the testdata's doc-aligned vector space) each produce a
-    top-20 ranking; fusion scores 1/(60+r) per leg, full-outer joined so
-    single-leg hits survive with one term — the standard RAG retrieval
-    front-end as ONE declarative plan.
-
-    Scale shape: both legs are the already-audited retrieval plans
-    (posting semi-join via a 3-row broadcast; one-scan fold cosine
-    against a 1-row broadcast query vector); each leg reduces to <= 20
-    rows BEFORE the fusion join, so the full-outer join is a 40-row
-    problem regardless of corpus size; final top-15 is
-    TakeOrderedAndProject."""
-    from .functions.similarity import cosine_topk
-
-    tf, dl, stats, df = _bm25_base(spark, sf_dir)
-    q = spark.createDataFrame([(w,) for w in BM25_QUERY_TERMS], "tok string")
-    scored = (
-        tf.join(F.broadcast(q), on="tok")
-        .join(F.broadcast(df), on="tok")
-        .join(dl, on="doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("s", _bm25_score_col())
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("score"))
-    )
-    wl = Window.orderBy(F.desc(F.round("score", 6)), "doc_id")
-    lex = (
-        scored.withColumn("lex_rank", F.row_number().over(wl))
-        .filter(F.col("lex_rank") <= 20)
-        .select("doc_id", "lex_rank")
-    )
-    vec = cosine_topk(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=20).select(
-        F.col("vec_id").alias("doc_id"), F.col("rnk").alias("vec_rank")
-    )
-    fused = lex.join(vec, on="doc_id", how="full_outer")
-    rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("vec_rank")), F.lit(0.0))
-    return (
-        fused.withColumn("rrf", rrf)
-        .orderBy(F.desc(F.round("rrf", 6)), "doc_id")
-        .limit(15)
-        .select(
-            "doc_id",
-            F.col("lex_rank").cast("bigint").alias("lex_rank"),
-            F.col("vec_rank").cast("bigint").alias("vec_rank"),
-            F.round("rrf", 6).alias("rrf_score"),
-        )
-    )
-
-
-@register(
-    "q_value_outliers",
-    """
-    WITH m AS (
-      SELECT event_type, AVG(value) AS mu,
-             sqrt(greatest(AVG(value * value) - AVG(value) * AVG(value), 0))
-               AS sd
-      FROM events GROUP BY event_type)
-    SELECT e.event_id, e.event_type,
-           ROUND((e.value - m.mu) / m.sd, 4) AS z
-    FROM events e JOIN m ON e.event_type = m.event_type AND m.sd > 0
-    ORDER BY ROUND(abs((e.value - m.mu) / m.sd), 6) DESC, e.event_id
-    LIMIT 10
-    """,
-)
-def q_value_outliers(spark, sf_dir):
-    """Z-score outlier detection per event type — the monitoring-side
-    anomaly primitive: per-type mean/std from ONE pass of sum moments
-    (written as avg(x), avg(x^2) explicitly so both engines walk the
-    same float path, rather than engine-specific streaming-variance
-    algorithms), broadcast back, top-10 by |z|.  At scale: the moment
-    agg map-side combines; the stats dim is event-type-sized."""
-    e = _t(spark, sf_dir, "events")
-    # clamp the moment difference at 0: float cancellation on large-mean
-    # data can make avg(v^2) - avg(v)^2 slightly NEGATIVE, which DuckDB's
-    # sqrt hard-errors on and Spark turns into NaN (engine divergence);
-    # constant-valued types (sd = 0) are excluded rather than dividing
-    # by zero into NULL/NaN
-    m = e.groupBy("event_type").agg(
-        F.avg("value").alias("mu"),
-        F.sqrt(
-            F.greatest(
-                F.avg(F.col("value") * F.col("value"))
-                - F.avg("value") * F.avg("value"),
-                F.lit(0.0),
-            )
-        ).alias("sd"),
-    ).filter(F.col("sd") > 0)
-    z = e.join(F.broadcast(m), on="event_type").withColumn(
-        "z", (F.col("value") - F.col("mu")) / F.col("sd")
-    )
-    return (
-        z.orderBy(F.desc(F.round(F.abs("z"), 6)), "event_id")
-        .limit(10)
-        .select("event_id", "event_type", F.round("z", 4).alias("z"))
-    )
-
-
-@register(
-    "ann_sq8_recall",
-    """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    sc AS (SELECT vec_id, v,
-                  greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max')
-                           / 127.0, 1e-12) AS s
-           FROM e),
-    qv AS (SELECT vec_id, v,
-                  list_transform(v, x -> floor(x / s + 0.5) * s) AS xh
-           FROM sc),
-    q AS (SELECT v AS qv, xh AS qxh FROM qv WHERE vec_id = 0),
-    approx AS (SELECT vec_id FROM (
-      SELECT a.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(a.xh, q.qxh), 6) DESC,
-                                a.vec_id) AS rnk
-      FROM qv a, q WHERE a.vec_id <> 0) WHERE rnk <= 10),
-    exact AS (SELECT vec_id FROM (
-      SELECT e.vec_id,
-             ROW_NUMBER() OVER (ORDER BY ROUND(list_cosine_similarity(e.v, q.qv), 6) DESC,
-                                e.vec_id) AS rnk
-      FROM e, q WHERE e.vec_id <> 0) WHERE rnk <= 10)
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT COUNT(*) FROM exact JOIN approx USING (vec_id)) AS BIGINT)
-             AS n_hits,
-           ROUND((SELECT COUNT(*) FROM exact JOIN approx USING (vec_id)) / 10.0, 4)
-             AS recall_at_10
-    """,
-)
-def ann_sq8_recall(spark, sf_dir):
-    """Recall@10 of int8 SCALAR-QUANTIZED cosine search vs the exact
-    float scan (functions/similarity.sq8_reconstruct) — the storage-
-    compression half of ANN at 100 TB: embeddings stored as int8 codes +
-    one scale per vector are 8x smaller than float64, so the measured
-    question is what that compression costs in retrieval quality (here:
-    nothing the top-10 can see; pinned >= 0.9 by test).  Everything is
-    row-local fold arithmetic; the quantizer uses explicit half-up
-    rounding (floor(x/s + 0.5)) because round()'s half-even tie behavior
-    differs across engines."""
-    from .functions.similarity import cosine_fold, sq8_reconstruct, sq8_scale
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # scale materialized as its own column: O(d) encode (see sq8_reconstruct)
-    e = (
-        e.withColumn("s", sq8_scale(F.col("v")))
-        .withColumn("xh", sq8_reconstruct(F.col("v"), F.col("s")))
-        .drop("s")
-        .localCheckpoint(eager=True)
-    )
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("v").alias("qv"), F.col("xh").alias("qxh")
-    )
-    base = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
-
-    def topk(col_a, col_b):
-        cos = base.select(
-            "vec_id", F.round(cosine_fold(F.col(col_a), F.col(col_b)), 6).alias("c")
-        )
-        w = Window.orderBy(F.desc("c"), "vec_id")
-        return (
-            cos.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 10).select("vec_id")
-        )
-
-    hits = topk("qv", "v").join(topk("qxh", "xh"), on="vec_id", how="left_semi")
-    return hits.agg(F.count("*").alias("n")).select(
-        F.lit(10).cast("bigint").alias("k"),
-        F.col("n").cast("bigint").alias("n_hits"),
-        F.round(F.col("n") / 10.0, 4).alias("recall_at_10"),
-    )
-
-
-@register(
-    "text_quality_filter",
-    f"""
-    WITH f AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n,
-             len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE) AS sr,
-             list_aggregate(list_transform(string_split(text, ' '),
-                                           t -> CAST(strlen(t) AS DOUBLE)), 'sum')
-               / len(string_split(text, ' ')) AS ml
-      FROM documents)
-    SELECT doc_id,
-           CAST(n AS BIGINT) AS n_tokens,
-           ROUND(sr, 4) AS stop_ratio,
-           ROUND(ml, 4) AS mean_tok_len,
-           CASE WHEN n < 5 THEN 'too_short'
-                WHEN sr > 0.6 THEN 'stopword_heavy'
-                WHEN ml < 2.0 OR ml > 12.0 THEN 'weird_tokens'
-                ELSE 'ok' END AS reason,
-           (CASE WHEN n < 5 THEN 'too_short'
-                WHEN sr > 0.6 THEN 'stopword_heavy'
-                WHEN ml < 2.0 OR ml > 12.0 THEN 'weird_tokens'
-                ELSE 'ok' END) = 'ok' AS keep
-    FROM f
-    """,
-)
-def text_quality_filter(spark, sf_dir):
-    """Training-data quality gate (functions/quality.quality_flags):
-    per-doc keep/drop with the first-failing reason materialized — drops
-    attributable, countable via drop_stats, never silent."""
-    from .functions.quality import quality_flags
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return quality_flags(d).select(
-        "doc_id", "n_tokens", "stop_ratio", "mean_tok_len", "reason", "keep"
-    )
-
-
-@register(
-    "token_counts_bpe",
-    r"""
-    WITH t AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS tok
-      FROM documents)
-    SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY tok
-    """,
-)
-def token_counts_bpe(spark, sf_dir):
-    """BPE-ish pre-tokenization wordcount (GPT-2-style split: letter runs
-    | digit runs | single punctuation) — the vocabulary-building primitive
-    over raw text, pure regexp (JVM-side), no UDF."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(
-        F.lower("text"), F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), F.lit(0)
-    )
-    return (
-        d.select(F.explode(toks).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def _sql_bpe_round(prev_w: str, p: str, t: str, w: str) -> str:
     """One unrolled BPE training round: weighted adjacent-pair counts ->
     top pair (cnt desc, lexicographic tie) -> greedy left-to-right fold
@@ -5376,7 +936,7 @@ def _sql_bpe_round(prev_w: str, p: str, t: str, w: str) -> str:
       FROM {prev_w} w, {t} t)"""
 
 
-_SQL_BPE_CTES = (
+_SQL_BPE_MERGES = (
     r"""
     WITH words AS (
       SELECT tok, COUNT(*) AS cnt FROM (
@@ -5389,10 +949,6 @@ _SQL_BPE_CTES = (
         _sql_bpe_round(f"w{r}", f"p{r + 1}", f"t{r + 1}", f"w{r + 1}")
         for r in range(5)
     )
-)
-
-_SQL_BPE_MERGES = (
-    _SQL_BPE_CTES
     + """
     SELECT * FROM ("""
     + " UNION ALL ".join(
@@ -5410,4335 +966,13 @@ def bpe_merges(spark, sf_dir):
     GPT-2-style pre-tokens of the documents corpus: 5 rounds of
     count-top-pair-and-fuse, each round one vocab-table aggregation + one
     fold rewrite (the DuckDB oracle unrolls the identical 5 rounds).
-    token_counts_bpe remains the pre-tokenization COUNT stage; this query
-    is the merge-table stage that makes it an actual trained tokenizer."""
+    kg_mentions_bpe tags mentions with the merges this trainer produces."""
     from .functions.bpe import pretoken_counts, train_bpe_merges
 
     return train_bpe_merges(pretoken_counts(_docs(spark, sf_dir)), n_merges=5)
 
 
-@register(
-    "bpe_tokenize_counts",
-    _SQL_BPE_CTES
-    + """
-    SELECT sym, CAST(SUM(cnt) AS BIGINT) AS n FROM (
-      SELECT cnt, unnest(syms) AS sym FROM w5)
-    GROUP BY sym
-    """,
-)
-def bpe_tokenize_counts(spark, sf_dir):
-    """The trained tokenizer APPLIED end-to-end: train 5 BPE merges over
-    the corpus pre-tokens, replay them with apply_bpe (pure-expression
-    fold), and count corpus occurrences per merged symbol — the
-    full-circle proof that bpe_merges produces a usable tokenizer (the
-    oracle re-derives the same vocabulary from its own unrolled training
-    rounds)."""
-    from .functions.bpe import apply_bpe, pretoken_counts, train_bpe_merges
 
-    words = pretoken_counts(_docs(spark, sf_dir)).localCheckpoint(eager=True)
-    merges = [
-        (r.left_sym, r.right_sym)
-        for r in train_bpe_merges(words, n_merges=5).orderBy("merge_rank").collect()
-    ]
-    toks = apply_bpe(words, merges)
-    return (
-        toks.select("cnt", F.explode("syms").alias("sym"))
-        .groupBy("sym")
-        .agg(F.sum("cnt").alias("n"))
-    )
 
-
-# ---------- KG consumption queries (what a graph user runs after
-# materialization: degree profile, multi-hop traversal) ----------
-
-_SQL_EDGES = SQL_TRIPLES + """
-    , edges AS (
-      SELECT md5(subj || ':' || subj_type) AS src,
-             md5(obj || ':' || obj_type) AS dst,
-             pred, COUNT(*) AS weight
-      FROM triples GROUP BY 1, 2, 3
-    )
-"""
-
-# undirected distinct projection (a < b) of the canonical graph — ONE
-# definition for every undirected-graph consumer (triangles, LPA,
-# link prediction) on both engines
-_SQL_UND = """
-    , und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-              FROM edges WHERE src <> dst)"""
-
-
-def _sql_kcore_round(src: str, dst: str, k: int = 2) -> str:
-    """One synchronous peel: drop vertices with degree < k and their
-    edges (kg_kcore's oracle unrolls three of these)."""
-    return f"""
-    d_{dst} AS (SELECT v, COUNT(*) AS deg FROM (
-        SELECT a AS v FROM {src} UNION ALL SELECT b FROM {src}) GROUP BY v),
-    k_{dst} AS (SELECT v FROM d_{dst} WHERE deg >= {k}),
-    {dst} AS (SELECT e.a, e.b FROM {src} e
-              JOIN k_{dst} x ON e.a = x.v JOIN k_{dst} y ON e.b = y.v)"""
-
-
-def _sql_truss_round(src: str, dst: str, k: int = 4) -> str:
-    """One synchronous k-truss peel: count each edge's triangle support
-    within the current edge set and keep support >= k-2 (kg_ktruss's
-    oracle unrolls two of these).  Triangles are enumerated once per
-    round at their lowest-id corner; edges in no triangle have no
-    support row and drop out via the inner filter."""
-    return f"""
-    tri_{dst} AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                  FROM {src} e1
-                  JOIN {src} e2 ON e1.a = e2.a AND e1.b < e2.b
-                  JOIN {src} e3 ON e3.a = e1.b AND e3.b = e2.b),
-    sup_{dst} AS (SELECT a, b, COUNT(*) AS sup FROM (
-                    SELECT x AS a, y AS b FROM tri_{dst}
-                    UNION ALL SELECT x AS a, z AS b FROM tri_{dst}
-                    UNION ALL SELECT y AS a, z AS b FROM tri_{dst}) u
-                  GROUP BY a, b),
-    {dst} AS (SELECT a, b FROM sup_{dst} WHERE sup >= {k - 2})"""
-
-
-def _und_edges(spark, sf_dir):
-    """Undirected distinct edges (a, b) with a < b, self-loops dropped
-    (the Spark twin of _SQL_UND)."""
-    e = kg_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
-    return e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-
-
-@register(
-    "kg_degree_distribution",
-    _SQL_EDGES
-    + """
-    , deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v)
-    SELECT CAST(degree AS BIGINT) AS degree,
-           CAST(COUNT(*) AS BIGINT) AS n_nodes
-    FROM deg GROUP BY degree
-    """,
-)
-def kg_degree_distribution(spark, sf_dir):
-    """Degree histogram over the materialized graph — the first sanity
-    query on any KG (hub detection feeds the salting/skew story).
-    kg_edges is checkpointed: both degree branches (src, dst) consume it,
-    and without the checkpoint the whole extraction cascade re-runs per
-    branch (PLAN_AUDIT r2 showed py-passes=2 for this query alone)."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    return deg.groupBy(F.col("degree").cast("bigint").alias("degree")).agg(
-        F.count("*").alias("n_nodes")
-    )
-
-
-@register(
-    "kg_two_hop",
-    _SQL_EDGES
-    + """
-    SELECT a.pred AS pred_ab, b.pred AS pred_bc,
-           CAST(COUNT(*) AS BIGINT) AS n_paths,
-           CAST(COUNT(DISTINCT a.src) AS BIGINT) AS n_src
-    FROM edges a JOIN edges b ON a.dst = b.src AND a.src <> b.dst
-    GROUP BY 1, 2
-    """,
-)
-def kg_two_hop(spark, sf_dir):
-    """Two-hop traversal (A -[p1]-> B -[p2]-> C, no immediate backtrack):
-    per relation-pair path counts — the motif-count primitive.  Scale
-    note: the hop join shuffles on the shared vertex; hub vertices are
-    exactly the skew the AQE skew-join test + salting pattern cover."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    a = e.select(F.col("src").alias("a_src"), F.col("dst").alias("mid"),
-                 F.col("pred").alias("pred_ab"))
-    b = e.select(F.col("src").alias("mid"), F.col("dst").alias("b_dst"),
-                 F.col("pred").alias("pred_bc"))
-    paths = a.join(b, on="mid").filter(F.col("a_src") != F.col("b_dst"))
-    return paths.groupBy("pred_ab", "pred_bc").agg(
-        F.count("*").alias("n_paths"),
-        F.countDistinct("a_src").alias("n_src"),
-    )
-
-
-@register(
-    "kg_clustering_coeff",
-    _SQL_EDGES
-    + _SQL_UND
-    + """
-    ,
-    dg AS (SELECT v, COUNT(*) AS deg FROM (
-             SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
-    rk AS (SELECT v, ROW_NUMBER() OVER (ORDER BY deg, v) AS r FROM dg),
-    od AS (SELECT LEAST(ra.r, rb.r) AS lo, GREATEST(ra.r, rb.r) AS hi
-           FROM und JOIN rk ra ON und.a = ra.v JOIN rk rb ON und.b = rb.v),
-    tri AS (SELECT COUNT(*) AS t FROM od e1
-            JOIN od e2 ON e1.lo = e2.lo AND e1.hi < e2.hi
-            JOIN od e3 ON e3.lo = e1.hi AND e3.hi = e2.hi),
-    wg AS (SELECT SUM(deg * (deg - 1) / 2) AS w FROM dg)
-    SELECT CAST(tri.t AS BIGINT) AS n_triangles,
-           CAST(wg.w AS BIGINT) AS n_wedges,
-           ROUND(3.0 * tri.t / (wg.w + 1e-12), 6) AS global_cc
-    FROM tri, wg
-    """,
-)
-def kg_clustering_coeff(spark, sf_dir):
-    """GLOBAL clustering coefficient (transitivity) of the canonical
-    graph: 3 x triangles / wedges — how much of the graph's 2-path mass
-    closes into triangles, the one-number cohesion statistic (near 1 on
-    the surrogate corpus's near-clique, near 0 on a random sparse
-    graph).  Triangles reuse the degree-ordered formulation
-    (kg_triangles); the wedge denominator is a pure degree-moment
-    aggregate — no join at all, so the expensive half of the statistic
-    never touches a hub's quadratic neighborhood."""
-    from .functions.ranks import global_row_number
-
-    from .functions.joins import maybe_broadcast
-
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    dg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count("*").alias("deg"))
-    ).localCheckpoint(eager=True)
-    # the rank dim is O(|V|) — size-gated broadcast (r5 VERDICT #1);
-    # rk is 1:1 with the checkpointed dg, so one cheap count gates both
-    # sides; above the gate the joins shuffle and AQE takes over.
-    n_v = dg.count()
-    rk = global_row_number(dg, ["deg", "v"]).select("v", F.col("rn").alias("r"))
-    od = (
-        und.join(maybe_broadcast(rk.withColumnRenamed("v", "a")
-                 .withColumnRenamed("r", "ra"), n_rows=n_v), on="a")
-        .join(maybe_broadcast(rk.withColumnRenamed("v", "b")
-              .withColumnRenamed("r", "rb"), n_rows=n_v), on="b")
-        .select(F.least("ra", "rb").alias("lo"), F.greatest("ra", "rb").alias("hi"))
-        .localCheckpoint(eager=True)
-    )
-    e1 = od.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = od.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    e3 = od.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    n_tri = (
-        e1.join(e2, on="x").filter(F.col("y") < F.col("z"))
-        .join(e3, on=["y", "z"]).count()
-    )
-    n_wedges = dg.agg(
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2).alias("w")
-    ).first().w
-    # global_cc rounds Spark-side (F.round = HALF_UP, matching DuckDB
-    # ROUND) — Python round() is banker's rounding and would diverge
-    # from the oracle on a tie at the 6th decimal.
-    return (
-        und.sparkSession.createDataFrame(
-            [(n_tri, int(n_wedges))], "n_triangles bigint, n_wedges bigint"
-        )
-        .select(
-            "n_triangles", "n_wedges",
-            F.round(
-                3.0 * F.col("n_triangles") / (F.col("n_wedges") + F.lit(1e-12)),
-                6,
-            ).alias("global_cc"),
-        )
-    )
-
-
-@register(
-    "kg_assortativity",
-    _SQL_EDGES
-    + _SQL_UND
-    + """
-    ,
-    dg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-             SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
-    ep AS (SELECT da.deg AS x, db.deg AS y
-           FROM und JOIN dg da ON und.a = da.v JOIN dg db ON und.b = db.v
-           UNION ALL
-           SELECT db.deg, da.deg
-           FROM und JOIN dg da ON und.a = da.v JOIN dg db ON und.b = db.v),
-    s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-                 CAST(SUM(x * y) AS BIGINT) AS sxy,
-                 CAST(SUM(x * x) AS BIGINT) AS sxx,
-                 CAST(SUM(y * y) AS BIGINT) AS syy
-           FROM ep)
-    SELECT n AS n_endpoints,
-           ROUND((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                 / (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                  * sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)
-                  + 1e-12), 6) AS assortativity
-    FROM s
-    """,
-)
-def kg_assortativity(spark, sf_dir):
-    """DEGREE ASSORTATIVITY of the canonical graph (Newman r): Pearson
-    correlation of endpoint degrees over both orientations of every
-    undirected edge — one number that says whether hubs link to hubs
-    (r > 0) or to leaves (r < 0), the structural health check for a
-    KG's hub topology.  Computed from EXPLICIT integer sums (n, Σx, Σy,
-    Σxy, Σx², Σy²) folded in one aggregate — engine-bit-identical where
-    built-in corr()'s streaming update order is not, and the same
-    map-side-combining single pass at any scale.  Degrees are one
-    groupBy; the endpoint join is two SIZE-GATED dim joins (broadcast
-    under functions/joins.maybe_broadcast's gate, shuffle + AQE above
-    it — the dim is O(|V|), never assume it fits an executor).  The
-    edge table is checkpointed once — it feeds both the degree dim and
-    the endpoint join, and without the checkpoint the whole extraction
-    cascade underneath it re-evaluates per consumer (3x wall at the 10x
-    vet fixture)."""
-    from .functions.joins import maybe_broadcast
-
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    dg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    # the degree dim is O(|V|) — size-gated, not unconditionally
-    # broadcast (r5 VERDICT #1 / ADVICE); one count off the checkpoint
-    # gates both endpoint joins.
-    n_v = dg.count()
-    j = (
-        und.join(
-            maybe_broadcast(dg.withColumnRenamed("v", "a")
-                            .withColumnRenamed("deg", "da"), n_rows=n_v), on="a")
-        .join(
-            maybe_broadcast(dg.withColumnRenamed("v", "b")
-                            .withColumnRenamed("deg", "db"), n_rows=n_v), on="b")
-    )
-    ep = j.select(F.col("da").alias("x"), F.col("db").alias("y")).unionByName(
-        j.select(F.col("db").alias("x"), F.col("da").alias("y"))
-    )
-    s = ep.agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    num = nd * F.col("sxy") - F.col("sx").cast("double") * F.col("sy")
-    den = (
-        F.sqrt(nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
-        * F.sqrt(nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
-        + F.lit(1e-12)
-    )
-    return s.select(
-        F.col("n").alias("n_endpoints"),
-        F.round(num / den, 6).alias("assortativity"),
-    )
-
-
-def _pivot_bfs_dist(spark, sf_dir, n_seeds: int = 4, max_hops: int = 3):
-    """(s, v, dist) min-distances from the ``n_seeds`` top-degree pivot
-    vertices by simultaneous multi-source BFS truncated at ``max_hops``
-    — the shared engine of kg_harmonic and kg_distance_distribution.
-    One frontier keyed (seed, v) runs ALL seeds' BFS in the same
-    per-hop shuffle; first arrival wins (anti-join on the visited set),
-    so the frame holds MIN distances by construction."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    sym = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    seeds = deg.orderBy(F.desc("degree"), "v").limit(n_seeds).select("v")
-    visited = seeds.select(
-        F.col("v").alias("s"), "v", F.lit(0).cast("bigint").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for d in range(1, max_hops + 1):
-        frontier = (
-            sym.join(
-                frontier.select(F.col("s"), F.col("v").alias("a")), on="a"
-            )
-            .select("s", F.col("b").alias("v"))
-            .distinct()
-            .join(visited.select("s", "v"), on=["s", "v"], how="left_anti")
-            .withColumn("dist", F.lit(d).cast("bigint"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
-
-
-@register(
-    "kg_harmonic",
-    _SQL_EDGES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , sym AS (SELECT src AS a, dst AS b FROM edges
-              UNION SELECT dst, src FROM edges),
-    deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    seeds AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 4),
-    reach(s, v, dist) AS (
-      SELECT v, v, 0 FROM seeds
-      UNION
-      SELECT reach.s, sym.b, reach.dist + 1
-      FROM reach JOIN sym ON reach.v = sym.a
-      WHERE reach.dist < 3),
-    md AS (SELECT s, v, MIN(dist) AS dist FROM reach GROUP BY 1, 2)
-    SELECT v, ROUND(SUM(1.0 / dist), 6) AS harmonic,
-           CAST(COUNT(*) AS BIGINT) AS n_seeds_reached
-    FROM md WHERE dist > 0 GROUP BY v
-    """,
-)
-def kg_harmonic(spark, sf_dir):
-    """Sampled HARMONIC CENTRALITY: sum of 1/dist from the 4 top-degree
-    seed vertices (deterministic pick: degree desc, id asc), distances
-    by simultaneous multi-source BFS truncated at 3 hops — the
-    pivot-sampling estimator (Eppstein-Wang style) that makes closeness-
-    family centrality tractable at graph scale: cost is seeds x the
-    3-hop neighborhood, not all-pairs shortest paths.  One frontier keyed
-    (seed, v) runs ALL seeds' BFS in the same per-hop shuffle;
-    per-(seed, v) min distance falls out of the frontier discipline
-    (first arrival wins, anti-join on the visited set), matching the
-    oracle's recursive-CTE min."""
-    visited = _pivot_bfs_dist(spark, sf_dir, n_seeds=4, max_hops=3)
-    return (
-        visited.filter(F.col("dist") > 0)
-        .groupBy("v")
-        .agg(
-            F.round(F.sum(1.0 / F.col("dist")), 6).alias("harmonic"),
-            F.count("*").alias("n_seeds_reached"),
-        )
-    )
-
-
-def _sql_bfs_sigma_level(d: int, pfx: str = "") -> str:
-    """One unrolled multi-source BFS level WITH path counting: sigma at
-    level d sums the predecessors' sigma (kg_betweenness's oracle chains
-    three of these; the LEFT-JOIN-IS-NULL is the frontier anti-join).
-    ``pfx`` namespaces the CTE chain so two independent BFS runs (the
-    sampled estimator and its exact error twin) coexist in one query."""
-    p = d - 1
-    return f"""
-    {pfx}c{d} AS (SELECT l.s, e.b AS v, SUM(l.sigma) AS sigma
-             FROM {pfx}l{p} l JOIN sym e ON l.v = e.a GROUP BY 1, 2),
-    {pfx}l{d} AS (SELECT c.s, c.v, c.sigma FROM {pfx}c{d} c
-             LEFT JOIN {pfx}vis{p} p ON c.s = p.s AND c.v = p.v
-             WHERE p.v IS NULL),
-    {pfx}vis{d} AS (SELECT * FROM {pfx}vis{p}
-                    UNION ALL SELECT s, v FROM {pfx}l{d})"""
-
-
-def _sql_brandes_backstep(d: int, pfx: str = "") -> str:
-    """One unrolled Brandes dependency step: delta at level d sums
-    sigma_v/sigma_u * (1 + delta_u) over the DAG successors u at level
-    d+1 (vertices with deeper-only neighborhoods keep delta 0 via the
-    LEFT join + COALESCE)."""
-    n = d + 1
-    return f"""
-    {pfx}d{d} AS (SELECT l.s, l.v, l.sigma,
-                    COALESCE(SUM((l.sigma / n.sigma) * (1 + n.delta)),
-                             0) AS delta
-             FROM {pfx}l{d} l JOIN sym e ON l.v = e.a
-             LEFT JOIN {pfx}d{n} n ON n.s = l.s AND n.v = e.b
-             GROUP BY 1, 2, 3)"""
-
-
-@register(
-    "kg_betweenness",
-    _SQL_EDGES
-    + f"""
-    , sym AS (SELECT src AS a, dst AS b FROM edges
-              UNION SELECT dst, src FROM edges),
-    deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    seeds AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 4),
-    l0 AS (SELECT v AS s, v, CAST(1 AS DOUBLE) AS sigma FROM seeds),
-    vis0 AS (SELECT s, v FROM l0),
-    {_sql_bfs_sigma_level(1)},
-    {_sql_bfs_sigma_level(2)},
-    {_sql_bfs_sigma_level(3)},
-    d3 AS (SELECT s, v, sigma, CAST(0 AS DOUBLE) AS delta FROM l3),
-    {_sql_brandes_backstep(2)},
-    {_sql_brandes_backstep(1)}
-    SELECT v, ROUND(SUM(delta), 6) AS bc, CAST(COUNT(*) AS BIGINT) AS n_seeds
-    FROM (SELECT * FROM d1 UNION ALL SELECT * FROM d2
-          UNION ALL SELECT * FROM d3) u
-    GROUP BY v
-    """,
-)
-def kg_betweenness(spark, sf_dir):
-    """Seed-sampled BETWEENNESS CENTRALITY over the canonical graph:
-    Brandes' dependency accumulation from the 4 top-degree seeds
-    (deterministic pick, the kg_harmonic pivots), shortest paths
-    truncated at 3 hops — the bridge/bottleneck statistic that degree
-    and PageRank both miss (a low-degree vertex stitching two
-    communities scores high here).  Sampling + the depth cap are what
-    make this tractable at graph scale (cost = seeds x 3-hop
-    neighborhood x 2 phases, never all-pairs), and both cuts are
-    deterministic, so the unrolled oracle reproduces the statistic
-    exactly: forward levels with path counts (sigma), then deepest-first
-    delta accumulation.  Shared loop: graph/algo.betweenness (the
-    kg_harmonic frontier discipline plus the backward pass)."""
-    from .graph.algo import betweenness
-
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    sym = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    seeds = deg.orderBy(F.desc("degree"), "v").limit(4).select("v")
-    out = betweenness(sym, seeds, depth=3)
-    return out.select("v", F.round("bc", 6).alias("bc"), "n_seeds")
-
-
-_BC_EXACT_DEPTH = 6  # oracle unroll horizon; Spark asserts diameter <= this
-
-
-@register(
-    "kg_betweenness_error",
-    _SQL_EDGES
-    + f"""
-    , sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM edges
-              UNION SELECT dst, src FROM edges),
-    verts AS MATERIALIZED (SELECT DISTINCT a AS v FROM sym),
-    nv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-    deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    seeds AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 4),
-    ns AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM seeds),
-    l0 AS (SELECT v AS s, v, CAST(1 AS DOUBLE) AS sigma FROM seeds),
-    vis0 AS (SELECT s, v FROM l0),
-    {_sql_bfs_sigma_level(1)},
-    {_sql_bfs_sigma_level(2)},
-    {_sql_bfs_sigma_level(3)},
-    d3 AS (SELECT s, v, sigma, CAST(0 AS DOUBLE) AS delta FROM l3),
-    {_sql_brandes_backstep(2)},
-    {_sql_brandes_backstep(1)},
-    approx AS (SELECT v, SUM(delta) AS bc
-               FROM (SELECT * FROM d1 UNION ALL SELECT * FROM d2
-                     UNION ALL SELECT * FROM d3) u GROUP BY v),
-    el0 AS (SELECT v AS s, v, CAST(1 AS DOUBLE) AS sigma FROM verts),
-    evis0 AS (SELECT s, v FROM el0),
-    {"".join(_sql_bfs_sigma_level(d, "e") + "," for d in range(1, _BC_EXACT_DEPTH + 1))}
-    ed{_BC_EXACT_DEPTH} AS (SELECT s, v, sigma, CAST(0 AS DOUBLE) AS delta
-                            FROM el{_BC_EXACT_DEPTH}),
-    {",".join(_sql_brandes_backstep(d, "e") for d in range(_BC_EXACT_DEPTH - 1, 0, -1))},
-    exact AS (SELECT v, SUM(delta) AS bc FROM (
-                {" UNION ALL ".join(f"SELECT * FROM ed{d}" for d in range(1, _BC_EXACT_DEPTH + 1))}
-              ) u GROUP BY v),
-    err AS (SELECT vt.v,
-                   COALESCE(x.bc, 0) AS bce,
-                   COALESCE(a.bc, 0) * nv.n / ns.k AS bch
-            FROM verts vt
-            LEFT JOIN exact x ON x.v = vt.v
-            LEFT JOIN approx a ON a.v = vt.v
-            CROSS JOIN nv CROSS JOIN ns)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vertices,
-           ROUND(MAX(bce), 6) AS max_bc_exact,
-           ROUND(MAX(ABS(bce - bch)), 6) AS max_abs_err,
-           ROUND(AVG(ABS(bce - bch)), 6) AS mean_abs_err
-    FROM err
-    """,
-)
-def kg_betweenness_error(spark, sf_dir):
-    """MEASURED-ERROR TWIN of kg_betweenness (the ann_*_recall pattern,
-    r6 VERDICT #5): exact Brandes — ALL vertices as seeds, forward phase
-    run to frontier exhaustion (graph/algo.betweenness until_empty=True)
-    — against the registered estimator (4 deterministic top-degree
-    pivots, 3-hop horizon) scaled by the Brandes-Pich factor n/k, with
-    the error reported as max/mean |bc_exact − bc_scaled| next to the
-    exact maximum for scale.  Nothing about the estimator's error was
-    previously measured on a graph where the two differ; this row makes
-    the error a pinned, oracle-verified statistic (BENCH/CONVERGENCE.md
-    carries the per-SF table).
-
-    Exact all-seeds Brandes is O(V·E) — viable here ONLY because the
-    docs-domain vertex set is vocab-bounded (like the exact recall
-    oracles, this is the measurement tool; the sampled+truncated form
-    is the scale path).  The oracle unrolls the exact BFS to depth
-    _BC_EXACT_DEPTH (6); the Spark side asserts the true diameter fits
-    that horizon — a deeper graph fails LOUDLY here rather than
-    silently diverging from the oracle."""
-    from .graph.algo import betweenness
-
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    sym = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    seeds = deg.orderBy(F.desc("degree"), "v").limit(4).select("v")
-    verts = sym.select(F.col("a").alias("v")).distinct().localCheckpoint(
-        eager=True
-    )
-    nv = verts.count()
-    ns = seeds.count()
-    stats: dict = {}
-    exact = betweenness(
-        sym, verts, until_empty=True, max_rounds=30, stats=stats
-    ).select("v", F.col("bc").alias("bce"))
-    if stats["depth"] > _BC_EXACT_DEPTH:
-        raise RuntimeError(
-            f"graph diameter {stats['depth']} exceeds the oracle's "
-            f"unrolled horizon {_BC_EXACT_DEPTH}"
-        )
-    approx = betweenness(sym, seeds, depth=3).select(
-        "v", (F.col("bc") * nv / ns).alias("bch")
-    )
-    err = (
-        verts.join(exact, "v", "left")
-        .join(approx, "v", "left")
-        .select(
-            F.coalesce("bce", F.lit(0.0)).alias("bce"),
-            F.coalesce("bch", F.lit(0.0)).alias("bch"),
-        )
-    )
-    return err.agg(
-        F.count("*").alias("n_vertices"),
-        F.round(F.max("bce"), 6).alias("max_bc_exact"),
-        F.round(F.max(F.abs(F.col("bce") - F.col("bch"))), 6).alias(
-            "max_abs_err"
-        ),
-        F.round(F.avg(F.abs(F.col("bce") - F.col("bch"))), 6).alias(
-            "mean_abs_err"
-        ),
-    )
-
-
-@register(
-    "kg_kcore",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    {_sql_kcore_round('und', 'e1')},
-    {_sql_kcore_round('e1', 'e2')},
-    {_sql_kcore_round('e2', 'e3')}
-    SELECT DISTINCT v FROM (
-      SELECT a AS v FROM e3 UNION ALL SELECT b FROM e3)
-    """,
-)
-def kg_kcore(spark, sf_dir):
-    """2-CORE of the canonical graph by iterative peeling (3 unrolled
-    synchronous rounds for the oracle): repeatedly drop degree-<2
-    vertices and their edges — the standard graph-cleaning primitive
-    that strips pendant chains before community/centrality analysis.
-    Per round one degree aggregate + two semi-joins, the CC per-round
-    shape.  Shared loop: graph/algo.kcore — rounds=None peels to the
-    fixed point under the non-silent guard (pinned by
-    tests/test_graph_algo.py: a chain needs ~n/2 rounds, 3 provably
-    aren't enough)."""
-    from .graph.algo import kcore
-
-    und = _und_edges(spark, sf_dir)
-    return kcore(und, k=2, rounds=3)
-
-
-@register(
-    "kg_ktruss",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    {_sql_truss_round('und', 't1', 4)},
-    {_sql_truss_round('t1', 't2', 4)}
-    SELECT a, b FROM t2
-    """,
-)
-def kg_ktruss(spark, sf_dir):
-    """4-TRUSS of the canonical graph (2 unrolled peel rounds for the
-    oracle): iteratively drop edges in fewer than 2 triangles within the
-    surviving edge set — the EDGE-cohesion refinement of kg_kcore (a
-    k-truss is always inside the (k-1)-core, but not vice versa: a star
-    hub survives any core cut yet has zero triangle support), the
-    standard strong-tie backbone for KG noise pruning.  Shared loop:
-    graph/algo.ktruss — degree-ordered wedge enumeration per round (the
-    kg_triangles orientation, rank dim size-gated), support counting in
-    rank space, rounds=None peels to the fixed point under the
-    non-silent guard (pinned by tests/test_graph_algo.py: a triangle
-    strip unravels layer by layer, 2 rounds provably insufficient)."""
-    from .graph.algo import ktruss
-
-    und = _und_edges(spark, sf_dir)
-    return ktruss(und, k=4, rounds=2)
-
-
-@register(
-    "kg_scc",
-    _SQL_EDGES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , de AS (SELECT DISTINCT src, dst FROM edges WHERE src <> dst),
-    verts AS (SELECT src AS v FROM edges UNION SELECT dst FROM edges),
-    reach(a, b) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.a, e.dst FROM reach r JOIN de e ON r.b = e.src
-    ),
-    labels AS (
-      SELECT f.b AS v, MIN(f.a) AS scc_id
-      FROM reach f JOIN reach g ON f.a = g.b AND f.b = g.a
-      GROUP BY f.b)
-    SELECT scc_id, CAST(COUNT(*) AS BIGINT) AS scc_size
-    FROM labels GROUP BY scc_id
-    """,
-)
-def kg_scc(spark, sf_dir):
-    """STRONGLY connected components over the DIRECTED canonical graph
-    (subj -> obj) — the directed complement of kg_cc_components: cyclic
-    entity clusters (mutual USED-FOR / COMPARE loops) are exactly what
-    undirected components cannot see, and the SCC condensation is the
-    standard first step of cycle-aware KG consumption (topological
-    ordering, cycle collapse before DAG algorithms).
-
-    Spark side is the REAL distributed algorithm (graph/algo.py scc):
-    trim + FW-BW min-label peeling with pointer-jumped directed
-    min-reach fixpoints — per inner round one edge-keyed shuffle, every
-    frame localCheckpointed, loud outer/inner guards, nothing all-pairs.
-    The DuckDB oracle is the transitive-closure definition itself
-    (recursive CTE; mutual reachability => same SCC, labeled by the
-    minimum member) — exact by construction, viable only at oracle SF.
-
-    scc_id = min member, so the output grain (scc_id, scc_size) is
-    deterministic across engines without any tie-break subtlety."""
-    from .graph.algo import scc
-
-    de = kg_edges(spark, sf_dir).select("src", "dst").distinct()
-    labels = scc(de)
-    return labels.groupBy("scc_id").agg(
-        F.count("*").cast("bigint").alias("scc_size")
-    )
-
-
-@register(
-    "kg_triangles",
-    _SQL_EDGES
-    + _SQL_UND
-    + """
-    ,
-    dg AS (SELECT v, COUNT(*) AS deg FROM (
-             SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
-    rk AS (SELECT v, ROW_NUMBER() OVER (ORDER BY deg, v) AS r FROM dg),
-    od AS (SELECT LEAST(ra.r, rb.r) AS lo, GREATEST(ra.r, rb.r) AS hi
-           FROM und JOIN rk ra ON und.a = ra.v JOIN rk rb ON und.b = rb.v)
-    SELECT CAST((SELECT COUNT(*) FROM od e1
-                 JOIN od e2 ON e1.lo = e2.lo AND e1.hi < e2.hi
-                 JOIN od e3 ON e3.lo = e1.hi AND e3.hi = e2.hi) AS BIGINT)
-             AS n_triangles,
-           CAST((SELECT COUNT(*) FROM und) AS BIGINT) AS n_edges
-    """,
-)
-def kg_triangles(spark, sf_dir):
-    """Triangle count over the undirected canonical graph — the classic
-    cohesion/motif statistic, in the DEGREE-ORDERED formulation that
-    survives hubs: every vertex gets a rank by (degree, id), each edge
-    is oriented low-rank -> high-rank, and a triangle is counted exactly
-    once as a wedge at its lowest-rank corner closed by a third oriented
-    edge.  Orientation bounds the wedge join's per-key fan-out by
-    O(sqrt(m)) instead of a hub's full degree — the naive all-direction
-    join explodes quadratically on exactly the mega-hub the salting
-    story is about.  Ranks come from the two-pass global_row_number (no
-    single-partition window, r1 VERDICT); the rank dim is O(|V|) and
-    SIZE-GATED (functions/joins.maybe_broadcast, r5 VERDICT #1) —
-    broadcast under the gate, shuffle + AQE above it."""
-    from .functions.joins import maybe_broadcast
-    from .functions.ranks import global_row_number
-
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    dg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count("*").alias("deg"))
-    ).localCheckpoint(eager=True)
-    # one count off the checkpointed degree table gates both rank joins
-    # (rk is 1:1 with dg)
-    n_v = dg.count()
-    rk = global_row_number(dg, ["deg", "v"]).select(
-        "v", F.col("rn").alias("r")
-    )
-    od = (
-        und.join(maybe_broadcast(rk.withColumnRenamed("v", "a")
-                 .withColumnRenamed("r", "ra"), n_rows=n_v), on="a")
-        .join(maybe_broadcast(rk.withColumnRenamed("v", "b")
-              .withColumnRenamed("r", "rb"), n_rows=n_v), on="b")
-        .select(
-            F.least("ra", "rb").alias("lo"), F.greatest("ra", "rb").alias("hi")
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = od.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = od.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    e3 = od.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    wedges = e1.join(e2, on="x").filter(F.col("y") < F.col("z"))
-    tri = wedges.join(e3, on=["y", "z"])
-    n_edges = und.count()
-    return tri.agg(F.count("*").alias("n")).select(
-        F.col("n").cast("bigint").alias("n_triangles"),
-        F.lit(n_edges).cast("bigint").alias("n_edges"),
-    )
-
-
-@register(
-    "kg_link_prediction",
-    _SQL_EDGES
-    + _SQL_UND
-    + """
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    dg AS (SELECT v, COUNT(*) AS deg FROM nbr GROUP BY v),
-    cn AS (
-      SELECT x.v AS src, y.v AS dst, COUNT(*) AS common
-      FROM nbr x JOIN nbr y ON x.u = y.u AND x.v < y.v
-      GROUP BY 1, 2),
-    cand AS (
-      SELECT c.* FROM cn c
-      ANTI JOIN und e ON c.src = e.a AND c.dst = e.b),
-    scored AS (
-      SELECT c.src, c.dst, c.common,
-             c.common / (da.deg + db.deg - c.common + 1e-12) AS jac
-      FROM cand c
-      JOIN dg da ON c.src = da.v
-      JOIN dg db ON c.dst = db.v)
-    SELECT src, dst, CAST(common AS BIGINT) AS common_neighbors,
-           ROUND(jac, 4) AS jaccard
-    FROM scored
-    ORDER BY ROUND(jac, 6) DESC, src, dst LIMIT 20
-    """,
-)
-def kg_link_prediction(spark, sf_dir):
-    """LINK PREDICTION by neighborhood overlap — the classic KG-completion
-    heuristic (Liben-Nowell/Kleinberg) and the third leg of the
-    KG→training bridge (kg_negative_samples gives negatives,
-    kg_edge_split the split, this gives heuristic candidate positives /
-    hard negatives): for every NON-edge pair sharing >= 1 neighbor,
-    score = Jaccard of the two neighborhoods; top-20 emitted with
-    deterministic tie-breaks.  Distributed shape: candidates come from
-    the wedge join on the shared neighbor (never all-pairs — pairs with
-    zero common neighbors never materialize), existing edges leave via a
-    broadcast-able anti-join, degrees are a SIZE-GATED O(|V|) dim
-    (functions/joins.maybe_broadcast, r5 VERDICT #1), and the global
-    top-20 compiles to TakeOrderedAndProject (no single-partition
-    sort).  Hub wedge fan-out is the same skew the degree-ordered
-    triangle count bounds; at 100 TB you'd orient the wedge join the
-    same way (and/or cap per-vertex neighbor lists, observable)."""
-    from .functions.joins import maybe_broadcast
-
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    dg = nbr.groupBy("v").agg(F.count("*").alias("deg")).localCheckpoint(
-        eager=True
-    )
-    # degree dim is O(|V|) — size-gated broadcast (r5 VERDICT #1); the
-    # checkpoint makes the gating count a cached scan and stops the
-    # groupBy re-running per consumer.
-    n_v = dg.count()
-    cn = (
-        nbr.alias("x")
-        .join(nbr.alias("y"),
-              (F.col("x.u") == F.col("y.u")) & (F.col("x.v") < F.col("y.v")))
-        .groupBy(F.col("x.v").alias("src"), F.col("y.v").alias("dst"))
-        .agg(F.count("*").alias("common"))
-    )
-    cand = cn.join(
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        on=["src", "dst"], how="left_anti",
-    )
-    scored = (
-        cand.join(maybe_broadcast(dg.withColumnRenamed("v", "src")
-                  .withColumnRenamed("deg", "da"), n_rows=n_v), on="src")
-        .join(maybe_broadcast(dg.withColumnRenamed("v", "dst")
-              .withColumnRenamed("deg", "db"), n_rows=n_v), on="dst")
-        .withColumn(
-            "jac",
-            F.col("common")
-            / (F.col("da") + F.col("db") - F.col("common") + F.lit(1e-12)),
-        )
-    )
-    return (
-        scored.orderBy(F.desc(F.round("jac", 6)), "src", "dst")
-        .limit(20)
-        .select(
-            "src", "dst",
-            F.col("common").cast("bigint").alias("common_neighbors"),
-            F.round("jac", 4).alias("jaccard"),
-        )
-    )
-
-
-def _sql_lpa_round(prev: str, out: str) -> str:
-    """One synchronous label-propagation round: each vertex adopts its
-    neighbors' most frequent label, ties to the smallest label."""
-    return f"""
-    {out} AS (SELECT v, label FROM (
-      SELECT v, label,
-             ROW_NUMBER() OVER (PARTITION BY v ORDER BY c DESC, label) AS rn
-      FROM (SELECT n.v, l.label, COUNT(*) AS c
-            FROM nbr n JOIN {prev} l ON n.u = l.v
-            GROUP BY n.v, l.label)) WHERE rn = 1)"""
-
-
-@register(
-    "kg_communities_lpa",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    l0 AS (SELECT DISTINCT v, v AS label FROM nbr),
-    {_sql_lpa_round('l0', 'l1')},
-    {_sql_lpa_round('l1', 'l2')},
-    {_sql_lpa_round('l2', 'l3')}
-    SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM l3 GROUP BY label
-    """,
-)
-def kg_communities_lpa(spark, sf_dir):
-    """Community detection by synchronous LABEL PROPAGATION (3 unrolled
-    rounds, deterministic: most-frequent neighbor label, ties to the
-    smallest) over the undirected canonical graph — the near-linear
-    community primitive (Raghavan et al.) complementing exact CC: CC
-    finds connectivity, LPA finds densely-linked regions inside it.
-    Fixed round count keeps both engines bit-identical (async LPA's
-    update order is engine-dependent; synchronous + deterministic
-    tie-break is the portable formulation).  Per round: one shuffle on
-    the neighbor join + one (v, label) count + one min_by per vertex —
-    the CC per-round shape; labels are localCheckpointed per round so
-    the plan stays linear in rounds.  Shared loop: graph/algo.
-    lpa_communities — the production twin (rounds=None) iterates the
-    SAME code to convergence under the CC guard (r4 VERDICT #2; the
-    fixed-3 == first-3-iterations property is pinned by
-    tests/test_graph_algo.py)."""
-    from .graph.algo import lpa_communities
-
-    und = _und_edges(spark, sf_dir)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    )
-    labels = lpa_communities(nbr, rounds=3)
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count("*").alias("n_members")
-    )
-
-
-@register(
-    "kg_modularity",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    l0 AS (SELECT DISTINCT v, v AS label FROM nbr),
-    {_sql_lpa_round('l0', 'l1')},
-    {_sql_lpa_round('l1', 'l2')},
-    {_sql_lpa_round('l2', 'l3')},
-    deg AS (SELECT v, COUNT(*) AS deg FROM nbr GROUP BY v),
-    m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM und),
-    ein AS (
-      SELECT la.label AS community, COUNT(*) AS e_in
-      FROM und u
-      JOIN l3 la ON u.a = la.v
-      JOIN l3 lb ON u.b = lb.v AND la.label = lb.label
-      GROUP BY 1),
-    dsum AS (
-      SELECT l.label AS community, CAST(COUNT(*) AS BIGINT) AS n_members,
-             CAST(SUM(d.deg) AS BIGINT) AS deg_sum
-      FROM l3 l JOIN deg d ON l.v = d.v GROUP BY 1)
-    SELECT ds.community, ds.n_members,
-           CAST(COALESCE(e.e_in, 0) AS BIGINT) AS e_in, ds.deg_sum,
-           ROUND(CAST(COALESCE(e.e_in, 0) AS DOUBLE) / m.m
-                 - POWER(CAST(ds.deg_sum AS DOUBLE) / (2.0 * m.m), 2), 6)
-             AS q_contrib
-    FROM dsum ds LEFT JOIN ein e ON ds.community = e.community, m
-    """,
-)
-def kg_modularity(spark, sf_dir):
-    """Newman MODULARITY of the LPA partition — the quality score that
-    closes the community-detection loop (detect with kg_communities_lpa,
-    evaluate here): per community c, Q_c = e_in(c)/m - (deg_sum(c)/2m)^2;
-    global Q is the sum of the rows.  Same deterministic 3-round
-    synchronous LPA as the detection query (shared graph/algo loop), so
-    both engines score the SAME partition.
-
-    Scale shape: e_in is the edge table joined to the vertex-scale label
-    dim twice — keyed shuffle joins, NOT broadcast (labels are O(|V|);
-    the r5 gate rule); deg_sum is one groupBy over the neighbor list;
-    2m is a 1-row aggregate crossJoined in (broadcast of literally one
-    row), never a driver collect.  Scoring lives in graph/algo.modularity
-    (unit-pinned on a two-triangle bridge graph with hand-computed Q)."""
-    from .graph.algo import lpa_communities, modularity
-
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    labels = lpa_communities(nbr, rounds=3)
-    return modularity(und, labels)
-
-
-@register(
-    "kg_sage_features",
-    _SQL_EDGES
-    + _SQL_UND
-    + """
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM nbr GROUP BY v),
-    nodes AS (SELECT md5(t.tok || ':' || l.ent_type) AS canonical_id,
-                     CAST(COUNT(*) AS BIGINT) AS mentions
-              FROM tok t JOIN lex l ON t.tok = l.tok GROUP BY 1),
-    feats AS (SELECT d.v, d.deg, n.mentions
-              FROM deg d JOIN nodes n ON n.canonical_id = d.v),
-    agg AS (
-      SELECT nb.v, CAST(COUNT(*) AS BIGINT) AS n_nbrs,
-             AVG(f.deg) AS mdeg, AVG(f.mentions) AS mmen,
-             CAST(MAX(f.deg) AS BIGINT) AS xdeg
-      FROM nbr nb JOIN feats f ON f.v = nb.u GROUP BY nb.v)
-    SELECT f.v AS canonical_id, f.deg, f.mentions, a.n_nbrs,
-           ROUND(a.mdeg, 4) AS nbr_mean_deg,
-           ROUND(a.mmen, 4) AS nbr_mean_mentions,
-           a.xdeg AS nbr_max_deg
-    FROM feats f JOIN agg a ON a.v = f.v
-    """,
-)
-def kg_sage_features(spark, sf_dir):
-    """One GraphSAGE message-passing round (Hamilton et al. 2017,
-    arXiv:1706.02216 — the mean aggregator) as relational algebra: node
-    features h0 = [degree, mention_count], neighborhood aggregation
-    h1(v) = [h0(v) || mean/max over neighbors of h0(u)] — the
-    GNN-training feature table a downstream model consumes, produced
-    without any GNN framework.
-
-    Scale shape: the feature dim is O(|V|) and attaches via KEYED joins
-    (never force-broadcast — the gate rule); aggregation is ONE
-    edge-keyed shuffle per hop with map-side combine; stacking K hops
-    repeats the join+agg block K times (each round reads only the
-    previous round's fixed-width feature table, the same per-round
-    shape as the PageRank loop)."""
-    und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    deg = nbr.groupBy("v").agg(F.count("*").alias("deg"))
-    nodes = kg_nodes(spark, sf_dir).groupBy("canonical_id").agg(
-        F.sum("mention_count").alias("mentions")
-    )
-    feats = deg.join(
-        nodes.select(F.col("canonical_id").alias("v"), "mentions"), "v"
-    ).localCheckpoint(eager=True)
-    agg = (
-        nbr.join(
-            feats.select(
-                F.col("v").alias("u"),
-                F.col("deg").alias("udeg"),
-                F.col("mentions").alias("umen"),
-            ),
-            "u",
-        )
-        .groupBy("v")
-        .agg(
-            F.count("*").alias("n_nbrs"),
-            F.avg("udeg").alias("mdeg"),
-            F.avg("umen").alias("mmen"),
-            F.max("udeg").alias("xdeg"),
-        )
-    )
-    return feats.join(agg, "v").select(
-        F.col("v").alias("canonical_id"),
-        "deg",
-        "mentions",
-        "n_nbrs",
-        F.round("mdeg", 4).alias("nbr_mean_deg"),
-        F.round("mmen", 4).alias("nbr_mean_mentions"),
-        F.col("xdeg").alias("nbr_max_deg"),
-    )
-
-
-def _sql_walk_step(t: int) -> str:
-    """One deterministic walk hop: next = neighbor at index
-    charfold(md5(walk:step:cur)) % deg(cur) — the SQL twin of the Spark
-    step inside graph/algo.random_walks (the WELL-MIXED hash; the raw
-    charfold linear mix measurably biased the choice — node2vec
-    lesson)."""
-    return f"""
-    w{t} AS (
-      SELECT w.walk_id, x.u AS cur
-      FROM w{t - 1} w
-      JOIN vinfo i ON i.v = w.cur
-      JOIN nbrx x ON x.v = w.cur
-        AND x.idx =
-          {sql_charfold(f"md5(w.walk_id || ':{t}:' || w.cur)")} % i.deg)"""
-
-
-@register(
-    "kg_random_walks",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    nbrx AS (SELECT v, u,
-                    ROW_NUMBER() OVER (PARTITION BY v ORDER BY u) - 1 AS idx
-             FROM nbr),
-    vinfo AS (SELECT v, COUNT(*) AS deg FROM nbr GROUP BY v),
-    w0 AS (SELECT v AS walk_id, v AS cur FROM vinfo),
-    {','.join(_sql_walk_step(t) for t in range(1, 5))}
-    SELECT walk_id, CAST(0 AS BIGINT) AS pos, cur AS node FROM w0
-    UNION ALL SELECT walk_id, CAST(1 AS BIGINT), cur FROM w1
-    UNION ALL SELECT walk_id, CAST(2 AS BIGINT), cur FROM w2
-    UNION ALL SELECT walk_id, CAST(3 AS BIGINT), cur FROM w3
-    UNION ALL SELECT walk_id, CAST(4 AS BIGINT), cur FROM w4
-    """,
-)
-def kg_random_walks(spark, sf_dir):
-    """Random-walk CORPUS GENERATION over the canonical graph — the
-    DeepWalk/node2vec preprocessing step (Perozzi et al. 2014): one
-    length-4 walk per vertex, emitted as (walk_id, pos, node) training
-    rows for a downstream skip-gram embedder.  The next-hop choice is a
-    deterministic hash over (walk, step, current) into the rank-indexed
-    adjacency — a seeded surrogate for uniform neighbor sampling that
-    DuckDB replays bit-identically (shared charfold), so the whole
-    corpus is oracle-checked, not just its shape.  Walk loop:
-    graph/algo.random_walks (per-step state = one row per walk; two
-    keyed shuffle joins per hop, adjacency never broadcast)."""
-    from .graph.algo import random_walks
-
-    und = _und_edges(spark, sf_dir)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    return random_walks(nbr, length=4)
-
-
-_SKIPGRAM_WIN = 2  # context window over walk positions
-
-
-@register(
-    "kg_walk_skipgrams",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    nbrx AS (SELECT v, u,
-                    ROW_NUMBER() OVER (PARTITION BY v ORDER BY u) - 1 AS idx
-             FROM nbr),
-    vinfo AS (SELECT v, COUNT(*) AS deg FROM nbr GROUP BY v),
-    w0 AS (SELECT v AS walk_id, v AS cur FROM vinfo),
-    {','.join(_sql_walk_step(t) for t in range(1, 5))},
-    corpus AS (
-      SELECT walk_id, CAST(0 AS BIGINT) AS pos, cur AS node FROM w0
-      UNION ALL SELECT walk_id, CAST(1 AS BIGINT), cur FROM w1
-      UNION ALL SELECT walk_id, CAST(2 AS BIGINT), cur FROM w2
-      UNION ALL SELECT walk_id, CAST(3 AS BIGINT), cur FROM w3
-      UNION ALL SELECT walk_id, CAST(4 AS BIGINT), cur FROM w4)
-    SELECT a.node AS center, b.node AS context,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM corpus a JOIN corpus b
-      ON a.walk_id = b.walk_id AND a.pos <> b.pos
-      AND ABS(a.pos - b.pos) <= {_SKIPGRAM_WIN}
-    GROUP BY 1, 2
-    """,
-)
-def kg_walk_skipgrams(spark, sf_dir):
-    """SKIP-GRAM PAIR EXTRACTION from the walk corpus — the step that
-    turns kg_random_walks into actual embedding training data (the
-    word2vec/DeepWalk (center, context) pairs with counts, window ±2
-    over walk positions).  Completes the graph→embedding-training
-    bridge end-to-end: walks → co-occurrence pairs → (downstream) SGNS.
-    Pair counts are exact and bit-replayable because the walks are.
-
-    Scale shape: the pairing is a self-join on walk_id with a
-    position-band predicate — each walk contributes at most
-    (len+1)·2W rows, so the join is LINEAR in the corpus (walk-keyed,
-    never all-pairs); the count is one map-side-combined groupBy on
-    the (center, context) key."""
-    from .graph.algo import random_walks
-
-    und = _und_edges(spark, sf_dir)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    corpus = random_walks(nbr, length=4).localCheckpoint(eager=True)
-    a = corpus.select("walk_id", F.col("pos").alias("pa"),
-                      F.col("node").alias("center"))
-    b = corpus.select("walk_id", F.col("pos").alias("pb"),
-                      F.col("node").alias("context"))
-    return (
-        a.join(b, "walk_id")
-        .filter(
-            (F.col("pa") != F.col("pb"))
-            & (F.abs(F.col("pa") - F.col("pb")) <= _SKIPGRAM_WIN)
-        )
-        .groupBy("center", "context")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def _sql_n2v_step(t: int) -> str:
-    """One node2vec biased hop (p=4, q=0.25): alpha per candidate from
-    the (prev, cur, candidate) geometry, then cumulative-weight
-    inversion at threshold u01 × total with the WELL-MIXED hash-uniform
-    charfold(md5(walk:step:cur)) — the SQL twin of one loop body in
-    graph/algo.node2vec_walks.  All alphas are powers of two, so every
-    sum is exact and the cum >= r comparison is order-independent on
-    both engines."""
-    return f"""
-    cd{t} AS (SELECT f.walk_id, f.prev, f.cur, x.u, x.idx,
-                     CASE WHEN x.u = f.prev THEN 0.25
-                          WHEN e.v IS NOT NULL THEN 1.0
-                          ELSE 4.0 END AS alpha
-              FROM f{t - 1} f
-              JOIN nbrx x ON x.v = f.cur
-              LEFT JOIN nbr e ON e.v = f.prev AND e.u = x.u),
-    cw{t} AS (SELECT *,
-                     SUM(alpha) OVER (PARTITION BY walk_id ORDER BY idx)
-                       AS cum,
-                     SUM(alpha) OVER (PARTITION BY walk_id) AS tot
-              FROM cd{t}),
-    pk{t} AS (SELECT walk_id, cur, u,
-                     ROW_NUMBER() OVER (PARTITION BY walk_id ORDER BY idx)
-                       AS rn
-              FROM cw{t}
-              WHERE cum >= CAST(
-                {sql_charfold(f"md5(walk_id || ':{t}:' || cur)")}
-                AS DOUBLE) / {MOD} * tot),
-    f{t} AS (SELECT walk_id, cur AS prev, u AS cur
-             FROM pk{t} WHERE rn = 1)"""
-
-
-@register(
-    "kg_node2vec_walks",
-    _SQL_EDGES
-    + _SQL_UND
-    + f"""
-    ,
-    nbr AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und),
-    nbrx AS (SELECT v, u,
-                    ROW_NUMBER() OVER (PARTITION BY v ORDER BY u) - 1 AS idx
-             FROM nbr),
-    vinfo AS (SELECT v, COUNT(*) AS deg FROM nbr GROUP BY v),
-    f0 AS (SELECT v AS walk_id, v AS cur FROM vinfo),
-    f1 AS (SELECT w.walk_id, w.cur AS prev, x.u AS cur
-           FROM f0 w JOIN vinfo i ON i.v = w.cur
-           JOIN nbrx x ON x.v = w.cur
-             AND x.idx =
-               {sql_charfold("md5(w.walk_id || ':1:' || w.cur)")} % i.deg),
-    {_sql_n2v_step(2)},
-    {_sql_n2v_step(3)},
-    {_sql_n2v_step(4)}
-    SELECT walk_id, CAST(0 AS BIGINT) AS pos, cur AS node FROM f0
-    UNION ALL SELECT walk_id, CAST(1 AS BIGINT), cur FROM f1
-    UNION ALL SELECT walk_id, CAST(2 AS BIGINT), cur FROM f2
-    UNION ALL SELECT walk_id, CAST(3 AS BIGINT), cur FROM f3
-    UNION ALL SELECT walk_id, CAST(4 AS BIGINT), cur FROM f4
-    """,
-)
-def kg_node2vec_walks(spark, sf_dir):
-    """node2vec SECOND-ORDER biased walk corpus (Grover & Leskovec
-    2016) over the canonical graph — the upgrade from kg_random_walks'
-    uniform hops: each step weights candidates by where the walk CAME
-    FROM (return 1/p, common-neighbor 1, outward 1/q; p=4, q=0.25 =
-    the DFS-ish structural regime), so the emitted skip-gram corpus
-    encodes different structure than DeepWalk's.  Sampling is
-    cumulative-weight inversion with the deterministic hash-uniform,
-    and p/q are POWERS OF TWO so every weight sum is exact in binary —
-    the whole corpus is oracle-checked bit-identically, not just its
-    shape.  Walk loop: graph/algo.node2vec_walks (frontier = one row
-    per walk; per step one edge-keyed shuffle + one no-fanout LEFT
-    join for the distance-1 marker + a degree-bounded per-walk window;
-    nothing vertex-scale force-broadcast)."""
-    from .graph.algo import node2vec_walks
-
-    und = _und_edges(spark, sf_dir)
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    return node2vec_walks(nbr, length=4, p=4.0, q=0.25)
-
-
-@register(
-    "kg_metapaths",
-    _SQL_EDGES
-    + """
-    , de AS (SELECT DISTINCT src, dst, pred FROM edges),
-    p AS (SELECT e1.pred AS pred1, e2.pred AS pred2,
-                 e1.src AS a, e2.dst AS c
-          FROM de e1 JOIN de e2 ON e1.dst = e2.src AND e1.src <> e2.dst),
-    cnt AS (SELECT pred1, pred2, CAST(COUNT(*) AS BIGINT) AS n_paths
-            FROM p GROUP BY 1, 2),
-    ep AS (SELECT pred1, pred2, CAST(COUNT(*) AS BIGINT) AS n_endpoint_pairs
-           FROM (SELECT DISTINCT pred1, pred2, a, c FROM p) GROUP BY 1, 2)
-    SELECT cnt.pred1, cnt.pred2, cnt.n_paths, ep.n_endpoint_pairs
-    FROM cnt JOIN ep ON ep.pred1 = cnt.pred1 AND ep.pred2 = cnt.pred2
-    """,
-)
-def kg_metapaths(spark, sf_dir):
-    """METAPATH census — length-2 predicate-typed path counts
-    (pred1 → pred2), the schema-level connectivity profile
-    metapath2vec-style samplers and KG-completion rules consume (Dong
-    et al. 2017, KDD; Lao & Cohen 2010 path-ranking): for every ordered
-    predicate pair, how many directed 2-paths compose them and between
-    how many distinct endpoint pairs (composition support vs fan-out —
-    a pair with many paths but few endpoints is a hub artifact, not a
-    compositional rule).  Length-2 cycles (a → b → a) are excluded.
-
-    Scale shape: ONE self-join on the shared mid vertex — the wedge
-    join, keyed on the join vertex, never all-pairs; the result grain
-    is predicate-vocabulary-bounded (≤ |P|² rows).  Hub wedge fan-out
-    is the same skew the degree-ordered triangle count bounds; at
-    100 TB orient or salt the mid-vertex key the same way."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst", "pred").distinct()
-    e1 = de.select(
-        F.col("src").alias("a"), F.col("dst").alias("m"),
-        F.col("pred").alias("pred1"),
-    )
-    e2 = de.select(
-        F.col("src").alias("m"), F.col("dst").alias("c"),
-        F.col("pred").alias("pred2"),
-    )
-    p = e1.join(e2, "m").filter(F.col("a") != F.col("c"))
-    # endpoint support counted over the (a, c) PAIR, never a string
-    # concat — entity surfaces may contain any delimiter, and a
-    # concat collision ('x:y', 'z') == ('x', 'y:z') undercounts on
-    # both engines identically, which the oracle cannot catch
-    return p.groupBy("pred1", "pred2").agg(
-        F.count("*").alias("n_paths"),
-        F.countDistinct("a", "c").alias("n_endpoint_pairs"),
-    )
-
-
-@register(
-    "kg_qa_pairs",
-    SQL_TRIPLES
-    + """
-    , dt AS (SELECT DISTINCT subj, pred, obj FROM triples)
-    SELECT 'rel' AS template, subj, obj,
-           'What is the relation between "' || subj || '" and "' || obj
-             || '"?' AS question,
-           pred AS answer
-    FROM dt
-    UNION ALL
-    SELECT 'cloze', subj, obj, subj || ' ' || pred || ' ___', obj
-    FROM dt
-    """,
-)
-def kg_qa_pairs(spark, sf_dir):
-    """KG→INSTRUCTION-DATA verbalization — turn every distinct triple
-    into supervised (question, answer) examples, the standard
-    KBQA/instruction-tuning synthesis step (KG-to-text verbalization,
-    e.g. KELM, Agarwal et al. 2021): a relation-prediction template
-    ("What is the relation between X and Y?" → pred) and a cloze
-    template ("X pred ___" → obj).  This is the final leg of the
-    KG→training bridge: kg_edge_split gives the split,
-    kg_negative_samples the negatives, kg_walk_skipgrams the embedding
-    pairs, and this the text-supervision pairs.
-
-    Scale shape: one distinct over triples then ROW-LOCAL string
-    templating (whole-stage codegen, no shuffle beyond the distinct);
-    adding templates adds union legs, not passes — at 100 TB the
-    triple distinct is the only cost and it is already materialized by
-    the cascade."""
-    t = kg_triples(spark, sf_dir).select("subj", "pred", "obj").distinct()
-    rel = t.select(
-        F.lit("rel").alias("template"),
-        "subj",
-        "obj",
-        F.concat(
-            F.lit('What is the relation between "'),
-            F.col("subj"),
-            F.lit('" and "'),
-            F.col("obj"),
-            F.lit('"?'),
-        ).alias("question"),
-        F.col("pred").alias("answer"),
-    )
-    cloze = t.select(
-        F.lit("cloze").alias("template"),
-        "subj",
-        "obj",
-        F.concat_ws(" ", "subj", "pred", F.lit("___")).alias("question"),
-        F.col("obj").alias("answer"),
-    )
-    return rel.unionByName(cloze)
-
-
-@register(
-    "kg_ego_network",
-    _SQL_EDGES
-    + """
-    , deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    hub AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 1)
-    SELECT e.pred,
-           CAST(COUNT(*) AS BIGINT) AS n_edges,
-           CAST(COUNT(DISTINCT CASE WHEN e.src = h.v THEN e.dst ELSE e.src END)
-                AS BIGINT) AS n_neighbors
-    FROM edges e JOIN hub h ON e.src = h.v OR e.dst = h.v
-    GROUP BY e.pred
-    """,
-)
-def kg_ego_network(spark, sf_dir):
-    """Ego network of the highest-degree node (deterministic hub pick:
-    degree desc, id asc): per-predicate edge and distinct-neighbor counts
-    — hub inspection, the query that motivates the salting/skew handling."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    hub = deg.orderBy(F.desc("degree"), "v").limit(1).select("v")
-    ego = e.join(
-        F.broadcast(hub), (e.src == F.col("v")) | (e.dst == F.col("v"))
-    )
-    nbr = F.when(F.col("src") == F.col("v"), F.col("dst")).otherwise(F.col("src"))
-    return ego.groupBy("pred").agg(
-        F.count("*").alias("n_edges"),
-        F.countDistinct(nbr).alias("n_neighbors"),
-    )
-
-
-_SQL_PAGERANK = _SQL_EDGES + """
-    , de AS (SELECT DISTINCT src, dst FROM edges),
-    verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
-    nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-    od AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM de GROUP BY src),
-    pr0 AS (SELECT v, 1.0 / n AS pr FROM verts, nn),
-    dang1 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr0 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c1 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr0 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr1 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c1.s, 0) + dang1.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang1
-      LEFT JOIN c1 ON verts.v = c1.v),
-    dang2 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr1 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c2 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr1 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr2 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c2.s, 0) + dang2.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang2
-      LEFT JOIN c2 ON verts.v = c2.v),
-    dang3 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr2 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c3 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr2 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr3 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c3.s, 0) + dang3.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang3
-      LEFT JOIN c3 ON verts.v = c3.v),
-    final AS (SELECT v, pr FROM pr3)
-    SELECT v, ROUND(pr, 8) AS pr FROM final
-"""
-
-def _sql_ppr_round(prev: str, c: str, dang: str, out: str) -> str:
-    """One personalized-PageRank power round: teleport AND dangling mass
-    return to the seed vertex instead of spreading uniformly."""
-    return f"""
-    {dang} AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM {prev} p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    {c} AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN {prev} p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    {out} AS (
-      SELECT verts.v,
-             0.15 * (CASE WHEN verts.v = seed.sv THEN 1 ELSE 0 END)
-             + 0.85 * (COALESCE({c}.s, 0)
-                       + {dang}.dang
-                         * (CASE WHEN verts.v = seed.sv THEN 1 ELSE 0 END)) AS pr
-      FROM verts CROSS JOIN seed CROSS JOIN {dang}
-      LEFT JOIN {c} ON verts.v = {c}.v)"""
-
-
-_SQL_PPR = _SQL_EDGES + f"""
-    , de AS (SELECT DISTINCT src, dst FROM edges),
-    verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
-    od AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM de GROUP BY src),
-    alldeg AS (SELECT v, COUNT(*) AS d FROM (
-      SELECT src AS v FROM de UNION ALL SELECT dst FROM de) GROUP BY v),
-    seed AS (SELECT v AS sv FROM alldeg ORDER BY d DESC, v LIMIT 1),
-    pr0 AS (SELECT verts.v,
-                   CASE WHEN verts.v = seed.sv THEN 1.0 ELSE 0.0 END AS pr
-            FROM verts, seed),
-    {_sql_ppr_round('pr0', 'c1', 'dang1', 'pr1')},
-    {_sql_ppr_round('pr1', 'c2', 'dang2', 'pr2')},
-    {_sql_ppr_round('pr2', 'c3', 'dang3', 'pr3')}
-    SELECT v, ROUND(pr, 8) AS ppr FROM pr3
-"""
-
-
-@register("kg_ppr", _SQL_PPR)
-def kg_ppr(spark, sf_dir):
-    """PERSONALIZED PageRank from the top-degree hub (3 power rounds,
-    d=0.85): the restart vector is concentrated at the seed, and
-    dangling mass returns to it — so scores measure proximity TO THE
-    SEED, the KG-recommendation / related-entity primitive (global
-    PageRank measures importance; PPR measures relevance).  Seed choice
-    is deterministic (max total degree, ties to smallest id).  Same
-    per-round shape as kg_pagerank: one contribution shuffle on the edge
-    key + a tiny dangling aggregate; oracle unrolls the identical three
-    rounds.  Shared loop: graph/algo.pagerank(seed=...) — rounds=None
-    gives the convergence-mode production twin."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst").distinct().localCheckpoint(eager=True)
-    alldeg = (
-        de.select(F.col("src").alias("v"))
-        .unionByName(de.select(F.col("dst").alias("v")))
-        .groupBy("v").agg(F.count("*").alias("d"))
-    )
-    seed = alldeg.orderBy(F.desc("d"), "v").limit(1).collect()[0].v
-    from .graph.algo import pagerank
-
-    return pagerank(de, rounds=3, seed=seed).select(
-        "v", F.round("pr", 8).alias("ppr")
-    )
-
-
-@register("kg_pagerank", _SQL_PAGERANK)
-def kg_pagerank(spark, sf_dir):
-    """PageRank over the materialized KG (3 power iterations, d=0.85,
-    dangling mass redistributed uniformly) — the entity-importance
-    primitive a KG consumer ranks hubs with.  Same iterative-join shape
-    as the CC loop: per round one contribution shuffle on the edge key +
-    one tiny dangling aggregate; the oracle unrolls the identical three
-    rounds.  Plain joins, no UDF; round(…, 8) absorbs cross-engine float
-    summation order.  Shared loop: graph/algo.pagerank — the production
-    twin (rounds=None) power-iterates the SAME code to tolerance under
-    the CC guard (r4 VERDICT #2; pinned by tests/test_graph_algo.py)."""
-    from .graph.algo import pagerank
-
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst").distinct()
-    return pagerank(de, rounds=3).select("v", F.round("pr", 8).alias("pr"))
-
-
-@register("kg_pagerank_cached", _SQL_PAGERANK)
-def kg_pagerank_cached(spark, sf_dir):
-    """kg_pagerank over the MATERIALIZED edges stage (r6 VERDICT #3):
-    production analytics do not recompute the extraction cascade per
-    algorithm — they read the edges table kg_job already wrote.  This
-    row pins that path end-to-end: the edges stage is built-or-resumed
-    through lineage.StageRunner (config-hash-gated _COMPLETE marker,
-    per-partition lineage rows) into a deterministic per-SF cache dir,
-    and PageRank runs over the stage READ-BACK, not the in-memory
-    frame.  First run per session/SF pays one cascade + parquet write;
-    every later run (and every other cached-graph consumer) starts at
-    the scan.  The oracle is kg_pagerank's unrolled 3-round SQL
-    UNCHANGED — materialize-then-read must be value-identical to the
-    straight-through plan.
-
-    Scale shape: the algorithm's per-round cost (one edge-keyed shuffle
-    + tiny dangling aggregate) is unchanged; what this buys at 100 TB
-    is amortization — the ~62 s cascade cost measured at the 100x
-    fixture (docs/SCALE.md) is paid once per graph epoch instead of
-    once per analytics query.  BENCH/CONVERGENCE.md carries the
-    algorithm-only walls this separation makes visible."""
-    import hashlib as _hashlib
-    import inspect as _inspect
-
-    from .graph.algo import pagerank
-    from .lineage import StageRunner
-
-    tag = _hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    # the edges-query SOURCE hash rides in the config: StageRunner's
-    # config-hash gate then auto-invalidates the cache when this query's
-    # definition changes (best-effort staleness guard — transitive
-    # cascade modules aren't hashed; a stale /tmp cache surviving a
-    # code change would otherwise silently diverge from the oracle)
-    logic = _hashlib.sha256(
-        _inspect.getsource(kg_edges).encode()
-    ).hexdigest()[:16]
-    runner = StageRunner(
-        spark,
-        f"/tmp/kgforge_stage_cache_{tag}",
-        run_id="graph-cache",
-        config={"stage": "kg_edges", "sf_dir": sf_dir, "logic": logic},
-    )
-    e = runner.run("edges", lambda: kg_edges(spark, sf_dir))
-    de = e.select("src", "dst").distinct()
-    return pagerank(de, rounds=3).select("v", F.round("pr", 8).alias("pr"))
-
-
-def _sql_wpr_round(prev: str, c: str, dang: str, out: str) -> str:
-    """One WEIGHTED power round: each edge forwards pr·w/Σw (out-weight
-    sum), dangling mass redistributed uniformly — the SQL twin of
-    _pr_step over a weighted edge list."""
-    return f"""
-    {dang} AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM {prev} p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    {c} AS (SELECT wde.dst AS v, SUM(p.pr * wde.w / od.deg) AS s
-      FROM wde JOIN {prev} p ON wde.src = p.v JOIN od ON wde.src = od.src
-      GROUP BY wde.dst),
-    {out} AS (SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE({c}.s, 0)
-                                   + {dang}.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN {dang}
-      LEFT JOIN {c} ON verts.v = {c}.v)"""
-
-
-@register(
-    "kg_pagerank_weighted",
-    _SQL_EDGES
-    + f"""
-    , wde AS (SELECT src, dst, CAST(SUM(weight) AS DOUBLE) AS w
-              FROM edges GROUP BY 1, 2),
-    verts AS (SELECT src AS v FROM wde UNION SELECT dst FROM wde),
-    nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-    od AS (SELECT src, SUM(w) AS deg FROM wde GROUP BY src),
-    pr0 AS (SELECT v, 1.0 / n AS pr FROM verts, nn),
-    {_sql_wpr_round('pr0', 'c1', 'dang1', 'pr1')},
-    {_sql_wpr_round('pr1', 'c2', 'dang2', 'pr2')},
-    {_sql_wpr_round('pr2', 'c3', 'dang3', 'pr3')}
-    SELECT v, ROUND(pr, 8) AS pr FROM pr3
-    """,
-)
-def kg_pagerank_weighted(spark, sf_dir):
-    """WEIGHTED PageRank (3 power rounds, d=0.85): edge weight = triple
-    multiplicity (how many times the KG asserted src→dst, summed over
-    predicates), so rank flows proportionally to assertion EVIDENCE
-    instead of splitting uniformly — the ranking a KG consumer wants
-    when one entity pair co-occurs 50× and another once.  Same
-    per-round shape as kg_pagerank (one contribution shuffle on the
-    edge key + a tiny dangling aggregate); the weight rides the edge
-    row, so the weighted walk costs exactly what the uniform walk
-    costs.  Shared loop: graph/algo.pagerank detects the ``w`` column
-    (w≡1.0 reduces bit-identically to the uniform split — pinned by
-    test_graph_algo); rounds=None gives the convergence-mode twin."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    wde = e.groupBy("src", "dst").agg(
-        F.sum("weight").cast("double").alias("w")
-    )
-    from .graph.algo import pagerank
-
-    return pagerank(wde, rounds=3).select("v", F.round("pr", 8).alias("pr"))
-
-
-@register(
-    "kg_pagerank_converged",
-    _SQL_EDGES
-    + """
-    , dedges AS (SELECT DISTINCT src, dst FROM edges),
-    verts AS (SELECT src AS v FROM dedges UNION SELECT dst FROM dedges)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vertices,
-           CAST(1.0 AS DOUBLE) AS sum_pr,
-           TRUE AS fixpoint_ok
-    FROM verts
-    """,
-)
-def kg_pagerank_converged(spark, sf_dir):
-    """CONVERGED PageRank consumed end-to-end (r5 VERDICT #4): the
-    production mode — graph/algo.pagerank(rounds=None) power-iterating
-    to tol=1e-6 under the non-silent guard — feeding a FIXPOINT-
-    ASSERTING summary.  Columns: vertex count (oracle-derivable from
-    the edge table), total rank mass (sums to 1 under uniform restart +
-    uniform dangling redistribution; rounded to 4dp to absorb float
-    summation order), and fixpoint_ok = one FURTHER synchronous step
-    moves no vertex by more than tol (algo.pagerank_residual — the same
-    _pr_step code the loop runs, so the assertion exercises the update
-    rule, not a copy).  The oracle pins the invariants' expected
-    values; rounds-to-converge and wall/round — not SQL-derivable — are
-    measured in BENCH/CONVERGENCE.md (scripts/bench_convergence.py)."""
-    from .graph.algo import _pr_setup, pagerank, pagerank_residual
-
-    tol = 1e-6
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst").distinct()
-    # r8: ONE _pr_setup shared by the loop and the residual check (the
-    # static frames — checkpointed edges, vertex set, out-degrees,
-    # dangling set — were previously re-materialized by
-    # pagerank_residual); n_vertices is setup's vertex count (pr has
-    # exactly one row per vertex), not a separate count job.
-    setup = _pr_setup(de)
-    n_v = setup[2]
-    pr = pagerank(
-        de, rounds=None, tol=tol, max_rounds=150, _setup=setup
-    ).localCheckpoint(eager=True)
-    resid = pagerank_residual(de, pr, _setup=setup)
-    mass = pr.agg(F.sum("pr")).collect()[0][0]
-    return spark.createDataFrame(
-        [(n_v, float(round(mass, 4)), bool(resid <= tol))],
-        "n_vertices bigint, sum_pr double, fixpoint_ok boolean",
-    )
-
-
-def _sql_hits_round(t: int) -> str:
-    """One synchronous HITS round — auth from in-neighbor hubs, hub from
-    out-neighbor auths, each L2-normalized (the SQL twin of one loop
-    body in graph/algo.hits)."""
-    return f"""
-    ar{t} AS (SELECT de.dst AS v, SUM(h.hub) AS s
-              FROM de JOIN hub{t - 1} h ON de.src = h.v GROUP BY de.dst),
-    an{t} AS (SELECT SQRT(SUM(s * s)) AS nrm FROM ar{t}),
-    auth{t} AS (SELECT verts.v, COALESCE(ar{t}.s, 0) / an{t}.nrm AS auth
-                FROM verts CROSS JOIN an{t}
-                LEFT JOIN ar{t} ON verts.v = ar{t}.v),
-    hr{t} AS (SELECT de.src AS v, SUM(a.auth) AS s
-              FROM de JOIN auth{t} a ON de.dst = a.v GROUP BY de.src),
-    hn{t} AS (SELECT SQRT(SUM(s * s)) AS nrm FROM hr{t}),
-    hub{t} AS (SELECT verts.v, COALESCE(hr{t}.s, 0) / hn{t}.nrm AS hub
-               FROM verts CROSS JOIN hn{t}
-               LEFT JOIN hr{t} ON verts.v = hr{t}.v)"""
-
-
-@register(
-    "kg_hits",
-    _SQL_EDGES
-    + f"""
-    , de AS (SELECT DISTINCT src, dst FROM edges),
-    verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
-    hub0 AS (SELECT v, 1.0 AS hub FROM verts),
-    {_sql_hits_round(1)},
-    {_sql_hits_round(2)}
-    SELECT h.v, ROUND(h.hub, 8) AS hub, ROUND(a.auth, 8) AS auth
-    FROM hub2 h JOIN auth2 a ON a.v = h.v
-    """,
-)
-def kg_hits(spark, sf_dir):
-    """HITS hubs & authorities over the materialized KG (2 synchronous
-    rounds, L2-normalized): the DIRECTED importance primitive PageRank
-    doesn't give — a vertex that points at many good authorities (a
-    survey/aggregator entity) scores as a hub even with no in-links,
-    and vice versa.  Directionality matters in a KG: subjects that
-    assert many relations are hubs, frequently-referenced objects are
-    authorities.  Per-round shape: TWO contribution aggregates (one per
-    orientation) with in-plan norms — the pagerank per-round discipline
-    doubled; vertex frames never force-broadcast (size-gated
-    maybe_broadcast: broadcast under the gate, keyed shuffle above
-    it).  Oracle unrolls the identical two rounds.  Shared
-    loop: graph/algo.hits — rounds=None gives the convergence-mode
-    production twin under the non-silent guard (tests/test_graph_algo
-    pins hand-computed star-graph values and convergence behavior)."""
-    from .graph.algo import hits
-
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst").distinct()
-    return hits(de, rounds=2).select(
-        "v", F.round("hub", 8).alias("hub"), F.round("auth", 8).alias("auth")
-    )
-
-
-_PACK_CAP = 128  # token budget per packed sequence (context-window bin)
-
-
-@register(
-    "pack_sequences",
-    f"""
-    WITH RECURSIVE d AS (
-      SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-             ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-      FROM documents),
-    st(lang, rn, doc_id, n, bin, fill) AS (
-      SELECT lang, rn, doc_id, n, CAST(0 AS BIGINT), n FROM d WHERE rn = 1
-      UNION ALL
-      SELECT d.lang, d.rn, d.doc_id, d.n,
-             CASE WHEN st.fill + d.n <= {_PACK_CAP} THEN st.bin ELSE st.bin + 1 END,
-             CASE WHEN st.fill + d.n <= {_PACK_CAP} THEN st.fill + d.n ELSE d.n END
-      FROM st JOIN d ON d.lang = st.lang AND d.rn = st.rn + 1)
-    SELECT doc_id, lang, CAST(bin AS BIGINT) AS bin_id, n AS n_tokens FROM st
-    """,
-)
-def pack_sequences(spark, sf_dir):
-    """Sequence PACKING for LLM training: greedy first-fit-in-order of
-    documents into fixed token-budget bins (capacity {cap}), the step
-    that turns a curated corpus into dense context windows.  Distributed
-    shape: packing is parallel ACROSS strata (lang here; shards at
-    scale) and sequential WITHIN a stratum — one applyInPandas per
-    group, deterministic by doc_id order (functions/curation.pack_bins,
-    shared with jobs/curate_job.py).  A document longer than the budget
-    gets its own (overflowing) bin, never silently truncated.  The
-    oracle replays the identical fold as a linear recursive CTE."""
-    from .functions.curation import pack_bins
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    return pack_bins(d, cap=_PACK_CAP)
-
-
-pack_sequences.__doc__ = pack_sequences.__doc__.format(cap=_PACK_CAP)
-
-
-@register(
-    "sample_stratified",
-    """
-    WITH ranked AS (
-      SELECT doc_id, lang,
-             ROW_NUMBER() OVER (
-               PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-             ) AS rn
-      FROM documents)
-    SELECT doc_id, lang, CAST(rn AS BIGINT) AS rn
-    FROM ranked WHERE rn <= 10
-    """,
-)
-def sample_stratified(spark, sf_dir):
-    """Deterministic stratified sampling (training-data curation): per
-    stratum (lang), the 10 documents with the smallest
-    md5(cast(doc_id)) — a seeded uniform draw identical across engines
-    and partitionings, the same hash-ordering trick kmeans_centroids
-    uses for seeding.  Per-stratum quota instead of a global fraction,
-    so rare strata are never starved."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        d.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= 10)
-    )
-
-
-_CHUNK_W, _CHUNK_S = 64, 48  # window / stride (16-token overlap)
-
-
-@register(
-    "chunk_documents",
-    f"""
-    WITH d AS (
-      SELECT doc_id, string_split(text, ' ') AS toks,
-             len(string_split(text, ' ')) AS n
-      FROM documents),
-    ix AS (
-      SELECT doc_id, toks, n,
-             unnest(generate_series(0,
-               GREATEST((n - {_CHUNK_W} + {_CHUNK_S} - 1) // {_CHUNK_S}, 0))) AS i
-      FROM d)
-    SELECT doc_id, CAST(i AS BIGINT) AS chunk_ix,
-           CAST(len(list_slice(toks, i * {_CHUNK_S} + 1,
-                               LEAST(i * {_CHUNK_S} + {_CHUNK_W}, n))) AS BIGINT)
-             AS n_toks,
-           {sql_charfold(f"array_to_string(list_slice(toks, i * {_CHUNK_S} + 1, LEAST(i * {_CHUNK_S} + {_CHUNK_W}, n)), ' ')")}
-             AS chunk_hash
-    FROM ix
-    """,
-)
-def chunk_documents(spark, sf_dir):
-    """Overlapping context-window CHUNKING (window 64 tokens, stride 48):
-    the step before packing/embedding that splits long documents into
-    model-sized pieces without losing boundary context.  Pure
-    higher-order expressions — per doc, explode ceil((n−W)/S)+1 window
-    starts and slice; every doc yields at least one chunk.  Chunk
-    content is compared via the charfold hash (cross-engine exact)."""
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    extra = F.greatest(
-        F.floor((n - F.lit(_CHUNK_W) + F.lit(_CHUNK_S - 1)) / F.lit(_CHUNK_S)),
-        F.lit(0),
-    ).cast("int")
-    d = _docs(spark, sf_dir).select(
-        "doc_id", toks.alias("toks"), n.alias("n"),
-        F.explode(F.sequence(F.lit(0), extra)).alias("i"),
-    )
-    sl = F.slice(
-        F.col("toks"), F.col("i") * _CHUNK_S + 1,
-        F.least(F.col("i") * _CHUNK_S + _CHUNK_W, F.col("n"))
-        - F.col("i") * _CHUNK_S,
-    )
-    return d.select(
-        "doc_id",
-        F.col("i").cast("bigint").alias("chunk_ix"),
-        F.size(sl).cast("bigint").alias("n_toks"),
-        charfold(F.array_join(sl, " ")).alias("chunk_hash"),
-    )
-
-
-@register(
-    "curation_funnel",
-    f"""
-    WITH {SQL_TOK},
-    q AS (
-      SELECT doc_id, lang,
-             len(string_split(text, ' ')) AS n,
-             len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE) AS sr,
-             list_aggregate(list_transform(string_split(text, ' '),
-                                           t -> CAST(strlen(t) AS DOUBLE)), 'sum')
-               / len(string_split(text, ' ')) AS ml
-      FROM documents),
-    kept AS (
-      SELECT doc_id, lang, CAST(n AS BIGINT) AS n FROM q
-      WHERE NOT (n < 5) AND NOT (sr > 0.6) AND NOT (ml < 2.0 OR ml > 12.0)),
-    fp AS (
-      SELECT doc_id,
-             CAST(SUM((pos + 1) * ({sql_charfold("tok")} % 1000003)) % {MOD} AS BIGINT)
-               AS fingerprint
-      FROM tok GROUP BY doc_id),
-    uniq AS (
-      SELECT k.* FROM (
-        SELECT k.*, ROW_NUMBER() OVER (
-          PARTITION BY fp.fingerprint ORDER BY k.doc_id) AS rn
-        FROM kept k JOIN fp ON k.doc_id = fp.doc_id) k
-      WHERE rn = 1)
-    SELECT q.lang,
-           CAST(COUNT(*) AS BIGINT) AS n_raw,
-           CAST(COUNT(k.doc_id) AS BIGINT) AS n_kept,
-           CAST(COUNT(u.doc_id) AS BIGINT) AS n_unique,
-           CAST(COALESCE(SUM(u.n), 0) AS BIGINT) AS n_tokens_final
-    FROM q
-    LEFT JOIN kept k ON q.doc_id = k.doc_id
-    LEFT JOIN uniq u ON q.doc_id = u.doc_id
-    GROUP BY q.lang
-    """,
-)
-def curation_funnel(spark, sf_dir):
-    """The end-to-end curation FUNNEL per stratum: raw corpus → quality
-    gate → exact dedup (first doc per positional fingerprint among the
-    kept) → final token mass (functions/curation.curate, shared with the
-    spark-submit jobs/curate_job.py).  One query tells the data engineer
-    what each stage costs per language — the attributable-drops story
-    (quality reasons via text_quality_filter, dedup survivors here)
-    composed into the headline numbers a curation run reports."""
-    from .functions.curation import curate
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    _curated, _packed, stats = curate(d, pack_cap=_PACK_CAP)
-    # project the base-funnel columns: the optional r6c gate counters
-    # (n_lm_dropped / n_contaminated) are structurally zero when the
-    # gates are off and belong to the job's summary, not this query
-    return stats.select(
-        "lang", "n_raw", "n_kept", "n_unique", "n_tokens_final"
-    )
-@register(
-    "ann_multi_topk",
-    """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5),
-    c AS (SELECT vec_id, v FROM e WHERE vec_id >= 5),
-    cos AS (
-      SELECT q.qid, c.vec_id,
-             list_cosine_similarity(c.v, q.qv) AS cs
-      FROM c, q)
-    SELECT qid, vec_id, ROUND(cs, 4) AS cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY qid ORDER BY ROUND(cs, 6) DESC, vec_id) AS rnk
-          FROM cos)
-    WHERE rnk <= 5
-    """,
-)
-def ann_multi_topk(spark, sf_dir):
-    """BATCHED retrieval — the realistic serving shape: a query SET
-    (vec_id < 5, broadcast) against the corpus (vec_id >= 5), exact
-    top-5 per query.  One scan of the corpus computes all Q cosines per
-    row (broadcast crossJoin + fold — vectors travel whole); the
-    per-query rank filter compiles to WindowGroupLimit (Spark 3.5+),
-    so each input partition pre-truncates to its local top-k before the
-    single shuffle on qid — no partition ever sorts the full corpus per
-    query."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    from .functions.similarity import cosine_fold
-
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    c = e.filter(F.col("vec_id") >= 5)
-    cos = c.crossJoin(F.broadcast(q)).select(
-        "qid", "vec_id", cosine_fold(F.col("qv"), F.col("v")).alias("cs")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(F.round("cs", 6)), "vec_id")
-    return (
-        cos.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 5)
-        .select("qid", "vec_id", F.round("cs", 4).alias("cos_sim"), "rnk")
-    )
-
-
-@register(
-    "kg_reach_bfs",
-    _SQL_EDGES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , sym AS (SELECT src AS a, dst AS b FROM edges
-              UNION SELECT dst, src FROM edges),
-    deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    hub AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 1),
-    reach(v, dist) AS (
-      SELECT v, 0 FROM hub
-      UNION
-      SELECT sym.b, reach.dist + 1
-      FROM reach JOIN sym ON reach.v = sym.a
-      WHERE reach.dist < 3)
-    SELECT v, CAST(MIN(dist) AS BIGINT) AS dist
-    FROM reach GROUP BY v
-    """,
-)
-def kg_reach_bfs(spark, sf_dir):
-    """3-hop BFS reachability from the deterministic hub (degree desc,
-    id asc): (vertex, min hop distance) — the neighborhood-expansion
-    primitive behind subgraph extraction and GNN sampling.  Iterative
-    frontier joins (one shuffle per hop on the edge key + an anti-join
-    against the visited set), localCheckpoint per hop — the CC-loop
-    shape; BFS frontier distance IS the min distance, matching the
-    oracle's recursive-CTE min over all ≤3-hop walks."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    sym = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
-        .unionByName(e.groupBy(F.col("dst").alias("v")).agg(F.count("*").alias("d")))
-        .groupBy("v")
-        .agg(F.sum("d").alias("degree"))
-    )
-    hub = deg.orderBy(F.desc("degree"), "v").limit(1).select("v")
-    visited = hub.withColumn("dist", F.lit(0).cast("bigint")).localCheckpoint(
-        eager=True
-    )
-    frontier = visited
-    for d in range(1, 4):
-        frontier = (
-            sym.join(
-                frontier.select(F.col("v").alias("a")), on="a"
-            )
-            .select(F.col("b").alias("v"))
-            .distinct()
-            .join(visited.select("v"), on="v", how="left_anti")
-            .withColumn("dist", F.lit(d).cast("bigint"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return visited
-
-
-@register(
-    "kg_negative_samples",
-    SQL_TRIPLES
-    + f"""
-    , t AS (SELECT DISTINCT subj, pred, obj, obj_type FROM triples),
-    pool AS (
-      SELECT obj_type, obj,
-             ROW_NUMBER() OVER (PARTITION BY obj_type ORDER BY obj) - 1 AS idx
-      FROM (SELECT DISTINCT obj_type, obj FROM t)),
-    n AS (SELECT obj_type, COUNT(*) AS n FROM pool GROUP BY obj_type),
-    picks AS (
-      SELECT t.subj, t.pred, t.obj, t.obj_type,
-             k.k AS k,
-             {sql_charfold("t.subj || '|' || t.pred || '|' || t.obj || '|' || CAST(k.k AS VARCHAR)")} % n.n AS idx
-      FROM t JOIN n ON t.obj_type = n.obj_type,
-           (SELECT unnest(generate_series(1, 2)) AS k) k)
-    SELECT p.subj, p.pred, p.obj, pool.obj AS neg_obj, CAST(p.k AS BIGINT) AS k
-    FROM picks p JOIN pool ON p.obj_type = pool.obj_type AND p.idx = pool.idx
-    WHERE pool.obj <> p.obj
-    """,
-)
-def kg_negative_samples(spark, sf_dir):
-    """Type-consistent NEGATIVE sampling for link-prediction training —
-    the KG→training-data bridge: per distinct triple, 2 corrupted tails
-    drawn deterministically from the same-type entity pool
-    (hash(triple, k) mod pool size → rank lookup), accidental true
-    tails filtered.  Distributed shape: the pool is a per-type ranked
-    dim (tiny, broadcastable); corruption is one equi-join on
-    (type, idx) — no shuffle of the triple table beyond it.  Seeded hash
-    = identical samples across engines, partitionings, and reruns."""
-    t = _kg_triples_df(spark, sf_dir).select(
-        "subj", "pred", "obj", "obj_type"
-    ).distinct().localCheckpoint(eager=True)
-    w = Window.partitionBy("obj_type").orderBy("obj")
-    pool = (
-        t.select("obj_type", "obj").distinct()
-        .withColumn("idx", F.row_number().over(w) - 1)
-        .localCheckpoint(eager=True)
-    )
-    n = pool.groupBy("obj_type").agg(F.count("*").alias("n"))
-    ks = spark.range(1, 3).select(F.col("id").cast("int").alias("k"))
-    picks = (
-        t.join(F.broadcast(n), on="obj_type")
-        .crossJoin(F.broadcast(ks))
-        .withColumn(
-            "idx",
-            charfold(
-                F.concat_ws("|", "subj", "pred", "obj", F.col("k").cast("string"))
-            )
-            % F.col("n"),
-        )
-    )
-    neg = picks.join(
-        pool.withColumnRenamed("obj", "neg_obj"), on=["obj_type", "idx"]
-    )
-    return neg.filter(F.col("neg_obj") != F.col("obj")).select(
-        "subj", "pred", "obj", "neg_obj", F.col("k").cast("bigint").alias("k")
-    )
-
-
-@register(
-    "kg_edge_split",
-    _SQL_EDGES
-    + f"""
-    , assigned AS (
-      SELECT src, dst, pred,
-             CASE WHEN {sql_charfold("src || '|' || pred || '|' || dst")} % 10 < 8
-                  THEN 'train'
-                  WHEN {sql_charfold("src || '|' || pred || '|' || dst")} % 10 = 8
-                  THEN 'valid' ELSE 'test' END AS split
-      FROM edges)
-    SELECT split, CAST(COUNT(*) AS BIGINT) AS n_edges
-    FROM assigned GROUP BY split
-    """,
-)
-def kg_edge_split(spark, sf_dir):
-    """Deterministic 80/10/10 edge split for link-prediction training:
-    hash(src|pred|dst) mod 10 — stable under any partitioning, reruns,
-    and engine (the companion of kg_negative_samples; together they turn
-    the materialized KG into a training dataset).  Row-local expression,
-    no shuffle beyond the count."""
-    e = kg_edges(spark, sf_dir)
-    h = charfold(F.concat_ws("|", "src", "pred", "dst")) % 10
-    split = (
-        F.when(h < 8, "train").when(h == 8, "valid").otherwise("test")
-    )
-    return e.select(split.alias("split")).groupBy("split").agg(
-        F.count("*").alias("n_edges")
-    )
-
-
-from .functions.quality import (  # noqa: E402
-    DUP_TRIGRAM_MAX,
-    MAX_RUN_MAX,
-    TOP_BIGRAM_MAX,
-)
-
-CONTAM_MIN_SHINGLES = 2
-
-
-@register(
-    "text_repetition_signals",
-    f"""
-    WITH tokarr AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS arr
-                    FROM documents),
-    tok AS (SELECT doc_id, CAST(generate_subscripts(arr, 1) - 1 AS BIGINT) AS pos,
-                   unnest(arr) AS tok FROM tokarr),
-    bgc AS (SELECT doc_id, g, COUNT(*) AS c FROM (
-        SELECT t1.doc_id, t1.tok || ' ' || t2.tok AS g
-        FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1)
-      GROUP BY 1, 2),
-    tgc AS (SELECT doc_id, g, COUNT(*) AS c FROM (
-        SELECT t1.doc_id, t1.tok || ' ' || t2.tok || ' ' || t3.tok AS g
-        FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-        JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2)
-      GROUP BY 1, 2),
-    bga AS (SELECT doc_id, MAX(c) AS top_bg FROM bgc GROUP BY 1),
-    tga AS (SELECT doc_id, SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS dup_tg,
-                   SUM(c) AS tot_tg FROM tgc GROUP BY 1),
-    runs AS (SELECT doc_id, MAX(cnt) AS max_run FROM (
-        SELECT doc_id, COUNT(*) AS cnt FROM (
-          SELECT doc_id, tok,
-                 pos - ROW_NUMBER() OVER (PARTITION BY doc_id, tok ORDER BY pos)
-                   AS grp
-          FROM tok)
-        GROUP BY doc_id, tok, grp) GROUP BY 1),
-    f AS (SELECT b.doc_id, len(b.arr) AS n, r.max_run,
-                 COALESCE(g.top_bg, 0) AS top_bg,
-                 CAST(2 * COALESCE(g.top_bg, 0) AS DOUBLE) / len(b.arr)
-                   AS top_frac,
-                 CASE WHEN COALESCE(t.tot_tg, 0) > 0
-                      THEN CAST(t.dup_tg AS DOUBLE) / t.tot_tg
-                      ELSE 0.0 END AS dup_frac
-          FROM tokarr b LEFT JOIN bga g USING (doc_id)
-          LEFT JOIN tga t USING (doc_id) JOIN runs r USING (doc_id))
-    SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-           ROUND(top_frac, 4) AS top_bigram_frac,
-           ROUND(dup_frac, 4) AS dup_trigram_frac,
-           CAST(max_run AS BIGINT) AS max_run,
-           CASE WHEN top_bg >= 2 AND top_frac > {TOP_BIGRAM_MAX} THEN 'bigram_heavy'
-                WHEN dup_frac > {DUP_TRIGRAM_MAX} THEN 'trigram_dupes'
-                WHEN max_run > {MAX_RUN_MAX} THEN 'token_run'
-                ELSE 'ok' END AS reason,
-           (CASE WHEN top_bg >= 2 AND top_frac > {TOP_BIGRAM_MAX} THEN 'bigram_heavy'
-                WHEN dup_frac > {DUP_TRIGRAM_MAX} THEN 'trigram_dupes'
-                WHEN max_run > {MAX_RUN_MAX} THEN 'token_run'
-                ELSE 'ok' END) = 'ok' AS keep
-    FROM f
-    """,
-)
-def text_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition quality gate (Rae et al. 2021 A1.1;
-    functions/quality.repetition_signals): top-bigram coverage,
-    duplicated-trigram fraction, longest same-token run — keep/drop
-    with the first-failing reason materialized, drops attributable.
-
-    Scale shape: max_run is a row-local array fold (no window); both
-    gram families ride one explode into one map-side-combining
-    (doc_id, k, gram) count; the corpus is scanned once."""
-    from .functions.quality import repetition_signals
-
-    return repetition_signals(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-@register(
-    "text_decontaminate",
-    f"""
-    WITH {SQL_SHINGLES},
-    {_SQL_SHINGLES_CAPPED},
-    bench AS (SELECT doc_id AS bench_doc, sh FROM kept WHERE doc_id % 20 = 0),
-    corp AS (SELECT doc_id, sh FROM kept WHERE doc_id % 20 <> 0)
-    SELECT c.doc_id,
-           CAST(COUNT(DISTINCT c.sh) AS BIGINT) AS n_overlap_shingles,
-           CAST(COUNT(DISTINCT b.bench_doc) AS BIGINT) AS n_bench_docs,
-           COUNT(DISTINCT c.sh) >= {CONTAM_MIN_SHINGLES} AS contaminated
-    FROM corp c JOIN bench b ON c.sh = b.sh
-    GROUP BY 1
-    """,
-)
-def text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix C shape): flag training
-    docs sharing 3-token shingles with a held-out eval split (the
-    deterministic doc_id % 20 == 0 stand-in — no external data).  Only
-    docs with >= 1 surviving overlap appear; `contaminated` applies the
-    CONTAM_MIN_SHINGLES threshold so a single boilerplate collision
-    does not condemn a doc.
-
-    Scale shape: the corpus-side df cap (NGRAM_DF_CAP, shared with
-    dedup_ngram_jaccard) drops ubiquitous shingles BEFORE the join —
-    uninformative boilerplate and the hot-key hazard in one move; the
-    benchmark gram dim is eval-set-sized (MBs against a 100 TB corpus),
-    localCheckpointed once and broadcast only under the
-    maybe_broadcast row gate."""
-    from .functions.joins import maybe_broadcast
-
-    sh = _shingles_df(spark, sf_dir)
-    hot = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("sh")
-    )
-    kept = sh.join(hot, "sh", "left_anti")
-    bench = (
-        kept.filter(F.col("doc_id") % 20 == 0)
-        .select(F.col("doc_id").alias("bench_doc"), "sh")
-        .localCheckpoint(eager=True)
-    )
-    corp = kept.filter(F.col("doc_id") % 20 != 0)
-    return (
-        corp.join(maybe_broadcast(bench), "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("sh").alias("n_overlap_shingles"),
-            F.countDistinct("bench_doc").alias("n_bench_docs"),
-        )
-        .withColumn(
-            "contaminated",
-            F.col("n_overlap_shingles") >= CONTAM_MIN_SHINGLES,
-        )
-    )
-
-
-_BLOOM_M = 4096  # bloom bits
-_BLOOM_AB = MINHASH_AB[:3]  # k=3 independent hash rows (shared literals)
-
-
-def _sql_bloom_pos(src: str) -> str:
-    """K probe positions per shingle — one UNION ALL leg per hash row
-    (i, (charfold(sh)*a + b) % MOD % M); ``src`` must carry ``hv`` =
-    the charfold of the shingle string."""
-    return " UNION ALL ".join(
-        f"SELECT sh, {i} AS i, (hv * {a} + {b}) % {MOD} % {_BLOOM_M} AS pos "
-        f"FROM {src}"
-        for i, (a, b) in enumerate(_BLOOM_AB)
-    )
-
-
-@register(
-    "text_decontaminate_bloom",
-    f"""
-    WITH {SQL_SHINGLES},
-    {_SQL_SHINGLES_CAPPED},
-    bench AS (SELECT sh, {sql_charfold('sh')} AS hv
-              FROM (SELECT DISTINCT sh FROM kept WHERE doc_id % 20 = 0)),
-    corp AS (SELECT sh, {sql_charfold('sh')} AS hv
-             FROM (SELECT DISTINCT sh FROM kept WHERE doc_id % 20 <> 0)),
-    bits AS (SELECT DISTINCT i, pos FROM ({_sql_bloom_pos('bench')})),
-    probes AS ({_sql_bloom_pos('corp')}),
-    hits AS (SELECT p.sh, COUNT(*) AS k_hit
-             FROM probes p JOIN bits b ON b.i = p.i AND b.pos = p.pos
-             GROUP BY p.sh),
-    j AS (SELECT c.sh,
-                 COALESCE(h.k_hit, 0) = {len(_BLOOM_AB)} AS flagged,
-                 t.sh IS NOT NULL AS is_true
-          FROM corp c
-          LEFT JOIN hits h ON h.sh = c.sh
-          LEFT JOIN bench t ON t.sh = c.sh),
-    nb AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM bench),
-    bs AS (SELECT CAST(COUNT(*) AS BIGINT) AS bits_set FROM bits)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_tested,
-           CAST(SUM(CASE WHEN is_true THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_true,
-           CAST(SUM(CASE WHEN flagged THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_flagged,
-           CAST(SUM(CASE WHEN flagged AND NOT is_true THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_false_pos,
-           BOOL_AND(NOT is_true OR flagged) AS no_false_negatives,
-           ROUND(SUM(CASE WHEN flagged AND NOT is_true THEN 1 ELSE 0 END)
-                 / NULLIF(SUM(CASE WHEN NOT is_true THEN 1 ELSE 0 END), 0),
-                 4) AS fpr,
-           ROUND(POWER(1 - EXP(-{len(_BLOOM_AB)} * nb.n / {_BLOOM_M}),
-                       {len(_BLOOM_AB)}), 4) AS expected_fpr,
-           bs.bits_set
-    FROM j CROSS JOIN nb CROSS JOIN bs
-    GROUP BY nb.n, bs.bits_set
-    """,
-)
-def text_decontaminate_bloom(spark, sf_dir):
-    """Bloom-filter decontamination PREFILTER (Bloom 1970) with its
-    guarantee and error measured, not assumed — the CMS discipline
-    applied to membership: the eval set's shingle hashes set k=3 bit
-    positions in an M=4096-bit filter expressed as a relational (i,
-    pos) table; a corpus gram is flagged iff ALL k probes hit.  The
-    result row pins the ONE-SIDED guarantee (`no_false_negatives` —
-    every truly contaminated gram is flagged, verified against the
-    exact semi-join truth) and measures the false-positive rate
-    against the analytic (1 - e^{{-kn/m}})^k estimate.
-
-    Measured at sf0.01: fpr 0.021 vs expected_fpr 0.249 — the affine
-    hash rows ((a·h + b) mod p mod M, the minhash literals) are
-    NEAR-INJECTIVE while k·n < M, so the k probes act jointly like one
-    wider fingerprint and beat the independent-random-hash bound by an
-    order of magnitude (bits_set is correspondingly HIGHER than the
-    bound predicts: fewer self-collisions).  The analytic column is
-    kept as the worst-case capacity-planning number — sizing M off the
-    bound is conservative for this family.
-
-    Why at 100 TB: text_decontaminate joins the corpus against an
-    eval-gram dim (MBs); the Bloom bits table is ≤ M rows (KBs,
-    CONSTANT by construction) — it broadcasts unconditionally, corpus
-    grams probe partition-locally, and only the flagged sliver (true
-    hits + ~fpr of the rest) proceeds to the exact verification join.
-    Stage 1 never misses; stage 2 removes the false positives — the
-    same two-stage shape as LSH-then-verify dedup.
-
-    Scale shape: bits = one groupBy-distinct over k×|bench| rows;
-    probes are row-local expressions; the probe join keys on (i, pos)
-    against the M-bounded dim; everything downstream is scalar
-    aggregates with map-side partials."""
-    sh = _shingles_df(spark, sf_dir)
-    hot = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("sh")
-    )
-    kept = sh.join(hot, "sh", "left_anti").localCheckpoint(eager=True)
-    bench = (
-        kept.filter(F.col("doc_id") % 20 == 0).select("sh").distinct()
-        .withColumn("hv", charfold(F.col("sh")))
-        .localCheckpoint(eager=True)
-    )
-    corp = (
-        kept.filter(F.col("doc_id") % 20 != 0).select("sh").distinct()
-        .withColumn("hv", charfold(F.col("sh")))
-        .localCheckpoint(eager=True)
-    )
-
-    def _positions(df):
-        legs = [
-            df.select(
-                "sh",
-                F.lit(i).alias("i"),
-                ((F.col("hv") * a + b) % MOD % _BLOOM_M).alias("pos"),
-            )
-            for i, (a, b) in enumerate(_BLOOM_AB)
-        ]
-        out = legs[0]
-        for leg in legs[1:]:
-            out = out.unionByName(leg)
-        return out
-
-    bits = _positions(bench).select("i", "pos").distinct().localCheckpoint(
-        eager=True
-    )
-    hits = (
-        _positions(corp)
-        .join(F.broadcast(bits), ["i", "pos"])
-        .groupBy("sh")
-        .agg(F.count("*").alias("k_hit"))
-    )
-    j = (
-        corp.join(hits, "sh", "left")
-        .join(bench.select("sh", F.lit(1).alias("tr")), "sh", "left")
-        .select(
-            "sh",
-            (F.coalesce("k_hit", F.lit(0)) == len(_BLOOM_AB)).alias(
-                "flagged"
-            ),
-            F.col("tr").isNotNull().alias("is_true"),
-        )
-    )
-    nb = bench.agg(F.count("*").cast("double").alias("n"))
-    bs = bits.agg(F.count("*").alias("bits_set"))
-    fp = F.sum(F.when(F.col("flagged") & ~F.col("is_true"), 1).otherwise(0))
-    neg = F.sum(F.when(~F.col("is_true"), 1).otherwise(0))
-    return (
-        j.crossJoin(nb)
-        .crossJoin(bs)
-        .groupBy("n", "bits_set")
-        .agg(
-            F.count("*").alias("n_tested"),
-            F.sum(F.when(F.col("is_true"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_true"),
-            F.sum(F.when(F.col("flagged"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_flagged"),
-            fp.cast("bigint").alias("n_false_pos"),
-            F.bool_and(~F.col("is_true") | F.col("flagged")).alias(
-                "no_false_negatives"
-            ),
-            F.round(fp / F.nullif(neg, F.lit(0)), 4).alias("fpr"),
-            F.round(
-                F.pow(
-                    1
-                    - F.exp(-len(_BLOOM_AB) * F.first("n") / _BLOOM_M),
-                    float(len(_BLOOM_AB)),
-                ),
-                4,
-            ).alias("expected_fpr"),
-        )
-        .select(
-            "n_tested",
-            "n_true",
-            "n_flagged",
-            "n_false_pos",
-            "no_false_negatives",
-            "fpr",
-            "expected_fpr",
-            "bits_set",
-        )
-    )
-
-
-@register(
-    "curate_length_curriculum",
-    """
-    WITH d AS (SELECT doc_id,
-                      CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-               FROM documents),
-    p AS (SELECT doc_id, n,
-                 NTILE(4) OVER (ORDER BY n, doc_id) AS phase
-          FROM d)
-    SELECT CAST(phase AS BIGINT) AS phase,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           MIN(n) AS min_tokens, MAX(n) AS max_tokens,
-           CAST(SUM(n) AS BIGINT) AS total_tokens,
-           CAST(SUM(doc_id) AS BIGINT) AS member_checksum
-    FROM p GROUP BY phase
-    """,
-)
-def curate_length_curriculum(spark, sf_dir):
-    """LENGTH-CURRICULUM phase assignment — order training data
-    shortest-first in four equal phases (curriculum learning, Bengio et
-    al. 2009; sequence-length warmup as used in efficient-pretraining
-    recipes): the NTILE(4) assignment over (token count, doc_id) gives
-    every document a deterministic phase, and the per-phase report
-    carries a member checksum (exact doc_id sum) so the ASSIGNMENT
-    itself is oracle-pinned, not just the counts.
-
-    Scale shape (r6 VERDICT "What's wrong" #1 closed): the Spark side
-    does NOT run a global-window NTILE — `Window.orderBy` with no
-    partitionBy compiles to an Exchange SinglePartition (the whole
-    corpus sorted by ONE task).  Instead the global rank comes from the
-    repo's two-pass rank (functions/ranks.py global_row_number:
-    range-repartition → per-partition counts → offset + local
-    row_number — the q_doc_range_slice machinery), and the phase is
-    derived ARITHMETICALLY from (rank, n_total) by the exact NTILE
-    rule: with q = n DIV 4, r = n % 4, the first r buckets hold q+1
-    rows and the rest hold q, so
-      phase = (rank-1) DIV (q+1) + 1            if rank <= r*(q+1)
-            = r + (rank - r*(q+1) - 1) DIV q + 1  otherwise.
-    This reproduces NTILE(4) bit-for-bit for ANY n (including n < 4,
-    where the else branch is unreachable — q is still guarded with
-    GREATEST for safety), so the DuckDB oracle keeps its literal
-    NTILE(4) window and the driver hash-compare proves the
-    equivalence.  The per-phase aggregate is map-side combined."""
-    from .functions.ranks import global_row_number
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n")
-    )
-    ranked = global_row_number(d, ["n", "doc_id"], "rn")
-    nt = d.agg(F.count("*").cast("bigint").alias("nt"))
-    p = ranked.crossJoin(F.broadcast(nt)).withColumn(
-        "phase",
-        F.expr(
-            "CASE WHEN rn <= (nt % 4) * ((nt DIV 4) + 1) "
-            "THEN ((rn - 1) DIV ((nt DIV 4) + 1)) + 1 "
-            "ELSE (nt % 4) + ((rn - (nt % 4) * ((nt DIV 4) + 1) - 1) "
-            "DIV GREATEST(nt DIV 4, 1)) + 1 END"
-        ),
-    )
-    return p.groupBy(F.col("phase").cast("bigint").alias("phase")).agg(
-        F.count("*").alias("n_docs"),
-        F.min("n").alias("min_tokens"),
-        F.max("n").alias("max_tokens"),
-        F.sum("n").alias("total_tokens"),
-        F.sum("doc_id").cast("bigint").alias("member_checksum"),
-    )
-
-
-_CORRUPT_BLOCK = 10  # tokens per corruption block
-_CORRUPT_SPAN = 3  # masked span length within each block
-
-
-@register(
-    "curate_span_corruption",
-    f"""
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
-               FROM documents),
-    m AS (SELECT doc_id, toks,
-                 list_transform(toks, (x, j) ->
-                   {sql_charfold(
-                       "md5(CAST(doc_id AS VARCHAR) || ':' || "
-                       f"CAST((j - 1) // {_CORRUPT_BLOCK} AS VARCHAR)"
-                       " || ':corrupt')"
-                   )} % {_CORRUPT_BLOCK - _CORRUPT_SPAN + 1}) AS starts
-          FROM d),
-    r AS (SELECT doc_id,
-                 CAST(len(toks) AS BIGINT) AS n_tokens,
-                 list_filter(
-                   list_transform(toks, (x, j) -> CASE
-                     WHEN (j - 1) % {_CORRUPT_BLOCK} = starts[j]
-                       THEN '<extra_id_' ||
-                            CAST((j - 1) // {_CORRUPT_BLOCK} AS VARCHAR) || '>'
-                     WHEN (j - 1) % {_CORRUPT_BLOCK} > starts[j]
-                          AND (j - 1) % {_CORRUPT_BLOCK}
-                              < starts[j] + {_CORRUPT_SPAN}
-                       THEN NULL
-                     ELSE x END),
-                   x -> x IS NOT NULL) AS inp,
-                 list_filter(
-                   list_transform(toks, (x, j) -> CASE
-                     WHEN (j - 1) % {_CORRUPT_BLOCK} = starts[j]
-                       THEN '<extra_id_' ||
-                            CAST((j - 1) // {_CORRUPT_BLOCK} AS VARCHAR)
-                            || '> ' || x
-                     WHEN (j - 1) % {_CORRUPT_BLOCK} > starts[j]
-                          AND (j - 1) % {_CORRUPT_BLOCK}
-                              < starts[j] + {_CORRUPT_SPAN}
-                       THEN x
-                     ELSE NULL END),
-                   x -> x IS NOT NULL) AS tgt,
-                 len(list_filter(
-                   list_transform(toks, (x, j) ->
-                     CASE WHEN (j - 1) % {_CORRUPT_BLOCK} >= starts[j]
-                               AND (j - 1) % {_CORRUPT_BLOCK}
-                                   < starts[j] + {_CORRUPT_SPAN}
-                          THEN 1 ELSE NULL END),
-                   x -> x IS NOT NULL)) AS n_masked
-          FROM m)
-    SELECT doc_id, n_tokens, CAST(n_masked AS BIGINT) AS n_masked,
-           {sql_charfold("array_to_string(inp, ' ')")} AS input_hash,
-           {sql_charfold("array_to_string(tgt, ' ')")} AS target_hash
-    FROM r
-    """,
-)
-def curate_span_corruption(spark, sf_dir):
-    """T5-style SPAN-CORRUPTION example synthesis (Raffel et al. 2020,
-    arXiv:1910.10683 §3.1.4): every document becomes an (input, target)
-    pair — contiguous token spans replaced by `<extra_id_k>` sentinels
-    in the input, with the target spelling out sentinel + masked
-    tokens.  Masking is DETERMINISTIC: each {_CORRUPT_BLOCK}-token
-    block masks one {_CORRUPT_SPAN}-token span whose offset is
-    hash(doc, block) — pseudo-random placement at a fixed ~30% rate,
-    bit-replayable on both engines, so the SYNTHESIZED EXAMPLES
-    themselves are oracle-checked (via charfold of the reconstructed
-    strings, the chunk_documents discipline — compact result, exact
-    comparison).  Sentinel ids are block indices (deterministic;
-    sequential renumbering is a row-local rewrite).
-
-    Scale shape: ENTIRELY row-local — nested higher-order expressions
-    (transform/filter/array_join) inside whole-stage codegen; no
-    explode, no shuffle, no window; the corpus scan is the whole cost.
-    This is the shape example-synthesis must have at 100 TB: any
-    per-token shuffle would dominate the training-prep bill."""
-    nblk = _CORRUPT_BLOCK - _CORRUPT_SPAN + 1
-    toks = F.split(F.col("text"), " ")
-
-    def _start(j):
-        # j is 1-based inside Spark's transform index? No: Spark's
-        # (x, i) lambda index is 0-based — the SQL twin uses (j - 1).
-        blk = F.floor(j / _CORRUPT_BLOCK).cast("bigint")
-        return (
-            charfold(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        blk.cast("string"),
-                        F.lit(":corrupt"),
-                    )
-                )
-            )
-            % nblk
-        )
-
-    def _sentinel(j):
-        return F.concat(
-            F.lit("<extra_id_"),
-            F.floor(j / _CORRUPT_BLOCK).cast("bigint").cast("string"),
-            F.lit(">"),
-        )
-
-    def _off(j):
-        return j % _CORRUPT_BLOCK
-
-    inp = F.filter(
-        F.transform(
-            toks,
-            lambda x, j: F.when(_off(j) == _start(j), _sentinel(j))
-            .when(
-                (_off(j) > _start(j)) & (_off(j) < _start(j) + _CORRUPT_SPAN),
-                F.lit(None).cast("string"),
-            )
-            .otherwise(x),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    tgt = F.filter(
-        F.transform(
-            toks,
-            lambda x, j: F.when(
-                _off(j) == _start(j), F.concat(_sentinel(j), F.lit(" "), x)
-            )
-            .when(
-                (_off(j) > _start(j)) & (_off(j) < _start(j) + _CORRUPT_SPAN),
-                x,
-            )
-            .otherwise(F.lit(None).cast("string")),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    masked = F.filter(
-        F.transform(
-            toks,
-            lambda x, j: F.when(
-                (_off(j) >= _start(j)) & (_off(j) < _start(j) + _CORRUPT_SPAN),
-                F.lit(1),
-            ).otherwise(F.lit(None).cast("int")),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.size(masked).cast("bigint").alias("n_masked"),
-        charfold(F.array_join(inp, " ")).alias("input_hash"),
-        charfold(F.array_join(tgt, " ")).alias("target_hash"),
-    )
-
-
-# target training mixture over langs — the static data-mixing recipe
-# (what DoReMi-style optimization would output; here a fixed policy)
-_MIX_TARGET = {"en": 0.40, "de": 0.15, "fr": 0.15, "es": 0.15, "zh": 0.15}
-_MIX_VALUES = ", ".join(
-    f"('{lang}', {w})" for lang, w in sorted(_MIX_TARGET.items())
-)
-
-
-@register(
-    "curate_domain_mixture",
-    f"""
-    WITH tgt(lang, w) AS (SELECT * FROM (VALUES {_MIX_VALUES})),
-    avail AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
-              FROM documents GROUP BY lang),
-    cap AS (SELECT CAST(MIN(FLOOR(COALESCE(avail.n, 0) / tgt.w)) AS BIGINT)
-              AS n_total
-            FROM tgt LEFT JOIN avail ON avail.lang = tgt.lang),
-    takes AS (SELECT tgt.lang, CAST(COALESCE(avail.n, 0) AS BIGINT) AS n_avail,
-                     CAST(FLOOR(cap.n_total * tgt.w) AS BIGINT) AS n_take
-              FROM tgt LEFT JOIN avail ON avail.lang = tgt.lang CROSS JOIN cap),
-    ranked AS (SELECT d.doc_id, d.lang,
-                      ROW_NUMBER() OVER (
-                        PARTITION BY d.lang
-                        ORDER BY {sql_charfold(
-                            "md5(CAST(d.doc_id AS VARCHAR) || ':mix')"
-                        )}, d.doc_id) AS rn
-               FROM documents d),
-    sel AS (SELECT r.lang, r.doc_id
-            FROM ranked r JOIN takes t ON t.lang = r.lang
-            WHERE r.rn <= t.n_take),
-    agg AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_selected,
-                   CAST(SUM(doc_id) AS BIGINT) AS sel_checksum
-            FROM sel GROUP BY lang),
-    tot AS (SELECT CAST(SUM(n_selected) AS DOUBLE) AS s FROM agg)
-    SELECT t.lang, t.n_avail, t.n_take,
-           CAST(COALESCE(a.n_selected, 0) AS BIGINT) AS n_selected,
-           CASE WHEN tot.s > 0
-                THEN ROUND(COALESCE(a.n_selected, 0) / tot.s, 4)
-                ELSE 0.0 END AS achieved_share,
-           CAST(COALESCE(a.sel_checksum, 0) AS BIGINT) AS sel_checksum
-    FROM takes t LEFT JOIN agg a ON a.lang = t.lang CROSS JOIN tot
-    """,
-)
-def curate_domain_mixture(spark, sf_dir):
-    """Static domain-mixture balancing — the data-MIXING primitive of a
-    pretraining pipeline (the static-proportions core of DoReMi, Xie et
-    al. 2023, arXiv:2305.10429: given target domain weights, assemble
-    the largest corpus that honors them without oversampling any
-    domain).  n_total = min over domains of floor(avail/target) — the
-    binding domain caps the corpus; per-domain take = floor(n_total ×
-    weight); the documents taken are the first n_take under a
-    DETERMINISTIC per-domain hash order (charfold(md5(doc:mix)), the
-    seeded-sampling discipline), so the SAMPLE ITSELF is pinned — the
-    per-domain `sel_checksum` (exact integer sum of selected doc_ids)
-    is oracle-verified, not just the counts.
-
-    Scale shape: the target dim is a constant literal (L rows); avail/
-    cap/takes are one groupBy plus scalar aggregates; selection is one
-    per-domain window rank (partition-local sort bounded by domain
-    size — at 100 TB this is the classic per-domain shuffle, salted
-    only if one domain dominates, and rank-then-filter avoids any
-    global sort); the checksum aggregate is map-side combined."""
-    d = _t(spark, sf_dir, "documents")
-    tgt = spark.createDataFrame(
-        sorted(_MIX_TARGET.items()), "lang string, w double"
-    )
-    avail = d.groupBy("lang").agg(F.count("*").alias("n"))
-    # LEFT join FROM the target dim (r6 ADVICE, low): a target domain
-    # with ZERO documents must not silently drop out of cap/takes and
-    # let the achieved shares renormalize over the remaining domains —
-    # it joins as n_avail=0, drives n_total to floor(0/w)=0, and every
-    # row reports n_take=0: the mixture contract is visibly
-    # unsatisfiable instead of quietly violated.
-    cap = (
-        tgt.join(avail, "lang", "left")
-        .agg(
-            F.min(F.floor(F.coalesce("n", F.lit(0)) / F.col("w")))
-            .cast("bigint")
-            .alias("n_total")
-        )
-    )
-    takes = (
-        tgt.join(avail, "lang", "left")
-        .crossJoin(cap)
-        .select(
-            "lang",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_avail"),
-            F.floor(F.col("n_total") * F.col("w")).cast("bigint").alias(
-                "n_take"
-            ),
-        )
-    )
-    h = charfold(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":mix")))
-    )
-    wmix = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
-    ranked = d.select("doc_id", "lang").withColumn(
-        "rn", F.row_number().over(wmix)
-    )
-    sel = ranked.join(F.broadcast(takes.select("lang", "n_take")), "lang").filter(
-        F.col("rn") <= F.col("n_take")
-    )
-    agg = sel.groupBy("lang").agg(
-        F.count("*").alias("n_selected"),
-        F.sum("doc_id").cast("bigint").alias("sel_checksum"),
-    )
-    tot = agg.agg(F.sum("n_selected").cast("double").alias("s"))
-    return (
-        takes.join(agg, "lang", "left")
-        .crossJoin(tot)
-        .select(
-            "lang",
-            "n_avail",
-            "n_take",
-            F.coalesce("n_selected", F.lit(0)).cast("bigint").alias(
-                "n_selected"
-            ),
-            F.when(
-                F.col("s") > 0,
-                F.round(F.coalesce("n_selected", F.lit(0)) / F.col("s"), 4),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("achieved_share"),
-            F.coalesce("sel_checksum", F.lit(0)).cast("bigint").alias(
-                "sel_checksum"
-            ),
-        )
-    )
-
-
-from .functions.quality import LM_BACKOFF as _LM_BACKOFF  # single source
-
-# Bigram-LM scoring CTE chain (train on lang='en', stupid backoff, score
-# every doc): shared verbatim by text_lm_perplexity and
-# curate_ccnet_buckets — ONE SQL definition of the model, like the Spark
-# side's single quality.bigram_perplexity implementation.
-_SQL_LM_PPL = f"""
-    {SQL_TOK},
-    tl AS (SELECT t.doc_id, t.pos, t.tok, d.lang,
-                  LAG(t.tok) OVER (PARTITION BY t.doc_id ORDER BY t.pos)
-                    AS prev
-           FROM tok t JOIN documents d ON d.doc_id = t.doc_id),
-    trn AS (SELECT * FROM tl WHERE lang = 'en'),
-    c2 AS (SELECT prev, tok, CAST(COUNT(*) AS DOUBLE) AS cb
-           FROM trn WHERE prev IS NOT NULL GROUP BY 1, 2),
-    c1 AS (SELECT prev, CAST(COUNT(*) AS DOUBLE) AS cx
-           FROM trn WHERE prev IS NOT NULL GROUP BY 1),
-    cu AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS cui FROM trn GROUP BY 1),
-    nv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                  CAST(COUNT(DISTINCT tok) AS DOUBLE) AS v
-           FROM trn),
-    sc AS (SELECT s.doc_id, s.lang,
-                  CASE WHEN c2.cb IS NOT NULL THEN ln(c2.cb / c1.cx)
-                       ELSE ln({_LM_BACKOFF} * (COALESCE(cu.cui, 0) + 1.0)
-                               / (nv.n + nv.v))
-                  END AS lp
-           FROM tl s CROSS JOIN nv
-           LEFT JOIN c2 ON c2.prev = s.prev AND c2.tok = s.tok
-           LEFT JOIN c1 ON c1.prev = s.prev
-           LEFT JOIN cu ON cu.tok = s.tok
-           WHERE s.prev IS NOT NULL),
-    ppl AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_scored,
-                   exp(-AVG(lp)) AS p
-            FROM sc GROUP BY doc_id, lang)
-"""
-
-
-@register(
-    "text_lm_perplexity",
-    f"""
-    WITH {_SQL_LM_PPL}
-    SELECT doc_id, lang, n_scored, ROUND(p, 4) AS ppl
-    FROM ppl ORDER BY ROUND(p, 4) DESC, doc_id LIMIT 20
-    """,
-)
-def text_lm_perplexity(spark, sf_dir):
-    """CCNet-style LM quality scoring (Wenzek et al. 2020,
-    arXiv:1911.00359): train a bigram language model on the TARGET
-    corpus (lang='en' documents) with stupid backoff (Brants et al.
-    2007 — S(w|w') = c(w'w)/c(w') if seen, else 0.4·(c(w)+1)/(N+V),
-    add-1 on the unigram leg so OOV tokens score finitely), then score
-    EVERY document by per-token perplexity exp(-mean ln S).  The 20
-    highest-perplexity docs are the drop candidates — out-of-domain
-    (non-en) documents surface at the top, which is exactly the CCNet
-    gate a pretraining pipeline runs at corpus scale.
-
-    Scale shape: ONE token scan feeds train counts (bigram/context/
-    unigram groupBys, all map-side combined); the count tables are
-    vocab- and corpus-bounded dims attached by KEYED joins (the bigram
-    dim is vocab²-bounded — never force-broadcast, the gate rule);
-    scoring is one pass over token bigrams; the scalar (N, V) frame
-    rides a crossJoin (1 row); top-k compiles to
-    TakeOrderedAndProject — no global sort."""
-    from .functions.quality import bigram_perplexity
-
-    d = _t(spark, sf_dir, "documents")
-    # ONE implementation of the model: quality.bigram_perplexity (the
-    # curate_job gate runs the same code); this query adds the lang
-    # column back and takes the top-20 drop candidates
-    ppl = bigram_perplexity(d).join(d.select("doc_id", "lang"), "doc_id")
-    return (
-        ppl.orderBy(F.desc(F.round("ppl", 4)), "doc_id")
-        .limit(20)
-        .select(
-            "doc_id", "lang", "n_scored", F.round("ppl", 4).alias("ppl")
-        )
-    )
-
-
-_NB_B = 256  # hashed-feature buckets for the NB classifier
-
-
-@register(
-    "text_nb_classifier",
-    f"""
-    WITH {SQL_TOK},
-    lbl AS (SELECT doc_id,
-                   CASE WHEN len(list_filter(string_split(text, ' '),
-                                             t -> t = 'a' OR t = 'the'))
-                             / CAST(len(string_split(text, ' ')) AS DOUBLE)
-                             > 0.05
-                        THEN 'enlike' ELSE 'other' END AS label,
-                   doc_id % 5 = 0 AS is_test
-            FROM documents),
-    feat AS (SELECT t.doc_id, l.label,
-                    {sql_charfold('t.tok')} % {_NB_B} AS bucket,
-                    l.is_test
-             FROM tok t JOIN lbl l ON l.doc_id = t.doc_id),
-    cls AS (SELECT label, CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS nd,
-                   CAST(COUNT(*) AS DOUBLE) AS nt
-            FROM feat WHERE NOT is_test GROUP BY label),
-    ndocs AS (SELECT CAST(SUM(nd) AS DOUBLE) AS total FROM cls),
-    cbl AS (SELECT label, bucket, CAST(COUNT(*) AS DOUBLE) AS c
-            FROM feat WHERE NOT is_test GROUP BY 1, 2),
-    lik AS (SELECT l.label, b.bucket,
-                   ln((COALESCE(cbl.c, 0) + 1.0) / (l.nt + {_NB_B}))
-                     AS ll,
-                   ln(l.nd / ndocs.total) AS prior
-            FROM cls l CROSS JOIN ndocs
-            CROSS JOIN (SELECT DISTINCT bucket FROM feat) b
-            LEFT JOIN cbl ON cbl.label = l.label AND cbl.bucket = b.bucket),
-    tc AS (SELECT doc_id, label AS true_label, bucket,
-                  CAST(COUNT(*) AS DOUBLE) AS c
-           FROM feat WHERE is_test GROUP BY 1, 2, 3),
-    sc AS (SELECT tc.doc_id, tc.true_label, lik.label,
-                  ANY_VALUE(lik.prior) + SUM(tc.c * lik.ll) AS score
-           FROM tc JOIN lik ON lik.bucket = tc.bucket
-           GROUP BY 1, 2, 3),
-    pick AS (SELECT doc_id, true_label, label AS pred_label,
-                    ROW_NUMBER() OVER (
-                      PARTITION BY doc_id
-                      ORDER BY ROUND(score, 6) DESC, label) AS rn
-             FROM sc)
-    SELECT true_label, pred_label, CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM pick WHERE rn = 1 GROUP BY 1, 2
-    """,
-)
-def text_nb_classifier(spark, sf_dir):
-    """Hashed-feature multinomial Naive Bayes document classifier — the
-    fasttext-style linear gate a pretraining pipeline trains IN the
-    engine (public method: McCallum & Nigam 1998 multinomial NB +
-    hashing trick, Weinberger et al. 2009): DISTILL the heuristic
-    stopword-ratio gate (lang_id_confusion's rule) into a trained model
-    — the standard "label with a heuristic, train a cheap classifier on
-    the labels" workflow (CCNet / RefinedWeb-style).  Train on the 80%
-    split (doc_id % 5 != 0, the q_train_split discipline), predict on
-    the held-out 20%, emit the CONFUSION MATRIX — training, inference
-    and evaluation as one relational job, no ML framework.
-
-    The target is deliberately NOT the lang column: this corpus gives
-    every lang the identical 31-token vocabulary, so lang is
-    token-unlearnable and NB provably collapses to the prior (measured
-    — all-'en' predictions); the heuristic label IS a function of token
-    frequencies, so the held-out confusion demonstrates real learning.
-
-    Model: P(label) from train doc counts; P(bucket|label) add-1
-    smoothed over B=256 charfold-hashed token buckets; prediction =
-    argmax of prior + Σ count·log-lik, ROUNDED to 6dp before the
-    argmax with ties to the smaller label so the decision is
-    engine-portable.
-
-    Scale shape: ONE token scan feeds train counts and test features
-    (both map-side-combined groupBys); the likelihood dim is ≤ B×L rows
-    BY CONSTRUCTION (bounded, broadcast-safe); scoring is one keyed
-    join + one (doc, label) aggregate; the argmax is a per-doc window
-    over L rows.  Nothing data-dependent is force-broadcast."""
-    d = _t(spark, sf_dir, "documents")
-    toksplit = F.split("text", " ")
-    ratio = F.size(
-        F.filter(toksplit, lambda t: t.isin("a", "the"))
-    ) / F.size(toksplit).cast("double")
-    lbl = d.select(
-        "doc_id",
-        F.when(ratio > 0.05, "enlike").otherwise("other").alias("label"),
-        (F.col("doc_id") % 5 == 0).alias("is_test"),
-    )
-    toks = _doc_tokens(spark, sf_dir)
-    feat = toks.join(lbl, "doc_id").select(
-        "doc_id",
-        "label",
-        (charfold(F.col("tok")) % _NB_B).alias("bucket"),
-        "is_test",
-    ).localCheckpoint(eager=True)
-    trn = feat.filter(~F.col("is_test"))
-    cls = trn.groupBy("label").agg(
-        F.countDistinct("doc_id").cast("double").alias("nd"),
-        F.count("*").cast("double").alias("nt"),
-    )
-    ndocs = cls.agg(F.sum("nd").alias("total"))
-    cbl = trn.groupBy("label", "bucket").agg(
-        F.count("*").cast("double").alias("c")
-    )
-    buckets = feat.select("bucket").distinct()
-    lik = (
-        cls.crossJoin(ndocs)
-        .crossJoin(buckets)
-        .join(cbl, ["label", "bucket"], "left")
-        .select(
-            "label",
-            "bucket",
-            F.log(
-                (F.coalesce("c", F.lit(0.0)) + 1.0) / (F.col("nt") + _NB_B)
-            ).alias("ll"),
-            F.log(F.col("nd") / F.col("total")).alias("prior"),
-        )
-    )
-    tc = (
-        feat.filter("is_test")
-        .groupBy("doc_id", F.col("label").alias("true_label"), "bucket")
-        .agg(F.count("*").cast("double").alias("c"))
-    )
-    sc = (
-        tc.join(lik, "bucket")
-        .groupBy("doc_id", "true_label", "label")
-        .agg(
-            (F.any_value("prior") + F.sum(F.col("c") * F.col("ll"))).alias(
-                "score"
-            )
-        )
-    )
-    wpick = Window.partitionBy("doc_id").orderBy(
-        F.desc(F.round("score", 6)), "label"
-    )
-    return (
-        sc.withColumn("rn", F.row_number().over(wpick))
-        .filter(F.col("rn") == 1)
-        .groupBy("true_label", F.col("label").alias("pred_label"))
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-from .functions.pii import sql_count as _sql_pii_count
-from .functions.pii import sql_redact as _sql_pii_redact
-
-# Deterministic PII injection shared by BOTH engines: the synthetic corpus
-# contains no organic PII, so every third document gets an email / phone /
-# IP / SSN-shaped id derived arithmetically from doc_id — identical text on
-# both sides, so the oracle pins the REDACTION semantics, not the corpus.
-_SQL_PII_INJECT = """
-    pii AS (SELECT doc_id,
-                   CASE WHEN doc_id % 3 = 0 THEN text
-                        || ' reach u' || CAST(doc_id AS VARCHAR)
-                        || '@ex.org or 555-'
-                        || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                        || ' from 10.' || CAST(doc_id % 256 AS VARCHAR)
-                        || '.0.' || CAST(doc_id % 100 AS VARCHAR)
-                        || ' id ' || CAST(100 + doc_id % 900 AS VARCHAR)
-                        || '-' || CAST(10 + doc_id % 90 AS VARCHAR)
-                        || '-' || CAST(1000 + doc_id % 9000 AS VARCHAR)
-                   ELSE text END AS t
-            FROM documents)
-"""
-
-
-@register(
-    "text_pii_redact",
-    f"""
-    WITH {_SQL_PII_INJECT},
-    r1 AS (SELECT doc_id, {_sql_pii_redact('t')} AS red,
-                  {_sql_pii_count('t', 'email')} AS n_email,
-                  {_sql_pii_count('t', 'ssn')} AS n_ssn,
-                  {_sql_pii_count('t', 'ip')} AS n_ip,
-                  {_sql_pii_count('t', 'phone')} AS n_phone
-           FROM pii),
-    r2 AS (SELECT r1.*,
-                  {_sql_pii_count('red', 'email')}
-                  + {_sql_pii_count('red', 'ssn')}
-                  + {_sql_pii_count('red', 'ip')}
-                  + {_sql_pii_count('red', 'phone')} AS n_res
-           FROM r1)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN n_email + n_ssn + n_ip + n_phone > 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_with_pii,
-           CAST(SUM(n_email) AS BIGINT) AS n_email,
-           CAST(SUM(n_ssn) AS BIGINT) AS n_ssn,
-           CAST(SUM(n_ip) AS BIGINT) AS n_ip,
-           CAST(SUM(n_phone) AS BIGINT) AS n_phone,
-           CAST(SUM(n_res) AS BIGINT) AS n_residual,
-           CAST(SUM({sql_charfold('md5(red)')}) AS BIGINT)
-             AS redacted_checksum
-    FROM r2
-    """,
-)
-def text_pii_redact(spark, sf_dir):
-    """PII REDACTION (functions/pii.py) — the scrub pass a pretraining
-    corpus runs before release (BigCode/StarCoder PII pipeline, Allal et
-    al. 2023; C4 scrub, Raffel et al. 2020; no reference analog — an
-    LLM-pipeline extension op).  Emails, SSN-shaped ids, IPv4s, and
-    555-prefix phones are matched by ONE pattern table written in the
-    Java-regex ∩ RE2 subset and replaced in a fixed order; the output
-    row carries per-type counts, the post-redaction residual (0 —
-    pinned by test_round7_session3), and a charfold(md5) checksum of
-    every redacted document, so the oracle pins the exact byte-level
-    replacement semantics, not just the counts.
-
-    Scale shape: injection + redaction + counting are row-local JVM
-    regex expressions inside whole-stage codegen — no shuffle, no UDF;
-    the only exchange is the final single-row rollup's partial-agg
-    combine.  Linear in corpus bytes, embarrassingly parallel."""
-    from .functions.pii import redact_pii
-
-    d = _docs(spark, sf_dir)
-    did = F.col("doc_id")
-    injected = F.when(
-        did % 3 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" reach u"), did.cast("string"),
-            F.lit("@ex.org or 555-"),
-            F.lpad((did % 10000).cast("string"), 4, "0"),
-            F.lit(" from 10."), (did % 256).cast("string"),
-            F.lit(".0."), (did % 100).cast("string"),
-            F.lit(" id "), (did % 900 + 100).cast("string"),
-            F.lit("-"), (did % 90 + 10).cast("string"),
-            F.lit("-"), (did % 9000 + 1000).cast("string"),
-        ),
-    ).otherwise(F.col("text"))
-    r = redact_pii(d.select("doc_id", injected.alias("t")), "t")
-    any_pii = (
-        F.col("n_email") + F.col("n_ssn") + F.col("n_ip") + F.col("n_phone")
-    ) > 0
-    return r.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(any_pii.cast("int")).cast("bigint").alias("n_docs_with_pii"),
-        F.sum("n_email").cast("bigint").alias("n_email"),
-        F.sum("n_ssn").cast("bigint").alias("n_ssn"),
-        F.sum("n_ip").cast("bigint").alias("n_ip"),
-        F.sum("n_phone").cast("bigint").alias("n_phone"),
-        F.sum("n_residual").cast("bigint").alias("n_residual"),
-        F.sum(charfold(F.md5(F.col("redacted"))))
-        .cast("bigint")
-        .alias("redacted_checksum"),
-    )
-
-
-_LINE_W = 10  # tokens per synthetic "line" (corpus text is single-line)
-_LINE_DF_CAP = 4  # drop lines appearing in >= this many distinct docs
-
-
-@register(
-    "text_line_dedup",
-    f"""
-    WITH ltokarr AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS arr
-                     FROM documents),
-    ltok AS (SELECT doc_id,
-                    CAST(generate_subscripts(arr, 1) - 1 AS BIGINT) AS pos,
-                    unnest(arr) AS tok FROM ltokarr),
-    ln_ AS (SELECT t.doc_id, CAST(t.pos // {_LINE_W} AS BIGINT) AS line_id,
-                   string_agg(t.tok, ' ' ORDER BY t.pos) AS line
-            FROM ltok t GROUP BY 1, 2),
-    lk AS (SELECT doc_id, line_id, line, md5(line) AS k FROM ln_),
-    dfc AS (SELECT k, COUNT(DISTINCT doc_id) AS dfreq FROM lk GROUP BY k),
-    j AS (SELECT l.doc_id, l.line_id, l.line,
-                 d.dfreq < {_LINE_DF_CAP} AS kept
-          FROM lk l JOIN dfc d ON l.k = d.k),
-    wd AS (SELECT j.*, doc.lang
-           FROM j JOIN documents doc ON doc.doc_id = j.doc_id)
-    SELECT lang,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT)
-             AS n_lines_dropped,
-           CAST(SUM(CASE WHEN kept THEN len(string_split(line, ' '))
-                         ELSE 0 END) AS BIGINT) AS n_tokens_kept,
-           CAST(SUM(CASE WHEN kept THEN {sql_charfold(
-               "md5(CAST(doc_id AS VARCHAR) || ':' || "
-               "CAST(line_id AS VARCHAR) || ':' || line)"
-           )} ELSE 0 END) AS BIGINT) AS kept_checksum
-    FROM wd GROUP BY lang
-    """,
-)
-def text_line_dedup(spark, sf_dir):
-    """CCNet-style LINE-level dedup (Wenzek et al. 2020: hash every
-    line, drop lines whose corpus frequency crosses a threshold —
-    boilerplate headers/footers die, unique prose survives).  The
-    synthetic corpus is single-line, so "lines" are deterministic
-    _LINE_W-token segments (identical segmentation in both engines);
-    the operator under test — corpus-frequency line excision with
-    per-line provenance — is the real one.  A line is dropped when it
-    appears in >= _LINE_DF_CAP distinct documents; the per-lang
-    report checksums every KEPT (doc, line_id, line) so the exact
-    surviving text is oracle-pinned.
-
-    Scale shape: line construction is ROW-LOCAL (array slice over the
-    token array — no per-token shuffle, unlike the oracle's GROUP BY
-    formulation); the frequency table is ONE hash-keyed groupBy
-    (map-side combined) re-attached by ONE keyed join on the line hash
-    — the dedup_ngram_jaccard posting-list shape, linear in corpus
-    lines.  Hot keys ARE the point (boilerplate lines have huge df):
-    the count side collapses them map-side, and the join side fans the
-    tiny (k, dfreq) row out to its occurrences — no Σ|bucket|² term
-    anywhere."""
-    from .functions.quality import doc_lines
-
-    # checkpointed: the frame feeds BOTH the frequency groupBy and the
-    # join branch — without it the split+posexplode+md5 pipeline runs
-    # twice (the dedup_minhash_pairs shingle-checkpoint convention)
-    lines = doc_lines(
-        _docs(spark, sf_dir), "text", _LINE_W, keep_cols=("doc_id", "lang")
-    ).withColumn("k", F.md5("line")).localCheckpoint(eager=True)
-    dfc = lines.groupBy("k").agg(F.countDistinct("doc_id").alias("dfreq"))
-    j = lines.join(dfc, "k").withColumn(
-        "kept", F.col("dfreq") < _LINE_DF_CAP
-    )
-    line_sum = charfold(
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("line_id"), F.col("line")))
-    )
-    return j.groupBy("lang").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-        F.count("*").alias("n_lines"),
-        F.sum(F.when(F.col("kept"), 0).otherwise(1))
-        .cast("bigint")
-        .alias("n_lines_dropped"),
-        F.sum(
-            F.when(F.col("kept"), F.size(F.split("line", " "))).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_tokens_kept"),
-        F.sum(F.when(F.col("kept"), line_sum).otherwise(0))
-        .cast("bigint")
-        .alias("kept_checksum"),
-    )
-
-
-# Shared CTE block for the k-means family: seeded init + 2 Lloyd rounds +
-# final assignment carrying the (rounded) cosine — the _SQL_IVF_RECALL
-# machinery with the assignment cosine kept for downstream aggregation.
-_SQL_KMEANS_FIN = f"""
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    init AS (SELECT cid, cv FROM (
-      SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid,
-             v AS cv
-      FROM e) WHERE cid < 8),
-    {_sql_kmeans_round('e', 'init', 'a1', 'c1')},
-    {_sql_kmeans_round('e', 'c1', 'a2', 'c2')},
-    fin AS (SELECT vec_id, cid, cc FROM (
-      SELECT e.vec_id, c.cid,
-             ROUND(list_cosine_similarity(e.v, c.cv), 6) AS cc,
-             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY ROUND(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-      FROM e, c2 c) WHERE rn = 1)
-"""
-
-
-def _kmeans_fin_df(spark, sf_dir):
-    """Spark twin of _SQL_KMEANS_FIN: (vec_id, cid, cc) — final Lloyd
-    assignment with the rounded cosine to the final centroid.  The
-    assignment tie rule lives in ONE place
-    (functions/similarity.assign_nearest, shared with the Lloyd loop
-    and IVF)."""
-    from .functions.similarity import assign_nearest, kmeans_centroids
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = kmeans_centroids(e, n_centroids=8, rounds=2, vec_col="v", dim=64)
-    cents = cents.localCheckpoint(eager=True)
-    return assign_nearest(e, cents, keep="cc")
-
-
-@register(
-    "embed_kmeans",
-    f"""
-    WITH {_SQL_KMEANS_FIN}
-    SELECT CAST(cid AS BIGINT) AS cid,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           ROUND(AVG(cc), 4) AS mean_cos,
-           CAST(SUM(vec_id) AS BIGINT) AS member_checksum
-    FROM fin GROUP BY cid
-    """,
-)
-def embed_kmeans(spark, sf_dir):
-    """K-MEANS CLUSTERING of the embedding table exposed as a first-class
-    operator (functions/similarity.kmeans_centroids — the same seeded
-    2-round Lloyd the IVF index trains, Lloyd 1982): per-cluster size,
-    mean assignment cosine (cluster coherence), and an exact member
-    checksum so the ASSIGNMENT is oracle-pinned, not just the sizes.
-    The clustering that SemDeDup/prototype curation builds on (Abbas et
-    al. 2023; Sorscher et al. 2022) — curate_cluster_balance consumes
-    exactly this assignment.
-
-    Scale shape: per Lloyd round ONE broadcast crossJoin against the
-    k-row centroid dim + a max_by per vector + a k×d-bounded mean — the
-    vector table is never shuffled; the final rollup groups on k keys,
-    map-side combined.  Linear in n·k·d."""
-    fin = _kmeans_fin_df(spark, sf_dir)
-    return fin.groupBy(F.col("cid").cast("bigint").alias("cid")).agg(
-        F.count("*").alias("n_vecs"),
-        F.round(F.avg("cc"), 4).alias("mean_cos"),
-        F.sum("vec_id").cast("bigint").alias("member_checksum"),
-    )
-
-
-_PROTO_M = 25  # prototypes kept per cluster
-
-
-@register(
-    "curate_cluster_balance",
-    f"""
-    WITH {_SQL_KMEANS_FIN},
-    rk AS (SELECT vec_id, cid, cc,
-                  ROW_NUMBER() OVER (PARTITION BY cid
-                    ORDER BY cc DESC, vec_id) AS rn
-           FROM fin)
-    SELECT CAST(cid AS BIGINT) AS cid,
-           CAST(COUNT(*) AS BIGINT) AS n_avail,
-           CAST(LEAST(COUNT(*), {_PROTO_M}) AS BIGINT) AS n_take,
-           CAST(SUM(CASE WHEN rn <= {_PROTO_M} THEN vec_id ELSE 0 END)
-                AS BIGINT) AS sel_checksum,
-           ROUND(MIN(CASE WHEN rn <= {_PROTO_M} THEN cc END), 4)
-             AS sel_cos_min
-    FROM rk GROUP BY cid
-    """,
-)
-def curate_cluster_balance(spark, sf_dir):
-    """CLUSTER-BALANCED PROTOTYPE SELECTION — the curation step after
-    clustering (Sorscher et al. 2022 "Beyond neural scaling laws":
-    rank items by prototypicality = cosine to their cluster centroid,
-    keep a fixed per-cluster quota so no cluster dominates the training
-    mix; the SSL-prototypes / SemDeDup-family pattern).  Selects the
-    _PROTO_M most prototypical vectors per k-means cluster (ties broken
-    on vec_id) and reports per-cluster availability, quota, an exact
-    selected-member checksum, and the selection's cosine floor.
-
-    Scale shape: the per-cluster rank does NOT use
-    Window.partitionBy(cid) — with k=8 clusters that is 8 tasks each
-    sorting n/8 rows on one core at corpus scale.  It uses
-    functions/ranks.grouped_row_number: ONE global two-pass range-
-    partitioned rank over (cid, -cc, vec_id) (range partitioning
-    spreads every cluster across many tasks regardless of skew) minus
-    broadcast per-cluster offsets.  The oracle keeps the literal
-    partitioned window and the driver hash-compare proves the
-    equivalence."""
-    from .functions.ranks import grouped_row_number
-
-    fin = _kmeans_fin_df(spark, sf_dir).withColumn("ncc", -F.col("cc"))
-    rk = grouped_row_number(fin, ["cid"], ["ncc", "vec_id"], "rn")
-    sel = F.col("rn") <= _PROTO_M
-    return rk.groupBy(F.col("cid").cast("bigint").alias("cid")).agg(
-        F.count("*").alias("n_avail"),
-        F.least(F.count("*"), F.lit(_PROTO_M)).cast("bigint").alias("n_take"),
-        F.sum(F.when(sel, F.col("vec_id")).otherwise(0))
-        .cast("bigint")
-        .alias("sel_checksum"),
-        F.round(F.min(F.when(sel, F.col("cc"))), 4).alias("sel_cos_min"),
-    )
-
-
-@register(
-    "kg_bcubed",
-    _sql_minhash().replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , hot1 AS (SELECT s0, s1 FROM sig GROUP BY s0, s1 HAVING COUNT(*) > 64),
-    hot2 AS (SELECT s2, s3 FROM sig GROUP BY s2, s3 HAVING COUNT(*) > 64),
-    k1 AS (SELECT s.* FROM sig s ANTI JOIN hot1 h ON s.s0 = h.s0 AND s.s1 = h.s1),
-    k2 AS (SELECT s.* FROM sig s ANTI JOIN hot2 h ON s.s2 = h.s2 AND s.s3 = h.s3),
-    cand AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM k1 a JOIN k1 b ON a.s0 = b.s0 AND a.s1 = b.s1 AND a.doc_id < b.doc_id
-      UNION
-      SELECT a.doc_id, b.doc_id
-      FROM k2 a JOIN k2 b ON a.s2 = b.s2 AND a.s3 = b.s3 AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM shingle GROUP BY doc_id),
-    shared AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN shingle sa ON sa.doc_id = c.doc_a
-      JOIN shingle sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-      GROUP BY 1, 2
-    ),
-    dup AS (
-      SELECT c.doc_a, c.doc_b FROM cand c
-      JOIN shared s ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b
-      JOIN counts na ON c.doc_a = na.doc_id
-      JOIN counts nb ON c.doc_b = nb.doc_id
-      WHERE s.shared / (na.n + nb.n - s.shared + 1e-12) >= 0.5
-    ),
-    verts AS (SELECT doc_a AS v FROM dup UNION SELECT doc_b FROM dup),
-    sym AS (SELECT doc_a AS a, doc_b AS b FROM dup
-            UNION SELECT doc_b, doc_a FROM dup),
-    reach(a, b) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ),
-    labels AS (SELECT a AS doc_id, MIN(b) AS keep_doc FROM reach GROUP BY a),
-    plab AS (SELECT d.doc_id, COALESCE(l.keep_doc, d.doc_id) AS c,
-                    md5(d.text) AS g
-             FROM documents d LEFT JOIN labels l ON l.doc_id = d.doc_id),
-    cg AS (SELECT c, g, CAST(COUNT(*) AS DOUBLE) AS ncg
-           FROM plab GROUP BY 1, 2),
-    cs AS (SELECT c, CAST(COUNT(*) AS DOUBLE) AS nc FROM plab GROUP BY 1),
-    gs AS (SELECT g, CAST(COUNT(*) AS DOUBLE) AS ng FROM plab GROUP BY 1),
-    tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM plab),
-    ps AS (SELECT SUM(ncg * ncg / nc) AS s FROM cg JOIN cs USING (c)),
-    rs AS (SELECT SUM(ncg * ncg / ng) AS s FROM cg JOIN gs USING (g))
-    SELECT CAST(tot.nt AS BIGINT) AS n_docs,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM cs) AS n_pred_clusters,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM gs) AS n_gold_clusters,
-           ROUND(ps.s / tot.nt, 4) AS bcubed_precision,
-           ROUND(rs.s / tot.nt, 4) AS bcubed_recall,
-           ROUND(2 * (ps.s / tot.nt) * (rs.s / tot.nt)
-                 / ((ps.s / tot.nt) + (rs.s / tot.nt)), 4) AS bcubed_f1
-    FROM tot, ps, rs
-    """,
-)
-def kg_bcubed(spark, sf_dir):
-    """B-CUBED cluster-quality evaluation (Bagga & Baldwin 1998 — the
-    standard entity-resolution/coreference clustering metric; Amigó et
-    al. 2009 showed it the only common metric satisfying all four
-    clustering-evaluation constraints): B³ precision / recall / F1 of
-    the MinHash near-dup clustering (dedup_resolve_clusters machinery:
-    banded LSH candidates → Jaccard-verified pairs → pointer-jumping
-    CC; unclustered docs are singletons) against the EXACT-duplicate
-    gold partition (docs sharing identical text, keyed by md5).  This
-    closes the measurement loop the ANN family already has
-    (ann_*_recall): the dedup pipeline's clustering now carries a
-    measured quality number instead of an assumed one — recall 1.0 is
-    EXPECTED (exact dups are trivially near-dups; any value < 1 means
-    the LSH bands or the hot-bucket cap dropped a true pair), while
-    precision < 1 measures how aggressively near-dup clustering merges
-    beyond exact equality.  The driver testdata contains NO exact-dup
-    texts (all gold clusters are singletons), so recall is trivially
-    1.0 there and precision (0.95 at sf0.001) carries the signal; the
-    metric MATH is pinned non-trivially by the hand-computed partition
-    in tests/test_round7_session3.py over core/metrics.bcubed (the
-    single implementation both paths share).
-
-    Scale shape: everything up to `labels` is the vetted
-    dedup_resolve_clusters plan (banded self-join with hot-bucket
-    anti-join, inverted-index verify, pointer-jumping CC — 100×-vetted
-    r6); the metric itself is three map-side-combined groupBys on
-    (cluster, gold) keys + two keyed joins of count dims + scalar
-    combines.  B³ decomposes per-item → per-(c,g)-pair counts, so no
-    pairwise item join ever materializes."""
-    from .link.cc import connected_components
-
-    pairs = dedup_minhash_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    pairs = pairs.localCheckpoint(eager=True)
-    verts = (
-        pairs.select(F.col("src").alias("doc_id"))
-        .unionByName(pairs.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    labels = connected_components(verts, pairs, vertex_col="doc_id")
-    plab = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", F.md5("text").alias("g"))
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("canonical_id", F.col("doc_id")).alias("c"),
-            "g",
-        )
-    ).localCheckpoint(eager=True)
-    from .core.metrics import bcubed
-
-    return bcubed(plab, "c", "g")
-
-
-_TFIDF_K = 3  # keywords kept per document
-
-
-@register(
-    "text_keywords_tfidf",
-    f"""
-    WITH {SQL_TOK},
-    tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS DOUBLE) AS tf
-           FROM tok GROUP BY 1, 2),
-    dfr AS (SELECT tok, CAST(COUNT(*) AS DOUBLE) AS dfr FROM tf GROUP BY 1),
-    nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
-    sc AS (SELECT tf.doc_id, tf.tok,
-                  ROUND(tf.tf * ln(nd.n / dfr.dfr), 6) AS score
-           FROM tf JOIN dfr ON dfr.tok = tf.tok CROSS JOIN nd),
-    rk AS (SELECT doc_id, tok, score,
-                  ROW_NUMBER() OVER (PARTITION BY doc_id
-                    ORDER BY score DESC, tok) AS rn
-           FROM sc)
-    SELECT tok AS term,
-           CAST(COUNT(*) AS BIGINT) AS n_top_docs,
-           CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_rank1
-    FROM rk WHERE rn <= {_TFIDF_K}
-    GROUP BY tok ORDER BY n_top_docs DESC, term LIMIT 30
-    """,
-)
-def text_keywords_tfidf(spark, sf_dir):
-    """PER-DOCUMENT KEYWORD EXTRACTION by tf-idf (Spärck Jones 1972):
-    score = term_frequency × ln(N/df), top-_TFIDF_K terms per document
-    (ties on the term), rolled up to the corpus's 30 most-selected
-    keywords with how often each led a document.  The
-    keyword/topic-tagging pass a curation pipeline runs for mixture
-    reporting and domain labelling; shares the posting-list machinery
-    of text_bm25_* (same idf dim) but selects per-DOCUMENT, not
-    per-query.
-
-    Scale shape: tf is ONE (doc, term) groupBy (map-side combined); df
-    is a groupBy over tf's output; both attach by a keyed join on the
-    term (the BM25 posting shape — the df dim is vocab-sized,
-    data-dependent, so KEYED join, not forced broadcast).  The top-k
-    per doc uses Window.partitionBy(doc_id) — doc_id is
-    HIGH-cardinality, so partition count IS the parallelism (the
-    opposite regime from curate_cluster_balance's k=8 clusters, where
-    the partitioned window would serialize and grouped_row_number is
-    used instead).  Scores rank on round(·, 6) with term tie-breaks —
-    the cross-engine ln drift discipline."""
-    toks = _doc_tokens(spark, sf_dir)
-    # checkpointed: tf feeds both the df groupBy and the scoring join
-    tf = toks.groupBy("doc_id", "tok").agg(
-        F.count("*").cast("double").alias("tf")
-    ).localCheckpoint(eager=True)
-    dfr = tf.groupBy("tok").agg(F.count("*").cast("double").alias("dfr"))
-    nd = _docs(spark, sf_dir).agg(F.count("*").cast("double").alias("n"))
-    sc = tf.join(dfr, "tok").crossJoin(F.broadcast(nd)).select(
-        "doc_id", "tok",
-        F.round(F.col("tf") * F.log(F.col("n") / F.col("dfr")), 6).alias(
-            "score"
-        ),
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "tok")
-    rk = sc.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= _TFIDF_K
-    )
-    return (
-        rk.groupBy(F.col("tok").alias("term"))
-        .agg(
-            F.count("*").alias("n_top_docs"),
-            F.sum(F.when(F.col("rn") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_rank1"),
-        )
-        .orderBy(F.desc("n_top_docs"), "term")
-        .limit(30)
-    )
-
-
-@register(
-    "curate_ccnet_buckets",
-    f"""
-    WITH {_SQL_LM_PPL},
-    b AS (SELECT doc_id, lang, ROUND(p, 4) AS p4,
-                 NTILE(3) OVER (PARTITION BY lang
-                   ORDER BY ROUND(p, 4), doc_id) AS bucket
-          FROM ppl)
-    SELECT lang, CAST(bucket AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           MIN(p4) AS min_ppl, MAX(p4) AS max_ppl,
-           CAST(SUM(doc_id) AS BIGINT) AS member_checksum
-    FROM b GROUP BY 1, 2
-    """,
-)
-def curate_ccnet_buckets(spark, sf_dir):
-    """CCNet HEAD/MIDDLE/TAIL bucketING (Wenzek et al. 2020 §4.3: score
-    every document with the target-language LM, split each language
-    into perplexity TERCILES; pretraining recipes then sample
-    head-heavy).  Reuses the ONE bigram-LM implementation
-    (quality.bigram_perplexity — the text_lm_perplexity / curate() gate
-    model) and assigns bucket 1/2/3 per language by ascending
-    perplexity, reporting per-(lang, bucket) counts, perplexity range,
-    and the exact member checksum so the assignment is oracle-pinned.
-
-    Scale shape: LM scoring is the vetted text_lm_perplexity plan (one
-    token scan, vocab-bounded count dims on keyed joins).  The per-lang
-    tercile does NOT use NTILE over Window.partitionBy(lang) — a
-    handful of language partitions means a handful of tasks each
-    sorting corpus/|langs| rows at scale (the r6 VERDICT
-    SinglePartition class, just sharded by lang).  Instead:
-    functions/ranks.grouped_row_number (ONE global range-partitioned
-    two-pass rank over (lang, ppl, doc_id) minus broadcast per-lang
-    offsets) + the ARITHMETIC NTILE rule on (rank, n_lang) — the exact
-    curate_length_curriculum discipline, per group.  The oracle keeps
-    the literal partitioned NTILE(3) and the driver hash-compare
-    proves the equivalence."""
-    from .functions.quality import bigram_perplexity
-    from .functions.ranks import grouped_row_number
-
-    d = _t(spark, sf_dir, "documents")
-    ppl = bigram_perplexity(d).join(d.select("doc_id", "lang"), "doc_id")
-    pr = ppl.select("lang", "doc_id", F.round("ppl", 4).alias("p4"))
-    ranked = grouped_row_number(pr, ["lang"], ["p4", "doc_id"], "rn")
-    nl = ranked.groupBy("lang").agg(F.count("*").cast("bigint").alias("nl"))
-    b = ranked.join(F.broadcast(nl), "lang").withColumn(
-        "bucket",
-        F.expr(
-            "CASE WHEN rn <= (nl % 3) * ((nl DIV 3) + 1) "
-            "THEN ((rn - 1) DIV ((nl DIV 3) + 1)) + 1 "
-            "ELSE (nl % 3) + ((rn - (nl % 3) * ((nl DIV 3) + 1) - 1) "
-            "DIV GREATEST(nl DIV 3, 1)) + 1 END"
-        ),
-    )
-    return b.groupBy("lang", F.col("bucket").cast("bigint").alias("bucket")).agg(
-        F.count("*").alias("n_docs"),
-        F.min("p4").alias("min_ppl"),
-        F.max("p4").alias("max_ppl"),
-        F.sum("doc_id").cast("bigint").alias("member_checksum"),
-    )
-
-
-@register(
-    "curate_temperature_mixture",
-    f"""
-    WITH avail AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
-                   FROM documents GROUP BY lang),
-    qs AS (SELECT lang, n, sqrt(CAST(n AS DOUBLE)) AS sq FROM avail),
-    z AS (SELECT SUM(sq) AS z, CAST(SUM(n) AS BIGINT) AS ntot FROM qs),
-    takes AS (SELECT q.lang, q.n AS n_avail,
-                     ROUND(q.sq / z.z, 4) AS target_share,
-                     CAST(FLOOR((z.ntot // 2) * q.sq / z.z) AS BIGINT)
-                       AS n_take_uncapped,
-                     LEAST(q.n,
-                           CAST(FLOOR((z.ntot // 2) * q.sq / z.z) AS BIGINT))
-                       AS n_take
-              FROM qs q CROSS JOIN z),
-    ranked AS (SELECT d.doc_id, d.lang,
-                      ROW_NUMBER() OVER (
-                        PARTITION BY d.lang
-                        ORDER BY {sql_charfold(
-                            "md5(CAST(d.doc_id AS VARCHAR) || ':tmix')"
-                        )}, d.doc_id) AS rn
-               FROM documents d),
-    sel AS (SELECT r.lang, r.doc_id
-            FROM ranked r JOIN takes t ON t.lang = r.lang
-            WHERE r.rn <= t.n_take),
-    agg AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_selected,
-                   CAST(SUM(doc_id) AS BIGINT) AS sel_checksum
-            FROM sel GROUP BY lang)
-    SELECT t.lang, t.n_avail, t.target_share, t.n_take_uncapped,
-           CAST(t.n_take AS BIGINT) AS n_take,
-           CAST(COALESCE(a.n_selected, 0) AS BIGINT) AS n_selected,
-           CAST(COALESCE(a.sel_checksum, 0) AS BIGINT) AS sel_checksum
-    FROM takes t LEFT JOIN agg a ON a.lang = t.lang
-    """,
-)
-def curate_temperature_mixture(spark, sf_dir):
-    """TEMPERATURE-SCALED language sampling — the OTHER standard mixing
-    primitive next to curate_domain_mixture's fixed targets (Conneau &
-    Lample 2019 XLM §3.1; mT5, Xue et al. 2021: sample language l with
-    probability ∝ p_l^α, α < 1 upsampling low-resource languages).
-    α = 0.5 exactly, so p^α is sqrt — correctly rounded per IEEE-754 in
-    BOTH engines, unlike a general pow whose libm may differ in the
-    last ulp (the cross-engine determinism rule; an env-tunable α would
-    reintroduce pow and is deliberately not offered).  The budget is
-    half the corpus; per-language take = floor(budget × share), capped
-    at availability (no repetition upsampling — the uncapped target
-    stays visible in `n_take_uncapped` so the upsampling pressure is
-    reported, not hidden).  Selection is the seeded-hash order of
-    curate_domain_mixture (':tmix' salt), so the sample itself is
-    checksum-pinned.
-
-    Scale shape: identical to curate_domain_mixture — one groupBy for
-    availability, a scalar normalizer, per-language rank-then-filter
-    windows (domain-bounded partitions), map-side-combined checksums."""
-    d = _t(spark, sf_dir, "documents")
-    avail = d.groupBy("lang").agg(F.count("*").cast("bigint").alias("n"))
-    qs = avail.withColumn("sq", F.sqrt(F.col("n").cast("double")))
-    z = qs.agg(
-        F.sum("sq").alias("z"), F.sum("n").cast("bigint").alias("ntot")
-    )
-    budget = F.floor(F.col("ntot") / 2)
-    takes = qs.crossJoin(F.broadcast(z)).select(
-        "lang",
-        F.col("n").alias("n_avail"),
-        F.round(F.col("sq") / F.col("z"), 4).alias("target_share"),
-        F.floor(budget * F.col("sq") / F.col("z"))
-        .cast("bigint")
-        .alias("n_take_uncapped"),
-        F.least(
-            F.col("n"),
-            F.floor(budget * F.col("sq") / F.col("z")).cast("bigint"),
-        ).alias("n_take"),
-    )
-    w = Window.partitionBy("lang").orderBy(
-        charfold(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":tmix")))),
-        "doc_id",
-    )
-    ranked = d.select("doc_id", "lang").withColumn(
-        "rn", F.row_number().over(w)
-    )
-    sel = ranked.join(
-        F.broadcast(takes.select("lang", "n_take")), "lang"
-    ).filter(F.col("rn") <= F.col("n_take"))
-    agg = sel.groupBy("lang").agg(
-        F.count("*").cast("bigint").alias("n_selected"),
-        F.sum("doc_id").cast("bigint").alias("sel_checksum"),
-    )
-    return takes.join(agg, "lang", "left").select(
-        "lang",
-        "n_avail",
-        "target_share",
-        "n_take_uncapped",
-        F.col("n_take").cast("bigint").alias("n_take"),
-        F.coalesce("n_selected", F.lit(0)).cast("bigint").alias("n_selected"),
-        F.coalesce("sel_checksum", F.lit(0))
-        .cast("bigint")
-        .alias("sel_checksum"),
-    )
-
-
-@register(
-    "kg_distance_distribution",
-    _SQL_EDGES.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """
-    , sym AS (SELECT src AS a, dst AS b FROM edges
-              UNION SELECT dst, src FROM edges),
-    deg AS (
-      SELECT v, SUM(d) AS degree FROM (
-        SELECT src AS v, COUNT(*) AS d FROM edges GROUP BY src
-        UNION ALL
-        SELECT dst, COUNT(*) FROM edges GROUP BY dst
-      ) GROUP BY v),
-    seeds AS (SELECT v FROM deg ORDER BY degree DESC, v LIMIT 4),
-    reach(s, v, dist) AS (
-      SELECT v, v, 0 FROM seeds
-      UNION
-      SELECT reach.s, sym.b, reach.dist + 1
-      FROM reach JOIN sym ON reach.v = sym.a
-      WHERE reach.dist < 3),
-    md AS (SELECT s, v, MIN(dist) AS dist FROM reach GROUP BY 1, 2),
-    hist AS (SELECT dist, CAST(COUNT(*) AS BIGINT) AS n_pairs
-             FROM md GROUP BY dist),
-    tot AS (SELECT CAST(SUM(n_pairs) AS DOUBLE) AS t FROM hist)
-    SELECT CAST(h.dist AS BIGINT) AS dist, h.n_pairs,
-           CAST(SUM(h.n_pairs) OVER (ORDER BY h.dist) AS BIGINT)
-             AS cum_pairs,
-           ROUND(SUM(h.n_pairs) OVER (ORDER BY h.dist) / tot.t, 4)
-             AS frac_cum,
-           SUM(h.n_pairs) OVER (ORDER BY h.dist) / tot.t >= 0.9
-             AS ge_90pct
-    FROM hist h CROSS JOIN tot
-    """,
-)
-def kg_distance_distribution(spark, sf_dir):
-    """NEIGHBORHOOD FUNCTION N(d) — the distance-distribution /
-    effective-diameter measurement (Palmer et al. 2002 ANF; Boldi &
-    Vigna 2011 HyperANF run it with HLL counters at web scale; this is
-    the exact pivot-sampled variant, sharing kg_harmonic's engine
-    _pivot_bfs_dist): per hop d, how many (pivot, vertex) pairs sit at
-    min-distance exactly d from the 4 top-degree pivots, cumulative
-    counts, and the cumulative fraction — the first row with
-    `ge_90pct` true is the sampled EFFECTIVE DIAMETER (smallest d
-    covering 90% of reachable pairs).
-
-    Scale shape: the BFS is the vetted kg_harmonic plan (one keyed
-    (seed, v) frontier shuffle per hop, anti-join visited set); the
-    histogram is a groupBy on max_hops+1 keys, and the cumulative
-    window runs over that ≤4-row frame — the benign driver-scale
-    SinglePartition class (PLAN_AUDIT.md class (b)).  The fraction is
-    a ratio of exact integers, so it is bit-identical across engines —
-    no float-accumulation discipline needed."""
-    visited = _pivot_bfs_dist(spark, sf_dir, n_seeds=4, max_hops=3)
-    hist = visited.groupBy("dist").agg(F.count("*").alias("n_pairs"))
-    tot = hist.agg(F.sum("n_pairs").cast("double").alias("t"))
-    w = Window.orderBy("dist")
-    cum = F.sum("n_pairs").over(w)
-    return (
-        hist.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("dist").cast("bigint").alias("dist"),
-            F.col("n_pairs").cast("bigint").alias("n_pairs"),
-            cum.cast("bigint").alias("cum_pairs"),
-            F.round(cum / F.col("t"), 4).alias("frac_cum"),
-            (cum / F.col("t") >= 0.9).alias("ge_90pct"),
-        )
-    )
-
-
-@register(
-    "ann_ivf_cached",
-    """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cents AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND 8),
-    scored AS (
-      SELECT e.vec_id, e.v, c.cid,
-             ROUND(list_cosine_similarity(e.v, c.cv), 6) AS cc
-      FROM e, cents c),
-    assigned AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid) AS rn
-        FROM scored) WHERE rn = 1),
-    probe AS (SELECT cid FROM scored WHERE vec_id = 0 ORDER BY cc DESC, cid LIMIT 2),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    cand AS (
-      SELECT a.vec_id, a.cid, list_cosine_similarity(a.v, q.qv) AS c
-      FROM assigned a JOIN probe p ON a.cid = p.cid, q
-      WHERE a.vec_id <> 0)
-    SELECT vec_id, CAST(cid AS BIGINT) AS cid, ROUND(c, 4) AS cos_sim,
-           CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY ROUND(c, 6) DESC, vec_id) AS rnk
-          FROM cand)
-    WHERE rnk <= 10
-    """,
-)
-def ann_ivf_cached(spark, sf_dir):
-    """ann_ivf_topk over a MATERIALIZED IVF index stage — the ANN
-    SERVING path (the kg_pagerank_cached pattern applied to the vector
-    family): a production ANN system builds the index ONCE (coarse
-    assignments) and answers every query from it; it does not
-    re-quantize the corpus per query.  The (vec_id, cid) assignment
-    table is built-or-resumed through lineage.StageRunner
-    (config-hash-gated _COMPLETE marker with the assignment logic's
-    source hash riding in the config, so a code change auto-invalidates
-    the cache) into a per-SF dir; the query path reads the index back,
-    probes the 2 nearest inverted lists, and exact-ranks only the
-    probed candidates joined back to the vector table.  The oracle is
-    ann_ivf_topk's SQL UNCHANGED — index-then-query must be
-    value-identical to the straight-through plan.
-
-    Scale shape: the query path never scans the whole corpus — it scans
-    the index dim (2 ints/vector) plus ~n_probe/n_centroids of the
-    vectors (the probed lists, fetched by a keyed join); the one-time
-    build cost is the crossJoin assignment ann_ivf_topk pays on EVERY
-    call.  At 100 TB the assignment table is what you co-partition with
-    the vectors (bucketing by cid) so a probe is a partition-pruned
-    scan."""
-    import hashlib as _hashlib
-    import inspect as _inspect
-
-    from .functions.similarity import cosine_fold
-    from .lineage import StageRunner
-
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = F.broadcast(
-        e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 8)).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-        )
-    )
-
-    def build_index():
-        from .functions.similarity import assign_nearest
-
-        return assign_nearest(e, cents, keep="cid")
-
-    tag = _hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    # hash the WHOLE query source, not just build_index: the centroid
-    # rule and input projection live in the enclosing scope, and a
-    # stale /tmp index surviving an edit to them would silently
-    # diverge from the oracle (code-review finding, r7 s3)
-    logic = _hashlib.sha256(
-        _inspect.getsource(ann_ivf_cached).encode()
-    ).hexdigest()[:16]
-    runner = StageRunner(
-        spark,
-        f"/tmp/kgforge_stage_cache_{tag}",
-        run_id="ann-cache",
-        config={"stage": "ivf_index", "sf_dir": sf_dir, "logic": logic},
-    )
-    idx = runner.run("ivf_index", build_index)
-
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    probe = (
-        q.crossJoin(cents)
-        .select(
-            "cid", "qv",
-            F.round(cosine_fold(F.col("qv"), F.col("cv")), 6).alias("cc"),
-        )
-        .orderBy(F.desc("cc"), "cid")
-        .limit(2)
-    )
-    cand = (
-        idx.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(probe.select("cid", "qv")), on="cid")
-        .join(e, on="vec_id")
-        .select(
-            "vec_id", "cid", cosine_fold(F.col("qv"), F.col("v")).alias("c")
-        )
-    )
-    w = Window.orderBy(F.desc(F.round("c", 6)), "vec_id")
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 10)
-        .select(
-            "vec_id", F.col("cid").cast("bigint").alias("cid"),
-            F.round("c", 4).alias("cos_sim"), "rnk",
-        )
-    )
-
-
-@register(
-    "kg_linkpred_mrr",
-    _SQL_EDGES
-    + f"""
-    , und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-              FROM edges),
-    sp AS (SELECT a, b, {sql_charfold("a || '|' || b")} % 10 AS h FROM und),
-    tr AS (SELECT a, b FROM sp WHERE h < 9),
-    te1 AS (SELECT a, b FROM sp WHERE h = 9),
-    nbr AS (SELECT a AS v, b AS u FROM tr UNION ALL SELECT b, a FROM tr),
-    deg AS (SELECT v, CAST(COUNT(*) AS DOUBLE) AS dg FROM nbr GROUP BY v),
-    te AS (SELECT t.a, t.b FROM te1 t
-           JOIN deg da ON da.v = t.a JOIN deg db ON db.v = t.b),
-    srcs AS (SELECT DISTINCT a FROM te),
-    cn AS (SELECT x.v AS a, y.v AS cand, CAST(COUNT(*) AS DOUBLE) AS common
-           FROM nbr x JOIN srcs s ON x.v = s.a
-           JOIN nbr y ON y.u = x.u AND y.v <> x.v
-           GROUP BY 1, 2),
-    cand AS (SELECT c.a, c.cand,
-                    ROUND(c.common / (da.dg + db.dg - c.common), 6) AS jc
-             FROM cn c
-             JOIN deg da ON da.v = c.a JOIN deg db ON db.v = c.cand
-             ANTI JOIN tr ON tr.a = LEAST(c.a, c.cand)
-                         AND tr.b = GREATEST(c.a, c.cand)),
-    sd AS (SELECT t.a, t.b, COALESCE(c.jc, -1) AS sb
-           FROM te t LEFT JOIN cand c ON c.a = t.a AND c.cand = t.b),
-    rk AS (SELECT s.a, s.b,
-                  CASE WHEN s.sb < 0 THEN COUNT(c.cand) + 11
-                       ELSE 1 + COALESCE(SUM(CASE WHEN c.cand <> s.b
-                                         AND (c.jc > s.sb OR (c.jc = s.sb
-                                              AND c.cand < s.b))
-                                        THEN 1 ELSE 0 END), 0) END AS rnk
-           FROM sd s LEFT JOIN cand c ON c.a = s.a
-           GROUP BY s.a, s.b, s.sb)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-           ROUND(AVG(1.0 / rnk), 4) AS mrr,
-           CAST(SUM(CASE WHEN rnk <= 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS hits_at_1,
-           CAST(SUM(CASE WHEN rnk <= 3 THEN 1 ELSE 0 END) AS BIGINT)
-             AS hits_at_3,
-           CAST(SUM(CASE WHEN rnk <= 10 THEN 1 ELSE 0 END) AS BIGINT)
-             AS hits_at_10,
-           ROUND(SUM(CASE WHEN rnk <= 10 THEN 1 ELSE 0 END)
-                 / CAST(COUNT(*) AS DOUBLE), 4) AS hits10_rate
-    FROM rk
-    """,
-)
-def kg_linkpred_mrr(spark, sf_dir):
-    """KG-COMPLETION RANKING EVALUATION — MRR and Hits@1/3/10 under
-    the FILTERED protocol (Bordes et al. 2013, the standard
-    link-prediction benchmark metric), closing the measurement loop for
-    the graph-ML bridge the way kg_bcubed did for dedup and
-    ann_*_recall for ANN: held-out UNDIRECTED PAIRS (kg_edge_split's
-    hash-mod-10 discipline keyed on the pair — pair-level because the
-    scorer is pair-level; the triple-level split leaves zero usable
-    test pairs on a multi-predicate graph) are ranked by the Jaccard
-    neighborhood scorer
-    (kg_link_prediction's heuristic) against its wedge candidates on
-    the TRAIN graph, with known train edges filtered from the
-    candidate list.  A test pair whose true target is not among the
-    source's candidates (no shared train neighbor) ranks PAST every
-    retrieved candidate AND past every hit cutoff (rank =
-    n_candidates + 11, a deterministic not-retrieved sentinel) —
-    unrankable pairs are counted against the metric, never silently
-    dropped (the repo's no-silent-guard rule);
-    test pairs whose endpoints never appear in the train graph are
-    excluded, per the standard protocol.
-
-    Scale shape: candidate generation is kg_link_prediction's wedge
-    join RESTRICTED to the queried test sources (one semi-join before
-    the wedge — cost is the test sources' 2-hop neighborhoods, not the
-    whole graph's); ranks come from a COUNT-of-better-scored aggregate
-    per test pair (a keyed join + groupBy), not a window — no global or
-    per-query sort materializes the full candidate ranking."""
-    e = kg_edges(spark, sf_dir)
-    # PAIR-level 90/10 split (kg_edge_split's hash discipline, keyed on
-    # the undirected pair): the scorer is pair-level, and a triple-level
-    # split leaves no usable test pair on multi-predicate graphs (every
-    # test triple's pair also appears under another train predicate —
-    # measured: n_test would be 0 on this corpus)
-    und = (
-        e.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        ).distinct()
-    )
-    h = charfold(F.concat_ws("|", "a", "b")) % 10
-    sp = und.withColumn("h", h).localCheckpoint(eager=True)
-    tr = sp.filter(F.col("h") < 9).select("a", "b")
-    te1 = sp.filter(F.col("h") == 9).select("a", "b")
-    nbr = (
-        tr.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(tr.select(F.col("b").alias("v"), F.col("a").alias("u")))
-    ).localCheckpoint(eager=True)
-    deg = nbr.groupBy("v").agg(F.count("*").cast("double").alias("dg"))
-    te = (
-        te1.join(deg.select(F.col("v").alias("a")), "a", "left_semi")
-        .join(deg.select(F.col("v").alias("b")), "b", "left_semi")
-    ).localCheckpoint(eager=True)
-    srcs = te.select("a").distinct()
-    cn = (
-        nbr.join(srcs.select(F.col("a").alias("v")), "v", "left_semi")
-        .alias("x")
-        .join(nbr.alias("y"),
-              (F.col("x.u") == F.col("y.u")) & (F.col("x.v") != F.col("y.v")))
-        .groupBy(F.col("x.v").alias("a"), F.col("y.v").alias("cand"))
-        .agg(F.count("*").cast("double").alias("common"))
-    )
-    cand = (
-        cn.join(deg.select(F.col("v").alias("a"), F.col("dg").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("cand"), F.col("dg").alias("db")),
-              "cand")
-        .select(
-            "a", "cand",
-            F.round(
-                F.col("common") / (F.col("da") + F.col("db") - F.col("common")),
-                6,
-            ).alias("jc"),
-        )
-        .join(
-            tr.select(F.col("a").alias("_ta"), F.col("b").alias("_tb")),
-            (F.least("a", "cand") == F.col("_ta"))
-            & (F.greatest("a", "cand") == F.col("_tb")),
-            "left_anti",
-        )
-    ).localCheckpoint(eager=True)
-    sd = te.join(
-        cand.select("a", F.col("cand").alias("b"), F.col("jc").alias("sb")),
-        on=["a", "b"], how="left",
-    ).select("a", "b", F.coalesce("sb", F.lit(-1.0)).alias("sb"))
-    better = F.when(
-        (F.col("cand") != F.col("b"))
-        & (
-            (F.col("jc") > F.col("sb"))
-            | ((F.col("jc") == F.col("sb")) & (F.col("cand") < F.col("b")))
-        ),
-        1,
-    ).otherwise(0)
-    rk = (
-        sd.join(cand, on="a", how="left")
-        .groupBy("a", "b", "sb")
-        .agg(
-            F.when(F.col("sb") < 0, F.count("cand") + 11)
-            .otherwise(F.lit(1) + F.coalesce(F.sum(better), F.lit(0)))
-            .cast("bigint")
-            .alias("rnk")
-        )
-    )
-    return rk.agg(
-        F.count("*").alias("n_test"),
-        F.round(F.avg(1.0 / F.col("rnk")), 4).alias("mrr"),
-        F.sum((F.col("rnk") <= 1).cast("int")).cast("bigint").alias("hits_at_1"),
-        F.sum((F.col("rnk") <= 3).cast("int")).cast("bigint").alias("hits_at_3"),
-        F.sum((F.col("rnk") <= 10).cast("int")).cast("bigint").alias(
-            "hits_at_10"
-        ),
-        F.round(
-            F.sum((F.col("rnk") <= 10).cast("int")) / F.count("*"), 4
-        ).alias("hits10_rate"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# driver-facing registry cap
-# ---------------------------------------------------------------------------
-# The round driver's correctness snapshot records at most 50 queries:
-# CORRECTNESS_r01 covered all 40 then-registered queries; r02 covered
-# exactly the FIRST 50 of 56 in registration order, the 6 tail entries
-# (including cheap ones, ruling out a per-query time cap) never getting
-# rows despite passing the identical local gate.  queries()/oracle_sql()
-# therefore expose exactly 50 core queries so EVERY driver-registered
-# query gets a correctness row.  The remainder live in EXTRA_QUERIES /
-# EXTRA_ORACLES — same implementations, same DuckDB oracles, verified by
-# scripts/check_oracles.py (which always sweeps ALL_QUERIES) and the
-# pytest parity subset — just outside the driver contract.  Every demoted
-# query is a generic OLAP warm-up whose operators the kg_*/dedup_* core
-# also exercises, or the monitoring twin of a registered query:
-#   q5_regional_revenue / q_daily_active / q_mktsegment_share /
-#   q_context_window / q_topk_per_group  — TPC-H-ish generic join/window/
-#     agg sanity (J-chains, windows covered by kg_triples_topk,
-#     kg_context_units, q_running_total, q1, q_revenue_by_nation)
-#   dedup_shingle_stats       — per-doc shingle stats (dedup_minhash_sig
-#     exercises the same shingle pipeline end-to-end)
-#   dedup_minhash_bucket_stats — bucket histogram twin of the registered
-#     dedup_shingle_df_caps drop-accounting row
-#   token_counts              — whitespace wordcount; tokenization counting
-#     is covered by token_counts_bpe + bpe_merges
-#   multimodal_bytes          — byte-stats twin of multimodal_features
-EXTRA_NAMES = [
-    # r5: demoted to make room for dedup_minhash_incr — the signature
-    # computation it pins is exercised by BOTH dedup_minhash_pairs and
-    # the incremental query (same functions/hashing.minhash_of)
-    "dedup_minhash_sig",
-    # r5 rotation (audit-enforced, tests/test_rotation_audit.py):
-    # kg_pagerank / kg_communities_lpa / kg_ppr (shared convergence
-    # loop), kg_clustering_coeff (Spark-side rounding),
-    # q_event_quantiles / q_value_histogram (NULL handling) changed
-    # this round and moved INTO driver slots; these six unchanged
-    # twins moved out (each family keeps a driver representative:
-    # q1_pricing_summary, kg_edges+kg_cc_components, ann_cosine_topk+
-    # ann_ivf_*, text_quality_filter, kg_clustering_coeff degrees)
-    "q_revenue_by_nation",
-    "kg_two_hop",
-    "kg_ego_network",
-    "ann_lsh_bucket",
-    "text_stats",
-    "kg_degree_distribution",
-    "q5_regional_revenue",
-    "q_daily_active",
-    "q_mktsegment_share",
-    "q_context_window",
-    "q_topk_per_group",
-    "dedup_shingle_stats",
-    "dedup_minhash_bucket_stats",
-    "token_counts",
-    "multimodal_bytes",
-    "bpe_tokenize_counts",
-    "dedup_simhash_pairs",
-    "pack_sequences",
-    "sample_stratified",
-    "chunk_documents",
-    # r6c rotation: curation_funnel's stats projection changed (the
-    # curate() gate counters are job-level, not query-level), so per
-    # the mechanical rule it takes a driver slot; lang_id_confusion
-    # (unchanged since r2) moves here — its heuristic-classification
-    # family stays driver-covered by text_quality_filter, with the
-    # trained twin text_nb_classifier in EXTRA
-    "lang_id_confusion",
-    "ann_multi_topk",
-    "kg_reach_bfs",
-    "kg_negative_samples",
-    "kg_edge_split",
-    "ann_ivf_recall_uniform",
-    # r4: demoted to make room for dedup_fuse_modalities — monitoring twin
-    # of dedup_ngram_jaccard's cap accounting (df_caps drops also appear
-    # in that query's output)
-    "dedup_shingle_df_caps",
-    # r4: new sketch/containment ops — EXTRA (driver slots full; their
-    # operator families are driver-covered by doc_fingerprint +
-    # dedup_ngram_jaccard), swept by the local 74/74 harness
-    "doc_winnowing",
-    "dedup_containment",
-    "dedup_winnow_pairs",
-    "ann_sq8_recall",
-    "ann_pq_recall",
-    "q_sessionize",
-    "q_distinct_kmv",
-    "ann_rp_lsh_recall",
-    "sample_weighted_reservoir",
-    "q_rolling_active_users",
-    "q_rollup_revenue",
-    "q_asof_prior_view",
-    "q_value_outliers",
-    "q_profile_events",
-    # r5: new product-analytics + graph-cleaning ops — EXTRA (driver
-    # slots hold this round's changed queries; the events family is
-    # driver-covered by q_event_quantiles/q_value_histogram and the
-    # graph family by kg_pagerank/kg_communities_lpa/kg_clustering_coeff)
-    "q_funnel_steps",
-    "q_retention_cohorts",
-    "q_pivot_daily_types",
-    "kg_kcore",
-    # r7 session 3: kg_harmonic moved INTO a driver slot (its BFS body
-    # was factored into the shared _pivot_bfs_dist helper this round —
-    # the mechanical changed-query rule applies even to refactors)
-    "q_value_mad",
-    "ann_mutual_knn",
-    # r6 rotation: kg_triangles/kg_link_prediction/kg_assortativity moved
-    # INTO driver slots (changed this round: size-gated dim broadcasts);
-    # displaced unchanged twins below — kg_pagerank/kg_ppr's family is
-    # driver-covered by kg_pagerank_converged (the stronger production
-    # mode), the events family by q_funnel/retention analogs already
-    # swept locally plus kg_pred_histogram's histogram shape.
-    "kg_pagerank",
-    "kg_ppr",
-    "q_event_quantiles",
-    "q_value_histogram",
-    # r6: new measurement twin (driver keeps the exact form as its
-    # oracle row, q_retention_cohorts)
-    "q_retention_cohorts_approx",
-    # r7: GK approx-quantile measurement twin (exact family
-    # driver-covered by the q_event_quantiles slot history; same
-    # bound-asserting discipline as the HLL twin above)
-    "q_event_quantiles_approx",
-    # r6 rotation, second application: text_bm25_search/text_bm25_topk/
-    # text_pmi_bigrams gained vocabulary-bound annotations this round —
-    # comment-only, but the mechanical rule doesn't adjudicate intent,
-    # so they take driver slots; displaced unchanged twins below keep
-    # family coverage (BPE via bpe_merges, IVF via ann_ivf_recall,
-    # context via kg_context_triples/kg_ctx_cross).
-    "token_counts_bpe",
-    "ann_ivf_topk",
-    "kg_context_units",
-    # r6: train-curriculum replay (new; W2 family driver-covered by
-    # kg_triples_topk)
-    "kg_topk_strategies",
-    # r6: edge-cohesion backbone (new; peeling family driver-covered by
-    # kg_kcore)
-    "kg_ktruss",
-    # r7: directed SCC (new; component family driver-covered by
-    # kg_cc_components — SCC is its directed complement)
-    "kg_scc",
-    # r6: sampled Brandes centrality (new; BFS family driver-covered by
-    # kg_harmonic's slot history)
-    "kg_betweenness",
-    # r6: curation-gate additions (new; quality family driver-covered by
-    # text_quality_filter, shingle family by dedup_ngram_jaccard)
-    "text_repetition_signals",
-    "text_decontaminate",
-    # (dedup_semantic_prune rotated INTO a driver slot r7 — its plane
-    # knob changed; rule: changed queries hold driver slots)
-    # r6: partition-quality score for LPA (new; community family
-    # driver-covered by kg_communities_lpa)
-    "kg_modularity",
-    # r6: DeepWalk corpus generation (new; iterative-join family
-    # driver-covered by kg_pagerank_converged/kg_cc_components)
-    "kg_random_walks",
-    # r6: count-min heavy hitters (new; sketch family driver-covered by
-    # the q_retention_cohorts exact row + its HLL twin in EXTRA)
-    "token_cms_topk",
-    # r6: DSIR importance resampling (new; seeded-sampling family
-    # driver-covered by q_train_split/q_cv_folds slots' history,
-    # weighted-reservoir twin already in EXTRA)
-    "curate_dsir_sample",
-    # (dedup_repeated_spans rotated INTO a driver slot r7 — gram hash
-    # widened to md5)
-    # r6: hybrid BM25+dense RRF retrieval (new; both legs driver-covered
-    # by ann_cosine_topk + the BM25 driver slots)
-    "retrieval_hybrid_rrf",
-    # r6: GraphSAGE-style hop aggregation (new; feature-join family
-    # driver-covered by kg_clustering_coeff's degree machinery)
-    "kg_sage_features",
-    # r6: schema-induction lift stats (new; counter family driver-covered
-    # by kg_pred_histogram)
-    "kg_schema_stats",
-    # r6: event-type affinity graph induction (new; events family
-    # driver-covered by the retention/funnel slots' history)
-    "q_event_type_graph",
-    # r6: HITS hubs/authorities (new; power-iteration family
-    # driver-covered by kg_pagerank_converged)
-    "kg_hits",
-    # r7 session 3: text_lm_perplexity moved INTO a driver slot (its
-    # oracle SQL now reads from the factored _SQL_LM_PPL CTE shared
-    # with curate_ccnet_buckets — changed span, mechanical rule)
-    # r6: node2vec biased walks (new; walk family driver-covered with
-    # kg_random_walks by the iterative-join slots)
-    "kg_node2vec_walks",
-    # r6: in-engine NB train/predict/eval (new; classifier family
-    # driver-covered by text_quality_filter + lang_id_confusion)
-    "text_nb_classifier",
-    # r6: evidence-weighted rank twin (new; family driver-covered by
-    # kg_pagerank_converged)
-    "kg_pagerank_weighted",
-    # (curate_domain_mixture rotated INTO a driver slot r7 — left-join
-    # missing-domain contract)
-    # r6: bloom membership prefilter (new; sketch family driver-covered
-    # alongside token_cms_topk's slot rationale)
-    "text_decontaminate_bloom",
-    # r6: predicate-typed path census (new; wedge family driver-covered
-    # by kg_triangles/kg_two_hop history)
-    "kg_metapaths",
-    # r6: matrix-free top-PC power iteration (new; embedding family
-    # driver-covered by the ann/centroid slots' history)
-    "embed_pca_power",
-    # r6: ABTT whitening with measured isotropy gain (new; same family)
-    "embed_abtt",
-    # r6: T5 span-corruption example synthesis (new; example-synthesis
-    # family driver-covered by pack_sequences/chunk history)
-    "curate_span_corruption",
-    # (curate_contrastive_triplets rotated INTO a driver slot r7 — plane
-    # knob change)
-    # r6: DeepWalk skip-gram pairs + KG->QA verbalization (new;
-    # KG-consumption family driver-covered by kg_predict_json slots)
-    "kg_walk_skipgrams",
-    "kg_qa_pairs",
-    # (curate_length_curriculum rotated INTO a driver slot r7 — two-pass
-    # rank replaced the global NTILE window)
-    # r7: subword-mode mention detection (new; driver family covered by
-    # kg_mentions — same oracle SQL by design, see its docstring)
-    "kg_mentions_bpe",
-    # r7: betweenness measured-error twin (new; sampled-Brandes family
-    # stays with kg_betweenness in EXTRA, BFS family driver-covered by
-    # kg_harmonic's slot history)
-    "kg_betweenness_error",
-    # r7 rotation OUT (all unchanged this round, each family keeps a
-    # driver representative; displaced by the five changed queries above
-    # + kg_pagerank_cached):
-    #   text_bm25_search — posting-list twin of text_bm25_topk (stays)
-    "text_bm25_search",
-    #   kg_ctx_cross — combined mode of kg_context_triples +
-    #   kg_cross_mentions (both stay)
-    "kg_ctx_cross",
-    #   kg_mention_pairs — J1/J4 pair enumeration exercised end-to-end
-    #   by kg_triples/kg_triples_topk (stay)
-    "kg_mention_pairs",
-    #   q_subarray_find — F13/J10 containment covered by
-    #   kg_cross_mentions (stays)
-    "q_subarray_find",
-    #   dedup_simhash — near-dup family keeps minhash_pairs/minhash_incr/
-    #   ngram_jaccard/embedding_cosine + the two rotated-in dedup rows
-    "dedup_simhash",
-    #   q_train_split — S4 split; sampling family keeps q_cv_folds +
-    #   q_doc_range_slice
-    "q_train_split",
-    # r7 session-3 additions (new EXTRA ops; driver slots unchanged —
-    # their families are driver-covered by text_quality_filter /
-    # dedup_ngram_jaccard / ann_ivf_recall / kg_cc_components /
-    # text_lm_perplexity slots):
-    "text_pii_redact",
-    "text_line_dedup",
-    "embed_kmeans",
-    "curate_cluster_balance",
-    "kg_bcubed",
-    "text_keywords_tfidf",
-    "curate_ccnet_buckets",
-    "curate_temperature_mixture",
-    "kg_distance_distribution",
-    # r7 session 3: IVF over a materialized index stage (serving-path
-    # twin; family driver-covered by ann_ivf_recall + ann_cosine_topk)
-    "ann_ivf_cached",
-    # r7 session 3: filtered MRR/Hits@k ranking eval (measurement twin
-    # of kg_link_prediction + kg_edge_split; graph-eval family
-    # driver-covered by kg_link_prediction)
-    "kg_linkpred_mrr",
-    # r7 session-3 rotation OUT (both unchanged this round, displaced by
-    # kg_harmonic + text_lm_perplexity moving in under the mechanical
-    # changed-query rule):
-    #   kg_assortativity — degree-statistics family stays driver-covered
-    #   by kg_clustering_coeff (same checkpointed degree table) and
-    #   kg_triangles; the query stays green in the local sweep
-    "kg_assortativity",
-    #   text_pmi_bigrams — posting-list collocation family stays
-    #   driver-covered by text_bm25_topk (same token/df machinery)
-    "text_pmi_bigrams",
-]
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    n: QUERIES.pop(n) for n in EXTRA_NAMES
-}
-EXTRA_ORACLES: dict[str, str] = {n: ORACLES.pop(n) for n in EXTRA_NAMES}
-ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    **QUERIES, **EXTRA_QUERIES
-}
-ALL_ORACLES: dict[str, str] = {**ORACLES, **EXTRA_ORACLES}
-assert len(QUERIES) <= 50, f"driver registry overflow: {len(QUERIES)}"
-
-# r8 (OPTIMIZATION round): the driver re-runs the ROUND-START declared
-# set and grades a query that disappears from queries()/oracle_sql() —
-# or whose oracle SQL changes — as a REGRESSION, so the usual rotation
-# (changed queries displace unchanged ones into EXTRA) is suspended:
-# the driver-facing registry is byte-for-byte the r7 snapshot.  Changed
-# EXTRA queries are still fully verified by the ALL_QUERIES sweep
-# (scripts/check_oracles.py — 153/153 this round) and the pytest parity
-# subset; tests/test_rotation_audit.py reads this flag.
-REGISTRY_FROZEN = True
+# the analytics queries register into the same QUERIES/ORACLES
+from . import analytics_queries  # noqa: E402,F401

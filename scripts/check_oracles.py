@@ -12,10 +12,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+# the tables the registered queries read
+TABLES = ["orders", "lineitem", "events", "documents", "embeddings"]
 
 
 def normalize(rows, cols):
@@ -54,12 +52,7 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    # sweep EVERYTHING — the 50 driver-contract queries plus the
-    # EXTRA registry (demoted from the driver view by the 50-row
-    # snapshot cap, still fully oracle-checked here)
-    from kgforge.queries import ALL_ORACLES, ALL_QUERIES
-
-    qs, oracles = dict(ALL_QUERIES), dict(ALL_ORACLES)
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -72,12 +65,8 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ok?   {name}: rows-only ({len(spark_rows)} rows, no oracle)")
-            continue
         try:
-            res = con.sql(sql)
+            res = con.sql(oracles[name])
             duck_cols = [c.lower() for c in res.columns]
             duck_rows = res.fetchall()
         except Exception as e:

@@ -1,14 +1,10 @@
-"""Generate a distribution-matched sf1 vetting dataset in /tmp (r4
-VERDICT #3: vet every pairwise/graph operator one SF decade up).
+"""Generate a distribution-matched documents table for the incremental
+dedup benchmarks (scripts/bench_compaction.py, scripts/bench_incremental.py).
 
-/root/testdata is read-only and stops at sf0.1; this generator produces
-10x-sf0.1 documents/embeddings/events tables with the SAME shape
-statistics (31-word vocab, 10-100-token docs, 5 langs, 20 sources,
-64-dim embeddings with 10 labels, 30-day event stream with 5 types) so
-pairwise/dedup/graph/stream queries hit sf1-scale candidate volumes.
-This is a PERFORMANCE fixture, not an oracle fixture — correctness
-stays pinned at sf0.001/0.01 against DuckDB; here we only care that no
-query falls off a quadratic cliff (the r4 simhash fusion lesson).
+The generated table has the shape statistics of the sf fixtures'
+documents (31-word vocab, 10-100-token docs, 5 langs, 20 sources, a
+planted 1-token near-dup every 50th doc) at any row count.  This is a
+PERFORMANCE fixture, not an oracle fixture.
 
 Deterministic (fixed seed, row content derived from the row id), no
 external data.  Usage:
@@ -58,52 +54,15 @@ def gen_documents(n: int, rng: np.random.Generator) -> pa.Table:
     })
 
 
-def gen_embeddings(n: int, rng: np.random.Generator) -> pa.Table:
-    emb = rng.standard_normal((n, 64)).astype(np.float32)
-    return pa.Table.from_pydict({
-        "vec_id": pa.array(range(n), pa.int64()),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, size=n), pa.int32()),
-    })
-
-
-def gen_events(n: int, rng: np.random.Generator) -> pa.Table:
-    base = np.datetime64("2024-01-01T00:00:00", "us")
-    span_us = 30 * 86400 * 1_000_000
-    ts = base + rng.integers(0, span_us, size=n).astype("timedelta64[us]")
-    ts.sort()
-    return pa.Table.from_pydict({
-        "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array(ts, pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, 15000, size=n), pa.int64()),
-        # the REAL fixture type names — q_funnel_steps/q_pivot_daily_types
-        # filter on these literally; synthetic names would vet those
-        # queries against empty inputs (r5 self-review finding)
-        "event_type": [
-            ["click", "error", "purchase", "signup", "view"][t]
-            for t in rng.integers(0, 5, size=n)
-        ],
-        "value": pa.array(
-            np.round(rng.exponential(60.0, size=n), 2), pa.float64()
-        ),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, size=n)],
-    })
-
-
 def main() -> None:
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1_vet"
     scale = float(sys.argv[2]) if len(sys.argv) > 2 else 10.0
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(71)
-    specs = {
-        "documents": (gen_documents, int(5000 * scale)),
-        "embeddings": (gen_embeddings, int(2000 * scale)),
-        "events": (gen_events, int(100_000 * scale)),
-    }
-    for name, (fn, n) in specs.items():
-        path = os.path.join(out, f"{name}.parquet")
-        pq.write_table(fn(n, rng), path)
-        print(f"{name}: {n} rows -> {path}")
+    n = int(5000 * scale)
+    path = os.path.join(out, "documents.parquet")
+    pq.write_table(gen_documents(n, rng), path)
+    print(f"documents: {n} rows -> {path}")
 
 
 if __name__ == "__main__":

@@ -104,9 +104,9 @@ def test_pipeline_bpe_mode_identical_triples(spark, tmp_path):
 
 
 def test_kg_mentions_bpe_query_matches_kg_mentions(spark):
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
-    a = ALL_QUERIES["kg_mentions"](spark, sf)
-    b = ALL_QUERIES["kg_mentions_bpe"](spark, sf)
+    a = QUERIES["kg_mentions"](spark, sf)
+    b = QUERIES["kg_mentions_bpe"](spark, sf)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))

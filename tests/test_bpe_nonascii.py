@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 def test_bpe_merges_parity_on_non_ascii_corpus(spark, tmp_path):
     import duckdb
 
-    from kgforge.queries import ALL_ORACLES, ALL_QUERIES
+    from kgforge.queries import ORACLES, QUERIES
     from scripts.check_oracles import normalize
 
     docs = [
@@ -22,7 +22,7 @@ def test_bpe_merges_parity_on_non_ascii_corpus(spark, tmp_path):
     ]
     pq.write_table(pa.Table.from_pylist(docs), str(tmp_path / "documents.parquet"))
 
-    df = ALL_QUERIES["bpe_merges"](spark, str(tmp_path))
+    df = QUERIES["bpe_merges"](spark, str(tmp_path))
     spark_cols = [c.lower() for c in df.columns]
     spark_rows = [tuple(r) for r in df.collect()]
 
@@ -31,7 +31,7 @@ def test_bpe_merges_parity_on_non_ascii_corpus(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{tmp_path}/documents.parquet')"
     )
-    res = con.sql(ALL_ORACLES["bpe_merges"])
+    res = con.sql(ORACLES["bpe_merges"])
     oracle_cols = [c.lower() for c in res.columns]
     oracle_rows = res.fetchall()
 

@@ -172,7 +172,7 @@ def test_update_canonical_never_splits_clusters(spark):
 def test_update_canonical_incremental_equals_full(spark):
     """Incremental re-linking (delta-neighborhood LSH + sub-CC) is EXACT:
     chained over random batches it produces the same canonical dim as the
-    full O(dim) recompute, which equals the one-shot link over the union."""
+    one-shot link over the union."""
     from kgforge.extract.pipeline import extract_pipeline
     from kgforge.fixtures import gen_repo_rows
     from kgforge.graph.merge import update_canonical
@@ -185,16 +185,44 @@ def test_update_canonical_incremental_equals_full(spark):
             spark.createDataFrame(rs), "fused"
         ).localCheckpoint(eager=True)
 
-    can_inc = can_full = None
+    can_inc = None
     for rs in batches:
-        t = triples(rs)
-        can_inc, _ = update_canonical(can_inc, t, relink="incremental")
+        can_inc, _ = update_canonical(can_inc, triples(rs))
         can_inc = can_inc.localCheckpoint(eager=True)
-        can_full, _ = update_canonical(can_full, t, relink="full")
-        can_full = can_full.localCheckpoint(eager=True)
 
     one_shot, _ = update_canonical(None, triples(rows))
     key = lambda r: (r.surface, r.ent_type, r.canonical_id)  # noqa: E731
     inc = sorted(map(key, can_inc.collect()))
-    assert inc == sorted(map(key, can_full.collect()))
     assert inc == sorted(map(key, one_shot.collect()))
+
+
+def _triples(spark, rows):
+    from kgforge.extract.rel import TRIPLES_SCHEMA
+
+    return spark.createDataFrame(
+        [("r", f"p{i}", "c", i, s, "USED-FOR", o, "Method", "Task", 1.0, "h")
+         for i, (s, o) in enumerate(rows)],
+        TRIPLES_SCHEMA,
+    )
+
+
+@pytest.fixture(scope="module")
+def two_triple_graph(spark):
+    from kgforge.graph.merge import merge_graph
+
+    out = merge_graph(None, None, None, _triples(spark, [
+        ("anchor model", "prism index"), ("quartz sampler", "prism index"),
+    ]))
+    return tuple(df.localCheckpoint(eager=True) for df in out)
+
+
+@pytest.mark.parametrize("bad", [None, "", "!!!"])
+def test_merge_graph_rejects_null_or_empty_surface(spark, two_triple_graph, bad):
+    """A delta surface that is null or normalizes to "" fails the epoch
+    instead of vanishing from the attach join (null) or merging with
+    every other punctuation-only surface into one "" node."""
+    from kgforge.graph.merge import merge_graph
+
+    nodes, edges, can = two_triple_graph
+    with pytest.raises(Exception, match="null or empty surface"):
+        merge_graph(nodes, edges, can, _triples(spark, [(bad, "prism index")]))

@@ -55,54 +55,3 @@ def test_quality_gate_rejects_null_and_empty(spark):
     assert got[1] == (False, "too_short")
     assert got[2] == (False, "too_short")
     assert got[3] == (True, "ok")
-
-
-def _null_events_dir(spark, tmp_path):
-    """events table with NULL values and a constant-value type — the two
-    latent hazards the r4 ADVICE named (rank-position shift between
-    Spark NULLS FIRST and DuckDB NULLS LAST; LEAST() folding a NULL bin
-    into bin 9; zero bin width)."""
-    rows = []
-    for i in range(200):
-        val = None if i % 7 == 0 else float(i % 40) + 0.25
-        rows.append((i, f"2024-01-{(i % 28) + 1:02d} 00:00:00",
-                     i % 9, "view" if i % 2 else "click", val, '{"k": 1}'))
-    for i in range(200, 220):  # constant-value type: hi == lo within type
-        rows.append((i, "2024-01-05 00:00:00", 3, "signup", 5.0, "{}"))
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        rows,
-        "event_id bigint, ts string, user_id bigint, event_type string, "
-        "value double, props string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = tmp_path / "nulls"
-    df.write.parquet(str(d / "events.parquet"))
-    return str(d)
-
-
-def test_event_stats_queries_match_oracle_on_null_values(spark, tmp_path):
-    """q_event_quantiles / q_value_histogram / q_value_mad agree with
-    their DuckDB oracles on a NULL-bearing events table (the driver
-    fixtures carry no NULLs, so without this test the r5 NULL fixes
-    would be unpinned — exactly the gap the r4 ADVICE flagged)."""
-    import duckdb
-
-    from kgforge.queries import ALL_ORACLES, ALL_QUERIES
-
-    sf_dir = _null_events_dir(spark, tmp_path)
-    con = duckdb.connect()
-    # Spark writes a parquet DIRECTORY; DuckDB views it via glob
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"parquet_scan('{sf_dir}/events.parquet/*.parquet')"
-    )
-    for name in ("q_event_quantiles", "q_value_histogram", "q_value_mad"):
-        got = {
-            tuple(r)
-            for r in ALL_QUERIES[name](spark, sf_dir)
-            .toPandas().itertuples(index=False)
-        }
-        want = {tuple(r) for r in con.execute(ALL_ORACLES[name]).fetchall()}
-        assert got == want, f"{name}: spark != duckdb on NULL-bearing events"
-        assert want, f"{name}: oracle empty — fixture broken"

@@ -130,9 +130,9 @@ def test_kmv_sketch_estimate_quality(spark):
     be EXACT for days with fewer than k distinct users."""
     from pyspark.sql import functions as F
 
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
-    df = ALL_QUERIES["q_distinct_kmv"](spark, "/root/testdata/sf0.01")
+    df = QUERIES["q_distinct_kmv"](spark, "/root/testdata/sf0.01")
     rows = df.collect()
     assert rows
     mre = sum(abs(r.n_kmv - r.n_exact) / r.n_exact for r in rows) / len(rows)

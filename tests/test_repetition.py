@@ -70,7 +70,7 @@ def test_repetition_matches_oracle_on_edge_docs(spark, tmp_path):
     doesn't carry (null text, single token, exact-threshold doc)."""
     import duckdb
 
-    from kgforge.queries import ALL_ORACLES, ALL_QUERIES
+    from kgforge.queries import ORACLES, QUERIES
 
     texts = [
         "a b a b a b c",
@@ -87,7 +87,7 @@ def test_repetition_matches_oracle_on_edge_docs(spark, tmp_path):
     ).write.parquet(str(d / "documents.parquet"))
     got = {
         tuple(r)
-        for r in ALL_QUERIES["text_repetition_signals"](spark, str(d))
+        for r in QUERIES["text_repetition_signals"](spark, str(d))
         .toPandas()
         .itertuples(index=False)
     }
@@ -98,7 +98,7 @@ def test_repetition_matches_oracle_on_edge_docs(spark, tmp_path):
     )
     want = {
         tuple(r)
-        for r in con.execute(ALL_ORACLES["text_repetition_signals"]).fetchall()
+        for r in con.execute(ORACLES["text_repetition_signals"]).fetchall()
     }
     assert got == want
     assert len(want) == len(texts)
@@ -129,11 +129,11 @@ def contam_dir(spark, tmp_path):
 
 
 def test_decontaminate_flags_planted_overlaps(spark, contam_dir):
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
     out = {
         r["doc_id"]: r.asDict()
-        for r in ALL_QUERIES["text_decontaminate"](spark, contam_dir).collect()
+        for r in QUERIES["text_decontaminate"](spark, contam_dir).collect()
     }
     # doc 1 clones bench doc 0: 4 shingles shared, 1 bench doc
     assert out[1]["n_overlap_shingles"] == 4
@@ -156,11 +156,11 @@ def test_decontaminate_flags_planted_overlaps(spark, contam_dir):
 def test_decontaminate_matches_oracle_on_planted_fixture(spark, contam_dir):
     import duckdb
 
-    from kgforge.queries import ALL_ORACLES, ALL_QUERIES
+    from kgforge.queries import ORACLES, QUERIES
 
     got = {
         tuple(r)
-        for r in ALL_QUERIES["text_decontaminate"](spark, contam_dir)
+        for r in QUERIES["text_decontaminate"](spark, contam_dir)
         .toPandas()
         .itertuples(index=False)
     }
@@ -171,6 +171,6 @@ def test_decontaminate_matches_oracle_on_planted_fixture(spark, contam_dir):
     )
     want = {
         tuple(r)
-        for r in con.execute(ALL_ORACLES["text_decontaminate"]).fetchall()
+        for r in con.execute(ORACLES["text_decontaminate"]).fetchall()
     }
     assert got == want and want

@@ -5,14 +5,9 @@
   empties the frame after the w > 0 filter).
 - bigram_perplexity raises loudly on an empty LM training slice instead
   of silently scoring every document ppl 0.0.
-- curate_domain_mixture keeps a zero-document target domain visible
-  (n_avail=0 drives n_total to 0) instead of renormalizing over the
-  remaining domains.
 - curate_length_curriculum's arithmetic phase rule == literal NTILE(4)
   for every n mod 4 residue, and its plan has no non-terminal
   SinglePartition exchange.
-- dedup_repeated_spans keys grams by md5, not the 31-bit charfold
-  (collision-proof exactness).
 """
 
 from __future__ import annotations
@@ -82,33 +77,9 @@ def test_bigram_perplexity_empty_slice_raises(spark):
     assert out.count() == 2
 
 
-def test_domain_mixture_missing_domain_visible(spark, tmp_path):
-    """Target domain with zero documents: every target row survives with
-    n_avail carried, the binding cap collapses to 0 takes, and achieved
-    shares report 0.0 — the contract violation is loud, not silently
-    renormalized away."""
-    from kgforge.queries import ALL_QUERIES
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i} a b", l) for i, l in enumerate(
-            ["en"] * 8 + ["de"] * 4 + ["fr"] * 4 + ["es"] * 4  # no zh
-        )],
-        "doc_id long, text string, lang string",
-    )
-    docs.write.parquet(str(tmp_path / "documents.parquet"))
-    rows = {
-        r.lang: r
-        for r in ALL_QUERIES["curate_domain_mixture"](spark, str(tmp_path)).collect()
-    }
-    assert set(rows) == {"en", "de", "fr", "es", "zh"}
-    assert rows["zh"].n_avail == 0
-    assert all(r.n_take == 0 and r.n_selected == 0 for r in rows.values())
-    assert all(r.achieved_share == 0.0 for r in rows.values())
-
-
 @pytest.mark.parametrize("n", [3, 4, 7, 10, 12, 13])
 def test_length_curriculum_arithmetic_matches_ntile(spark, tmp_path, n):
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * (1 + (i * 7) % 5))) for i in range(n)],
@@ -119,7 +90,7 @@ def test_length_curriculum_arithmetic_matches_ntile(spark, tmp_path, n):
     docs.write.parquet(str(d / "documents.parquet"))
     got = {
         r.phase: (r.n_docs, r.member_checksum)
-        for r in ALL_QUERIES["curate_length_curriculum"](spark, str(d)).collect()
+        for r in QUERIES["curate_length_curriculum"](spark, str(d)).collect()
     }
     ref = (
         docs.select("doc_id", F.size(F.split("text", " ")).alias("nn"))
@@ -137,9 +108,9 @@ def test_length_curriculum_no_single_partition_exchange(spark):
     single-partition exchange from the tiny final aggregate is fine —
     assert none feeds a Window/Sort over the document grain by checking
     the window stage itself is hash-partitioned."""
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
-    df = ALL_QUERIES["curate_length_curriculum"](spark, "/root/testdata/sf0.001")
+    df = QUERIES["curate_length_curriculum"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the only acceptable SinglePartition is the terminal scalar/agg
     # exchange; the rank path (global_row_number) must not produce a
@@ -149,14 +120,3 @@ def test_length_curriculum_no_single_partition_exchange(spark):
     for m in re.finditer(r"Exchange SinglePartition[^\n]*", plan):
         ctx = plan[m.start() - 400 : m.start()]
         assert "Window" not in ctx, f"window fed by SinglePartition:\n{ctx}"
-
-
-def test_repeated_spans_gram_hash_is_md5():
-    import inspect
-
-    from kgforge import queries
-
-    src = inspect.getsource(queries.dedup_repeated_spans)
-    assert "F.md5" in src
-    sql = queries.ALL_ORACLES["dedup_repeated_spans"]
-    assert "md5(array_to_string" in sql

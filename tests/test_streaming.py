@@ -431,7 +431,7 @@ def test_streaming_sessionize_exact_gap_boundary(spark, tmp_path):
     # the batch formulation agrees on the same script
     from pyspark.sql import functions as F
 
-    from kgforge.queries import ALL_QUERIES
+    from kgforge.queries import QUERIES
 
     e = spark.createDataFrame(
         [(1, 10, "2026-01-01 00:00:00"),
@@ -443,7 +443,7 @@ def test_streaming_sessionize_exact_gap_boundary(spark, tmp_path):
     e.write.parquet(str(tdir / "events.parquet"))
     rows = {
         (r.user_id, r.session_ix, r.n_events)
-        for r in ALL_QUERIES["q_sessionize"](spark, str(tdir)).collect()
+        for r in QUERIES["q_sessionize"](spark, str(tdir)).collect()
     }
     assert rows == {(1, 1, 2), (1, 2, 1)}
 

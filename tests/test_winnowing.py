@@ -16,7 +16,7 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
     fingerprint, whatever surrounds the run — because some window of w
     k-grams lies entirely inside the shared run and its minimum is
     selected identically in both documents."""
-    from kgforge.queries import doc_winnowing
+    from kgforge.analytics_queries import doc_winnowing
 
     shared = "alpha beta gamma delta epsilon zeta"  # exactly k+w-1 = 6 tokens
     sf = _write_docs(tmp_path, [
@@ -35,7 +35,7 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
 def test_winnowing_deterministic_and_short_doc_excluded(spark, tmp_path):
     """Identical text -> identical fingerprint set; a doc shorter than
     k + w - 1 tokens has no full window and emits nothing."""
-    from kgforge.queries import doc_winnowing
+    from kgforge.analytics_queries import doc_winnowing
 
     text = "the quick brown fox jumps over the lazy dog tonight"
     sf = _write_docs(tmp_path, [
@@ -54,7 +54,7 @@ def test_winnowing_deterministic_and_short_doc_excluded(spark, tmp_path):
 def test_winnow_pairs_find_heavy_overlap(spark, tmp_path):
     """dedup_winnow_pairs: exact duplicates reach jaccard 1.0; documents
     sharing only a short run stay below the 0.5 gate."""
-    from kgforge.queries import dedup_winnow_pairs
+    from kgforge.analytics_queries import dedup_winnow_pairs
 
     body = "import os import sys from collections import defaultdict main"
     sf = _write_docs(tmp_path, [
