@@ -22,6 +22,13 @@ canonical_id dimension: recognized entities carry their graph ids into
 the serving payload, novel surfaces keep null ids (serving must never
 drop a prediction because the entity is new — unlike the pipeline's
 inner-join attach, graph/materialize.attach_canonical_ids).
+
+The dim is built once per loaded graph (``serving_dim``): the first
+request after a ``spark.read`` of the nodes table pays its build, later
+requests against that handle only the joins.  It is a snapshot — files
+rewritten under the same handle are not seen, and since it lives in a
+``localCheckpoint`` a lost executor is not recovered either; both need
+a new ``spark.read``.
 """
 
 from __future__ import annotations
@@ -29,37 +36,38 @@ from __future__ import annotations
 import argparse
 import json
 import time
+import weakref
+
+# nodes DataFrame -> (dim, n_rows); weak keys, so a dim is released
+# together with the handle it was built from
+_DIMS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def read_sentences(spark, source: str, fmt: str):
     """Sentences -> the repos schema the extraction cascade consumes.
 
     text: one sentence per line (the reference's interactive predict
-    input); json/parquet: rows with a ``content`` column (repo/path/
-    commit/lang filled with serving defaults when absent)."""
+    input); json/parquet: rows with a ``content`` column (repo/commit/
+    lang filled with serving defaults when absent; a missing path
+    becomes ``line-<id>``, unique per row)."""
     from pyspark.sql import functions as F
 
     if fmt == "text":
-        # each line must stay its OWN payload group downstream: without a
-        # distinct path, assemble_predict_json's (repo, path, unit_id)
-        # key collapses every input line into one relations array
-        # (found by the spark-submit smoke).  monotonically_increasing_id
-        # is partition-unique and stable for a static input file.
-        df = spark.read.text(source).select(
-            F.col("value").alias("content"),
-            F.concat(F.lit("line-"), F.monotonically_increasing_id())
-            .alias("path"),
-        )
+        df = spark.read.text(source).withColumnRenamed("value", "content")
     elif fmt == "json":
         df = spark.read.json(source)
     else:
         df = spark.read.parquet(source)
-    for col, default in (
-        ("repo", "predict"),
-        ("path", "input"),
-        ("commit", "-"),
-        ("lang", "txt"),
-    ):
+    if "path" not in df.columns:
+        # each row must stay its OWN payload group downstream: without a
+        # distinct path, assemble_predict_json's (repo, path, unit_id)
+        # key collapses every input row into one relations array.
+        # monotonically_increasing_id is partition-unique and stable for
+        # a static input file.
+        df = df.withColumn(
+            "path", F.concat(F.lit("line-"), F.monotonically_increasing_id())
+        )
+    for col, default in (("repo", "predict"), ("commit", "-"), ("lang", "txt")):
         if col not in df.columns:
             df = df.withColumn(col, F.lit(default))
     return df.select("repo", "path", "commit", "lang", "content").filter(
@@ -67,32 +75,32 @@ def read_sentences(spark, source: str, fmt: str):
     )
 
 
-def link_against_graph(triples, nodes):
-    """LEFT-join triple endpoints to the persisted graph's
-    (surface, ent_type) -> canonical_id dimension.  Known entities get
-    their graph ids (columns src/dst), novel ones null — the serving
-    contract.  surface_forms explode to one dim row per known surface.
+def serving_dim(nodes):
+    """The persisted graph's (surface, ent_type) -> canonical_id dim and
+    its row count, built once per ``nodes`` DataFrame object and memoized
+    on it (weakly: the dim is released together with the handle).
+    surface_forms explode to one dim row per known surface.
 
     The dim is DEDUPED to exactly one canonical_id per (surface,
-    ent_type) before the endpoint joins: after cross-epoch merge_nodes
-    unions, a surface reassigned between canonical ids can legitimately
-    appear under two nodes of the same type, and a LEFT join against
-    the raw explode would fan each triple out into duplicate prediction
-    rows (r5 ADVICE).  Winner = highest mention_count, ties to the
-    smallest canonical_id — the dominant assignment, deterministically.
+    ent_type): after cross-epoch merge_nodes unions, a surface
+    reassigned between canonical ids can legitimately appear under two
+    nodes of the same type, and a LEFT join against the raw explode
+    would fan each triple out into duplicate prediction rows.  Winner =
+    highest mention_count, ties to the smallest canonical_id — the
+    dominant assignment, deterministically.
 
-    SIZE-GATED broadcast (kgforge/functions/joins.maybe_broadcast, same
-    rule and threshold as graph/materialize.attach_canonical_ids): a
-    persisted graph with hundreds of millions of distinct surfaces
-    unconditionally broadcast — twice, sub and obj side — OOMs
-    executors; above the gate the join falls back to a shuffle and AQE
-    handles skewed hub surfaces.  (Not a call into attach_canonical_ids
-    itself only because serving must LEFT-join: the pipeline's inner
-    join would silently drop every novel-entity prediction.)"""
+    Snapshot semantics: the first call on a handle pays the explode,
+    the row_number window, a ``localCheckpoint`` and a count; later
+    calls return the same dim even if the files under the handle were
+    rewritten meanwhile — a new ``spark.read`` builds a new dim.  The
+    checkpoint's blocks are executor-local, so on a cluster a lost
+    executor needs a reload too."""
+    hit = _DIMS.get(nodes)
+    if hit is not None:
+        return hit
+
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from kgforge.functions.joins import maybe_broadcast
 
     w = Window.partitionBy("surface", "ent_type").orderBy(
         F.desc("mention_count"), F.asc("canonical_id")
@@ -109,7 +117,32 @@ def link_against_graph(triples, nodes):
         .select("canonical_id", "ent_type", "surface")
         .localCheckpoint(eager=True)
     )
-    n_dim = dim.count()
+    _DIMS[nodes] = hit = (dim, dim.count())
+    return hit
+
+
+def link_against_graph(triples, nodes):
+    """LEFT-join triple endpoints to the persisted graph's
+    (surface, ent_type) -> canonical_id dimension (``serving_dim``).
+    Known entities get their graph ids (columns src/dst), novel ones
+    null — the serving contract.  The first call for a ``nodes`` handle
+    pays the dim build; later calls reuse that snapshot (see
+    ``serving_dim``) and pay only the joins.
+
+    SIZE-GATED broadcast (kgforge/functions/joins.maybe_broadcast, same
+    rule and threshold as graph/materialize.attach_canonical_ids),
+    decided on every call: a persisted graph with hundreds of millions
+    of distinct surfaces unconditionally broadcast — twice, sub and obj
+    side — OOMs executors; above the gate the join falls back to a
+    shuffle and AQE handles skewed hub surfaces.  (Not a call into
+    attach_canonical_ids itself only because serving must LEFT-join:
+    the pipeline's inner join would silently drop every novel-entity
+    prediction.)"""
+    from pyspark.sql import functions as F
+
+    from kgforge.functions.joins import maybe_broadcast
+
+    dim, n_dim = serving_dim(nodes)
     sub = maybe_broadcast(
         dim.select(
             F.col("surface").alias("subj"),
