@@ -1,44 +1,18 @@
-"""State-maintenance job — the spark-submit deliverable for keeping
-long-running incremental state healthy (the operational counterpart to
-run_incremental_dedup / run_incremental_graph):
+"""Graph-snapshot retention job — the spark-submit deliverable that keeps
+run_incremental_graph's state bounded:
 
     ./scripts/make_pyfiles.sh
     spark-submit --py-files dist/kgforge.zip jobs/maintain_job.py \\
-        [--dedup-state /path/to/dedup_state [--rebuild-pairs]] \\
-        [--graph-state /path/to/graph_state [--keep-last 2]] \\
-        [--cms-state /path/to/cms_state] \\
-        [--line-state /path/to/line_state] \\
-        [--rank-state /path/to/rank_state] \\
-        [--run-id m1]
+        --graph-state /path/to/graph_state [--keep-last 2] [--run-id m1]
 
-Two independent maintenance actions, both safe to run from cron between
-streaming triggers (the same concurrency rule their library functions
-document — never concurrently with an in-flight upsert):
+Graph epochs are FULL snapshots, not deltas, so retention is deletion:
+streaming.prune_graph_epochs drops all but the newest ``--keep-last``
+completed epochs.  Safe to run from cron between streaming triggers —
+never concurrently with an in-flight upsert.  The job touches only the
+file system and starts no SparkSession.
 
-* ``--dedup-state``: folds accumulated epoch deltas into one
-  ``compacted=N`` snapshot via streaming.compact_epochs.  By default
-  the accumulated pair union is carried verbatim (history-preserving);
-  ``--rebuild-pairs`` swaps in the exact from-scratch pair set
-  (dedup.pairs_from_state over the compacted signatures) — the
-  reconciliation point for the saturated-bucket strict-superset caveat.
-* ``--graph-state``: drops all but the newest ``--keep-last`` FULL
-  graph snapshots via streaming.prune_graph_epochs (graph epochs are
-  snapshots, not deltas — retention is deletion).
-* ``--cms-state``: folds count-min cell deltas into one pre-aggregated
-  snapshot via streaming.compact_cms_epochs — constant-size output
-  (<= CMS_D x CMS_W rows) no matter how many epochs it absorbs.
-* ``--line-state``: folds line doc-frequency deltas
-  (run_incremental_linedup) into one dim via
-  streaming.compact_line_epochs — one row per distinct line ever seen.
-* ``--rank-state`` (requires --graph-state): refreshes a CONVERGED
-  PageRank snapshot for the newest graph epoch via
-  streaming.refresh_pagerank_state, WARM-STARTED from the previous
-  rank snapshot (graph/algo.pagerank init=) — derived state under the
-  same epoch=N/_COMPLETE discipline, single-snapshot retention.
-
-Prints a one-line JSON summary (what was folded/pruned, state sizes),
-so fleet schedulers can alert on it.  Exit code 0 even when there was
-nothing to do — "already compact" is success for a cron job.
+Prints a one-line JSON summary (the pruned epochs), so fleet schedulers
+can alert on it.  Exit code 0 even when there was nothing to prune.
 """
 
 from __future__ import annotations
@@ -50,87 +24,20 @@ import time
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--dedup-state", default=None)
-    ap.add_argument("--rebuild-pairs", action="store_true")
-    ap.add_argument("--graph-state", default=None)
+    ap.add_argument("--graph-state", required=True)
     ap.add_argument("--keep-last", type=int, default=2)
-    ap.add_argument("--cms-state", default=None)
-    ap.add_argument("--line-state", default=None)
-    ap.add_argument("--rank-state", default=None)
     ap.add_argument("--run-id", default="maintain0")
     args = ap.parse_args()
-    if not (
-        args.dedup_state or args.graph_state or args.cms_state
-        or args.line_state
-    ):
-        ap.error(
-            "nothing to do: pass --dedup-state, --graph-state, --cms-state "
-            "and/or --line-state"
-        )
-    if args.rank_state and not args.graph_state:
-        ap.error("--rank-state requires --graph-state (the epoch to rank)")
 
-    from pyspark.sql import SparkSession
+    from kgforge.streaming import prune_graph_epochs
 
-    from kgforge.streaming import (
-        compact_cms_epochs,
-        compact_epochs,
-        compact_line_epochs,
-        dedup_state_layout,
-        prune_graph_epochs,
-        refresh_pagerank_state,
-    )
-
-    summary: dict = {"run_id": args.run_id}
     t0 = time.monotonic()
-    if args.dedup_state:
-        # Spark only spins up when there are deltas to fold
-        spark = SparkSession.builder.appName("kgforge-maintain-job").getOrCreate()
-        before = len(dedup_state_layout(args.dedup_state))
-        metrics = compact_epochs(
-            spark, args.dedup_state, rebuild_pairs=args.rebuild_pairs
-        )
-        summary["dedup"] = {
-            "sources_before": before,
-            "sources_after": len(dedup_state_layout(args.dedup_state)),
-            "compacted": metrics is not None,
-            **(metrics or {}),
-        }
-        spark.stop()
-    if args.cms_state:
-        spark = SparkSession.builder.appName("kgforge-maintain-job").getOrCreate()
-        before = len(dedup_state_layout(args.cms_state))
-        metrics = compact_cms_epochs(spark, args.cms_state)
-        summary["cms"] = {
-            "sources_before": before,
-            "sources_after": len(dedup_state_layout(args.cms_state)),
-            "compacted": metrics is not None,
-            **(metrics or {}),
-        }
-        spark.stop()
-    if args.line_state:
-        spark = SparkSession.builder.appName("kgforge-maintain-job").getOrCreate()
-        before = len(dedup_state_layout(args.line_state))
-        metrics = compact_line_epochs(spark, args.line_state)
-        summary["lines"] = {
-            "sources_before": before,
-            "sources_after": len(dedup_state_layout(args.line_state)),
-            "compacted": metrics is not None,
-            **(metrics or {}),
-        }
-        spark.stop()
-    if args.graph_state:
-        pruned = prune_graph_epochs(args.graph_state, keep_last=args.keep_last)
-        summary["graph"] = {"pruned_epochs": pruned, "keep_last": args.keep_last}
-    if args.rank_state:
-        spark = SparkSession.builder.appName("kgforge-maintain-job").getOrCreate()
-        metrics = refresh_pagerank_state(spark, args.graph_state, args.rank_state)
-        summary["ranks"] = {
-            "refreshed": metrics is not None,
-            **(metrics or {}),
-        }
-        spark.stop()
-    summary["wall_sec"] = round(time.monotonic() - t0, 1)
+    pruned = prune_graph_epochs(args.graph_state, keep_last=args.keep_last)
+    summary = {
+        "run_id": args.run_id,
+        "graph": {"pruned_epochs": pruned, "keep_last": args.keep_last},
+        "wall_sec": round(time.monotonic() - t0, 1),
+    }
     print(json.dumps(summary))
 
 

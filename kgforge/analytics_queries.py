@@ -39,8 +39,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) — distinct 3-token shingles per document (shared
-    implementation: functions/hashing.shingles_of, also the unit under
-    the incremental dedup state in kgforge/dedup.py)."""
+    implementation: functions/hashing.shingles_of)."""
     return shingles_of(_docs(spark, sf_dir))
 
 

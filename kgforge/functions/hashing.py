@@ -9,9 +9,8 @@ parameters keep all products under 2^62 (a < 2^31, h < 2^31-1) so the
 arithmetic never overflows int64 on either engine.
 
 Document-level shingling/minhashing operates on plain DataFrames
-(``doc_id``, ``text``) — the incremental dedup state machinery
-(kgforge/dedup.py) builds on these so a signature computed in one epoch
-is bit-identical to one computed in any other.
+(``doc_id``, ``text``), so a signature is a pure function of its
+document's text.
 """
 
 from __future__ import annotations
@@ -23,9 +22,6 @@ MOD = 2147483647  # 2^31 - 1
 
 # minhash params (a, b): fixed literals; a*h < 2^62 with h < 2^31-1
 MINHASH_AB = [(1103515245, 12345), (1140671485, 12820163), (214013, 2531011), (16807, 0)]
-
-# band layout over the 4-hash signature: band 1 = (s0, s1), band 2 = (s2, s3)
-MINHASH_BANDS = [(1, "s0", "s1"), (2, "s2", "s3")]
 
 
 def charfold(col) -> F.Column:
@@ -84,11 +80,11 @@ def shingles_of(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def shingle_arrays(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, sh_arr) — the SAME distinct shingles as shingles_of, kept
     as one array row per document instead of exploded.  The r8 scale
-    observation: most consumers (signatures, per-doc counts, simhash
-    balances, exact-Jaccard verify of candidate pairs) are PER-DOCUMENT
-    folds, so keeping the shingles row-local removes the explode +
-    groupBy shuffle entirely (guide §2.4) — only the inverted-index
-    consumers still explode."""
+    observation: most consumers (signatures, per-doc counts,
+    exact-Jaccard verify of candidate pairs) are PER-DOCUMENT folds, so
+    keeping the shingles row-local removes the explode + groupBy shuffle
+    entirely (guide §2.4) — only the inverted-index consumers still
+    explode."""
     return docs.select("doc_id", _shingle_array_col(text_col).alias("sh_arr"))
 
 
@@ -108,10 +104,11 @@ def hashed_arrays(sharr: DataFrame, arr_col: str = "sh_arr") -> DataFrame:
 
 
 def minhash_from_arrays(sharr: DataFrame, arr_col: str = "sh_arr") -> DataFrame:
-    """(doc_id, s0..s3, n_sh) — bit-identical to
-    ``minhash_of(shingles_of(docs))`` (min is order-independent; charfold
-    is applied to the same strings), computed WITHOUT any shuffle: each
-    signature is a row-local fold over the doc's shingle array."""
+    """(doc_id, s0..s3, n_sh) — per-document MinHash over the charfold'd
+    shingles of ``shingle_arrays`` plus the doc's distinct-shingle count,
+    computed WITHOUT any shuffle: each signature is a row-local fold over
+    the doc's shingle array (min is order-independent, so it equals the
+    explode + groupBy-min form over ``shingles_of``)."""
     hashed = hashed_arrays(sharr, arr_col)
     aggs = [
         F.array_min(
@@ -120,72 +117,3 @@ def minhash_from_arrays(sharr: DataFrame, arr_col: str = "sh_arr") -> DataFrame:
         for i, (a, b) in enumerate(MINHASH_AB)
     ]
     return hashed.select("doc_id", *aggs, "n_sh")
-
-
-def simhash_from_hashed(
-    hashed: DataFrame, n_bits: int, out_col: str = "s"
-) -> DataFrame:
-    """(doc_id, <out_col>) — bitwise-majority SimHash over a
-    ``hashed_arrays`` frame, bit-identical to the exploded groupBy form
-    (integer balance per bit: bal = 2·|set| − n, sign compared exactly)
-    but entirely row-local — no shuffle (guide §2.4).  ONE fold carries
-    all n_bits running counts as an array accumulator (2× faster than
-    n_bits separate filter/fold expressions, and one compact expression
-    to compile instead of n_bits)."""
-    bits = F.array(*[F.lit(1 << k).cast("bigint") for k in range(n_bits)])
-    counts = F.aggregate(
-        F.col("h_arr"),
-        F.array_repeat(F.lit(0).cast("bigint"), n_bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            bits,
-            lambda a, m: a
-            + F.when(h.bitwiseAND(m) != 0, 1).otherwise(0).cast("bigint"),
-        ),
-    )
-    sim = F.aggregate(
-        F.zip_with(
-            counts,
-            bits,
-            lambda c, m: F.when(c * 2 > F.col("n_sh"), m).otherwise(
-                F.lit(0).cast("bigint")
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
-    return hashed.select("doc_id", sim.alias(out_col))
-
-
-def minhash_of(shingles: DataFrame) -> DataFrame:
-    """(doc_id, s0..s3, n_sh) MinHash signatures over charfold'd
-    shingles, plus the doc's distinct-shingle count — carried in the
-    signature so exact-Jaccard verification against a persisted corpus
-    never re-counts old documents."""
-    sh = shingles.withColumn("h", charfold(F.col("sh")))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MOD).alias(f"s{i}")
-        for i, (a, b) in enumerate(MINHASH_AB)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs, F.count("*").alias("n_sh"))
-
-
-def signature_bands(sig: DataFrame) -> DataFrame:
-    """Explode signatures to LSH band rows (doc_id, band, k0, k1) — the
-    banded-join key space.  A cheap projection of the signature table:
-    re-deriving bands never recomputes hashes."""
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.col(c0).alias("k0"),
-                        F.col(c1).alias("k1"),
-                    )
-                    for band, c0, c1 in MINHASH_BANDS
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.k0", "bk.k1")

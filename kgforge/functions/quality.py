@@ -22,36 +22,6 @@ MAX_MEAN_TOK_LEN = 12.0
 STOPWORDS = ("a", "the")
 
 
-def doc_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    width: int = 10,
-    keep_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """(keep_cols..., line_id, line) — deterministic fixed-``width``
-    token segmentation of single-line text into synthetic "lines", the
-    shared unit of the CCNet line-dedup family (text_line_dedup query +
-    streaming.run_incremental_linedup).  Entirely ROW-LOCAL: one split,
-    array slices, one posexplode — no shuffle; at corpus scale this is
-    pure codegen inside the scan stage.  Null text folds to '' (one
-    empty line) — the quality_flags null discipline: a null document
-    stays VISIBLE and countable instead of being silently dropped by
-    posexplode(null)."""
-    arr = df.select(
-        *keep_cols,
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("_arr"),
-    )
-    return arr.select(
-        *keep_cols,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, CAST((size(_arr)-1)/{width} AS INT)),"
-                f" i -> array_join(slice(_arr, i*{width}+1, {width}), ' '))"
-            )
-        ).alias("line_id", "line"),
-    )
-
-
 def quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add n_tokens, stop_ratio, mean_tok_len, keep, reason columns.
 

@@ -1,19 +1,20 @@
-"""Structured Streaming surface for incremental KG construction.
+"""Structured Streaming surface for incremental KG construction: new
+repo files arrive continuously and the graph follows them.
 
-The reference is strictly batch (verified: no streaming constructs
-anywhere under /root/reference — SURVEY.md §2.10).  This module is an
-ADDITION for the training-data-pipeline use case: new repo files arrive
-continuously; triples append incrementally.
-
-Design: the fused extraction cascade (extract_triples_onepass) is
-stateless and row-local, so the SAME mapInPandas runs unchanged on a
-streaming DataFrame.  Canonicalization/linking stay batch (they are
-global fixpoints — recomputed downstream per checkpoint epoch), which is
-the standard lambda split for KG builds.
-
-``trigger(availableNow=True)`` drains the backlog and stops — the batch
-job and the streaming job are the same code path, so results are
-identical (tested).
+- ``run_stream_once`` drains the repo backlog into an append-only
+  triples parquet.  The fused extraction cascade
+  (extract_triples_onepass) is stateless and row-local, so the SAME
+  mapInPandas runs unchanged on a streaming DataFrame, and
+  ``trigger(availableNow=True)`` makes the streamed triples equal the
+  batch ones (tested).
+- ``run_incremental_graph`` maintains the graph itself: per micro-batch
+  it folds the delta into the persisted nodes/edges/canonical dim with
+  graph/merge.merge_graph and publishes a full snapshot
+  ``state_dir/epoch=N`` under a ``_COMPLETE`` marker.
+  ``latest_complete_epoch`` and ``read_graph_state`` read that state;
+  ``prune_graph_epochs`` is its retention (jobs/maintain_job.py).
+- ``windowed_triple_counts`` and ``streaming_sessionize`` are
+  watermarked event-time aggregations over a streaming frame.
 """
 
 from __future__ import annotations
@@ -33,20 +34,13 @@ REPOS_SCHEMA = StructType(
 
 
 def read_repo_stream(
-    spark: SparkSession, input_dir: str, fmt: str = "json",
+    spark: SparkSession, input_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     reader = spark.readStream.schema(REPOS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format(fmt).load(input_dir)
-
-
-def stream_triples(repos_stream: DataFrame, model_name: str = "repos") -> DataFrame:
-    """Streaming repos -> streaming triples (same fused UDF as batch)."""
-    from .extract.rel import extract_triples_onepass
-
-    return extract_triples_onepass(repos_stream, model_name)
+    return reader.format("json").load(input_dir)
 
 
 def run_stream_once(
@@ -59,7 +53,9 @@ def run_stream_once(
     """Drain all available input into an append-only triples parquet and
     stop.  Re-running resumes from the stream checkpoint — files already
     processed are not re-extracted (exactly-once per input file)."""
-    triples = stream_triples(read_repo_stream(spark, input_dir), model_name)
+    from .extract.rel import extract_triples_onepass
+
+    triples = extract_triples_onepass(read_repo_stream(spark, input_dir), model_name)
     q = (
         triples.writeStream.format("parquet")
         .option("path", output_dir)
@@ -97,98 +93,6 @@ def windowed_triple_counts(
     )
 
 
-def streaming_first_seen(
-    keyed_stream: DataFrame,
-    key_cols: list[str] | None = None,
-    ttl_ms: int | None = None,
-    ts_col: str = "event_time",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Cross-micro-batch EXACT dedup: emit each key the first time it is
-    ever seen, suppress all later arrivals — the streaming counterpart of
-    the exact-dedup modality (a custom stateful operator via
-    applyInPandasWithState; state = one empty marker per key, so state
-    size is O(distinct keys), the minimum any exact dedup can hold).
-
-    ``ttl_ms=None`` (default) keeps exact-forever semantics — state grows
-    with distinct keys, inherent to exact first-seen.  ``ttl_ms=N`` opts
-    into BOUNDED-horizon dedup with EVENT-TIME eviction: the stream is
-    watermarked on ``ts_col``, every arrival pushes the key's timeout
-    timestamp to its latest event time + N ms, and once the watermark
-    passes that deadline the key is evicted with a ``first_seen=false``
-    marker row — never a silent state drop, so
-    ``COUNT(*) WHERE NOT first_seen`` is the evicted-key counter.  A key
-    arriving again after eviction re-emits ``first_seen=true`` (by
-    construction: its state is gone).  Suppressed duplicate arrivals
-    still emit nothing.
-
-    Event-time (not processing-time) timeouts are deliberate: they are
-    deterministic under replay, and a processing-time timeout makes
-    ``shouldRunAnotherBatch`` always true, so ``availableNow`` drains
-    would never terminate."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    # applyInPandasWithState hands tz-NAIVE pandas timestamps rendered in
-    # the session timezone; capture it driver-side so the eviction
-    # deadline is epoch-correct for ANY session tz (not just the UTC that
-    # kgforge.session.get_spark pins).
-    session_tz = keyed_stream.sparkSession.conf.get(
-        "spark.sql.session.timeZone", "UTC"
-    )
-    keys = key_cols or ["content_sha"]
-    out_schema = ", ".join(f"{k} string" for k in keys) + ", first_seen boolean"
-    state_schema = "seen boolean"
-    if ttl_ms is not None:
-        timeout_conf = GroupStateTimeout.EventTimeTimeout
-        keyed_stream = keyed_stream.withWatermark(ts_col, watermark_delay)
-    else:
-        timeout_conf = GroupStateTimeout.NoTimeout
-
-    def fn(key, pdf_iter, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            # bounded-horizon eviction: surface the drop, free the state
-            state.remove()
-            yield pd.DataFrame([{**dict(zip(keys, key)), "first_seen": False}])
-            return
-        if not state.exists:
-            state.update((True,))
-            emit = True
-        else:
-            emit = False
-        max_ts = None
-        for pdf in pdf_iter:
-            if ttl_ms is not None and len(pdf):
-                m = pdf[ts_col].max()
-                max_ts = m if max_ts is None or m > max_ts else max_ts
-        if ttl_ms is not None and max_ts is not None:
-            if max_ts.tzinfo is None:
-                # DST-safe localization: a fall-back hour is ambiguous and
-                # a spring-forward hour nonexistent in local time — bare
-                # tz_localize RAISES for both, killing the stream.  Pick
-                # the DST interpretation / shift forward: deterministic,
-                # and at worst one hour of extra TTL slack twice a year —
-                # fine for a bounded-horizon eviction deadline.
-                max_ts = max_ts.tz_localize(
-                    session_tz, ambiguous=True, nonexistent="shift_forward"
-                )
-            state.setTimeoutTimestamp(int(max_ts.timestamp() * 1000) + ttl_ms)
-        if emit:
-            yield pd.DataFrame([{**dict(zip(keys, key)), "first_seen": True}])
-        else:
-            yield pd.DataFrame(
-                [], columns=[*keys, "first_seen"]
-            ).astype({"first_seen": bool})
-
-    return keyed_stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-
-
 def latest_complete_epoch(state_dir: str) -> int | None:
     """Max N over ``state_dir/epoch=N/_COMPLETE`` markers (None if none).
 
@@ -209,155 +113,13 @@ def latest_complete_epoch(state_dir: str) -> int | None:
     return latest
 
 
-def dedup_state_layout(state_dir: str) -> list[str]:
-    """Authoritative read rule for incremental-dedup state: the newest
-    COMPLETE compacted snapshot (``compacted=N``, holding everything
-    through epoch N) plus every complete epoch delta STRICTLY newer
-    than N, in numeric epoch order.
-
-    Epoch dirs <= N are ignored even if still on disk — a crash between
-    a compaction's atomic rename and its source cleanup legitimately
-    leaves them behind, and reading them alongside the snapshot would
-    double-count their rows.  ``*.tmp`` compaction dirs (no _COMPLETE,
-    un-renamed) are never read."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return []
-    comp: tuple[int, str] | None = None
-    for name in os.listdir(state_dir):
-        if (
-            name.startswith("compacted=")
-            and not name.endswith(".tmp")
-            and os.path.exists(os.path.join(state_dir, name, "_COMPLETE"))
-        ):
-            n = int(name.split("=", 1)[1])
-            if comp is None or n > comp[0]:
-                comp = (n, os.path.join(state_dir, name))
-    floor = comp[0] if comp else -1
-    epochs = sorted(
-        (int(name.split("=", 1)[1]), os.path.join(state_dir, name))
-        for name in os.listdir(state_dir)
-        if name.startswith("epoch=")
-        and os.path.exists(os.path.join(state_dir, name, "_COMPLETE"))
-        and int(name.split("=", 1)[1]) > floor
-    )
-    return ([comp[1]] if comp else []) + [p for _, p in epochs]
-
-
-def compact_epochs(
-    spark: SparkSession,
-    state_dir: str,
-    *,
-    rebuild_pairs: bool = False,
-    n_parts: int = 32,
-    max_bucket: int | None = None,
-    threshold: float | None = None,
-) -> dict | None:
-    """Fold the accumulated epoch deltas (plus any previous compacted
-    snapshot) into ONE keyed table set — the mechanism behind
-    run_incremental_dedup's 'compact periodically' contract.  Epoch-dir
-    count stays bounded: after compaction the state is a single
-    ``compacted=N`` snapshot and only deltas newer than N.
-
-    Why: read-side state is the UNION of epoch deltas, so every
-    micro-batch's planning and scan cost grows with epoch count (one
-    parquet dir + footer round per epoch).  Compaction rewrites the
-    union once, clustered by its join key (doc_id — plain keyed
-    repartition here; the cluster deployment writes the same frames
-    through io/sinks.write_bucketed / an Iceberg rewrite), restoring
-    O(1)-dir reads.
-
-    ``rebuild_pairs=False`` (default) carries the accumulated pair
-    UNION forward verbatim — history is not rewritten; the union's
-    documented strict-superset caveat (pairs emitted before a bucket
-    saturated) persists.  ``rebuild_pairs=True`` swaps in
-    dedup.pairs_from_state over the compacted sig/shingle tables — the
-    exact from-scratch pair set, since-saturated buckets suppressed —
-    making compaction the reconciliation point for that caveat.
-
-    Crash discipline mirrors the epoch writes: everything lands in a
-    ``compacted=N.tmp`` dir, _COMPLETE is written INSIDE it, and one
-    atomic rename publishes the snapshot; source dirs are removed only
-    after the rename (leftovers are ignored by dedup_state_layout).
-    Concurrency: run between triggers / from a maintenance job — not
-    concurrently with an in-flight upsert, which may be reading the
-    sources being folded."""
-    import json as _json
-    import os
-    import shutil
-
-    from .dedup import pairs_from_state
-
-    srcs = dedup_state_layout(state_dir)
-    if len(srcs) <= 1:
-        return None  # a single source is already compact
-    through = int(srcs[-1].rstrip("/").rsplit("=", 1)[1])
-    final = os.path.join(state_dir, f"compacted={through}")
-    if os.path.exists(os.path.join(final, "_COMPLETE")):
-        return None  # an identical compaction already published
-    tmp = final + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # debris from a crashed attempt
-
-    sig = spark.read.parquet(*[os.path.join(d, "sig") for d in srcs])
-    shingle = spark.read.parquet(*[os.path.join(d, "shingle") for d in srcs])
-    sig.repartition(n_parts, "doc_id").write.parquet(os.path.join(tmp, "sig"))
-    shingle.repartition(n_parts, "doc_id").write.parquet(
-        os.path.join(tmp, "shingle")
-    )
-    if rebuild_pairs:
-        from .dedup import MAX_BUCKET, THRESHOLD
-
-        # read the just-written snapshot back: one coherent source, and
-        # the banding runs off the compacted files it will live beside
-        pairs = pairs_from_state(
-            {
-                "sig": spark.read.parquet(os.path.join(tmp, "sig")),
-                "shingle": spark.read.parquet(os.path.join(tmp, "shingle")),
-            },
-            max_bucket=MAX_BUCKET if max_bucket is None else max_bucket,
-            threshold=THRESHOLD if threshold is None else threshold,
-        )
-    else:
-        pairs = spark.read.parquet(*[os.path.join(d, "pairs") for d in srcs])
-    pairs.repartition(n_parts, "doc_a").write.parquet(os.path.join(tmp, "pairs"))
-
-    metrics = {
-        "through_epoch": through,
-        "n_sources_folded": len(srcs),
-        "n_state_docs": spark.read.parquet(os.path.join(tmp, "sig")).count(),
-        "n_pairs": spark.read.parquet(os.path.join(tmp, "pairs")).count(),
-        "rebuilt_pairs": rebuild_pairs,
-    }
-    with open(os.path.join(tmp, "metrics.json"), "w") as f:
-        _json.dump(metrics, f)
-    open(os.path.join(tmp, "_COMPLETE"), "w").close()
-    os.rename(tmp, final)
-
-    # cleanup AFTER publication; interrupted cleanup leaves dirs the
-    # layout rule already ignores
-    for name in os.listdir(state_dir):
-        if name.endswith(".tmp"):
-            continue
-        p = os.path.join(state_dir, name)
-        if name.startswith("epoch=") and int(name.split("=", 1)[1]) <= through:
-            shutil.rmtree(p)
-        elif (
-            name.startswith("compacted=")
-            and int(name.split("=", 1)[1]) < through
-        ):
-            shutil.rmtree(p)
-    return metrics
-
-
 def prune_graph_epochs(state_dir: str, keep_last: int = 2) -> list[int]:
     """Retention for run_incremental_graph state.  Graph epochs are FULL
     snapshots (merge_graph and read_graph_state consume only the newest
     completed epoch — older dirs are history, not state), so compaction
     here is deletion: drop all but the newest ``keep_last`` completed
-    epochs.  Returns the pruned epoch numbers.  Same concurrency rule
-    as compact_epochs: run between triggers."""
+    epochs.  Returns the pruned epoch numbers.  Run between triggers,
+    never concurrently with an in-flight upsert."""
     import os
     import shutil
 
@@ -492,156 +254,6 @@ def run_incremental_graph(
     q.awaitTermination()
 
 
-def run_incremental_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-) -> None:
-    """Continuous corpus dedup: stream documents (json: doc_id, text);
-    per micro-batch, emit the near-dup pairs the batch introduces
-    against the ACCUMULATED corpus (kgforge/dedup.
-    dedup_minhash_incremental — old signatures read from state, never
-    recomputed) and evolve the persisted signature state.
-
-    ``compact_every=K`` turns on AUTO-COMPACTION: once the read layout
-    exceeds K sources, the just-completed epoch's upsert folds them via
-    compact_epochs before returning — foreachBatch callbacks are
-    sequential, so this honors the run-between-triggers concurrency
-    rule by construction, and the epoch-dir count stays <= K+1 forever.
-    History-preserving (the pair union is carried verbatim; run
-    compact_epochs(rebuild_pairs=True) from a maintenance job when
-    reconciliation to the from-scratch pair set is wanted).
-
-    Same epoch discipline as run_incremental_graph (and for the same
-    reasons — the comments there carry the full argument):
-
-      state_dir/epoch=N/{sig,shingle,pairs}/ + _COMPLETE marker
-      state_dir/_LATEST -> N  (informational; _COMPLETE markers are
-                               authoritative)
-
-    Each epoch dir stores only the BATCH's sig/shingle rows (deltas):
-    per-epoch write I/O is O(batch), never O(accumulated corpus) — at
-    the corpus scales dedup.py targets, rewriting the full shingle
-    inverted index per micro-batch would dwarf the delta-scoped join
-    work the incremental design buys.  The accumulated state is the
-    union of the sources dedup_state_layout names — the newest
-    compacted snapshot plus later epoch deltas (signatures are
-    append-only facts keyed by doc_id, so the union IS the table);
-    compact_epochs folds the deltas into one keyed snapshot when epoch
-    count grows, bounding per-batch read amplification.
-
-    Replays after restart are absorbed by the marker (an epoch is never
-    merged twice); reading prior epochs while writing epoch N never
-    overwrites what is being read.
-
-    Pair-set contract: each epoch's pairs/ is exact for the corpus AS
-    ACCUMULATED AT THAT EPOCH.  The union across epochs therefore
-    equals the one-shot run UNLESS a band bucket crosses max_bucket
-    between epochs: pairs an earlier epoch emitted from a
-    since-saturated bucket persist, while a from-scratch rebuild would
-    suppress that whole bucket.  Reconciling against a rebuild must
-    allow that strict-superset case (see read_dedup_pairs)."""
-    import os
-
-    from .dedup import dedup_minhash_incremental
-
-    def _set_latest(epoch: int) -> None:
-        tmp = os.path.join(state_dir, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(epoch))
-        os.replace(tmp, os.path.join(state_dir, "_LATEST"))
-
-    def upsert(batch_df, epoch_id: int) -> None:
-        import json as _json
-
-        os.makedirs(state_dir, exist_ok=True)
-        edir = os.path.join(state_dir, f"epoch={epoch_id}")
-        if os.path.exists(os.path.join(edir, "_COMPLETE")):
-            return  # replayed batch after restart
-        # sources in NUMERIC epoch order (lexicographic sorting puts
-        # 'epoch=10' before 'epoch=9' and would read stale metrics from
-        # epoch 10 onward, r5 ADVICE); a compacted snapshot, when
-        # present, stands in for every epoch it folded.
-        done = dedup_state_layout(state_dir)
-        if not done:
-            state, prev_n = None, 0
-        else:
-            state = {
-                "sig": spark.read.parquet(*[os.path.join(d, "sig") for d in done]),
-                "shingle": spark.read.parquet(
-                    *[os.path.join(d, "shingle") for d in done]
-                ),
-            }
-            with open(os.path.join(done[-1], "metrics.json")) as f:
-                prev_n = _json.load(f)["n_state_docs"]
-        pairs, new_state = dedup_minhash_incremental(
-            batch_df.select("doc_id", "text"), state
-        )
-        pairs.write.mode("overwrite").parquet(os.path.join(edir, "pairs"))
-        new_state["delta_sig"].write.mode("overwrite").parquet(
-            os.path.join(edir, "sig")
-        )
-        new_state["delta_shingle"].write.mode("overwrite").parquet(
-            os.path.join(edir, "shingle")
-        )
-        # per-epoch lineage metrics: delta counts off the files just
-        # written; the accumulated count is prior metrics + delta (O(1),
-        # no corpus rescan)
-        n_delta = spark.read.parquet(os.path.join(edir, "sig")).count()
-        metrics = {
-            "epoch": epoch_id,
-            "n_batch_docs": batch_df.count(),
-            "n_pairs": spark.read.parquet(os.path.join(edir, "pairs")).count(),
-            "n_delta_docs": n_delta,
-            "n_state_docs": prev_n + n_delta,
-        }
-        with open(os.path.join(edir, "metrics.json"), "w") as f:
-            _json.dump(metrics, f)
-        open(os.path.join(edir, "_COMPLETE"), "w").close()
-        _set_latest(epoch_id)
-        # auto-compaction: foreachBatch callbacks are sequential, so
-        # folding here never races a concurrent state read
-        if compact_every and len(dedup_state_layout(state_dir)) > compact_every:
-            compact_epochs(spark, state_dir)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .format("json")
-        .load(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_dedup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Accumulated pair set: the newest compacted snapshot's pairs plus
-    every later epoch's emitted pairs (dedup_state_layout's read rule).
-
-    Equals the one-shot pair set over the accumulated corpus as long as
-    no band bucket crossed max_bucket BETWEEN epochs; a since-saturated
-    bucket's earlier pairs persist here while a from-scratch rebuild
-    suppresses that bucket entirely, making this a strict superset in
-    that case (each epoch's pairs were exact for the corpus as it stood
-    — history is not rewritten).  The three-epoch equality test pins
-    the under-cap case; compact_epochs(rebuild_pairs=True) is the
-    reconciliation point that collapses the superset back to the
-    from-scratch set."""
-    import os
-
-    dirs = [os.path.join(d, "pairs") for d in dedup_state_layout(state_dir)]
-    if not dirs:
-        raise FileNotFoundError(f"no completed epoch under {state_dir}")
-    return spark.read.parquet(*dirs)
-
-
 def read_graph_state(spark: SparkSession, state_dir: str):
     """(nodes, edges, canonical) of the latest completed epoch (derived
     from the _COMPLETE markers; the _LATEST file is informational)."""
@@ -656,352 +268,3 @@ def read_graph_state(spark: SparkSession, state_dir: str):
         spark.read.parquet(os.path.join(edir, "edges")),
         spark.read.parquet(os.path.join(edir, "canonical")),
     )
-
-
-# ---------------------------------------------------------------------------
-# incremental count-min sketch (same epoch discipline as incremental dedup)
-# ---------------------------------------------------------------------------
-
-def run_incremental_cms(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-) -> None:
-    """Continuous corpus frequency sketching: stream documents (json:
-    doc_id, text); per micro-batch write the batch's count-min CELL
-    DELTA (functions/sketches.cms_cells — at most CMS_D x CMS_W rows,
-    O(1) regardless of batch size) under the same epoch discipline as
-    run_incremental_dedup:
-
-      state_dir/epoch=N/cells/ + metrics.json + _COMPLETE
-
-    Because cells are SUMS, the accumulated sketch is exactly the
-    cell-wise sum across epochs (functions/sketches.cms_merge — the
-    mergeable-sketch identity, pinned by tests/test_sketches.py), so
-    the read rule is read_cms_cells and compaction
-    (compact_cms_epochs) pre-aggregates losslessly: unlike the dedup
-    state, whose rows are append-only facts, the folded CMS snapshot is
-    itself a <= CMS_D x CMS_W row table.  Replays after restart are
-    absorbed by the _COMPLETE marker exactly as in the dedup job."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .functions.sketches import cms_cells
-
-    def upsert(batch_df, epoch_id: int) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        edir = os.path.join(state_dir, f"epoch={epoch_id}")
-        if os.path.exists(os.path.join(edir, "_COMPLETE")):
-            return  # replayed batch after restart
-        toks = batch_df.select(
-            F.explode(F.split("text", " ")).alias("tok")
-        )
-        cms_cells(toks).write.mode("overwrite").parquet(
-            os.path.join(edir, "cells")
-        )
-        cells = spark.read.parquet(os.path.join(edir, "cells"))
-        metrics = {
-            "epoch": epoch_id,
-            "n_batch_docs": batch_df.count(),
-            "n_cells": cells.count(),
-            "batch_total": cells.agg(F.sum("cell_n")).collect()[0][0],
-        }
-        with open(os.path.join(edir, "metrics.json"), "w") as f:
-            _json.dump(metrics, f)
-        open(os.path.join(edir, "_COMPLETE"), "w").close()
-        if compact_every and len(dedup_state_layout(state_dir)) > compact_every:
-            compact_cms_epochs(spark, state_dir)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .format("json")
-        .load(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _read_summed_state(
-    spark: SparkSession,
-    state_dir: str,
-    subdir: str,
-    keys: list[str],
-    val: str,
-) -> DataFrame:
-    """Accumulated SUM-mergeable state: key-wise sum over the layout's
-    sources (newest compacted snapshot + strictly-newer epoch deltas).
-    Shared by the CMS cells and line-frequency states — any state whose
-    rows are additive counts reads exactly this way, and the read
-    equals the one-shot computation of the whole stream (mergeability
-    is an identity, not an approximation)."""
-    import os
-
-    dirs = [os.path.join(d, subdir) for d in dedup_state_layout(state_dir)]
-    if not dirs:
-        raise FileNotFoundError(f"no completed epoch under {state_dir}")
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(*dirs).groupBy(*keys).agg(F.sum(val).alias(val))
-    )
-
-
-def _compact_summed_epochs(
-    spark: SparkSession,
-    state_dir: str,
-    subdir: str,
-    keys: list[str],
-    val: str,
-    count_key: str,
-    sum_key: str,
-) -> dict | None:
-    """Fold SUM-mergeable epoch deltas (plus any previous snapshot) into
-    ONE pre-aggregated ``compacted=N`` table — same crash discipline as
-    compact_epochs (_COMPLETE inside the tmp dir, atomic rename, source
-    cleanup after; dedup_state_layout ignores debris).  The folded
-    table has one row per distinct key, so compaction output is bounded
-    by the key space no matter how many epochs it absorbs."""
-    import json as _json
-    import os
-    import shutil
-
-    srcs = dedup_state_layout(state_dir)
-    if len(srcs) <= 1:
-        return None
-    through = int(srcs[-1].rstrip("/").rsplit("=", 1)[1])
-    final = os.path.join(state_dir, f"compacted={through}")
-    if os.path.exists(os.path.join(final, "_COMPLETE")):
-        return None
-    tmp = final + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-    from pyspark.sql import functions as F
-
-    merged = (
-        spark.read.parquet(*[os.path.join(d, subdir) for d in srcs])
-        .groupBy(*keys)
-        .agg(F.sum(val).alias(val))
-    )
-    merged.coalesce(1).write.parquet(os.path.join(tmp, subdir))
-    folded = spark.read.parquet(os.path.join(tmp, subdir))
-    metrics = {
-        "through_epoch": through,
-        "n_sources_folded": len(srcs),
-        count_key: folded.count(),
-        sum_key: folded.agg(F.sum(val)).collect()[0][0],
-    }
-    with open(os.path.join(tmp, "metrics.json"), "w") as f:
-        _json.dump(metrics, f)
-    open(os.path.join(tmp, "_COMPLETE"), "w").close()
-    os.replace(tmp, final)
-    for d in srcs:
-        shutil.rmtree(d, ignore_errors=True)
-    return metrics
-
-
-def read_cms_cells(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The accumulated sketch: cell-wise sum over the layout's sources.
-    Equals the one-shot sketch of the whole stream EXACTLY."""
-    return _read_summed_state(spark, state_dir, "cells", ["j", "bucket"], "cell_n")
-
-
-def compact_cms_epochs(spark: SparkSession, state_dir: str) -> dict | None:
-    """Fold epoch cell deltas into ONE ``compacted=N`` sketch (the
-    summed-state compaction with the CMS schema): the folded table is
-    itself a sketch of <= CMS_D x CMS_W rows, so this compaction is
-    CONSTANT-SIZE output no matter how many epochs it absorbs."""
-    return _compact_summed_epochs(
-        spark, state_dir, "cells", ["j", "bucket"], "cell_n",
-        count_key="n_cells", sum_key="total_count",
-    )
-
-
-def run_incremental_linedup(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    line_width: int = 10,
-    compact_every: int | None = None,
-) -> None:
-    """Incremental CCNet LINE-FREQUENCY state — the streaming twin of
-    the text_line_dedup query (Wenzek et al. 2020 line dedup at corpus
-    scale runs exactly this way: line hashes + counts accumulate as the
-    crawl arrives; excision is a join against the accumulated dim).
-    Per micro-batch (json: doc_id, text) write the batch's
-    (line key, per-batch doc-frequency) DELTA under the epoch
-    discipline of run_incremental_dedup:
-
-      state_dir/epoch=N/lines/ + metrics.json + _COMPLETE
-
-    Doc-frequencies are ADDITIVE across epochs because every document
-    arrives in exactly one epoch (the same single-arrival assumption
-    the dedup/graph states document), so the accumulated frequency dim
-    is the key-wise sum — read_line_counts — and compaction
-    (compact_line_epochs) folds losslessly to one row per distinct
-    line.  A delta epoch costs only ITS OWN lines (batch-sized, not
-    corpus-sized); the drop decision for any cap is a keyed join of
-    candidate lines against the accumulated dim.  Replays after
-    restart are absorbed by the _COMPLETE marker."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .functions.quality import doc_lines
-
-    def upsert(batch_df, epoch_id: int) -> None:
-        os.makedirs(state_dir, exist_ok=True)
-        edir = os.path.join(state_dir, f"epoch={epoch_id}")
-        if os.path.exists(os.path.join(edir, "_COMPLETE")):
-            return  # replayed batch after restart
-        delta = (
-            doc_lines(batch_df, "text", line_width)
-            .select("doc_id", F.md5("line").alias("k"))
-            .groupBy("k")
-            .agg(F.count_distinct("doc_id").alias("n_docs"))
-        )
-        delta.write.mode("overwrite").parquet(os.path.join(edir, "lines"))
-        lines = spark.read.parquet(os.path.join(edir, "lines"))
-        metrics = {
-            "epoch": epoch_id,
-            "n_batch_docs": batch_df.count(),
-            "n_lines": lines.count(),
-            "batch_docfreq": lines.agg(F.sum("n_docs")).collect()[0][0],
-        }
-        with open(os.path.join(edir, "metrics.json"), "w") as f:
-            _json.dump(metrics, f)
-        open(os.path.join(edir, "_COMPLETE"), "w").close()
-        if compact_every and len(dedup_state_layout(state_dir)) > compact_every:
-            compact_line_epochs(spark, state_dir)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .format("json")
-        .load(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_line_counts(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The accumulated line doc-frequency dim (k, n_docs): key-wise sum
-    over the layout's sources — equals the one-shot corpus frequency
-    table of text_line_dedup exactly."""
-    return _read_summed_state(spark, state_dir, "lines", ["k"], "n_docs")
-
-
-def compact_line_epochs(spark: SparkSession, state_dir: str) -> dict | None:
-    """Fold line-frequency epoch deltas into ONE ``compacted=N`` dim —
-    one row per distinct line ever seen (the summed-state compaction
-    with the line schema)."""
-    return _compact_summed_epochs(
-        spark, state_dir, "lines", ["k"], "n_docs",
-        count_key="n_lines", sum_key="total_docfreq",
-    )
-
-
-def refresh_pagerank_state(
-    spark: SparkSession,
-    graph_state_dir: str,
-    ranks_dir: str,
-    *,
-    tol: float = 1e-6,
-    max_rounds: int = 150,
-) -> dict | None:
-    """Maintain a CONVERGED PageRank snapshot alongside the incremental
-    graph state: ``ranks_dir/epoch=N/ranks`` (+ metrics.json +
-    _COMPLETE) mirrors the newest complete epoch of
-    ``run_incremental_graph``'s state.  Each refresh WARM-STARTS from
-    the newest published rank snapshot (graph/algo.pagerank
-    ``init=``) — the incremental-analytics path: on slowly-mixing
-    graphs the near-fixpoint start cuts rounds-to-converge (pinned by
-    test_graph_algo; measured honestly in BENCH/CONVERGENCE.md — zero
-    savings on the near-clique corpus, real savings on chains), and on
-    any graph it never costs an extra round.
-
-    Idempotent + crash-safe under the shared epoch discipline: returns
-    None when ranks for the latest graph epoch are already published
-    ("already fresh" is cron success); the snapshot lands in
-    ``epoch=N.tmp`` with _COMPLETE written inside and ONE atomic rename
-    publishes it.  Rank epochs older than the newest are deleted after
-    publication — ranks are DERIVED state, re-derivable from the graph
-    epoch, so single-snapshot retention suffices (the warm-start source
-    is always the newest snapshot anyway).  Same concurrency rule as
-    compact_epochs: run between triggers, never concurrently with the
-    graph upsert writing the epoch being read."""
-    import json as _json
-    import os
-    import shutil
-
-    from .graph.algo import pagerank
-
-    latest = latest_complete_epoch(graph_state_dir)
-    if latest is None:
-        return None
-    final = os.path.join(ranks_dir, f"epoch={latest}")
-    if os.path.exists(os.path.join(final, "_COMPLETE")):
-        return None
-    # tmp dirs are named OUTSIDE the epoch= namespace: a crash between
-    # writing _COMPLETE inside the tmp and the publishing rename must
-    # not leave debris that latest_complete_epoch would try (and fail)
-    # to parse as an epoch number on every later run
-    if os.path.isdir(ranks_dir):
-        for name in os.listdir(ranks_dir):
-            if name.startswith("_tmp_epoch_"):
-                shutil.rmtree(os.path.join(ranks_dir, name))
-    prev_n = (
-        latest_complete_epoch(ranks_dir) if os.path.isdir(ranks_dir) else None
-    )
-    init = (
-        spark.read.parquet(os.path.join(ranks_dir, f"epoch={prev_n}", "ranks"))
-        if prev_n is not None
-        else None
-    )
-    edges = spark.read.parquet(
-        os.path.join(graph_state_dir, f"epoch={latest}", "edges")
-    )
-    de = edges.select("src", "dst").distinct()
-    stats: dict = {}
-    pr = pagerank(
-        de, rounds=None, tol=tol, max_rounds=max_rounds, stats=stats, init=init
-    )
-    os.makedirs(ranks_dir, exist_ok=True)
-    tmp = os.path.join(ranks_dir, f"_tmp_epoch_{latest}")
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # debris from a crashed attempt
-    pr.write.parquet(os.path.join(tmp, "ranks"))
-    metrics = {
-        "epoch": latest,
-        "rounds": stats["rounds"],
-        "last_delta": stats["last_delta"],
-        "warm_from": prev_n,
-        "n_vertices": spark.read.parquet(os.path.join(tmp, "ranks")).count(),
-    }
-    with open(os.path.join(tmp, "metrics.json"), "w") as f:
-        _json.dump(metrics, f)
-    open(os.path.join(tmp, "_COMPLETE"), "w").close()
-    os.rename(tmp, final)
-    for name in os.listdir(ranks_dir):
-        if name.startswith("epoch=") and not name.endswith(".tmp"):
-            n = int(name.split("=", 1)[1])
-            if n < latest:
-                shutil.rmtree(os.path.join(ranks_dir, name))
-    return metrics

@@ -1,213 +1,14 @@
-"""Epoch-state compaction (kgforge/streaming.compact_epochs) — r5
-VERDICT #2: fold accumulated epoch deltas into one keyed snapshot so
-per-batch read amplification stays bounded as epoch count grows.
-
-Pinned properties:
-- a MANY-epoch run (20 micro-batches, exercising the numeric epoch-dir
-  ordering past epoch=9) compacts to one snapshot whose pairs AND state
-  are identical to the pre-compaction union, with epoch-dir count
-  bounded afterwards;
-- the stream RESUMES correctly on top of a compacted snapshot (later
-  epochs read compacted ∪ deltas), and a second compaction folds the
-  snapshot with the new deltas;
-- rebuild_pairs=True reconciles the documented strict-superset caveat:
-  pairs emitted before a bucket saturated across epochs are suppressed,
-  matching the from-scratch run; rebuild_pairs=False preserves history;
-- crash debris (stale epoch dirs <= through, *.tmp dirs) is ignored by
-  the read rule;
-- prune_graph_epochs drops all but the newest snapshots of the
-  full-snapshot graph state.
+"""Retention for the incremental graph state
+(kgforge/streaming.prune_graph_epochs): graph epochs are full
+snapshots, so all but the newest completed epochs are dropped and an
+incomplete epoch is never touched.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
-from kgforge.dedup import build_state, dedup_minhash_incremental
-from kgforge.streaming import (
-    compact_epochs,
-    dedup_state_layout,
-    prune_graph_epochs,
-    read_dedup_pairs,
-    run_incremental_dedup,
-)
-from tests.test_dedup_incremental import _corpus, _pairs_set
-
-
-def _write_files(rows, inp, per_batch, start_batch=0):
-    os.makedirs(inp, exist_ok=True)
-    n_batches = (len(rows) + per_batch - 1) // per_batch
-    for b in range(n_batches):
-        with open(os.path.join(inp, f"b{start_batch + b:03d}.json"), "w") as f:
-            for doc_id, text in rows[b * per_batch:(b + 1) * per_batch]:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-
-def test_twenty_epoch_compaction_bounds_dirs_and_preserves_state(
-    spark, tmp_path
-):
-    docs = _corpus(spark, n=100)
-    rows = sorted(((r.doc_id, r.text) for r in docs.collect()))
-    inp, state, ckpt = tmp_path / "in", tmp_path / "state", tmp_path / "ckpt"
-    _write_files(rows[:80], str(inp), per_batch=5)  # 16 epochs
-    run_incremental_dedup(spark, str(inp), str(state), str(ckpt))
-
-    layout = dedup_state_layout(str(state))
-    assert len(layout) == 16
-    # numeric order past epoch=9 (the r5 ADVICE lexicographic bug zone)
-    nums = [int(d.rsplit("=", 1)[1]) for d in layout]
-    assert nums == sorted(nums) and nums[-1] == 15
-    before = _pairs_set(read_dedup_pairs(spark, str(state)))
-    sig_before = {
-        tuple(r)
-        for r in spark.read.parquet(
-            *[os.path.join(d, "sig") for d in layout]
-        ).collect()
-    }
-
-    m = compact_epochs(spark, str(state))
-    assert m["through_epoch"] == 15 and m["n_sources_folded"] == 16
-    assert m["n_state_docs"] == 80 and not m["rebuilt_pairs"]
-    layout2 = dedup_state_layout(str(state))
-    assert len(layout2) == 1 and layout2[0].endswith("compacted=15")
-    # epoch-dir count is bounded: the folded deltas are gone
-    assert not [d for d in os.listdir(state) if d.startswith("epoch=")]
-    assert _pairs_set(read_dedup_pairs(spark, str(state))) == before
-    sig_after = {
-        tuple(r)
-        for r in spark.read.parquet(
-            os.path.join(layout2[0], "sig")
-        ).collect()
-    }
-    assert sig_after == sig_before
-
-    # idempotent: an identical re-run is a no-op
-    assert compact_epochs(spark, str(state)) is None
-
-    # the stream RESUMES on the snapshot: 4 more micro-batches join
-    # against compacted ∪ new deltas and lineage counts stay monotone
-    _write_files(rows[80:], str(inp), per_batch=5, start_batch=16)
-    run_incremental_dedup(spark, str(inp), str(state), str(ckpt))
-    layout3 = dedup_state_layout(str(state))
-    assert len(layout3) == 5  # snapshot + 4 new deltas
-    last_metrics = json.load(open(os.path.join(layout3[-1], "metrics.json")))
-    assert last_metrics["n_state_docs"] == 100
-
-    one_shot, _ = dedup_minhash_incremental(docs, None)
-    assert _pairs_set(read_dedup_pairs(spark, str(state))) == _pairs_set(
-        one_shot
-    )
-
-    # second compaction folds snapshot + deltas into one newer snapshot
-    m2 = compact_epochs(spark, str(state))
-    assert m2["n_sources_folded"] == 5 and m2["n_state_docs"] == 100
-    assert len(dedup_state_layout(str(state))) == 1
-    assert _pairs_set(read_dedup_pairs(spark, str(state))) == _pairs_set(
-        one_shot
-    )
-
-
-def _write_epoch(spark, state_dir, epoch, docs, state, max_bucket):
-    """One manual epoch dir in run_incremental_dedup's exact layout."""
-    pairs, new_state = dedup_minhash_incremental(
-        docs, state, max_bucket=max_bucket
-    )
-    edir = os.path.join(state_dir, f"epoch={epoch}")
-    pairs.write.parquet(os.path.join(edir, "pairs"))
-    new_state["delta_sig"].write.parquet(os.path.join(edir, "sig"))
-    new_state["delta_shingle"].write.parquet(os.path.join(edir, "shingle"))
-    n = new_state["delta_sig"].count()
-    prev = 0 if state is None else state["sig"].count()
-    with open(os.path.join(edir, "metrics.json"), "w") as f:
-        json.dump({"epoch": epoch, "n_state_docs": prev + n}, f)
-    open(os.path.join(edir, "_COMPLETE"), "w").close()
-    return new_state
-
-
-def test_rebuild_pairs_reconciles_saturated_bucket(spark, tmp_path):
-    """Epoch 0 pairs densely inside a bucket; epoch 1 pushes the same
-    bucket past max_bucket.  The epoch union keeps epoch 0's pairs (a
-    strict superset of from-scratch); compact_epochs(rebuild_pairs=True)
-    suppresses the now-hot bucket exactly as a rebuild would."""
-    text = "a b c d e f g h"
-    state_dir = str(tmp_path / "state")
-    cap = 15
-    e0 = spark.createDataFrame(
-        [(i, text) for i in range(10)], "doc_id bigint, text string"
-    )
-    e1 = spark.createDataFrame(
-        [(100 + i, text) for i in range(10)], "doc_id bigint, text string"
-    )
-    st = _write_epoch(spark, state_dir, 0, e0, None, cap)
-    _write_epoch(spark, state_dir, 1, e1, st, cap)
-
-    union_pairs = _pairs_set(read_dedup_pairs(spark, state_dir))
-    assert len(union_pairs) == 10 * 9 // 2  # epoch 0's dense clique
-
-    # history-preserving compaction keeps the superset
-    m = compact_epochs(spark, state_dir, max_bucket=cap)
-    assert _pairs_set(read_dedup_pairs(spark, state_dir)) == union_pairs
-    assert m["n_pairs"] == len(union_pairs)
-
-    # reconciling compaction == from-scratch over the accumulated corpus
-    # (bucket now 20 > cap -> every pair suppressed); rebuild on an
-    # identical fresh two-epoch layout
-    state_dir2 = str(tmp_path / "state2")
-    st = _write_epoch(spark, state_dir2, 0, e0, None, cap)
-    _write_epoch(spark, state_dir2, 1, e1, st, cap)
-    m2 = compact_epochs(
-        spark, state_dir2, rebuild_pairs=True, max_bucket=cap
-    )
-    assert m2["rebuilt_pairs"] and m2["n_pairs"] == 0
-    assert read_dedup_pairs(spark, state_dir2).count() == 0
-
-    # from-scratch ground truth agrees
-    one_shot, _ = dedup_minhash_incremental(
-        e0.unionByName(e1), None, max_bucket=cap
-    )
-    assert one_shot.count() == 0
-
-
-def test_layout_ignores_crash_debris(spark, tmp_path):
-    docs = _corpus(spark, n=30)
-    state_dir = str(tmp_path / "state")
-    st = _write_epoch(spark, state_dir, 0, docs.filter("doc_id < 15"), None, 64)
-    _write_epoch(spark, state_dir, 1, docs.filter("doc_id >= 15"), st, 64)
-    before = _pairs_set(read_dedup_pairs(spark, state_dir))
-    compact_epochs(spark, state_dir)
-
-    # simulate a crash between rename and cleanup: a stale folded epoch
-    # resurfaces, plus an abandoned .tmp dir
-    stale = os.path.join(state_dir, "epoch=1")
-    os.makedirs(stale)
-    open(os.path.join(stale, "_COMPLETE"), "w").close()
-    os.makedirs(os.path.join(state_dir, "compacted=9.tmp"))
-
-    layout = dedup_state_layout(state_dir)
-    assert len(layout) == 1 and layout[0].endswith("compacted=1")
-    assert _pairs_set(read_dedup_pairs(spark, state_dir)) == before
-
-
-def test_auto_compaction_bounds_layout_during_streaming(spark, tmp_path):
-    """run_incremental_dedup(compact_every=4): the stream folds its own
-    state whenever the layout exceeds 4 sources, so the epoch-dir count
-    stays bounded for the life of the job — and the accumulated pairs
-    still equal the one-shot run."""
-    docs = _corpus(spark, n=45)
-    rows = sorted(((r.doc_id, r.text) for r in docs.collect()))
-    inp, state, ckpt = tmp_path / "in", tmp_path / "state", tmp_path / "ckpt"
-    _write_files(rows, str(inp), per_batch=5)  # 9 epochs
-    run_incremental_dedup(
-        spark, str(inp), str(state), str(ckpt), compact_every=4
-    )
-    layout = dedup_state_layout(str(state))
-    assert len(layout) <= 4 + 1
-    assert any("compacted=" in d for d in layout)
-    one_shot, _ = dedup_minhash_incremental(docs, None)
-    assert _pairs_set(read_dedup_pairs(spark, str(state))) == _pairs_set(
-        one_shot
-    )
+from kgforge.streaming import prune_graph_epochs
 
 
 def test_prune_graph_epochs(tmp_path):

@@ -1,14 +1,10 @@
-"""jobs/maintain_job.py end-to-end in-process: dedup-state compaction
-plus graph-snapshot retention behind one cron-able CLI, with the JSON
-summary a fleet scheduler would alert on."""
+"""jobs/maintain_job.py end-to-end in-process: graph-snapshot retention
+behind one cron-able CLI, with the JSON summary a fleet scheduler would
+alert on."""
 
 import json
 import os
 import sys
-
-from kgforge.streaming import dedup_state_layout, read_dedup_pairs
-from tests.test_compaction import _write_files
-from tests.test_dedup_incremental import _corpus, _pairs_set
 
 
 def _graph_state(tmp_path, epochs):
@@ -20,130 +16,40 @@ def _graph_state(tmp_path, epochs):
     return state
 
 
-def test_maintain_job_compacts_and_prunes(spark, tmp_path, capsys, monkeypatch):
+def test_maintain_job_compacts_and_prunes(tmp_path, capsys, monkeypatch):
     from jobs.maintain_job import main
-    from kgforge.streaming import run_incremental_dedup
 
-    docs = _corpus(spark, n=40)
-    rows = sorted(((r.doc_id, r.text) for r in docs.collect()))
-    inp, state, ckpt = tmp_path / "in", tmp_path / "state", tmp_path / "ckpt"
-    _write_files(rows, str(inp), per_batch=5)  # 8 epochs
-    run_incremental_dedup(spark, str(inp), str(state), str(ckpt))
-    before = _pairs_set(read_dedup_pairs(spark, str(state)))
     gstate = _graph_state(tmp_path, (0, 1, 2, 9, 10, 11))
 
     monkeypatch.setattr(sys, "argv", [
         "maintain_job.py",
-        "--dedup-state", str(state),
         "--graph-state", str(gstate),
         "--keep-last", "2",
     ])
-    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
+
+    def no_spark(self):
+        raise AssertionError("maintain_job must not start a SparkSession")
+
+    monkeypatch.setattr("pyspark.sql.SparkSession.Builder.getOrCreate", no_spark)
     main()
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
-    assert summary["dedup"]["compacted"] is True
-    assert summary["dedup"]["sources_before"] == 8
-    assert summary["dedup"]["sources_after"] == 1
-    assert summary["dedup"]["through_epoch"] == 7
-    layout = dedup_state_layout(str(state))
-    assert len(layout) == 1 and layout[0].endswith("compacted=7")
-    # the fold is state-preserving: same pair union through the CLI path
-    assert _pairs_set(read_dedup_pairs(spark, str(state))) == before
 
     assert summary["graph"]["pruned_epochs"] == [0, 1, 2, 9]
     assert sorted(os.listdir(gstate)) == ["epoch=10", "epoch=11"]
 
 
-def test_maintain_job_idempotent_noop(spark, tmp_path, capsys, monkeypatch):
-    """Second run over already-compact state: success (exit 0 path) with
-    compacted=False — 'already compact' must not fail a cron job."""
+def test_maintain_job_idempotent_noop(tmp_path, capsys, monkeypatch):
+    """Second run over already-pruned state: success (exit 0 path) with
+    nothing pruned — 'already compact' must not fail a cron job."""
     from jobs.maintain_job import main
-    from kgforge.streaming import run_incremental_dedup
 
-    docs = _corpus(spark, n=10)
-    rows = sorted(((r.doc_id, r.text) for r in docs.collect()))
-    inp, state, ckpt = tmp_path / "in", tmp_path / "state", tmp_path / "ckpt"
-    _write_files(rows, str(inp), per_batch=5)  # 2 epochs
-    run_incremental_dedup(spark, str(inp), str(state), str(ckpt))
+    gstate = _graph_state(tmp_path, (0, 1, 2))
 
-    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    for want_compacted in (True, False):
-        monkeypatch.setattr(
-            sys, "argv", ["maintain_job.py", "--dedup-state", str(state)]
-        )
+    monkeypatch.setattr(
+        sys, "argv", ["maintain_job.py", "--graph-state", str(gstate)]
+    )
+    for want_pruned in ([0], []):
         main()
         summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert summary["dedup"]["compacted"] is want_compacted
-        assert summary["dedup"]["sources_after"] == 1
-
-
-def test_maintain_job_cms_fold(spark, tmp_path, capsys, monkeypatch):
-    """--cms-state folds cell deltas to one constant-size snapshot with
-    the merged sketch unchanged."""
-    from jobs.maintain_job import main
-    from kgforge.streaming import read_cms_cells, run_incremental_cms
-
-    docs = [(i, f"tok{i % 5} tok{i % 3} common") for i in range(20)]
-    inp, state, ckpt = tmp_path / "cin", tmp_path / "cstate", tmp_path / "cckpt"
-    os.makedirs(inp)
-    for b in range(4):
-        with open(inp / f"b{b}.json", "w") as f:
-            for doc_id, text in docs[b * 5 : (b + 1) * 5]:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-    run_incremental_cms(spark, str(inp), str(state), str(ckpt))
-    before = {
-        (r.j, r.bucket): r.cell_n
-        for r in read_cms_cells(spark, str(state)).collect()
-    }
-    monkeypatch.setattr(sys, "argv", ["maintain_job.py", "--cms-state", str(state)])
-    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    main()
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["cms"]["compacted"] is True
-    assert summary["cms"]["sources_before"] == 4
-    assert summary["cms"]["sources_after"] == 1
-    layout = dedup_state_layout(str(state))
-    assert len(layout) == 1 and layout[0].endswith("compacted=3")
-    after = {
-        (r.j, r.bucket): r.cell_n
-        for r in read_cms_cells(spark, str(state)).collect()
-    }
-    assert after == before
-
-
-def test_maintain_job_line_fold(spark, tmp_path, capsys, monkeypatch):
-    """--line-state folds line doc-frequency deltas to one dim with the
-    merged counts unchanged."""
-    from jobs.maintain_job import main
-    from kgforge.streaming import read_line_counts, run_incremental_linedup
-
-    boiler = " ".join(f"b{i}" for i in range(10))
-    docs = [
-        (i, boiler + " " + " ".join(f"u{i}x{j}" for j in range(10)))
-        for i in range(20)
-    ]
-    inp, state, ckpt = tmp_path / "lin", tmp_path / "lstate", tmp_path / "lckpt"
-    os.makedirs(inp)
-    for b in range(4):
-        with open(inp / f"b{b}.json", "w") as f:
-            for doc_id, text in docs[b * 5 : (b + 1) * 5]:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-    run_incremental_linedup(spark, str(inp), str(state), str(ckpt))
-    before = {
-        r.k: r.n_docs for r in read_line_counts(spark, str(state)).collect()
-    }
-    monkeypatch.setattr(
-        sys, "argv", ["maintain_job.py", "--line-state", str(state)]
-    )
-    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
-    main()
-    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["lines"]["compacted"] is True
-    assert summary["lines"]["sources_before"] == 4
-    assert summary["lines"]["sources_after"] == 1
-    after = {
-        r.k: r.n_docs for r in read_line_counts(spark, str(state)).collect()
-    }
-    assert after == before
-    assert max(after.values()) == 20  # the boilerplate line's df
+        assert summary["graph"]["pruned_epochs"] == want_pruned
+    assert sorted(os.listdir(gstate)) == ["epoch=1", "epoch=2"]

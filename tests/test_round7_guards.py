@@ -38,32 +38,6 @@ def test_pagerank_all_nonpositive_weights_is_noop(spark):
     assert pagerank(de, rounds=2).count() == 0
 
 
-def test_refresh_pagerank_state_empty_epoch(spark, tmp_path):
-    """A legitimately empty graph epoch must publish an empty snapshot
-    (cron no-op), not crash the maintenance job."""
-    import json
-    import os
-
-    from kgforge.streaming import refresh_pagerank_state
-
-    gstate = tmp_path / "graph"
-    edir = gstate / "epoch=0"
-    edir.mkdir(parents=True)
-    spark.createDataFrame([], "src long, dst long").write.parquet(
-        str(edir / "edges")
-    )
-    (edir / "_COMPLETE").touch()
-    m = refresh_pagerank_state(spark, str(gstate), str(tmp_path / "ranks"))
-    assert m is not None and m["rounds"] == 0 and m["n_vertices"] == 0
-    # idempotent: already fresh
-    assert refresh_pagerank_state(
-        spark, str(gstate), str(tmp_path / "ranks")
-    ) is None
-    with open(tmp_path / "ranks" / "epoch=0" / "metrics.json") as f:
-        assert json.load(f)["epoch"] == 0
-    assert os.path.exists(tmp_path / "ranks" / "epoch=0" / "_COMPLETE")
-
-
 def test_bigram_perplexity_empty_slice_raises(spark):
     from kgforge.functions.quality import bigram_perplexity
 

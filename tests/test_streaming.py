@@ -98,43 +98,6 @@ def test_windowed_triple_counts_watermark(spark, tmp_path):
     assert all(ws.startswith("2026-01-01T00:") for ws, _ in got)
 
 
-def test_streaming_first_seen_dedup(spark, tmp_path):
-    """Cross-micro-batch exact dedup: a key emits exactly once across ALL
-    batches (state persists in the checkpoint between availableNow runs)."""
-    from kgforge.streaming import streaming_first_seen
-
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    _write_json_files(
-        [{"content_sha": f"sha{i % 7}"} for i in range(30)], inp, per_file=5
-    )
-
-    def drain():
-        stream = (
-            spark.readStream.schema("content_sha string")
-            .option("maxFilesPerTrigger", 1)
-            .format("json").load(str(inp))
-        )
-        q = (
-            streaming_first_seen(stream).writeStream.format("parquet")
-            .option("path", str(out)).outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-    drain()
-    got = [r.content_sha for r in spark.read.parquet(str(out)).collect()]
-    assert sorted(got) == sorted({f"sha{i}" for i in range(7)})
-
-    # late re-arrivals of the same keys: suppressed by the persisted state
-    _write_json_files(
-        [{"content_sha": f"sha{i % 7}"} for i in range(7)], inp, prefix="late"
-    )
-    drain()
-    got2 = [r.content_sha for r in spark.read.parquet(str(out)).collect()]
-    assert sorted(got2) == sorted(got)
-
-
 def test_incremental_graph_stream_equals_batch(spark, tmp_path):
     """Streamed per-micro-batch graph maintenance (dim evolution + merge)
     converges to the one-shot materialization of the full corpus, and a
@@ -215,110 +178,57 @@ def test_incremental_graph_survives_stale_latest(spark, tmp_path):
     )
 
 
-def test_streaming_first_seen_ttl_bounded_state(spark, tmp_path):
-    """Bounded-horizon dedup (ttl_ms, event-time): once the watermark
-    passes an idle key's last event time + TTL the key is evicted with a
-    first_seen=false marker (the evicted-key counter - no silent state
-    loss), and a later re-arrival re-emits first_seen=true, proving the
-    state was actually freed.  Fully deterministic: driven by event
-    times, no wall-clock sleeps."""
-    import json
+def test_incremental_graph_replays_epoch_without_complete(spark, tmp_path):
+    """A crash between an epoch's data and its _COMPLETE marker (so also
+    before the stream committed that batch): the partial epoch is never
+    read as state, and the restarted stream replays the same batch,
+    which rebuilds the epoch from the last complete one — the final
+    graph still equals the one-shot materialization."""
+    import os
 
-    from kgforge.streaming import streaming_first_seen
+    from kgforge.graph.materialize import materialize_graph
+    from kgforge.streaming import (
+        latest_complete_epoch,
+        read_graph_state,
+        run_incremental_graph,
+    )
 
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    inp.mkdir()
+    rows = gen_repo_rows(50)
+    inp = tmp_path / "in"
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    _write_json_files(rows, inp, per_file=25)  # 2 files -> 2 micro-batches
+    run_incremental_graph(spark, str(inp), state, ckpt)
+    last = latest_complete_epoch(state)
+    assert last == 1
 
-    def write(rows, name):
-        with open(inp / f"{name}.json", "w") as f:
-            for sha, ts in rows:
-                f.write(json.dumps({"content_sha": sha, "event_time": ts}) + "\n")
+    # simulate the crash window: epoch=1's data is on disk, but neither
+    # its _COMPLETE marker nor the stream's commit for batch 1 is
+    os.remove(os.path.join(state, f"epoch={last}", "_COMPLETE"))
+    os.remove(os.path.join(ckpt, "commits", str(last)))
+    crc = os.path.join(ckpt, "commits", f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert latest_complete_epoch(state) == last - 1
+    assert os.path.isdir(os.path.join(state, f"epoch={last}", "nodes"))
 
-    def drain():
-        stream = (
-            spark.readStream.schema("content_sha string, event_time timestamp")
-            .format("json").load(str(inp))
-        )
-        q = (
-            streaming_first_seen(stream, ttl_ms=60_000)
-            .writeStream.format("parquet")
-            .option("path", str(out)).outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+    run_incremental_graph(spark, str(inp), state, ckpt)
+    assert latest_complete_epoch(state) == last  # replayed, not a new epoch
+    assert not os.path.exists(os.path.join(state, f"epoch={last + 1}"))
 
-    write([("A", "2026-01-01T00:00:00"), ("B", "2026-01-01T00:00:00")], "b0")
-    drain()
-    got = {(r.content_sha, r.first_seen) for r in spark.read.parquet(str(out)).collect()}
-    assert got == {("A", True), ("B", True)}
-
-    # event time jumps past A's deadline (00:01:00); B re-arrives in the
-    # same batch (data is processed before timeouts -> timer refreshed,
-    # suppressed, NOT evicted), C is new
-    write([("B", "2026-01-01T00:10:00"), ("C", "2026-01-01T00:10:00")], "b1")
-    drain()
-    got = {(r.content_sha, r.first_seen) for r in spark.read.parquet(str(out)).collect()}
-    assert got == {("A", True), ("B", True), ("C", True), ("A", False)}
-    evicted = [r for r in spark.read.parquet(str(out)).collect() if not r.first_seen]
-    assert len(evicted) == 1  # exactly one eviction, attributable to A
-
-    # A re-arrives after eviction: state really was freed -> True again
-    write([("A", "2026-01-01T00:11:00")], "b2")
-    drain()
-    rows = spark.read.parquet(str(out)).collect()
-    a_true = [r for r in rows if r.content_sha == "A" and r.first_seen]
-    assert len(a_true) == 2
-
-
-def test_streaming_first_seen_ttl_dst_ambiguous_time(spark, tmp_path):
-    """DST regression: with a daylight-saving session timezone, an event
-    whose timestamp falls in the ambiguous fall-back hour (America/
-    New_York, 2026-11-01 01:30 occurs twice) must not crash the state
-    function — bare tz_localize raises AmbiguousTimeError there.  The
-    stream must drain and still dedup/evict correctly."""
-    import json
-
-    from kgforge.streaming import streaming_first_seen
-
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    inp.mkdir()
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        def write(rows, name):
-            with open(inp / f"{name}.json", "w") as f:
-                for sha, ts in rows:
-                    f.write(json.dumps(
-                        {"content_sha": sha, "event_time": ts}) + "\n")
-
-        def drain():
-            stream = (
-                spark.readStream
-                .schema("content_sha string, event_time timestamp")
-                .format("json").load(str(inp))
-            )
-            q = (
-                streaming_first_seen(stream, ttl_ms=60_000)
-                .writeStream.format("parquet")
-                .option("path", str(out)).outputMode("append")
-                .option("checkpointLocation", str(ckpt))
-                .trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-
-        # A lands in the ambiguous repeated hour; duplicate A suppressed
-        write([("A", "2026-11-01T01:30:00"), ("A", "2026-11-01T01:30:00")],
-              "b0")
-        drain()
-        # watermark jumps far past A's deadline -> eviction marker
-        write([("B", "2026-11-01T12:00:00")], "b1")
-        drain()
-        got = {(r.content_sha, r.first_seen)
-               for r in spark.read.parquet(str(out)).collect()}
-        assert got == {("A", True), ("B", True), ("A", False)}
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    nodes_s, edges_s, _ = read_graph_state(spark, state)
+    full = extract_pipeline(spark.createDataFrame(rows), "fused")
+    nodes_f, edges_f = materialize_graph(full)
+    key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
+    assert sorted(map(key_e, edges_s.collect())) == sorted(
+        map(key_e, edges_f.collect())
+    )
+    key_n = lambda r: (  # noqa: E731
+        r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count
+    )
+    assert sorted(map(key_n, nodes_s.collect())) == sorted(
+        map(key_n, nodes_f.collect())
+    )
 
 
 def test_streaming_sessionize_matches_batch_semantics(spark, tmp_path):
@@ -446,51 +356,3 @@ def test_streaming_sessionize_exact_gap_boundary(spark, tmp_path):
         for r in QUERIES["q_sessionize"](spark, str(tdir)).collect()
     }
     assert rows == {(1, 1, 2), (1, 2, 1)}
-
-
-def test_streaming_first_seen_ttl_non_utc_session(spark, tmp_path):
-    """TTL eviction must be timezone-safe: with a non-UTC session
-    timezone (Tokyo, +9h, no DST) the naive pandas timestamps the state
-    fn receives are session-local; treating them as UTC would push every
-    deadline 9h into the future and silently disable eviction.  Same
-    event script as the UTC test — same evictions expected."""
-    import json
-
-    from kgforge.streaming import streaming_first_seen
-
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    inp.mkdir()
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-    try:
-        def write(rows, name):
-            with open(inp / f"{name}.json", "w") as f:
-                for sha, ts in rows:
-                    f.write(json.dumps(
-                        {"content_sha": sha, "event_time": ts}) + "\n")
-
-        def drain():
-            stream = (
-                spark.readStream
-                .schema("content_sha string, event_time timestamp")
-                .format("json").load(str(inp))
-            )
-            q = (
-                streaming_first_seen(stream, ttl_ms=60_000)
-                .writeStream.format("parquet")
-                .option("path", str(out)).outputMode("append")
-                .option("checkpointLocation", str(ckpt))
-                .trigger(availableNow=True).start()
-            )
-            q.awaitTermination()
-
-        write([("A", "2026-01-01T00:00:00")], "b0")
-        drain()
-        # watermark jumps 10 min past A's 1-min deadline -> A evicted
-        write([("C", "2026-01-01T00:10:00")], "b1")
-        drain()
-        got = {(r.content_sha, r.first_seen)
-               for r in spark.read.parquet(str(out)).collect()}
-        assert got == {("A", True), ("C", True), ("A", False)}
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
