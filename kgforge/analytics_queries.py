@@ -2,85 +2,20 @@
 ``QUERIES``/``ORACLES`` registry as kgforge/queries.py (which imports this
 module at its end).
 
-Relational (TPC-H Q1, per-group top-k, sessionization, KMV distincts),
-document dedup (MinHash signatures, fingerprints, winnowing), embedding
-search (cosine top-k, IVF), KG consumption (two-hop, PageRank) and
-training-data curation (quality gate, repetition, decontamination,
-funnel, length curriculum).  Each keeps its DuckDB oracle and the tests
-that pin it; the KG-construction layers never call into this module.
+Relational (TPC-H Q1, per-group top-k, sessionization, KMV distincts,
+length curriculum), embedding search (cosine top-k, IVF) and KG
+consumption (two-hop, PageRank).  Each keeps its DuckDB oracle and the
+tests that pin it; the KG-construction layers never call into this
+module.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.hashing import (
-    MINHASH_AB,
-    MOD,
-    charfold,
-    minhash_from_arrays,
-    shingle_arrays,
-    shingles_of,
-    sql_charfold,
-)
-from .functions.quality import DUP_TRIGRAM_MAX, MAX_RUN_MAX, TOP_BIGRAM_MAX
-from .queries import SQL_TOK, SQL_TRIPLES, _docs, _t, kg_edges, register
-
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pos, tok) — whitespace tokens with 0-based positions."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("p", "tok")
-    ).select("doc_id", F.col("p").cast("bigint").alias("pos"), "tok")
-
-
-def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh) — distinct 3-token shingles per document (shared
-    implementation: functions/hashing.shingles_of)."""
-    return shingles_of(_docs(spark, sf_dir))
-
-
-def _sharr_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh_arr) — the un-exploded shingle table:
-    ``explode(sh_arr)`` is exactly ``_shingles_df``.  Per-document
-    consumers (signatures, counts, simhash, pairwise verify) fold the
-    array row-locally instead of paying an explode + groupBy shuffle."""
-    return shingle_arrays(_docs(spark, sf_dir))
-
-
-SQL_SHINGLES = f"""
-{SQL_TOK},
-sh3 AS (
-  SELECT t1.doc_id, t1.tok || ' ' || t2.tok || ' ' || t3.tok AS sh
-  FROM tok t1
-  JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-  JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-),
-shingle AS (SELECT DISTINCT doc_id, sh FROM sh3)
-"""
-
-
-def _minhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared implementation: functions/hashing.minhash_from_arrays (a
-    per-document fold — no explode + groupBy shuffle); the n_sh count it
-    carries (for the incremental dedup state) is dropped here so the
-    query-layer signature schema stays (doc_id, s0..s3)."""
-    return minhash_from_arrays(_sharr_df(spark, sf_dir)).drop("n_sh")
-
-
-def _sql_minhash() -> str:
-    mins = ", ".join(
-        f"MIN((CAST({a} AS BIGINT) * h + {b}) % {MOD}) AS s{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    return f"""
-WITH {SQL_SHINGLES},
-hashed AS (SELECT doc_id, {sql_charfold('sh')} AS h FROM shingle),
-sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
-"""
+from .functions.hashing import MOD, charfold, sql_charfold
+from .queries import SQL_TRIPLES, _docs, _t, kg_edges, register
 
 
 @register(
@@ -254,165 +189,6 @@ def q_distinct_kmv(spark, sf_dir):
     )
 
 
-@register("dedup_minhash_sig", _sql_minhash() + "SELECT * FROM sig")
-def dedup_minhash_sig(spark, sf_dir):
-    """MinHash signatures (4 universal hashes over charfold'd shingles) —
-    all JVM-side expressions (link/canonical.py at document scale)."""
-    return _minhash_df(spark, sf_dir)
-
-
-# Shingle document-frequency cap: shingles in more than NGRAM_DF_CAP
-# documents are dropped before any shingle join (boilerplate and the
-# hot-key hazard).  Read at import, so the Spark plans and the oracle SQL
-# always bake in the same value.
-NGRAM_DF_CAP = int(os.environ.get("SPARK_GRAFT_NGRAM_DF_CAP", "1000"))
-
-
-_SQL_SHINGLES_CAPPED = f"""
-hot AS (SELECT sh FROM shingle GROUP BY sh HAVING COUNT(*) > {NGRAM_DF_CAP}),
-kept AS (SELECT s.* FROM shingle s ANTI JOIN hot h ON s.sh = h.sh)
-"""
-
-
-@register(
-    "doc_winnowing",
-    f"""
-    WITH tokarr AS (SELECT doc_id, string_split(text, ' ') AS arr
-                    FROM documents WHERE len(string_split(text, ' ')) >= 6),
-    kg AS (
-      SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-             {sql_charfold("arr[i.i] || ' ' || arr[i.i + 1] || ' ' || arr[i.i + 2]")} AS h
-      FROM tokarr, (SELECT unnest(generate_series(1, len(arr) - 2)) AS i) i),
-    win AS (
-      SELECT doc_id, pos,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             COUNT(*) OVER (PARTITION BY doc_id) AS nk
-      FROM kg)
-    SELECT DISTINCT doc_id, CAST(mh AS BIGINT) AS fp
-    FROM win WHERE pos <= nk - 3
-    """,
-)
-def doc_winnowing(spark, sf_dir):
-    """WINNOWING document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm — the classic source-code near-dup/plagiarism
-    fingerprint, exactly the corpus this pipeline reads): hash every
-    3-token k-gram, slide a window of w=4 consecutive k-grams, keep each
-    window's MINIMUM hash; distinct selected hashes are the document's
-    fingerprints.  Guarantees: any shared token run of length >= k+w-1
-    (6) produces at least one shared fingerprint, and density is ~2/(w+1)
-    of the k-grams — a tunable sketch between full-shingle Jaccard
-    (exact, large) and MinHash (fixed-size, probabilistic).  All
-    row-local expressions: k-gram hashing and window minima fold inside
-    one projection over the token array (no shuffle until the final
-    distinct); docs shorter than k+w-1 have no full window and are
-    excluded on both engines."""
-    d = _docs(spark, sf_dir).select("doc_id", F.split("text", " ").alias("toks"))
-    d = d.filter(F.size("toks") >= 6)
-    toks = F.col("toks")
-    kh = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 2),
-        lambda i: charfold(
-            F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            )
-        ),
-    )
-    d = d.select("doc_id", kh.alias("kh"))
-    wins = F.transform(
-        F.sequence(F.lit(1), F.size("kh") - 3),
-        lambda s: F.array_min(F.slice(F.col("kh"), s, 4)),
-    )
-    return (
-        d.select("doc_id", F.explode(F.array_distinct(wins)).alias("fp"))
-        .select("doc_id", F.col("fp").cast("bigint").alias("fp"))
-        .distinct()
-    )
-
-
-_SQL_WINNOW_FP = f"""
-    tokarr AS (SELECT doc_id, string_split(text, ' ') AS arr
-               FROM documents WHERE len(string_split(text, ' ')) >= 6),
-    kg AS (
-      SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-             {sql_charfold("arr[i.i] || ' ' || arr[i.i + 1] || ' ' || arr[i.i + 2]")} AS h
-      FROM tokarr, (SELECT unnest(generate_series(1, len(arr) - 2)) AS i) i),
-    win AS (
-      SELECT doc_id, pos,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh,
-             COUNT(*) OVER (PARTITION BY doc_id) AS nk
-      FROM kg),
-    wfp AS (SELECT DISTINCT doc_id, CAST(mh AS BIGINT) AS fp
-            FROM win WHERE pos <= nk - 3)"""
-
-
-@register(
-    "dedup_winnow_pairs",
-    f"""
-    WITH {_SQL_WINNOW_FP},
-    hotfp AS (SELECT fp FROM wfp GROUP BY fp HAVING COUNT(*) > {NGRAM_DF_CAP}),
-    keptfp AS (SELECT w.* FROM wfp w ANTI JOIN hotfp h ON w.fp = h.fp),
-    n AS (SELECT doc_id, COUNT(*) AS n FROM keptfp GROUP BY doc_id),
-    pair AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-      FROM keptfp a JOIN keptfp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT p.doc_a, p.doc_b,
-           ROUND(p.shared / (na.n + nb.n - p.shared + 1e-12), 4) AS jaccard
-    FROM pair p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
-    WHERE p.shared / (na.n + nb.n - p.shared + 1e-12) >= 0.5
-    """,
-)
-def dedup_winnow_pairs(spark, sf_dir):
-    """Near-dup pairs over WINNOWING fingerprints (Jaccard >= 0.5 on the
-    selected-hash sets) — the pairing step that makes doc_winnowing a
-    complete dedup modality, and the cheap one: the inverted index joins
-    ~2/(w+1) of the k-grams instead of all shingles, with the
-    NGRAM_DF_CAP df cap guarding hot fingerprints
-    (a ubiquitous code idiom's minimum hash) from quadratic bucket
-    blowup.  Winnowing's guarantee makes the sketch sound for dedup: any
-    shared run of >= k+w-1 tokens shares at least one fingerprint, so
-    heavily-overlapping documents cannot silently miss the index."""
-    fps = doc_winnowing(spark, sf_dir).localCheckpoint(eager=True)
-    hot = (
-        fps.groupBy("fp").agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP).select("fp")
-    )
-    kept = fps.join(F.broadcast(hot), on="fp", how="left_anti")
-    pair = (
-        kept.alias("a")
-        .join(
-            kept.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    n = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
-    j = (
-        pair.join(
-            n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"),
-            on="doc_a",
-        )
-        .join(
-            n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"),
-            on="doc_b",
-        )
-        .withColumn(
-            "jac",
-            F.col("shared")
-            / (F.col("na") + F.col("nb") - F.col("shared") + F.lit(1e-12)),
-        )
-    )
-    return j.filter(F.col("jac") >= 0.5).select(
-        "doc_a", "doc_b", F.round("jac", 4).alias("jaccard")
-    )
-
-
 # Production cosine paths live in functions/similarity.py (zip_with fold —
 # no per-dimension explode); the SQL oracles keep the per-dimension form
 # because DuckDB has no array fold.
@@ -457,40 +233,6 @@ def ann_cosine_topk(spark, sf_dir):
     from .functions.similarity import cosine_topk
 
     return cosine_topk(_t(spark, sf_dir, "embeddings"), query_vec_id=0, k=10)
-
-
-@register(
-    "doc_fingerprint",
-    f"""
-    WITH {SQL_TOK}
-    SELECT doc_id,
-           CAST(SUM((pos + 1) * ({sql_charfold("tok")} % 1000003)) % {MOD} AS BIGINT)
-             AS fingerprint
-    FROM tok GROUP BY doc_id
-    """,
-)
-def doc_fingerprint(spark, sf_dir):
-    """Order-sensitive document fingerprint (positional rolling hash —
-    integer arithmetic, exact in both engines)."""
-    t = _doc_tokens(spark, sf_dir)
-    return t.groupBy("doc_id").agg(
-        (
-            F.sum((F.col("pos") + 1) * (charfold(F.col("tok")) % F.lit(1000003)))
-            % F.lit(MOD)
-        )
-        .cast("bigint")
-        .alias("fingerprint")
-    )
-
-
-@register(
-    "token_counts",
-    f"WITH {SQL_TOK} SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok GROUP BY tok",
-)
-def token_counts(spark, sf_dir):
-    """Global token frequency (the wordcount primitive under BPE-ish
-    vocabulary building)."""
-    return _doc_tokens(spark, sf_dir).groupBy("tok").agg(F.count("*").alias("cnt"))
 
 
 @register(
@@ -649,45 +391,6 @@ def ann_ivf_recall(spark, sf_dir):
     )
 
 
-@register(
-    "text_quality_filter",
-    f"""
-    WITH f AS (
-      SELECT doc_id,
-             len(string_split(text, ' ')) AS n,
-             len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE) AS sr,
-             list_aggregate(list_transform(string_split(text, ' '),
-                                           t -> CAST(strlen(t) AS DOUBLE)), 'sum')
-               / len(string_split(text, ' ')) AS ml
-      FROM documents)
-    SELECT doc_id,
-           CAST(n AS BIGINT) AS n_tokens,
-           ROUND(sr, 4) AS stop_ratio,
-           ROUND(ml, 4) AS mean_tok_len,
-           CASE WHEN n < 5 THEN 'too_short'
-                WHEN sr > 0.6 THEN 'stopword_heavy'
-                WHEN ml < 2.0 OR ml > 12.0 THEN 'weird_tokens'
-                ELSE 'ok' END AS reason,
-           (CASE WHEN n < 5 THEN 'too_short'
-                WHEN sr > 0.6 THEN 'stopword_heavy'
-                WHEN ml < 2.0 OR ml > 12.0 THEN 'weird_tokens'
-                ELSE 'ok' END) = 'ok' AS keep
-    FROM f
-    """,
-)
-def text_quality_filter(spark, sf_dir):
-    """Training-data quality gate (functions/quality.quality_flags):
-    per-doc keep/drop with the first-failing reason materialized — drops
-    attributable, countable via drop_stats, never silent."""
-    from .functions.quality import quality_flags
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return quality_flags(d).select(
-        "doc_id", "n_tokens", "stop_ratio", "mean_tok_len", "reason", "keep"
-    )
-
-
 _SQL_EDGES = SQL_TRIPLES + """
     , edges AS (
       SELECT md5(subj || ':' || subj_type) AS src,
@@ -786,64 +489,6 @@ def kg_pagerank(spark, sf_dir):
 
 
 @register(
-    "curation_funnel",
-    f"""
-    WITH {SQL_TOK},
-    q AS (
-      SELECT doc_id, lang,
-             len(string_split(text, ' ')) AS n,
-             len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the'))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE) AS sr,
-             list_aggregate(list_transform(string_split(text, ' '),
-                                           t -> CAST(strlen(t) AS DOUBLE)), 'sum')
-               / len(string_split(text, ' ')) AS ml
-      FROM documents),
-    kept AS (
-      SELECT doc_id, lang, CAST(n AS BIGINT) AS n FROM q
-      WHERE NOT (n < 5) AND NOT (sr > 0.6) AND NOT (ml < 2.0 OR ml > 12.0)),
-    fp AS (
-      SELECT doc_id,
-             CAST(SUM((pos + 1) * ({sql_charfold("tok")} % 1000003)) % {MOD} AS BIGINT)
-               AS fingerprint
-      FROM tok GROUP BY doc_id),
-    uniq AS (
-      SELECT k.* FROM (
-        SELECT k.*, ROW_NUMBER() OVER (
-          PARTITION BY fp.fingerprint ORDER BY k.doc_id) AS rn
-        FROM kept k JOIN fp ON k.doc_id = fp.doc_id) k
-      WHERE rn = 1)
-    SELECT q.lang,
-           CAST(COUNT(*) AS BIGINT) AS n_raw,
-           CAST(COUNT(k.doc_id) AS BIGINT) AS n_kept,
-           CAST(COUNT(u.doc_id) AS BIGINT) AS n_unique,
-           CAST(COALESCE(SUM(u.n), 0) AS BIGINT) AS n_tokens_final
-    FROM q
-    LEFT JOIN kept k ON q.doc_id = k.doc_id
-    LEFT JOIN uniq u ON q.doc_id = u.doc_id
-    GROUP BY q.lang
-    """,
-)
-def curation_funnel(spark, sf_dir):
-    """The end-to-end curation FUNNEL per stratum: raw corpus → quality
-    gate → exact dedup (first doc per positional fingerprint among the
-    kept) → final token mass (functions/curation.curate, shared with the
-    spark-submit jobs/curate_job.py).  One query tells the data engineer
-    what each stage costs per language — the attributable-drops story
-    (quality reasons via text_quality_filter, dedup survivors here)
-    composed into the headline numbers a curation run reports."""
-    from .functions.curation import curate
-
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    _curated, _packed, stats = curate(d)
-    # project the base-funnel columns: the optional gate counters
-    # (n_lm_dropped / n_contaminated) are structurally zero when the
-    # gates are off and belong to the job's summary, not this query
-    return stats.select(
-        "lang", "n_raw", "n_kept", "n_unique", "n_tokens_final"
-    )
-
-
-@register(
     "ann_multi_topk",
     """
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -886,131 +531,6 @@ def ann_multi_topk(spark, sf_dir):
         cos.withColumn("rnk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rnk") <= 5)
         .select("qid", "vec_id", F.round("cs", 4).alias("cos_sim"), "rnk")
-    )
-
-
-CONTAM_MIN_SHINGLES = 2
-
-
-@register(
-    "text_repetition_signals",
-    f"""
-    WITH tokarr AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS arr
-                    FROM documents),
-    tok AS (SELECT doc_id, CAST(generate_subscripts(arr, 1) - 1 AS BIGINT) AS pos,
-                   unnest(arr) AS tok FROM tokarr),
-    bgc AS (SELECT doc_id, g, COUNT(*) AS c FROM (
-        SELECT t1.doc_id, t1.tok || ' ' || t2.tok AS g
-        FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1)
-      GROUP BY 1, 2),
-    tgc AS (SELECT doc_id, g, COUNT(*) AS c FROM (
-        SELECT t1.doc_id, t1.tok || ' ' || t2.tok || ' ' || t3.tok AS g
-        FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-        JOIN tok t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2)
-      GROUP BY 1, 2),
-    bga AS (SELECT doc_id, MAX(c) AS top_bg FROM bgc GROUP BY 1),
-    tga AS (SELECT doc_id, SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS dup_tg,
-                   SUM(c) AS tot_tg FROM tgc GROUP BY 1),
-    runs AS (SELECT doc_id, MAX(cnt) AS max_run FROM (
-        SELECT doc_id, COUNT(*) AS cnt FROM (
-          SELECT doc_id, tok,
-                 pos - ROW_NUMBER() OVER (PARTITION BY doc_id, tok ORDER BY pos)
-                   AS grp
-          FROM tok)
-        GROUP BY doc_id, tok, grp) GROUP BY 1),
-    f AS (SELECT b.doc_id, len(b.arr) AS n, r.max_run,
-                 COALESCE(g.top_bg, 0) AS top_bg,
-                 CAST(2 * COALESCE(g.top_bg, 0) AS DOUBLE) / len(b.arr)
-                   AS top_frac,
-                 CASE WHEN COALESCE(t.tot_tg, 0) > 0
-                      THEN CAST(t.dup_tg AS DOUBLE) / t.tot_tg
-                      ELSE 0.0 END AS dup_frac
-          FROM tokarr b LEFT JOIN bga g USING (doc_id)
-          LEFT JOIN tga t USING (doc_id) JOIN runs r USING (doc_id))
-    SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-           ROUND(top_frac, 4) AS top_bigram_frac,
-           ROUND(dup_frac, 4) AS dup_trigram_frac,
-           CAST(max_run AS BIGINT) AS max_run,
-           CASE WHEN top_bg >= 2 AND top_frac > {TOP_BIGRAM_MAX} THEN 'bigram_heavy'
-                WHEN dup_frac > {DUP_TRIGRAM_MAX} THEN 'trigram_dupes'
-                WHEN max_run > {MAX_RUN_MAX} THEN 'token_run'
-                ELSE 'ok' END AS reason,
-           (CASE WHEN top_bg >= 2 AND top_frac > {TOP_BIGRAM_MAX} THEN 'bigram_heavy'
-                WHEN dup_frac > {DUP_TRIGRAM_MAX} THEN 'trigram_dupes'
-                WHEN max_run > {MAX_RUN_MAX} THEN 'token_run'
-                ELSE 'ok' END) = 'ok' AS keep
-    FROM f
-    """,
-)
-def text_repetition_signals(spark, sf_dir):
-    """Gopher-style repetition quality gate (Rae et al. 2021 A1.1;
-    functions/quality.repetition_signals): top-bigram coverage,
-    duplicated-trigram fraction, longest same-token run — keep/drop
-    with the first-failing reason materialized, drops attributable.
-
-    Scale shape: max_run is a row-local array fold (no window); both
-    gram families ride one explode into one map-side-combining
-    (doc_id, k, gram) count; the corpus is scanned once."""
-    from .functions.quality import repetition_signals
-
-    return repetition_signals(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-@register(
-    "text_decontaminate",
-    f"""
-    WITH {SQL_SHINGLES},
-    {_SQL_SHINGLES_CAPPED},
-    bench AS (SELECT doc_id AS bench_doc, sh FROM kept WHERE doc_id % 20 = 0),
-    corp AS (SELECT doc_id, sh FROM kept WHERE doc_id % 20 <> 0)
-    SELECT c.doc_id,
-           CAST(COUNT(DISTINCT c.sh) AS BIGINT) AS n_overlap_shingles,
-           CAST(COUNT(DISTINCT b.bench_doc) AS BIGINT) AS n_bench_docs,
-           COUNT(DISTINCT c.sh) >= {CONTAM_MIN_SHINGLES} AS contaminated
-    FROM corp c JOIN bench b ON c.sh = b.sh
-    GROUP BY 1
-    """,
-)
-def text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix C shape): flag training
-    docs sharing 3-token shingles with a held-out eval split (the
-    deterministic doc_id % 20 == 0 stand-in — no external data).  Only
-    docs with >= 1 surviving overlap appear; `contaminated` applies the
-    CONTAM_MIN_SHINGLES threshold so a single boilerplate collision
-    does not condemn a doc.
-
-    Scale shape: the corpus-side df cap (NGRAM_DF_CAP) drops ubiquitous
-    shingles BEFORE the join — uninformative boilerplate and the hot-key hazard in one move; the
-    benchmark gram dim is eval-set-sized (MBs against a 100 TB corpus),
-    localCheckpointed once and broadcast only under the
-    maybe_broadcast row gate."""
-    from .functions.joins import maybe_broadcast
-
-    sh = _shingles_df(spark, sf_dir)
-    hot = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("sh")
-    )
-    kept = sh.join(hot, "sh", "left_anti")
-    bench = (
-        kept.filter(F.col("doc_id") % 20 == 0)
-        .select(F.col("doc_id").alias("bench_doc"), "sh")
-        .localCheckpoint(eager=True)
-    )
-    corp = kept.filter(F.col("doc_id") % 20 != 0)
-    return (
-        corp.join(maybe_broadcast(bench), "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("sh").alias("n_overlap_shingles"),
-            F.countDistinct("bench_doc").alias("n_bench_docs"),
-        )
-        .withColumn(
-            "contaminated",
-            F.col("n_overlap_shingles") >= CONTAM_MIN_SHINGLES,
-        )
     )
 
 

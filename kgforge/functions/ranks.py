@@ -56,45 +56,3 @@ def global_row_number(
         .withColumn(rank_col, (F.row_number().over(w) + F.col("_off")).cast("int"))
         .drop("_pid", "_off")
     )
-
-
-def grouped_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    rank_col: str = "rn",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-GROUP 1-based rank for LOW-CARDINALITY, possibly huge groups
-    — the case where ``Window.partitionBy(group)`` is itself the
-    bottleneck (k groups → k tasks, each sorting corpus/k rows on one
-    core; for lang buckets or k-means clusters k is single digits).
-
-    Equals ``ROW_NUMBER() OVER (PARTITION BY group ORDER BY order)`` for
-    any per-group total order.  Mechanism: one GLOBAL two-pass rank over
-    (group_cols + order_cols) — range partitioning spreads every group
-    across many tasks regardless of skew — minus the group's cumulative
-    offset (count of rows in groups that sort earlier).  The offset
-    cumsum runs a window over the per-group COUNT table (k rows — the
-    same benign driver-scale SinglePartition class as the two-pass
-    rank's own count map, PLAN_AUDIT.md class (b)).
-
-    High-cardinality groups should use the plain partitioned window
-    instead — there the per-group task count is the parallelism."""
-    ranked = global_row_number(
-        df, group_cols + order_cols, rank_col, num_partitions
-    )
-    cum = Window.orderBy(*group_cols).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = F.broadcast(
-        ranked.groupBy(*group_cols)
-        .agg(F.count("*").alias("_gn"))
-        .withColumn("_goff", F.coalesce(F.sum("_gn").over(cum), F.lit(0)))
-        .drop("_gn")
-    )
-    return (
-        ranked.join(offsets, on=group_cols)
-        .withColumn(rank_col, (F.col(rank_col) - F.col("_goff")).cast("int"))
-        .drop("_goff")
-    )

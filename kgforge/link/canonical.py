@@ -2,10 +2,11 @@
 
 The reference's data model has coreference ``Cluster`` structures
 (data/data_structures.py:349-383) that its model never consumes; the north
-rule makes canonicalization a first-class stage.  Design: character-3-gram
-shingles -> k MinHash signatures -> banded LSH bucketing -> candidate pairs
--> Jaccard verification.  Everything is built-in expressions (JVM-side,
-whole-stage codegen); no Python touches rows here.
+rule makes canonicalization a first-class stage.  Design: token shingles
+of the normalized surface (``shingles``) -> k MinHash signatures -> banded
+LSH bucketing -> candidate pairs -> Jaccard verification.  Everything is
+built-in expressions (JVM-side, whole-stage codegen); no Python touches
+rows here.
 
 The minhash uses explicit universal-hash arithmetic
 ``(a_j * h + b_j) mod P`` over ``xxhash64`` shingle hashes rather than
@@ -60,17 +61,6 @@ def normalize_surface(col):
     """lower + strip non-alnum + collapse whitespace."""
     return F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(col), "[^a-z0-9 ]", " "), " +", " ")
-    )
-
-
-def char_shingles(col, k: int = 3):
-    """Distinct character k-gram array of a (normalized) string column."""
-    padded = F.concat(F.lit(" "), col, F.lit(" "))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(padded) - k, F.lit(0))),
-            lambda i: padded.substr(i + 1, F.lit(k)),
-        )
     )
 
 
@@ -226,7 +216,7 @@ def lsh_candidate_pairs(
     max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
     """Banded LSH: same (ent_type, band_id, band_key) bucket -> candidate
-    pair -> verify char-shingle Jaccard.  Returns (src, dst, jaccard) with
+    pair -> verify token-shingle Jaccard.  Returns (src, dst, jaccard) with
     src < dst.  Buckets larger than ``max_bucket`` are excluded (guard
     against O(bucket^2) blowup); their count is visible via
     ``lsh_bucket_stats``."""

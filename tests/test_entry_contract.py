@@ -45,15 +45,6 @@ ANALYTICS = {
     "q_topk_per_group",
     "q_sessionize",
     "q_distinct_kmv",
-    "dedup_minhash_sig",
-    "doc_fingerprint",
-    "doc_winnowing",
-    "dedup_winnow_pairs",
-    "token_counts",
-    "text_quality_filter",
-    "text_repetition_signals",
-    "text_decontaminate",
-    "curation_funnel",
     "curate_length_curriculum",
     "ann_cosine_topk",
     "ann_ivf_topk",
@@ -69,21 +60,16 @@ FAST_SUBSET = [
     "kg_mentions",
     "kg_triples",
     "kg_content_sha",
-    "dedup_minhash_sig",
     "ann_cosine_topk",
-    "token_counts",
-    "doc_fingerprint",
     "kg_context_units",
     "kg_cross_mentions",
     "kg_predict_json",
     "ann_ivf_topk",
-    "text_quality_filter",
     "kg_two_hop",
     "kg_ctx_cross",
     "ann_ivf_recall",
     "bpe_merges",
     "kg_pagerank",
-    "curation_funnel",
 ]
 
 

@@ -40,18 +40,3 @@ def test_mentions_udf_survives_null_text(spark):
     out = df.select(make_detect_mentions_udf("docs")(F.col("text")).alias("m")).collect()
     assert out[0].m == []
     assert len(out[1].m) == 2
-
-
-def test_quality_gate_rejects_null_and_empty(spark):
-    """Null/empty documents must NOT pass the quality gate (raw null made
-    every rule predicate null and the CASE fell through to 'ok')."""
-    from kgforge.functions.quality import quality_flags
-
-    d = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "spark query filters data stream fast")],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: (r.keep, r.reason) for r in quality_flags(d).collect()}
-    assert got[1] == (False, "too_short")
-    assert got[2] == (False, "too_short")
-    assert got[3] == (True, "ok")

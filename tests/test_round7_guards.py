@@ -3,8 +3,6 @@
 - pagerank / pagerank_residual on an EMPTY edge frame are no-ops, not
   ZeroDivisionError (incl. the all-weights-non-positive case that
   empties the frame after the w > 0 filter).
-- bigram_perplexity raises loudly on an empty LM training slice instead
-  of silently scoring every document ppl 0.0.
 - curate_length_curriculum's arithmetic phase rule == literal NTILE(4)
   for every n mod 4 residue, and its plan has no non-terminal
   SinglePartition exchange.
@@ -36,19 +34,6 @@ def test_pagerank_all_nonpositive_weights_is_noop(spark):
         [(1, 2, 0.0), (2, 3, -1.0)], "src long, dst long, w double"
     )
     assert pagerank(de, rounds=2).count() == 0
-
-
-def test_bigram_perplexity_empty_slice_raises(spark):
-    from kgforge.functions.quality import bigram_perplexity
-
-    docs = spark.createDataFrame(
-        [(1, "a b c", "de"), (2, "b c d", "fr")], "doc_id long, text string, lang string"
-    )
-    with pytest.raises(ValueError, match="empty LM training slice"):
-        bigram_perplexity(docs, target_lang="en")
-    # non-empty slice still works
-    out = bigram_perplexity(docs, target_lang="de")
-    assert out.count() == 2
 
 
 @pytest.mark.parametrize("n", [3, 4, 7, 10, 12, 13])

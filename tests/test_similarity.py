@@ -38,9 +38,10 @@ def test_fold_plan_has_no_explode(spark, emb):
     assert "Generate" not in plan
 
 
-def test_broadcast_size_gate(spark):
-    """attach_canonical_ids: forced-shuffle path (threshold 0) must produce
-    exactly the broadcast path's rows."""
+def test_broadcast_size_gate(spark, monkeypatch):
+    """attach_canonical_ids: forced-shuffle path (module gate patched to 0,
+    read at call time) must produce exactly the broadcast path's rows."""
+    from kgforge.functions import joins
     from kgforge.graph.materialize import attach_canonical_ids, canonical_entities
 
     rows = [
@@ -57,7 +58,8 @@ def test_broadcast_size_gate(spark):
     )
     can = canonical_entities(t).localCheckpoint(eager=True)
     via_bcast = attach_canonical_ids(t, can)  # dim far below default gate
-    via_shuffle = attach_canonical_ids(t, can, broadcast_max_rows=0)
+    monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 0)
+    via_shuffle = attach_canonical_ids(t, can)
     key = lambda r: (r.repo, r.path, r.unit_id, r.subj, r.obj, r.src, r.dst)
     assert sorted(map(key, via_bcast.collect())) == sorted(
         map(key, via_shuffle.collect())
@@ -96,29 +98,6 @@ def test_ivf_recall_planted_clusters(spark, emb):
     r = ann_ivf_recall(spark, SF).first()
     assert r.k == 10
     assert r.recall_at_10 >= 0.8, f"planted-cluster recall {r.recall_at_10}"
-
-
-def test_quality_filter_accounting(spark):
-    """Every doc gets exactly one reason; drop_stats partitions the corpus."""
-    from kgforge.functions.quality import drop_stats, quality_flags
-
-    d = spark.createDataFrame(
-        [
-            (1, "a the a the a the"),              # stopword_heavy
-            (2, "ok"),                              # too_short
-            (3, "spark query filters data stream fast"),   # ok
-            (4, "aaaaaaaaaaaaaaaaaaaaa bbbbbbbbbbbbbbbbbb cccccccccccccc dddddddddddddd eeeeeeeeeeeeee"),  # weird_tokens
-        ],
-        "doc_id long, text string",
-    )
-    f = quality_flags(d)
-    got = {r.doc_id: (r.keep, r.reason) for r in f.collect()}
-    assert got[1] == (False, "stopword_heavy")
-    assert got[2] == (False, "too_short")
-    assert got[3] == (True, "ok")
-    assert got[4] == (False, "weird_tokens")
-    stats = {r.reason: r.n_docs for r in drop_stats(f).collect()}
-    assert sum(stats.values()) == 4 and stats["ok"] == 1
 
 
 def test_kmeans_centroids_deterministic(spark):
