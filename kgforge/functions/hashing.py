@@ -5,8 +5,7 @@ utils/funcs.py uses content hashing for cache keys).  It is expressed
 twice, once as a Spark higher-order-function column and once as the
 equivalent DuckDB SQL (``sql_charfold``), so every oracle comparison is
 bit-identical across engines.  Values stay in [0, MOD) with MOD = 2^31-1:
-kgforge/queries.py reduces them to surrogate scores and labels, and
-graph/algo.py divides by MOD for deterministic uniform draws.
+kgforge/queries.py reduces them to surrogate scores and labels.
 """
 
 from __future__ import annotations

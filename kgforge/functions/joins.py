@@ -36,19 +36,14 @@ def maybe_broadcast(
     df: DataFrame,
     *,
     n_rows: int | None = None,
-    max_rows: int | None = None,
 ) -> DataFrame:
-    """Broadcast-hint ``df`` only if its row count is under the gate.
+    """Broadcast-hint ``df`` only if its row count is under the gate
+    ``BROADCAST_DIM_MAX_ROWS``, read at call time (monkeypatchable).
 
     ``n_rows``: pre-counted size, for callers that already counted the
     dim (or a 1:1 precursor — e.g. a row_number rank table has exactly
     its input's count, so counting the checkpointed input covers both).
-    When omitted the dim is counted here.
-
-    ``max_rows``: gate override; ``None`` reads the module constant at
-    call time (monkeypatchable)."""
-    if max_rows is None:
-        max_rows = BROADCAST_DIM_MAX_ROWS
+    When omitted the dim is counted here."""
     if n_rows is None:
         n_rows = df.count()
-    return F.broadcast(df) if n_rows <= max_rows else df
+    return F.broadcast(df) if n_rows <= BROADCAST_DIM_MAX_ROWS else df

@@ -1,6 +1,6 @@
 """Iterative graph algorithms over the materialized KG — PageRank and
-synchronous label propagation — with BOTH execution modes a production
-deployment needs (r4 VERDICT #2):
+synchronous label propagation (scored by ``modularity``) — with BOTH
+execution modes a production deployment needs (r4 VERDICT #2):
 
 - ``rounds=k`` runs exactly k synchronous rounds.  Deterministic and
   engine-portable — this is what the driver-facing queries pin against
@@ -261,226 +261,6 @@ def pagerank(
     return pr.select("v", "pr")
 
 
-def kcore(
-    und: DataFrame,
-    k: int = 2,
-    *,
-    rounds: int | None = None,
-    max_rounds: int = 100,
-    stats: dict | None = None,
-) -> DataFrame:
-    """k-core decomposition by iterative peeling over undirected edges
-    ``und(a, b)`` (one row per edge, a < b): repeatedly drop vertices
-    with degree < k and the edges touching them.  Returns the surviving
-    vertex set (v) — the densely-connected backbone a KG consumer keeps
-    when pruning noise entities.
-
-    ``rounds=k_r`` peels exactly k_r synchronous rounds (the unrollable
-    oracle form); ``rounds=None`` peels to the fixed point — guaranteed
-    to terminate (the vertex set shrinks monotonically) but still capped
-    with a non-silent guard against pathological inputs.  Per round: one
-    degree aggregate + two semi-joins; edges are localCheckpointed so
-    the peeled plan doesn't stack."""
-    edges = und.select("a", "b").localCheckpoint(eager=True)
-    n_rounds = rounds if rounds is not None else max_rounds
-    # r8: one materialization job per round — the degree filter rides in
-    # the round's plan (its aggregate exchange is shared between the two
-    # semi-join probes) instead of being checkpointed separately, and the
-    # fixpoint check compares the carried-forward count instead of
-    # re-counting last round's frame.
-    n_prev = edges.count() if rounds is None else None
-    for i in range(n_rounds):
-        deg = (
-            edges.select(F.col("a").alias("v"))
-            .unionByName(edges.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("v")
-        new_edges = (
-            edges.join(keep.withColumnRenamed("v", "a"), on="a", how="left_semi")
-            .join(keep.withColumnRenamed("v", "b"), on="b", how="left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if stats is not None:
-            stats["rounds"] = i + 1
-        if rounds is None:
-            n_new = new_edges.count()
-            if n_new == n_prev:
-                edges = new_edges
-                break
-            edges, n_prev = new_edges, n_new
-        else:
-            edges = new_edges
-    else:
-        if rounds is None:
-            raise RuntimeError(f"kcore did not stabilize in {max_rounds} rounds")
-    return (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
-
-
-def _min_reach(
-    e: DataFrame, verts: DataFrame, *, max_rounds: int = 50
-) -> DataFrame:
-    """Directed min-label reachability fixpoint: for each vertex v,
-    the minimum vertex id u with a directed path u ->* v over
-    ``e(src, dst)`` (v itself included).  Backward reach = call with e
-    reversed.  Same shape as link/cc.py's loop — per round one
-    neighbor-min join+agg PLUS the pointer-jumping step, which is valid
-    here because labels are reachability witnesses: if m(v)=u then
-    u ->* v, and m(u)=w means w ->* u ->* v, so v may adopt w — the
-    doubling that turns diameter-bounded convergence into O(log)
-    rounds on long chains.  localCheckpoint per round, loud guard."""
-    from ..functions.joins import maybe_broadcast
-
-    lab = verts.select(
-        F.col("v"), F.col("v").alias("m")
-    ).localCheckpoint(eager=True)
-    n_v = lab.count()
-    for _ in range(max_rounds):
-        nbr = (
-            e.join(
-                maybe_broadcast(
-                    lab.select(F.col("v").alias("src"), F.col("m").alias("mi")),
-                    n_rows=n_v,
-                ),
-                on="src",
-            )
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("mi").alias("nbr"))
-        )
-        new = lab.join(maybe_broadcast(nbr, n_rows=n_v), on="v", how="left").select(
-            "v",
-            F.least(F.col("m"), F.coalesce("nbr", "m")).alias("m"),
-            F.col("m").alias("_prev"),
-        )
-        parent = maybe_broadcast(
-            new.select(F.col("v").alias("p"), F.col("m").alias("pm")),
-            n_rows=n_v,
-        )
-        new = (
-            new.join(parent, new.m == parent.p, "left")
-            .select(
-                "v",
-                F.least(F.coalesce("pm", "m"), F.col("m")).alias("m"),
-                F.col("_prev"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new.filter(F.col("m") != F.col("_prev")).limit(1).count()
-        lab = new.select("v", "m")
-        if changed == 0:
-            return lab
-    raise RuntimeError(f"_min_reach did not converge in {max_rounds} rounds")
-
-
-def scc(
-    de: DataFrame,
-    *,
-    max_outer: int = 25,
-    max_rounds: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """STRONGLY connected components of the directed graph
-    ``de(src, dst)`` -> (v, scc_id), scc_id = min vertex id of v's SCC.
-    The directed complement of link/cc.py's undirected CC: the KG edge
-    set IS directed (subj -> obj), and cyclic entity clusters (mutual
-    USED-FOR/COMPARE loops) are invisible to undirected components.
-
-    FW-BW min-label peeling (the distributed SCC design of
-    Fleischer/Hendrickson/Pinar's divide-and-conquer re-expressed as
-    label propagation, plus the standard trim step — Slota et al. 2014,
-    public literature): per outer round over the ACTIVE subgraph,
-      1. TRIM: vertices with no in-edges or no out-edges are singleton
-         SCCs — emitted immediately (handles the DAG-ish mass and chain
-         tails without reachability work);
-      2. propagate min labels FORWARD (m_f(v) = min u with u ->* v) and
-         BACKWARD (m_b(v) = min u with v ->* u) to fixpoint
-         (_min_reach, pointer-jumped);
-      3. MATCH: m_f(v) == m_b(v) == u means u ->* v AND v ->* u, so v
-         sits in u's SCC — every member of that SCC sees the same u
-         (u reaches and is reached by all of them), so the whole SCC
-         resolves together and is peeled with its edges.
-    The minimum member of every remaining SCC always matches in its
-    round, so each outer round peels >= one condensation layer; outer
-    depth is bounded by the condensation's peel depth (worst case a
-    path of SCCs — guarded loudly, never silent).  Per inner round one
-    edge-keyed shuffle; edges re-checkpointed per peel so plans stay
-    linear.  Scale shape: the same per-round cost model as PageRank
-    rounds; no all-pairs reachability anywhere (the transitive-closure
-    formulation is the DuckDB ORACLE only)."""
-    e = (
-        de.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        de.select(F.col("src").alias("v"))
-        .unionByName(de.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # typed empty accumulator (inherits the caller's vertex id type)
-    out = verts.select("v", F.col("v").alias("scc_id")).limit(0)
-    for outer in range(max_outer):
-        if stats is not None:
-            stats["outer_rounds"] = outer + 1
-        if verts.limit(1).count() == 0:
-            return out
-        # 1. trim: no in-edge or no out-edge => singleton SCC
-        has_in = e.select(F.col("dst").alias("v")).distinct()
-        has_out = e.select(F.col("src").alias("v")).distinct()
-        trimmed = verts.join(
-            has_in.intersect(has_out), on="v", how="left_anti"
-        ).localCheckpoint(eager=True)
-        if trimmed.limit(1).count() > 0:
-            out = out.unionByName(
-                trimmed.select("v", F.col("v").alias("scc_id"))
-            ).localCheckpoint(eager=True)
-            verts = verts.join(trimmed, on="v", how="left_anti").localCheckpoint(
-                eager=True
-            )
-            e = (
-                e.join(
-                    verts.withColumnRenamed("v", "src"), on="src", how="left_semi"
-                )
-                .join(verts.withColumnRenamed("v", "dst"), on="dst", how="left_semi")
-                .localCheckpoint(eager=True)
-            )
-            if verts.limit(1).count() == 0:
-                return out
-        # 2. forward/backward min-reach over the active subgraph
-        m_f = _min_reach(e, verts, max_rounds=max_rounds)
-        m_b = _min_reach(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            verts,
-            max_rounds=max_rounds,
-        )
-        # 3. match => whole SCC resolves
-        done = (
-            m_f.join(m_b.withColumnRenamed("m", "mb"), on="v")
-            .filter(F.col("m") == F.col("mb"))
-            .select("v", F.col("m").alias("scc_id"))
-            .localCheckpoint(eager=True)
-        )
-        out = out.unionByName(done).localCheckpoint(eager=True)
-        verts = verts.join(done, on="v", how="left_anti").localCheckpoint(
-            eager=True
-        )
-        e = (
-            e.join(verts.withColumnRenamed("v", "src"), on="src", how="left_semi")
-            .join(verts.withColumnRenamed("v", "dst"), on="dst", how="left_semi")
-            .localCheckpoint(eager=True)
-        )
-    if verts.limit(1).count() > 0:
-        raise RuntimeError(f"scc did not resolve in {max_outer} outer rounds")
-    return out
-
-
 def lpa_communities(
     nbr: DataFrame,
     *,
@@ -561,219 +341,6 @@ def lpa_communities(
     return labels
 
 
-def betweenness(
-    sym: DataFrame,
-    seeds: DataFrame,
-    *,
-    depth: int = 3,
-    until_empty: bool = False,
-    max_rounds: int = 30,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Seed-sampled BETWEENNESS CENTRALITY (Brandes' dependency
-    accumulation, truncated at ``depth`` hops) over a symmetric distinct
-    neighbor list ``sym(a, b)`` and a deterministic seed set
-    ``seeds(v)``.  Returns (v, bc, n_seeds) — bc unrounded, n_seeds =
-    how many seeds' dependency trees the vertex appears in.
-
-    Sampling seeds (Brandes-Pich pivots) and capping the BFS depth are
-    the two standard cuts that make betweenness tractable at graph
-    scale: cost is seeds x the depth-hop neighborhood per phase instead
-    of all-pairs.  Both cuts are DETERMINISTIC here, so the result is a
-    well-defined statistic ("dependency over shortest paths of length
-    <= depth from these seeds") that an unrolled oracle reproduces
-    exactly — not a randomized estimate.
-
-    Forward phase: one frontier keyed (seed, v) runs every seed's BFS in
-    the same per-hop shuffle (the kg_harmonic discipline); sigma
-    (shortest-path counts) accumulates only from the previous level, so
-    the BFS DAG falls out of the frontier anti-join.  Backward phase:
-    levels processed strictly deepest-first; delta(v) = sum over DAG
-    successors u of sigma_v/sigma_u * (1 + delta_u).  Every level is
-    localCheckpointed — 2*depth linear plans, no exponential lineage.
-
-    ``until_empty=True`` ignores ``depth`` and runs the forward phase to
-    frontier exhaustion (guarded by ``max_rounds``, non-silent): with
-    seeds = ALL vertices this is EXACT Brandes — the measurement twin
-    kg_betweenness_error uses to bound the sampled estimator's error
-    (viable only on small/vocab-bounded graphs; the sampled+truncated
-    form is the scale path)."""
-    sym = sym.localCheckpoint(eager=True)
-    nbrs = sym.select(F.col("a").alias("v"), F.col("b").alias("u"))
-    lvl = seeds.select(
-        F.col("v").alias("s"), F.col("v"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    visited = lvl.select("s", "v").localCheckpoint(eager=True)
-    levels = [lvl]
-    rounds = 0
-    while True:
-        if until_empty:
-            if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"betweenness(until_empty) exceeded {max_rounds} rounds"
-                )
-        elif rounds >= depth:
-            break
-        cand = (
-            lvl.join(nbrs, on="v")
-            .groupBy("s", F.col("u").alias("v"))
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        lvl = cand.join(
-            visited, on=["s", "v"], how="left_anti"
-        ).localCheckpoint(eager=True)
-        if until_empty and lvl.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(
-            lvl.select("s", "v")
-        ).localCheckpoint(eager=True)
-        levels.append(lvl)
-        rounds += 1
-    eff_depth = len(levels) - 1
-    if stats is not None:
-        stats["reached"] = visited.count()
-        stats["depth"] = eff_depth
-
-    # deepest level has no successors inside the horizon: delta = 0
-    deltas = levels[-1].withColumn("delta", F.lit(0.0))
-    acc = deltas
-    for d in range(eff_depth - 1, 0, -1):
-        succ = deltas.select(
-            "s",
-            F.col("v").alias("u"),
-            F.col("sigma").alias("sigma_u"),
-            F.col("delta").alias("delta_u"),
-        )
-        deltas = (
-            levels[d]
-            .join(nbrs, on="v")
-            .join(succ, on=["s", "u"], how="left")
-            .groupBy("s", "v", "sigma")
-            .agg(
-                F.coalesce(
-                    F.sum(
-                        (F.col("sigma") / F.col("sigma_u"))
-                        * (F.lit(1.0) + F.col("delta_u"))
-                    ),
-                    F.lit(0.0),
-                ).alias("delta")
-            )
-            .localCheckpoint(eager=True)
-        )
-        acc = acc.unionByName(deltas)
-    return acc.groupBy("v").agg(
-        F.sum("delta").alias("bc"), F.count("*").alias("n_seeds")
-    )
-
-
-def ktruss(
-    und: DataFrame,
-    k: int = 4,
-    *,
-    rounds: int | None = None,
-    max_rounds: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """k-TRUSS of undirected edges ``und(a, b)`` (one row per edge,
-    a < b): iteratively drop every edge supported by fewer than k-2
-    triangles within the CURRENT edge set, until stable — the
-    edge-strength analog of the k-core (cohesion by shared neighbors,
-    not raw degree).  Returns the surviving edges (a, b).
-
-    Per round, triangles are enumerated ONCE in the degree-ordered
-    orientation (ranks computed once on the input graph, reused every
-    round — degrees only shrink under peeling, so the initial order
-    keeps the wedge fan-out bound): each triangle is found at its
-    lowest-rank corner and contributes +1 support to its three edges;
-    support counting and filtering stay entirely in rank space, and
-    vertex ids are restored once at the end.  Support is a property of
-    the triangle set, not of the orientation, so the result matches an
-    orientation-free formulation (the unrolled kg_ktruss oracle)
-    exactly.  Cost per round: one wedge join bounded O(sqrt(m)) per
-    edge + one edge-keyed count + one semi filter.
-
-    ``rounds=r`` peels exactly r synchronous rounds (the unrollable
-    oracle form); ``rounds=None`` peels to the fixed point — guaranteed
-    to terminate (edge set shrinks monotonically) but capped with the
-    same non-silent guard as kcore.  Peeling CASCADES: dropping a
-    boundary edge can strip support from an interior one next round
-    (pinned by the triangle-strip test, where r rounds only unravel
-    2r layers)."""
-    from ..functions.joins import maybe_broadcast
-    from ..functions.ranks import global_row_number
-
-    edges = und.select("a", "b").localCheckpoint(eager=True)
-    dg = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    ).localCheckpoint(eager=True)
-    n_v = dg.count()
-    rk = global_row_number(dg, ["deg", "v"]).select("v", F.col("rn").alias("r"))
-    # rank space: one row per edge, lo < hi by rank; (a, b) kept for the
-    # final restore
-    od = (
-        edges.join(
-            maybe_broadcast(
-                rk.withColumnRenamed("v", "a").withColumnRenamed("r", "ra"),
-                n_rows=n_v,
-            ),
-            on="a",
-        )
-        .join(
-            maybe_broadcast(
-                rk.withColumnRenamed("v", "b").withColumnRenamed("r", "rb"),
-                n_rows=n_v,
-            ),
-            on="b",
-        )
-        .select(
-            "a",
-            "b",
-            F.least("ra", "rb").alias("lo"),
-            F.greatest("ra", "rb").alias("hi"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_edges = od.count()
-    n_rounds = rounds if rounds is not None else max_rounds
-    for i in range(n_rounds):
-        e1 = od.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-        e2 = od.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-        e3 = od.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-        tri = (
-            e1.join(e2, on="x")
-            .filter(F.col("y") < F.col("z"))
-            .join(e3, on=["y", "z"])
-        )
-        sup = (
-            tri.select(F.col("x").alias("lo"), F.col("y").alias("hi"))
-            .unionByName(tri.select(F.col("x").alias("lo"), F.col("z").alias("hi")))
-            .unionByName(tri.select(F.col("y").alias("lo"), F.col("z").alias("hi")))
-            .groupBy("lo", "hi")
-            .agg(F.count("*").alias("sup"))
-            .filter(F.col("sup") >= k - 2)
-        )
-        # inner semi: edges in no triangle have no sup row -> dropped
-        new_od = od.join(sup, on=["lo", "hi"], how="left_semi").localCheckpoint(
-            eager=True
-        )
-        n_new = new_od.count()
-        if stats is not None:
-            stats["rounds"], stats["n_edges"] = i + 1, n_new
-        if rounds is None and n_new == n_edges:
-            od = new_od
-            break
-        od, n_edges = new_od, n_new
-        if n_edges == 0:
-            break  # empty is trivially stable under both modes
-    else:
-        if rounds is None:
-            raise RuntimeError(f"ktruss did not stabilize in {max_rounds} rounds")
-    return od.select("a", "b")
-
-
 def modularity(und: DataFrame, labels: DataFrame) -> DataFrame:
     """Per-community Newman modularity contributions for a given
     partition: Q_c = e_in(c)/m - (deg_sum(c)/2m)^2; global Q = sum of
@@ -818,339 +385,3 @@ def modularity(und: DataFrame, labels: DataFrame) -> DataFrame:
             ).alias("q_contrib"),
         )
     )
-
-
-def random_walks(nbr: DataFrame, length: int = 4) -> DataFrame:
-    """DeepWalk-style corpus generation (Perozzi et al. 2014,
-    arXiv:1403.6652), DETERMINISTIC: one walk per start vertex, next hop
-    = neighbor at index hash(walk, step, cur) % deg(cur) over the
-    rank-indexed adjacency — a seeded surrogate for uniform sampling
-    that both engines can replay bit-identically.  The hash is the
-    WELL-MIXED charfold(md5(walk:step:cur)) (the node2vec lesson,
-    measured there: raw charfold of sequential ids is nearly
-    sequential and biases the choice — on a cycle it halved the
-    backtrack rate a uniform walk implies).
-
-    ``nbr``: directed neighbor list (v, u), both directions of each
-    undirected edge.  Returns (walk_id, pos, node) corpus rows,
-    pos = 0..length.
-
-    Scale shape: state is ONE row per walk per step; each step joins
-    vertex info then the indexed adjacency — both O(|V|)/O(|E|) dims
-    ride through the size-gated maybe_broadcast (broadcast under the
-    gate so the frontier never shuffles; keyed shuffle above it, never
-    force-broadcast); the frontier is localCheckpointed per step so the
-    plan stays linear in length; the corpus streams out as a union of
-    per-step frontiers, no global sort."""
-    from pyspark.sql import Window
-
-    from ..functions.hashing import charfold
-    from ..functions.joins import maybe_broadcast
-
-    w = Window.partitionBy("v").orderBy("u")
-    nbrx = nbr.withColumn("idx", F.row_number().over(w) - 1).localCheckpoint(
-        eager=True
-    )
-    # r8: the indexed adjacency and the degree dim are static across
-    # hops — one count gates their per-hop joins (broadcast under the
-    # gate so the frontier never shuffles; keyed shuffle above it)
-    n_adj = nbrx.count()
-    vinfo = (
-        nbr.groupBy("v")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = vinfo.select(
-        F.col("v").alias("walk_id"), F.col("v").alias("cur")
-    )
-    out = frontier.select(
-        "walk_id", F.lit(0).cast("bigint").alias("pos"), F.col("cur").alias("node")
-    )
-    for t in range(1, length + 1):
-        f = frontier.join(
-            maybe_broadcast(
-                vinfo.select(F.col("v").alias("cur"), "deg"), n_rows=n_adj
-            ),
-            "cur",
-        ).withColumn(
-            "tgt",
-            charfold(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("walk_id"), F.lit(str(t)), F.col("cur")
-                    )
-                )
-            )
-            % F.col("deg"),
-        )
-        nx = maybe_broadcast(
-            nbrx.select(
-                F.col("v").alias("nv"), F.col("idx").alias("nidx"), F.col("u")
-            ),
-            n_rows=n_adj,
-        )
-        step = f.join(nx, (f["cur"] == nx["nv"]) & (f["tgt"] == nx["nidx"]))
-        frontier = step.select(
-            "walk_id", F.col("u").alias("cur")
-        ).localCheckpoint(eager=True)
-        out = out.unionByName(
-            frontier.select(
-                "walk_id",
-                F.lit(t).cast("bigint").alias("pos"),
-                F.col("cur").alias("node"),
-            )
-        )
-    return out
-
-
-def hits(
-    de: DataFrame,
-    *,
-    rounds: int | None = 2,
-    tol: float = 1e-6,
-    max_rounds: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """HITS hubs & authorities (Kleinberg 1999, JACM 46(5)) over distinct
-    directed edges ``de(src, dst)``.  Returns (v, hub, auth) unrounded,
-    both vectors L2-normalized each round (the classic mutual
-    reinforcement: auth <- in-neighbor hubs, hub <- out-neighbor auths).
-
-    ``rounds=k`` runs exactly k synchronous rounds (the oracle-pinned
-    mode); ``rounds=None`` iterates until
-    ``max(|hub_t - hub_{t-1}|, |auth_t - auth_{t-1}|) < tol`` under the
-    shared non-silent guard (RuntimeError past ``max_rounds``).
-    ``stats`` receives {'rounds', 'last_delta'}.
-
-    Per-round cost shape: TWO shuffles on the edge key (one per
-    direction) + two scalar norm aggregates — the same per-round
-    discipline as pagerank's dangling collect; state is one fixed-width
-    row per vertex, localCheckpointed per round so lineage stays linear.
-    Vertex-scale frames are never force-broadcast: every per-round dim
-    rides through the size-gated maybe_broadcast (broadcast under the
-    gate — one exchange per half-round — keyed shuffle above it)."""
-    from ..functions.joins import maybe_broadcast
-
-    de = de.localCheckpoint(eager=True)
-    verts = (
-        de.select(F.col("src").alias("v"))
-        .unionByName(de.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_v = verts.count()
-
-    def _half(edges_key_in: str, edges_key_out: str, vec: DataFrame, col: str):
-        # raw(v) = sum of vec over edges arriving at v via the given
-        # orientation, 0 where no such edge; then L2-normalize.  r8: the
-        # norm is a 1-row aggregate cross-joined into the plan (same
-        # IEEE754 sqrt-of-sum, 0/empty guarded to 1.0 exactly as the old
-        # ``or 1.0``) instead of a driver collect — one materialization
-        # job per half-round instead of two, and the contribution
-        # aggregate's exchange is shared between the two branches
-        # instead of being recomputed for the collect job.
-        contrib = (
-            de.join(
-                maybe_broadcast(
-                    vec.withColumnRenamed("v", edges_key_in), n_rows=n_v
-                ),
-                on=edges_key_in,
-            )
-            .groupBy(F.col(edges_key_out).alias("v"))
-            .agg(F.sum(col).alias("s"))
-        )
-        raw = verts.join(
-            maybe_broadcast(contrib, n_rows=n_v), on="v", how="left"
-        ).select("v", F.coalesce("s", F.lit(0.0)).alias("raw"))
-        nrm = raw.agg(
-            F.coalesce(
-                F.nullif(F.sqrt(F.sum(F.col("raw") * F.col("raw"))), F.lit(0.0)),
-                F.lit(1.0),
-            ).alias("_nrm")
-        )
-        return (
-            raw.crossJoin(nrm)
-            .select("v", (F.col("raw") / F.col("_nrm")).alias(col))
-            .localCheckpoint(eager=True)
-        )
-
-    hub = verts.withColumn("hub", F.lit(1.0)).localCheckpoint(eager=True)
-    auth = verts.withColumn("auth", F.lit(1.0))
-    n_rounds = rounds if rounds is not None else max_rounds
-    for i in range(n_rounds):
-        new_auth = _half("src", "dst", hub, "hub").withColumnRenamed(
-            "hub", "auth"
-        )
-        new_hub = _half("dst", "src", new_auth, "auth").withColumnRenamed(
-            "auth", "hub"
-        )
-        if rounds is None:
-            delta = (
-                new_hub.alias("a")
-                .join(hub.alias("b"), on="v")
-                .agg(F.max(F.abs(F.col("a.hub") - F.col("b.hub"))))
-                .collect()[0][0]
-            )
-            delta_a = (
-                new_auth.alias("a")
-                .join(auth.alias("b"), on="v")
-                .agg(F.max(F.abs(F.col("a.auth") - F.col("b.auth"))))
-                .collect()[0][0]
-            )
-            delta = max(delta, delta_a)
-            hub, auth = new_hub, new_auth
-            if stats is not None:
-                stats["rounds"], stats["last_delta"] = i + 1, delta
-            if delta < tol:
-                break
-        else:
-            hub, auth = new_hub, new_auth
-            if stats is not None:
-                stats["rounds"] = i + 1
-    else:
-        if rounds is None:
-            raise RuntimeError(
-                f"hits did not converge to tol={tol} in {max_rounds} rounds"
-            )
-    return hub.join(auth, on="v").select("v", "hub", "auth")
-
-
-def node2vec_walks(
-    nbr: DataFrame, *, length: int = 4, p: float = 4.0, q: float = 0.25
-) -> DataFrame:
-    """node2vec biased second-order walks (Grover & Leskovec 2016,
-    arXiv:1607.00653), DETERMINISTIC: the next hop is drawn from the
-    current vertex's neighbors with unnormalized weight
-    alpha = 1/p if returning to the previous vertex, 1 if the candidate
-    is a common neighbor (distance 1 from prev), 1/q otherwise — sampled
-    by CUMULATIVE-WEIGHT INVERSION at threshold u01 x total, with
-    u01 = charfold(md5(walk:step:cur))/MOD, the repo's WELL-MIXED
-    hash-uniform (the DSIR/reservoir pattern; the raw charfold of
-    sequential ids is nearly sequential and must NOT be used as a
-    uniform variate — measured: it drove cycle backtrack rate to 45%
-    vs the ~6% the bias implies).  p and q MUST be powers of two: every
-    alpha and every
-    partial sum is then exact in binary floating point, so the running
-    cumsum, the partition total, and the threshold comparison are
-    order-independent and engine-portable (the determinism precondition,
-    asserted).  Defaults p=4, q=0.25 bias outward (DFS-like) — the
-    "structural equivalence" regime.
-
-    ``nbr``: symmetric distinct neighbor list (v, u).  Returns
-    (walk_id, pos, node), pos = 0..length; hop 1 has no prev and is
-    uniform (exactly random_walks' first step).
-
-    Scale shape: per step the frontier (ONE row per walk) joins the
-    rank-indexed adjacency (edge-keyed shuffle), the distance-1 marker
-    is one LEFT join against the distinct edge set (no fanout), and the
-    pick is a per-walk window cumsum over that walk's candidate list —
-    partition-local, bounded by max degree; state is localCheckpointed
-    per step so the plan stays linear in length.  Nothing vertex-scale
-    is ever force-broadcast: the static adjacency/degree dims ride the
-    size-gated maybe_broadcast (keyed shuffle above the gate)."""
-    from math import log2
-
-    from pyspark.sql import Window
-
-    from ..functions.hashing import MOD, charfold
-
-    assert log2(p).is_integer() and log2(q).is_integer(), (
-        "p and q must be powers of two for exact cross-engine sums"
-    )
-    from ..functions.joins import maybe_broadcast
-
-    w = Window.partitionBy("v").orderBy("u")
-    nbr = nbr.localCheckpoint(eager=True)
-    nbrx = nbr.withColumn("idx", F.row_number().over(w) - 1).localCheckpoint(
-        eager=True
-    )
-    # r8: static adjacency/degree dims — one count gates every hop's
-    # joins (broadcast under the gate, keyed shuffle above it)
-    n_adj = nbrx.count()
-    vinfo = (
-        nbr.groupBy("v")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _mix(t: int) -> F.Column:
-        # well-mixed deterministic hash in [0, MOD) per (walk, step, cur)
-        return charfold(
-            F.md5(
-                F.concat_ws(
-                    ":", F.col("walk_id"), F.lit(str(t)), F.col("cur")
-                )
-            )
-        )
-
-    f0 = vinfo.select(F.col("v").alias("walk_id"), F.col("v").alias("cur"))
-    out = f0.select(
-        "walk_id", F.lit(0).cast("bigint").alias("pos"), F.col("cur").alias("node")
-    )
-    # hop 1: uniform (no prev yet)
-    f = f0.join(
-        maybe_broadcast(
-            vinfo.select(F.col("v").alias("cur"), "deg"), n_rows=n_adj
-        ),
-        "cur",
-    ).withColumn("tgt", _mix(1) % F.col("deg"))
-    nx = maybe_broadcast(
-        nbrx.select(F.col("v").alias("nv"), F.col("idx").alias("nidx"), "u"),
-        n_rows=n_adj,
-    )
-    step = f.join(nx, (f["cur"] == nx["nv"]) & (f["tgt"] == nx["nidx"]))
-    frontier = step.select(
-        "walk_id", F.col("cur").alias("prev"), F.col("u").alias("cur")
-    ).localCheckpoint(eager=True)
-    out = out.unionByName(
-        frontier.select(
-            "walk_id", F.lit(1).cast("bigint").alias("pos"),
-            F.col("cur").alias("node"),
-        )
-    )
-    wwin = Window.partitionBy("walk_id").orderBy("idx")
-    for t in range(2, length + 1):
-        cand = (
-            frontier.join(
-                maybe_broadcast(
-                    nbrx.withColumnRenamed("v", "cur"), n_rows=n_adj
-                ),
-                "cur",
-            )
-            .join(
-                maybe_broadcast(
-                    nbr.select(
-                        F.col("v").alias("prev"), "u", F.lit(1).alias("isnb")
-                    ),
-                    n_rows=n_adj,
-                ),
-                ["prev", "u"],
-                "left",
-            )
-            .withColumn(
-                "alpha",
-                F.when(F.col("u") == F.col("prev"), F.lit(1.0 / p))
-                .when(F.col("isnb") == 1, F.lit(1.0))
-                .otherwise(F.lit(1.0 / q)),
-            )
-        )
-        cw = cand.withColumn("cum", F.sum("alpha").over(wwin)).withColumn(
-            "tot",
-            F.sum("alpha").over(Window.partitionBy("walk_id")),
-        )
-        r = _mix(t).cast("double") / F.lit(float(MOD)) * F.col("tot")
-        picked = (
-            cw.filter(F.col("cum") >= r)
-            .withColumn("rn", F.row_number().over(wwin))
-            .filter(F.col("rn") == 1)
-        )
-        frontier = picked.select(
-            "walk_id", F.col("cur").alias("prev"), F.col("u").alias("cur")
-        ).localCheckpoint(eager=True)
-        out = out.unionByName(
-            frontier.select(
-                "walk_id", F.lit(t).cast("bigint").alias("pos"),
-                F.col("cur").alias("node"),
-            )
-        )
-    return out

@@ -104,39 +104,6 @@ def test_lpa_nonconvergence_guard_raises(spark):
         lpa_communities(nbr, rounds=None, max_rounds=1)
 
 
-def test_kcore_chain_needs_more_than_three_rounds(spark):
-    """2-core of a pure 12-chain is EMPTY, but peeling removes only the
-    two endpoints per round — after 3 rounds 5 edges remain, so the
-    fixed-round snapshot provably differs from convergence."""
-    from kgforge.graph.algo import kcore
-
-    und = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "a bigint, b bigint"
-    )
-    after3 = kcore(und, k=2, rounds=3)
-    assert after3.count() > 0  # not yet peeled away
-    converged = kcore(und, k=2, rounds=None)
-    assert converged.count() == 0  # a chain has no 2-core
-
-
-def test_kcore_cycle_is_its_own_core(spark):
-    """A cycle is already a 2-core: convergence keeps every vertex, and
-    attaching a pendant chain doesn't save the chain."""
-    from pyspark.sql import functions as F
-
-    from kgforge.graph.algo import kcore
-
-    n = 8
-    cyc = [(i, (i + 1) % n) for i in range(n)]
-    pendant = [(0, 100), (100, 101), (101, 102)]
-    und = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in cyc + pendant],
-        "a bigint, b bigint",
-    )
-    core = {r.v for r in kcore(und, k=2, rounds=None).collect()}
-    assert core == set(range(n))
-
-
 def test_lpa_period_two_oscillation_detected(spark):
     """A single undirected edge {0,1} with synchronous updates swaps
     labels forever (0 takes 1's label and vice versa... with the
@@ -150,132 +117,6 @@ def test_lpa_period_two_oscillation_detected(spark):
     out = {r.v: r.label for r in
            lpa_communities(nbr, rounds=None, max_rounds=30).collect()}
     assert set(out) == {0, 1}
-
-
-def _und(spark, pairs):
-    return spark.createDataFrame(
-        sorted({(min(a, b), max(a, b)) for a, b in pairs}),
-        "a bigint, b bigint",
-    )
-
-
-def _edge_set(df):
-    return {(r.a, r.b) for r in df.collect()}
-
-
-def test_ktruss_k4_keeps_k4_drops_attached_triangle(spark):
-    """K4 is its own 4-truss (every edge in 2 triangles).  A triangle
-    glued onto one K4 edge contributes two support-1 edges — dropped in
-    one round — while the shared edge keeps support 2 and survives."""
-    from kgforge.graph.algo import ktruss
-
-    k4 = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
-    glued = [(0, 9), (1, 9)]  # triangle (0, 1, 9) on K4 edge (0, 1)
-    out = ktruss(_und(spark, k4 + glued), k=4, rounds=None)
-    assert _edge_set(out) == set(k4)
-
-
-def test_ktruss_single_triangle_below_k4(spark):
-    """A lone triangle has support 1 everywhere: empty 4-truss, but it
-    IS a 3-truss (support >= 1)."""
-    from kgforge.graph.algo import ktruss
-
-    tri = [(0, 1), (0, 2), (1, 2)]
-    assert ktruss(_und(spark, tri), k=4, rounds=None).count() == 0
-    assert _edge_set(ktruss(_und(spark, tri), k=3, rounds=None)) == set(tri)
-
-
-def _cascade_edges():
-    """Three-layer support-dependency tree: level-1 edges have support 1
-    (die round 1), destroying the triangles that held level-2 edges at
-    support 3 (die round 2, down to 1), destroying the two triangles
-    that held the apex edge (0,1) at support 2 (dies round 3).  Peeling
-    provably CASCADES — each round's drop is caused by the previous
-    round's, not visible in the initial supports."""
-    edges = [(0, 1), (0, 2), (1, 2), (0, 3), (1, 3)]  # apex + 2 triangles
-    w = 10
-    for u, v in [(0, 2), (1, 2), (0, 3), (1, 3)]:  # 2 side triangles each
-        for _ in range(2):
-            edges += [(u, w), (v, w)]
-            w += 1
-    return edges
-
-
-def test_ktruss_cascade_needs_three_rounds(spark):
-    """The dependency tree unravels one layer per round: after 2 rounds
-    the apex edge still stands (the unrolled oracle snapshot provably
-    differs from the empty fixed point); convergence takes 3."""
-    from kgforge.graph.algo import ktruss
-
-    und = _und(spark, _cascade_edges())
-    after2 = ktruss(und, k=4, rounds=2)
-    assert _edge_set(after2) == {(0, 1)}
-    stats: dict = {}
-    converged = ktruss(und, k=4, rounds=None, stats=stats)
-    assert converged.count() == 0
-    assert stats["rounds"] == 3
-
-
-def test_ktruss_nonsilent_guard(spark):
-    import pytest
-
-    from kgforge.graph.algo import ktruss
-
-    with pytest.raises(RuntimeError, match="did not stabilize"):
-        ktruss(_und(spark, _cascade_edges()), k=4, rounds=None, max_rounds=2)
-
-
-def _sym(spark, pairs):
-    both = {(a, b) for a, b in pairs} | {(b, a) for a, b in pairs}
-    return spark.createDataFrame(sorted(both), "a bigint, b bigint")
-
-
-def _seeds(spark, vs):
-    return spark.createDataFrame([(v,) for v in vs], "v bigint")
-
-
-def test_betweenness_path_matches_brandes_by_hand(spark):
-    """P5 (0-1-2-3-4), all vertices as seeds, horizon covers the whole
-    graph: exact Brandes values 0, 6, 8, 6, 0."""
-    from kgforge.graph.algo import betweenness
-
-    sym = _sym(spark, [(i, i + 1) for i in range(4)])
-    out = {
-        r.v: r.bc
-        for r in betweenness(sym, _seeds(spark, range(5)), depth=4).collect()
-    }
-    assert {v: round(b, 9) for v, b in out.items()} == {
-        0: 0.0, 1: 6.0, 2: 8.0, 3: 6.0, 4: 0.0
-    }
-
-
-def test_betweenness_c4_splits_sigma(spark):
-    """C4: each vertex sits on exactly half the two shortest paths
-    between its two opposite-corner pairs — bc = 1/2 + 1/2 = 1.  Pins
-    the sigma (path-count) arithmetic, not just reachability."""
-    from kgforge.graph.algo import betweenness
-
-    sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (3, 0)])
-    out = {
-        r.v: r.bc
-        for r in betweenness(sym, _seeds(spark, range(4)), depth=3).collect()
-    }
-    assert {v: round(b, 9) for v, b in out.items()} == {
-        0: 1.0, 1: 1.0, 2: 1.0, 3: 1.0
-    }
-
-
-def test_betweenness_depth_truncation(spark):
-    """depth=1: only length-1 paths exist inside the horizon, and no
-    vertex is interior to one — all dependencies are 0, while n_seeds
-    still counts the seeds that reached each vertex."""
-    from kgforge.graph.algo import betweenness
-
-    sym = _sym(spark, [(i, i + 1) for i in range(4)])
-    rows = betweenness(sym, _seeds(spark, range(5)), depth=1).collect()
-    assert rows and all(r.bc == 0.0 for r in rows)
-    n_seeds = {r.v: r.n_seeds for r in rows}
-    assert n_seeds[2] == 2  # reached by 1 and 3 within one hop
 
 
 # ---------- modularity ----------
@@ -316,171 +157,6 @@ def test_modularity_single_community_is_zero(spark):
     )
     [r] = modularity(und, labels).collect()
     assert (r.e_in, r.deg_sum, r.q_contrib) == (3, 6, 0.0)
-
-
-# ---------- random walks ----------
-
-@pytest.fixture(scope="module")
-def walk_graph(spark):
-    """Path 1-2-3-4 plus a pendant 5 on 2: mixed degrees (1, 2, 3)."""
-    und = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("b", "e")], "a string, b string"
-    )
-    return (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-
-
-def test_random_walks_every_hop_is_an_edge(spark, walk_graph):
-    from kgforge.graph.algo import random_walks
-
-    corpus = random_walks(walk_graph, length=3).collect()
-    edges = {(r.v, r.u) for r in walk_graph.collect()}
-    bywalk = {}
-    for r in corpus:
-        bywalk.setdefault(r.walk_id, {})[r.pos] = r.node
-    assert len(bywalk) == 5  # one walk per vertex
-    for wid, seq in bywalk.items():
-        assert sorted(seq) == [0, 1, 2, 3]  # full length, no dead ends
-        assert seq[0] == wid  # walk starts at its id
-        for t in range(3):
-            assert (seq[t], seq[t + 1]) in edges
-
-
-def test_random_walks_deterministic(spark, walk_graph):
-    from kgforge.graph.algo import random_walks
-
-    a = {(r.walk_id, r.pos, r.node) for r in random_walks(walk_graph, 3).collect()}
-    b = {(r.walk_id, r.pos, r.node) for r in random_walks(walk_graph, 3).collect()}
-    assert a == b and len(a) == 20
-
-
-# ---------- HITS ----------
-
-def test_hits_two_rounds_hand_computed(spark):
-    """a->c, b->c, c->d.  Worked by hand (L2 norm each half-round):
-    after round 2 auth: c=4/sqrt(17), d=1/sqrt(17);
-    hub: a=b=4/sqrt(33), c=1/sqrt(33); all else 0."""
-    import math
-
-    from kgforge.graph.algo import hits
-
-    de = spark.createDataFrame(
-        [("a", "c"), ("b", "c"), ("c", "d")], "src string, dst string"
-    )
-    got = {r.v: (r.hub, r.auth) for r in hits(de, rounds=2).collect()}
-    s17, s33 = math.sqrt(17), math.sqrt(33)
-    exp = {
-        "a": (4 / s33, 0.0),
-        "b": (4 / s33, 0.0),
-        "c": (1 / s33, 4 / s17),
-        "d": (0.0, 1 / s17),
-    }
-    assert set(got) == set(exp)
-    for v, (h, a) in exp.items():
-        assert abs(got[v][0] - h) < 1e-12 and abs(got[v][1] - a) < 1e-12
-
-
-def test_hits_convergence_mode_reaches_fixpoint(spark):
-    """rounds=None iterates the SAME loop to tol: at the fixed point one
-    more fixed-round step from the converged vectors changes nothing
-    beyond tol, and the symmetric hubs (a, b) stay exactly tied."""
-    from kgforge.graph.algo import hits
-
-    de = spark.createDataFrame(
-        [("a", "c"), ("b", "c"), ("c", "d")], "src string, dst string"
-    )
-    stats = {}
-    fixed = {
-        r.v: (r.hub, r.auth)
-        for r in hits(de, rounds=None, tol=1e-9, max_rounds=100, stats=stats).collect()
-    }
-    assert stats["last_delta"] < 1e-9
-    assert abs(fixed["a"][0] - fixed["b"][0]) < 1e-12
-    # principal-eigenvector structure: c dominates authorities
-    assert fixed["c"][1] > fixed["d"][1] > 0
-
-
-def test_hits_nonconvergence_raises(spark):
-    from kgforge.graph.algo import hits
-
-    de = spark.createDataFrame(
-        [("a", "c"), ("b", "c"), ("c", "d")], "src string, dst string"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        hits(de, rounds=None, tol=1e-15, max_rounds=1)
-
-
-# ---------- node2vec biased walks ----------
-
-def _cycle_nbrs(spark, n=20):
-    """Undirected n-cycle as a symmetric neighbor list."""
-    edges = [(f"v{i:02d}", f"v{(i + 1) % n:02d}") for i in range(n)]
-    und = spark.createDataFrame(edges, "a string, b string")
-    return (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-
-
-def test_node2vec_every_hop_is_an_edge_and_deterministic(spark, walk_graph):
-    from kgforge.graph.algo import node2vec_walks
-
-    corpus = node2vec_walks(walk_graph, length=3).collect()
-    edges = {(r.v, r.u) for r in walk_graph.collect()}
-    bywalk = {}
-    for r in corpus:
-        bywalk.setdefault(r.walk_id, {})[r.pos] = r.node
-    assert len(bywalk) == 5
-    for wid, seq in bywalk.items():
-        assert sorted(seq) == [0, 1, 2, 3]
-        assert seq[0] == wid
-        for t in range(3):
-            assert (seq[t], seq[t + 1]) in edges
-    again = {
-        (r.walk_id, r.pos, r.node)
-        for r in node2vec_walks(walk_graph, length=3).collect()
-    }
-    assert again == {(r.walk_id, r.pos, r.node) for r in corpus}
-
-
-def test_node2vec_outward_bias_on_cycle(spark):
-    """On a cycle every biased hop chooses between returning (alpha
-    1/p = 0.25) and advancing (alpha 1/q = 4.0): backtrack probability
-    is 0.25/4.25 ~ 5.9% per hop vs 50% uniform.  40 biased hops -> a
-    handful of backtracks at most; uniform walks on the same graph
-    backtrack ~half the time.  Deterministic, so the counts are pinned
-    by the hash, not flaky."""
-    from kgforge.graph.algo import node2vec_walks, random_walks
-
-    nbr = _cycle_nbrs(spark, 20)
-
-    def backtracks(corpus):
-        bywalk = {}
-        for r in corpus:
-            bywalk.setdefault(r.walk_id, {})[r.pos] = r.node
-        n = 0
-        for seq in bywalk.values():
-            for t in range(2, max(seq) + 1):
-                if seq[t] == seq[t - 2]:
-                    n += 1
-        return n
-
-    biased = backtracks(node2vec_walks(nbr, length=3).collect())
-    uniform = backtracks(random_walks(nbr, length=3).collect())
-    assert biased <= 8  # E ~ 2.4 of 40
-    assert uniform >= 9  # E ~ 20 of 40 (weak-hash uniform drifts low)
-    assert biased < uniform
-
-
-def test_node2vec_rejects_non_power_of_two(spark, walk_graph):
-    from kgforge.graph.algo import node2vec_walks
-
-    with pytest.raises(AssertionError, match="powers of two"):
-        node2vec_walks(walk_graph, length=2, p=3.0, q=0.5)
 
 
 # ---------- PageRank warm start ----------
@@ -570,20 +246,6 @@ def _random_digraph(spark, seed, n=14, m=30):
     return spark.createDataFrame(edges, "src bigint, dst bigint")
 
 
-def test_hits_norms_on_random_graphs(spark):
-    """On any digraph: both vectors L2-normalize to 1 each round and all
-    scores are non-negative (raw sums of non-negatives)."""
-    from kgforge.graph.algo import hits
-
-    for seed in (7, 23):
-        de = _random_digraph(spark, seed)
-        rows = hits(de, rounds=2).collect()
-        h2 = sum(r.hub ** 2 for r in rows)
-        a2 = sum(r.auth ** 2 for r in rows)
-        assert abs(h2 - 1.0) < 1e-9 and abs(a2 - 1.0) < 1e-9
-        assert all(r.hub >= 0 and r.auth >= 0 for r in rows)
-
-
 def test_weighted_pagerank_conserves_mass_on_random_graphs(spark):
     """Uniform restart + uniform dangling redistribution conserve total
     rank mass 1 regardless of edge weights."""
@@ -598,105 +260,3 @@ def test_weighted_pagerank_conserves_mass_on_random_graphs(spark):
         pr = pagerank(wde, rounds=4)
         mass = sum(r.pr for r in pr.collect())
         assert abs(mass - 1.0) < 1e-9
-
-
-def test_node2vec_valid_on_random_graph(spark):
-    """Biased walks on a random undirected graph: every hop is an edge,
-    one full-length walk per vertex, byte-deterministic."""
-    from kgforge.graph.algo import node2vec_walks
-
-    de = _random_digraph(spark, 42)
-    und = de.filter(F.col("src") != F.col("dst")).select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    nbr = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
-    n_verts = nbr.select("v").distinct().count()
-    corpus = node2vec_walks(nbr, length=3).collect()
-    edges = {(r.v, r.u) for r in nbr.collect()}
-    bywalk = {}
-    for r in corpus:
-        bywalk.setdefault(r.walk_id, {})[r.pos] = r.node
-    assert len(bywalk) == n_verts
-    for seq in bywalk.values():
-        assert sorted(seq) == [0, 1, 2, 3]
-        for t in range(3):
-            assert (seq[t], seq[t + 1]) in edges
-    again = {
-        (r.walk_id, r.pos, r.node)
-        for r in node2vec_walks(nbr, length=3).collect()
-    }
-    assert again == {(r.walk_id, r.pos, r.node) for r in corpus}
-
-
-def _scc_sets(spark, edges):
-    from kgforge.graph.algo import scc
-
-    de = spark.createDataFrame(edges, "src bigint, dst bigint")
-    out = {}
-    for r in scc(de).collect():
-        out.setdefault(r.scc_id, set()).add(r.v)
-    return out
-
-
-def test_scc_planted_graphs(spark):
-    """Hand-derived SCCs: chain (all singletons — the trim fast path),
-    cycle feeding a cycle (two multi-member SCCs resolving across
-    peel layers), an upstream label SMALLER than a cycle's members
-    (the peel-ordering case: 0 -> cycle{5,6} must not pollute the
-    cycle's label), and a self-loop-only vertex (singleton)."""
-    assert _scc_sets(spark, [(1, 2), (2, 3)]) == {1: {1}, 2: {2}, 3: {3}}
-    assert _scc_sets(
-        spark, [(1, 2), (2, 3), (3, 1), (3, 5), (5, 6), (6, 5), (7, 7)]
-    ) == {1: {1, 2, 3}, 5: {5, 6}, 7: {7}}
-    assert _scc_sets(spark, [(0, 5), (5, 6), (6, 5)]) == {
-        0: {0}, 5: {5, 6},
-    }
-
-
-def test_scc_matches_undirected_cc_on_symmetric_graph(spark):
-    """On a symmetric edge set SCC == undirected CC (every undirected
-    component is strongly connected when both directions exist) — the
-    cross-algorithm consistency pin between graph/algo.scc and
-    link/cc.connected_components."""
-    from kgforge.graph.algo import scc
-    from kgforge.link.cc import connected_components
-
-    sym = [(1, 2), (2, 1), (2, 3), (3, 2), (8, 9), (9, 8)]
-    de = spark.createDataFrame(sym, "src bigint, dst bigint")
-    got = {(r.v, r.scc_id) for r in scc(de).collect()}
-    verts = (
-        de.select(F.col("src").alias("entity_id"))
-        .unionByName(de.select(F.col("dst").alias("entity_id")))
-        .distinct()
-    )
-    cc = {
-        (r.entity_id, r.canonical_id)
-        for r in connected_components(verts, de).collect()
-    }
-    assert got == cc
-
-
-def test_scc_loud_guard(spark):
-    """max_outer exhaustion raises instead of returning a partial
-    labeling (non-silent-guard rule)."""
-    import pytest as _pytest
-
-    from kgforge.graph.algo import scc
-
-    # long chain of 2-cycles: {0,1} -> {2,3} -> ... peels one layer per
-    # outer round (trim never fires: every vertex has in+out edges)
-    edges = []
-    for i in range(0, 8, 2):
-        edges += [(i, i + 1), (i + 1, i)]
-        if i + 2 < 8:
-            edges += [(i + 1, i + 2)]
-    de = spark.createDataFrame(edges, "src bigint, dst bigint")
-    with _pytest.raises(RuntimeError, match="outer rounds"):
-        scc(de, max_outer=1)
-    # and with room it resolves fully
-    out = _scc_sets(spark, edges)
-    assert out == {0: {0, 1}, 2: {2, 3}, 4: {4, 5}, 6: {6, 7}}

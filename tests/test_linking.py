@@ -70,6 +70,55 @@ def test_cc_long_chain_converges(spark):
     assert {r.canonical_id for r in labels} == {0}
 
 
+def _union_find_min_labels(vertices, edges):
+    """Plain-Python oracle: each vertex -> min vertex id of its component."""
+    parent = {v: v for v in vertices}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in vertices}
+
+
+def test_cc_matches_union_find_on_random_graphs(spark):
+    """connected_components == union-find on seeded random graphs with
+    duplicate and reversed edges, self-loops and isolated vertices, plus
+    one long chain listed in reverse order."""
+    import random
+
+    graphs = []
+    for seed in range(5):
+        rng = random.Random(seed)
+        n = rng.randint(1, 60)
+        verts = rng.sample(range(1000), n)
+        edges = [
+            (rng.choice(verts), rng.choice(verts))
+            for _ in range(rng.randint(0, n))
+        ]
+        edges += [(b, a) for a, b in rng.sample(edges, len(edges) // 3)]
+        edges += rng.sample(edges, len(edges) // 4)
+        edges += [(v, v) for v in rng.sample(verts, min(3, n))]
+        graphs.append((verts, edges))
+    chain = list(range(60))
+    graphs.append((chain, [(i + 1, i) for i in reversed(range(59))]))
+
+    for verts, edges in graphs:
+        vdf = spark.createDataFrame([(v,) for v in verts], "entity_id bigint")
+        edf = spark.createDataFrame(edges, "src bigint, dst bigint")
+        got = {
+            r.entity_id: r.canonical_id
+            for r in connected_components(vdf, edf).collect()
+        }
+        assert got == _union_find_min_labels(verts, edges)
+
+
 def test_canonicalization_idempotent(spark, triples):
     c1 = canonical_entities(triples)
     m1 = {(r.entity_id, r.canonical_id) for r in c1.collect()}

@@ -23,17 +23,19 @@ def _joined(spark, dim_wrapper):
     return big.join(dim_wrapper(dim), on="k")
 
 
-def test_hint_present_under_gate(spark):
-    from kgforge.functions.joins import maybe_broadcast
+def test_hint_present_under_gate(spark, monkeypatch):
+    import kgforge.functions.joins as joins
 
-    plan = _optimized(_joined(spark, lambda d: maybe_broadcast(d, max_rows=100)))
+    monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 100)
+    plan = _optimized(_joined(spark, joins.maybe_broadcast))
     assert "broadcast" in plan.lower()
 
 
-def test_hint_absent_over_gate(spark):
-    from kgforge.functions.joins import maybe_broadcast
+def test_hint_absent_over_gate(spark, monkeypatch):
+    import kgforge.functions.joins as joins
 
-    plan = _optimized(_joined(spark, lambda d: maybe_broadcast(d, max_rows=5)))
+    monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 5)
+    plan = _optimized(_joined(spark, joins.maybe_broadcast))
     assert "broadcast" not in plan.lower()
 
 
@@ -52,7 +54,7 @@ def test_precounted_rows_skip_the_count(spark):
 
 
 def test_module_gate_is_monkeypatchable(spark, monkeypatch):
-    """max_rows=None reads the module constant at CALL time, so a
+    """maybe_broadcast reads the module constant at CALL time, so a
     deployment (or this test) can turn the gate without touching call
     sites."""
     import kgforge.functions.joins as joins
