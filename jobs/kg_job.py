@@ -5,7 +5,7 @@
         --input  /path/to/repos_table \
         --workdir /path/to/checkpoints \
         --output /path/to/kg_out \
-        [--strategy fused] [--model repos] [--run-id r1]
+        [--strategy fused|relational] [--model repos] [--run-id r1]
         [--context-window K] [--cross-ner] [--format parquet|json|csv|orc]
         [--edge-salt S] [--hot-threshold-rows N]
 

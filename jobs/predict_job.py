@@ -13,7 +13,7 @@ predictions are written as JSONL through io/sinks.assemble_predict_json.
     spark-submit --py-files dist/kgforge.zip jobs/predict_job.py \
         --sentences /path/to/sentences.txt \
         --output    /path/to/predictions \
-        [--format text|json|parquet] [--model repos] [--strategy fused]
+        [--format text|json|parquet] [--model repos] [--strategy fused|relational]
         [--graph /path/to/kg_out]    # kg_job output: serving-time linking
 
 With ``--graph``, the persisted nodes table (kg_job output) is loaded

@@ -9,7 +9,7 @@ eps-guarded division.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 
 
 def f1_score(
@@ -33,15 +33,6 @@ def f1_score(
     recall = correct / (gold + 1e-8)
     f1 = 2 * precision * recall / (precision + recall + 1e-8)
     return f1, precision, recall
-
-
-def prf_counts(
-    pred_rows: Sequence[tuple], gold_rows: Sequence[tuple]
-) -> tuple[int, int, int]:
-    """Global (pred, gold, correct) set counts — the DataFrame-side analog
-    (semi-join J7 + agg A1)."""
-    p, g = set(map(tuple, pred_rows)), set(map(tuple, gold_rows))
-    return len(p), len(g), len(p & g)
 
 
 def bcubed(labeled, pred_col: str = "c", gold_col: str = "g"):

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame
 
 from .ner import explode_mentions, tag_mentions
 from .pairs import pair_relational
-from .rel import classify_pairs, extract_triples_fused, extract_triples_onepass
+from .rel import classify_pairs, extract_triples_onepass
 from .units import extract_units
 
 
@@ -26,18 +26,15 @@ def extract_pipeline(
     strategy='fused'      — maximal fusion: one Arrow pass from content to
                             triples, zero intermediate shuffle or Python
                             round-trip (the 100 TB plan).
-    strategy='staged'     — unit-extraction UDF then cascade UDF (two
-                            Arrow hops; useful when units feed multiple
-                            consumers, e.g. checkpointing the unit table).
     strategy='relational' — mentions self-join + broadcast type filter +
                             window top-k + classify UDF (the plan whose
                             stages are individually oracle-checkable).
-    All strategies produce identical triples (tested).
+    Both strategies produce identical triples (tested).
 
     context_window=k > 0 tags each unit together with its ±k neighbor
     sentences (reference config.yaml:34 context_window, data/utils.py:
-    84-116); without cross_ner it implies the staged fused-ctx path (the
-    window needs the unit table).  k=0 is bit-identical to the plain
+    84-116); without cross_ner it implies the fused-ctx path over the
+    unit table (the window needs it).  k=0 is bit-identical to the plain
     pipeline (tested).
 
     context_window + cross_ner COMPOSE (reference applies both flags in
@@ -49,6 +46,8 @@ def extract_pipeline(
     window the tagger saw.  cross_ner with k=0 reproduces the plain
     cross-NER relational output exactly (tested).
     """
+    if strategy not in ("fused", "relational"):
+        raise ValueError(f"unknown strategy: {strategy}")
     if cross_ner and strategy != "relational":
         raise ValueError("cross_ner requires strategy='relational' "
                          "(mentions must be materialized to propagate)")
@@ -83,12 +82,6 @@ def extract_pipeline(
         return extract_triples_fused_ctx(units, model_name, k=context_window)
     if strategy == "fused":
         return extract_triples_onepass(repos, model_name)
-    units = extract_units(repos)
-    if strategy == "staged":
-        return extract_triples_fused(units, model_name)
-    if strategy == "relational":
-        tagged = tag_mentions(units, model_name)
-        mentions = explode_mentions(tagged)
-        pairs = pair_relational(mentions, model_name)
-        return classify_pairs(pairs, model_name)
-    raise ValueError(f"unknown strategy: {strategy}")
+    mentions = explode_mentions(tag_mentions(extract_units(repos), model_name))
+    pairs = pair_relational(mentions, model_name)
+    return classify_pairs(pairs, model_name)

@@ -20,7 +20,6 @@ sentences, two entities with a non-relational gap, no-entity sentences.
 from __future__ import annotations
 
 import hashlib
-import json
 import random
 from dataclasses import dataclass, field
 
@@ -269,21 +268,3 @@ def golden_triples_for_rows(rows: list[dict]) -> list[dict]:
                     }
                 )
     return out
-
-
-def write_fixtures(outdir: str, n_files: int = 200, n_docs: int = 100, seed: int = 42) -> None:
-    """Write repos.parquet, eval_docs.jsonl, golden_triples.parquet."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    out = Path(outdir)
-    out.mkdir(parents=True, exist_ok=True)
-    rows = gen_repo_rows(n_files, seed)
-    pq.write_table(pa.Table.from_pylist(rows), out / "repos.parquet")
-    docs = gen_eval_docs(n_docs, seed=7)
-    with open(out / "eval_docs.jsonl", "w") as f:
-        for d in docs:
-            f.write(json.dumps(d) + "\n")
-    golden = golden_triples_for_rows(rows)
-    pq.write_table(pa.Table.from_pylist(golden), out / "golden_triples.parquet")

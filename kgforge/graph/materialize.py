@@ -202,19 +202,7 @@ def materialize_graph(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, edges
 
 
-def write_repaired(df: DataFrame, path: str, keys: list[str], n_files: int | None = None):
+def write_repaired(df: DataFrame, path: str, keys: list[str]):
     """Repartition on the output key before write — clustered files, no
     small-file explosion; idempotent overwrite."""
-    out = df.repartition(n_files, *keys) if n_files else df.repartition(*keys)
-    out.write.mode("overwrite").parquet(path)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Directory-partitioned write (partitionBy layout): downstream scans
-    that filter on the partition column read ONLY matching directories —
-    PartitionFilters prune at planning time, zero data touched for
-    non-matching partitions.  Use for low-cardinality dimensions
-    (ent_type, lang, date); use write_repaired's clustering for
-    high-cardinality keys (a 10^8-value partitionBy would create 10^8
-    directories — the small-files failure mode)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    df.repartition(*keys).write.mode("overwrite").parquet(path)

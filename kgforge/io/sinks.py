@@ -1,4 +1,4 @@
-"""Output assembly — predict-mode JSON (S9) and repaired-partition writers.
+"""Output assembly — predict-mode JSON (S9) and its JSONL writer.
 
 Reference analog: ``get_dataset_ace_for_predict``
 (data/data_module.py:94-130) assembles per-sentence dicts
@@ -56,22 +56,3 @@ def assemble_predict_json(
 def write_jsonl(df: DataFrame, path: str, payload_col: str = "payload") -> None:
     """One JSON object per line (the reference's predict output file)."""
     df.select(payload_col).write.mode("overwrite").text(path)
-
-
-def write_bucketed(
-    df, table_name: str, bucket_cols: list[str], n_buckets: int = 32
-) -> None:
-    """Persist as a BUCKETED table (bucketBy + sortBy on the join key).
-
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle — each bucket pair is co-located at scan time.  This
-    is the storage-side contract for repeated large-to-large joins
-    (triples↔triples provenance joins, gold↔pred alignment at eval scale):
-    pay one clustered write, skip the exchange on every subsequent join.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )

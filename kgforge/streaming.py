@@ -1,96 +1,22 @@
 """Structured Streaming surface for incremental KG construction: new
 repo files arrive continuously and the graph follows them.
 
-- ``run_stream_once`` drains the repo backlog into an append-only
-  triples parquet.  The fused extraction cascade
-  (extract_triples_onepass) is stateless and row-local, so the SAME
-  mapInPandas runs unchanged on a streaming DataFrame, and
-  ``trigger(availableNow=True)`` makes the streamed triples equal the
-  batch ones (tested).
 - ``run_incremental_graph`` maintains the graph itself: per micro-batch
-  it folds the delta into the persisted nodes/edges/canonical dim with
-  graph/merge.merge_graph and publishes a full snapshot
-  ``state_dir/epoch=N`` under a ``_COMPLETE`` marker.
+  it extracts the delta triples with the fused cascade
+  (extract_triples_onepass), folds them into the persisted
+  nodes/edges/canonical dim with graph/merge.merge_graph and publishes
+  a full snapshot ``state_dir/epoch=N`` under a ``_COMPLETE`` marker.
   ``latest_complete_epoch`` and ``read_graph_state`` read that state;
   ``prune_graph_epochs`` is its retention (jobs/maintain_job.py).
-- ``windowed_triple_counts`` and ``streaming_sessionize`` are
-  watermarked event-time aggregations over a streaming frame.
+- ``streaming_sessionize`` is a watermarked event-time aggregation over
+  a streaming frame.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
-REPOS_SCHEMA = StructType(
-    [
-        StructField("repo", StringType()),
-        StructField("path", StringType()),
-        StructField("commit", StringType()),
-        StructField("lang", StringType()),
-        StructField("content", StringType()),
-    ]
-)
-
-
-def read_repo_stream(
-    spark: SparkSession, input_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(REPOS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format("json").load(input_dir)
-
-
-def run_stream_once(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    model_name: str = "repos",
-) -> None:
-    """Drain all available input into an append-only triples parquet and
-    stop.  Re-running resumes from the stream checkpoint — files already
-    processed are not re-extracted (exactly-once per input file)."""
-    from .extract.rel import extract_triples_onepass
-
-    triples = extract_triples_onepass(read_repo_stream(spark, input_dir), model_name)
-    q = (
-        triples.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def windowed_triple_counts(
-    triples_stream: DataFrame,
-    ts_col: str = "event_time",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Event-time windowed triple-rate aggregation with late-data handling:
-    per (window, pred) counts, watermarked so state is bounded — rows later
-    than ``watermark`` are dropped (counted by the sink's streaming
-    metrics, never silently lost in-window).  Append output mode: a window
-    emits once, when the watermark passes it."""
-    from pyspark.sql import functions as F
-
-    return (
-        triples_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), "pred")
-        .agg(F.count("*").alias("n_triples"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "pred",
-            "n_triples",
-        )
-    )
+REPOS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
 def latest_complete_epoch(state_dir: str) -> int | None:
@@ -245,7 +171,9 @@ def run_incremental_graph(
         _set_latest(epoch_id)
 
     q = (
-        read_repo_stream(spark, input_dir, max_files_per_trigger=1)
+        spark.readStream.schema(REPOS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(input_dir)
         .writeStream.foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -1,10 +1,10 @@
-"""io.sources reader + fixture writer round trip."""
+"""io.sources readers."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from kgforge.fixtures import gen_repo_rows, write_fixtures
+from kgforge.fixtures import gen_repo_rows
 from kgforge.io.sources import read_repos
 
 
@@ -24,22 +24,6 @@ def test_read_repos_validates_schema(spark, tmp_path):
     pq.write_table(pa.Table.from_pylist([{"a": 1}]), tmp_path / "bad.parquet")
     with pytest.raises(ValueError, match="missing columns"):
         read_repos(spark, str(tmp_path / "bad.parquet"))
-
-
-def test_write_fixtures_roundtrip(spark, tmp_path):
-    write_fixtures(str(tmp_path), n_files=40, n_docs=10)
-    repos = spark.read.parquet(str(tmp_path / "repos.parquet"))
-    golden = spark.read.parquet(str(tmp_path / "golden_triples.parquet"))
-    assert repos.count() == 40
-    assert golden.count() > 0
-    assert (tmp_path / "eval_docs.jsonl").exists()
-    # golden matches the live pipeline over the written repos table
-    from kgforge.extract.pipeline import extract_pipeline
-
-    key_cols = ["repo", "path", "unit_id", "subj", "pred", "obj"]
-    got = {tuple(r) for r in extract_pipeline(repos, "fused").select(*key_cols).collect()}
-    want = {tuple(r) for r in golden.select(*key_cols).collect()}
-    assert got == want
 
 
 def test_overlay_predictions(spark):

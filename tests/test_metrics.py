@@ -2,7 +2,7 @@
 
 import pytest
 
-from kgforge.core.metrics import f1_score, prf_counts
+from kgforge.core.metrics import f1_score
 
 
 def test_perfect_match():
@@ -30,7 +30,3 @@ def test_slice_prefix_comparison():
 def test_empty_inputs_zero():
     f1, p, r = f1_score([{"p": [], "g": []}], "p", "g")
     assert f1 == 0.0 and p == 0.0 and r == 0.0
-
-
-def test_prf_counts():
-    assert prf_counts([("a",), ("b",)], [("b",), ("c",)]) == (2, 2, 1)

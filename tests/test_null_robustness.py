@@ -2,6 +2,8 @@
 at 10^12-file scale always contain these; no UDF may crash."""
 
 from kgforge.extract.pipeline import extract_pipeline
+from kgforge.extract.rel import extract_triples_fused
+from kgforge.extract.units import extract_units
 
 
 def _dirty_df(spark):
@@ -21,8 +23,13 @@ def _dirty_df(spark):
 def test_pipeline_survives_dirty_rows_all_strategies(spark):
     df = _dirty_df(spark)
     results = {}
-    for strategy in ("fused", "staged", "relational"):
-        out = extract_pipeline(df, strategy).collect()
+    plans = {
+        "fused": extract_pipeline(df, "fused"),
+        "staged": extract_triples_fused(extract_units(df)),
+        "relational": extract_pipeline(df, "relational"),
+    }
+    for strategy, plan in plans.items():
+        out = plan.collect()
         results[strategy] = {
             (r.repo, r.path, r.unit_id, r.subj, r.pred, r.obj) for r in out
         }

@@ -8,6 +8,8 @@ from kgforge.core.metrics import f1_score
 from kgforge.core.model import get_model
 from kgforge.core.surrogate import extract_triples
 from kgforge.extract.pipeline import extract_pipeline
+from kgforge.extract.rel import extract_triples_fused
+from kgforge.extract.units import extract_units
 from kgforge.fixtures import (
     gen_eval_docs,
     gen_repo_rows,
@@ -41,9 +43,12 @@ def test_fused_matches_golden(spark, corpus):
 def test_all_strategies_match(spark, corpus):
     _, repos = corpus
     fused = {KEY(r) for r in extract_pipeline(repos, "fused").collect()}
-    staged = {KEY(r) for r in extract_pipeline(repos, "staged").collect()}
+    staged = {KEY(r) for r in extract_triples_fused(extract_units(repos)).collect()}
     rel = {KEY(r) for r in extract_pipeline(repos, "relational").collect()}
     assert fused == staged == rel
+    for context_window in (0, 1):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            extract_pipeline(repos, "staged", context_window=context_window)
 
 
 def test_partition_invariance(spark, corpus):

@@ -1,16 +1,12 @@
-"""Streaming == batch for the extraction cascade; checkpoint gives
-exactly-once per input file."""
+"""Streaming == batch for incremental graph maintenance; epoch markers
+make replays and stale _LATEST files safe; streaming sessionization
+matches the batch semantics."""
 
 import json
 import pathlib
 
 from kgforge.extract.pipeline import extract_pipeline
 from kgforge.fixtures import gen_repo_rows
-from kgforge.streaming import run_stream_once
-
-KEY = lambda r: (  # noqa: E731
-    r.repo, r.path, r.unit_id, r.subj, r.pred, r.obj, r.subj_type, r.obj_type,
-)
 
 
 def _write_json_files(rows, d: pathlib.Path, per_file: int = 20, prefix: str = "batch"):
@@ -19,83 +15,6 @@ def _write_json_files(rows, d: pathlib.Path, per_file: int = 20, prefix: str = "
         with open(d / f"{prefix}-{i:05d}.json", "w") as f:
             for r in rows[i : i + per_file]:
                 f.write(json.dumps(r) + "\n")
-
-
-def test_stream_matches_batch(spark, tmp_path):
-    rows = gen_repo_rows(60)
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    _write_json_files(rows, inp)
-
-    run_stream_once(spark, str(inp), str(out), str(ckpt))
-    streamed = {KEY(r) for r in spark.read.parquet(str(out)).collect()}
-    batch = {KEY(r) for r in extract_pipeline(spark.createDataFrame(rows), "fused").collect()}
-    assert streamed == batch
-
-
-def test_stream_resume_exactly_once(spark, tmp_path):
-    rows = gen_repo_rows(60)
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    _write_json_files(rows[:40], inp)
-    run_stream_once(spark, str(inp), str(out), str(ckpt))
-    n1 = spark.read.parquet(str(out)).count()
-
-    # re-run with no new input: nothing re-extracted
-    run_stream_once(spark, str(inp), str(out), str(ckpt))
-    assert spark.read.parquet(str(out)).count() == n1
-
-    # late-arriving files (same watched dir): only the delta is appended
-    _write_json_files(rows[40:], inp, prefix="late")
-    run_stream_once(spark, str(inp), str(out), str(ckpt))
-    total = spark.read.parquet(str(out)).count()
-    batch_total = extract_pipeline(spark.createDataFrame(rows), "fused").count()
-    assert total == batch_total
-
-
-def test_windowed_triple_counts_watermark(spark, tmp_path):
-    """Event-time windowed counts with watermark: windows close when the
-    watermark passes; per-(window, pred) counts match a batch groupBy."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from kgforge.streaming import windowed_triple_counts
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    # two 10-min windows of triples, then a far-future row to advance the
-    # watermark past both
-    for i in range(40):
-        rows.append(
-            {"pred": "USED-FOR" if i % 2 else "PART-OF",
-             "event_time": (base + dt.timedelta(minutes=i % 20)).isoformat()}
-        )
-    rows.append({"pred": "USED-FOR",
-                 "event_time": (base + dt.timedelta(hours=6)).isoformat()})
-    inp = tmp_path / "in"
-    _write_json_files(rows, inp, per_file=10)
-
-    stream = (
-        spark.readStream.schema("pred string, event_time string")
-        .format("json").load(str(inp))
-        .withColumn("event_time", F.to_timestamp("event_time"))
-    )
-    out = windowed_triple_counts(stream, window="10 minutes", watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory").queryName("win_counts")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.window_start.isoformat(), r.pred): r.n_triples
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    # the two closed windows carry 10 rows per pred each
-    assert got[("2026-01-01T00:00:00", "USED-FOR")] == 10
-    assert got[("2026-01-01T00:00:00", "PART-OF")] == 10
-    assert got[("2026-01-01T00:10:00", "USED-FOR")] == 10
-    assert got[("2026-01-01T00:10:00", "PART-OF")] == 10
-    # the far-future window is NOT emitted (watermark has not passed it)
-    assert all(ws.startswith("2026-01-01T00:") for ws, _ in got)
 
 
 def test_incremental_graph_stream_equals_batch(spark, tmp_path):
