@@ -2,11 +2,9 @@
 ``QUERIES``/``ORACLES`` registry as kgforge/queries.py (which imports this
 module at its end).
 
-Relational (TPC-H Q1, per-group top-k, sessionization, KMV distincts,
-length curriculum), embedding search (cosine top-k, IVF) and KG
-consumption (two-hop, PageRank).  Each keeps its DuckDB oracle and the
-tests that pin it; the KG-construction layers never call into this
-module.
+Relational (KMV distincts, length curriculum) and embedding search
+(cosine top-k, IVF).  Each keeps its DuckDB oracle and the tests that
+pin it; the KG-construction layers never call into this module.
 """
 
 from __future__ import annotations
@@ -15,117 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .functions.hashing import MOD, charfold, sql_charfold
-from .queries import SQL_TRIPLES, _docs, _t, kg_edges, register
-
-
-@register(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_c,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-             AS sum_disc_price_c,
-           CAST(SUM(CAST(ROUND(l_discount * 10000) AS BIGINT)) AS BIGINT) AS sum_disc_bp,
-           CAST(COUNT(*) AS BIGINT) AS count_order
-    FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: scan-filter-agg with map-side partial aggregation
-    (A1 analog).  Predicate pushes to the parquet scan.  Money sums in
-    integer cents: per-row ROUND is bitwise-identical across engines,
-    integer sums are exact — no cross-engine float-accumulation drift."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp")
-    )
-    cents = lambda c, m=100: F.round(c * m).cast("bigint")  # noqa: E731
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(cents(F.col("l_quantity"))).cast("bigint").alias("sum_qty_c"),
-        F.sum(cents(F.col("l_extendedprice"))).cast("bigint").alias("sum_base_price_c"),
-        F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .cast("bigint")
-        .alias("sum_disc_price_c"),
-        F.sum(cents(F.col("l_discount"), 10000)).cast("bigint").alias("sum_disc_bp"),
-        F.count("*").alias("count_order"),
-    )
-
-
-@register(
-    "q_topk_per_group",
-    """
-    SELECT o_custkey, o_orderkey, CAST(rnk AS BIGINT) AS rnk FROM (
-      SELECT o_custkey, o_orderkey,
-             ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-      FROM orders) WHERE rnk <= 3
-    """,
-)
-def q_topk_per_group(spark, sf_dir):
-    """Per-group top-k via row_number (W1 ranking + W2 truncation) with a
-    total-order tie-break."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        o.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "rnk")
-    )
-
-
-@register(
-    "q_sessionize",
-    """
-    WITH x AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(LAG(ts) OVER w) > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    s AS (SELECT user_id, ts,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS sid
-          FROM x)
-    SELECT user_id, CAST(sid AS BIGINT) AS session_ix,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 1000000 AS BIGINT)
-             AS duration_s
-    FROM s GROUP BY 1, 2
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """Event SESSIONIZATION (gaps-and-islands): per user, a new session
-    starts after a >30-min silence; outputs per-session event count and
-    whole-second duration.  The batch ground truth for the streaming
-    session_window twin (kgforge.streaming.streaming_sessionize —
-    equivalence pinned by tests/test_streaming.py).  Scale shape: both
-    windows partition by user_id — parallel across users, ordered only
-    within one user's events; duration in integer microsecond
-    arithmetic so both engines agree exactly."""
-    gap_us = 1800 * 1_000_000
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = _t(spark, sf_dir, "events")
-    # parquet stores TIMESTAMP_NTZ; session tz is pinned UTC, so the cast
-    # to TIMESTAMP is the identity epoch mapping both engines use
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    prev = F.lag("ts").over(w)
-    new_s = (
-        prev.isNull() | (us(F.col("ts")) - us(prev) > gap_us)
-    ).cast("bigint")
-    s = e.withColumn("new_s", new_s).withColumn(
-        "sid",
-        F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return s.groupBy(
-        "user_id", F.col("sid").cast("bigint").alias("session_ix")
-    ).agg(
-        F.count("*").alias("n_events"),
-        (
-            (us(F.max("ts")) - us(F.min("ts"))) / F.lit(1_000_000)
-        ).cast("bigint").alias("duration_s"),
-    )
+from .queries import _docs, _t, register
 
 
 @register(
@@ -389,103 +277,6 @@ def ann_ivf_recall(spark, sf_dir):
         F.col("n").cast("bigint").alias("n_hits"),
         F.round(F.col("n") / 10.0, 4).alias("recall_at_10"),
     )
-
-
-_SQL_EDGES = SQL_TRIPLES + """
-    , edges AS (
-      SELECT md5(subj || ':' || subj_type) AS src,
-             md5(obj || ':' || obj_type) AS dst,
-             pred, COUNT(*) AS weight
-      FROM triples GROUP BY 1, 2, 3
-    )
-"""
-
-
-@register(
-    "kg_two_hop",
-    _SQL_EDGES
-    + """
-    SELECT a.pred AS pred_ab, b.pred AS pred_bc,
-           CAST(COUNT(*) AS BIGINT) AS n_paths,
-           CAST(COUNT(DISTINCT a.src) AS BIGINT) AS n_src
-    FROM edges a JOIN edges b ON a.dst = b.src AND a.src <> b.dst
-    GROUP BY 1, 2
-    """,
-)
-def kg_two_hop(spark, sf_dir):
-    """Two-hop traversal (A -[p1]-> B -[p2]-> C, no immediate backtrack):
-    per relation-pair path counts — the motif-count primitive.  Scale
-    note: the hop join shuffles on the shared vertex; hub vertices are
-    exactly the skew the AQE skew-join test + salting pattern cover."""
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    a = e.select(F.col("src").alias("a_src"), F.col("dst").alias("mid"),
-                 F.col("pred").alias("pred_ab"))
-    b = e.select(F.col("src").alias("mid"), F.col("dst").alias("b_dst"),
-                 F.col("pred").alias("pred_bc"))
-    paths = a.join(b, on="mid").filter(F.col("a_src") != F.col("b_dst"))
-    return paths.groupBy("pred_ab", "pred_bc").agg(
-        F.count("*").alias("n_paths"),
-        F.countDistinct("a_src").alias("n_src"),
-    )
-
-
-_SQL_PAGERANK = _SQL_EDGES + """
-    , de AS (SELECT DISTINCT src, dst FROM edges),
-    verts AS (SELECT src AS v FROM de UNION SELECT dst FROM de),
-    nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM verts),
-    od AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM de GROUP BY src),
-    pr0 AS (SELECT v, 1.0 / n AS pr FROM verts, nn),
-    dang1 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr0 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c1 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr0 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr1 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c1.s, 0) + dang1.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang1
-      LEFT JOIN c1 ON verts.v = c1.v),
-    dang2 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr1 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c2 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr1 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr2 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c2.s, 0) + dang2.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang2
-      LEFT JOIN c2 ON verts.v = c2.v),
-    dang3 AS (SELECT COALESCE(SUM(p.pr), 0) AS dang FROM pr2 p
-      LEFT JOIN od ON p.v = od.src WHERE od.src IS NULL),
-    c3 AS (SELECT de.dst AS v, SUM(p.pr / od.deg) AS s
-      FROM de JOIN pr2 p ON de.src = p.v JOIN od ON de.src = od.src
-      GROUP BY de.dst),
-    pr3 AS (
-      SELECT verts.v,
-             0.15 / nn.n + 0.85 * (COALESCE(c3.s, 0) + dang3.dang / nn.n) AS pr
-      FROM verts CROSS JOIN nn CROSS JOIN dang3
-      LEFT JOIN c3 ON verts.v = c3.v),
-    final AS (SELECT v, pr FROM pr3)
-    SELECT v, ROUND(pr, 8) AS pr FROM final
-"""
-
-
-@register("kg_pagerank", _SQL_PAGERANK)
-def kg_pagerank(spark, sf_dir):
-    """PageRank over the materialized KG (3 power iterations, d=0.85,
-    dangling mass redistributed uniformly) — the entity-importance
-    primitive a KG consumer ranks hubs with.  Same iterative-join shape
-    as the CC loop: per round one contribution shuffle on the edge key +
-    one tiny dangling aggregate; the oracle unrolls the identical three
-    rounds.  Plain joins, no UDF; round(…, 8) absorbs cross-engine float
-    summation order.  Shared loop: graph/algo.pagerank — the production
-    twin (rounds=None) power-iterates the SAME code to tolerance under
-    the CC guard (pinned by tests/test_graph_algo.py)."""
-    from .graph.algo import pagerank
-
-    e = kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    de = e.select("src", "dst").distinct()
-    return pagerank(de, rounds=3).select("v", F.round("pr", 8).alias("pr"))
 
 
 @register(

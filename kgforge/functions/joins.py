@@ -18,8 +18,7 @@ it return the frame unhinted so the planner falls back to a shuffle
 join and AQE handles size/skew at runtime.
 
 Shared by graph/materialize.attach_canonical_ids,
-jobs/predict_job.link_against_graph, link/cc.connected_components and
-graph/algo.py.
+jobs/predict_job.link_against_graph and link/cc.connected_components.
 """
 
 from __future__ import annotations

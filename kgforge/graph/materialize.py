@@ -32,6 +32,10 @@ from ..link.canonical import entity_vertices, lsh_candidate_pairs
 from ..link.cc import connected_components
 
 DEFAULT_SALT = 16
+# provenance kept per edge: a deterministic min-k sample of (repo, path,
+# unit_id); build_edges and merge.merge_edges share it so a one-shot build
+# equals an incremental merge
+N_PROVENANCE = 3
 
 
 def canonical_entities(triples: DataFrame) -> DataFrame:
@@ -124,10 +128,8 @@ def detect_hot_edge_keys(
 
 def build_edges(
     linked_triples: DataFrame,
-    n_provenance: int = 3,
     salt: int = DEFAULT_SALT,
     hot_threshold_rows: int = 10_000,
-    hot_sample: float = 0.01,
 ) -> DataFrame:
     """(src, dst, pred) edges with weight + bounded provenance sample.
 
@@ -138,9 +140,9 @@ def build_edges(
     SELECTIVE salting (measured, BENCH/SKEW.md): salting every key
     multiplies the partial stage's group count by ``salt``, which slows
     the balanced part of the corpus more than the straggler it removes —
-    so a seeded ``hot_sample`` fraction is counted per key first and only
-    keys whose estimated full count exceeds ``hot_threshold_rows`` get
-    salted; cold keys keep ``_salt = 0`` (single group, map-side combine
+    so a seeded sample (detect_hot_edge_keys) is counted per key first
+    and only keys whose estimated full count exceeds ``hot_threshold_rows``
+    get salted; cold keys keep ``_salt = 0`` (single group, map-side combine
     as before).  The hot-key set is tiny by construction (few mega-repo
     hubs), so it broadcasts.  Which keys get salted affects only the
     PLAN; the output is salt-invariant (tests/test_salting.py).
@@ -155,7 +157,7 @@ def build_edges(
     """
     row_salt = F.pmod(F.xxhash64("repo", "path", "unit_id"), F.lit(salt))
     if salt > 1 and hot_threshold_rows > 0:
-        hot = detect_hot_edge_keys(linked_triples, hot_threshold_rows, hot_sample)
+        hot = detect_hot_edge_keys(linked_triples, hot_threshold_rows)
         with_salt = (
             linked_triples.join(F.broadcast(hot), on=["src", "dst", "pred"], how="left")
             .withColumn(
@@ -170,13 +172,13 @@ def build_edges(
         F.count("*").alias("w"),
         F.slice(
             F.sort_array(F.collect_set(F.struct("repo", "path", "unit_id"))),
-            1, n_provenance,
+            1, N_PROVENANCE,
         ).alias("prov"),
     )
     final = partial.groupBy("src", "dst", "pred").agg(
         F.sum("w").alias("weight"),
         F.slice(
-            F.sort_array(F.flatten(F.collect_list("prov"))), 1, n_provenance
+            F.sort_array(F.flatten(F.collect_list("prov"))), 1, N_PROVENANCE
         ).alias("provenance"),
     )
     return final

@@ -14,8 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import N_PROVENANCE
 
-def merge_edges(existing: DataFrame, delta: DataFrame, n_provenance: int = 3) -> DataFrame:
+
+def merge_edges(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold delta edges (src, dst, pred, weight, provenance) into existing:
     weights add, provenance stays a deterministic min-k sample."""
     unioned = existing.select("src", "dst", "pred", "weight", "provenance").unionByName(
@@ -26,7 +28,7 @@ def merge_edges(existing: DataFrame, delta: DataFrame, n_provenance: int = 3) ->
         F.slice(
             F.sort_array(F.array_distinct(F.flatten(F.collect_list("provenance")))),
             1,
-            n_provenance,
+            N_PROVENANCE,
         ).alias("provenance"),
     )
 

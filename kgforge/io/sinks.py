@@ -53,6 +53,6 @@ def assemble_predict_json(
     )
 
 
-def write_jsonl(df: DataFrame, path: str, payload_col: str = "payload") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """One JSON object per line (the reference's predict output file)."""
-    df.select(payload_col).write.mode("overwrite").text(path)
+    df.select("payload").write.mode("overwrite").text(path)

@@ -29,8 +29,6 @@ REPOS_DDL = ", ".join(f"{c} string" for c in REPOS_COLUMNS)
 def read_repos(
     spark: SparkSession,
     source: str,
-    with_sha: bool = True,
-    min_partitions: int | None = None,
     fmt: str = "parquet",
 ) -> DataFrame:
     """Read the repos input table.
@@ -39,8 +37,7 @@ def read_repos(
     anything else is a file path read as ``fmt`` (parquet/json/csv/orc —
     self-describing formats keep their schema; json/csv get the explicit
     repos DDL so a typo'd column fails loudly instead of inferring).
-    ``min_partitions`` guards against tiny local inputs collapsing to one
-    scan split (the single-split trap, docs/PLANS.md §2).
+    The ``content_sha`` provenance column is always attached.
     """
     if source.startswith("table:"):
         df = spark.read.table(source.split(":", 1)[1])
@@ -61,12 +58,7 @@ def read_repos(
         )
     else:
         raise ValueError(f"unsupported repos format: {fmt}")
-    df = _validate(df)
-    if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    if with_sha:
-        df = df.withColumn("content_sha", F.sha2(F.col("content"), 256))
-    return df
+    return _validate(df).withColumn("content_sha", F.sha2(F.col("content"), 256))
 
 
 def overlay_predictions(

@@ -8,13 +8,11 @@ repo files arrive continuously and the graph follows them.
   a full snapshot ``state_dir/epoch=N`` under a ``_COMPLETE`` marker.
   ``latest_complete_epoch`` and ``read_graph_state`` read that state;
   ``prune_graph_epochs`` is its retention (jobs/maintain_job.py).
-- ``streaming_sessionize`` is a watermarked event-time aggregation over
-  a streaming frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 REPOS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -63,41 +61,6 @@ def prune_graph_epochs(state_dir: str, keep_last: int = 2) -> list[int]:
     for n in pruned:
         shutil.rmtree(os.path.join(state_dir, f"epoch={n}"))
     return pruned
-
-
-def streaming_sessionize(
-    events_stream: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming event sessionization via the built-in SESSION WINDOW:
-    per user, events closer than ``gap`` merge into one growing session;
-    a session closes (and emits, in append mode) once the watermark
-    passes its end.  Semantically identical to the batch
-    gaps-and-islands formulation (q_sessionize) — the session boundary
-    is the same >gap silence, INCLUDING the exact-gap edge: an event at
-    precisely last_ts + gap merges in both (session_window treats the
-    adjacent window [t+gap, ...) as part of the session; pinned by
-    test_streaming_sessionize_exact_gap_boundary, r4 ADVICE).  State is
-    bounded by open sessions x users; the watermark is what lets Spark
-    expire closed sessions."""
-    from pyspark.sql import functions as F
-
-    return (
-        events_stream
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), user_col)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            user_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
 
 
 def run_incremental_graph(

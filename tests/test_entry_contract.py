@@ -41,22 +41,15 @@ KEEP = {
 # the analytics queries of kgforge/analytics_queries.py, registered into
 # the same registry
 ANALYTICS = {
-    "q1_pricing_summary",
-    "q_topk_per_group",
-    "q_sessionize",
     "q_distinct_kmv",
     "curate_length_curriculum",
     "ann_cosine_topk",
     "ann_ivf_topk",
     "ann_ivf_recall",
     "ann_multi_topk",
-    "kg_two_hop",
-    "kg_pagerank",
 }
 
 FAST_SUBSET = [
-    "q1_pricing_summary",
-    "q_topk_per_group",
     "kg_mentions",
     "kg_triples",
     "kg_content_sha",
@@ -65,11 +58,9 @@ FAST_SUBSET = [
     "kg_cross_mentions",
     "kg_predict_json",
     "ann_ivf_topk",
-    "kg_two_hop",
     "kg_ctx_cross",
     "ann_ivf_recall",
     "bpe_merges",
-    "kg_pagerank",
 ]
 
 

@@ -1,11 +1,6 @@
-"""Round-7 guard + scale-lift pins (r6 ADVICE items and VERDICT #1):
-
-- pagerank / pagerank_residual on an EMPTY edge frame are no-ops, not
-  ZeroDivisionError (incl. the all-weights-non-positive case that
-  empties the frame after the w > 0 filter).
-- curate_length_curriculum's arithmetic phase rule == literal NTILE(4)
-  for every n mod 4 residue, and its plan has no non-terminal
-  SinglePartition exchange.
+"""curate_length_curriculum's arithmetic phase rule == literal NTILE(4)
+for every n mod 4 residue, and its plan has no non-terminal
+SinglePartition exchange.
 """
 
 from __future__ import annotations
@@ -13,27 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-
-def test_pagerank_empty_graph_is_noop(spark):
-    from kgforge.graph.algo import pagerank, pagerank_residual
-
-    empty = spark.createDataFrame([], "src long, dst long")
-    stats: dict = {}
-    pr = pagerank(empty, rounds=None, stats=stats)
-    assert pr.columns == ["v", "pr"]
-    assert pr.count() == 0
-    assert stats == {"rounds": 0, "last_delta": 0.0}
-    assert pagerank_residual(empty, pr) == 0.0
-
-
-def test_pagerank_all_nonpositive_weights_is_noop(spark):
-    from kgforge.graph.algo import pagerank
-
-    de = spark.createDataFrame(
-        [(1, 2, 0.0), (2, 3, -1.0)], "src long, dst long, w double"
-    )
-    assert pagerank(de, rounds=2).count() == 0
 
 
 @pytest.mark.parametrize("n", [3, 4, 7, 10, 12, 13])

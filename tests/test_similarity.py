@@ -1,5 +1,5 @@
 """Production fold cosine vs oracle-parity explode-join: identical output
-(two physical plans, one math), plus the broadcast size gate."""
+(two physical plans, one math)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,41 +36,6 @@ def test_fold_plan_has_no_explode(spark, emb):
     (posexplode) node in its optimized plan."""
     plan = cosine_topk(emb, k=5)._jdf.queryExecution().optimizedPlan().toString()
     assert "Generate" not in plan
-
-
-def test_broadcast_size_gate(spark, monkeypatch):
-    """attach_canonical_ids: forced-shuffle path (module gate patched to 0,
-    read at call time) must produce exactly the broadcast path's rows."""
-    from kgforge.functions import joins
-    from kgforge.graph.materialize import attach_canonical_ids, canonical_entities
-
-    rows = [
-        ("r", "p", i, s, "Method", "USED-FOR", o, "Task")
-        for i, (s, o) in enumerate(
-            [("anchor model", "prism index"), ("anchor model", "quartz sampler"),
-             ("prism index", "quartz sampler")]
-        )
-    ]
-    t = spark.createDataFrame(
-        rows,
-        "repo string, path string, unit_id long, subj string, subj_type string,"
-        " pred string, obj string, obj_type string",
-    )
-    can = canonical_entities(t).localCheckpoint(eager=True)
-    via_bcast = attach_canonical_ids(t, can)  # dim far below default gate
-    monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 0)
-    via_shuffle = attach_canonical_ids(t, can)
-    key = lambda r: (r.repo, r.path, r.unit_id, r.subj, r.obj, r.src, r.dst)
-    assert sorted(map(key, via_bcast.collect())) == sorted(
-        map(key, via_shuffle.collect())
-    )
-    # the gate changes the PLANNED join strategy (pre-AQE sparkPlan): with
-    # the hint -> broadcast; without -> shuffle join, and only runtime AQE
-    # stats may re-promote it (which is exactly the at-scale contract)
-    bp = via_bcast._jdf.queryExecution().sparkPlan().toString()
-    sp = via_shuffle._jdf.queryExecution().sparkPlan().toString()
-    assert "BroadcastHashJoin" in bp
-    assert "BroadcastHashJoin" not in sp
 
 
 def test_ivf_topk_recall_vs_bruteforce(spark, emb):

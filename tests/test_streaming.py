@@ -1,6 +1,5 @@
 """Streaming == batch for incremental graph maintenance; epoch markers
-make replays and stale _LATEST files safe; streaming sessionization
-matches the batch semantics."""
+make replays and stale _LATEST files safe."""
 
 import json
 import pathlib
@@ -148,130 +147,3 @@ def test_incremental_graph_replays_epoch_without_complete(spark, tmp_path):
     assert sorted(map(key_n, nodes_s.collect())) == sorted(
         map(key_n, nodes_f.collect())
     )
-
-
-def test_streaming_sessionize_matches_batch_semantics(spark, tmp_path):
-    """session_window streaming twin of q_sessionize: same >30-min-gap
-    session boundaries as the batch gaps-and-islands formulation.
-    Sessions only emit once the watermark passes their end (+gap), so a
-    far-future flush event in a second drain closes the real ones —
-    the append-mode contract, asserted explicitly."""
-    import json
-
-    from kgforge.streaming import streaming_sessionize
-
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    inp.mkdir()
-
-    def write(rows, name):
-        with open(inp / f"{name}.json", "w") as f:
-            for uid, ts in rows:
-                f.write(json.dumps({"user_id": uid, "ts": ts}) + "\n")
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp")
-            .format("json").load(str(inp))
-        )
-        q = (
-            streaming_sessionize(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out)).outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-    # user 1: two sessions ([00:00, 00:10] then [00:50]); user 2: one
-    write([
-        (1, "2026-01-01T00:00:00"),
-        (1, "2026-01-01T00:10:00"),
-        (1, "2026-01-01T00:50:00"),   # 40-min gap > 30 -> new session
-        (2, "2026-01-01T00:05:00"),
-    ], "b0")
-    drain()
-    write([(99, "2026-01-01T10:00:00")], "b1")  # watermark flush
-    drain()
-    got = {
-        (r.user_id, str(r.session_start), r.n_events)
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    assert got == {
-        (1, "2026-01-01 00:00:00", 2),
-        (1, "2026-01-01 00:50:00", 1),
-        (2, "2026-01-01 00:05:00", 1),
-    }
-    # the flusher's own session is still open -> not emitted (append mode)
-    assert not any(r[0] == 99 for r in got)
-
-
-def test_streaming_sessionize_exact_gap_boundary(spark, tmp_path):
-    """Pin the EXACT-gap boundary: an event at precisely last_ts + gap
-    (30:00 after) MERGES into the session in BOTH formulations — the
-    batch gaps-and-islands rule starts a new session only when the
-    delta is strictly > gap, and Spark's session_window also merges the
-    adjacent window (verified: [t, t+gap) and an event at t+gap yield
-    one session).  Without this case the equivalence claim was only
-    exercised at a 40-min gap (r4 ADVICE)."""
-    import json
-
-    from kgforge.streaming import streaming_sessionize
-
-    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    inp.mkdir()
-
-    def write(rows, name):
-        with open(inp / f"{name}.json", "w") as f:
-            for uid, ts in rows:
-                f.write(json.dumps({"user_id": uid, "ts": ts}) + "\n")
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp")
-            .format("json").load(str(inp))
-        )
-        q = (
-            streaming_sessionize(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out)).outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-    # exactly-30:00 gap -> merge; 30:01 gap -> split
-    write([
-        (1, "2026-01-01T00:00:00"),
-        (1, "2026-01-01T00:30:00"),   # == gap: same session
-        (1, "2026-01-01T01:00:01"),   # 30:01 > gap: new session
-    ], "b0")
-    drain()
-    write([(99, "2026-01-01T10:00:00")], "b1")  # watermark flush
-    drain()
-    got = {
-        (r.user_id, str(r.session_start), r.n_events)
-        for r in spark.read.parquet(str(out)).collect()
-    }
-    assert got == {
-        (1, "2026-01-01 00:00:00", 2),
-        (1, "2026-01-01 01:00:01", 1),
-    }
-
-    # the batch formulation agrees on the same script
-    from pyspark.sql import functions as F
-
-    from kgforge.queries import QUERIES
-
-    e = spark.createDataFrame(
-        [(1, 10, "2026-01-01 00:00:00"),
-         (1, 11, "2026-01-01 00:30:00"),
-         (1, 12, "2026-01-01 01:00:01")],
-        "user_id bigint, event_id bigint, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tdir = tmp_path / "tbl"
-    e.write.parquet(str(tdir / "events.parquet"))
-    rows = {
-        (r.user_id, r.session_ix, r.n_events)
-        for r in QUERIES["q_sessionize"](spark, str(tdir)).collect()
-    }
-    assert rows == {(1, 1, 2), (1, 2, 1)}
