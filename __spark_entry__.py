@@ -2,8 +2,7 @@
 
 ``entry(spark)`` — flagship KG-construction query at sf0.001.
 ``queries()``   — every registered query (the KG-construction queries of
-                  kgforge/queries.py and the analytics queries of
-                  kgforge/analytics_queries.py), one callable each.
+                  kgforge/queries.py), one callable each.
 ``oracle_sql()``— the DuckDB SQL oracle of every query in ``queries()``.
 """
 

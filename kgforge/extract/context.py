@@ -18,7 +18,7 @@ Reference behavior this realizes:
   are searched for in neighbor sentences and added as mentions there.
   Here: ``propagate_mentions`` joins detected surfaces to ±k neighbor
   units and finds token-subarray occurrences with pure higher-order
-  expressions (no UDF); ``merge_mentions`` unions them into the local
+  expressions (no UDF); ``cross_ner_mentions`` unions them into the local
   mention set before pairing.
 
 Scale notes: the context window shuffles once on (repo, path) — the
@@ -339,19 +339,6 @@ def propagate_mentions(
         F.col("start").cast("int").alias("start"),
         (F.col("start") + F.size("pat")).cast("int").alias("end"),
         "surface", "ent_type", "src_unit",
-    )
-
-
-def merge_mentions(local: DataFrame, propagated: DataFrame) -> DataFrame:
-    """Union local + propagated mentions, exact-deduped on the span key —
-    reference semantics: cross-NER adds occurrences, never duplicates
-    (data/utils.py:167 ``added_text`` guard)."""
-    key = ["repo", "path", "unit_id", "start", "end", "ent_type"]
-    cols = key + ["surface"]
-    return (
-        local.select(*cols)
-        .unionByName(propagated.select(*cols))
-        .dropDuplicates(key)
     )
 
 

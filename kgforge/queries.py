@@ -970,9 +970,3 @@ def bpe_merges(spark, sf_dir):
     from .functions.bpe import pretoken_counts, train_bpe_merges
 
     return train_bpe_merges(pretoken_counts(_docs(spark, sf_dir)), n_merges=5)
-
-
-
-
-# the analytics queries register into the same QUERIES/ORACLES
-from . import analytics_queries  # noqa: E402,F401

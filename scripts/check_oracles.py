@@ -13,7 +13,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # the tables the registered queries read
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["documents"]
 
 
 def normalize(rows, cols):

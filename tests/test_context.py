@@ -4,8 +4,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge.extract.context import (
+    cross_ner_mentions,
     extract_triples_fused_ctx,
-    merge_mentions,
     propagate_mentions,
     with_context,
 )
@@ -87,26 +87,37 @@ def test_propagate_mentions_subarray(spark):
 
 
 def test_propagate_case_folded_and_merge_dedup(spark):
-    """Occurrence match is case-folded (gazetteer semantics); merge dedups
-    on the exact span key and keeps locally-detected rows."""
+    """Occurrence match is case-folded (gazetteer semantics); the
+    cross_ner_mentions merge dedups on the exact span key, keeps the
+    locally-detected rows and re-keys ``m_id`` uniquely per unit."""
     u = spark.createDataFrame(
-        [("r", "p", 0, "Anchor Model z"), ("r", "p", 1, "anchor model z")],
-        "repo string, path string, unit_id long, text string",
-    )
-    m = spark.createDataFrame(
         [
-            ("r", "p", 0, 0, 2, "Anchor Model", "Method"),
-            ("r", "p", 1, 0, 2, "anchor model", "Method"),
+            ("r", "p", "c", 0, "sha", "Anchor Model z"),
+            ("r", "p", "c", 1, "sha", "anchor model z"),
         ],
-        "repo string, path string, unit_id long, start int, end int,"
-        " surface string, ent_type string",
+        "repo string, path string, commit string, unit_id long,"
+        " content_sha string, text string",
     )
-    prop = propagate_mentions(u, m.select("repo", "path", "unit_id", "surface", "ent_type"), k=1)
+    surf = spark.createDataFrame(
+        [("r", "p", 0, "Anchor Model", 1), ("r", "p", 1, "anchor model", 1)],
+        "repo string, path string, unit_id long, surface string, ent_type int",
+    )
+    prop = propagate_mentions(u, surf, k=1)
     # each unit's surface found in the OTHER unit despite case difference
     assert prop.count() == 2
-    merged = merge_mentions(m, prop)
+    # the same spans as local mentions, in the explode_mentions schema
+    local = u.select(
+        "repo", "path", "commit", "unit_id", "content_sha", "text",
+        F.lit(0).alias("m_id"), F.lit(0).alias("start"), F.lit(2).alias("end"),
+        F.lit(1).alias("ent_type"),
+    )
+    merged = cross_ner_mentions(u, local, k=1).collect()
     # propagated spans coincide with local ones -> dedup keeps 2 rows
-    assert merged.count() == 2
+    assert len(merged) == 2
+    assert sorted((r.unit_id, r.m_id, r.start, r.end) for r in merged) == [
+        (0, 0, 0, 2),
+        (1, 0, 0, 2),
+    ]
 
 
 def test_propagated_spans_valid(spark, units):
@@ -138,7 +149,6 @@ def test_cross_ner_pipeline_superset(spark):
     import pytest as _pytest
 
     from kgforge.extract.ner import explode_mentions, tag_mentions
-    from kgforge.extract.context import cross_ner_mentions
     from kgforge.extract.pipeline import extract_pipeline
 
     repos = spark.createDataFrame(gen_repo_rows(120)).localCheckpoint(eager=True)

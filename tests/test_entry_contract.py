@@ -38,28 +38,14 @@ KEEP = {
     "kg_predict_json",
 }
 
-# the analytics queries of kgforge/analytics_queries.py, registered into
-# the same registry
-ANALYTICS = {
-    "q_distinct_kmv",
-    "curate_length_curriculum",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "ann_ivf_recall",
-    "ann_multi_topk",
-}
-
 FAST_SUBSET = [
     "kg_mentions",
     "kg_triples",
     "kg_content_sha",
-    "ann_cosine_topk",
     "kg_context_units",
     "kg_cross_mentions",
     "kg_predict_json",
-    "ann_ivf_topk",
     "kg_ctx_cross",
-    "ann_ivf_recall",
     "bpe_merges",
 ]
 
@@ -84,8 +70,7 @@ def test_entry_smoke(spark):
 
 def test_every_query_has_callable_and_most_have_oracles():
     qs = entrymod.queries()
-    assert set(qs) == set(entrymod.oracle_sql()) == KEEP | ANALYTICS
-    assert not KEEP & ANALYTICS
+    assert set(qs) == set(entrymod.oracle_sql()) == KEEP
     # a correctness snapshot of the registry records at most 50 rows
     assert len(qs) <= 50
 

@@ -110,33 +110,3 @@ def test_subarray_positions_matches_reference(spark, toks, pat):
         _subarray_positions(F.col("toks"), F.col("pat")).alias("p")
     ).collect()[0].p
     assert list(got or []) == _py_subarray_positions(toks, pat)
-
-
-@settings(max_examples=10, deadline=None)
-@given(vals=st.lists(st.integers(-1000, 1000), min_size=1, max_size=60, unique=True))
-def test_global_rank_property(spark, vals):
-    """Two-pass rank == sorted-position rank for any unique key set."""
-    from kgforge.functions.ranks import global_row_number
-
-    df = spark.createDataFrame([(v,) for v in vals], "k long")
-    got = {r.k: r.rn for r in global_row_number(df, ["k"], num_partitions=4).collect()}
-    want = {v: i + 1 for i, v in enumerate(sorted(vals))}
-    assert got == want
-
-
-def test_kmv_sketch_estimate_quality(spark):
-    """q_distinct_kmv: the KMV estimator must track exact distincts
-    within ~2/sqrt(k) mean relative error (k=64 -> well under 10%), and
-    be EXACT for days with fewer than k distinct users."""
-    from pyspark.sql import functions as F
-
-    from kgforge.queries import QUERIES
-
-    df = QUERIES["q_distinct_kmv"](spark, "/root/testdata/sf0.01")
-    rows = df.collect()
-    assert rows
-    mre = sum(abs(r.n_kmv - r.n_exact) / r.n_exact for r in rows) / len(rows)
-    assert mre < 0.1, f"mean relative error {mre:.3f}"
-    for r in rows:
-        if r.n_exact <= 64:
-            assert r.n_kmv == r.n_exact  # sub-k days are exact by contract

@@ -37,57 +37,3 @@ def test_aqe_splits_skewed_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_triangle_degree_ordering_bounds_hub_wedges(spark):
-    """kg_triangles' scale claim, numerically: on a 2000-spoke star plus
-    a few closing edges, the naive wedge join enumerates ~C(2000,2) ~ 2M
-    wedges at the hub, while the degree-ordered orientation points every
-    spoke edge AT the hub (highest rank), leaving the hub with zero
-    out-wedges.  Wedge counts are computed from degree sums (no need to
-    materialize the quadratic join to prove it's quadratic), and the
-    ordered triangle count still finds exactly the planted triangles."""
-    from pyspark.sql import functions as F
-
-    from kgforge.functions.ranks import global_row_number
-
-    n_spokes = 2000
-    edges = [("hub", f"s{i}") for i in range(n_spokes)]
-    # close two triangles: hub-s0-s1, hub-s2-s3
-    edges += [("s0", "s1"), ("s2", "s3")]
-    und = spark.createDataFrame(edges, "a string, b string").select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    ).distinct().localCheckpoint(eager=True)
-
-    dg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v").agg(F.count("*").alias("deg"))
-    )
-    naive_wedges = dg.agg(
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2).alias("w")
-    ).first().w
-    assert naive_wedges > 1_000_000  # the quadratic hub blow-up
-
-    rk = global_row_number(dg, ["deg", "v"]).select("v", F.col("rn").alias("r"))
-    od = (
-        und.join(rk.withColumnRenamed("v", "a").withColumnRenamed("r", "ra"), on="a")
-        .join(rk.withColumnRenamed("v", "b").withColumnRenamed("r", "rb"), on="b")
-        .select(F.least("ra", "rb").alias("lo"), F.greatest("ra", "rb").alias("hi"))
-        .localCheckpoint(eager=True)
-    )
-    outdeg = od.groupBy("lo").agg(F.count("*").alias("d"))
-    ordered_wedges = outdeg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / 2).alias("w")
-    ).first().w
-    # ordered: the hub has rank max -> all spoke edges point INTO it;
-    # remaining out-degrees are tiny
-    assert ordered_wedges < 10
-
-    e1 = od.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
-    e2 = od.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
-    e3 = od.select(F.col("lo").alias("y"), F.col("hi").alias("z"))
-    tri = (
-        e1.join(e2, on="x").filter(F.col("y") < F.col("z")).join(e3, on=["y", "z"])
-    )
-    assert tri.count() == 2  # exactly the planted triangles
