@@ -2,7 +2,8 @@
 
 Pipeline: triple extraction (mention tagging -> pair scoring -> relation
 classification) -> entity canonicalization (MinHash-LSH) -> entity linking
-(connected components via iterative joins) -> graph materialization
+(connected components: one-task union-find below a size gate, iterative
+joins above it) -> graph materialization
 (nodes/edges tables), with per-stage lineage checkpoints.
 
 Semantics re-expressed from the reference system xerrors/theta

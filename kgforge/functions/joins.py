@@ -18,7 +18,10 @@ it return the frame unhinted so the planner falls back to a shuffle
 join and AQE handles size/skew at runtime.
 
 Shared by graph/materialize.attach_canonical_ids,
-jobs/predict_job.link_against_graph and link/cc.connected_components.
+jobs/predict_job.link_against_graph, graph/merge.update_canonical (the
+relabel map for merge_graph's history joins) and link/cc's distributed
+path.  ``BROADCAST_DIM_MAX_ROWS`` also gates link/cc.connected_components
+between its one-task union-find and that distributed path.
 """
 
 from __future__ import annotations

@@ -43,16 +43,16 @@ def canonical_entities(triples: DataFrame) -> DataFrame:
 
     entity_id is derived from the NORMALIZED surface, so case/punctuation
     variants ("Spark model" vs "spark model") share one entity_id across
-    several vertex rows.  CC must therefore run over the DISTINCT id set —
-    duplicate vertex rows would multiply through the pointer-jump self-join
-    and fan out every downstream join (inflating edge weights and
-    mention_count).  The surface variants rejoin afterwards: one canonical
-    row per (surface, ent_type), many per entity_id — intended."""
+    several vertex rows.  connected_components returns one label per
+    DISTINCT id, so the join below cannot fan out (which would inflate
+    edge weights and mention_count).  The surface variants rejoin
+    afterwards: one canonical row per (surface, ent_type), many per
+    entity_id — intended."""
     verts = entity_vertices(triples)
     verts = verts.localCheckpoint(eager=True)  # reused by LSH + CC + joins
     cand = lsh_candidate_pairs(verts)
-    labels = connected_components(verts.select("entity_id").distinct(), cand)
-    return verts.join(labels.dropDuplicates(["entity_id"]), on="entity_id")
+    labels = connected_components(verts.select("entity_id"), cand)
+    return verts.join(labels, on="entity_id")
 
 
 def build_nodes(canonical: DataFrame) -> DataFrame:

@@ -11,7 +11,7 @@ and shuffle only on the small aggregated key space.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .materialize import N_PROVENANCE
@@ -74,29 +74,37 @@ def update_canonical(
     drops novel surfaces).
 
     The ACCUMULATED vertex set (existing dim surfaces ∪ delta surfaces)
-    is re-linked.  Labels are min-entity-id over the merged clusters —
+    is linked.  Labels are min-entity-id over the merged clusters —
     deterministic under any batch split, and an existing cluster's id only
     changes when the delta merges it with a smaller-id cluster; those
     moves are returned as a relabel map (old_canonical_id ->
     new_canonical_id) so accumulated nodes/edges can be migrated (see
     merge_graph).
 
-    With an existing dim only the DELTA'S NEIGHBORHOOD is re-linked: LSH
-    pairing is restricted to buckets containing a new surface
-    (link/canonical.py ``lsh_candidate_pairs_delta``), CC runs over only
-    the components those pairs touch (new ids + every member of an
-    existing cluster hit by a new edge), and untouched clusters keep
-    their labels verbatim.  This is EXACT, not approximate (tested equal
-    to the one-shot link over the union on random splits): an old–old
-    pair in an under-cap bucket was already a candidate in the epoch its
-    younger member arrived — buckets only grow — so its verdict is
-    already reflected in the prior clusters, which are re-asserted as
-    explicit edges below.  Per-epoch cost therefore scales with the
-    delta's bucket neighborhood, not the accumulated dim — the property
-    that keeps continuous maintenance viable as the dim grows without
-    bound.
+    With an existing dim only the DELTA'S NEIGHBORHOOD is re-linked, over
+    the dim CONTRACTED to its clusters.  LSH pairing is restricted to
+    buckets containing a new surface (link/canonical.py
+    ``lsh_candidate_pairs_delta``).  Both endpoints of every candidate
+    pair map to their cluster's root — its canonical_id, already the
+    minimum member entity_id; a new id is its own root — and CC runs over
+    the endpoints of those root edges only.  A surface's new id is its
+    root's CC label (the root itself where CC did not see it), and the
+    relabel map is the old roots whose label changed.  So a cluster can
+    never split, even when a candidate edge that once linked two members
+    is no longer paired (its band bucket grew past MAX_BUCKET).  This is
+    EXACT, not approximate (tested equal to the one-shot link over the
+    union on random splits): the minimum of a merged component is the
+    minimum of its roots and new ids, and an old–old pair in an under-cap
+    bucket was already a candidate in the epoch its younger member
+    arrived — buckets only grow — so its verdict is already in the prior
+    clusters.  Per-epoch cost therefore scales with the delta's bucket
+    neighborhood, not the accumulated dim — the property that keeps
+    continuous maintenance viable as the dim grows without bound.  The
+    relabel map comes checkpointed and size-gated (``maybe_broadcast``)
+    for merge_graph's history joins.
 
     Returns (canonical, relabel_map)."""
+    from ..functions.joins import maybe_broadcast
     from ..link.canonical import (
         entity_vertices,
         lsh_candidate_pairs,
@@ -116,124 +124,102 @@ def update_canonical(
         verts = new_verts.select(*sig_cols).dropDuplicates(
             ["surface", "ent_type"]
         ).localCheckpoint(eager=True)
-        cand = lsh_candidate_pairs(verts)
-        labels = connected_components(verts.select("entity_id").distinct(), cand)
-    else:
-        old = minhash_signature(existing_canonical.select(
-            *(sig_cols if "sig" in existing_canonical.columns
-              and "shingles" in existing_canonical.columns else cols)
-        )).select(*sig_cols)
-        # dim extension WITHOUT a full-dim shuffle: the old dim is already
-        # unique on (surface, ent_type) — anti-join the (tiny) delta
-        # against the dim's keys and append.  A dropDuplicates over the
-        # union would shuffle every wide row (shingles + sig arrays) of
-        # the accumulated dim once per epoch.
-        new_only = (
-            new_verts.select(*sig_cols)
-            .join(
-                existing_canonical.select("surface", "ent_type"),
-                on=["surface", "ent_type"], how="left_anti",
-            )
-            .dropDuplicates(["surface", "ent_type"])
-            .localCheckpoint(eager=True)
+        labels = connected_components(
+            verts.select("entity_id"), lsh_candidate_pairs(verts)
         )
-        verts = old.unionByName(new_only)
-        # Clusters must never split across epochs (documented contract,
-        # and what keeps the relabel map FUNCTIONAL on old_canonical_id):
-        # a band bucket that grows past MAX_BUCKET between epochs is
-        # excluded from pairing, which can drop a candidate edge that
-        # previously linked two members — CC would then split the old
-        # cluster, old->new would go one-to-many, and _relabel's left
-        # join would fan out history (silent count inflation).  Re-assert
-        # every existing cluster as explicit edges: canonical_id is the
-        # min member entity_id, i.e. itself a cluster vertex, so
-        # (canonical_id, member) edges keep the old cluster connected.
-        prior_edges = (
-            existing_canonical.select(
-                F.col("canonical_id").alias("src"),
-                F.col("entity_id").alias("dst"),
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # new ENTITY ids (a new surface can share its normalized entity_id
-        # with an old surface — that id is not new to the link graph)
-        new_ids = (
-            new_only.select("entity_id").distinct()
-            .join(
-                existing_canonical.select("entity_id").distinct(),
-                on="entity_id", how="left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        cand = lsh_candidate_pairs_delta(verts, new_only).localCheckpoint(
-            eager=True
-        )
-        # components the delta touches: new ids + old endpoints of new
-        # edges, closed over their existing clusters
-        endpoints = (
-            cand.select(F.col("src").alias("entity_id"))
-            .unionByName(cand.select(F.col("dst").alias("entity_id")))
-            .distinct()
-        )
-        seeds = new_ids.unionByName(endpoints).distinct()
-        ex = existing_canonical.select("entity_id", "canonical_id").distinct()
-        affected_clusters = (
-            ex.join(seeds, on="entity_id", how="left_semi")
-            .select("canonical_id")
-            .distinct()
-        )
-        affected_old = (
-            ex.join(affected_clusters, on="canonical_id", how="left_semi")
-            .select("entity_id")
-            .distinct()
-        )
-        sub_ids = new_ids.unionByName(affected_old).distinct().localCheckpoint(
-            eager=True
-        )
-        prior_aff = prior_edges.join(
-            affected_clusters.withColumnRenamed("canonical_id", "src"),
-            on="src", how="left_semi",
-        )
-        sub_edges = cand.select("src", "dst").unionByName(prior_aff)
-        sub_labels = connected_components(sub_ids, sub_edges)
-        unaffected = ex.join(sub_ids, on="entity_id", how="left_anti")
-        labels = sub_labels.unionByName(unaffected)
-    labels = labels.dropDuplicates(["entity_id"]).localCheckpoint(eager=True)
-    canonical = verts.join(labels, on="entity_id")
-    if existing_canonical is None:
+        canonical = verts.join(labels, on="entity_id")
         relabel = canonical.sparkSession.createDataFrame(
             [], "old_canonical_id bigint, new_canonical_id bigint"
         )
-    else:
-        relabel = (
-            existing_canonical.select(
-                "entity_id", F.col("canonical_id").alias("old_canonical_id")
-            )
-            .distinct()
-            .join(labels, on="entity_id")
-            .select(
-                "old_canonical_id",
-                F.col("canonical_id").alias("new_canonical_id"),
-            )
-            .filter(F.col("old_canonical_id") != F.col("new_canonical_id"))
-            .distinct()
+        return canonical, relabel
+
+    root = existing_canonical.select(
+        "entity_id", F.col("canonical_id").alias("root")
+    )
+    old = minhash_signature(existing_canonical.select(
+        *(sig_cols if "sig" in existing_canonical.columns
+          and "shingles" in existing_canonical.columns else cols),
+        "canonical_id",
+    )).select(*sig_cols, F.col("canonical_id").alias("root"))
+    # dim extension WITHOUT a full-dim shuffle: the old dim is already
+    # unique on (surface, ent_type) — anti-join the (tiny) delta against
+    # the dim's keys and append.  A dropDuplicates over the union would
+    # shuffle every wide row (shingles + sig arrays) of the accumulated
+    # dim once per epoch.  A new surface can share its normalized
+    # entity_id with an old one (a case variant): it takes that entity's
+    # root, and a null root marks an id new to the link graph.
+    new_only = (
+        new_verts.select(*sig_cols)
+        .join(
+            existing_canonical.select("surface", "ent_type"),
+            on=["surface", "ent_type"], how="left_anti",
         )
-        # Fail loudly rather than fan out history: prior_edges above makes
-        # a split impossible, so a non-functional map here means a bug.
-        dup = (
-            relabel.groupBy("old_canonical_id")
-            .agg(F.countDistinct("new_canonical_id").alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .count()
+        .join(root, on="entity_id", how="left")
+        .dropDuplicates(["surface", "ent_type"])
+        .localCheckpoint(eager=True)
+    )
+    verts = old.unionByName(new_only)
+
+    # candidate pairs contracted to root edges, checkpointed once: CC reads
+    # them twice (vertices and edges), and the LSH must not run twice.
+    # Root lookups may repeat a pair (surface variants share an
+    # entity_id); duplicate edges do not change components.
+    cand = lsh_candidate_pairs_delta(verts, new_only)
+    for end in ("src", "dst"):
+        cand = cand.join(
+            root.withColumnRenamed("entity_id", end)
+            .withColumnRenamed("root", f"{end}_root"),
+            on=end, how="left",
         )
-        if dup:
-            raise RuntimeError(
-                "update_canonical: relabel map is one-to-many (an existing "
-                "cluster split) — refusing to migrate history"
-            )
-    return canonical, relabel
+    edges = (
+        cand.select(
+            F.coalesce("src_root", "src").alias("src"),
+            F.coalesce("dst_root", "dst").alias("dst"),
+            F.col("src_root").isNotNull().alias("src_old"),
+            F.col("dst_root").isNotNull().alias("dst_old"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    ends = edges.select(
+        F.col("src").alias("root"), F.col("src_old").alias("old")
+    ).unionByName(
+        edges.select(F.col("dst").alias("root"), F.col("dst_old").alias("old"))
+    )
+    labels = connected_components(ends, edges, vertex_col="root").withColumnRenamed(
+        "canonical_id", "label"
+    )
+    canonical = (
+        verts.withColumn("root", F.coalesce("root", "entity_id"))
+        .join(labels, on="root", how="left")
+        .select(
+            "entity_id", "surface", "ent_type", "norm", "shingles", "sig",
+            F.coalesce("label", "root").alias("canonical_id"),
+        )
+    )
+
+    # old roots whose label changed, one row each.  The CC labels are
+    # functional by construction, so more than one new id per old root is
+    # a bug: fail loudly rather than fan out history in _relabel.
+    seen = Observation("relabel")
+    relabel = (
+        labels.join(ends.filter("old"), on="root", how="left_semi")
+        .filter(F.col("root") != F.col("label"))
+        .groupBy(F.col("root").alias("old_canonical_id"))
+        .agg(
+            F.min("label").alias("new_canonical_id"),
+            F.count_distinct("label").alias("n_new"),
+        )
+        .observe(seen, F.count(F.lit(1)).alias("rows"), F.max("n_new").alias("fanout"))
+        .localCheckpoint(eager=True)
+        .drop("n_new")
+    )
+    if (seen.get["fanout"] or 0) > 1:
+        raise RuntimeError(
+            "update_canonical: relabel map is one-to-many (an existing "
+            "cluster split) — refusing to migrate history"
+        )
+    return canonical, maybe_broadcast(relabel, n_rows=seen.get["rows"])
 
 
 def merge_graph(
@@ -248,8 +234,11 @@ def merge_graph(
     Contract (tested): one-shot materialization over A ∪ B equals
     merge_graph(materialize(A), triples_B) — the incremental path never
     drops novel surfaces (the dim is extended before attach) and never
-    splits clusters (labels are recomputed over the accumulated dim, and
-    history is migrated through the relabel map)."""
+    splits clusters (update_canonical links the delta against the dim
+    contracted to its cluster roots).  History is migrated through the
+    relabel map: one row per moved old root, checkpointed and size-gated
+    by update_canonical, so below the gate each of _relabel's three joins
+    broadcasts the map instead of shuffling the accumulated nodes/edges."""
     from .materialize import (
         attach_canonical_ids,
         build_nodes,

@@ -1,23 +1,38 @@
-"""Connected components by iterative DataFrame joins (entity linking).
+"""Connected components for entity linking: two paths behind one gate.
 
-Min-label propagation with pointer jumping: every vertex adopts the
-minimum label in its closed neighborhood, then compresses paths via
-``l(v) <- l(l(v))`` (the doubling step of classic PRAM CC; same asymptotics
-as GraphFrames' large-star/small-star).  Converges in O(log n) rounds;
-each round is two shuffles (neighbor agg + label self-join).  ``localCheckpoint``
-per iteration truncates lineage so the plan doesn't grow exponentially
-(SURVEY.md §4.3); an iteration cap + convergence metric guard runaway
-inputs (never silent).
+Both paths return one ``(vertex_col, canonical_id)`` row per distinct
+vertex, canonical_id the minimum vertex id reachable over ``edges(src,
+dst)`` inside the vertex set.  An edge with an endpoint outside the vertex
+set is ignored; isolated vertices map to themselves.
 
-Reference analog: ``RuntimeGraph`` over networkx.DiGraph
-(models/runtime_graph.py:44-146) — registered but disabled there; linking
-is required by the north rule, so it is first-class here.
+The input (vertices as flagged self-loops plus the edges) is materialized
+once, and its row count is observed in that same job.  The gate is
+``functions/joins.BROADCAST_DIM_MAX_ROWS`` on that count, read at call
+time:
+
+* At or below it — every graph an epoch, a build or a test links — a numpy
+  union-find runs in ONE ``mapInPandas`` task over the materialized input
+  (``coalesce(1)``: no shuffle), and its output is checkpointed once.  The
+  whole call is two Spark jobs.  At these sizes job count, not rows, sets
+  the cost: the iterative path below spends about seven jobs per round at
+  6-11 % core utilisation.
+* Above it: min-label propagation with pointer jumping by DataFrame joins.
+  Every vertex adopts the minimum label in its closed neighborhood, then
+  compresses paths via ``l(v) <- l(l(v))`` (the doubling step of classic
+  PRAM CC; same asymptotics as GraphFrames' large-star/small-star).
+  Converges in O(log n) rounds; each round is two shuffles (neighbor agg +
+  label self-join).  ``localCheckpoint`` per iteration truncates lineage so
+  the plan doesn't grow exponentially (SURVEY.md §4.3); an iteration cap +
+  convergence metric guard runaway inputs (never silent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MAX_ITERATIONS = 25
 
@@ -28,27 +43,108 @@ def connected_components(
     vertex_col: str = "entity_id",
     max_iterations: int = MAX_ITERATIONS,
 ) -> DataFrame:
-    """Return ``(entity_id, canonical_id)`` — canonical_id = min vertex id
+    """Return ``(vertex_col, canonical_id)`` — canonical_id = min vertex id
     reachable in the undirected graph ``edges(src, dst)``.
 
-    Isolated vertices map to themselves.
-    """
+    Vertex ids may be any orderable type (bigint entity ids, md5 strings);
+    duplicate vertex rows are allowed."""
+    from ..functions import joins
+
+    n_rows = Observation("cc_input")
+    rows = (
+        vertices.select(
+            F.col(vertex_col).alias("src"),
+            F.col(vertex_col).alias("dst"),
+            F.lit(True).alias("is_vertex"),
+        )
+        .unionByName(edges.select("src", "dst", F.lit(False).alias("is_vertex")))
+        .observe(n_rows, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    if n_rows.get["n"] <= joins.BROADCAST_DIM_MAX_ROWS:
+        labels = _union_find(rows)
+    else:
+        labels = _label_propagation(rows, max_iterations)
+    return labels.withColumnRenamed("a", vertex_col)
+
+
+def _min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
+    """Per vertex 0..n-1, the smallest vertex of its component over the
+    edges ``(src[i], dst[i])``: hook the larger root of every edge under
+    the smaller one, compress every path to its root, repeat until each
+    edge's two ends share a root.  A root is never hooked above itself,
+    so the component's minimum stays its own root, and every round that
+    does not finish hooks at least one root, so the loop ends."""
+    label = np.arange(n)
+    while True:
+        ls, ld = label[src], label[dst]
+        if np.array_equal(ls, ld):
+            return label
+        np.minimum.at(label, np.maximum(ls, ld), np.minimum(ls, ld))
+        while True:
+            up = label[label]
+            if np.array_equal(up, label):
+                break
+            label = up
+
+
+def _union_find(rows: DataFrame) -> DataFrame:
+    """The one-task path: materialized (src, dst, is_vertex) rows ->
+    (a, canonical_id)."""
+    id_type = rows.schema["src"].dataType
+    schema = StructType([
+        StructField("a", id_type, False),
+        StructField("canonical_id", id_type, False),
+    ])
+
+    def components(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        frame = pd.concat(frames, ignore_index=True)
+        # dense ids in sorted order, so the min index is the min id
+        ids, idx = np.unique(
+            np.concatenate([frame["src"].to_numpy(), frame["dst"].to_numpy()]),
+            return_inverse=True,
+        )
+        src, dst = np.split(idx, 2)
+        is_vertex = frame["is_vertex"].to_numpy(dtype=bool)
+        in_set = np.zeros(len(ids), dtype=bool)
+        in_set[src[is_vertex]] = True
+        keep = ~is_vertex & in_set[src] & in_set[dst]
+        label = _min_labels(src[keep], dst[keep], len(ids))
+        vs = np.flatnonzero(in_set)
+        yield pd.DataFrame({"a": ids[vs], "canonical_id": ids[label[vs]]})
+
+    return rows.coalesce(1).mapInPandas(components, schema).localCheckpoint(
+        eager=True
+    )
+
+
+def _label_propagation(rows: DataFrame, max_iterations: int) -> DataFrame:
+    """The distributed path: materialized (src, dst, is_vertex) rows ->
+    (a, canonical_id)."""
+    from ..functions.joins import maybe_broadcast
+
+    edges = rows.filter(~F.col("is_vertex"))
+
     # Undirected closure: both directions + self loop.
     # Materialized once: every round's convergence count is a separate
     # action, and without this the union+distinct (a full edge shuffle)
     # re-executes per round — at 100x that recompute, not the label
     # joins, is the growing term.
-    from ..functions.joins import maybe_broadcast
-
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = vertices.select(
-        F.col(vertex_col).alias("a"), F.col(vertex_col).alias("canonical_id")
-    ).localCheckpoint(eager=True)
+    labels = (
+        rows.filter("is_vertex")
+        .select(F.col("src").alias("a"), F.col("src").alias("canonical_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     # r8: the label table and its per-round derivatives are vertex-scale
     # dims — SIZE-GATED broadcasts (one count here gates every round;
     # labels stays 1:1 with the vertex set).  Under the gate a round is
@@ -114,4 +210,4 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} iterations"
         )
-    return labels.withColumnRenamed("a", vertex_col)
+    return labels

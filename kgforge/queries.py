@@ -613,9 +613,10 @@ def kg_pred_histogram(spark, sf_dir):
     """,
 )
 def kg_cc_components(spark, sf_dir):
-    """Connected components over the doc entity graph — the REAL iterative
-    min-label + pointer-jumping joins (link/cc.py) vs a DuckDB recursive-
-    CTE transitive-closure oracle."""
+    """Connected components over the doc entity graph — the REAL linker CC
+    (link/cc.py: one-task union-find below the broadcast gate, iterative
+    min-label + pointer-jumping joins above it) vs a DuckDB recursive-CTE
+    transitive-closure oracle."""
     from .link.cc import connected_components
 
     edges = kg_edges(spark, sf_dir).select("src", "dst").distinct()

@@ -129,8 +129,9 @@ def test_merge_graph_empty_delta_is_identity(spark):
 def test_update_canonical_never_splits_clusters(spark):
     """An existing cluster whose members would NOT be re-linked by LSH on
     the accumulated dim (e.g. its band bucket later overflows MAX_BUCKET)
-    must stay one cluster: update_canonical re-asserts prior clusters as
-    CC edges, keeping the relabel map functional on old_canonical_id."""
+    must stay one cluster: update_canonical contracts every existing
+    cluster to its root before CC, so each member's new id is its root's
+    label and the relabel map stays functional on old_canonical_id."""
     from pyspark.sql import functions as F
 
     from kgforge.graph.merge import update_canonical
@@ -196,14 +197,78 @@ def test_update_canonical_incremental_equals_full(spark):
     assert inc == sorted(map(key, one_shot.collect()))
 
 
-def _triples(spark, rows):
+def _triples(spark, rows, first=0):
     from kgforge.extract.rel import TRIPLES_SCHEMA
 
     return spark.createDataFrame(
         [("r", f"p{i}", "c", i, s, "USED-FOR", o, "Method", "Task", 1.0, "h")
-         for i, (s, o) in enumerate(rows)],
+         for i, (s, o) in enumerate(rows, start=first)],
         TRIPLES_SCHEMA,
     )
+
+
+
+def test_merge_graph_single_hub_surface_equals_one_shot(spark):
+    """A delta whose every triple has the same subject surface, folded
+    into a dim with multi-member clusters, equals the one-shot build over
+    the union.  The delta also bridges two existing Task clusters, so an
+    old id moves and the relabel map is non-empty and functional."""
+    from kgforge.graph.merge import merge_graph, update_canonical
+
+    base = _triples(spark, [
+        ("anchor model", "quartz sampler"),
+        ("anchor model system", "quartz sampler task"),
+        ("prism index", "dense net"),
+        ("prism index", "graph net"),
+    ]).localCheckpoint(eager=True)
+    hub = "anchor model"
+    objects = ["dense graph net", "quartz sampler", "graph net", "zeta map",
+               "zeta map atlas", "quartz sampler task", "dense net"]
+    delta = _triples(
+        spark, [(hub, o) for o in objects * 3], first=100
+    ).localCheckpoint(eager=True)
+
+    nodes, edges, can = (
+        df.localCheckpoint(eager=True) for df in merge_graph(None, None, None, base)
+    )
+    sizes = [r["count"] for r in can.groupBy("canonical_id").count().collect()]
+    assert sum(1 for n in sizes if n > 1) == 2  # the anchor and quartz clusters
+
+    _, relabel = update_canonical(can, delta)
+    assert relabel.count() >= 1
+    assert relabel.groupBy("old_canonical_id").agg(
+        F.countDistinct("new_canonical_id").alias("n")
+    ).filter(F.col("n") > 1).count() == 0
+
+    inc = merge_graph(nodes, edges, can, delta)
+    full = merge_graph(None, None, None, base.unionByName(delta))
+    key_n = lambda r: (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count)  # noqa: E731
+    key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
+    key_c = lambda r: (r.surface, r.ent_type, r.canonical_id)  # noqa: E731
+    for key, got, want in zip((key_n, key_e, key_c), inc, full):
+        assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+
+
+def test_update_canonical_fails_loudly_on_one_to_many_relabel(spark, monkeypatch):
+    """If CC ever returned two labels for one old root, migrating history
+    through the relabel map would fan rows out: update_canonical raises
+    instead."""
+    import kgforge.link.cc as cc
+    from kgforge.graph.merge import merge_graph, update_canonical
+
+    _, _, can = merge_graph(None, None, None, _triples(spark, [
+        ("anchor model", "prism index"), ("quartz sampler", "prism index"),
+    ]))
+    can = can.localCheckpoint(eager=True)
+
+    def two_labels(vertices, edges, vertex_col="entity_id"):
+        return vertices.select(vertex_col).distinct().crossJoin(
+            spark.range(-2, 0).select(F.col("id").alias("canonical_id"))
+        )
+
+    monkeypatch.setattr(cc, "connected_components", two_labels)
+    with pytest.raises(RuntimeError, match="one-to-many"):
+        update_canonical(can, _triples(spark, [("anchor model system", "prism index")]))
 
 
 @pytest.fixture(scope="module")

@@ -71,7 +71,8 @@ def test_cc_long_chain_converges(spark):
 
 
 def _union_find_min_labels(vertices, edges):
-    """Plain-Python oracle: each vertex -> min vertex id of its component."""
+    """Plain-Python oracle: each vertex -> min vertex id of its component.
+    An edge with an endpoint outside the vertex set is ignored."""
     parent = {v: v for v in vertices}
 
     def find(v):
@@ -81,17 +82,26 @@ def _union_find_min_labels(vertices, edges):
         return v
 
     for a, b in edges:
+        if a not in parent or b not in parent:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {v: find(v) for v in vertices}
 
 
-def test_cc_matches_union_find_on_random_graphs(spark):
+def test_cc_matches_union_find_on_random_graphs(spark, monkeypatch):
     """connected_components == union-find on seeded random graphs with
     duplicate and reversed edges, self-loops and isolated vertices, plus
-    one long chain listed in reverse order."""
+    one long chain listed in reverse order, string ids (md5 hex, as
+    kg_cc_components links), no edges, no vertices, and edges with an
+    endpoint outside the vertex set.  Every graph runs on both paths: the
+    one-task union-find below the gate and the iterative joins above it
+    (gate forced to 0)."""
+    import hashlib
     import random
+
+    import kgforge.functions.joins as joins
 
     graphs = []
     for seed in range(5):
@@ -105,18 +115,57 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         edges += [(b, a) for a, b in rng.sample(edges, len(edges) // 3)]
         edges += rng.sample(edges, len(edges) // 4)
         edges += [(v, v) for v in rng.sample(verts, min(3, n))]
-        graphs.append((verts, edges))
+        graphs.append((verts, edges, "bigint"))
     chain = list(range(60))
-    graphs.append((chain, [(i + 1, i) for i in reversed(range(59))]))
+    graphs.append((chain, [(i + 1, i) for i in reversed(range(59))], "bigint"))
+    md5 = {v: hashlib.md5(str(v).encode()).hexdigest() for v in range(1000)}
+    verts, edges, _ = graphs[4]
+    graphs.append((
+        [md5[v] for v in verts], [(md5[a], md5[b]) for a, b in edges], "string",
+    ))
+    graphs.append(([3, 1, 2], [], "bigint"))
+    graphs.append(([], [(1, 2), (2, 3)], "bigint"))
+    # 7 and 8 are outside the set: 1-7-2 must not join 1 and 2, and the
+    # self-loop 8-8 must not add a vertex
+    graphs.append(([1, 2, 3, 4], [(1, 7), (7, 2), (3, 4), (8, 8), (9, 3)], "bigint"))
 
-    for verts, edges in graphs:
-        vdf = spark.createDataFrame([(v,) for v in verts], "entity_id bigint")
-        edf = spark.createDataFrame(edges, "src bigint, dst bigint")
-        got = {
-            r.entity_id: r.canonical_id
-            for r in connected_components(vdf, edf).collect()
-        }
-        assert got == _union_find_min_labels(verts, edges)
+    for gate in (joins.BROADCAST_DIM_MAX_ROWS, 0):
+        monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", gate)
+        for verts, edges, id_type in graphs:
+            vdf = spark.createDataFrame([(v,) for v in verts], f"entity_id {id_type}")
+            edf = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+            got = {
+                r.entity_id: r.canonical_id
+                for r in connected_components(vdf, edf).collect()
+            }
+            assert got == _union_find_min_labels(verts, edges), (gate, verts)
+
+
+def _cc_jobs(spark, n):
+    """Spark jobs one connected_components call runs on the chain
+    n-1 -> n-2 -> ... -> 0, edges listed in reverse order."""
+    sc = spark.sparkContext
+    group = f"cc-jobs-{n}"
+    verts = spark.createDataFrame([(i,) for i in range(n)], "entity_id bigint")
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in reversed(range(n - 1))], "src bigint, dst bigint"
+    )
+    sc.setJobGroup(group, group)
+    try:
+        labels = connected_components(verts, edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r.canonical_id for r in labels} == {0}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_one_task_job_count_independent_of_rounds(spark):
+    """Below the gate CC runs a fixed number of Spark jobs: a 60-vertex
+    chain, which needs several label-propagation rounds, runs no more
+    than a 2-vertex graph."""
+    assert _cc_jobs(spark, 60) <= _cc_jobs(spark, 2)
 
 
 def test_canonicalization_idempotent(spark, triples):
