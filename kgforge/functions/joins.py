@@ -21,7 +21,10 @@ Shared by graph/materialize.attach_canonical_ids,
 jobs/predict_job.link_against_graph, graph/merge.update_canonical (the
 relabel map for merge_graph's history joins) and link/cc's distributed
 path.  ``BROADCAST_DIM_MAX_ROWS`` also gates link/cc.connected_components
-between its one-task union-find and that distributed path.
+between its one-task union-find and its distributed path.  A link's own
+one-task gate (graph/merge.update_canonical) is the far smaller
+link/canonical.LINK_TASK_MAX_ROWS: that task holds whole vertex rows and
+their candidate pairs, not narrow (key, id) rows.
 """
 
 from __future__ import annotations

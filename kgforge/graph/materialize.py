@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.joins import maybe_broadcast
-from ..link.canonical import entity_vertices, lsh_candidate_pairs
-from ..link.cc import connected_components
+# not called here: perfbench/workloads.link_targets patches these names
+from ..link.canonical import lsh_candidate_pairs  # noqa: F401
+from ..link.cc import connected_components  # noqa: F401
 
 DEFAULT_SALT = 16
 # provenance kept per edge: a deterministic min-k sample of (repo, path,
@@ -39,20 +40,21 @@ N_PROVENANCE = 3
 
 
 def canonical_entities(triples: DataFrame) -> DataFrame:
-    """triples -> (surface, ent_type, entity_id, canonical_id).
+    """triples -> (entity_id, surface, ent_type, norm, canonical_id).
 
     entity_id is derived from the NORMALIZED surface, so case/punctuation
     variants ("Spark model" vs "spark model") share one entity_id across
-    several vertex rows.  connected_components returns one label per
-    DISTINCT id, so the join below cannot fan out (which would inflate
-    edge weights and mention_count).  The surface variants rejoin
-    afterwards: one canonical row per (surface, ent_type), many per
-    entity_id — intended."""
-    verts = entity_vertices(triples)
-    verts = verts.localCheckpoint(eager=True)  # reused by LSH + CC + joins
-    cand = lsh_candidate_pairs(verts)
-    labels = connected_components(verts.select("entity_id"), cand)
-    return verts.join(labels, on="entity_id")
+    several vertex rows.  Both link paths label each DISTINCT id once, so
+    the labels cannot fan out (which would inflate edge weights and
+    mention_count).  The surface variants keep their own rows: one
+    canonical row per (surface, ent_type), many per entity_id — intended.
+
+    The link is graph/merge.update_canonical's without a dim: every
+    vertex is new, and its one gate picks the path."""
+    from .merge import update_canonical
+
+    canonical = update_canonical(None, triples)[0]
+    return canonical.select("entity_id", "surface", "ent_type", "norm", "canonical_id")
 
 
 def build_nodes(canonical: DataFrame) -> DataFrame:

@@ -83,64 +83,65 @@ def update_canonical(
 
     With an existing dim only the DELTA'S NEIGHBORHOOD is re-linked, over
     the dim CONTRACTED to its clusters.  LSH pairing is restricted to
-    buckets containing a new surface (link/canonical.py
-    ``lsh_candidate_pairs_delta``).  Both endpoints of every candidate
-    pair map to their cluster's root — its canonical_id, already the
-    minimum member entity_id; a new id is its own root — and CC runs over
-    the endpoints of those root edges only.  A surface's new id is its
-    root's CC label (the root itself where CC did not see it), and the
-    relabel map is the old roots whose label changed.  So a cluster can
-    never split, even when a candidate edge that once linked two members
-    is no longer paired (its band bucket grew past MAX_BUCKET).  This is
-    EXACT, not approximate (tested equal to the one-shot link over the
-    union on random splits): the minimum of a merged component is the
+    buckets containing a new surface.  Every existing cluster is
+    contracted onto its root — its canonical_id, already the minimum
+    member entity_id — and CC runs over the verified pairs between those
+    roots and the new ids.  A surface's new id is its root's CC label, and
+    the relabel map is the old roots whose label changed.  So a cluster
+    can never split, even when a candidate edge that once linked two
+    members is no longer paired (its band bucket grew past MAX_BUCKET).
+    This is EXACT, not approximate (tested equal to the one-shot link over
+    the union on random splits): the minimum of a merged component is the
     minimum of its roots and new ids, and an old–old pair in an under-cap
     bucket was already a candidate in the epoch its younger member
     arrived — buckets only grow — so its verdict is already in the prior
-    clusters.  Per-epoch cost therefore scales with the delta's bucket
-    neighborhood, not the accumulated dim — the property that keeps
-    continuous maintenance viable as the dim grows without bound.  The
-    relabel map comes checkpointed and size-gated (``maybe_broadcast``)
-    for merge_graph's history joins.
+    clusters.
 
-    Returns (canonical, relabel_map)."""
-    from ..functions.joins import maybe_broadcast
+    Two paths, one gate (link/canonical.py): the old dim's rows and the
+    delta's vertices are materialized once (``link_input``), and their
+    row count is observed in that job.  At or below
+    ``link/canonical.LINK_TASK_MAX_ROWS`` the whole link is one
+    ``mapInPandas`` task (``link_one_task``): the dim fits one task, and
+    job count, not rows, sets the cost.  Above it the delta LSH
+    (``lsh_candidate_pairs_delta``) and link/cc run as Spark joins whose
+    cost scales with the delta's bucket neighborhood, not the accumulated
+    dim — the property that keeps continuous maintenance viable as the dim
+    grows without bound.  Without a dim every vertex is new and the full
+    LSH links them all.
+
+    Returns (canonical, relabel_map): canonical materialized, the relabel
+    map checkpointed and size-gated (``maybe_broadcast``) for
+    merge_graph's history joins."""
+    from ..functions import joins
     from ..link.canonical import (
-        entity_vertices,
+        LINK_TASK_MAX_ROWS,
+        VERTEX_COLS,
+        link_input,
+        link_one_task,
         lsh_candidate_pairs,
         lsh_candidate_pairs_delta,
-        minhash_signature,
     )
     from ..link.cc import connected_components
 
-    cols = ["surface", "ent_type", "norm", "entity_id"]
-    sig_cols = cols + ["shingles", "sig"]
-    # signatures/shingles are deterministic in the surface — compute them
-    # for the DELTA only and carry the dim's persisted ones forward
-    # (minhash_signature is idempotent); the canonical frame returned
-    # below keeps both columns, so state round-trips cache them
-    new_verts = minhash_signature(entity_vertices(delta_triples).select(*cols))
+    rows, n_rows = link_input(delta_triples, existing_canonical)
+    if n_rows <= LINK_TASK_MAX_ROWS:
+        canonical, relabel = link_one_task(rows)
+        # the relabel map has at most one row per input row
+        return canonical, joins.maybe_broadcast(relabel, n_rows=n_rows)
+
+    new_verts = rows.filter("is_new").select(*VERTEX_COLS)
     if existing_canonical is None:
-        verts = new_verts.select(*sig_cols).dropDuplicates(
-            ["surface", "ent_type"]
-        ).localCheckpoint(eager=True)
         labels = connected_components(
-            verts.select("entity_id"), lsh_candidate_pairs(verts)
+            new_verts.select("entity_id"), lsh_candidate_pairs(new_verts)
         )
-        canonical = verts.join(labels, on="entity_id")
+        canonical = new_verts.join(labels, on="entity_id").localCheckpoint(eager=True)
         relabel = canonical.sparkSession.createDataFrame(
             [], "old_canonical_id bigint, new_canonical_id bigint"
         )
         return canonical, relabel
 
-    root = existing_canonical.select(
-        "entity_id", F.col("canonical_id").alias("root")
-    )
-    old = minhash_signature(existing_canonical.select(
-        *(sig_cols if "sig" in existing_canonical.columns
-          and "shingles" in existing_canonical.columns else cols),
-        "canonical_id",
-    )).select(*sig_cols, F.col("canonical_id").alias("root"))
+    old = rows.filter(~F.col("is_new")).drop("is_new")
+    root = old.select("entity_id", "root")
     # dim extension WITHOUT a full-dim shuffle: the old dim is already
     # unique on (surface, ent_type) — anti-join the (tiny) delta against
     # the dim's keys and append.  A dropDuplicates over the union would
@@ -149,11 +150,8 @@ def update_canonical(
     # entity_id with an old one (a case variant): it takes that entity's
     # root, and a null root marks an id new to the link graph.
     new_only = (
-        new_verts.select(*sig_cols)
-        .join(
-            existing_canonical.select("surface", "ent_type"),
-            on=["surface", "ent_type"], how="left_anti",
-        )
+        new_verts
+        .join(old.select("surface", "ent_type"), on=["surface", "ent_type"], how="left_anti")
         .join(root, on="entity_id", how="left")
         .dropDuplicates(["surface", "ent_type"])
         .localCheckpoint(eager=True)
@@ -196,6 +194,7 @@ def update_canonical(
             "entity_id", "surface", "ent_type", "norm", "shingles", "sig",
             F.coalesce("label", "root").alias("canonical_id"),
         )
+        .localCheckpoint(eager=True)
     )
 
     # old roots whose label changed, one row each.  The CC labels are
@@ -219,7 +218,7 @@ def update_canonical(
             "update_canonical: relabel map is one-to-many (an existing "
             "cluster split) — refusing to migrate history"
         )
-    return canonical, maybe_broadcast(relabel, n_rows=seen.get["rows"])
+    return canonical, joins.maybe_broadcast(relabel, n_rows=seen.get["rows"])
 
 
 def merge_graph(
@@ -235,10 +234,15 @@ def merge_graph(
     merge_graph(materialize(A), triples_B) — the incremental path never
     drops novel surfaces (the dim is extended before attach) and never
     splits clusters (update_canonical links the delta against the dim
-    contracted to its cluster roots).  History is migrated through the
-    relabel map: one row per moved old root, checkpointed and size-gated
-    by update_canonical, so below the gate each of _relabel's three joins
-    broadcasts the map instead of shuffling the accumulated nodes/edges."""
+    contracted to its cluster roots).  Below
+    ``link/canonical.LINK_TASK_MAX_ROWS`` linked rows that link is one
+    ``mapInPandas`` task, above it Spark joins (update_canonical); both
+    return canonical materialized, so it is not checkpointed again here.
+    History is migrated through the relabel map: one row per moved old
+    root, checkpointed and size-gated by update_canonical, so below
+    ``functions/joins.BROADCAST_DIM_MAX_ROWS`` each of _relabel's three
+    joins broadcasts the map instead of shuffling the accumulated
+    nodes/edges."""
     from .materialize import (
         attach_canonical_ids,
         build_nodes,
@@ -247,7 +251,6 @@ def merge_graph(
     )
 
     canonical, relabel = update_canonical(existing_canonical, delta_triples)
-    canonical = canonical.localCheckpoint(eager=True)
 
     linked = attach_canonical_ids(delta_triples, canonical)
     linked = linked.localCheckpoint(eager=True)

@@ -10,12 +10,15 @@ once, and its row count is observed in that same job.  The gate is
 ``functions/joins.BROADCAST_DIM_MAX_ROWS`` on that count, read at call
 time:
 
-* At or below it — every graph an epoch, a build or a test links — a numpy
-  union-find runs in ONE ``mapInPandas`` task over the materialized input
-  (``coalesce(1)``: no shuffle), and its output is checkpointed once.  The
-  whole call is two Spark jobs.  At these sizes job count, not rows, sets
-  the cost: the iterative path below spends about seven jobs per round at
-  6-11 % core utilisation.
+* At or below it a numpy union-find (``_min_labels``) runs in ONE
+  ``mapInPandas`` task over the materialized input (``coalesce(1)``: no
+  shuffle), and its output is checkpointed once.  The whole call is two
+  Spark jobs.  At these sizes job count, not rows, sets the cost: the
+  iterative path below spends about seven jobs per round at 6-11 % core
+  utilisation.  Builds and epochs below the link gate
+  (link/canonical.LINK_TASK_MAX_ROWS) do not call this module's Spark
+  paths at all: their whole link, ``_min_labels`` included, is one task
+  (link/canonical.link_task).
 * Above it: min-label propagation with pointer jumping by DataFrame joins.
   Every vertex adopts the minimum label in its closed neighborhood, then
   compresses paths via ``l(v) <- l(l(v))`` (the doubling step of classic

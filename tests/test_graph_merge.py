@@ -15,6 +15,16 @@ from kgforge.graph.materialize import (
 from kgforge.graph.merge import merge_edges, merge_nodes
 
 
+def _both_link_paths(monkeypatch):
+    """Yield once per link path: the default gate (one ``mapInPandas``
+    task), then the gate at 0 (LSH as Spark joins, then link/cc)."""
+    import kgforge.link.canonical as canonical
+
+    for gate in (canonical.LINK_TASK_MAX_ROWS, 0):
+        monkeypatch.setattr(canonical, "LINK_TASK_MAX_ROWS", gate)
+        yield gate
+
+
 @pytest.fixture(scope="module")
 def split_corpus(spark):
     rows = gen_repo_rows(100)
@@ -68,12 +78,13 @@ def test_merge_idempotent_on_empty_delta(spark, split_corpus):
         map(lambda r: (r.src, r.dst, r.pred, r.weight), e.collect())
     )
 
-def test_incremental_with_dim_evolution_equals_full(spark):
+def test_incremental_with_dim_evolution_equals_full(spark, monkeypatch):
     """merge_graph (entity-dim evolution, ADVICE r1): materialize batch A
     standalone, fold batch B in — nodes/edges must equal the one-shot
     materialization of A ∪ B, including surfaces only seen in B (the old
     inner-join path silently dropped them) and clusters whose canonical id
-    moves when A- and B-entities merge."""
+    moves when A- and B-entities merge.  Both link paths run the
+    incremental side against one one-shot reference."""
     from kgforge.graph.materialize import materialize_graph
     from kgforge.graph.merge import merge_graph, update_canonical
 
@@ -82,48 +93,53 @@ def test_incremental_with_dim_evolution_equals_full(spark):
     a = extract_pipeline(spark.createDataFrame(rows[:60]), "fused").localCheckpoint(eager=True)
     b = extract_pipeline(spark.createDataFrame(rows[60:]), "fused").localCheckpoint(eager=True)
 
-    # batch A standalone (its own canonical dim, NOT the full corpus's)
-    nodes_a, edges_a, can_a = merge_graph(None, None, None, a)
-    nodes_a, edges_a, can_a = (
-        nodes_a.localCheckpoint(eager=True),
-        edges_a.localCheckpoint(eager=True),
-        can_a.localCheckpoint(eager=True),
-    )
-    # sanity: B contains surfaces unknown to A's dim
-    new_surf = update_canonical(can_a, b)[0].join(
-        can_a.select("surface", "ent_type"), on=["surface", "ent_type"], how="left_anti"
-    )
-    assert new_surf.count() > 0
-
-    nodes_i, edges_i, _ = merge_graph(nodes_a, edges_a, can_a, b)
-
     nodes_f, edges_f = materialize_graph(full)
     key_n = lambda r: (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count)
-    assert sorted(map(key_n, nodes_i.collect())) == sorted(map(key_n, nodes_f.collect()))
     key_e = lambda r: (r.src, r.dst, r.pred, r.weight)
-    assert sorted(map(key_e, edges_i.collect())) == sorted(map(key_e, edges_f.collect()))
+    want_n = sorted(map(key_n, nodes_f.collect()))
+    want_e = sorted(map(key_e, edges_f.collect()))
+
+    for _ in _both_link_paths(monkeypatch):
+        # batch A standalone (its own canonical dim, NOT the full corpus's)
+        nodes_a, edges_a, can_a = merge_graph(None, None, None, a)
+        nodes_a, edges_a, can_a = (
+            nodes_a.localCheckpoint(eager=True),
+            edges_a.localCheckpoint(eager=True),
+            can_a.localCheckpoint(eager=True),
+        )
+        # sanity: B contains surfaces unknown to A's dim
+        new_surf = update_canonical(can_a, b)[0].join(
+            can_a.select("surface", "ent_type"), on=["surface", "ent_type"], how="left_anti"
+        )
+        assert new_surf.count() > 0
+
+        nodes_i, edges_i, _ = merge_graph(nodes_a, edges_a, can_a, b)
+
+        assert sorted(map(key_n, nodes_i.collect())) == want_n
+        assert sorted(map(key_e, edges_i.collect())) == want_e
 
 
-def test_merge_graph_empty_delta_is_identity(spark):
+def test_merge_graph_empty_delta_is_identity(spark, monkeypatch):
     """An empty micro-batch (e.g. a trigger with no new files) must leave
-    nodes/edges/canonical exactly unchanged."""
+    nodes/edges/canonical exactly unchanged, on both link paths."""
     from kgforge.graph.merge import merge_graph
 
     rows = gen_repo_rows(40)
     t = extract_pipeline(spark.createDataFrame(rows), "fused").localCheckpoint(eager=True)
-    nodes, edges, can = merge_graph(None, None, None, t)
-    nodes, edges, can = (
-        nodes.localCheckpoint(eager=True),
-        edges.localCheckpoint(eager=True),
-        can.localCheckpoint(eager=True),
-    )
-    n2, e2, c2 = merge_graph(nodes, edges, can, t.limit(0))
-    key_n = lambda r: (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count)  # noqa: E731
-    assert sorted(map(key_n, n2.collect())) == sorted(map(key_n, nodes.collect()))
-    key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
-    assert sorted(map(key_e, e2.collect())) == sorted(map(key_e, edges.collect()))
-    key_c = lambda r: (r.entity_id, r.surface, r.ent_type, r.canonical_id)  # noqa: E731
-    assert sorted(map(key_c, c2.collect())) == sorted(map(key_c, can.collect()))
+    for _ in _both_link_paths(monkeypatch):
+        nodes, edges, can = merge_graph(None, None, None, t)
+        nodes, edges, can = (
+            nodes.localCheckpoint(eager=True),
+            edges.localCheckpoint(eager=True),
+            can.localCheckpoint(eager=True),
+        )
+        n2, e2, c2 = merge_graph(nodes, edges, can, t.limit(0))
+        key_n = lambda r: (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count)  # noqa: E731
+        assert sorted(map(key_n, n2.collect())) == sorted(map(key_n, nodes.collect()))
+        key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
+        assert sorted(map(key_e, e2.collect())) == sorted(map(key_e, edges.collect()))
+        key_c = lambda r: (r.entity_id, r.surface, r.ent_type, r.canonical_id)  # noqa: E731
+        assert sorted(map(key_c, c2.collect())) == sorted(map(key_c, can.collect()))
 
 
 def test_update_canonical_never_splits_clusters(spark):
@@ -170,10 +186,10 @@ def test_update_canonical_never_splits_clusters(spark):
     assert n_ids == 1
 
 
-def test_update_canonical_incremental_equals_full(spark):
+def test_update_canonical_incremental_equals_full(spark, monkeypatch):
     """Incremental re-linking (delta-neighborhood LSH + sub-CC) is EXACT:
     chained over random batches it produces the same canonical dim as the
-    one-shot link over the union."""
+    one-shot link over the union, on both link paths."""
     from kgforge.extract.pipeline import extract_pipeline
     from kgforge.fixtures import gen_repo_rows
     from kgforge.graph.merge import update_canonical
@@ -186,15 +202,18 @@ def test_update_canonical_incremental_equals_full(spark):
             spark.createDataFrame(rs), "fused"
         ).localCheckpoint(eager=True)
 
-    can_inc = None
-    for rs in batches:
-        can_inc, _ = update_canonical(can_inc, triples(rs))
-        can_inc = can_inc.localCheckpoint(eager=True)
-
     one_shot, _ = update_canonical(None, triples(rows))
     key = lambda r: (r.surface, r.ent_type, r.canonical_id)  # noqa: E731
-    inc = sorted(map(key, can_inc.collect()))
-    assert inc == sorted(map(key, one_shot.collect()))
+    want = sorted(map(key, one_shot.collect()))
+    deltas = [triples(rs) for rs in batches]
+
+    for _ in _both_link_paths(monkeypatch):
+        can_inc = None
+        for delta in deltas:
+            can_inc, _ = update_canonical(can_inc, delta)
+            can_inc = can_inc.localCheckpoint(eager=True)
+        inc = sorted(map(key, can_inc.collect()))
+        assert inc == want
 
 
 def _triples(spark, rows, first=0):
@@ -208,11 +227,12 @@ def _triples(spark, rows, first=0):
 
 
 
-def test_merge_graph_single_hub_surface_equals_one_shot(spark):
+def test_merge_graph_single_hub_surface_equals_one_shot(spark, monkeypatch):
     """A delta whose every triple has the same subject surface, folded
     into a dim with multi-member clusters, equals the one-shot build over
-    the union.  The delta also bridges two existing Task clusters, so an
-    old id moves and the relabel map is non-empty and functional."""
+    the union, on both link paths.  The delta also bridges two existing
+    Task clusters, so an old id moves and the relabel map is non-empty and
+    functional."""
     from kgforge.graph.merge import merge_graph, update_canonical
 
     base = _triples(spark, [
@@ -228,33 +248,41 @@ def test_merge_graph_single_hub_surface_equals_one_shot(spark):
         spark, [(hub, o) for o in objects * 3], first=100
     ).localCheckpoint(eager=True)
 
-    nodes, edges, can = (
-        df.localCheckpoint(eager=True) for df in merge_graph(None, None, None, base)
-    )
-    sizes = [r["count"] for r in can.groupBy("canonical_id").count().collect()]
-    assert sum(1 for n in sizes if n > 1) == 2  # the anchor and quartz clusters
-
-    _, relabel = update_canonical(can, delta)
-    assert relabel.count() >= 1
-    assert relabel.groupBy("old_canonical_id").agg(
-        F.countDistinct("new_canonical_id").alias("n")
-    ).filter(F.col("n") > 1).count() == 0
-
-    inc = merge_graph(nodes, edges, can, delta)
-    full = merge_graph(None, None, None, base.unionByName(delta))
     key_n = lambda r: (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count)  # noqa: E731
     key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
     key_c = lambda r: (r.surface, r.ent_type, r.canonical_id)  # noqa: E731
-    for key, got, want in zip((key_n, key_e, key_c), inc, full):
-        assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+    keys = (key_n, key_e, key_c)
+    full = merge_graph(None, None, None, base.unionByName(delta))
+    wants = [sorted(map(key, want.collect())) for key, want in zip(keys, full)]
+
+    for _ in _both_link_paths(monkeypatch):
+        nodes, edges, can = (
+            df.localCheckpoint(eager=True) for df in merge_graph(None, None, None, base)
+        )
+        sizes = [r["count"] for r in can.groupBy("canonical_id").count().collect()]
+        assert sum(1 for n in sizes if n > 1) == 2  # the anchor and quartz clusters
+
+        _, relabel = update_canonical(can, delta)
+        assert relabel.count() >= 1
+        assert relabel.groupBy("old_canonical_id").agg(
+            F.countDistinct("new_canonical_id").alias("n")
+        ).filter(F.col("n") > 1).count() == 0
+
+        inc = merge_graph(nodes, edges, can, delta)
+        for key, got, want in zip(keys, inc, wants):
+            assert sorted(map(key, got.collect())) == want
 
 
 def test_update_canonical_fails_loudly_on_one_to_many_relabel(spark, monkeypatch):
     """If CC ever returned two labels for one old root, migrating history
     through the relabel map would fan rows out: update_canonical raises
-    instead."""
+    instead.  The patched CC is the distributed path's, so the gate is 0
+    (the one-task path's guard: test_link_task_fails_loudly_on_one_to_many_relabel)."""
+    import kgforge.link.canonical as canonical
     import kgforge.link.cc as cc
     from kgforge.graph.merge import merge_graph, update_canonical
+
+    monkeypatch.setattr(canonical, "LINK_TASK_MAX_ROWS", 0)
 
     _, _, can = merge_graph(None, None, None, _triples(spark, [
         ("anchor model", "prism index"), ("quartz sampler", "prism index"),
@@ -269,6 +297,71 @@ def test_update_canonical_fails_loudly_on_one_to_many_relabel(spark, monkeypatch
     monkeypatch.setattr(cc, "connected_components", two_labels)
     with pytest.raises(RuntimeError, match="one-to-many"):
         update_canonical(can, _triples(spark, [("anchor model system", "prism index")]))
+
+
+def test_link_task_fails_loudly_on_one_to_many_relabel(monkeypatch):
+    """The one-task link, without Spark: a labels function that leaves an
+    existing cluster's two members apart gives its root two new ids, and
+    link_task raises instead of returning a one-to-many relabel map.  The
+    real union-find keeps the cluster whole."""
+    import numpy as np
+    import pandas as pd
+
+    import kgforge.link.canonical as canonical
+    from kgforge.link.canonical import N_HASHES, link_task
+
+    frame = pd.DataFrame({
+        "surface": ["alpha net", "zq system", "beta curve"],
+        "ent_type": ["Method", "Method", "Method"],
+        "norm": ["alpha net", "zq system", "beta curve"],
+        "entity_id": [5, 9, 7],
+        "shingles": [np.array(s.split()) for s in ("alpha net", "zq system", "beta curve")],
+        "sig": [np.arange(N_HASHES) + 100 * i for i in range(3)],
+        "root": [5, 5, 7],
+        "is_new": [False, False, True],
+    })
+    with monkeypatch.context() as m:
+        m.setattr(canonical, "_min_labels", lambda src, dst, n: np.arange(n))
+        with pytest.raises(RuntimeError, match="one-to-many"):
+            link_task(frame)
+
+    out = link_task(frame)
+    got = dict(zip(out.loc[out.is_vertex, "entity_id"], out.loc[out.is_vertex, "canonical_id"]))
+    assert got == {5: 5, 9: 5, 7: 7}
+    assert not (~out.is_vertex).any()  # no old root moved
+
+
+def _update_canonical_jobs(spark, can, delta):
+    """Spark jobs one update_canonical call runs."""
+    from kgforge.graph.merge import update_canonical
+
+    sc = spark.sparkContext
+    group = f"update-canonical-jobs-{delta.count()}"
+    sc.setJobGroup(group, group)
+    try:
+        update_canonical(can, delta)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_update_canonical_one_task_job_count_independent_of_delta_size(spark):
+    """Below the gate update_canonical runs a fixed number of Spark jobs:
+    a 300-triple delta with near-duplicates of the dim's clusters runs as
+    many as a 1-triple delta."""
+    from kgforge.graph.merge import merge_graph
+
+    _, _, can = merge_graph(None, None, None, _triples(spark, [
+        ("anchor model", "prism index"), ("quartz sampler", "prism index"),
+    ]))
+    can = can.localCheckpoint(eager=True)
+    one = _triples(spark, [("anchor model system", "prism index")], first=10)
+    many = _triples(spark, [
+        (f"anchor model v{i % 40}", f"prism index {i % 70}") for i in range(300)
+    ], first=10).localCheckpoint(eager=True)
+    assert _update_canonical_jobs(spark, can, one) == _update_canonical_jobs(spark, can, many)
 
 
 @pytest.fixture(scope="module")

@@ -278,3 +278,96 @@ def test_lsh_delta_pairs_match_involving(spark):
         if r.src in new_ids or r.dst in new_ids
     }
     assert inv_set == delta_new and len(inv_set) > 0
+
+
+def _link_task_oracle(frame, max_bucket):
+    """Plain-Python link_task: dim extension, hot-bucket pairing with the
+    cap, Jaccard >= 0.5, union-find over the pairs plus one edge from each
+    old row to its root.  Returns ({(surface, ent_type): canonical_id},
+    {old root: new id} for moved roots)."""
+    from kgforge.link.canonical import N_BANDS
+
+    rows = frame.to_dict("records")
+    old = [r for r in rows if not r["is_new"]]
+    known = {(r["surface"], r["ent_type"]) for r in old}
+    verts = old + [r for r in rows if r["is_new"] and (r["surface"], r["ent_type"]) not in known]
+    new_ids = {r["entity_id"] for r in verts[len(old):]}
+    buckets = {}
+    for i, r in enumerate(verts):
+        for b in range(N_BANDS):
+            buckets.setdefault((r["ent_type"], b, int(r["sig"][b])), []).append(i)
+    hot = {(r["ent_type"], b, int(r["sig"][b])) for r in verts[len(old):] for b in range(N_BANDS)}
+    edges = [(r["entity_id"], r["root"]) for r in old]
+    for k in hot:
+        members = buckets[k]
+        if len(members) > max_bucket:
+            continue
+        for i in members:
+            for j in members:
+                a, b = verts[i], verts[j]
+                if b["entity_id"] in new_ids and a["entity_id"] != b["entity_id"]:
+                    sa, sb = set(a["shingles"]), set(b["shingles"])
+                    if len(sa & sb) / len(sa | sb) >= 0.5:
+                        edges.append((a["entity_id"], b["entity_id"]))
+    ids = {r["entity_id"] for r in verts} | {r["root"] for r in old}
+    label = _union_find_min_labels(ids, edges)
+    canonical = {(r["surface"], r["ent_type"]): label[r["entity_id"]] for r in verts}
+    moved = {r["root"]: label[r["root"]] for r in old if label[r["root"]] != r["root"]}
+    return canonical, moved
+
+
+def test_link_task_matches_python_oracle_on_random_frames(monkeypatch):
+    """The one-task link body (numpy, no Spark) equals a plain-Python
+    reading of the same steps on seeded random dims and deltas: shared
+    signature values make multi-member and over-cap buckets, old clusters
+    have several members, some new rows repeat an old surface and some
+    are case variants of an old entity (same id and tokens)."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    import kgforge.link.canonical as canonical
+    from kgforge.link.canonical import N_HASHES, link_task
+
+    for seed in range(6):
+        rng = random.Random(seed)
+        vocab = [f"t{i}" for i in range(rng.randint(4, 12))]
+
+        def vertex(eid):
+            toks = rng.sample(vocab, rng.randint(1, 3))
+            return {
+                "surface": " ".join(toks) + f" #{eid}", "ent_type": rng.choice("MT"),
+                "norm": " ".join(toks), "entity_id": eid,
+                "shingles": np.array(toks),
+                "sig": np.array([rng.randint(0, 5) for _ in range(N_HASHES)], np.int64),
+            }
+
+        ids = rng.sample(range(1, 10_000), 60)
+        old = [vertex(e) for e in ids[:30]]
+        for cluster in range(8):  # roots are each cluster's minimum id
+            members = [r for i, r in enumerate(old) if i % 8 == cluster]
+            for r in members:
+                r["root"] = min(m["entity_id"] for m in members)
+        new = [vertex(e) for e in ids[30:]]
+        new += [dict(r) for r in rng.sample(old, 4)]  # surfaces the dim has
+        new += [dict(r, surface=r["surface"].upper()) for r in rng.sample(old, 3)]
+        for r in new:
+            r["root"] = r["entity_id"]
+        frame = pd.DataFrame(
+            [dict(r, is_new=False) for r in old] + [dict(r, is_new=True) for r in new]
+        )
+        if seed == 5:
+            frame = frame[frame.is_new]  # no dim: every vertex new
+        for cap in (3, 64):
+            monkeypatch.setattr(canonical, "MAX_BUCKET", cap)
+            out = link_task(frame)
+            vertex_rows = out[out.is_vertex]
+            got = dict(zip(zip(vertex_rows.surface, vertex_rows.ent_type), vertex_rows.canonical_id))
+            moved = out[~out.is_vertex]
+            want_can, want_moved = _link_task_oracle(frame, cap)
+            assert got == want_can, (seed, cap)
+            assert dict(zip(moved.entity_id, moved.canonical_id)) == want_moved, (seed, cap)
+            assert list(out.columns[:7]) == [
+                "entity_id", "surface", "ent_type", "norm", "shingles", "sig", "canonical_id"
+            ]
