@@ -7,7 +7,6 @@
         --output /path/to/kg_out \
         [--strategy fused|relational] [--model repos] [--run-id r1]
         [--context-window K] [--cross-ner] [--format parquet|json|csv|orc]
-        [--edge-salt S] [--hot-threshold-rows N]
 
 Reads the repos table (parquet; Iceberg catalogs plug in via
 ``--input table:<name>`` when the runtime ships the Iceberg jar), runs
@@ -39,12 +38,6 @@ def main() -> None:
     ap.add_argument("--cross-ner", action="store_true",
                     help="propagate mention surfaces to neighbor units "
                          "(requires --strategy relational)")
-    ap.add_argument("--edge-salt", type=int, default=None,
-                    help="skew salt width for the edge aggregation "
-                         "(default 16; 1 disables)")
-    ap.add_argument("--hot-threshold-rows", type=int, default=None,
-                    help="estimated-row threshold for selective hot-key "
-                         "salting (default 10000; 0 salts every key)")
     ap.add_argument("--format", default="parquet",
                     choices=["parquet", "json", "csv", "orc"],
                     help="input file format when --input is a path")
@@ -67,7 +60,6 @@ def main() -> None:
         spark, repos, args.workdir, run_id=args.run_id,
         strategy=args.strategy, model_name=args.model,
         context_window=args.context_window, cross_ner=args.cross_ner,
-        edge_salt=args.edge_salt, hot_threshold_rows=args.hot_threshold_rows,
     )
     write_repaired(out["triples"], f"{args.output}/triples", ["repo", "path"])
     write_repaired(out["nodes"], f"{args.output}/nodes", ["canonical_id"])

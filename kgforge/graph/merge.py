@@ -230,11 +230,18 @@ def merge_graph(
     """Fold a delta triple batch into the materialized graph WITH entity-dim
     evolution: returns (nodes, edges, canonical).
 
+    One graph assembly for the build and every epoch: update_canonical ->
+    attach_canonical_ids -> build_nodes -> build_edges, then the history
+    merge.  Without history (``existing_nodes is None``) this is the
+    epoch-0 merge: graph/materialize.materialize_graph calls it, and
+    lineage.run_kg_pipeline's stages make the same calls.
+
     Contract (tested): one-shot materialization over A ∪ B equals
     merge_graph(materialize(A), triples_B) — the incremental path never
-    drops novel surfaces (the dim is extended before attach) and never
-    splits clusters (update_canonical links the delta against the dim
-    contracted to its cluster roots).  Below
+    drops novel surfaces (the dim is extended before attach, so every
+    surface of the delta is an endpoint of a linked triple and build_nodes
+    sees it) and never splits clusters (update_canonical links the delta
+    against the dim contracted to its cluster roots).  Below
     ``link/canonical.LINK_TASK_MAX_ROWS`` linked rows that link is one
     ``mapInPandas`` task, above it Spark joins (update_canonical); both
     return canonical materialized, so it is not checkpointed again here.
@@ -243,26 +250,11 @@ def merge_graph(
     ``functions/joins.BROADCAST_DIM_MAX_ROWS`` each of _relabel's three
     joins broadcasts the map instead of shuffling the accumulated
     nodes/edges."""
-    from .materialize import (
-        attach_canonical_ids,
-        build_nodes,
-        build_edges,
-        mention_counts,
-    )
+    from .materialize import attach_canonical_ids, build_edges, build_nodes
 
     canonical, relabel = update_canonical(existing_canonical, delta_triples)
-
-    linked = attach_canonical_ids(delta_triples, canonical)
-    linked = linked.localCheckpoint(eager=True)
-
-    # delta nodes: canonical rows restricted to the delta's vertices
-    from ..link.canonical import entity_vertices
-
-    delta_surf = entity_vertices(delta_triples).select("surface", "ent_type").distinct()
-    delta_can = canonical.join(delta_surf, on=["surface", "ent_type"])
-    delta_nodes = build_nodes(delta_can).join(
-        mention_counts(linked), on="canonical_id", how="left"
-    ).fillna(0, subset=["mention_count"])
+    linked = attach_canonical_ids(delta_triples, canonical).localCheckpoint(eager=True)
+    delta_nodes = build_nodes(linked)
     delta_edges = build_edges(linked)
 
     if existing_nodes is None:

@@ -138,26 +138,23 @@ def run_kg_pipeline(
     model_name: str = "repos",
     context_window: int = 0,
     cross_ner: bool = False,
-    edge_salt: int | None = None,
-    hot_threshold_rows: int | None = None,
 ) -> dict[str, DataFrame]:
     """The full checkpointed pipeline: repos -> triples -> canonical ->
-    nodes/edges, each stage resumable.
+    linked -> nodes/edges, each stage resumable.
 
-    ``edge_salt`` / ``hot_threshold_rows`` tune build_edges' selective
-    skew salting (defaults: DEFAULT_SALT=16 with 10k-row hot detection;
-    hot_threshold_rows=0 salts every key, edge_salt=1 disables).  They
-    are part of the lineage config, so changing them invalidates the
-    cached edges stage rather than silently reusing a differently-salted
-    plan's output (output is salt-invariant, but the manifest records
-    what actually ran)."""
+    After extraction the stages make the epoch-0 merge's calls
+    (graph/merge.merge_graph(None, None, None, triples)): canonical is
+    update_canonical's dim (via canonical_entities), then
+    attach_canonical_ids, build_nodes and build_edges.  So the build's
+    nodes and edges equal that merge's on every column
+    (tests/test_lineage.py); the stages only add the per-stage
+    checkpoints and manifests."""
     from .extract.pipeline import extract_pipeline
     from .graph.materialize import (
         attach_canonical_ids,
         build_edges,
         build_nodes,
         canonical_entities,
-        mention_counts,
     )
 
     runner = StageRunner(
@@ -167,8 +164,6 @@ def run_kg_pipeline(
             "model_name": model_name,
             "context_window": context_window,
             "cross_ner": cross_ner,
-            "edge_salt": edge_salt,
-            "hot_threshold_rows": hot_threshold_rows,
         },
     )
     triples = runner.run(
@@ -180,18 +175,8 @@ def run_kg_pipeline(
     )
     canonical = runner.run("canonical", lambda: canonical_entities(triples))
     linked = runner.run("linked", lambda: attach_canonical_ids(triples, canonical))
-    nodes = runner.run(
-        "nodes",
-        lambda: build_nodes(canonical)
-        .join(mention_counts(linked), on="canonical_id", how="left")
-        .fillna(0, subset=["mention_count"]),
-    )
-    edge_kw = {}
-    if edge_salt is not None:
-        edge_kw["salt"] = edge_salt
-    if hot_threshold_rows is not None:
-        edge_kw["hot_threshold_rows"] = hot_threshold_rows
-    edges = runner.run("edges", lambda: build_edges(linked, **edge_kw))
+    nodes = runner.run("nodes", lambda: build_nodes(linked))
+    edges = runner.run("edges", lambda: build_edges(linked))
     return {
         "triples": triples,
         "canonical": canonical,

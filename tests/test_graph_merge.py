@@ -1,5 +1,7 @@
 """Incremental merge == full recompute (the associativity contract)."""
 
+from collections import Counter, defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,9 +10,7 @@ from kgforge.fixtures import gen_repo_rows
 from kgforge.graph.materialize import (
     attach_canonical_ids,
     build_edges,
-    build_nodes,
     canonical_entities,
-    mention_counts,
 )
 from kgforge.graph.merge import merge_edges, merge_nodes
 
@@ -42,9 +42,17 @@ def _edges(can, triples):
 
 
 def _nodes(can, triples):
-    linked = attach_canonical_ids(triples, can)
-    return build_nodes(can).join(
-        mention_counts(linked), on="canonical_id", how="inner"
+    """Nodes counted in plain Python over the collected linked triples, so
+    the reference is not graph/materialize.build_nodes."""
+    surfaces, counts = defaultdict(set), Counter()
+    for r in attach_canonical_ids(triples, can).collect():
+        for key, surface in (((r.src, r.subj_type), r.subj), ((r.dst, r.obj_type), r.obj)):
+            surfaces[key].add(surface)
+            counts[key] += 1
+    return can.sparkSession.createDataFrame(
+        [(cid, t, sorted(surfaces[(cid, t)]), n) for (cid, t), n in counts.items()],
+        "canonical_id bigint, ent_type string, surface_forms array<string>,"
+        " mention_count bigint",
     )
 
 

@@ -41,6 +41,20 @@ def test_lineage_rows_recorded(first_run):
     assert by_stage["nodes"] == out["nodes"].count()
 
 
+def test_build_equals_epoch0_merge(first_run):
+    """One graph build: the stages make the epoch-0 merge's calls, so
+    their nodes and edges equal merge_graph(None, None, None, triples) on
+    every column, provenance included."""
+    from kgforge.graph.merge import merge_graph
+
+    _, _, out = first_run
+    nodes, edges, _ = merge_graph(None, None, None, out["triples"])
+    for got, want in ((out["nodes"], nodes), (out["edges"], edges)):
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+        assert want.count() > 0
+
+
 def test_resume_skips_completed_stages(spark, first_run, workdir, monkeypatch):
     rows, repos, out = first_run
     import kgforge.lineage as L

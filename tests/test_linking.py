@@ -195,7 +195,7 @@ def test_variants_share_canonical_id(spark, triples):
 def test_nodes_edges_consistency(spark, triples):
     can = canonical_entities(triples)
     linked = attach_canonical_ids(triples, can)
-    nodes = build_nodes(can)
+    nodes = build_nodes(linked)
     edges = build_edges(linked)
     node_ids = {r.canonical_id for r in nodes.select("canonical_id").collect()}
     for r in edges.select("src", "dst").collect():
