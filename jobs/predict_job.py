@@ -82,12 +82,13 @@ def serving_dim(nodes):
     surface_forms explode to one dim row per known surface.
 
     The dim is DEDUPED to exactly one canonical_id per (surface,
-    ent_type): after cross-epoch merge_nodes unions, a surface
-    reassigned between canonical ids can legitimately appear under two
-    nodes of the same type, and a LEFT join against the raw explode
-    would fan each triple out into duplicate prediction rows.  Winner =
-    highest mention_count, ties to the smallest canonical_id — the
-    dominant assignment, deterministically.
+    ent_type): after the epochs' nodes aggregations
+    (graph/materialize.build_nodes with history) union surface forms, a
+    surface reassigned between canonical ids can legitimately appear
+    under two nodes of the same type, and a LEFT join against the raw
+    explode would fan each triple out into duplicate prediction rows.
+    Winner = highest mention_count, ties to the smallest canonical_id —
+    the dominant assignment, deterministically.
 
     Snapshot semantics: the first call on a handle pays the explode,
     the row_number window, a ``localCheckpoint`` and a count; later

@@ -29,7 +29,7 @@ their candidate pairs, not narrow (key, id) rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 # ~a few hundred MB of (key, id) rows — comfortably under executor
 # memory with room for the join's probe side.  Module-level (not a
@@ -52,3 +52,12 @@ def maybe_broadcast(
     if n_rows is None:
         n_rows = df.count()
     return F.broadcast(df) if n_rows <= BROADCAST_DIM_MAX_ROWS else df
+
+
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` materialized (``localCheckpoint(eager=True)``) and its row
+    count, observed in that same job: an ``n_rows`` for a size gate at no
+    extra job (a ``count()`` on the checkpoint is two more under AQE)."""
+    n = Observation()
+    df = df.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, n.get["n"]

@@ -1,12 +1,16 @@
-"""Incremental graph maintenance: merge a delta batch into existing
-nodes/edges tables.
+"""Incremental graph maintenance: fold a delta batch into the
+materialized nodes/edges tables and the canonical entity dim.
 
-Pairs with kgforge/streaming.py: streamed triples accumulate append-only;
-per maintenance epoch the delta is folded into the materialized graph
-without recomputing history.  All merges are pure aggregations keyed on
-the graph keys — idempotent given exactly-once deltas (which the stream
-checkpoint provides), associative (merge(merge(a,b),c) == merge(a, b∪c)),
-and shuffle only on the small aggregated key space.
+Pairs with kgforge/streaming.py: per maintenance epoch the delta is
+folded in without recomputing history.  ``update_canonical`` evolves the
+dim and returns a relabel map for the history's moved ids;
+``merge_graph`` hands the relabelled history to graph/materialize's
+``build_nodes``/``build_edges``, which aggregate it together with the
+delta's linked triples — one aggregation per table, the functions a
+build calls without history.  Keyed on the graph keys, those
+aggregations are idempotent given exactly-once deltas (the stream
+checkpoint provides them) and associative (merge(merge(a,b),c) ==
+merge(a, b∪c)).
 """
 
 from __future__ import annotations
@@ -14,39 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .materialize import N_PROVENANCE
-
-
-def merge_edges(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold delta edges (src, dst, pred, weight, provenance) into existing:
-    weights add, provenance stays a deterministic min-k sample."""
-    unioned = existing.select("src", "dst", "pred", "weight", "provenance").unionByName(
-        delta.select("src", "dst", "pred", "weight", "provenance")
-    )
-    return unioned.groupBy("src", "dst", "pred").agg(
-        F.sum("weight").alias("weight"),
-        F.slice(
-            F.sort_array(F.array_distinct(F.flatten(F.collect_list("provenance")))),
-            1,
-            N_PROVENANCE,
-        ).alias("provenance"),
-    )
-
-
-def merge_nodes(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold delta nodes (canonical_id, ent_type, surface_forms,
-    mention_count): counts add, surface-form sets union."""
-    unioned = existing.select(
-        "canonical_id", "ent_type", "surface_forms", "mention_count"
-    ).unionByName(
-        delta.select("canonical_id", "ent_type", "surface_forms", "mention_count")
-    )
-    return unioned.groupBy("canonical_id", "ent_type").agg(
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list("surface_forms")))
-        ).alias("surface_forms"),
-        F.sum("mention_count").alias("mention_count"),
-    ).withColumn("n_surfaces", F.size("surface_forms").cast("bigint"))
+from ..functions import joins
 
 
 def _relabel(df: DataFrame, mapping: DataFrame, cols: list[str]) -> DataFrame:
@@ -68,7 +40,7 @@ def _relabel(df: DataFrame, mapping: DataFrame, cols: list[str]) -> DataFrame:
 def update_canonical(
     existing_canonical: DataFrame | None,
     delta_triples: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, int]:
     """Evolve the canonical entity dimension with a delta batch (ADVICE r1:
     per-batch canonicalization is unstable and inner-join attach silently
     drops novel surfaces).
@@ -109,10 +81,11 @@ def update_canonical(
     grows without bound.  Without a dim every vertex is new and the full
     LSH links them all.
 
-    Returns (canonical, relabel_map): canonical materialized, the relabel
+    Returns (canonical, relabel_map, n_canonical): canonical
+    materialized, with its row count observed in the materializing job
+    (attach_canonical_ids' broadcast gate, no count job), and the relabel
     map checkpointed and size-gated (``maybe_broadcast``) for
     merge_graph's history joins."""
-    from ..functions import joins
     from ..link.canonical import (
         LINK_TASK_MAX_ROWS,
         VERTEX_COLS,
@@ -125,20 +98,22 @@ def update_canonical(
 
     rows, n_rows = link_input(delta_triples, existing_canonical)
     if n_rows <= LINK_TASK_MAX_ROWS:
-        canonical, relabel = link_one_task(rows)
+        canonical, relabel, n_canonical = link_one_task(rows)
         # the relabel map has at most one row per input row
-        return canonical, joins.maybe_broadcast(relabel, n_rows=n_rows)
+        return canonical, joins.maybe_broadcast(relabel, n_rows=n_rows), n_canonical
 
     new_verts = rows.filter("is_new").select(*VERTEX_COLS)
     if existing_canonical is None:
         labels = connected_components(
             new_verts.select("entity_id"), lsh_candidate_pairs(new_verts)
         )
-        canonical = new_verts.join(labels, on="entity_id").localCheckpoint(eager=True)
+        canonical, n_canonical = joins.counted_checkpoint(
+            new_verts.join(labels, on="entity_id")
+        )
         relabel = canonical.sparkSession.createDataFrame(
             [], "old_canonical_id bigint, new_canonical_id bigint"
         )
-        return canonical, relabel
+        return canonical, relabel, n_canonical
 
     old = rows.filter(~F.col("is_new")).drop("is_new")
     root = old.select("entity_id", "root")
@@ -187,14 +162,13 @@ def update_canonical(
     labels = connected_components(ends, edges, vertex_col="root").withColumnRenamed(
         "canonical_id", "label"
     )
-    canonical = (
+    canonical, n_canonical = joins.counted_checkpoint(
         verts.withColumn("root", F.coalesce("root", "entity_id"))
         .join(labels, on="root", how="left")
         .select(
             "entity_id", "surface", "ent_type", "norm", "shingles", "sig",
             F.coalesce("label", "root").alias("canonical_id"),
         )
-        .localCheckpoint(eager=True)
     )
 
     # old roots whose label changed, one row each.  The CC labels are
@@ -218,7 +192,7 @@ def update_canonical(
             "update_canonical: relabel map is one-to-many (an existing "
             "cluster split) — refusing to migrate history"
         )
-    return canonical, joins.maybe_broadcast(relabel, n_rows=seen.get["rows"])
+    return canonical, joins.maybe_broadcast(relabel, n_rows=seen.get["rows"]), n_canonical
 
 
 def merge_graph(
@@ -231,37 +205,34 @@ def merge_graph(
     evolution: returns (nodes, edges, canonical).
 
     One graph assembly for the build and every epoch: update_canonical ->
-    attach_canonical_ids -> build_nodes -> build_edges, then the history
-    merge.  Without history (``existing_nodes is None``) this is the
-    epoch-0 merge: graph/materialize.materialize_graph calls it, and
-    lineage.run_kg_pipeline's stages make the same calls.
+    attach_canonical_ids -> build_nodes / build_edges, whose aggregations
+    fold in the relabelled history.  Without history (``existing_nodes is
+    None``) this is the epoch-0 merge that lineage.run_kg_pipeline's
+    stages and materialize_graph run.
 
     Contract (tested): one-shot materialization over A ∪ B equals
     merge_graph(materialize(A), triples_B) — the incremental path never
     drops novel surfaces (the dim is extended before attach, so every
-    surface of the delta is an endpoint of a linked triple and build_nodes
-    sees it) and never splits clusters (update_canonical links the delta
-    against the dim contracted to its cluster roots).  Below
-    ``link/canonical.LINK_TASK_MAX_ROWS`` linked rows that link is one
-    ``mapInPandas`` task, above it Spark joins (update_canonical); both
-    return canonical materialized, so it is not checkpointed again here.
-    History is migrated through the relabel map: one row per moved old
-    root, checkpointed and size-gated by update_canonical, so below
+    surface of the delta is an endpoint of a linked triple) and never
+    splits clusters (update_canonical links the delta against the dim
+    contracted to its cluster roots).  No count job: update_canonical
+    observes canonical's size (the attach's broadcast gate) and the
+    linked checkpoint its own (build_edges' hot-key gate).  History
+    migrates through the relabel map, one row per moved old root,
+    size-gated by update_canonical, so below
     ``functions/joins.BROADCAST_DIM_MAX_ROWS`` each of _relabel's three
     joins broadcasts the map instead of shuffling the accumulated
     nodes/edges."""
     from .materialize import attach_canonical_ids, build_edges, build_nodes
 
-    canonical, relabel = update_canonical(existing_canonical, delta_triples)
-    linked = attach_canonical_ids(delta_triples, canonical).localCheckpoint(eager=True)
-    delta_nodes = build_nodes(linked)
-    delta_edges = build_edges(linked)
-
-    if existing_nodes is None:
-        return delta_nodes, delta_edges, canonical
-
-    nodes_h = _relabel(existing_nodes, relabel, ["canonical_id"])
-    edges_h = _relabel(existing_edges, relabel, ["src", "dst"])
-    nodes = merge_nodes(nodes_h, delta_nodes)
-    edges = merge_edges(edges_h, delta_edges)
+    canonical, relabel, n_canonical = update_canonical(existing_canonical, delta_triples)
+    linked, n_linked = joins.counted_checkpoint(
+        attach_canonical_ids(delta_triples, canonical, n_dim=n_canonical)
+    )
+    nodes_h = edges_h = None
+    if existing_nodes is not None:
+        nodes_h = _relabel(existing_nodes, relabel, ["canonical_id"])
+        edges_h = _relabel(existing_edges, relabel, ["src", "dst"])
+    nodes = build_nodes(linked, history=nodes_h)
+    edges = build_edges(linked, history=edges_h, n_rows=n_linked)
     return nodes, edges, canonical

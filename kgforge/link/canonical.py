@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from ..functions.joins import counted_checkpoint
 from .cc import _min_labels
 
 # Universal-hash parameters (deterministic; Mersenne prime 2^31-1 so that
@@ -310,17 +311,16 @@ def link_input(
             F.col("canonical_id").alias("root"),
             F.lit(False).alias("is_new"),
         ).unionByName(rows)
-    n = Observation("link_input")
-    rows = rows.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return rows, n.get["n"]
+    return counted_checkpoint(rows)
 
 
-def link_one_task(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+def link_one_task(rows: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """The one-task path: ``link_task`` over ``link_input``'s rows in one
     ``mapInPandas`` task, checkpointed once.  Returns ``(canonical,
-    relabel)`` split from that checkpoint: canonical is ``(entity_id,
-    surface, ent_type, norm, shingles, sig, canonical_id)``, relabel is
-    ``(old_canonical_id, new_canonical_id)``."""
+    relabel, n_canonical)`` split from that checkpoint: canonical is
+    ``(entity_id, surface, ent_type, norm, shingles, sig, canonical_id)``,
+    relabel is ``(old_canonical_id, new_canonical_id)``, and canonical's
+    row count is observed in the checkpoint's job."""
     fields = {f.name: f for f in rows.schema.fields}
     schema = StructType(
         [fields["entity_id"]]
@@ -336,13 +336,18 @@ def link_one_task(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
         if frames:
             yield link_task(pd.concat(frames, ignore_index=True))
 
-    out = rows.coalesce(1).mapInPandas(task, schema).localCheckpoint(eager=True)
+    n = Observation()
+    out = (
+        rows.coalesce(1).mapInPandas(task, schema)
+        .observe(n, F.count_if("is_vertex").alias("n"))
+        .localCheckpoint(eager=True)
+    )
     canonical = out.filter("is_vertex").drop("is_vertex")
     relabel = out.filter(~F.col("is_vertex")).select(
         F.col("entity_id").alias("old_canonical_id"),
         F.col("canonical_id").alias("new_canonical_id"),
     )
-    return canonical, relabel
+    return canonical, relabel, n.get["n"]
 
 
 def _ragged(counts: np.ndarray) -> np.ndarray:

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -53,18 +53,14 @@ def connected_components(
     duplicate vertex rows are allowed."""
     from ..functions import joins
 
-    n_rows = Observation("cc_input")
-    rows = (
+    rows, n_rows = joins.counted_checkpoint(
         vertices.select(
             F.col(vertex_col).alias("src"),
             F.col(vertex_col).alias("dst"),
             F.lit(True).alias("is_vertex"),
-        )
-        .unionByName(edges.select("src", "dst", F.lit(False).alias("is_vertex")))
-        .observe(n_rows, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ).unionByName(edges.select("src", "dst", F.lit(False).alias("is_vertex")))
     )
-    if n_rows.get["n"] <= joins.BROADCAST_DIM_MAX_ROWS:
+    if n_rows <= joins.BROADCAST_DIM_MAX_ROWS:
         labels = _union_find(rows)
     else:
         labels = _label_propagation(rows, max_iterations)

@@ -88,9 +88,11 @@ def run_incremental_graph(
     that epoch's triples silently and permanently dropped.  Reading the
     previous epoch and writing the next one never overwrites what is
     being read."""
+    import json
     import os
 
     from .extract.rel import extract_triples_onepass
+    from .graph.materialize import write_counted
     from .graph.merge import merge_graph
 
     def _set_latest(epoch: int) -> None:
@@ -113,23 +115,14 @@ def run_incremental_graph(
             nodes = spark.read.parquet(os.path.join(pdir, "nodes"))
             edges = spark.read.parquet(os.path.join(pdir, "edges"))
             canonical = spark.read.parquet(os.path.join(pdir, "canonical"))
-        n, e, c = merge_graph(nodes, edges, canonical, delta)
-        n.write.mode("overwrite").parquet(os.path.join(edir, "nodes"))
-        e.write.mode("overwrite").parquet(os.path.join(edir, "edges"))
-        c.write.mode("overwrite").parquet(os.path.join(edir, "canonical"))
-        # per-epoch lineage metrics (counts off the just-written files)
-        import json as _json
-
-        metrics = {
-            "epoch": epoch_id,
-            "n_nodes": spark.read.parquet(os.path.join(edir, "nodes")).count(),
-            "n_edges": spark.read.parquet(os.path.join(edir, "edges")).count(),
-            "n_canonical": spark.read.parquet(
-                os.path.join(edir, "canonical")
-            ).count(),
-        }
+        # per-epoch lineage metrics: row counts observed by the writes
+        metrics = {"epoch": epoch_id}
+        for name, df in zip(
+            ("nodes", "edges", "canonical"), merge_graph(nodes, edges, canonical, delta)
+        ):
+            metrics[f"n_{name}"] = write_counted(df, os.path.join(edir, name))
         with open(os.path.join(edir, "metrics.json"), "w") as f:
-            _json.dump(metrics, f)
+            json.dump(metrics, f)
         open(os.path.join(edir, "_COMPLETE"), "w").close()
         _set_latest(epoch_id)
 

@@ -10,9 +10,9 @@ from kgforge.fixtures import gen_repo_rows
 from kgforge.graph.materialize import (
     attach_canonical_ids,
     build_edges,
+    build_nodes,
     canonical_entities,
 )
-from kgforge.graph.merge import merge_edges, merge_nodes
 
 
 def _both_link_paths(monkeypatch):
@@ -37,6 +37,10 @@ def split_corpus(spark):
     return can, full, a, b
 
 
+def _linked(can, triples):
+    return attach_canonical_ids(triples, can).localCheckpoint(eager=True)
+
+
 def _edges(can, triples):
     return build_edges(attach_canonical_ids(triples, can))
 
@@ -50,41 +54,70 @@ def _nodes(can, triples):
             surfaces[key].add(surface)
             counts[key] += 1
     return can.sparkSession.createDataFrame(
-        [(cid, t, sorted(surfaces[(cid, t)]), n) for (cid, t), n in counts.items()],
+        [
+            (cid, t, sorted(surfaces[(cid, t)]), n, len(surfaces[(cid, t)]))
+            for (cid, t), n in counts.items()
+        ],
         "canonical_id bigint, ent_type string, surface_forms array<string>,"
-        " mention_count bigint",
+        " mention_count bigint, n_surfaces bigint",
+    )
+
+
+def _n_rows_legs(linked):
+    """build_edges' n_rows: unknown (the salted plan), then the linked
+    row count, which is below the hot threshold (one aggregation)."""
+    n = linked.count()
+    assert n < 10_000  # build_edges' default hot_threshold_rows
+    return None, n
+
+
+def _edge_key(r):
+    return (r.src, r.dst, r.pred, r.weight, tuple(map(tuple, r.provenance)))
+
+
+def _node_keys(rows):
+    return sorted(
+        (r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count, r.n_surfaces)
+        for r in rows
     )
 
 
 def test_merge_edges_equals_full(spark, split_corpus):
     can, full, a, b = split_corpus
-    merged = merge_edges(_edges(can, a), _edges(can, b))
-    want = {
-        (r.src, r.dst, r.pred, r.weight)
-        for r in _edges(can, full).collect()
-    }
-    got = {(r.src, r.dst, r.pred, r.weight) for r in merged.collect()}
-    assert got == want
+    linked_b = _linked(can, b)
+    want_rows = _edges(can, full).collect()
+    want = {(r.src, r.dst, r.pred, r.weight) for r in want_rows}
+    for n_rows in _n_rows_legs(linked_b):
+        merged = build_edges(linked_b, history=_edges(can, a), n_rows=n_rows).collect()
+        got = {(r.src, r.dst, r.pred, r.weight) for r in merged}
+        assert got == want
+        assert sorted(map(_edge_key, merged)) == sorted(map(_edge_key, want_rows))
 
 
 def test_merge_nodes_counts_add(spark, split_corpus):
     can, full, a, b = split_corpus
-    merged = merge_nodes(_nodes(can, a), _nodes(can, b))
-    want = {
-        (r.canonical_id, r.mention_count) for r in _nodes(can, full).collect()
-    }
-    got = {(r.canonical_id, r.mention_count) for r in merged.collect()}
+    merged = build_nodes(_linked(can, b), history=_nodes(can, a)).collect()
+    want_rows = _nodes(can, full).collect()
+    want = {(r.canonical_id, r.mention_count) for r in want_rows}
+    got = {(r.canonical_id, r.mention_count) for r in merged}
     assert got == want
+    assert _node_keys(merged) == _node_keys(want_rows)
 
 
 def test_merge_idempotent_on_empty_delta(spark, split_corpus):
     can, full, _a, _b = split_corpus
     e = _edges(can, full)
-    empty = e.limit(0)
-    again = merge_edges(e, empty)
-    assert sorted(map(lambda r: (r.src, r.dst, r.pred, r.weight), again.collect())) == sorted(
-        map(lambda r: (r.src, r.dst, r.pred, r.weight), e.collect())
-    )
+    empty = _linked(can, full).limit(0)
+    for n_rows in _n_rows_legs(empty):
+        again = build_edges(empty, history=e, n_rows=n_rows)
+        assert sorted(map(lambda r: (r.src, r.dst, r.pred, r.weight), again.collect())) == sorted(
+            map(lambda r: (r.src, r.dst, r.pred, r.weight), e.collect())
+        )
+        assert sorted(map(_edge_key, again.collect())) == sorted(map(_edge_key, e.collect()))
+    nodes = _nodes(can, full)
+    again = build_nodes(empty, history=nodes)
+    assert _node_keys(again.collect()) == _node_keys(nodes.collect())
+
 
 def test_incremental_with_dim_evolution_equals_full(spark, monkeypatch):
     """merge_graph (entity-dim evolution, ADVICE r1): materialize batch A
@@ -175,7 +208,7 @@ def test_update_canonical_never_splits_clusters(spark):
     delta = spark.createDataFrame(
         [("alpha net", "Method", "COMPARE", "beta curve", "Method")], schema
     )
-    canonical, relabel = update_canonical(existing, delta)
+    canonical, relabel, _ = update_canonical(existing, delta)
     # relabel is functional: no old id maps to two new ids
     assert (
         relabel.groupBy("old_canonical_id")
@@ -210,7 +243,7 @@ def test_update_canonical_incremental_equals_full(spark, monkeypatch):
             spark.createDataFrame(rs), "fused"
         ).localCheckpoint(eager=True)
 
-    one_shot, _ = update_canonical(None, triples(rows))
+    one_shot, _, _ = update_canonical(None, triples(rows))
     key = lambda r: (r.surface, r.ent_type, r.canonical_id)  # noqa: E731
     want = sorted(map(key, one_shot.collect()))
     deltas = [triples(rs) for rs in batches]
@@ -218,7 +251,7 @@ def test_update_canonical_incremental_equals_full(spark, monkeypatch):
     for _ in _both_link_paths(monkeypatch):
         can_inc = None
         for delta in deltas:
-            can_inc, _ = update_canonical(can_inc, delta)
+            can_inc, _, _ = update_canonical(can_inc, delta)
             can_inc = can_inc.localCheckpoint(eager=True)
         inc = sorted(map(key, can_inc.collect()))
         assert inc == want
@@ -270,7 +303,7 @@ def test_merge_graph_single_hub_surface_equals_one_shot(spark, monkeypatch):
         sizes = [r["count"] for r in can.groupBy("canonical_id").count().collect()]
         assert sum(1 for n in sizes if n > 1) == 2  # the anchor and quartz clusters
 
-        _, relabel = update_canonical(can, delta)
+        _, relabel, _ = update_canonical(can, delta)
         assert relabel.count() >= 1
         assert relabel.groupBy("old_canonical_id").agg(
             F.countDistinct("new_canonical_id").alias("n")
@@ -339,20 +372,25 @@ def test_link_task_fails_loudly_on_one_to_many_relabel(monkeypatch):
     assert not (~out.is_vertex).any()  # no old root moved
 
 
-def _update_canonical_jobs(spark, can, delta):
-    """Spark jobs one update_canonical call runs."""
-    from kgforge.graph.merge import update_canonical
-
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted in its own job group."""
     sc = spark.sparkContext
-    group = f"update-canonical-jobs-{delta.count()}"
     sc.setJobGroup(group, group)
     try:
-        update_canonical(can, delta)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _update_canonical_jobs(spark, can, delta):
+    """Spark jobs one update_canonical call runs."""
+    from kgforge.graph.merge import update_canonical
+
+    group = f"update-canonical-jobs-{delta.count()}"
+    return _jobs(spark, group, lambda: update_canonical(can, delta))
 
 
 def test_update_canonical_one_task_job_count_independent_of_delta_size(spark):
@@ -370,6 +408,32 @@ def test_update_canonical_one_task_job_count_independent_of_delta_size(spark):
         (f"anchor model v{i % 40}", f"prism index {i % 70}") for i in range(300)
     ], first=10).localCheckpoint(eager=True)
     assert _update_canonical_jobs(spark, can, one) == _update_canonical_jobs(spark, can, many)
+
+
+def test_merge_graph_epoch_job_budget(spark, split_corpus, tmp_path):
+    """One epoch with history, below every gate: merge_graph over state
+    read back from parquet, then its three writes, runs 12 Spark jobs.
+    merge_graph runs 5 (the link input's shuffle and checkpoint, the link
+    task, the dim broadcast, the linked checkpoint); the nodes and the
+    edges write 3 each (the relabel map's broadcast, the one
+    aggregation's shuffle, the write); the canonical write 1."""
+    from kgforge.graph.merge import merge_graph
+
+    _can, _full, a, b = split_corpus
+    b.write.parquet(str(tmp_path / "delta"))
+    tables = ("nodes", "edges", "canonical")
+    for t, df in zip(tables, merge_graph(None, None, None, a)):
+        df.write.parquet(str(tmp_path / "epoch=0" / t))
+
+    # reading a table infers its schema in a job of its own: read outside
+    state = [spark.read.parquet(str(tmp_path / "epoch=0" / t)) for t in tables]
+    delta = spark.read.parquet(str(tmp_path / "delta"))
+
+    def epoch():
+        for t, df in zip(tables, merge_graph(*state, delta)):
+            df.write.parquet(str(tmp_path / "epoch=1" / t))
+
+    assert _jobs(spark, "merge-graph-epoch-jobs", epoch) == 12
 
 
 @pytest.fixture(scope="module")

@@ -37,11 +37,20 @@ def test_kg_job_main(spark, tmp_path, capsys, monkeypatch):
     # outputs exist and are readable
     for name in ("triples", "nodes", "edges"):
         assert spark.read.parquet(str(tmp_path / "out" / name)).count() > 0
+    _assert_summary_counts(spark, summary, tmp_path / "out")
     # resume: second invocation reuses every stage (config hash matches)
     monkeypatch.setattr(sys, "argv", [a if a != "t1" else "t2" for a in args])
     main()
     summary2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary2["triples"] == summary["triples"]
+    _assert_summary_counts(spark, summary2, tmp_path / "out")
+
+
+def _assert_summary_counts(spark, summary, out):
+    """The summary's counts, observed by the writes, equal the written
+    tables' row counts."""
+    for name in ("triples", "nodes", "edges"):
+        assert summary[name] == spark.read.parquet(str(out / name)).count(), name
 
 
 def test_kg_job_combined_ctx_cross(spark, tmp_path, capsys, monkeypatch):

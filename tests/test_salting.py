@@ -38,12 +38,9 @@ def test_salted_provenance_deterministic(spark, linked):
     assert a == b
 
 
-def test_hot_key_detection_finds_the_hub(spark):
-    """detect_hot_edge_keys: a hub key above the threshold is found, cold
-    keys are not; and build_edges output is identical whether detection
-    runs, is disabled, or the whole agg is unsalted."""
-    from kgforge.graph.materialize import build_edges, detect_hot_edge_keys
-
+@pytest.fixture(scope="module")
+def hub(spark):
+    """One hub (src, dst, pred) key in 2,000 rows, plus 400 cold rows."""
     rows = [
         (1, 2, "USED-FOR", "mega-repo", f"src/f{i % 50}.py", i)
         for i in range(2000)
@@ -51,22 +48,48 @@ def test_hot_key_detection_finds_the_hub(spark):
         (10 + i % 40, 100 + i % 40, "PART-OF", f"repo_{i % 7}", "src/x.py", 10_000 + i)
         for i in range(400)
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "src long, dst long, pred string, repo string, path string, unit_id long"
     ).localCheckpoint(eager=True)
 
-    hot = detect_hot_edge_keys(df, hot_threshold_rows=1000, hot_sample=1.0).collect()
-    assert {(r.src, r.dst, r.pred) for r in hot} == {(1, 2, "USED-FOR")}
 
-    key = lambda r: (r.src, r.dst, r.pred, r.weight,  # noqa: E731
-                     tuple(map(tuple, r.provenance)))
-    legs = [
+def _edge_keys(df):
+    return {(r.src, r.dst, r.pred, r.weight, tuple(map(tuple, r.provenance)))
+            for r in df.collect()}
+
+
+def _salted_legs(df):
+    return [
         build_edges(df, salt=16),                          # selective (default)
         build_edges(df, salt=16, hot_threshold_rows=0),    # salt everything
         build_edges(df, salt=1),                           # unsalted
     ]
-    outs = [{key(r) for r in leg.collect()} for leg in legs]
+
+
+def test_hot_key_detection_finds_the_hub(spark, hub):
+    """detect_hot_edge_keys: a hub key above the threshold is found, cold
+    keys are not; and build_edges output is identical whether detection
+    runs, is disabled, or the whole agg is unsalted."""
+    from kgforge.graph.materialize import detect_hot_edge_keys
+
+    hot = detect_hot_edge_keys(hub, hot_threshold_rows=1000, hot_sample=1.0).collect()
+    assert {(r.src, r.dst, r.pred) for r in hot} == {(1, 2, "USED-FOR")}
+
+    outs = [_edge_keys(leg) for leg in _salted_legs(hub)]
     assert outs[0] == outs[1] == outs[2]
+
+
+def test_small_input_skips_detection(spark, hub):
+    """An input known to hold fewer rows than the hot threshold cannot
+    hold a hot key: build_edges(n_rows=) aggregates once, with no sample
+    for detection in its plan, and its output equals every salted leg's."""
+    n_rows = hub.count()
+    assert n_rows < 10_000  # build_edges' default hot_threshold_rows
+    once = build_edges(hub, n_rows=n_rows)
+    assert "Sample" not in once._jdf.queryExecution().optimizedPlan().toString()
+    assert "Sample" in build_edges(hub)._jdf.queryExecution().optimizedPlan().toString()
+    want = _edge_keys(once)
+    assert all(_edge_keys(leg) == want for leg in _salted_legs(hub))
 
 
 def test_lsh_bucket_stats_accounts_everything(spark, linked):

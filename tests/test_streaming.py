@@ -147,3 +147,27 @@ def test_incremental_graph_replays_epoch_without_complete(spark, tmp_path):
     assert sorted(map(key_n, nodes_s.collect())) == sorted(
         map(key_n, nodes_f.collect())
     )
+
+
+def test_incremental_graph_metrics_equal_table_counts(spark, tmp_path):
+    """Each epoch's metrics.json holds the row counts its writes observed:
+    they equal the counts of the tables read back."""
+    import os
+
+    from kgforge.streaming import run_incremental_graph
+
+    state = tmp_path / "state"
+    _write_json_files(gen_repo_rows(40), tmp_path / "in", per_file=20)  # 2 micro-batches
+    run_incremental_graph(spark, str(tmp_path / "in"), str(state), str(tmp_path / "ckpt"))
+
+    epochs = sorted(p for p in os.listdir(state) if p.startswith("epoch="))
+    assert epochs == ["epoch=0", "epoch=1"]
+    for e in epochs:
+        metrics = json.loads((state / e / "metrics.json").read_text())
+        assert metrics == {
+            "epoch": int(e.split("=")[1]),
+            **{
+                f"n_{t}": spark.read.parquet(str(state / e / t)).count()
+                for t in ("nodes", "edges", "canonical")
+            },
+        }
