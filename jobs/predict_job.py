@@ -178,7 +178,7 @@ def main() -> None:
                          "the persisted nodes table")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     from kgforge.extract.pipeline import extract_pipeline
@@ -186,31 +186,35 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("kgforge-predict-job").getOrCreate()
 
+    # the summary counts are observed in the one job that writes the
+    # payloads: no checkpoint, no count pass
     t0 = time.monotonic()
-    sentences = read_sentences(spark, args.sentences, args.format)
+    read, extracted = Observation(), Observation()
+    sentences = read_sentences(spark, args.sentences, args.format).observe(
+        read, F.count(F.lit(1)).alias("sentences")
+    )
     triples = extract_pipeline(
         sentences, strategy=args.strategy, model_name=args.model
-    ).localCheckpoint(eager=True)
-
-    n_linked = None
+    )
+    counts = [F.count(F.lit(1)).alias("triples")]
     if args.graph:
         nodes = spark.read.parquet(f"{args.graph}/nodes")
-        triples = link_against_graph(triples, nodes).localCheckpoint(eager=True)
-        n_linked = triples.filter(
+        triples = link_against_graph(triples, nodes)
+        counts.append(F.count_if(
             F.col("src").isNotNull() & F.col("dst").isNotNull()
-        ).count()
-
-    payload = assemble_predict_json(triples)
-    write_jsonl(payload, args.output)
+        ).alias("triples_fully_linked"))
+    units = write_jsonl(
+        assemble_predict_json(triples.observe(extracted, *counts)), args.output
+    )
 
     summary = {
-        "sentences": sentences.count(),
-        "triples": triples.count(),
-        "units_with_relations": payload.count(),
+        "sentences": read.get["sentences"],
+        "triples": extracted.get["triples"],
+        "units_with_relations": units,
         "wall_sec": round(time.monotonic() - t0, 1),
     }
-    if n_linked is not None:
-        summary["triples_fully_linked"] = n_linked
+    if args.graph:
+        summary["triples_fully_linked"] = extracted.get["triples_fully_linked"]
     print(json.dumps(summary))
     spark.stop()
 

@@ -18,13 +18,16 @@ it return the frame unhinted so the planner falls back to a shuffle
 join and AQE handles size/skew at runtime.
 
 Shared by graph/materialize.attach_canonical_ids,
-jobs/predict_job.link_against_graph, graph/merge.update_canonical (the
-relabel map for merge_graph's history joins) and link/cc's distributed
-path.  ``BROADCAST_DIM_MAX_ROWS`` also gates link/cc.connected_components
-between its one-task union-find and its distributed path.  A link's own
-one-task gate (graph/merge.update_canonical) is the far smaller
-link/canonical.LINK_TASK_MAX_ROWS: that task holds whole vertex rows and
-their candidate pairs, not narrow (key, id) rows.
+jobs/predict_job.link_against_graph, both link executors of
+link/canonical (the relabel map for merge_graph's history joins; the
+distributed one also the dim's keys and roots), its delta pairing
+``lsh_candidate_pairs_delta`` (the hot bucket keys) and link/cc's
+distributed path.  ``BROADCAST_DIM_MAX_ROWS``
+also gates link/cc.connected_components between its one-task union-find
+and its distributed path.  The gate between the link's executors
+(graph/merge.update_canonical) is the far smaller
+link/canonical.LINK_TASK_MAX_ROWS: the one-task link holds whole vertex
+rows and their candidate pairs, not narrow (key, id) rows.
 """
 
 from __future__ import annotations

@@ -56,8 +56,8 @@ def canonical_entities(triples: DataFrame) -> DataFrame:
     mention_count).  The surface variants keep their own rows: one
     canonical row per (surface, ent_type), many per entity_id — intended.
 
-    The link is graph/merge.update_canonical's without a dim: every
-    vertex is new, and its one gate picks the path."""
+    The link is graph/merge.update_canonical without a dim: an epoch
+    whose dim has no rows."""
     from .merge import update_canonical
 
     canonical = update_canonical(None, triples)[0]
@@ -105,8 +105,9 @@ def attach_canonical_ids(
     distinct-surface dim can reach hundreds of millions of rows —
     unconditionally broadcasting it OOMs executors (r1 VERDICT 'What's
     wrong' #3).  ``n_dim`` is the dim's row count when the caller already
-    has it (graph/merge.update_canonical observes it in the job that
-    materializes the dim); without it the dim is counted here.  Above
+    has it (the link observes it in the job that materializes the dim,
+    and lineage's canonical stage in its write); without it the dim is
+    counted here.  Above
     the threshold (``functions/joins.BROADCAST_DIM_MAX_ROWS``, read at
     call time) we fall back to a plain shuffle join on (surface,
     ent_type) and let AQE handle skewed hub surfaces."""

@@ -11,7 +11,7 @@ written straight to a JSONL sink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -53,6 +53,11 @@ def assemble_predict_json(
     )
 
 
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """One JSON object per line (the reference's predict output file)."""
-    df.select("payload").write.mode("overwrite").text(path)
+def write_jsonl(df: DataFrame, path: str) -> int:
+    """One JSON object per line (the reference's predict output file).
+    Returns the lines written, observed in the writing job."""
+    written = Observation()
+    df.select("payload").observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).text(path)
+    return written.get["n"]

@@ -8,10 +8,11 @@ per-stage parquet checkpoint.
 
 Contract (SURVEY.md §7.6): a stage writes its data partition, then appends
 ``(run_id, stage, partition_id, rows_out, triple_count, content_sha_agg,
-wall_ms)`` rows plus a ``_COMPLETE`` marker.  On restart, a stage whose
-marker exists is read back, not recomputed.  The marker is written AFTER
-the data — a crash mid-write leaves no marker, so the stage reruns
-(idempotent overwrite).
+wall_ms)`` rows plus a ``_COMPLETE`` marker, which records the row count
+the data write observed (``rows``).  On restart, a stage whose marker
+exists is read back, not recomputed, and its ``rows`` is still known.
+The marker is written AFTER the data — a crash mid-write leaves no
+marker, so the stage reruns (idempotent overwrite).
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .graph.materialize import write_counted
 
 LINEAGE_COLS = [
     "run_id",
@@ -70,21 +73,28 @@ class StageRunner:
             meta = json.loads(marker.read_text())
         except (ValueError, OSError):
             return False  # unreadable marker: treat as incomplete, rerun
-        return meta.get("config_hash") == self.config_hash
+        # a marker without a row count predates it: rerun to record one
+        return meta.get("config_hash") == self.config_hash and "rows" in meta
+
+    def rows(self, stage: str) -> int:
+        """The rows a complete stage wrote, from its marker."""
+        return json.loads((self._stage_dir(stage) / "_COMPLETE").read_text())["rows"]
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(str(self._stage_dir(stage) / "data"))
 
     def run(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Build-or-resume: skip ``build`` entirely when the stage is
-        already complete for this workdir."""
+        already complete for this workdir.  The write's row count is
+        observed in the writing job (no count job) and kept in the
+        marker (``rows``)."""
         d = self._stage_dir(stage)
         if self.is_complete(stage):
             return self.read(stage)
         t0 = time.monotonic()
         df = build()
         data_path = str(d / "data")
-        df.write.mode("overwrite").parquet(data_path)
+        rows = write_counted(df, data_path)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         written = self.spark.read.parquet(data_path)
@@ -114,6 +124,7 @@ class StageRunner:
                     "run_id": self.run_id,
                     "stage": stage,
                     "wall_ms": wall_ms,
+                    "rows": rows,
                     "config_hash": self.config_hash,
                     "config": self.config,
                 }
@@ -145,10 +156,12 @@ def run_kg_pipeline(
     After extraction the stages make the epoch-0 merge's calls
     (graph/merge.merge_graph(None, None, None, triples)): canonical is
     update_canonical's dim (via canonical_entities), then
-    attach_canonical_ids, build_nodes and build_edges.  So the build's
-    nodes and edges equal that merge's on every column
-    (tests/test_lineage.py); the stages only add the per-stage
-    checkpoints and manifests."""
+    attach_canonical_ids, build_nodes and build_edges, given the sizes
+    the stage writes observed (the canonical rows for the attach's
+    broadcast gate, the linked rows for build_edges' hot-key gate) as
+    merge_graph gives them its checkpoints' counts.  So the build's nodes
+    and edges equal that merge's on every column (tests/test_lineage.py);
+    the stages only add the per-stage checkpoints and manifests."""
     from .extract.pipeline import extract_pipeline
     from .graph.materialize import (
         attach_canonical_ids,
@@ -174,9 +187,12 @@ def run_kg_pipeline(
         ),
     )
     canonical = runner.run("canonical", lambda: canonical_entities(triples))
-    linked = runner.run("linked", lambda: attach_canonical_ids(triples, canonical))
+    linked = runner.run(
+        "linked",
+        lambda: attach_canonical_ids(triples, canonical, n_dim=runner.rows("canonical")),
+    )
     nodes = runner.run("nodes", lambda: build_nodes(linked))
-    edges = runner.run("edges", lambda: build_edges(linked))
+    edges = runner.run("edges", lambda: build_edges(linked, n_rows=runner.rows("linked")))
     return {
         "triples": triples,
         "canonical": canonical,

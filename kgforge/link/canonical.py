@@ -1,52 +1,77 @@
-"""Entity canonicalization — MinHash-LSH over entity surface forms, then
-connected components: two paths behind one gate.
+"""Entity canonicalization — the link: MinHash-LSH over entity surface
+forms, then connected components, with one contract and two executors.
 
 The reference's data model has coreference ``Cluster`` structures
 (data/data_structures.py:349-383) that its model never consumes; the north
-rule makes canonicalization a first-class stage.  Design: token shingles
-of the normalized surface (``shingles``) -> k MinHash signatures -> banded
-LSH bucketing -> candidate pairs -> Jaccard verification -> connected
-components over the verified pairs.
+rule makes canonicalization a first-class stage.  The algorithm: token
+shingles of the normalized surface (``shingles``) -> k MinHash signatures
+-> 1-row bands -> buckets of at most ``MAX_BUCKET`` members -> candidate
+pairs -> token-Jaccard verification -> connected components over the
+verified pairs.
 
-A link reads one frame, built by ``link_input`` and materialized once:
-the existing dim's rows (if any) and the new vertices, with signatures.
-Its row count is observed in that same job.  The gate is
-``LINK_TASK_MAX_ROWS`` on that count, read at call time by
-graph/merge.update_canonical (graph/materialize.canonical_entities links
-through it too):
+Every link is an epoch: the existing dim's rows (none for a build) and
+the new vertices, read from one frame that ``link_input`` builds and
+materializes once, observing its row count in that job.  A link
 
-* At or below it — every build and epoch perfbench runs — the
-  whole link (dim extension, delta LSH, root contraction, CC, relabel
-  map) is ``link_task``: numpy in ONE ``mapInPandas`` task over
-  ``coalesce(1)`` of that frame, checkpointed once (``link_one_task``).
-  At these sizes job count, not rows, sets the cost.
-* Above it: the distributed path, built-in expressions only (JVM-side,
-  whole-stage codegen), then link/cc.connected_components.  Its pieces
-  are ``lsh_candidate_pairs`` and ``lsh_candidate_pairs_delta`` below.
+1. extends the dim with the new rows whose (surface, ent_type) it lacks
+   (a case variant shares its entity's id, so it joins that cluster);
+2. pairs within the buckets that hold a new row (every bucket, for a
+   build), dropping buckets over ``MAX_BUCKET``: every member pairs with
+   every new member, and pairs below ``JACCARD_THRESHOLD`` drop;
+3. runs CC over the verified pairs with every existing cluster
+   contracted onto its root (its canonical_id, the cluster's minimum
+   id), so a merged component's label is the minimum of its roots and
+   new ids, and a cluster can never split.  This equals linking the
+   union in one shot (tested on random splits): an old–old pair in an
+   under-cap bucket was a candidate in the epoch its younger member
+   arrived — buckets only grow — so its verdict is in the prior clusters;
+4. returns ``(canonical, relabel, n_canonical)``: the extended dim with
+   every vertex's label as canonical_id; one ``(old_canonical_id,
+   new_canonical_id)`` row per old root whose label moved, size-gated
+   (functions/joins.maybe_broadcast) for merge_graph's history joins —
+   an old root with two labels raises rather than fan history out; and
+   canonical's row count, observed in the job that materializes it.
+
+graph/merge.update_canonical picks the executor by ``LINK_TASK_MAX_ROWS``
+on link_input's count, read at call time:
+
+* At or below it — every build and epoch perfbench runs —
+  ``link_one_task``: ``link_task``, numpy in ONE ``mapInPandas`` task
+  over ``coalesce(1)`` of that frame, checkpointed once.  At these sizes
+  job count, not rows, sets the cost.
+* Above it, ``link_distributed``: built-in expressions only (JVM-side,
+  whole-stage codegen) — ``lsh_candidate_pairs_delta``, then
+  link/cc.connected_components.  Its cost scales with the delta's bucket
+  neighborhood, not the accumulated dim.
+
+So the pairing rule lives in two places: ``_verified_pairs`` (numpy) and
+``_pair_buckets`` (Spark; ``lsh_candidate_pairs`` is its every-vertex-new
+case).
 
 The minhash uses explicit universal-hash arithmetic
 ``(a_j * h + b_j) mod P`` over ``xxhash64`` shingle hashes rather than
 ``pyspark.ml.feature.MinHashLSH`` — same algorithm, but pure DataFrame
 (no Vector assembly), deterministic, and cheaply re-expressible in SQL for
-oracle checks.  Signatures are always computed in Spark; both paths read
-the same ``sig`` column.
+oracle checks.  Signatures are always computed in Spark; both executors
+read the same ``sig`` column.
 
-Scale notes: the LSH band join shuffles on (ent_type, band_id, band_key) —
+Scale notes: the band join shuffles on (ent_type, band_id, band_key) —
 keys are near-uniform hash values, so no inherent skew; mega-bucket blowup
 (a degenerate signature shared by huge numbers of entities) is guarded by
-``MAX_BUCKET`` on both paths: oversized buckets are excluded from pairing
-and surfaced via ``lsh_bucket_stats`` — never silently.
+``MAX_BUCKET``: oversized buckets are excluded from pairing and surfaced
+via ``lsh_bucket_stats`` — never silently.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-from ..functions.joins import counted_checkpoint
+from ..functions.joins import counted_checkpoint, maybe_broadcast
+from . import cc
 from .cc import _min_labels
 
 # Universal-hash parameters (deterministic; Mersenne prime 2^31-1 so that
@@ -65,12 +90,12 @@ JACCARD_THRESHOLD = 0.5
 MAX_BUCKET = 64
 
 
-def _hash_params(n: int = N_HASHES) -> list[tuple[int, int]]:
+def _hash_params() -> list[tuple[int, int]]:
     """Fixed (a, b) pairs from a seeded LCG — identical across sessions,
     executors, and SQL oracles (no plan-time randomness)."""
     params = []
     x = 88172645463325252
-    for _ in range(n):
+    for _ in range(N_HASHES):
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
         a = (x % (MINHASH_P - 1)) + 1
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
@@ -128,8 +153,9 @@ def entity_vertices(triples: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signature(df: DataFrame, text_col: str = "norm") -> DataFrame:
-    """Add ``shingles: array<string>`` and ``sig: array<bigint>``.
+def minhash_signature(df: DataFrame) -> DataFrame:
+    """Add ``shingles: array<string>`` and ``sig: array<bigint>`` of the
+    ``norm`` column.
 
     Idempotent: rows that already carry both columns are returned as-is —
     signatures are deterministic in (norm), so a dim that PERSISTS them
@@ -137,7 +163,7 @@ def minhash_signature(df: DataFrame, text_col: str = "norm") -> DataFrame:
     surfaces; per-epoch signature cost is the delta's, not the dim's."""
     if "sig" in df.columns and "shingles" in df.columns:
         return df
-    sh = shingles(F.col(text_col))
+    sh = shingles(F.col("norm"))
     hashed = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_P)))
 
     def _universal(a: int, b: int):
@@ -152,12 +178,17 @@ def minhash_signature(df: DataFrame, text_col: str = "norm") -> DataFrame:
     return df.withColumn("shingles", sh).withColumn("sig", sig)
 
 
-def _bands(vertices: DataFrame) -> DataFrame:
+# a band bucket: one signature value of one band within one entity type
+_BUCKET = ["ent_type", "band_id", "band_key"]
+
+
+def _bands(vertices: DataFrame, *cols: str) -> DataFrame:
     sigged = minhash_signature(vertices)
     return sigged.select(
         "entity_id",
         "ent_type",
         "shingles",
+        *cols,
         F.posexplode(
             F.array(
                 *[
@@ -173,103 +204,85 @@ def lsh_bucket_stats(vertices: DataFrame) -> DataFrame:
     """Bucket-size histogram (monitoring; 'no silent caps')."""
     return (
         _bands(vertices)
-        .groupBy("ent_type", "band_id", "band_key")
+        .groupBy(*_BUCKET)
         .agg(F.count("*").alias("bucket_size"))
         .groupBy("bucket_size")
         .agg(F.count("*").alias("n_buckets"))
     )
 
 
-def lsh_candidate_pairs_delta(
-    all_verts: DataFrame,
-    new_verts: DataFrame,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Candidate pairs with at least one endpoint from ``new_verts``,
-    touching only the DELTA'S buckets — the per-epoch shape of
-    incremental re-linking (graph/merge.update_canonical).
-
-    The new vertices' bands pick the hot bucket keys (tiny, broadcast);
-    ONE map-side filter pass over the dim's bands keeps hot-bucket
-    members (no full-dim shuffle — with persisted signatures banding is
-    pure slicing); bucket-cap counting and quadratic pairing then run on
-    that small member set only.  Bucket sizes are exact: every member of
-    a hot bucket survives the key filter, so the within-filter count
-    equals the global count the full path caps on.  Output semantics
-    equal the pairs of lsh_candidate_pairs(all) with a new endpoint, up
-    to extra pairs between old vertices that share a hot bucket — which
-    the incremental caller tolerates by construction (old–old verdicts
-    are already reflected in the prior clusters)."""
-    keycols = ["ent_type", "band_id", "band_key"]
-    hot = _bands(new_verts).select(*keycols).distinct()
-    members = _bands(all_verts).join(F.broadcast(hot), on=keycols)
-    sizes = members.groupBy(*keycols).agg(F.count("*").alias("bucket_size"))
-    members = members.join(
-        sizes.filter(F.col("bucket_size") <= max_bucket).drop("bucket_size"),
-        on=keycols,
-    )
-    new_ids = new_verts.select("entity_id").distinct()
-    b = members.join(F.broadcast(new_ids), on="entity_id").select(
-        *keycols, F.col("entity_id").alias("bid"), F.col("shingles").alias("sh_b")
-    )
+def _pair_buckets(members: DataFrame, jaccard_threshold: float) -> DataFrame:
+    """The Spark pairing: band rows ``(_BUCKET, entity_id, shingles,
+    is_new)`` -> verified ``(src, dst, jaccard)`` with src < dst.  Buckets
+    with more than ``MAX_BUCKET`` members (read at call time) drop; every
+    member pairs with every new member of its bucket — two new members
+    once, smaller id first, so an all-new input joins each pair once — and
+    pairs below ``jaccard_threshold`` drop."""
+    members = members.withColumn(
+        "bucket_size", F.count(F.lit(1)).over(Window.partitionBy(*_BUCKET))
+    ).filter(F.col("bucket_size") <= MAX_BUCKET)
     a = members.select(
-        *keycols, F.col("entity_id").alias("aid"), F.col("shingles").alias("sh_a")
+        *_BUCKET, F.col("entity_id").alias("aid"), F.col("is_new").alias("a_new"),
+        F.col("shingles").alias("sh_a"),
     )
-    cand = (
-        a.join(b, on=keycols)
-        .filter(F.col("aid") != F.col("bid"))
-        .select(
-            F.least("aid", "bid").alias("src"),
-            F.greatest("aid", "bid").alias("dst"),
-            "sh_a", "sh_b",
-        )
-        .dropDuplicates(["src", "dst"])
+    b = members.filter("is_new").select(
+        *_BUCKET, F.col("entity_id").alias("bid"), F.col("shingles").alias("sh_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
+    # verified before deduplication: a pair meets once per shared bucket,
+    # and only the verified (src, dst, jaccard) rows, no shingle arrays,
+    # reach the dedup's shuffle
     return (
-        cand.withColumn("jaccard", inter / union)
+        a.join(b, on=_BUCKET)
+        .filter(
+            (F.col("aid") < F.col("bid"))
+            | (~F.col("a_new") & (F.col("aid") != F.col("bid")))
+        )
+        .select(
+            F.least("aid", "bid").alias("src"),
+            F.greatest("aid", "bid").alias("dst"),
+            (inter / union).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
-        .select("src", "dst", "jaccard")
+        .dropDuplicates(["src", "dst"])
     )
 
 
 def lsh_candidate_pairs(
-    vertices: DataFrame,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-    max_bucket: int = MAX_BUCKET,
+    vertices: DataFrame, jaccard_threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
-    """Banded LSH: same (ent_type, band_id, band_key) bucket -> candidate
-    pair -> verify token-shingle Jaccard.  Returns (src, dst, jaccard) with
-    src < dst.  Buckets larger than ``max_bucket`` are excluded (guard
-    against O(bucket^2) blowup); their count is visible via
-    ``lsh_bucket_stats``."""
-    bands = _bands(vertices)
-    keycols = ["ent_type", "band_id", "band_key"]
-    sizes = bands.groupBy(*keycols).agg(F.count("*").alias("bucket_size"))
-    bands = bands.join(
-        sizes.filter(F.col("bucket_size") <= max_bucket).drop("bucket_size"),
-        on=keycols,
+    """Verified pairs among ``vertices``: ``lsh_candidate_pairs_delta``
+    with every vertex new, so every bucket is hot and the hot-key filter
+    folds away at plan time.  Returns ``(src, dst, jaccard)`` with
+    src < dst; over-cap buckets are visible via ``lsh_bucket_stats``."""
+    return lsh_candidate_pairs_delta(
+        vertices.withColumn("is_new", F.lit(True)), 0, jaccard_threshold
     )
-    a = bands.select(
-        *keycols, F.col("entity_id").alias("src"), F.col("shingles").alias("sh_a")
+
+
+def lsh_candidate_pairs_delta(
+    verts: DataFrame, n_rows: int, jaccard_threshold: float = JACCARD_THRESHOLD
+) -> DataFrame:
+    """Verified pairs of ``verts`` with at least one new endpoint
+    (``is_new``), touching only the buckets that hold a new vertex — the
+    per-epoch shape of incremental re-linking (``link_distributed``).
+
+    The new vertices' bands pick the hot bucket keys; ONE map-side
+    filter pass over the old vertices' bands keeps hot-bucket members (no
+    full-dim shuffle — with persisted signatures banding is pure
+    slicing).  Bucket sizes are exact: every member of a hot bucket
+    survives the key filter, so the cap drops the buckets the full
+    pairing drops, and the output is its pairs with a new endpoint.
+    ``n_rows`` bounds the new vertices' row count (link_input's observed
+    count), so the hot keys (``N_BANDS`` per new vertex) are a size-gated
+    broadcast (functions/joins.maybe_broadcast) at no count job."""
+    new = _bands(verts.filter("is_new"), "is_new")
+    hot = new.select(*_BUCKET).distinct()
+    old = _bands(verts.filter(~F.col("is_new")), "is_new").join(
+        maybe_broadcast(hot, n_rows=N_BANDS * n_rows), on=_BUCKET
     )
-    b = bands.select(
-        *keycols, F.col("entity_id").alias("dst"), F.col("shingles").alias("sh_b")
-    )
-    cand = (
-        a.join(b, on=keycols)
-        .filter(F.col("src") < F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        cand.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= F.lit(jaccard_threshold))
-        .select("src", "dst", "jaccard")
-    )
+    return _pair_buckets(old.unionByName(new), jaccard_threshold)
 
 
 # The one-task link's gate on link_input's row count.  link_task holds
@@ -314,13 +327,12 @@ def link_input(
     return counted_checkpoint(rows)
 
 
-def link_one_task(rows: DataFrame) -> tuple[DataFrame, DataFrame, int]:
-    """The one-task path: ``link_task`` over ``link_input``'s rows in one
-    ``mapInPandas`` task, checkpointed once.  Returns ``(canonical,
-    relabel, n_canonical)`` split from that checkpoint: canonical is
-    ``(entity_id, surface, ent_type, norm, shingles, sig, canonical_id)``,
-    relabel is ``(old_canonical_id, new_canonical_id)``, and canonical's
-    row count is observed in the checkpoint's job."""
+def link_one_task(rows: DataFrame, n_rows: int) -> tuple[DataFrame, DataFrame, int]:
+    """The one-task executor: ``link_task`` over ``link_input``'s
+    ``n_rows`` rows in one ``mapInPandas`` task, checkpointed once.
+    Canonical ``(entity_id, surface, ent_type, norm, shingles, sig,
+    canonical_id)`` and the relabel map are split from that checkpoint,
+    and canonical's row count is observed in its job."""
     fields = {f.name: f for f in rows.schema.fields}
     schema = StructType(
         [fields["entity_id"]]
@@ -347,7 +359,99 @@ def link_one_task(rows: DataFrame) -> tuple[DataFrame, DataFrame, int]:
         F.col("entity_id").alias("old_canonical_id"),
         F.col("canonical_id").alias("new_canonical_id"),
     )
-    return canonical, relabel, n.get["n"]
+    # the relabel map has at most one row per input row
+    return canonical, maybe_broadcast(relabel, n_rows=n_rows), n.get["n"]
+
+
+def link_distributed(rows: DataFrame, n_rows: int) -> tuple[DataFrame, DataFrame, int]:
+    """The distributed executor: steps 1-4 of the module docstring as
+    Spark joins over ``link_input``'s ``n_rows`` rows, then
+    link/cc.connected_components (resolved at call time)."""
+    old = rows.filter(~F.col("is_new")).drop("is_new")
+    # one root per old id (surface variants share an entity_id and its
+    # root); like the dim's keys, at most one row per input row
+    root = maybe_broadcast(
+        old.select("entity_id", "root").dropDuplicates(["entity_id"]), n_rows=n_rows
+    )
+    # dim extension WITHOUT a full-dim shuffle: the old dim is already
+    # unique on (surface, ent_type), and so are the new rows
+    # (entity_vertices) — anti-join them against the dim's keys and
+    # append.  A dropDuplicates over the union would shuffle every wide
+    # row (shingles + sig arrays) of the accumulated dim once per epoch.
+    # A new surface can share its normalized entity_id with an old one (a
+    # case variant): it takes that entity's root, and a null root marks an
+    # id new to the link graph.
+    keys = maybe_broadcast(old.select("surface", "ent_type"), n_rows=n_rows)
+    new_only = (
+        rows.filter("is_new").select(*VERTEX_COLS)
+        .join(keys, on=["surface", "ent_type"], how="left_anti")
+        .join(root, on="entity_id", how="left")
+        .localCheckpoint(eager=True)
+    )
+    verts = old.withColumn("is_new", F.lit(False)).unionByName(
+        new_only.withColumn("is_new", F.lit(True))
+    )
+
+    # candidate pairs contracted to root edges, checkpointed once: CC reads
+    # them twice (vertices and edges), and the LSH must not run twice.
+    # Two pairs may contract to one edge; duplicate edges do not change
+    # components.
+    cand = lsh_candidate_pairs_delta(verts, n_rows)
+    for end in ("src", "dst"):
+        cand = cand.join(
+            root.withColumnRenamed("entity_id", end)
+            .withColumnRenamed("root", f"{end}_root"),
+            on=end, how="left",
+        )
+    edges = (
+        cand.select(
+            F.coalesce("src_root", "src").alias("src"),
+            F.coalesce("dst_root", "dst").alias("dst"),
+            F.col("src_root").isNotNull().alias("src_old"),
+            F.col("dst_root").isNotNull().alias("dst_old"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    ends = edges.select(
+        F.col("src").alias("root"), F.col("src_old").alias("old")
+    ).unionByName(
+        edges.select(F.col("dst").alias("root"), F.col("dst_old").alias("old"))
+    )
+    labels = cc.connected_components(ends, edges, vertex_col="root").withColumnRenamed(
+        "canonical_id", "label"
+    )
+    canonical, n_canonical = counted_checkpoint(
+        verts.withColumn("root", F.coalesce("root", "entity_id"))
+        .join(labels, on="root", how="left")
+        .select(
+            "entity_id", "surface", "ent_type", "norm", "shingles", "sig",
+            F.coalesce("label", "root").alias("canonical_id"),
+        )
+    )
+
+    # old roots whose label changed, one row each.  The CC labels are
+    # functional by construction, so more than one new id per old root is
+    # a bug: fail loudly rather than fan out history in _relabel.
+    seen = Observation("relabel")
+    relabel = (
+        labels.join(ends.filter("old"), on="root", how="left_semi")
+        .filter(F.col("root") != F.col("label"))
+        .groupBy(F.col("root").alias("old_canonical_id"))
+        .agg(
+            F.min("label").alias("new_canonical_id"),
+            F.count_distinct("label").alias("n_new"),
+        )
+        .observe(seen, F.count(F.lit(1)).alias("rows"), F.max("n_new").alias("fanout"))
+        .localCheckpoint(eager=True)
+        .drop("n_new")
+    )
+    if (seen.get["fanout"] or 0) > 1:
+        raise RuntimeError(
+            "link_distributed: relabel map is one-to-many (an existing "
+            "cluster split) — refusing to migrate history"
+        )
+    return canonical, maybe_broadcast(relabel, n_rows=seen.get["rows"]), n_canonical
 
 
 def _ragged(counts: np.ndarray) -> np.ndarray:
@@ -356,25 +460,11 @@ def _ragged(counts: np.ndarray) -> np.ndarray:
 
 
 def link_task(frame: pd.DataFrame) -> pd.DataFrame:
-    """The whole link of ``link_input``'s rows, in pandas/numpy.
-
-    1. The dim extension: new rows whose (surface, ent_type) the dim
-       lacks.  One whose entity_id the dim has (a case variant) shares
-       that entity's dense id below, so it joins the entity's cluster.
-    2. The delta LSH: hot buckets are the new rows'; buckets with more
-       than ``MAX_BUCKET`` members drop; every member pairs with every
-       member whose id is a new id.  Without a dim every bucket is hot and
-       every id new: that is ``lsh_candidate_pairs``.
-    3. Pairs with token Jaccard below the threshold drop.
-    4. CC (link/cc's union-find ``_min_labels``) over the verified pairs plus
-       one edge from each old row to its root: an existing cluster is
-       contracted onto its root, whose id is the cluster's minimum, so the
-       label of a merged component is the minimum of its roots and new
-       ids — the same as linking the union in one shot.
-    5. Every vertex takes its label.  The relabel map is built from the old
-       rows' (old root, new id) pairs: an old root with two new ids means
-       a cluster split, and the task raises rather than let merge_graph
-       fan history out.
+    """Steps 1-4 of the module docstring over ``link_input``'s rows, in
+    pandas/numpy.  A case variant shares its entity's dense id, and CC is
+    link/cc's union-find ``_min_labels`` over the verified pairs plus one
+    edge from each old row to its root.  The relabel map comes from the
+    old rows' (old root, new id) pairs.
 
     Returns the canonical rows (``is_vertex``) followed by one relabel row
     per moved old root: ``entity_id`` = old root, ``canonical_id`` = its
@@ -424,7 +514,7 @@ def link_task(frame: pd.DataFrame) -> pd.DataFrame:
 def _verified_pairs(
     verts: pd.DataFrame, v: np.ndarray, n_old: int, n_ids: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Steps 2-3 of ``link_task``: verified pairs ``(lo, hi)`` of dense ids
+    """Step 2 of ``link_task``: verified pairs ``(lo, hi)`` of dense ids
     ``v`` with at least one new id; rows from ``n_old`` on are new."""
     none = np.empty(0, np.int64)
     if n_old == len(verts):

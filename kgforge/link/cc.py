@@ -15,18 +15,22 @@ time:
   shuffle), and its output is checkpointed once.  The whole call is two
   Spark jobs.  At these sizes job count, not rows, sets the cost: the
   iterative path below spends about seven jobs per round at 6-11 % core
-  utilisation.  Builds and epochs below the link gate
-  (link/canonical.LINK_TASK_MAX_ROWS) do not call this module's Spark
-  paths at all: their whole link, ``_min_labels`` included, is one task
-  (link/canonical.link_task).
+  utilisation.
 * Above it: min-label propagation with pointer jumping by DataFrame joins.
   Every vertex adopts the minimum label in its closed neighborhood, then
   compresses paths via ``l(v) <- l(l(v))`` (the doubling step of classic
   PRAM CC; same asymptotics as GraphFrames' large-star/small-star).
   Converges in O(log n) rounds; each round is two shuffles (neighbor agg +
   label self-join).  ``localCheckpoint`` per iteration truncates lineage so
-  the plan doesn't grow exponentially (SURVEY.md §4.3); an iteration cap +
-  convergence metric guard runaway inputs (never silent).
+  the plan doesn't grow exponentially (SURVEY.md §4.3); an iteration cap
+  (``MAX_ITERATIONS``, read at call time) + convergence metric guard
+  runaway inputs (never silent).
+
+The link's two executors (link/canonical) reach this module differently:
+``link_distributed`` calls ``connected_components``, resolved on this
+module at call time; ``link_task`` runs ``_min_labels`` inside its own
+one task, so a link below link/canonical.LINK_TASK_MAX_ROWS runs none of
+the Spark paths here.
 """
 
 from __future__ import annotations
@@ -44,7 +48,6 @@ def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     vertex_col: str = "entity_id",
-    max_iterations: int = MAX_ITERATIONS,
 ) -> DataFrame:
     """Return ``(vertex_col, canonical_id)`` — canonical_id = min vertex id
     reachable in the undirected graph ``edges(src, dst)``.
@@ -63,7 +66,7 @@ def connected_components(
     if n_rows <= joins.BROADCAST_DIM_MAX_ROWS:
         labels = _union_find(rows)
     else:
-        labels = _label_propagation(rows, max_iterations)
+        labels = _label_propagation(rows)
     return labels.withColumnRenamed("a", vertex_col)
 
 
@@ -120,7 +123,7 @@ def _union_find(rows: DataFrame) -> DataFrame:
     )
 
 
-def _label_propagation(rows: DataFrame, max_iterations: int) -> DataFrame:
+def _label_propagation(rows: DataFrame) -> DataFrame:
     """The distributed path: materialized (src, dst, is_vertex) rows ->
     (a, canonical_id)."""
     from ..functions.joins import maybe_broadcast
@@ -152,7 +155,7 @@ def _label_propagation(rows: DataFrame, max_iterations: int) -> DataFrame:
     # integer min — broadcast-join row-order changes cannot perturb it.
     n_v = labels.count()
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         # min over closed neighborhood: own label ∧ min(neighbor labels)
         nbr_min = (
             sym.join(
@@ -207,6 +210,6 @@ def _label_propagation(rows: DataFrame, max_iterations: int) -> DataFrame:
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} iterations"
+            f"connected_components did not converge in {MAX_ITERATIONS} iterations"
         )
     return labels

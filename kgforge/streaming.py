@@ -17,6 +17,21 @@ from pyspark.sql import SparkSession
 REPOS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
+def _complete_epochs(state_dir: str) -> list[int]:
+    """Sorted N over ``state_dir/epoch=N/_COMPLETE`` markers: the one scan
+    behind ``latest_complete_epoch`` and ``prune_graph_epochs``."""
+    import os
+
+    if not os.path.isdir(state_dir):
+        return []
+    return sorted(
+        int(name.split("=", 1)[1])
+        for name in os.listdir(state_dir)
+        if name.startswith("epoch=")
+        and os.path.exists(os.path.join(state_dir, name, "_COMPLETE"))
+    )
+
+
 def latest_complete_epoch(state_dir: str) -> int | None:
     """Max N over ``state_dir/epoch=N/_COMPLETE`` markers (None if none).
 
@@ -24,17 +39,8 @@ def latest_complete_epoch(state_dir: str) -> int | None:
     read: _COMPLETE is written atomically after an epoch's data, so the
     scan can never name an epoch whose data is missing, and it cannot go
     stale if a crash lands between _COMPLETE and the _LATEST update."""
-    import os
-
-    latest = None
-    if os.path.isdir(state_dir):
-        for name in os.listdir(state_dir):
-            marker = os.path.join(state_dir, name, "_COMPLETE")
-            if name.startswith("epoch=") and os.path.exists(marker):
-                n = int(name.split("=", 1)[1])
-                if latest is None or n > latest:
-                    latest = n
-    return latest
+    done = _complete_epochs(state_dir)
+    return done[-1] if done else None
 
 
 def prune_graph_epochs(state_dir: str, keep_last: int = 2) -> list[int]:
@@ -49,18 +55,20 @@ def prune_graph_epochs(state_dir: str, keep_last: int = 2) -> list[int]:
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    if not os.path.isdir(state_dir):
-        return []
-    done = sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(state_dir)
-        if name.startswith("epoch=")
-        and os.path.exists(os.path.join(state_dir, name, "_COMPLETE"))
-    )
-    pruned = done[:-keep_last]
+    pruned = _complete_epochs(state_dir)[:-keep_last]
     for n in pruned:
         shutil.rmtree(os.path.join(state_dir, f"epoch={n}"))
     return pruned
+
+
+def _read_epoch(spark: SparkSession, state_dir: str, epoch: int):
+    """(nodes, edges, canonical) of ``state_dir/epoch=N``."""
+    import os
+
+    edir = os.path.join(state_dir, f"epoch={epoch}")
+    return tuple(
+        spark.read.parquet(os.path.join(edir, t)) for t in ("nodes", "edges", "canonical")
+    )
 
 
 def run_incremental_graph(
@@ -108,18 +116,10 @@ def run_incremental_graph(
             return  # replayed batch after restart: already merged
         delta = extract_triples_onepass(batch_df, model_name)
         prev = latest_complete_epoch(state_dir)
-        if prev is None:
-            nodes = edges = canonical = None
-        else:
-            pdir = os.path.join(state_dir, f"epoch={prev}")
-            nodes = spark.read.parquet(os.path.join(pdir, "nodes"))
-            edges = spark.read.parquet(os.path.join(pdir, "edges"))
-            canonical = spark.read.parquet(os.path.join(pdir, "canonical"))
+        state = (None,) * 3 if prev is None else _read_epoch(spark, state_dir, prev)
         # per-epoch lineage metrics: row counts observed by the writes
         metrics = {"epoch": epoch_id}
-        for name, df in zip(
-            ("nodes", "edges", "canonical"), merge_graph(nodes, edges, canonical, delta)
-        ):
+        for name, df in zip(("nodes", "edges", "canonical"), merge_graph(*state, delta)):
             metrics[f"n_{name}"] = write_counted(df, os.path.join(edir, name))
         with open(os.path.join(edir, "metrics.json"), "w") as f:
             json.dump(metrics, f)
@@ -141,14 +141,7 @@ def run_incremental_graph(
 def read_graph_state(spark: SparkSession, state_dir: str):
     """(nodes, edges, canonical) of the latest completed epoch (derived
     from the _COMPLETE markers; the _LATEST file is informational)."""
-    import os
-
     latest = latest_complete_epoch(state_dir)
     if latest is None:
         raise FileNotFoundError(f"no completed epoch under {state_dir}")
-    edir = os.path.join(state_dir, f"epoch={latest}")
-    return (
-        spark.read.parquet(os.path.join(edir, "nodes")),
-        spark.read.parquet(os.path.join(edir, "edges")),
-        spark.read.parquet(os.path.join(edir, "canonical")),
-    )
+    return _read_epoch(spark, state_dir, latest)

@@ -133,3 +133,26 @@ def test_crash_mid_write_reruns_stage(spark, tmp_path):
     out = r.run("s", build("v2"))
     assert calls == ["v1", "v2"]
     assert [x.tag for x in out.collect()] == ["v2"]
+
+
+def test_marker_rows_equal_manifest(spark, first_run, workdir):
+    """Each stage's _COMPLETE marker records the rows its write observed:
+    it equals the manifest's sum(rows_out) for every stage, on the fresh
+    run and on a resumed run that reruns one stage and reads the others'
+    counts back from their markers."""
+    from pyspark.sql import functions as F
+
+    stages = ("triples", "canonical", "linked", "nodes", "edges")
+    _, repos, out = first_run
+
+    def check(runner):
+        manifest = {
+            r.stage: r.n
+            for r in runner.lineage().groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+        }
+        assert {s: runner.rows(s) for s in stages} == manifest
+        assert all(n > 0 for n in manifest.values())
+
+    check(out["runner"])
+    (pathlib.Path(workdir) / "linked" / "_COMPLETE").unlink()
+    check(run_kg_pipeline(spark, repos, workdir)["runner"])

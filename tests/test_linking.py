@@ -272,7 +272,10 @@ def test_lsh_delta_pairs_match_involving(spark):
         key(r) for r in lsh_candidate_pairs(allv).collect()
         if r.src in new_ids or r.dst in new_ids
     }
-    delta = lsh_candidate_pairs_delta(allv, new)
+    flagged = old.withColumn("is_new", F.lit(False)).unionByName(
+        new.select(*old.columns).withColumn("is_new", F.lit(True))
+    )
+    delta = lsh_candidate_pairs_delta(flagged, new.count())
     delta_new = {
         key(r) for r in delta.collect()
         if r.src in new_ids or r.dst in new_ids
@@ -316,19 +319,17 @@ def _link_task_oracle(frame, max_bucket):
     return canonical, moved
 
 
-def test_link_task_matches_python_oracle_on_random_frames(monkeypatch):
-    """The one-task link body (numpy, no Spark) equals a plain-Python
-    reading of the same steps on seeded random dims and deltas: shared
-    signature values make multi-member and over-cap buckets, old clusters
-    have several members, some new rows repeat an old surface and some
-    are case variants of an old entity (same id and tokens)."""
+def _random_link_frames():
+    """(seed, frame) of seeded random ``link_input`` rows: shared signature
+    values make multi-member and over-cap buckets, old clusters have
+    several members, some new rows repeat an old surface and some are case
+    variants of an old entity (same id and tokens).  Seed 5 has no dim."""
     import random
 
     import numpy as np
     import pandas as pd
 
-    import kgforge.link.canonical as canonical
-    from kgforge.link.canonical import N_HASHES, link_task
+    from kgforge.link.canonical import N_HASHES
 
     for seed in range(6):
         rng = random.Random(seed)
@@ -359,6 +360,17 @@ def test_link_task_matches_python_oracle_on_random_frames(monkeypatch):
         )
         if seed == 5:
             frame = frame[frame.is_new]  # no dim: every vertex new
+        yield seed, frame
+
+
+def test_link_task_matches_python_oracle_on_random_frames(monkeypatch):
+    """The one-task link body (numpy, no Spark) equals a plain-Python
+    reading of the same steps on seeded random dims and deltas
+    (``_random_link_frames``)."""
+    import kgforge.link.canonical as canonical
+    from kgforge.link.canonical import link_task
+
+    for seed, frame in _random_link_frames():
         for cap in (3, 64):
             monkeypatch.setattr(canonical, "MAX_BUCKET", cap)
             out = link_task(frame)
@@ -371,3 +383,32 @@ def test_link_task_matches_python_oracle_on_random_frames(monkeypatch):
             assert list(out.columns[:7]) == [
                 "entity_id", "surface", "ent_type", "norm", "shingles", "sig", "canonical_id"
             ]
+
+
+def test_link_distributed_matches_python_oracle_on_random_frames(spark, monkeypatch):
+    """The distributed executor on link_input-shaped Spark frames of the
+    same seeded random dims and deltas equals the plain-Python oracle,
+    with and without a dim and at two bucket caps: its canonical ids, its
+    relabel map and its observed canonical count."""
+    import kgforge.link.canonical as canonical
+    from kgforge.link.canonical import link_distributed
+
+    schema = (
+        "surface string, ent_type string, norm string, entity_id bigint, "
+        "shingles array<string>, sig array<bigint>, root bigint, is_new boolean"
+    )
+    for seed, frame in _random_link_frames():
+        rows = spark.createDataFrame([
+            (r.surface, r.ent_type, r.norm, int(r.entity_id), [str(t) for t in r.shingles],
+             [int(x) for x in r.sig], int(r.root), bool(r.is_new))
+            for r in frame.itertuples()
+        ], schema).localCheckpoint(eager=True)
+        for cap in (3, 64):
+            monkeypatch.setattr(canonical, "MAX_BUCKET", cap)
+            can, relabel, n_canonical = link_distributed(rows, len(frame))
+            got = {(r.surface, r.ent_type): r.canonical_id for r in can.collect()}
+            moved = {r.old_canonical_id: r.new_canonical_id for r in relabel.collect()}
+            want_can, want_moved = _link_task_oracle(frame, cap)
+            assert got == want_can, (seed, cap)
+            assert n_canonical == len(want_can), (seed, cap)
+            assert moved == want_moved, (seed, cap)

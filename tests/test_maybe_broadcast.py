@@ -152,3 +152,44 @@ def test_broadcast_size_gate(spark, monkeypatch):
     sp = via_shuffle._jdf.queryExecution().sparkPlan().toString()
     assert "BroadcastHashJoin" in bp
     assert "BroadcastHashJoin" not in sp
+
+
+def test_lsh_delta_broadcasts_are_size_gated(spark, monkeypatch):
+    """link/canonical.lsh_candidate_pairs_delta: the hot bucket keys are
+    a data-dependent dim (N_BANDS rows per new vertex), so they broadcast
+    only through maybe_broadcast, sized by the caller's row count.  With
+    the module gate at 0 the pre-AQE sparkPlan has no BroadcastHashJoin
+    (the planner's own size-based broadcast is off here, so only a hint
+    could add one); under the gate the hot-key join broadcasts."""
+    from pyspark.sql import functions as F
+
+    from kgforge.functions import joins
+    from kgforge.link.canonical import (
+        entity_vertices,
+        lsh_candidate_pairs_delta,
+        minhash_signature,
+    )
+
+    t = spark.createDataFrame(
+        [("anchor model", "Method", "prism index", "Task"),
+         ("anchor model system", "Method", "quartz sampler", "Task")],
+        "subj string, subj_type string, obj string, obj_type string",
+    )
+    verts = minhash_signature(entity_vertices(t)).withColumn(
+        "is_new", F.col("surface").startswith("anchor")
+    ).localCheckpoint(eager=True)
+
+    def plan():
+        pairs = lsh_candidate_pairs_delta(verts, 2)
+        return pairs._jdf.queryExecution().sparkPlan().toString()
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 0)
+        assert "BroadcastHashJoin" not in plan()
+        monkeypatch.setattr(joins, "BROADCAST_DIM_MAX_ROWS", 100)
+        assert "BroadcastHashJoin" in plan()
+    finally:
+        spark.conf.set(key, saved)

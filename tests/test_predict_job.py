@@ -20,6 +20,18 @@ def _write_sentences(tmp_path, n=30):
     return p
 
 
+def _write_graph(spark, tmp_path):
+    """kg_job-style output of the 30-repo fixture corpus: its nodes table
+    under ``tmp_path/kg_out``."""
+    from kgforge.fixtures import gen_repo_rows
+    from kgforge.lineage import run_kg_pipeline
+
+    out_graph = tmp_path / "kg_out"
+    res = run_kg_pipeline(spark, spark.createDataFrame(gen_repo_rows(30)), str(tmp_path / "wd"))
+    res["nodes"].write.parquet(str(out_graph / "nodes"))
+    return out_graph
+
+
 def test_predict_job_text_input(spark, tmp_path, capsys, monkeypatch):
     from jobs.predict_job import main
 
@@ -55,15 +67,8 @@ def test_predict_job_graph_linking(spark, tmp_path, capsys, monkeypatch):
     import pyarrow.parquet as pq
 
     from jobs.predict_job import main
-    from kgforge.fixtures import gen_repo_rows
-    from kgforge.lineage import run_kg_pipeline
 
-    rows = gen_repo_rows(30)
-    repos = spark.createDataFrame(rows)
-    out_graph = tmp_path / "kg_out"
-    res = run_kg_pipeline(spark, repos, str(tmp_path / "wd"))
-    res["nodes"].write.parquet(str(out_graph / "nodes"))
-
+    out_graph = _write_graph(spark, tmp_path)
     sents = _write_sentences(tmp_path, n=30)
     out = tmp_path / "pred"
     monkeypatch.setattr(sys, "argv", [
@@ -231,3 +236,42 @@ def test_serving_empty_graph_and_empty_request(spark, tmp_path):
     _write_nodes(graph, sents, 100)
     for nodes in (empty, spark.read.parquet(str(graph))):
         assert _request(spark, quiet, nodes, "dim-no-triples")[0] == []
+
+
+def test_predict_job_summary_observed_in_its_write(spark, tmp_path, capsys, monkeypatch):
+    """With --graph, main takes its summary from Observations on the
+    frames its one write consumes and from the write itself, with no
+    checkpoint and no count pass: at most 8 Spark jobs, where two
+    localCheckpoints and four count passes took 19.  Every count equals a
+    re-read: sentences of the input, the rest of the written payloads."""
+    from jobs.predict_job import main, read_sentences
+
+    out_graph = _write_graph(spark, tmp_path)
+    sents = _write_sentences(tmp_path, n=30)
+    out = tmp_path / "pred"
+    monkeypatch.setattr(sys, "argv", [
+        "predict_job.py", "--sentences", str(sents), "--output", str(out),
+        "--graph", str(out_graph),
+    ])
+    monkeypatch.setattr("pyspark.sql.SparkSession.stop", lambda self: None)
+    sc = spark.sparkContext
+    sc.setJobGroup("predict-main-jobs", "predict-main-jobs")
+    try:
+        main()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("predict-main-jobs"))
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    payloads = [json.loads(r.value)["relations"] for r in spark.read.text(str(out)).collect()]
+    rels = [rel for rs in payloads for rel in rs]
+    assert summary["sentences"] == read_sentences(spark, str(sents), "text").count()
+    assert summary["units_with_relations"] == len(payloads)
+    assert summary["triples"] == len(rels)
+    assert summary["triples_fully_linked"] == sum(
+        "subject_id" in rel and "object_id" in rel for rel in rels
+    )
+    assert 0 < summary["triples_fully_linked"] < summary["triples"]
+    assert jobs <= 8
