@@ -6,13 +6,20 @@ Reference analog: the tensor-cache sink/source keyed by config tag
 (S6, data/data_module.py:55-67) — generalized to a manifest-gated
 per-stage parquet checkpoint.
 
-Contract (SURVEY.md §7.6): a stage writes its data partition, then appends
-``(run_id, stage, partition_id, rows_out, triple_count, content_sha_agg,
-wall_ms)`` rows plus a ``_COMPLETE`` marker, which records the row count
-the data write observed (``rows``).  On restart, a stage whose marker
-exists is read back, not recomputed, and its ``rows`` is still known.
+Contract (SURVEY.md §7.6): a stage is one Spark write of its data, then
+a ``_COMPLETE`` marker that is its whole manifest: ``run_id``, ``stage``,
+``wall_ms``, the config hash; the ``rows`` the write observed (an
+``Observation``, no extra job) and, for a stage with a ``content_sha``
+column, ``content_sha_agg`` = Σ crc32(content_sha) from the same job;
+``partitions``, one ``{partition_id, rows_out}`` per written ``part-*``
+file (the write task's index from the file name, the rows from the
+file's parquet footer, read on the driver); and the written ``schema``
+(Spark's own, from a footer), so the stage reads back with no inference
+job.  ``lineage()`` is these markers as one frame.  On restart, a stage
+whose marker exists for the same config is read back, not recomputed.
 The marker is written AFTER the data — a crash mid-write leaves no
-marker, so the stage reruns (idempotent overwrite).
+marker, so the stage reruns (idempotent overwrite); so does a marker
+without a field above, which predates it.
 """
 
 from __future__ import annotations
@@ -23,20 +30,13 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .graph.materialize import write_counted
-
-LINEAGE_COLS = [
-    "run_id",
-    "stage",
-    "partition_id",
-    "rows_out",
-    "triple_count",
-    "content_sha_agg",
-    "wall_ms",
-]
+# the Catalyst schema Spark keeps in every parquet footer it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class StageRunner:
@@ -62,82 +62,73 @@ class StageRunner:
         ).hexdigest()
         self.workdir.mkdir(parents=True, exist_ok=True)
 
-    def _stage_dir(self, stage: str) -> Path:
-        return self.workdir / stage
+    def _marker(self, stage: str) -> dict:
+        return json.loads((self.workdir / stage / "_COMPLETE").read_text())
 
     def is_complete(self, stage: str) -> bool:
-        marker = self._stage_dir(stage) / "_COMPLETE"
-        if not marker.exists():
-            return False
         try:
-            meta = json.loads(marker.read_text())
+            meta = self._marker(stage)
         except (ValueError, OSError):
-            return False  # unreadable marker: treat as incomplete, rerun
-        # a marker without a row count predates it: rerun to record one
-        return meta.get("config_hash") == self.config_hash and "rows" in meta
+            return False  # no or unreadable marker: rerun
+        # a marker without a manifest field predates it: rerun to record it
+        return meta.get("config_hash") == self.config_hash and all(
+            k in meta for k in ("rows", "partitions", "schema")
+        )
 
     def rows(self, stage: str) -> int:
         """The rows a complete stage wrote, from its marker."""
-        return json.loads((self._stage_dir(stage) / "_COMPLETE").read_text())["rows"]
+        return self._marker(stage)["rows"]
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._stage_dir(stage) / "data"))
+        """A complete stage's data, read with its marker's schema (no job)."""
+        schema = StructType.fromJson(json.loads(self._marker(stage)["schema"]))
+        return self.spark.read.schema(schema).parquet(str(self.workdir / stage / "data"))
 
     def run(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Build-or-resume: skip ``build`` entirely when the stage is
-        already complete for this workdir.  The write's row count is
-        observed in the writing job (no count job) and kept in the
-        marker (``rows``)."""
-        d = self._stage_dir(stage)
+        already complete for this workdir.  Otherwise the built frame is
+        written once; everything the marker records comes from that
+        write's ``Observation`` and the written files' footers."""
+        d = self.workdir / stage
         if self.is_complete(stage):
             return self.read(stage)
         t0 = time.monotonic()
         df = build()
-        data_path = str(d / "data")
-        rows = write_counted(df, data_path)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-
-        written = self.spark.read.parquet(data_path)
-        has_sha = "content_sha" in written.columns
-        per_part = (
-            written.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").cast("bigint").alias("rows_out"),
-                F.count("*").cast("bigint").alias("triple_count"),
-                (
-                    F.sum(F.crc32(F.col("content_sha"))) if has_sha else F.lit(0)
-                )
-                .cast("bigint")
-                .alias("content_sha_agg"),
-            )
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(wall_ms).cast("bigint"))
-            .withColumn("partition_id", F.col("partition_id").cast("int"))
-            .select(*LINEAGE_COLS)
-        )
-        per_part.write.mode("overwrite").parquet(str(d / "lineage"))
-        (d / "_COMPLETE").write_text(
-            json.dumps(
-                {
-                    "run_id": self.run_id,
-                    "stage": stage,
-                    "wall_ms": wall_ms,
-                    "rows": rows,
-                    "config_hash": self.config_hash,
-                    "config": self.config,
-                }
-            )
-        )
+        observed = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if "content_sha" in df.columns:
+            metrics.append(F.sum(F.crc32("content_sha")).alias("content_sha_agg"))
+        df.observe(observed, *metrics).write.mode("overwrite").parquet(str(d / "data"))
+        files = sorted((d / "data").glob("part-*"))
+        footers = [pq.read_metadata(f) for f in files]
+        meta = {
+            "run_id": self.run_id, "stage": stage,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+            **observed.get,
+            # part-<write task index>-<uuid>-c<file>.<codec>.parquet
+            "partitions": [
+                {"partition_id": int(f.name.split("-")[1]), "rows_out": m.num_rows}
+                for f, m in zip(files, footers)
+            ],
+            "schema": footers[0].metadata[_SPARK_SCHEMA_KEY].decode(),
+            "config_hash": self.config_hash, "config": self.config,
+        }
+        (d / "_COMPLETE").write_text(json.dumps(meta))
         return self.read(stage)
 
     def lineage(self) -> DataFrame:
-        """All recorded lineage rows across stages."""
-        parts = sorted(str(p) for p in self.workdir.glob("*/lineage"))
-        if not parts:
+        """One row per written file of every complete stage, from the
+        markers (no job until used)."""
+        markers = [json.loads(p.read_text()) for p in sorted(self.workdir.glob("*/_COMPLETE"))]
+        rows = [
+            (m["run_id"], m["stage"], p["partition_id"], p["rows_out"], p["rows_out"], m["wall_ms"])
+            for m in markers
+            for p in m.get("partitions", ())
+        ]
+        if not rows:
             raise FileNotFoundError(f"no lineage under {self.workdir}")
-        return self.spark.read.parquet(*parts)
+        return self.spark.createDataFrame(rows, "run_id string, stage string, partition_id int, "
+                                          "rows_out bigint, triple_count bigint, wall_ms bigint")
 
 
 def run_kg_pipeline(

@@ -87,44 +87,50 @@ def run_incremental_graph(
       state_dir/epoch=N/{nodes,edges,canonical}/  + _COMPLETE marker
       state_dir/_LATEST  -> N   (informational only — see below)
 
-    The stream checkpoint gives at-least-once per micro-batch on restart;
-    replays are absorbed by the epoch _COMPLETE marker (an already-merged
-    epoch is skipped, not merged twice).  The AUTHORITATIVE latest epoch
-    is derived by scanning epoch=N dirs for _COMPLETE markers, never read
-    from _LATEST: a crash between writing _COMPLETE and updating _LATEST
-    would otherwise leave every later epoch merging from stale state —
-    that epoch's triples silently and permanently dropped.  Reading the
-    previous epoch and writing the next one never overwrites what is
-    being read."""
+    A micro-batch becomes the latest complete epoch + 1 (a new checkpoint
+    over existing state extends it), whose _COMPLETE marker holds the
+    batch key (absolute checkpoint location, batch id).  The stream
+    checkpoint gives at-least-once per micro-batch on restart; a batch
+    whose key the latest complete epoch holds is a replay, skipped, not
+    merged twice.  The AUTHORITATIVE latest epoch is derived by scanning
+    epoch=N dirs for _COMPLETE markers, never read from _LATEST: a crash
+    between writing _COMPLETE and updating _LATEST would otherwise leave
+    every later epoch merging from stale state — that epoch's triples
+    silently and permanently dropped.  Reading the previous epoch and
+    writing the next one never overwrites what is being read."""
     import json
     import os
+    from pathlib import Path
 
     from .extract.rel import extract_triples_onepass
     from .graph.materialize import write_counted
     from .graph.merge import merge_graph
 
-    def _set_latest(epoch: int) -> None:
-        tmp = os.path.join(state_dir, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(epoch))
-        os.replace(tmp, os.path.join(state_dir, "_LATEST"))
+    def _replace(path: str, text: str) -> None:
+        with open(path + ".tmp", "w") as f:
+            f.write(text)
+        os.replace(path + ".tmp", path)  # atomic: never a torn marker
 
-    def upsert(batch_df, epoch_id: int) -> None:
+    def upsert(batch_df, batch_id: int) -> None:
         os.makedirs(state_dir, exist_ok=True)
-        edir = os.path.join(state_dir, f"epoch={epoch_id}")
-        if os.path.exists(os.path.join(edir, "_COMPLETE")):
-            return  # replayed batch after restart: already merged
-        delta = extract_triples_onepass(batch_df, model_name)
+        key = [os.path.abspath(checkpoint_dir), batch_id]
         prev = latest_complete_epoch(state_dir)
+        # an empty marker (state written before batch keys) holds none
+        done = prev is not None and Path(state_dir, f"epoch={prev}", "_COMPLETE").read_text()
+        if done and json.loads(done).get("batch_key") == key:
+            return  # replayed batch after restart: already merged
+        epoch = 0 if prev is None else prev + 1
+        edir = os.path.join(state_dir, f"epoch={epoch}")
+        delta = extract_triples_onepass(batch_df, model_name)
         state = (None,) * 3 if prev is None else _read_epoch(spark, state_dir, prev)
         # per-epoch lineage metrics: row counts observed by the writes
-        metrics = {"epoch": epoch_id}
+        metrics = {"epoch": epoch}
         for name, df in zip(("nodes", "edges", "canonical"), merge_graph(*state, delta)):
             metrics[f"n_{name}"] = write_counted(df, os.path.join(edir, name))
         with open(os.path.join(edir, "metrics.json"), "w") as f:
             json.dump(metrics, f)
-        open(os.path.join(edir, "_COMPLETE"), "w").close()
-        _set_latest(epoch_id)
+        _replace(os.path.join(edir, "_COMPLETE"), json.dumps({"batch_key": key}))
+        _replace(os.path.join(state_dir, "_LATEST"), str(epoch))
 
     q = (
         spark.readStream.schema(REPOS_SCHEMA)

@@ -1,12 +1,33 @@
 """Checkpoint/lineage contract: per-partition metrics, resume-from-failure
 (SURVEY.md §7.6; north rule)."""
 
+import json
 import pathlib
 
 import pytest
 
 from kgforge.fixtures import gen_repo_rows
 from kgforge.lineage import run_kg_pipeline
+
+
+STAGES = ("triples", "canonical", "linked", "nodes", "edges")
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _marker(workdir, stage):
+    return json.loads((pathlib.Path(workdir) / stage / "_COMPLETE").read_text())
 
 
 @pytest.fixture(scope="module")
@@ -156,3 +177,83 @@ def test_marker_rows_equal_manifest(spark, first_run, workdir):
     check(out["runner"])
     (pathlib.Path(workdir) / "linked" / "_COMPLETE").unlink()
     check(run_kg_pipeline(spark, repos, workdir)["runner"])
+
+
+def test_build_stage_job_budget(spark, tmp_path):
+    """The five stages of a build on gen_repo_rows(1000) run 11 Spark
+    jobs: each stage is its build's jobs plus one write (triples 1,
+    canonical 3 + 1, linked, nodes and edges 2 each with their
+    shuffle), and the manifest adds none: no re-read, no lineage table,
+    no schema inference.  The parent's bookkeeping made it 31."""
+    repos = spark.createDataFrame(gen_repo_rows(1000))
+    wd = tmp_path / "wd"
+    assert _jobs(spark, "kg-build-jobs", lambda: run_kg_pipeline(spark, repos, str(wd))) == 11
+    assert not list(wd.glob("*/lineage"))
+
+
+def test_resume_runs_no_job(spark, first_run, workdir):
+    """A resumed build reads every stage back with its marker's schema:
+    no schema-inference job, no job at all."""
+    _, repos, _ = first_run
+    assert _jobs(spark, "kg-resume-jobs", lambda: run_kg_pipeline(spark, repos, workdir)) == 0
+
+
+def test_stage_schema_equals_inferred(spark, first_run, workdir):
+    """Each stage frame, fresh and resumed, has exactly the schema that
+    inference over its data gives, nested nullability included."""
+    _, repos, out = first_run
+    resumed = run_kg_pipeline(spark, repos, workdir)
+    for stage in STAGES:
+        inferred = spark.read.parquet(str(pathlib.Path(workdir) / stage / "data")).schema
+        assert out[stage].schema == inferred == resumed[stage].schema, stage
+
+
+def test_marker_partitions_sum_to_rows(spark, first_run, workdir):
+    """Per stage, the marker's per-file rows add up to its observed rows
+    and to a count of the data; partition ids are the write tasks'."""
+    for stage in STAGES:
+        meta = _marker(workdir, stage)
+        parts = meta["partitions"]
+        n = spark.read.parquet(str(pathlib.Path(workdir) / stage / "data")).count()
+        assert sum(p["rows_out"] for p in parts) == meta["rows"] == n > 0, stage
+        assert all(p["partition_id"] >= 0 for p in parts), stage
+
+
+def test_marker_content_sha_agg(spark, first_run, workdir):
+    """The marker of each stage with a content_sha column holds
+    sum(crc32(content_sha)) over its rows, observed in the write."""
+    from pyspark.sql import functions as F
+
+    with_sha = [s for s in STAGES if "content_sha" in first_run[2][s].columns]
+    assert "triples" in with_sha
+    for stage in STAGES:
+        data = spark.read.parquet(str(pathlib.Path(workdir) / stage / "data"))
+        if stage in with_sha:
+            want = data.agg(F.sum(F.crc32("content_sha"))).first()[0]
+            assert _marker(workdir, stage)["content_sha_agg"] == want > 0, stage
+        else:
+            assert "content_sha_agg" not in _marker(workdir, stage), stage
+
+
+def test_marker_without_manifest_reruns_once(spark, tmp_path):
+    """A marker written before the manifest fields (no ``schema``, no
+    ``partitions``) reruns its stage once; the rewritten marker then
+    resumes."""
+    from kgforge.lineage import StageRunner
+
+    wd = tmp_path / "wd"
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.createDataFrame([(len(calls),)], "n int")
+
+    r = StageRunner(spark, str(wd), config={"m": 1})
+    r.run("s", build)
+    marker = wd / "s" / "_COMPLETE"
+    old = {k: v for k, v in json.loads(marker.read_text()).items()
+           if k not in ("schema", "partitions")}
+    marker.write_text(json.dumps(old))
+    assert [x.n for x in r.run("s", build).collect()] == [2]
+    assert [x.n for x in r.run("s", build).collect()] == [2]
+    assert len(calls) == 2

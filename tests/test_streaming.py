@@ -171,3 +171,45 @@ def test_incremental_graph_metrics_equal_table_counts(spark, tmp_path):
                 for t in ("nodes", "edges", "canonical")
             },
         }
+
+
+def test_incremental_graph_new_checkpoint_extends_state(spark, tmp_path):
+    """A second stream with a new checkpoint over existing state keeps
+    every triple: its micro-batch ids restart at 0, but epochs are
+    numbered by the state, so its batches become epochs 2 and 3 instead
+    of being skipped as replays of epochs 0 and 1.  The final graph
+    equals the one-shot materialization of both inputs."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from kgforge.graph.materialize import materialize_graph
+    from kgforge.streaming import read_graph_state, run_incremental_graph
+
+    rows = gen_repo_rows(60)
+    state = str(tmp_path / "state")
+    _write_json_files(rows[:30], tmp_path / "in_a", per_file=15)  # 2 micro-batches
+    run_incremental_graph(spark, str(tmp_path / "in_a"), state, str(tmp_path / "ckpt_a"))
+    _write_json_files(rows[30:], tmp_path / "in_b", per_file=15)  # 2 more, ids 0 and 1
+    run_incremental_graph(spark, str(tmp_path / "in_b"), state, str(tmp_path / "ckpt_b"))
+
+    epochs = sorted(p for p in os.listdir(state) if p.startswith("epoch="))
+    assert epochs == ["epoch=0", "epoch=1", "epoch=2", "epoch=3"]
+    keys = [json.loads(open(os.path.join(state, e, "_COMPLETE")).read())["batch_key"]
+            for e in epochs]
+    assert keys == [[str(tmp_path / c), b] for c in ("ckpt_a", "ckpt_b") for b in (0, 1)]
+
+    nodes_s, edges_s, _ = read_graph_state(spark, state)
+    full = extract_pipeline(spark.createDataFrame(rows), "fused")
+    nodes_f, edges_f = materialize_graph(full)
+    key_e = lambda r: (r.src, r.dst, r.pred, r.weight)  # noqa: E731
+    assert sorted(map(key_e, edges_s.collect())) == sorted(
+        map(key_e, edges_f.collect())
+    )
+    key_n = lambda r: (  # noqa: E731
+        r.canonical_id, r.ent_type, tuple(r.surface_forms), r.mention_count
+    )
+    assert sorted(map(key_n, nodes_s.collect())) == sorted(
+        map(key_n, nodes_f.collect())
+    )
+    assert edges_s.agg(F.sum("weight")).first()[0] == full.count()
